@@ -1,0 +1,5 @@
+"""crawlfe benchmark: workloads, fixtures, layer ladder and engine metrics.
+
+Run ``python3 perfbench/run.py --workload <name> --seed <n> --seconds <s>
+--trace <0|1>`` from any directory; see ``perfbench/README.md``.
+"""
