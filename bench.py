@@ -645,8 +645,8 @@ def run_pipeline(spark, pages_path: str) -> tuple[int, int, float]:
     pages = spark.read.parquet(pages_path)
     # featurize ONCE and pin the features table, mirroring production
     # where it is committed to storage before the join stage
-    # (jobs/featurize.py): the slim as-of kernel and the payload
-    # re-join both consume it without recomputing the extractor.
+    # (jobs/featurize.py): the windows and the as-of consume it
+    # without recomputing the extractor.
     feats = featurize(pages, use_html=True).persist()
     n = feats.count()
     # probe grid: one probe per (url, snapshot) shifted +1h — same
@@ -655,12 +655,8 @@ def run_pipeline(spark, pages_path: str) -> tuple[int, int, float]:
         "url",
         (F.col("warc_ts") + F.expr("INTERVAL 1 HOUR")).alias("join_ts"),
     )
-    # merge_scan_slim: the mandated merge-scan kernel on slim (url, ts)
-    # + JVM payload re-join — feature arrays never cross the Arrow
-    # boundary a second time (the 100 TB fat-payload path)
-    out = feature_pipeline(
-        feats, probe, session_gap_s=86400, strategy="merge_scan_slim"
-    )
+    # the pipeline's default as-of (range_scan), as jobs/featurize.py runs it
+    out = feature_pipeline(feats, probe, session_gap_s=86400)
     n_matched = out.where(F.col("matched")).count()
     dt = time.time() - t0
     feats.unpersist()

@@ -8,49 +8,47 @@ point-in-time join (SURVEY.md §2.A A13/A14): each probe (url, join_ts)
 is matched to the LATEST build row of the same url with
 warc_ts <= join_ts — a merge-scan, not a cross product.
 
-Two physical strategies, identical semantics (both tested for parity):
+Four physical strategies, identical backward semantics (all tested for
+parity):
 
-  * ``merge_scan`` (default — the BASELINE.json:6-mandated shape):
+  * ``range_scan`` (the flagship default of ``feature_pipeline``): the
+    mandate-literal shape (BASELINE.json:6 "merge-scan over
+    repartitionByRange(url) + sortWithinPartitions(warc_ts)"). Tag both
+    sides and union them, build rows carrying their match as ONE
+    struct(ts_build, *build_cols), then ``repartitionByRange(key)`` +
+    ``sortWithinPartitions(key, ts, side)`` and a ``last(ignorenulls)``
+    window carry over (key ORDER BY ts, side). The window reuses the
+    range partitioning and the sort, so the merge-scan runs in the JVM:
+    no Python, no Arrow exchange of the payload, no payload re-join,
+    and the build side is read once.
+  * ``union_window``: the same struct carry, with the planner free to
+    hash-cluster instead of range-partitioning.
+  * ``merge_scan`` (``asof_join``'s own default; it and the slim
+    variant are the only strategies with forward/nearest and salting):
     hash-bucket both sides on the key, cogroup, and run a vectorized
-    two-pointer backward scan (pd.merge_asof) per bucket. Buckets (not
-    raw urls) are the cogroup key so groups stay large and few — at
-    10^12 rows, per-url groups would mean billions of tiny Arrow
-    exchanges. Within a bucket the kernel sorts by ts and merges with
-    by=key: the repartition+sort+merge of SURVEY.md §4.3 with the sort
-    pushed into the kernel where it is a single numpy argsort.
-  * ``merge_scan_slim``: the same mandated merge-scan kernel, but run
-    on (key, ts) ONLY; matched build payloads are re-attached by a
-    JVM-side equi join on (key, matched ts). The 100 TB path for FAT
-    payloads (feature vectors): the Arrow->pandas exchange never
-    carries arrays (per-row Python object conversion is the cost that
-    kills scaling), and under salting only the slim build side is
-    replicated K times. Requires build unique per (key, ts) — true by
-    construction for crawl snapshots.
-  * ``range_scan``: the mandate-literal physical shape
-    (BASELINE.json:6 "merge-scan over repartitionByRange(url) +
-    sortWithinPartitions(warc_ts)"): tag sides, union slim columns,
-    ``repartitionByRange(key)`` + ``sortWithinPartitions(key, ts,
-    side)``, then ONE forward streaming pass (mapInPandas) that
-    carries the latest build row per key across Arrow batches —
-    payloads re-attached by the same JVM equi join as
-    ``merge_scan_slim``. Range partitioning keeps a key's whole
-    history in one partition, so the carry state is a single
-    last-row dict.
-  * ``union_window``: tag sides, union, and forward-fill build columns
-    with last(..., ignorenulls) over (key ORDER BY ts, side). 100%
-    JVM/whole-stage-codegen (zero Python), one shuffle — the scale
-    path when build payloads are narrow.
+    two-pointer scan (pd.merge_asof) per bucket. Buckets (not raw urls)
+    are the cogroup key so groups stay large and few — at 10^12 rows,
+    per-url groups would mean billions of tiny Arrow exchanges. Within
+    a bucket the kernel sorts by ts and merges with by=key. Every
+    payload column crosses the Arrow boundary.
+  * ``merge_scan_slim``: the same kernel run on (key, ts) ONLY; matched
+    build payloads are re-attached by a JVM-side equi join on (key,
+    matched ts), so under salting only the slim build side is
+    replicated K times. Requires build unique per (key, ts), and reads
+    the build side twice (a lazy build side is computed twice).
 
 Zero temporal leakage (BASELINE.json:6): merge_asof(direction="backward",
 allow_exact_matches=True) can never read a build row with ts > join_ts;
-the union_window frame ends at the current row with probes ordered after
+the window frame ends at the current row with probes ordered after
 build rows at equal ts. Property-tested in tests/test_leakage.py.
 
-Skew (BASELINE.json:6 "salted range partitioning"): ``salt_k`` > 1
-replicates every build row to all K salt buckets and routes each probe
-row to one hash-chosen bucket, so a hot url's probes spread over K tasks
-while every task still sees the url's full build history — leakage-safe
-by construction. AQE skew-join splitting is enabled globally (conf.py).
+Skew (BASELINE.json:6 "salted range partitioning"): ``salt_k`` > 1 on
+the merge-scan strategies replicates every build row to all K salt
+buckets and routes each probe row to one hash-chosen bucket, so a hot
+url's probes spread over K tasks while every task still sees the url's
+full build history — leakage-safe by construction. The window
+strategies reject ``salt_k`` > 1. AQE skew-join splitting is enabled
+globally (conf.py).
 """
 
 from __future__ import annotations
@@ -63,6 +61,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
 DEFAULT_BUCKETS = 256
+# strategies that run the pandas merge_asof kernel: only they take
+# direction="forward"/"nearest" and salt_k > 1
+MERGE_SCAN_STRATEGIES = ("merge_scan", "merge_scan_slim")
+STRATEGIES = MERGE_SCAN_STRATEGIES + ("range_scan", "union_window")
 
 
 def _out_schema(
@@ -119,12 +121,19 @@ def asof_join(
         raise ValueError(f"build columns clash with probe columns: {clash}")
     if direction not in ("backward", "forward", "nearest"):
         raise ValueError(f"unknown asof direction: {direction}")
-    if direction != "backward" and strategy not in (
-        "merge_scan", "merge_scan_slim"
-    ):
+    if strategy not in STRATEGIES:
+        raise ValueError(f"unknown asof strategy: {strategy}")
+    if direction != "backward" and strategy not in MERGE_SCAN_STRATEGIES:
         raise ValueError(
             f"strategy {strategy!r} supports only direction='backward'; "
             "use merge_scan or merge_scan_slim for forward"
+        )
+    if salt_k > 1 and strategy not in MERGE_SCAN_STRATEGIES:
+        # a window strategy has no buckets to salt; ignoring salt_k
+        # would silently run the unsalted plan
+        raise ValueError(
+            f"strategy {strategy!r} does not support salt_k > 1; "
+            "use merge_scan or merge_scan_slim for salting"
         )
     if strategy == "merge_scan":
         return _asof_merge_scan(
@@ -136,22 +145,10 @@ def asof_join(
             probe, build, key, ts_probe, ts_build, build_cols,
             num_buckets, salt_k, tolerance, direction,
         )
-    if strategy == "union_window":
-        return _asof_union_window(
-            probe, build, key, ts_probe, ts_build, build_cols, tolerance
-        )
-    if strategy == "range_scan":
-        # range_scan does not implement tolerance; silently ignoring it
-        # would return matches beyond the window (ADVICE r1)
-        if tolerance is not None:
-            raise ValueError(
-                "strategy 'range_scan' does not support tolerance; "
-                "use merge_scan, merge_scan_slim, or union_window"
-            )
-        return _asof_range_scan(
-            probe, build, key, ts_probe, ts_build, build_cols
-        )
-    raise ValueError(f"unknown asof strategy: {strategy}")
+    return _asof_window(
+        probe, build, key, ts_probe, ts_build, build_cols, tolerance,
+        range_partition=strategy == "range_scan",
+    )
 
 
 def _asof_merge_scan(
@@ -288,119 +285,55 @@ def _asof_merge_scan_slim(
     )
 
 
-def _asof_range_scan(probe, build, key, ts_probe, ts_build, build_cols):
-    """Mandate-literal merge-scan: repartitionByRange(key) +
-    sortWithinPartitions(key, ts, side) + one streaming forward pass.
-
-    The kernel is an iterator mapInPandas: build rows (side=0) update a
-    per-key carry of the latest build ts; probe rows (side=1) read it.
-    Range partitioning guarantees all rows of a key land in one
-    partition, and the sort guarantees build-before-probe at equal ts
-    (allow_exact_matches semantics), so the carry never leaks a future
-    row (zero temporal leakage) and survives Arrow batch boundaries
-    within the partition. Payloads attach via the slim JVM re-join.
-    """
-    probe_cols = list(probe.columns)
-    p = probe.select(
-        F.col(key).alias("__k"),
-        F.col(ts_probe).alias("__ts"),
-        F.lit(1).alias("__side"),
-        *[F.col(c) for c in probe_cols],
-    )
-    b = build.select(
-        F.col(key).alias("__k"),
-        F.col(ts_build).alias("__ts"),
-        F.lit(0).alias("__side"),
-        *[F.lit(None).cast(probe.schema[c].dataType).alias(c)
-          for c in probe_cols],
-    )
-    ts_type = build.schema[ts_build].dataType.simpleString()
-    out_schema = ", ".join(
-        [f"`{f.name}` {f.dataType.simpleString()}" for f in probe.schema.fields]
-        + [f"`{ts_build}` {ts_type}"]
-    )
-    tagged = (
-        b.unionByName(p)
-        .repartitionByRange("__k")
-        .sortWithinPartitions("__k", "__ts", "__side")
-    )
-
-    def scan(batches):
-        # cross-batch carry: latest build ts seen per key so far in
-        # this partition (a key's rows are contiguous, but a batch
-        # boundary can split them)
-        carry: dict = {}
-        for pdf in batches:
-            ks = pdf["__k"]
-            sides = pdf["__side"].to_numpy()
-            build_ts = pdf["__ts"].where(pdf["__side"].eq(0))
-            # vectorized forward-fill of the latest build ts per key;
-            # rows before a key's first in-batch build row stay NaT …
-            carried = build_ts.groupby(ks.to_numpy(), sort=False).ffill()
-            # … and take the previous batch's carry instead (dtype
-            # pinned so fillna never object-downcasts)
-            carried = carried.fillna(ks.map(carry).astype(carried.dtype))
-            last = build_ts.groupby(ks.to_numpy(), sort=False).last()
-            carry.update(last.dropna().to_dict())
-            emit = sides == 1
-            if emit.any():
-                out = pdf.loc[emit, probe_cols].copy()
-                out[ts_build] = carried[emit]
-                yield out
-
-    matched = tagged.mapInPandas(scan, schema=out_schema)
-    m, pay = matched.alias("__m"), build.alias("__p")
-    joined = m.join(
-        pay,
-        (F.col(f"__m.{key}") == F.col(f"__p.{key}"))
-        & (F.col(f"__m.{ts_build}") == F.col(f"__p.{ts_build}")),
-        "left",
-    )
-    return joined.select(
-        *[F.col(f"__m.{c}") for c in probe_cols],
-        F.col(f"__m.{ts_build}").alias(ts_build),
-        *[F.col(f"__p.{c}") for c in build_cols],
-    )
-
-
-def _asof_union_window(
-    probe, build, key, ts_probe, ts_build, build_cols, tolerance=None
+def _asof_window(
+    probe, build, key, ts_probe, ts_build, build_cols, tolerance,
+    range_partition,
 ):
+    """Backward as-of as one JVM window carry: tag and union both sides,
+    build rows carrying their match as ONE ``struct(ts_build,
+    *build_cols)`` and probe rows a null, then ``last(ignorenulls)``
+    over (key ORDER BY ts, side) hands every probe the latest build row
+    at or before it. Build sorts before probe at equal ts
+    (allow_exact_matches) and the frame ends at the current row, so no
+    later build row is ever read (zero temporal leakage). Carrying the
+    whole struct keeps a matched row's null payload columns null instead
+    of filling them from an older row, and a duplicated (key, ts) build
+    row still yields one output row per probe.
+
+    ``range_partition`` (range_scan) lays the union out as
+    ``repartitionByRange(key)`` + ``sortWithinPartitions(key, ts,
+    side)``; the window reuses both, so the plan adds no other Exchange
+    or Sort. Without it (union_window) the planner hash-clusters.
+    """
     from pyspark.sql import Window
 
-    probe_payload = [c for c in probe.columns if c not in (key, ts_probe)]
     b = build.select(
         F.col(key),
         F.col(ts_build).alias("__ts"),
         F.lit(0).alias("__side"),
-        F.col(ts_build).alias(ts_build),
-        *[F.col(c) for c in build_cols],
-        *[F.lit(None).cast(probe.schema[c].dataType).alias(c)
-          for c in probe_payload],
+        F.struct(ts_build, *build_cols).alias("__m"),
     )
     p = probe.select(
-        F.col(key),
-        F.col(ts_probe).alias("__ts"),
-        F.lit(1).alias("__side"),
-        F.lit(None).cast(build.schema[ts_build].dataType).alias(ts_build),
-        *[F.lit(None).cast(build.schema[c].dataType).alias(c)
-          for c in build_cols],
-        *[F.col(c) for c in probe_payload],
+        *probe.columns, F.col(ts_probe).alias("__ts"), F.lit(1).alias("__side")
     )
+    tagged = b.unionByName(p, allowMissingColumns=True)
+    if range_partition:
+        tagged = tagged.repartitionByRange(key).sortWithinPartitions(
+            key, "__ts", "__side"
+        )
     w = (
         Window.partitionBy(key)
         .orderBy("__ts", "__side")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    filled = b.unionByName(p).select(
-        key,
-        F.col("__ts"),
-        F.col("__side"),
-        *[F.last(c, ignorenulls=True).over(w).alias(c)
-          for c in [ts_build] + build_cols],
-        *probe_payload,
-    )
-    out = filled.where(F.col("__side") == 1)
+    carried = tagged.select(
+        *probe.columns,
+        "__ts",
+        "__side",
+        F.last("__m", ignorenulls=True).over(w).alias("__m"),
+    ).where(F.col("__side") == 1)
+    names = [ts_build] + build_cols
+    matched = [F.col("__m").getField(c) for c in names]
     if tolerance is not None:
         # merge_asof tolerance semantics: the carried match is the
         # latest prior row; if it is older than the window, the probe
@@ -408,19 +341,10 @@ def _asof_union_window(
         tol_us = int(pd.Timedelta(tolerance).value // 1000)
         ok = (
             F.unix_micros(F.col("__ts").cast("timestamp"))
-            - F.unix_micros(F.col(ts_build).cast("timestamp"))
+            - F.unix_micros(matched[0].cast("timestamp"))
         ) <= F.lit(tol_us)
-        out = out.select(
-            key,
-            "__ts",
-            *probe_payload,
-            *[F.when(ok, F.col(c)).otherwise(F.lit(None)).alias(c)
-              for c in [ts_build] + build_cols],
-        )
-    return out.select(
-        key,
-        F.col("__ts").alias(ts_probe),
-        *probe_payload,
-        ts_build,
-        *build_cols,
+        matched = [F.when(ok, c) for c in matched]
+    return carried.select(
+        *probe.columns,
+        *[c.alias(n) for c, n in zip(matched, names)],
     )

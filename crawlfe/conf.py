@@ -32,7 +32,7 @@ def engine_confs(parallelism: int) -> dict[str, str]:
         "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),
         "spark.sql.parquet.compression.codec": "zstd",
         # join co-partitioning may match on a SUBSET of join keys: the
-        # as-of payload re-join on (url, ts) then reuses the window
+        # merge_scan_slim payload re-join on (url, ts) then reuses the window
         # stage's hashpartitioning(url) instead of re-shuffling the fat
         # feature vectors a second time
         "spark.sql.requireAllClusterKeysForCoPartition": "false",

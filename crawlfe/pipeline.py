@@ -81,14 +81,16 @@ def feature_pipeline(
     features: DataFrame,
     probe_grid: DataFrame,
     session_gap_s: int = 86400,
-    strategy: str = "merge_scan",
+    strategy: str = "range_scan",
     salt_k: int = 1,
 ) -> DataFrame:
     """The flagship query (SURVEY.md §7 M1): windowed features + as-of
     join onto a probe grid -> asof_features (FIXTURES.md §A).
 
     One shuffle on url serves lag/lead + sessionize (same window
-    partitioning); the as-of join buckets on hash(url).
+    partitioning); the default as-of is one range exchange on url and a
+    JVM window carry, so the features are computed once and never
+    re-enter Python. ``salt_k`` > 1 needs a merge-scan strategy.
     """
     enriched = sessionize(
         with_lag_lead(features, "url", "warc_ts"),

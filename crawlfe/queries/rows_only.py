@@ -483,8 +483,8 @@ def q_asof_union_window(spark, sf_dir):
 def q_asof_range_scan(spark, sf_dir):
     """The ``range_scan`` as-of strategy — the mandate-literal
     physical shape (BASELINE.json:6 merge-scan over
-    repartitionByRange + sortWithinPartitions with a streaming
-    forward pass); same query, same oracle, first driver row."""
+    repartitionByRange + sortWithinPartitions, carried by a JVM
+    window); same query, same oracle."""
     ev = _t(spark, sf_dir, "events")
     probe = ev.where(F.col("event_type") == "click").select(
         "user_id", F.col("ts").alias("click_ts"), F.col("event_id")

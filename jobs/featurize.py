@@ -16,6 +16,7 @@ JSON summary line to stdout.
 from __future__ import annotations
 
 import argparse
+import inspect
 import json
 import os
 import sys
@@ -25,6 +26,7 @@ from pyspark.sql import SparkSession
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from crawlfe.asof import MERGE_SCAN_STRATEGIES, STRATEGIES  # noqa: E402
 from crawlfe.conf import engine_confs  # noqa: E402
 from crawlfe.io import IcebergLite  # noqa: E402
 from crawlfe.pipeline import feature_pipeline, run_incremental  # noqa: E402
@@ -41,14 +43,18 @@ def main() -> int:
     ap.add_argument("--salt-k", type=int, default=1)
     ap.add_argument(
         "--strategy",
-        choices=["merge_scan", "merge_scan_slim", "union_window"],
-        default="merge_scan",
+        choices=STRATEGIES,
+        default=inspect.signature(feature_pipeline).parameters[
+            "strategy"].default,
     )
     ap.add_argument(
         "--crash-after", type=int, default=None,
         help="simulate dying after N commits (resume testing)",
     )
     args = ap.parse_args()
+    if args.salt_k > 1 and args.strategy not in MERGE_SCAN_STRATEGIES:
+        ap.error(f"--salt-k {args.salt_k} needs --strategy in "
+                 f"{MERGE_SCAN_STRATEGIES}, not {args.strategy}")
 
     builder = SparkSession.builder.appName("crawlfe-featurize")
     spark = builder.getOrCreate()

@@ -2,11 +2,15 @@
 strategies and salting, plus edge cases (before-first probes, empty
 build side, exact-timestamp matches)."""
 
+import os
+import subprocess
+import sys
+
 import numpy as np
 import pandas as pd
 import pytest
 
-from crawlfe.asof import asof_join
+from crawlfe.asof import STRATEGIES, asof_join
 from crawlfe.features import featurize
 from crawlfe.oracle import oracle_asof
 from crawlfe.synth import SynthConfig, gen_pages_pdf, query_grid_pdf, synth_pages
@@ -112,6 +116,95 @@ def test_exact_match_inclusive(spark):
         assert out["v"].iloc[0] == 2.0
 
 
+def _ts(*days):
+    return pd.Series([pd.Timestamp(d) for d in days], dtype="datetime64[us]")
+
+
+@pytest.mark.parametrize("strategy", STRATEGIES)
+def test_null_payload_of_matched_row_stays_null(spark, strategy):
+    """The matched build row's payload is attached whole: a null column
+    in it must not be filled from an OLDER build row (a per-column
+    last(ignorenulls) carry did exactly that)."""
+    probe = spark.createDataFrame(
+        pd.DataFrame({"url": ["a"], "join_ts": _ts("2024-01-03")})
+    )
+    build = spark.createDataFrame(
+        pd.DataFrame({
+            "url": ["a", "a"],
+            "warc_ts": _ts("2024-01-01", "2024-01-02"),
+            "v": [1.0, None],
+        })
+    )
+    out = asof_join(
+        probe, build, key="url", ts_probe="join_ts", ts_build="warc_ts",
+        build_cols=["v"], strategy=strategy, num_buckets=4,
+    ).toPandas()
+    assert len(out) == 1
+    assert out["warc_ts"].iloc[0] == pd.Timestamp("2024-01-02")
+    assert pd.isna(out["v"].iloc[0])
+
+
+@pytest.mark.parametrize("strategy", ["range_scan", "union_window"])
+def test_duplicate_build_rows_give_one_row_per_probe(spark, strategy):
+    """A build side duplicated on (key, ts) must not fan out the
+    probes: each probe gets exactly one row, whose payload comes from
+    one of the duplicates."""
+    probe = spark.createDataFrame(
+        pd.DataFrame({
+            "url": ["a", "a", "b"],
+            "join_ts": _ts("2023-12-31", "2024-01-03", "2024-01-03"),
+        })
+    )
+    build = spark.createDataFrame(
+        pd.DataFrame({
+            "url": ["a", "a", "a", "b"],
+            "warc_ts": _ts("2024-01-02", "2024-01-02", "2024-01-01",
+                           "2024-01-02"),
+            "v": [1.0, 2.0, 0.0, 5.0],
+        })
+    )
+    out = (
+        asof_join(
+            probe, build, key="url", ts_probe="join_ts",
+            ts_build="warc_ts", build_cols=["v"], strategy=strategy,
+        )
+        .toPandas()
+        .sort_values(["url", "join_ts"], ignore_index=True)
+    )
+    assert len(out) == 3
+    assert out["warc_ts"].isna().tolist() == [True, False, False]
+    assert out["v"].iloc[1] in (1.0, 2.0)
+    assert out["v"].iloc[2] == 5.0
+
+
+@pytest.mark.parametrize("strategy", ["range_scan", "union_window"])
+def test_salt_rejected_by_window_strategies(spark, strategy):
+    """The window strategies have no buckets to salt; salt_k > 1 must
+    raise rather than silently run the unsalted plan."""
+    pages = synth_pages(spark, SynthConfig(n_urls=10))
+    probe = pages.selectExpr("url", "warc_ts as join_ts")
+    build = pages.selectExpr("url", "warc_ts", "lang as b_lang")
+    with pytest.raises(ValueError, match="salt_k"):
+        asof_join(
+            probe, build, key="url", ts_probe="join_ts",
+            ts_build="warc_ts", build_cols=["b_lang"],
+            strategy=strategy, salt_k=4,
+        )
+
+
+def test_job_rejects_salt_for_window_strategy():
+    """jobs/featurize.py refuses --salt-k with a non-salting strategy
+    while parsing its arguments, before any Spark work."""
+    job = os.path.join(os.path.dirname(__file__), "..", "jobs", "featurize.py")
+    r = subprocess.run(
+        [sys.executable, job, "--output", "unused", "--salt-k", "4",
+         "--strategy", "range_scan"],
+        capture_output=True, text=True, timeout=120,
+    )
+    assert r.returncode == 2, r.stderr
+    assert "error: --salt-k" in r.stderr
+
+
 def test_self_asof_shared_lineage(spark, sf_dir):
     """Regression: probe and build derived from the SAME relation must
     not lose build columns to cross-side attribute dedup (the Catalyst
@@ -145,29 +238,15 @@ def test_self_asof_shared_lineage(spark, sf_dir):
     )
 
 
-def test_tolerance_rejected_by_non_implementing_strategies(spark):
-    """range_scan does not implement tolerance; silently ignoring it
-    returned out-of-window matches (ADVICE r1) — it must raise."""
-    pages = synth_pages(spark, SynthConfig(n_urls=10))
-    probe = pages.selectExpr("url", "warc_ts as join_ts")
-    build = pages.selectExpr("url", "warc_ts", "lang as b_lang")
-    with pytest.raises(ValueError, match="tolerance"):
-        asof_join(
-            probe, build, key="url", ts_probe="join_ts",
-            ts_build="warc_ts", build_cols=["b_lang"],
-            strategy="range_scan", tolerance=pd.Timedelta(hours=1),
-        )
-
-
 def test_tolerance_parity_across_strategies(spark, fixtures):
-    """merge_scan, merge_scan_slim and union_window must agree exactly
-    under a tolerance window (union_window implements it as a JVM
-    conditional projection over the carried match), and the window must
-    actually null out stale matches."""
+    """Every strategy must agree exactly under a tolerance window (the
+    window strategies implement it as a JVM conditional projection over
+    the carried match), and the window must actually null out stale
+    matches."""
     grid, feats, _, _ = fixtures
     tol = pd.Timedelta(hours=6)
     outs = {}
-    for strategy in ("merge_scan", "merge_scan_slim", "union_window"):
+    for strategy in STRATEGIES:
         outs[strategy] = (
             asof_join(
                 grid, feats, key="url", ts_probe="join_ts",
@@ -179,8 +258,8 @@ def test_tolerance_parity_across_strategies(spark, fixtures):
             [["url", "join_ts", "warc_ts", "text_sha256"]]
         )
     base = outs["merge_scan"]
-    for strategy in ("merge_scan_slim", "union_window"):
-        pd.testing.assert_frame_equal(base, outs[strategy], check_like=True)
+    for got in outs.values():
+        pd.testing.assert_frame_equal(base, got, check_like=True)
     # the tolerance must bite: without it strictly more matches
     full = (
         asof_join(

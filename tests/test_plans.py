@@ -104,6 +104,34 @@ def test_slim_asof_single_fat_exchange(spark, pages_path):
     assert len(url_ts_exchanges) <= 1, exchanges
 
 
+def test_default_asof_is_a_range_merge_scan(spark, pages_path):
+    """feature_pipeline's default as-of is the mandated merge-scan over
+    repartitionByRange(url) + sortWithinPartitions, carried by a JVM
+    window: featurize is the only Python in the plan and runs once, the
+    window reuses the range exchange and its sort, and the fat payload
+    crosses only the window stage's hash exchange and the range one."""
+    pages = spark.read.parquet(pages_path)
+    probe = pages.select(
+        "url", (F.col("warc_ts") + F.expr("INTERVAL 1 HOUR")).alias("join_ts")
+    )
+    plan = plan_of(feature_pipeline(featurize(pages, use_html=True), probe))
+    assert plan.count("MapInPandas") == 1, plan
+    assert "FlatMapCoGroupsInPandas" not in plan, plan
+    exchanges = sorted(
+        (kind, cols.split("#")[0])
+        for kind, cols in re.findall(r"Exchange (\w+)\(([^,)]*)", plan)
+    )
+    assert exchanges == [
+        ("hashpartitioning", "url"), ("rangepartitioning", "url")
+    ], plan
+    # the as-of Window sits on the range exchange with one Sort between
+    # them: the sortWithinPartitions, which the window reuses
+    above = plan.split("Exchange rangepartitioning", 1)[0]
+    asof_window = above.rsplit("Window [", 1)[1]
+    assert "last(" in asof_window.split("\n", 1)[0], above
+    assert asof_window.count("Sort [") == 1, above
+
+
 def test_wholestage_codegen_on_jvm_paths(spark, sf_dir):
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     q = (
