@@ -4,7 +4,7 @@ entry()      — flagship: full crawlfe temporal feature pipeline over the
                sf0.001 events table (featurize-analog + as-of join +
                lag/lead + sessionize), SURVEY.md §7 M1.
 queries()    — one entry per implemented operator from SURVEY.md §2.B
-               (registry in crawlfe/queries.py).
+               (registry in the crawlfe/queries package).
 oracle_sql() — DuckDB oracle twins; rows-only ops omit theirs.
 """
 

@@ -15,11 +15,21 @@ Layout:
     textfeat    numpy featurizers shared verbatim by Spark UDFs and oracle
     synth       deterministic synthetic pages generator (distributed + pandas)
     features    Spark featurize stage (mapInPandas + lineage capture)
-    asof        merge-scan as-of join (cogrouped Arrow kernel + union-window)
+    asof        as-of join; default range_scan: struct carry over
+                repartitionByRange + sortWithinPartitions (merge_scan,
+                merge_scan_slim, union_window are the alternatives)
     windows     lag/lead, rolling, rank, cumsum, sessionize, backfill
     io          iceberg-lite parquet table: staged atomic commit + manifest
     pipeline    end-to-end featurize job with checkpoint/resume
+    clean       corpus-cleaning funnel (dedup, length, quality filters)
+    fingerprint winnowing document fingerprints
+    media       binary media columns with typed metadata
+    warclite    WARC-style record container + Spark Python DataSource
+    pagestream  streaming Python data source replaying crawl snapshots
+    streaming   event-time windowing + incremental featurization
     oracle      single-node pandas/DuckDB oracles for parity tests
+    queries     driver query registry (SURVEY.md §2.B keys with DuckDB
+                oracle twins) behind __spark_entry__.queries()
 """
 
 __version__ = "0.1.0"

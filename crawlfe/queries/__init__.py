@@ -1,11 +1,17 @@
-"""Driver-contract query registry package (split from the former
-29k-line crawlfe/queries.py monolith in r4; VERDICT.md r3 item #2).
+"""Driver-contract query registry package.
 
-Every q_* / SQL_* name and module-level tuning constant re-exports from
-here so existing imports (`from crawlfe.queries import q_x, _t, ...`)
-and the driver contract (`from crawlfe.queries import REGISTRY`) are
-unchanged; REGISTRY keys and ordering are byte-identical to the
-monolith (the r4 driver-window rotation included).
+``REGISTRY`` maps each driver query key to ``(spark_query, oracle_sql)``,
+where ``oracle_sql`` is the DuckDB twin or ``None`` for rows-only ops.
+Its keys are exactly the operators SURVEY.md §2.B names, the as-of
+engine-spine variants §2.B predates (``asof_bucketed``,
+``asof_decay_feature``, ``asof_count_window``, ``asof_kth_recent``), the
+keys ``jobs/`` uses, and ``featurize_documents``;
+tests/test_registry_surface.py pins that set.
+
+The q_* functions of retired keys stay importable as plain library
+functions with their own tests; they have no registry entry and no
+oracle twin.  Every public name and the test hooks re-export from here,
+so ``from crawlfe.queries import q_x, _t, ...`` keeps working.
 """
 from __future__ import annotations
 
@@ -34,757 +40,252 @@ from .pit_diag import *  # noqa: F401,F403
 from .sketch_period import *  # noqa: F401,F403
 from .sql_surface import *  # noqa: F401,F403
 from .feateng import *  # noqa: F401,F403
-from .feateng import _CROSS_MIN_N, _PROBIT_SQL  # noqa: F401
 from .graph_embed import *  # noqa: F401,F403
-from .graph_embed import _KCORE_K, _KCORE_ROUNDS, _MAT_DIMS  # noqa: F401
 from .mining import *  # noqa: F401,F403
-from .mining import _HN_K, _HN_PROBES  # noqa: F401
 from .curation import *  # noqa: F401,F403
-from .curation import _CONF_ALPHA, _KCENTER_K, _RRF_C, _RRF_TOPK, _SEM_K, _SEM_TAU, _semdedup_cluster_summary  # noqa: F401
 from .pq import *  # noqa: F401,F403
-from .pq import _ADC_PROBES, _ADC_TOPK, _MIX_ALPHA, _PQ_K, _PQ_M, _PQ_SUB  # noqa: F401
 from .privacy import *  # noqa: F401,F403
-from .privacy import _DP_EPS, _KANON_BUCKET, _KANON_K, _KFOLD  # noqa: F401
 from .crawlops import *  # noqa: F401,F403
-from .crawlops import _SALT_CAP, _SALT_TARGET, _SLA_HOURS  # noqa: F401
 from .surveystat import *  # noqa: F401,F403
-from .surveystat import _HT_RATE, _IPF_ROUNDS, _NEYMAN_BUDGET  # noqa: F401
 from .sql4 import *  # noqa: F401,F403
 from .robust import *  # noqa: F401,F403
-from .robust import _HUBER_C, _HUBER_ROUNDS, _PERM_B  # noqa: F401
 from .crawlgraph import *  # noqa: F401,F403
-from .crawlgraph import _REDIR_HOPS  # noqa: F401
 from .stats_strat import *  # noqa: F401,F403
-from .stats_strat import _CA_BIN_CHARS, _CA_MAX_SCORE, _MH_OUTCOME_CENTS  # noqa: F401
 from .encoders import *  # noqa: F401,F403
-from .encoders import _CE_ALPHA, _F1_BIN_CENTS, _F1_TRAIN_DAY_MAX, _OH_TOPK  # noqa: F401
 from .seqtest import *  # noqa: F401,F403
-from .seqtest import _HOLM_ALPHA, _MSPRT_ALPHA, _MSPRT_TAU2, _RAKE_STOPWORDS, _RAKE_TOPK  # noqa: F401
 from .llm_eval import *  # noqa: F401,F403
-from .llm_eval import _DSIR_BUCKETS, _ERR_GMAX, _ERR_TOPN, _PASSK_K  # noqa: F401
 from .storeops import *  # noqa: F401,F403
-from .storeops import _PREFIX_BLOCK_CHARS, _SKEW_CUTOFF_DAY, _SPLIT_BUDGET_CENTS  # noqa: F401
 from .bitemporal import *  # noqa: F401,F403
-from .bitemporal import _DELAY_MAX_S, _JOIN_US, _KT1_US, _WM_SECONDS  # noqa: F401
 from .trainers import *  # noqa: F401,F403
-from .trainers import _NB_BIN_CENTS, _NB_MAX_BIN, _NB_TRAIN_DAY_MAX, _STUMP_BIN_CENTS, _STUMP_MAX_BIN  # noqa: F401
 from .model_audit import *  # noqa: F401,F403
-from .model_audit import _MA_BIN_CENTS, _MA_MAX_BIN, _MA_TRAIN_DAY_MAX, _QINI_TILES  # noqa: F401
 from .offpolicy import *  # noqa: F401,F403
-from .offpolicy import _OP_ACTIONS, _OP_BIN_CENTS, _OP_MAX_BIN, _OP_TRAIN_DAY_MAX  # noqa: F401
 from .agreement import *  # noqa: F401,F403
-from .agreement import _GPD_DECILE  # noqa: F401
 from .privacy2 import *  # noqa: F401,F403
-from .privacy2 import _LDIV_L, _TCLOSE_M, _TCLOSE_W  # noqa: F401
 from .regdiag import *  # noqa: F401,F403
-from .regdiag import _BP_CRIT95, _HOUR_US  # noqa: F401
 from .freqmoments import *  # noqa: F401,F403
-from .freqmoments import _AMS_G, _AMS_R, _CS_D, _CS_TOPK, _CS_W  # noqa: F401
 from .raters import *  # noqa: F401,F403
-from .raters import _CATS, _FLIP_MOD, _LANGS, _RATERS  # noqa: F401
 from .overlap_eval import *  # noqa: F401,F403
-from .overlap_eval import _OVL_TOPK, _Z95  # noqa: F401
 from .causal2 import *  # noqa: F401,F403
-from .causal2 import _ES_POLICY_DAY, _ES_TREAT_MOD, _ES_WEEKS, _RD_BW, _RD_CUT  # noqa: F401
 from .bucketops import *  # noqa: F401,F403
-from .bucketops import _BKT_N, _ND_MOD, _ND_OFF, _PH_LAMBDA_E4  # noqa: F401
 from .fdr2 import *  # noqa: F401,F403
-from .fdr2 import _FS_PREFIX, _STOREY_LAMBDA_PPB  # noqa: F401
 from .concord import *  # noqa: F401,F403
-from .concord import _KW_NOISE, _KW_RATERS, _YUEN_TRIM_PCT  # noqa: F401
 from .qte import *  # noqa: F401,F403
-from .qte import _HH_BIN, _QTE_DECILES  # noqa: F401
 from .survival2 import *  # noqa: F401,F403
-from .survival2 import _KM_TAU  # noqa: F401
 from .embedgeom import *  # noqa: F401,F403
-from .embedgeom import _ISO_DIRS, _JL_K  # noqa: F401
 from .minhash_eval import *  # noqa: F401,F403
-from .minhash_eval import _MH_K  # noqa: F401
 from .spark4api import *  # noqa: F401,F403
-from .spark4api import _SO_BUCKET  # noqa: F401
 from .forecast_eval import *  # noqa: F401,F403
-from .forecast_eval import _MZ_LAG  # noqa: F401
 from .opsmetrics import *  # noqa: F401,F403
-from .opsmetrics import _DM_W1, _DM_W4, _SH_CENTS  # noqa: F401
 from .coxsnm import *  # noqa: F401,F403
-from .coxsnm import _SNM_KEY, _SNM_W  # noqa: F401
 from .popest import *  # noqa: F401,F403
-from .popest import _CR_W1, _CR_W2, _GT_MOD, _LC_M  # noqa: F401
 from .seqtest2 import *  # noqa: F401,F403
-from .seqtest2 import _OBF_FINAL, _OBF_INTERIM, _TOST_DELTA  # noqa: F401
 from .asof_feats import *  # noqa: F401,F403
-from .asof_feats import _KTH, _TAU_H  # noqa: F401
 from .evt2 import *  # noqa: F401,F403
-from .evt2 import _EI_GAP_US, _RL_M  # noqa: F401
 from .stylo import *  # noqa: F401,F403
-from .stylo import _BD_TOPK, _GRUBBS_CRIT, _MAH_TOPK  # noqa: F401
 from .forecast_eval2 import *  # noqa: F401,F403
-from .forecast_eval2 import _SN_LAG  # noqa: F401
 from .survival3 import *  # noqa: F401,F403
-from .survival3 import _LT_WEEK_US  # noqa: F401
 from .methodcmp import *  # noqa: F401,F403
-from .methodcmp import _BA_Z, _SPLIT_DAY  # noqa: F401
 from .contingency import *  # noqa: F401,F403
-from .contingency import _FE_HEAVY, _FE_TIE_EPS  # noqa: F401
 from .matching import *  # noqa: F401,F403
-from .matching import _GAMMAS, _PLACEBO_SPLIT, _TREAT_MOD, _matched  # noqa: F401
 from .rankmodels import *  # noqa: F401,F403
-from .rankmodels import _BT_ROUNDS, _RBP_K, _RBP_P, _RBP_WTS  # noqa: F401
 from .neighbors import *  # noqa: F401,F403
-from .neighbors import _NB_K, _NB_PANEL  # noqa: F401
 from .dataqc import *  # noqa: F401,F403
-from .dataqc import _FDS, _FKS, _KEYS  # noqa: F401
 from .queueing import *  # noqa: F401,F403
-from .queueing import _CAP_FACTOR, _EC_MU_DIV, _EC_SERVERS, _SLO_TARGET  # noqa: F401
 from .robust2 import *  # noqa: F401,F403
-from .robust2 import _BW_C, _QN_D, _SN_C  # noqa: F401
 from .spectral import *  # noqa: F401,F403
-from .spectral import _SP_PMAX, _SP_PMIN, _TRIG  # noqa: F401
 from .lmeval2 import *  # noqa: F401,F403
-from .lmeval2 import _KN_D, _KN_TOPN  # noqa: F401
 from .seqtest3 import *  # noqa: F401,F403
-from .seqtest3 import _AVCI_ALPHA, _CUSUM_H, _CUSUM_K, _POCOCK_CRIT, _POCOCK_LOOKS  # noqa: F401
 from .forecast_prob import *  # noqa: F401,F403
-from .forecast_prob import _FP_LAG, _PIT_BINS, _WK_ALPHA, _WK_Z, _phi_cdf_col, _phi_cdf_sql  # noqa: F401
 from .graph_cent import *  # noqa: F401,F403
-from .graph_cent import _CENT_TOPK, _EV_ROUNDS, _KATZ_ALPHA, _KATZ_TERMS, _RC_KS  # noqa: F401
 from .markov import *  # noqa: F401,F403
-from .markov import _MC_ROUNDS  # noqa: F401
 from .decompose import *  # noqa: F401,F403
-from .decompose import _ABC_A, _ABC_B, _STL_W  # noqa: F401
 from .momentq import *  # noqa: F401,F403
-from .momentq import _BC_LAMBDAS, _CF_P, _CF_Z, _CHEB_KS  # noqa: F401
 from .curation2 import *  # noqa: F401,F403
-from .curation2 import _CCDF_GRID  # noqa: F401
 from .inequality import *  # noqa: F401,F403
-from .inequality import _LD_DECILES  # noqa: F401
 from .bayes_ab import *  # noqa: F401,F403
 from .pricing import *  # noqa: F401,F403
-from .pricing import _NV_CO, _NV_CU, _POOL_TOP, _POOL_Z  # noqa: F401
 from .robreg import *  # noqa: F401,F403
-from .robreg import _HUBER_K, _INFL_TOPK, _IRLS_ROUNDS, _LAD_EPS  # noqa: F401
 from .meta import *  # noqa: F401,F403
 from .optstats import *  # noqa: F401,F403
-from .optstats import _HIST_B, _HIST_RANGES, _NDV_MOD  # noqa: F401
 from .featqc import *  # noqa: F401,F403
-from .featqc import _FEATS, _MRMR_K  # noqa: F401
 from .twosample import *  # noqa: F401,F403
-from .twosample import _TS_DQ, _TS_KQ, _TS_PROJ  # noqa: F401
 from .corpusqc import *  # noqa: F401,F403
-from .corpusqc import _COV_KS  # noqa: F401
 from .causal3 import *  # noqa: F401,F403
-from .causal3 import _PC_Z  # noqa: F401
 from .breaks import *  # noqa: F401,F403
-from .breaks import _BRK_T0  # noqa: F401
 from .factorize import *  # noqa: F401,F403
-from .factorize import _SVD_ROUNDS, _SVD_TOPK  # noqa: F401
 from .ordinal import *  # noqa: F401,F403
-from .ordinal import _ORD_K  # noqa: F401
 from .resample import *  # noqa: F401,F403
-from .resample import _BB_B, _BB_L, _BB_NB, _HS_B, _LCG_A, _LCG_C, _LCG_M  # noqa: F401
 from .nominal import *  # noqa: F401,F403
 from .layout import *  # noqa: F401,F403
-from .layout import _BK_N, _CHUNK, _CR_COLS, _PRUNE_HI_D, _PRUNE_LO_D  # noqa: F401
 from .diversity import *  # noqa: F401,F403
-from ._shared import _patched_tables, _scratch_dir, _t, _us  # noqa: F401
+from .graph_embed import _KCORE_K, _KCORE_ROUNDS, _MAT_DIMS  # noqa: F401
+from .mining import _HN_K, _HN_PROBES  # noqa: F401
+from .curation import _CONF_ALPHA, _KCENTER_K, _RRF_C, _RRF_TOPK, _SEM_K, _SEM_TAU  # noqa: F401
+from .pq import _ADC_PROBES, _ADC_TOPK, _MIX_ALPHA, _PQ_K, _PQ_M, _PQ_SUB  # noqa: F401
+from .privacy import _DP_EPS, _KANON_BUCKET, _KANON_K, _KFOLD  # noqa: F401
+from .crawlops import _SALT_CAP, _SALT_TARGET, _SLA_HOURS  # noqa: F401
+from .surveystat import _HT_RATE, _IPF_ROUNDS, _NEYMAN_BUDGET  # noqa: F401
+from .robust import _HUBER_C, _HUBER_ROUNDS, _PERM_B  # noqa: F401
+from .crawlgraph import _REDIR_HOPS  # noqa: F401
+from .encoders import _CE_ALPHA, _OH_TOPK  # noqa: F401
+from .seqtest import _MSPRT_TAU2, _RAKE_STOPWORDS  # noqa: F401
+from .llm_eval import _DSIR_BUCKETS, _PASSK_K  # noqa: F401
+from .storeops import _PREFIX_BLOCK_CHARS, _SKEW_CUTOFF_DAY, _SPLIT_BUDGET_CENTS  # noqa: F401
+from .bitemporal import _DELAY_MAX_S, _JOIN_US, _KT1_US, _WM_SECONDS  # noqa: F401
+from .trainers import _NB_TRAIN_DAY_MAX  # noqa: F401
+from .model_audit import _MA_BIN_CENTS, _MA_MAX_BIN, _MA_TRAIN_DAY_MAX, _QINI_TILES  # noqa: F401
+from .offpolicy import _OP_ACTIONS, _OP_BIN_CENTS, _OP_MAX_BIN, _OP_TRAIN_DAY_MAX  # noqa: F401
+from .agreement import _GPD_DECILE  # noqa: F401
+from .privacy2 import _LDIV_L, _TCLOSE_M, _TCLOSE_W  # noqa: F401
+from .regdiag import _BP_CRIT95, _HOUR_US  # noqa: F401
+from .freqmoments import _AMS_G, _AMS_R, _CS_D, _CS_TOPK, _CS_W  # noqa: F401
+from .raters import _CATS, _FLIP_MOD, _LANGS, _RATERS  # noqa: F401
+from .overlap_eval import _OVL_TOPK, _Z95  # noqa: F401
+from .causal2 import _ES_POLICY_DAY, _ES_TREAT_MOD, _ES_WEEKS, _RD_BW, _RD_CUT  # noqa: F401
+from .bucketops import _ND_MOD, _ND_OFF, _PH_LAMBDA_E4  # noqa: F401
+from .fdr2 import _FS_PREFIX, _STOREY_LAMBDA_PPB  # noqa: F401
+from .concord import _KW_NOISE, _KW_RATERS, _YUEN_TRIM_PCT  # noqa: F401
+from .qte import _HH_BIN  # noqa: F401
+from .survival2 import _KM_TAU  # noqa: F401
+from .embedgeom import _ISO_DIRS, _JL_K  # noqa: F401
+from .minhash_eval import _MH_K  # noqa: F401
+from .spark4api import _SO_BUCKET  # noqa: F401
+from .forecast_eval import _MZ_LAG  # noqa: F401
+from .opsmetrics import _DM_W1, _DM_W4, _SH_CENTS  # noqa: F401
+from .coxsnm import _SNM_KEY, _SNM_W  # noqa: F401
+from .popest import _CR_W1, _CR_W2, _GT_MOD, _LC_M  # noqa: F401
+from .seqtest2 import _OBF_FINAL, _OBF_INTERIM, _TOST_DELTA  # noqa: F401
+from .asof_feats import _KTH, _TAU_H  # noqa: F401
+from .evt2 import _EI_GAP_US, _RL_M  # noqa: F401
+from .stylo import _BD_TOPK, _GRUBBS_CRIT, _MAH_TOPK  # noqa: F401
+from .forecast_eval2 import _SN_LAG  # noqa: F401
+from .survival3 import _LT_WEEK_US  # noqa: F401
+from .methodcmp import _BA_Z, _SPLIT_DAY  # noqa: F401
+from .contingency import _FE_HEAVY, _FE_TIE_EPS  # noqa: F401
+from .matching import _GAMMAS, _PLACEBO_SPLIT, _TREAT_MOD  # noqa: F401
+from .rankmodels import _BT_ROUNDS, _RBP_K, _RBP_P, _RBP_WTS  # noqa: F401
+from .neighbors import _NB_K, _NB_PANEL  # noqa: F401
+from .dataqc import _FDS, _FKS, _KEYS  # noqa: F401
+from .queueing import _CAP_FACTOR, _EC_MU_DIV, _EC_SERVERS, _SLO_TARGET  # noqa: F401
+from .robust2 import _BW_C, _QN_D, _SN_C  # noqa: F401
+from .spectral import _SP_PMAX, _SP_PMIN, _TRIG  # noqa: F401
+from .lmeval2 import _KN_D, _KN_TOPN  # noqa: F401
+from .seqtest3 import _AVCI_ALPHA, _CUSUM_H, _CUSUM_K, _POCOCK_CRIT, _POCOCK_LOOKS  # noqa: F401
+from .forecast_prob import _FP_LAG, _PIT_BINS, _WK_ALPHA, _WK_Z  # noqa: F401
+from .graph_cent import _CENT_TOPK, _EV_ROUNDS, _KATZ_ALPHA, _KATZ_TERMS, _RC_KS  # noqa: F401
+from .markov import _MC_ROUNDS  # noqa: F401
+from .decompose import _ABC_A, _ABC_B, _STL_W  # noqa: F401
+from .momentq import _BC_LAMBDAS, _CF_P, _CF_Z, _CHEB_KS  # noqa: F401
+from .curation2 import _CCDF_GRID  # noqa: F401
+from .inequality import _LD_DECILES  # noqa: F401
+from .pricing import _NV_CO, _NV_CU, _POOL_TOP, _POOL_Z  # noqa: F401
+from .robreg import _HUBER_K, _INFL_TOPK, _IRLS_ROUNDS, _LAD_EPS  # noqa: F401
+from .optstats import _HIST_B, _HIST_RANGES, _NDV_MOD  # noqa: F401
+from .featqc import _FEATS, _MRMR_K  # noqa: F401
+from .twosample import _TS_DQ, _TS_KQ, _TS_PROJ  # noqa: F401
+from .corpusqc import _COV_KS  # noqa: F401
+from .causal3 import _PC_Z  # noqa: F401
+from .breaks import _BRK_T0  # noqa: F401
+from .factorize import _SVD_ROUNDS, _SVD_TOPK  # noqa: F401
+from .ordinal import _ORD_K  # noqa: F401
+from .resample import _BB_B, _BB_L, _BB_NB, _HS_B, _LCG_A, _LCG_C, _LCG_M  # noqa: F401
+from .layout import _BK_N, _CHUNK, _CR_COLS, _PRUNE_HI_D, _PRUNE_LO_D  # noqa: F401
+from ._shared import _patched_tables, _t  # noqa: F401
 from .sketch_period import _FOLD_PMAX, _KMV_DOM, _KMV_K  # noqa: F401
-from .text import _BPE_RE, _LANG_MARKERS, _SQL_SW, _STOPWORDS, _dedup_embedding_block_pairs, _sql_markers  # noqa: F401
-from .rows_only import _PII_EMAIL_RE, _PII_IP_RE, _SQL_CLEAN_FLAGS, _SQL_DIRTY_DOCS, _dirty_documents, _media_table  # noqa: F401
-from .pit_scd import _PARA_CHUNK, _zorder_spark, _zorder_sql  # noqa: F401
-from .retrieval import _BM25_B, _BM25_IN, _BM25_K1, _BM25_TERMS, _EWMA_ALPHA  # noqa: F401
-from .sampling import _HOUR_US, _INCIDENT_PAD_US  # noqa: F401
-from .graph_sources import _HH_K, _SPAN_K, _doc_edges  # noqa: F401
-from .selection import _CHI2_TOPK, _COV_V, _CURR_B, _KMPP_K, _KMPP_L, _KMPP_ROUNDS, _MIX_BUDGET, _OUTLIER_K, _label_prop_round, _sq_dists_to  # noqa: F401
+from .text import _BPE_RE, _LANG_MARKERS, _dedup_embedding_block_pairs  # noqa: F401
+from .retrieval import _BM25_B, _BM25_K1, _BM25_TERMS, _EWMA_ALPHA  # noqa: F401
+from .sampling import _HOUR_US  # noqa: F401
+from .graph_sources import _HH_K, _SPAN_K  # noqa: F401
+from .selection import _CHI2_TOPK, _COV_V, _CURR_B, _KMPP_K, _KMPP_L, _KMPP_ROUNDS, _MIX_BUDGET, _OUTLIER_K, _sq_dists_to  # noqa: F401
 from .eval_drift import _BFS_DEPTH, _HLL_M, _HLL_W, _PCA_ROUNDS, _SIMHASH_BITS, _SIMHASH_HAM, _SPARSE_MIN, _SPARSE_POST_CAP, _SPARSE_Q, _SPARSE_TOPK, _SRP_BITS, _SRP_Q, _WSAMPLE_K  # noqa: F401
-from .stats_rank import _BC_K, _BQ_CAP, _BQ_K, _BURST_MIN, _CMS_D, _CMS_PROBES, _CMS_W, _HL_K, _KT_K, _NDCG_CUM, _NDCG_CUM_SQL, _NDCG_DISC, _NDCG_DISC_SQL, _NDCG_K, _TOPK_V, _math  # noqa: F401
+from .stats_rank import _BC_K, _BQ_CAP, _BQ_K, _BURST_MIN, _CMS_D, _CMS_PROBES, _CMS_W, _HL_K, _KT_K, _NDCG_CUM, _NDCG_DISC, _NDCG_K, _TOPK_V  # noqa: F401
 from .stats_behave import _HILL_K, _RFM_Q, _ZIPF_K  # noqa: F401
-from .stats_dist import _EULER_GAMMA, _FIRSTK, _LOGODDS_ALPHA, _LOGODDS_TOPK, _PATH_LEN, _RBO_K, _RBO_P, _SAX_BP, _SAX_DAYS  # noqa: F401
+from .stats_dist import _FIRSTK, _LOGODDS_ALPHA, _LOGODDS_TOPK, _PATH_LEN, _RBO_K, _RBO_P, _SAX_BP, _SAX_DAYS  # noqa: F401
 from .stats_tail import _BH_LONG, _TPP_K  # noqa: F401
-from .stats_links import _und_edges  # noqa: F401
-from .classifier_eval import _pc_scored  # noqa: F401
-
 
 
 # --------------------------------------------------------------------------
 # Registry
+#
+# Order matters: the driver records correctness rows for the first 50
+# queries() entries only.  Keys keep their previous relative order (the
+# round-5 driver window first).
 # --------------------------------------------------------------------------
 
 REGISTRY: dict[str, tuple] = {
-    # ORDERING NOTE: the round-1 driver recorded CORRECTNESS rows for
-    # exactly the FIRST 50 queries() entries and stopped, leaving 7
-    # oracle-backed keys unchecked (VERDICT.md "What's missing" #1).
-    # The registry is therefore ordered by driver-row value: round-1
-    # unchecked/failed/vacuous keys and this round's new operators come
-    # first, the core suite next, and the 10 cheapest scalar/set-op
-    # queries (all driver-green in CORRECTNESS_r01.json) sit past
-    # position 50 so a 50-entry cap costs the least information.
-    # r3 additions push topk_per_group / project_filter / null_handling
-    # past 50 too — all three unchanged since r1 and driver-green in
-    # CORRECTNESS_r02.json; scripts/check_entry.py re-verifies every
-    # past-window key per round (BENCH/sweeps_r03.jsonl).
-    # The round-3 window is exactly 50: agg_vector (the lone r2 red,
-    # fixed this round — MUST get its driver row), the 7 pack-#6 and 7
-    # pack-#7 keys (new this round, never checked), and 35 of the 42
-    # r3-new pack #1-#5 keys. The other 7 pack #1-#5 keys rotated past
-    # the boundary are the SAFEST of the new code — pure narrow
-    # projections/filters with no float math (sample_split,
-    # stratified_sample, url_normalize, shard_assign, pii_redact,
-    # temporal_split, zorder), each ALL-GREEN in multiple committed
-    # tri-SF check_entry sweeps this round (BENCH/sweeps_r03.jsonl).
-    # Everything r1/r2-driver-green and unchanged (sessionize,
-    # skew_salted, dedup_embedding, ann_lsh, lang_id, ...) also sits
-    # past the boundary under the same sweep evidence.
-    # r3-continuation packs #14/#15 (8 new keys) enter the window at
-    # the top; the displaced keys (rolling_median, mad_outliers,
-    # attribution, boilerplate_para, and earlier retention_cohorts /
-    # session_funnel / histogram / tpch_q6 / ...) are each ALL-GREEN in
-    # multiple committed tri-SF check_entry sweeps
-    # (BENCH/sweeps_r03.jsonl, incl. the 174-key sf0.01 sweep at HEAD).
-    # Packs #16-#19 (13 new keys: chi2_terms, embedding_outliers,
-    # token_budget_mix, cohens_kappa, label_prop, curriculum_order,
-    # vocab_coverage, dataset_card, ks_drift, benford_audit,
-    # kmeanspp_seeds, domain_weights, length_buckets) likewise
-    # enter at
-    # the top; the further-displaced keys are covered by the same
-    # committed tri-SF sweep evidence at the pack-#16 HEAD.
-    # Packs #20-#21 (8 new keys: roc_auc, psi_drift, ess_weights,
-    # equal_freq_bins, mutual_info, pps_sample, embedding_pca1,
-    # group_kfold) enter at the top under the same rule; the eight
-    # further-displaced keys are ALL-GREEN in the committed tri-SF
-    # sweeps at the pack-#19 and pack-#21 HEADs
-    # (BENCH/sweeps_r03.jsonl, git 9a1d0ad and after).
-    # Pack #22 (6 new keys: sql_recursive, lateral_topk, simhash_pairs,
-    # grouped_ols, gini_skew, pr_auc) enters at the top under the same
-    # rule; the six further-displaced keys are ALL-GREEN in the
-    # committed tri-SF sweeps at the pack-#21 HEAD.
-    # Pack #23 (6 new keys: sparse_topk, srp_signature, hll_distinct,
-    # spearman_corr, cusum_changepoint, best_threshold) enters at the
-    # top under the same rule; the six further-displaced keys are
-    # ALL-GREEN in the committed tri-SF sweeps at the pack-#22 HEAD.
-    # Pack #24 (6 new keys: count_min, tvd_drift, weighted_median,
-    # interval_union, welch_t, cooccur_lift) and pack #25 (6 new keys:
-    # kendall_tau, two_prop_z, ndcg_at_k, hodges_lehmann, mcnemar_test,
-    # chao1_richness) enter at the top under the same rule; the twelve
-    # further-displaced keys are ALL-GREEN in the committed tri-SF
-    # sweeps at the pack-#23 HEAD (BENCH/sweeps_r03.jsonl).
-    # Pack #26 (6 new keys: bayes_shrunk_quality, source_vocab_jaccard,
-    # source_centroid_sim, token_burstiness, token_novelty,
-    # topk_overlap) enters at the top under the same rule; the six
-    # further-displaced keys are ALL-GREEN in the committed tri-SF
-    # sweeps at the pack-#25 HEAD.
-    # Pack #27 (6 new keys: top_bigram_frac, bigram_concentration,
-    # heaps_two_point, longest_token_run, intra_doc_sim, yule_k)
-    # enters at the top under the same rule; the six further-displaced
-    # keys are ALL-GREEN in the committed tri-SF sweeps at the
-    # pack-#26 HEAD.
-    # Pack #28 (6 new keys: peak_rate, hourly_uniformity, rfm_scores,
-    # zipf_two_point, order_gap_cv, repeat_rate) enters at the top
-    # under the same rule; the six further-displaced keys are
-    # ALL-GREEN in the committed tri-SF sweeps at the pack-#27 HEAD.
-    # Pack #29 (6 new keys: km_hazard, basket_pairs, prefix_template,
-    # supplier_hhi, weekend_lift, discount_depth) enters at the top
-    # under the same rule; the six further-displaced keys are
-    # ALL-GREEN in the committed tri-SF sweeps at the pack-#28 HEAD.
-    # Pack #30 (6 new keys: autocorr_lag1, cramers_v,
-    # activity_drawdown, max_concurrency, theil_sen, dow_seasonal)
-    # enters at the top under the same rule; the six
-    # further-displaced keys are ALL-GREEN in the committed 247-key
-    # sf0.01 sweep at the pack-#29 HEAD (BENCH/sweeps_r03.jsonl).
-    # Pack #31 (6 new keys: mann_kendall, l_moments, runs_test,
-    # hill_tail, dow_anova, fano_factor) enters at the top under the
-    # same rule; the six further-displaced keys are ALL-GREEN in the
-    # committed sweeps at the pack-#29 HEAD.
-    # Pack #32 (6 new keys: jsd_drift, block_maxima, log_odds_terms,
-    # pareto_front, sax_words, transition_entropy) enters at the top
-    # under the same rule; the six further-displaced keys are
-    # ALL-GREEN in the committed sweeps at the pack-#29 HEAD.
-    # Pack #33 (6 new keys: time_weighted_avg, ohlc_bars,
-    # win_percentile_dist, interp_linear, streak_lengths,
-    # session_paths) enters at the top under the same rule; the six
-    # further-displaced keys are ALL-GREEN in the committed sweeps at
-    # the pack-#29 HEAD.
-    # Pack #34 (6 new keys: type_corr_matrix, semi_additive,
-    # time_to_convert, abandonment, seasonal_naive_mae,
-    # gap_percentiles) enters at the top under the same rule; the six
-    # further-displaced keys are ALL-GREEN in the committed 271-key
-    # sf0.01 sweep at the pack-#33 HEAD (BENCH/sweeps_r03.jsonl).
-    # Pack #35 (6 new keys: rbo_overlap, weighted_jaccard,
-    # burstiness_gb, lorenz_curve, first_k_profile, dwell_share)
-    # enters at the top under the same rule; the six
-    # further-displaced keys are ALL-GREEN in the committed 271-key
-    # sweep at the pack-#33 HEAD.
-    # Pack #36 (6 new keys: bh_fdr, rayleigh_daily, markov_surprise,
-    # readability, hapax_ratio, gini_mean_diff) enters at the top
-    # under the same rule; the six further-displaced keys (two_prop_z,
-    # ndcg_at_k, hodges_lehmann, mcnemar_test, chao1_richness,
-    # bayes_shrunk_quality) are ALL-GREEN in the committed 271-key
-    # sf0.01 sweep at the pack-#33 HEAD (BENCH/sweeps_r03.jsonl).
-    # -- r2's lone driver FAIL, reshaped to long-form this round --
+    "sql_udf_scalar": (q_sql_udf_scalar, SQL_SQL_UDF_SCALAR),
+    "sql_udf_table": (q_sql_udf_table, SQL_SQL_UDF_TABLE),
+    "sql_pipe_funnel": (q_sql_pipe_funnel, SQL_SQL_PIPE_FUNNEL),
+    "kmv_distinct": (q_kmv_distinct, SQL_KMV_DISTINCT),
+    "kmv_union_merge": (q_kmv_union_merge, SQL_KMV_UNION_MERGE),
+    "asof_staleness": (q_asof_staleness, SQL_ASOF_STALENESS),
+    "leakage_audit": (q_leakage_audit, SQL_LEAKAGE_AUDIT),
+    "feature_cross": (q_feature_cross, SQL_FEATURE_CROSS),
+    "rank_int": (q_rank_int, SQL_RANK_INT),
+    "kcore_peel": (q_kcore_peel, SQL_KCORE_PEEL),
+    "kmeanspp_seeds": (q_kmeanspp_seeds, SQL_KMEANSPP_SEEDS),
+    "embedding_outliers": (q_embedding_outliers, SQL_EMBEDDING_OUTLIERS),
+    "token_budget_mix": (q_token_budget_mix, SQL_TOKEN_BUDGET_MIX),
+    "dataset_card": (q_dataset_card, SQL_DATASET_CARD),
+    "ks_drift": (q_ks_drift, SQL_KS_DRIFT),
+    "asof_count_window": (q_asof_count_window, SQL_ASOF_COUNT_WINDOW),
+    "asof_decay_feature": (q_asof_decay_feature, SQL_ASOF_DECAY_FEATURE),
+    "asof_kth_recent": (q_asof_kth_recent, SQL_ASOF_KTH_RECENT),
+    "join_range_bucketed": (q_join_range_bucketed, SQL_JOIN_RANGE_BUCKETED),
+    "temporal_split": (q_temporal_split, SQL_TEMPORAL_SPLIT),
+    "weighted_sample": (q_weighted_sample, SQL_WEIGHTED_SAMPLE),
+    "sample_split": (q_sample_split, SQL_SAMPLE_SPLIT),
+    "lang_balance_sample": (q_lang_balance_sample, SQL_LANG_BALANCE_SAMPLE),
+    "sql_correlated": (q_sql_correlated, SQL_SQL_CORRELATED),
+    "sql_groupby_all": (q_sql_groupby_all, SQL_SQL_GROUPBY_ALL),
+    "sql_session_var": (q_sql_session_var, SQL_SQL_SESSION_VAR),
+    "sql_exec_immediate": (q_sql_exec_immediate, SQL_SQL_EXEC_IMMEDIATE),
+    "quantize_embed": (q_quantize_embed, SQL_QUANTIZE_EMBED),
+    "quantile_norm": (q_quantile_norm, SQL_QUANTILE_NORM),
     "agg_vector": (q_agg_vector, SQL_AGG_VECTOR),
-    # -- new r3 continuation (this session): feature-eng pack #40 —
-    #    nonparametric ANOVA / robust location / inequality
-    #    decomposition / gains table / calibration / ordinal dynamics
-    #    (displaces six more r3 keys past 50 — ALL-GREEN in the
-    #    committed 295-key sweep at the pack-#37 HEAD) --
-    # -- new r3 continuation (this session): feature-eng pack #41 —
-    #    reliability/clustering-strength/arrival-QQ/Weibull/
-    #    Good-Turing/CUPED (displaces six more r3 keys past 50 —
-    #    ALL-GREEN in the committed 295-key sweep) --
-    # -- new r3 continuation (this session): feature-eng pack #43 —
-    #    two-sample nonparametrics / variance homogeneity /
-    #    time-series diagnostics / Chatterjee dependence
-    #    (displaces six more r3 keys past 50 — ALL-GREEN in the
-    #    committed 295-key sweep) --
-    # -- new r3 continuation (this session): feature-eng pack #44 —
-    #    ordered-alternative / omnibus distribution comparison, KDE,
-    #    Q-Q mapping (displaces six more r3 keys past 50 — ALL-GREEN
-    #    in the committed 295-key sweep) --
-    # -- new r3 continuation (this session): feature-eng pack #45 —
-    #    blocked binary omnibus / rank post-hoc / rank scale test /
-    #    two-sample EDF tests / effect size (displaces six more r3
-    #    keys past 50 — ALL-GREEN in the committed sweeps) --
-    # -- new r3 continuation (this session): feature-eng pack #46 —
-    #    link-graph structure features (displaces six more r3 keys
-    #    past 50 — ALL-GREEN in the committed sweeps) --
-    # -- new r3 continuation (this session): feature-eng pack #47 —
-    #    survival hazard / interpolated quantiles / BI bridge /
-    #    changepoint / Poisson bootstrap / engagement (displaces six
-    #    more r3 keys past 50 — ALL-GREEN in the committed sweeps) --
-    # -- new r3 continuation (this session): feature-eng pack #48 —
-    #    corpus LM features + embedding-space statistics (displaces
-    #    six more r3 keys past 50 — ALL-GREEN in the committed
-    #    sweeps) --
-    # -- new r3 continuation (this session): feature-eng pack #49 —
-    #    evaluation & parameter-sensitivity ops (displaces six more
-    #    r3 keys past 50 — ALL-GREEN in the committed sweeps;
-    #    sketch_error_eval is rows-only BY DESIGN: cross-engine
-    #    sketches legitimately differ) --
-    # -- new r3 continuation (this session): feature-eng pack #50 —
-    #    JSONL source, partitioned-sink pruned roundtrip, temporal
-    #    concentration, whale share (displaces four more r3 keys
-    #    past 50 — ALL-GREEN in the committed sweeps) --
-    "attribution_multi": (q_attribution_multi, SQL_ATTRIBUTION_MULTI),
-    "tukey_kramer": (q_tukey_kramer, SQL_TUKEY_KRAMER),
-    "funnel_significance": (
-        q_funnel_significance,
-        SQL_FUNNEL_SIGNIFICANCE,
-    ),
-    "bigram_lm_ppl": (q_bigram_lm_ppl, SQL_BIGRAM_LM_PPL),
-    "trigram_coverage": (q_trigram_coverage, SQL_TRIGRAM_COVERAGE),
-    "rare_token_share": (q_rare_token_share, SQL_RARE_TOKEN_SHARE),
-    "doc_source_kl": (q_doc_source_kl, SQL_DOC_SOURCE_KL),
-    "embedding_dim_stats": (
-        q_embedding_dim_stats,
-        SQL_EMBEDDING_DIM_STATS,
-    ),
-    "label_margin": (q_label_margin, SQL_LABEL_MARGIN),
-    "nelson_aalen": (q_nelson_aalen, SQL_NELSON_AALEN),
-    "mix_rate_decomp": (q_mix_rate_decomp, SQL_MIX_RATE_DECOMP),
-    "binseg_sse": (q_binseg_sse, SQL_BINSEG_SSE),
-    "poisson_bootstrap": (q_poisson_bootstrap, SQL_POISSON_BOOTSTRAP),
-    "clustering_coeff": (q_clustering_coeff, SQL_CLUSTERING_COEFF),
-    "link_pred_scores": (q_link_pred_scores, SQL_LINK_PRED_SCORES),
-    "degree_assortativity": (
-        q_degree_assortativity,
-        SQL_DEGREE_ASSORTATIVITY,
-    ),
-    "hits_scores": (q_hits_scores, SQL_HITS_SCORES),
-    "bipartite_proj": (q_bipartite_proj, SQL_BIPARTITE_PROJ),
-    # -- new r3 continuation (this session): feature-eng pack #51 —
-    #    experimentation suite (displaces six more r3 keys past 50 —
-    #    ALL-GREEN in the committed sweeps) --
-    # -- new r3 continuation (this session): feature-eng pack #52 —
-    #    BI rollup shares, session-shape histogram, cohort LTV
-    #    (displaces three more r3 keys past 50 — ALL-GREEN in the
-    #    committed sweeps) --
-    # -- new r3 continuation (this session): feature-eng pack #53 —
-    #    cross-series structure / seasonality strength / bursts /
-    #    WoW retention / sign test (displaces six more r3 keys past
-    #    50 — ALL-GREEN in the committed sweeps) --
-    # -- new r3 continuation (this session): feature-eng pack #54 —
-    #    classifier-eval completion (displaces six more r3 keys past
-    #    50 — ALL-GREEN in the committed sweeps) --
-    # -- new r3 continuation (this session): feature-eng pack #55 —
-    #    growth accounting & product analytics (displaces six more
-    #    r3 keys past 50 — ALL-GREEN in the committed sweeps) --
-    # -- new r3 continuation (this session): feature-eng pack #56 —
-    #    distribution-fit diagnostics (displaces two more r3 keys
-    #    past 50 — ALL-GREEN in the committed sweeps) --
-    "zipf_r2": (q_zipf_r2, SQL_ZIPF_R2),
-    "lognormal_fit": (q_lognormal_fit, SQL_LOGNORMAL_FIT),
-    "growth_accounting": (q_growth_accounting, SQL_GROWTH_ACCOUNTING),
-    "power_user_curve": (q_power_user_curve, SQL_POWER_USER_CURVE),
-    "diverse_topk": (q_diverse_topk, SQL_DIVERSE_TOPK),
-    "band_anomaly_days": (q_band_anomaly_days, SQL_BAND_ANOMALY_DAYS),
-    "rank_stability": (q_rank_stability, SQL_RANK_STABILITY),
-    "conversion_lag_hist": (
-        q_conversion_lag_hist,
-        SQL_CONVERSION_LAG_HIST,
-    ),
-    "mcc_score": (q_mcc_score, SQL_MCC_SCORE),
-    "ece_score": (q_ece_score, SQL_ECE_SCORE),
-    "cost_threshold": (q_cost_threshold, SQL_COST_THRESHOLD),
-    "fairness_gaps": (q_fairness_gaps, SQL_FAIRNESS_GAPS),
-    "prec_at_k": (q_prec_at_k, SQL_PREC_AT_K),
-    "gains_auc": (q_gains_auc, SQL_GAINS_AUC),
-    "ccf_daily": (q_ccf_daily, SQL_CCF_DAILY),
-    "partial_corr_daily": (
-        q_partial_corr_daily,
-        SQL_PARTIAL_CORR_DAILY,
-    ),
-    "dow_strength": (q_dow_strength, SQL_DOW_STRENGTH),
-    "burst_intervals": (q_burst_intervals, SQL_BURST_INTERVALS),
-    "wow_retention": (q_wow_retention, SQL_WOW_RETENTION),
-    "sign_test": (q_sign_test, SQL_SIGN_TEST),
-    "share_of_parent": (q_share_of_parent, SQL_SHARE_OF_PARENT),
-    "session_size_hist": (q_session_size_hist, SQL_SESSION_SIZE_HIST),
-    "cohort_ltv": (q_cohort_ltv, SQL_COHORT_LTV),
-    "diff_in_diff": (q_diff_in_diff, SQL_DIFF_IN_DIFF),
-    "srm_check": (q_srm_check, SQL_SRM_CHECK),
-    "mde_power": (q_mde_power, SQL_MDE_POWER),
-    "covariate_balance": (q_covariate_balance, SQL_COVARIATE_BALANCE),
-    "effect_trend": (q_effect_trend, SQL_EFFECT_TREND),
-    "retention_by_arm": (q_retention_by_arm, SQL_RETENTION_BY_ARM),
-    "cochran_q": (q_cochran_q, SQL_COCHRAN_Q),
-    "dunn_posthoc": (q_dunn_posthoc, SQL_DUNN_POSTHOC),
-    "ansari_bradley": (q_ansari_bradley, SQL_ANSARI_BRADLEY),
-    "ks_two_sample": (q_ks_two_sample, SQL_KS_TWO_SAMPLE),
-    "cvm_two_sample": (q_cvm_two_sample, SQL_CVM_TWO_SAMPLE),
-    "cohens_d": (q_cohens_d, SQL_COHENS_D),
-    "mood_median": (q_mood_median, SQL_MOOD_MEDIAN),
-    "jonckheere_trend": (q_jonckheere_trend, SQL_JONCKHEERE_TREND),
-    "page_trend": (q_page_trend, SQL_PAGE_TREND),
-    "ad_ksample": (q_ad_ksample, SQL_AD_KSAMPLE),
-    "mann_whitney": (q_mann_whitney, SQL_MANN_WHITNEY),
-    "cliffs_delta": (q_cliffs_delta, SQL_CLIFFS_DELTA),
-    "levene_bf": (q_levene_bf, SQL_LEVENE_BF),
-    "pacf_daily": (q_pacf_daily, SQL_PACF_DAILY),
-    "ljung_box": (q_ljung_box, SQL_LJUNG_BOX),
-    "chatterjee_xi": (q_chatterjee_xi, SQL_CHATTERJEE_XI),
-    # -- new r3 continuation (this session): feature-eng pack #42 —
-    #    optimal transport / wavelet energy / survival comparison /
-    #    blocked nonparametrics / normality / delta-method CI
-    #    (displaces six more r3 keys past 50 — ALL-GREEN in the
-    #    committed 295-key sweep) --
-    "wasserstein_1d": (q_wasserstein_1d, SQL_WASSERSTEIN_1D),
-    "haar_energy": (q_haar_energy, SQL_HAAR_ENERGY),
-    "logrank_test": (q_logrank_test, SQL_LOGRANK_TEST),
-    "friedman_test": (q_friedman_test, SQL_FRIEDMAN_TEST),
-    "jarque_bera": (q_jarque_bera, SQL_JARQUE_BERA),
-    "ratio_delta_ci": (q_ratio_delta_ci, SQL_RATIO_DELTA_CI),
-    "cronbach_alpha": (q_cronbach_alpha, SQL_CRONBACH_ALPHA),
-    "icc_design_effect": (q_icc_design_effect, SQL_ICC_DESIGN_EFFECT),
-    "qq_exponential": (q_qq_exponential, SQL_QQ_EXPONENTIAL),
-    "weibull_fit": (q_weibull_fit, SQL_WEIBULL_FIT),
-    "good_turing": (q_good_turing, SQL_GOOD_TURING),
-    "cuped_adjust": (q_cuped_adjust, SQL_CUPED_ADJUST),
-    "kruskal_wallis": (q_kruskal_wallis, SQL_KRUSKAL_WALLIS),
-    "theil_index": (q_theil_index, SQL_THEIL_INDEX),
-    "decile_lift": (q_decile_lift, SQL_DECILE_LIFT),
-    "brier_decomp": (q_brier_decomp, SQL_BRIER_DECOMP),
-    "perm_entropy": (q_perm_entropy, SQL_PERM_ENTROPY),
-    # -- just past the 50-entry driver window by design: first the
-    #    pack #40-#41 float stats that pack #51's six new keys
-    #    displaced (there are more float-bearing continuation keys
-    #    than window slots; every displaced key is ALL-GREEN in the
-    #    committed 371-key full-registry sf0.01 sweep at this HEAD
-    #    plus its own tri-SF sweeps — BENCH/sweeps_r03.jsonl), then
-    #    the keys whose outputs are PURE INTEGER / exact-rational
-    #    machinery (order-statistic picks, integer kernel sums,
-    #    plain counts, schema'd source joins) plus the one rows-only
-    #    eval — the classes least exposed to cross-engine float
-    #    drift or already outside the oracle contract --
-    "trimmed_stats": (q_trimmed_stats, SQL_TRIMMED_STATS),
-    "sketch_error_eval": (q_sketch_error_eval, None),
-    "session_gap_sweep": (q_session_gap_sweep, SQL_SESSION_GAP_SWEEP),
-    "trim_sweep": (q_trim_sweep, SQL_TRIM_SWEEP),
-    "scan_jsonl": (q_scan_jsonl, SQL_SCAN_JSONL),
-    "partitioned_roundtrip": (
-        q_partitioned_roundtrip,
-        SQL_PARTITIONED_ROUNDTRIP,
-    ),
-    "daily_gini": (q_daily_gini, SQL_DAILY_GINI),
-    "value_share_topk": (q_value_share_topk, SQL_VALUE_SHARE_TOPK),
-    "percentile_interp": (q_percentile_interp, SQL_PERCENTILE_INTERP),
-    "dau_mau": (q_dau_mau, SQL_DAU_MAU),
-    "reciprocity": (q_reciprocity, SQL_RECIPROCITY),
-    "qq_deciles": (q_qq_deciles, SQL_QQ_DECILES),
-    "epanechnikov_kde": (q_epanechnikov_kde, SQL_EPANECHNIKOV_KDE),
-    # -- new r3 continuation (this session): feature-eng pack #39 —
-    #    ranking-bound/2x2/shape/positional statistics (displaces six
-    #    more r3 keys past 50 — ALL-GREEN in the committed 295-key
-    #    sweep at the pack-#37 HEAD) --
-    "wilson_lcb": (q_wilson_lcb, SQL_WILSON_LCB),
-    "odds_ratio": (q_odds_ratio, SQL_ODDS_RATIO),
-    "value_mode": (q_value_mode, SQL_VALUE_MODE),
-    "bowley_moors": (q_bowley_moors, SQL_BOWLEY_MOORS),
-    "term_position_profile": (
-        q_term_position_profile,
-        SQL_TERM_POSITION_PROFILE,
-    ),
-    "longest_event_run": (q_longest_event_run, SQL_LONGEST_EVENT_RUN),
-    # -- new r3 continuation (this session): feature-eng pack #38 —
-    #    divergence/CI/scoring/lifecycle statistics (displaces
-    #    top_bigram_frac..intra_doc_sim past 50 — ALL-GREEN in the
-    #    committed 295-key sweep at the pack-#37 HEAD) --
-    "user_mix_kl": (q_user_mix_kl, SQL_USER_MIX_KL),
-    "median_ci": (q_median_ci, SQL_MEDIAN_CI),
-    "woe_iv": (q_woe_iv, SQL_WOE_IV),
-    "half_activity_day": (q_half_activity_day, SQL_HALF_ACTIVITY_DAY),
-    "negbin_fit": (q_negbin_fit, SQL_NEGBIN_FIT),
-    "recency_score": (q_recency_score, SQL_RECENCY_SCORE),
-    # -- new r3 continuation (this session): feature-eng pack #37 —
-    #    forecast-eval/LRD/record/cluster statistics (displaces
-    #    source_vocab_jaccard..topk_overlap past 50 — ALL-GREEN in the
-    #    committed 271-key sweep at the pack-#33 HEAD) --
-    "pinball_loss": (q_pinball_loss, SQL_PINBALL_LOSS),
-    "hurst_vt": (q_hurst_vt, SQL_HURST_VT),
-    "running_records": (q_running_records, SQL_RUNNING_RECORDS),
-    "turning_points": (q_turning_points, SQL_TURNING_POINTS),
-    "char_bigram_entropy": (
-        q_char_bigram_entropy,
-        SQL_CHAR_BIGRAM_ENTROPY,
-    ),
-    "silhouette_lite": (q_silhouette_lite, SQL_SILHOUETTE_LITE),
-    # -- new r3 continuation (this session): feature-eng pack #36 —
-    #    multiple-testing/circular/sequence/lexical statistics --
-    "bh_fdr": (q_bh_fdr, SQL_BH_FDR),
-    "rayleigh_daily": (q_rayleigh_daily, SQL_RAYLEIGH_DAILY),
-    "markov_surprise": (q_markov_surprise, SQL_MARKOV_SURPRISE),
-    "readability": (q_readability, SQL_READABILITY),
-    "hapax_ratio": (q_hapax_ratio, SQL_HAPAX_RATIO),
-    "gini_mean_diff": (q_gini_mean_diff, SQL_GINI_MEAN_DIFF),
-    # -- new r3 continuation (this session): feature-eng pack #29 —
-    #    survival/basket/concentration features --
-    "km_hazard": (q_km_hazard, SQL_KM_HAZARD),
-    "basket_pairs": (q_basket_pairs, SQL_BASKET_PAIRS),
-    "prefix_template": (q_prefix_template, SQL_PREFIX_TEMPLATE),
-    "supplier_hhi": (q_supplier_hhi, SQL_SUPPLIER_HHI),
-    "weekend_lift": (q_weekend_lift, SQL_WEEKEND_LIFT),
-    "discount_depth": (q_discount_depth, SQL_DISCOUNT_DEPTH),
-    # -- new r3 continuation (this session): feature-eng pack #30 —
-    #    temporal/association statistics --
-    "autocorr_lag1": (q_autocorr_lag1, SQL_AUTOCORR_LAG1),
-    # -- new r3 continuation (this session): feature-eng pack #31 —
-    #    robust/nonparametric statistics --
-    "mann_kendall": (q_mann_kendall, SQL_MANN_KENDALL),
-    # -- new r3 continuation (this session): feature-eng pack #32 —
-    #    drift/EVT/NLP statistics --
-    "jsd_drift": (q_jsd_drift, SQL_JSD_DRIFT),
-    # -- new r3 continuation (this session): feature-eng pack #33 —
-    #    resample/window mechanics --
-    "time_weighted_avg": (q_time_weighted_avg, SQL_TIME_WEIGHTED_AVG),
-    # -- new r3 continuation (this session): feature-eng pack #34 —
-    #    cross-series/funnel/forecast-eval --
-    "type_corr_matrix": (q_type_corr_matrix, SQL_TYPE_CORR_MATRIX),
-    # -- new r3 continuation (this session): feature-eng pack #35 —
-    #    ranking/concentration/cold-start --
-    "rbo_overlap": (q_rbo_overlap, SQL_RBO_OVERLAP),
-    "weighted_jaccard": (q_weighted_jaccard, SQL_WEIGHTED_JACCARD),
-    "burstiness_gb": (q_burstiness_gb, SQL_BURSTINESS_GB),
-    "lorenz_curve": (q_lorenz_curve, SQL_LORENZ_CURVE),
-    "first_k_profile": (q_first_k_profile, SQL_FIRST_K_PROFILE),
-    "dwell_share": (q_dwell_share, SQL_DWELL_SHARE),
-    "semi_additive": (q_semi_additive, SQL_SEMI_ADDITIVE),
-    "time_to_convert": (q_time_to_convert, SQL_TIME_TO_CONVERT),
-    "abandonment": (q_abandonment, SQL_ABANDONMENT),
-    "seasonal_naive_mae": (q_seasonal_naive_mae, SQL_SEASONAL_NAIVE_MAE),
-    "gap_percentiles": (q_gap_percentiles, SQL_GAP_PERCENTILES),
-    "ohlc_bars": (q_ohlc_bars, SQL_OHLC_BARS),
-    "win_percentile_dist": (
-        q_win_percentile_dist,
-        SQL_WIN_PERCENTILE_DIST,
-    ),
-    "interp_linear": (q_interp_linear, SQL_INTERP_LINEAR),
-    "streak_lengths": (q_streak_lengths, SQL_STREAK_LENGTHS),
-    "session_paths": (q_session_paths, SQL_SESSION_PATHS),
-    "block_maxima": (q_block_maxima, SQL_BLOCK_MAXIMA),
-    "log_odds_terms": (q_log_odds_terms, SQL_LOG_ODDS_TERMS),
-    "pareto_front": (q_pareto_front, SQL_PARETO_FRONT),
-    "sax_words": (q_sax_words, SQL_SAX_WORDS),
-    "transition_entropy": (q_transition_entropy, SQL_TRANSITION_ENTROPY),
-    "l_moments": (q_l_moments, SQL_L_MOMENTS),
-    "runs_test": (q_runs_test, SQL_RUNS_TEST),
-    "hill_tail": (q_hill_tail, SQL_HILL_TAIL),
-    "dow_anova": (q_dow_anova, SQL_DOW_ANOVA),
-    "fano_factor": (q_fano_factor, SQL_FANO_FACTOR),
-    "cramers_v": (q_cramers_v, SQL_CRAMERS_V),
-    "activity_drawdown": (q_activity_drawdown, SQL_ACTIVITY_DRAWDOWN),
-    "max_concurrency": (q_max_concurrency, SQL_MAX_CONCURRENCY),
-    "theil_sen": (q_theil_sen, SQL_THEIL_SEN),
-    "dow_seasonal": (q_dow_seasonal, SQL_DOW_SEASONAL),
-    # -- new r3 continuation (this session): feature-eng pack #25 —
-    #    rank/robust statistics + paired tests --
-    "kendall_tau": (q_kendall_tau, SQL_KENDALL_TAU),
-    "two_prop_z": (q_two_prop_z, SQL_TWO_PROP_Z),
-    "ndcg_at_k": (q_ndcg_at_k, SQL_NDCG_AT_K),
-    "hodges_lehmann": (q_hodges_lehmann, SQL_HODGES_LEHMANN),
-    "mcnemar_test": (q_mcnemar_test, SQL_MCNEMAR_TEST),
-    "chao1_richness": (q_chao1_richness, SQL_CHAO1_RICHNESS),
-    # -- new r3 continuation (this session): feature-eng pack #26 —
-    #    corpus-comparison statistics --
-    "bayes_shrunk_quality": (q_bayes_shrunk_quality, SQL_BAYES_SHRUNK_QUALITY),
-    "source_vocab_jaccard": (q_source_vocab_jaccard, SQL_SOURCE_VOCAB_JACCARD),
-    "source_centroid_sim": (q_source_centroid_sim, SQL_SOURCE_CENTROID_SIM),
-    "token_burstiness": (q_token_burstiness, SQL_TOKEN_BURSTINESS),
-    "token_novelty": (q_token_novelty, SQL_TOKEN_NOVELTY),
-    "topk_overlap": (q_topk_overlap, SQL_TOPK_OVERLAP),
-    # -- new r3 continuation (this session): feature-eng pack #27 —
-    #    repetition-quality filters --
-    "top_bigram_frac": (q_top_bigram_frac, SQL_TOP_BIGRAM_FRAC),
-    "bigram_concentration": (
-        q_bigram_concentration,
-        SQL_BIGRAM_CONCENTRATION,
-    ),
-    "heaps_two_point": (q_heaps_two_point, SQL_HEAPS_TWO_POINT),
-    "longest_token_run": (q_longest_token_run, SQL_LONGEST_TOKEN_RUN),
-    "intra_doc_sim": (q_intra_doc_sim, SQL_INTRA_DOC_SIM),
-    "yule_k": (q_yule_k, SQL_YULE_K),
-    # -- new r3 continuation (this session): feature-eng pack #28 —
-    #    behavioral-regularity features --
-    "peak_rate": (q_peak_rate, SQL_PEAK_RATE),
-    "hourly_uniformity": (q_hourly_uniformity, SQL_HOURLY_UNIFORMITY),
-    "rfm_scores": (q_rfm_scores, SQL_RFM_SCORES),
-    "zipf_two_point": (q_zipf_two_point, SQL_ZIPF_TWO_POINT),
-    "order_gap_cv": (q_order_gap_cv, SQL_ORDER_GAP_CV),
-    "repeat_rate": (q_repeat_rate, SQL_REPEAT_RATE),
-    # -- new r3 continuation (this session): feature-eng pack #23 —
-    #    inverted-index sparse top-k, SRP signatures, manual HLL,
-    #    Spearman, CUSUM changepoint, KS best-threshold --
-    "sparse_topk": (q_sparse_topk, SQL_SPARSE_TOPK),
-    "srp_signature": (q_srp_signature, SQL_SRP_SIGNATURE),
-    "hll_distinct": (q_hll_distinct, SQL_HLL_DISTINCT),
-    "spearman_corr": (q_spearman_corr, SQL_SPEARMAN_CORR),
-    "cusum_changepoint": (q_cusum_changepoint, SQL_CUSUM_CHANGEPOINT),
-    "best_threshold": (q_best_threshold, SQL_BEST_THRESHOLD),
-    "count_min": (q_count_min, SQL_COUNT_MIN),
-    "tvd_drift": (q_tvd_drift, SQL_TVD_DRIFT),
-    "weighted_median": (q_weighted_median, SQL_WEIGHTED_MEDIAN),
-    "interval_union": (q_interval_union, SQL_INTERVAL_UNION),
-    "welch_t": (q_welch_t, SQL_WELCH_T),
-    "cooccur_lift": (q_cooccur_lift, SQL_COOCCUR_LIFT),
-    # -- new r3 continuation (this session): feature-eng pack #22 —
-    #    SQL recursion/lateral surface, JVM simhash pairs, grouped OLS,
-    #    Gini concentration, PR-AUC --
     "sql_recursive": (q_sql_recursive, SQL_SQL_RECURSIVE),
     "lateral_topk": (q_lateral_topk, SQL_LATERAL_TOPK),
     "simhash_pairs": (q_simhash_pairs, SQL_SIMHASH_PAIRS),
     "grouped_ols": (q_grouped_ols, SQL_GROUPED_OLS),
     "gini_skew": (q_gini_skew, SQL_GINI_SKEW),
     "pr_auc": (q_pr_auc, SQL_PR_AUC),
-    # -- new r3 continuation (this session): feature-eng pack #20 —
-    #    model-eval + drift: ROC AUC, PSI, ESS, equal-freq binning --
-    "roc_auc": (q_roc_auc, SQL_ROC_AUC),
     "psi_drift": (q_psi_drift, SQL_PSI_DRIFT),
-    "ess_weights": (q_ess_weights, SQL_ESS_WEIGHTS),
-    "equal_freq_bins": (q_equal_freq_bins, SQL_EQUAL_FREQ_BINS),
-    # -- new r3 continuation (this session): feature-eng pack #21 —
-    #    association + sampling: MI, seq-Poisson sample, PCA-1, kfold --
     "mutual_info": (q_mutual_info, SQL_MUTUAL_INFO),
-    "pps_sample": (q_pps_sample, SQL_PPS_SAMPLE),
-    "embedding_pca1": (q_embedding_pca1, SQL_EMBEDDING_PCA1),
-    "group_kfold": (q_group_kfold, SQL_GROUP_KFOLD),
-    # -- new r3 continuation (this session): feature-eng pack #14 —
-    #    ingest sources: Python DataSource, Variant, native XML --
     "scan_warclite": (q_scan_warclite, SQL_SCAN_WARCLITE),
     "variant_json": (q_variant_json, SQL_VARIANT_JSON),
     "scan_xml": (q_scan_xml, SQL_SCAN_XML),
-    # -- new r3 continuation (this session): feature-eng pack #15 —
-    #    span dedup, exact heavy hitters, bloom prefilter, IVM merge --
     "span_dedup": (q_span_dedup, SQL_SPAN_DEDUP),
     "heavy_hitters": (q_heavy_hitters, SQL_HEAVY_HITTERS),
     "bloom_prefilter": (q_bloom_prefilter, SQL_BLOOM_PREFILTER),
     "ivm_merge": (q_ivm_merge, SQL_IVM_MERGE),
-    # -- new r3 continuation (this session): feature-eng pack #16 —
-    #    chi2 term selection, embedding outliers, token-budget mixing,
-    #    Cohen's kappa, 2-round label propagation --
     "chi2_terms": (q_chi2_terms, SQL_CHI2_TERMS),
-    "embedding_outliers": (q_embedding_outliers, SQL_EMBEDDING_OUTLIERS),
-    "token_budget_mix": (q_token_budget_mix, SQL_TOKEN_BUDGET_MIX),
     "cohens_kappa": (q_cohens_kappa, SQL_COHENS_KAPPA),
     "label_prop": (q_label_prop, SQL_LABEL_PROP),
-    # -- new r3 continuation (this session): feature-eng pack #17 —
-    #    curriculum ordering + vocabulary coverage curve --
     "curriculum_order": (q_curriculum_order, SQL_CURRICULUM_ORDER),
     "vocab_coverage": (q_vocab_coverage, SQL_VOCAB_COVERAGE),
-    # -- new r3 continuation (this session): feature-eng pack #18 —
-    #    dataset card, KS drift monitor, Benford audit --
-    "dataset_card": (q_dataset_card, SQL_DATASET_CARD),
-    "ks_drift": (q_ks_drift, SQL_KS_DRIFT),
     "benford_audit": (q_benford_audit, SQL_BENFORD_AUDIT),
-    # -- new r3 continuation (this session): feature-eng pack #19 —
-    #    k-means++ seeding, domain mixture weights, length buckets --
-    "kmeanspp_seeds": (q_kmeanspp_seeds, SQL_KMEANSPP_SEEDS),
     "domain_weights": (q_domain_weights, SQL_DOMAIN_WEIGHTS),
     "length_buckets": (q_length_buckets, SQL_LENGTH_BUCKETS),
-    # -- new r3 (this session): feature-eng pack #6 --
     "pmi_bigrams": (q_pmi_bigrams, SQL_PMI_BIGRAMS),
     "cdc_upsert": (q_cdc_upsert, SQL_CDC_UPSERT),
     "doc_chunk": (q_doc_chunk, SQL_DOC_CHUNK),
-    "quantile_norm": (q_quantile_norm, SQL_QUANTILE_NORM),
-    # -- new r3 (this session): feature-eng pack #7 --
     "bm25_topk": (q_bm25_topk, SQL_BM25_TOPK),
     "join_full": (q_join_full, SQL_JOIN_FULL),
     "oov_rate": (q_oov_rate, SQL_OOV_RATE),
-    "lang_balance_sample": (q_lang_balance_sample, SQL_LANG_BALANCE_SAMPLE),
     "winsorize": (q_winsorize, SQL_WINSORIZE),
     "token_entropy": (q_token_entropy, SQL_TOKEN_ENTROPY),
     "dedup_crosscorpus": (q_dedup_crosscorpus, SQL_DEDUP_CROSSCORPUS),
-    # -- new r3 (this session): feature-eng pack #8 --
     "fuzzy_join": (q_fuzzy_join, SQL_FUZZY_JOIN),
     "unpivot": (q_unpivot, SQL_UNPIVOT),
     "bpe_pair_counts": (q_bpe_pair_counts, SQL_BPE_PAIR_COUNTS),
     "skew_report": (q_skew_report, SQL_SKEW_REPORT),
     "ewma": (q_ewma, None),
-    # -- new r3: first driver rows for the tolerance feature and the
-    #    union_window strategy --
     "asof_tolerance": (q_asof_tolerance, SQL_ASOF_TOL),
     "asof_union_window": (q_asof_union_window, SQL_ASOF),
     "tpch_q18": (q_tpch_q18, SQL_TPCH_Q18),
-    # -- new r3 (this session): training-data feature-eng pack #2 --
     "contamination": (q_contamination, SQL_CONTAMINATION),
     "asof_forward": (q_asof_forward, SQL_ASOF_FORWARD),
     "asof_nearest": (q_asof_nearest, SQL_ASOF_NEAREST),
-    # -- new r3 continuation (this session): feature-eng pack #13 —
-    #    graph stats, weak-supervision voting, calibration bins --
-    "graph_degrees": (q_graph_degrees, SQL_GRAPH_DEGREES),
-    "graph_triangles": (q_graph_triangles, SQL_GRAPH_TRIANGLES),
-    "weak_labels": (q_weak_labels, SQL_WEAK_LABELS),
-    "calibration_bins": (q_calibration_bins, SQL_CALIBRATION_BINS),
-    # -- new r3 continuation (this session): feature-eng pack #12 —
-    #    calendar features, coverage audit, negative sampling, median
-    #    imputation --
-    "calendar_features": (q_calendar_features, SQL_CALENDAR_FEATURES),
-    "dormant_audit": (q_dormant_audit, SQL_DORMANT_AUDIT),
-    "negative_sample": (q_negative_sample, SQL_NEGATIVE_SAMPLE),
-    "impute_median": (q_impute_median, SQL_IMPUTE_MEDIAN),
-    # -- new r3 continuation (this session): feature-eng pack #11 —
-    #    the last TPC-H shapes (all 22 now present) + per-domain cap --
-    "tpch_q2": (q_tpch_q2, SQL_TPCH_Q2),
-    "tpch_q9": (q_tpch_q9, SQL_TPCH_Q9),
-    "tpch_q11": (q_tpch_q11, SQL_TPCH_Q11),
-    "tpch_q12": (q_tpch_q12, SQL_TPCH_Q12),
-    "tpch_q20": (q_tpch_q20, SQL_TPCH_Q20),
-    "domain_cap": (q_domain_cap, SQL_DOMAIN_CAP),
-    # -- new r3 continuation (this session): feature-eng pack #10 —
-    #    the youngest code, so it takes the window slots; the keys the
-    #    two packs displace (pack #2 tail clean_funnel/clean_docs/
-    #    tpch_q1/seq_pack/vocab_topv + the pack #3-#5 block) are each
-    #    multiply sweep-green (sweeps_r03.jsonl) --
-    "tpch_q7": (q_tpch_q7, SQL_TPCH_Q7),
-    "tpch_q8": (q_tpch_q8, SQL_TPCH_Q8),
-    "tpch_q15": (q_tpch_q15, SQL_TPCH_Q15),
-    "tpch_q17": (q_tpch_q17, SQL_TPCH_Q17),
-    "tpch_q21": (q_tpch_q21, SQL_TPCH_Q21),
-    "pagerank": (q_pagerank, SQL_PAGERANK),
-    "rolling_median": (q_rolling_median, SQL_ROLLING_MEDIAN),
-    "mad_outliers": (q_mad_outliers, SQL_MAD_OUTLIERS),
-    "attribution": (q_attribution, SQL_ATTRIBUTION),
-    "boilerplate_para": (q_boilerplate_para, SQL_BOILERPLATE_PARA),
-    # ---- position 50 boundary: everything below is either a key
-    # displaced by packs #10/#11/#12 (pack #2 head+tail + pack #3-#5
-    # block, each ALL-GREEN in multiple committed tri-SF check_entry
-    # sweeps) or
     "retention_cohorts": (q_retention_cohorts, SQL_RETENTION_COHORTS),
     "session_funnel": (q_session_funnel, SQL_SESSION_FUNNEL),
     "histogram": (q_histogram, SQL_HISTOGRAM),
@@ -807,55 +308,33 @@ REGISTRY: dict[str, tuple] = {
     "snapshot_diff": (q_snapshot_diff, SQL_SNAPSHOT_DIFF),
     "tpch_q4": (q_tpch_q4, SQL_TPCH_Q4),
     "tpch_q14": (q_tpch_q14, SQL_TPCH_Q14),
-    "quantize_embed": (q_quantize_embed, SQL_QUANTIZE_EMBED),
     "tpch_q16": (q_tpch_q16, SQL_TPCH_Q16),
     "grouped_corr": (q_grouped_corr, SQL_GROUPED_CORR),
     "event_transitions": (q_event_transitions, SQL_EVENT_TRANSITIONS),
     "approx_percentile": (q_approx_percentile, None),
-    # ---- (former position-50 note, still true): everything below is either
-    # driver-green in round 1 and/or round 2 and unchanged since, or
-    # (the first 12 rows) r3-new keys repeatedly ALL-GREEN in committed
-    # tri-SF check_entry sweeps (pure narrow projections, the stable
-    # win_* window family, map_in_arrow, and asof_range_scan whose SQL
-    # twin is the r1+r2-green asof_join oracle); all kept green by the
-    # per-round sweeps (BENCH/sweeps_r03.jsonl). Keys rotated past the
-    # window this round are the round-4 window's first candidates. ----
     "win_ntile": (q_win_ntile, SQL_WIN_NTILE),
     "win_first_last": (q_win_first_last, SQL_WIN_FIRST_LAST),
     "win_range_frame": (q_win_range_frame, SQL_WIN_RANGE_FRAME),
     "map_in_arrow": (q_map_in_arrow, SQL_MAP_IN_ARROW),
     "asof_range_scan": (q_asof_range_scan, SQL_ASOF),
-    # -- new r3 pack #9 (added after the window filled; oracle-checked
-    #    by the committed tri-SF sweeps, first in line for the r4
-    #    driver window) --
-    "weighted_sample": (q_weighted_sample, SQL_WEIGHTED_SAMPLE),
     "agg_string_ordered": (q_agg_string_ordered, SQL_AGG_STRING_ORDERED),
     "extract_entities": (q_extract_entities, SQL_EXTRACT_ENTITIES),
     "gap_detection": (q_gap_detection, SQL_GAP_DETECTION),
-    "sql_correlated": (q_sql_correlated, SQL_SQL_CORRELATED),
     "dedup_windowed": (q_dedup_windowed, SQL_DEDUP_WINDOWED),
     "agg_approx_distinct": (q_agg_approx_distinct, None),
-    "join_range_bucketed": (q_join_range_bucketed, SQL_JOIN_RANGE_BUCKETED),
     "cumulative_reach": (q_cumulative_reach, SQL_CUMULATIVE_REACH),
     "rolling_active_users": (q_rolling_active_users, SQL_ROLLING_ACTIVE_USERS),
-    "tpch_q13": (q_tpch_q13, SQL_TPCH_Q13),
-    "tpch_q19": (q_tpch_q19, SQL_TPCH_Q19),
-    "tpch_q22": (q_tpch_q22, SQL_TPCH_Q22),
-    "sample_split": (q_sample_split, SQL_SAMPLE_SPLIT),
     "stratified_sample": (q_stratified_sample, SQL_STRATIFIED_SAMPLE),
     "url_normalize": (q_url_normalize, SQL_URL_NORMALIZE),
     "shard_assign": (q_shard_assign, SQL_SHARD_ASSIGN),
     "pii_redact": (q_pii_redact, SQL_PII_REDACT),
-    "temporal_split": (q_temporal_split, SQL_TEMPORAL_SPLIT),
     "zorder": (q_zorder, SQL_ZORDER),
     "sessionize": (q_sessionize, SQL_SESSIONIZE),
-    "session_bounds": (q_session_bounds, SQL_SESSION_BOUNDS),
     "skew_salted": (q_skew_salted, SQL_ASOF_SALT),
     "dedup_embedding": (q_dedup_embedding, SQL_DEDUP_EMBEDDING),
     "ann_lsh": (q_ann_lsh, SQL_ANN_LSH),
     "ann_ivf": (q_ann_ivf, SQL_ANN_IVF),
     "lang_id": (q_lang_id, SQL_LANG_ID),
-    "lang_agreement": (q_lang_agreement, SQL_LANG_AGREEMENT),
     "eval_rank_stats": (q_eval_rank_stats, SQL_EVAL_RANK_STATS),
     "scan_csv": (q_scan_csv, SQL_SCAN_CSV),
     "scalar_pandas_udf": (q_scalar_pandas_udf, SQL_SCALAR_PANDAS_UDF),
@@ -864,7 +343,6 @@ REGISTRY: dict[str, tuple] = {
     "join_theta": (q_join_theta, SQL_JOIN_THETA),
     "tpch_q5": (q_tpch_q5, SQL_TPCH_Q5),
     "tpch_q10": (q_tpch_q10, SQL_TPCH_Q10),
-    # -- temporal core --
     "asof_join": (q_asof_join, SQL_ASOF),
     "win_lag_lead": (q_win_lag_lead, SQL_WIN_LAG_LEAD),
     "win_rank": (q_win_rank, SQL_WIN_RANK),
@@ -875,11 +353,9 @@ REGISTRY: dict[str, tuple] = {
     "win_session": (q_win_session, SQL_WIN_SESSION),
     "backfill": (q_backfill, SQL_BACKFILL),
     "topk_per_group": (q_topk_per_group, SQL_TOPK),
-    # -- projection/filter/null/sort --
     "project_filter": (q_project_filter, SQL_PROJECT_FILTER),
     "null_handling": (q_null_handling, SQL_NULL_HANDLING),
     "sort_limit": (q_sort_limit, SQL_SORT_LIMIT),
-    # -- aggregation --
     "agg_basic": (q_agg_basic, SQL_AGG_BASIC),
     "agg_distinct": (q_agg_distinct, SQL_AGG_DISTINCT),
     "agg_rollup": (q_agg_rollup, SQL_AGG_ROLLUP),
@@ -891,20 +367,16 @@ REGISTRY: dict[str, tuple] = {
     "explode_tokens": (q_explode_tokens, SQL_EXPLODE_TOKENS),
     "scalar_levenshtein": (q_scalar_levenshtein, SQL_SCALAR_LEVENSHTEIN),
     "udtf_shingles": (q_udtf_shingles, SQL_UDTF_SHINGLES),
-    # -- joins --
     "join_inner": (q_join_inner, SQL_JOIN_INNER),
     "join_broadcast": (q_join_broadcast, SQL_JOIN_BROADCAST),
     "join_left": (q_join_left, SQL_JOIN_LEFT),
-    "join_semi": (q_join_semi, SQL_JOIN_SEMI),
     "tpch_q3": (q_tpch_q3, SQL_TPCH_Q3),
-    # -- text/dedup/similarity pack (r2 driver-green) --
     "dedup_exact": (q_dedup_exact, SQL_DEDUP_EXACT),
     "token_count": (q_token_count, SQL_TOKEN_COUNT),
     "text_quality": (q_text_quality, SQL_TEXT_QUALITY),
     "knn_cosine": (q_knn_cosine, SQL_KNN_COSINE),
     "ngram_jaccard": (q_ngram_jaccard, SQL_NGRAM_JACCARD),
     "set_union": (q_set_union, SQL_SET_UNION),
-    "set_intersect": (q_set_intersect, SQL_SET_INTERSECT),
     "set_except": (q_set_except, SQL_SET_EXCEPT),
     "scalar_string": (q_scalar_string, SQL_SCALAR_STRING),
     "scalar_hash": (q_scalar_hash, SQL_SCALAR_HASH),
@@ -913,10 +385,8 @@ REGISTRY: dict[str, tuple] = {
     "scalar_array": (q_scalar_array, SQL_SCALAR_ARRAY),
     "scalar_json": (q_scalar_json, SQL_SCALAR_JSON),
     "scalar_map": (q_scalar_map, SQL_SCALAR_MAP),
-    # -- rows-only (no SQL oracle; pytest parity) --
     "synth_pages": (q_synth_pages, None),
     "scan_pages": (q_scan_pages, None),
-    "lineage": (q_lineage, None),
     "sink_roundtrip": (q_sink_roundtrip, None),
     "featurize_documents": (q_featurize_documents, None),
     "minhash_near_dup": (q_minhash_near_dup, None),
@@ -926,15 +396,8 @@ REGISTRY: dict[str, tuple] = {
     "media_features": (q_media_features, None),
     "media_resize": (q_media_resize, None),
     "media_frames": (q_media_frames, None),
-    # -- new r4: feature-eng pack #57 — point-in-time pipeline
-    #    diagnostics (appended AFTER the rotated driver window) --
-    "asof_staleness": (q_asof_staleness, SQL_ASOF_STALENESS),
-    "leakage_audit": (q_leakage_audit, SQL_LEAKAGE_AUDIT),
     "crawl_coverage": (q_crawl_coverage, SQL_CRAWL_COVERAGE),
     "snapshot_churn": (q_snapshot_churn, SQL_SNAPSHOT_CHURN),
-    # -- new r4: feature-eng pack #58 — distinct sketches + periodicity --
-    "kmv_distinct": (q_kmv_distinct, SQL_KMV_DISTINCT),
-    "kmv_union_merge": (q_kmv_union_merge, SQL_KMV_UNION_MERGE),
     "fold_period_strength": (
         q_fold_period_strength,
         SQL_FOLD_PERIOD_STRENGTH,
@@ -943,434 +406,7 @@ REGISTRY: dict[str, tuple] = {
         q_seasonal_anomaly_days,
         SQL_SEASONAL_ANOMALY_DAYS,
     ),
-    # -- new r4: feature-eng pack #59 — the Spark 4 SQL surface --
-    "sql_udf_scalar": (q_sql_udf_scalar, SQL_SQL_UDF_SCALAR),
-    "sql_udf_table": (q_sql_udf_table, SQL_SQL_UDF_TABLE),
-    "sql_pipe_funnel": (q_sql_pipe_funnel, SQL_SQL_PIPE_FUNNEL),
-    "sql_session_var": (q_sql_session_var, SQL_SQL_SESSION_VAR),
-    "sql_exec_immediate": (q_sql_exec_immediate, SQL_SQL_EXEC_IMMEDIATE),
-    "sql_groupby_all": (q_sql_groupby_all, SQL_SQL_GROUPBY_ALL),
-    # -- new r4: feature-eng pack #60 — model-input transforms --
-    "feature_cross": (q_feature_cross, SQL_FEATURE_CROSS),
-    "rank_int": (q_rank_int, SQL_RANK_INT),
     "isotonic_calibration": (q_isotonic_calibration, None),
-    # -- new r4: feature-eng pack #61 — graph peeling + embedding trunc --
-    "kcore_peel": (q_kcore_peel, SQL_KCORE_PEEL),
     "matryoshka_eval": (q_matryoshka_eval, SQL_MATRYOSHKA_EVAL),
-    # -- new r4: feature-eng pack #62 — contrastive-pair mining --
-    "hard_negatives": (q_hard_negatives, SQL_HARD_NEGATIVES),
-    # -- new r4: feature-eng pack #63 — modern data-curation ops --
-    "semdedup": (q_semdedup, SQL_SEMDEDUP),
-    "rrf_fusion": (q_rrf_fusion, SQL_RRF_FUSION),
-    "conformal_qhat": (q_conformal_qhat, SQL_CONFORMAL_QHAT),
-    "kcenter_coreset": (q_kcenter_coreset, SQL_KCENTER_CORESET),
-    # -- new r4: feature-eng pack #64 — PQ compression + corpus mixing --
-    "pq_encode": (q_pq_encode, SQL_PQ_ENCODE),
-    "adc_topk": (q_adc_topk, SQL_ADC_TOPK),
-    "mixture_temperature": (q_mixture_temperature, SQL_MIXTURE_TEMPERATURE),
-    # -- new r4: feature-eng pack #65 — privacy audits + ORC source --
-    "k_anonymity": (q_k_anonymity, SQL_K_ANONYMITY),
-    "dp_counts": (q_dp_counts, SQL_DP_COUNTS),
-    "stratified_kfold": (q_stratified_kfold, SQL_STRATIFIED_KFOLD),
-    "scan_orc": (q_scan_orc, SQL_SCAN_ORC),
-    # -- new r4: feature-eng pack #66 — crawl-ops & planner statistics --
-    "recrawl_priority": (q_recrawl_priority, SQL_RECRAWL_PRIORITY),
-    "salt_plan": (q_salt_plan, SQL_SALT_PLAN),
-    "join_cardinality_est": (q_join_cardinality_est, SQL_JOIN_CARDINALITY_EST),
-    "freshness_sla": (q_freshness_sla, SQL_FRESHNESS_SLA),
-    # -- new r4: feature-eng pack #67 — survey-sampling estimators --
-    "ht_estimator": (q_ht_estimator, SQL_HT_ESTIMATOR),
-    "raking_ipf": (q_raking_ipf, SQL_RAKING_IPF),
-    "neyman_allocation": (q_neyman_allocation, SQL_NEYMAN_ALLOCATION),
-    # -- new r4: feature-eng pack #68 — Spark 4 SQL surface + containment --
-    "agg_listagg": (q_agg_listagg, SQL_AGG_LISTAGG),
-    "collated_dedup": (q_collated_dedup, SQL_COLLATED_DEDUP),
-    "try_arithmetic": (q_try_arithmetic, SQL_TRY_ARITHMETIC),
-    "shingle_containment": (q_shingle_containment, SQL_SHINGLE_CONTAINMENT),
-    # -- new r4: feature-eng pack #69 — robust estimation + sketch algebra --
-    "huber_mean": (q_huber_mean, SQL_HUBER_MEAN),
-    "kmv_intersect": (q_kmv_intersect, SQL_KMV_INTERSECT),
-    "perm_test_mean": (q_perm_test_mean, SQL_PERM_TEST_MEAN),
-    # -- new r4: feature-eng pack #70 — crawl-graph + code routing --
-    "redirect_chains": (q_redirect_chains, SQL_REDIRECT_CHAINS),
-    "modularity_q": (q_modularity_q, SQL_MODULARITY_Q),
-    "code_detect": (q_code_detect, SQL_CODE_DETECT),
-    # -- new r4: feature-eng pack #71 — stratified categorical estimators --
-    "mantel_haenszel": (q_mantel_haenszel, SQL_MANTEL_HAENSZEL),
-    "cochran_armitage": (q_cochran_armitage, SQL_COCHRAN_ARMITAGE),
-    "jackknife_ratio": (q_jackknife_ratio, SQL_JACKKNIFE_RATIO),
-    # -- new r4: feature-eng pack #72 — categorical encoders + F1 eval --
-    "count_encode": (q_count_encode, SQL_COUNT_ENCODE),
-    "one_hot_topk": (q_one_hot_topk, SQL_ONE_HOT_TOPK),
-    "macro_f1": (q_macro_f1, SQL_MACRO_F1),
-    # -- new r4: feature-eng pack #73 — keywords + sequential inference --
-    "rake_keywords": (q_rake_keywords, SQL_RAKE_KEYWORDS),
-    "msprt_evalue": (q_msprt_evalue, SQL_MSPRT_EVALUE),
-    "holm_bonferroni": (q_holm_bonferroni, SQL_HOLM_BONFERRONI),
-    # -- new r4: feature-eng pack #74 — LLM data selection + eval --
-    "dsir_weights": (q_dsir_weights, SQL_DSIR_WEIGHTS),
-    "pass_at_k": (q_pass_at_k, SQL_PASS_AT_K),
-    "err_ranking": (q_err_ranking, SQL_ERR_RANKING),
-    # -- new r4: feature-eng pack #75 — layout planning + store monitors --
-    "scan_split_plan": (q_scan_split_plan, SQL_SCAN_SPLIT_PLAN),
-    "online_offline_skew": (q_online_offline_skew, SQL_ONLINE_OFFLINE_SKEW),
-    "dedup_prefix": (q_dedup_prefix, SQL_DEDUP_PREFIX),
-    # -- new r4: feature-eng pack #76 — bitemporal + late-data audits --
-    "asof_bitemporal": (q_asof_bitemporal, SQL_ASOF_BITEMPORAL),
-    "watermark_lag_audit": (q_watermark_lag_audit, SQL_WATERMARK_LAG_AUDIT),
-    "late_arrival_impact": (q_late_arrival_impact, SQL_LATE_ARRIVAL_IMPACT),
-    # -- new r4: feature-eng pack #77 — in-engine trainers + competing risks --
-    "decision_stump": (q_decision_stump, SQL_DECISION_STUMP),
-    "naive_bayes": (q_naive_bayes, SQL_NAIVE_BAYES),
-    "competing_risks_cif": (q_competing_risks_cif, SQL_COMPETING_RISKS_CIF),
-    # -- new r4: feature-eng pack #78 — model audits: calibration + uplift --
-    "spiegelhalter_z": (q_spiegelhalter_z, SQL_SPIEGELHALTER_Z),
-    "hosmer_lemeshow": (q_hosmer_lemeshow, SQL_HOSMER_LEMESHOW),
-    "qini_uplift": (q_qini_uplift, SQL_QINI_UPLIFT),
-    # -- new r4: feature-eng pack #79 — off-policy evaluation --
-    "ips_offpolicy": (q_ips_offpolicy, SQL_IPS_OFFPOLICY),
-    "dr_offpolicy": (q_dr_offpolicy, SQL_DR_OFFPOLICY),
-    "policy_sweep": (q_policy_sweep, SQL_POLICY_SWEEP),
-    # -- new r4: feature-eng pack #80 — partition agreement + EVT POT --
-    "adjusted_rand": (q_adjusted_rand, SQL_ADJUSTED_RAND),
-    "cluster_vmeasure": (q_cluster_vmeasure, SQL_CLUSTER_VMEASURE),
-    "gpd_fit": (q_gpd_fit, SQL_GPD_FIT),
-    # -- new r4: feature-eng pack #81 — privacy auditing II --
-    "l_diversity": (q_l_diversity, SQL_L_DIVERSITY),
-    "entropy_l_diversity": (q_entropy_l_diversity, SQL_ENTROPY_L_DIVERSITY),
-    "t_closeness": (q_t_closeness, SQL_T_CLOSENESS),
-    # -- new r4: feature-eng pack #82 — regression diagnostics --
-    "durbin_watson": (q_durbin_watson, SQL_DURBIN_WATSON),
-    "breusch_pagan": (q_breusch_pagan, SQL_BREUSCH_PAGAN),
-    "fe_within": (q_fe_within, SQL_FE_WITHIN),
-    # -- new r4: feature-eng pack #83 — frequency-moment sketches --
-    "freq_moments": (q_freq_moments, SQL_FREQ_MOMENTS),
-    "ams_f2": (q_ams_f2, SQL_AMS_F2),
-    "countsketch_freq": (q_countsketch_freq, SQL_COUNTSKETCH_FREQ),
-    # -- new r4: feature-eng pack #84 — multi-rater agreement --
-    "fleiss_kappa": (q_fleiss_kappa, SQL_FLEISS_KAPPA),
-    "krippendorff_alpha": (q_krippendorff_alpha, SQL_KRIPPENDORFF_ALPHA),
-    "gwet_ac1": (q_gwet_ac1, SQL_GWET_AC1),
-    # -- new r4: feature-eng pack #85 — overlap join / AUC CI / observe --
-    "interval_overlap": (q_interval_overlap, SQL_INTERVAL_OVERLAP),
-    "auc_ci": (q_auc_ci, SQL_AUC_CI),
-    "observe_metrics": (q_observe_metrics, SQL_OBSERVE_METRICS),
-    # -- new r4: feature-eng pack #86 — causal inference II --
-    "rd_estimate": (q_rd_estimate, SQL_RD_ESTIMATE),
-    "iv_wald": (q_iv_wald, SQL_IV_WALD),
-    "event_study": (q_event_study, SQL_EVENT_STUDY),
-    # -- new r4: feature-eng pack #87 — bucketed layout / dedup eval /
-    # sequential drift --
-    "bucketed_join": (q_bucketed_join, SQL_BUCKETED_JOIN),
     "asof_bucketed": (q_asof_bucketed, SQL_ASOF_BUCKETED),
-    "neardup_eval": (q_neardup_eval, SQL_NEARDUP_EVAL),
-    "page_hinkley": (q_page_hinkley, SQL_PAGE_HINKLEY),
-    # -- new r4: feature-eng pack #88 — FDR family II + record linkage --
-    "benjamini_yekutieli": (q_benjamini_yekutieli, SQL_BENJAMINI_YEKUTIELI),
-    "storey_pi0": (q_storey_pi0, SQL_STOREY_PI0),
-    "fs_weights": (q_fs_weights, SQL_FS_WEIGHTS),
-    # -- new r4: feature-eng pack #89 — concordance / robust test /
-    # overdispersion --
-    "kendall_w": (q_kendall_w, SQL_KENDALL_W),
-    "yuen_test": (q_yuen_test, SQL_YUEN_TEST),
-    "beta_binomial_mom": (q_beta_binomial_mom, SQL_BETA_BINOMIAL_MOM),
-    # -- new r4: feature-eng pack #90 — distributional effects --
-    "qte_deciles": (q_qte_deciles, SQL_QTE_DECILES),
-    "exp_hazard_ratio": (q_exp_hazard_ratio, SQL_EXP_HAZARD_RATIO),
-    "hellinger_hist": (q_hellinger_hist, SQL_HELLINGER_HIST),
-    # -- new r4: feature-eng pack #91 — survival curve layer + inequality --
-    "km_greenwood": (q_km_greenwood, SQL_KM_GREENWOOD),
-    "km_rmst": (q_km_rmst, SQL_KM_RMST),
-    "atkinson_index": (q_atkinson_index, SQL_ATKINSON_INDEX),
-    # -- new r4: feature-eng pack #92 — embedding-space geometry --
-    "mean_pairwise_cosine": (q_mean_pairwise_cosine, SQL_MEAN_PAIRWISE_COSINE),
-    "embedding_isotropy": (q_embedding_isotropy, SQL_EMBEDDING_ISOTROPY),
-    "jl_distortion": (q_jl_distortion, SQL_JL_DISTORTION),
-    # -- new r4: feature-eng pack #93 — MinHash estimator calibration --
-    "minhash_accuracy": (q_minhash_accuracy, SQL_MINHASH_ACCURACY),
-    "bbit_minhash": (q_bbit_minhash, SQL_BBIT_MINHASH),
-    "containment_est": (q_containment_est, SQL_CONTAINMENT_EST),
-    # -- new r4: feature-eng pack #94 — Spark 4 DataFrame API surfaces --
-    "grouped_arrow": (q_grouped_arrow, SQL_GROUPED_ARROW),
-    "df_transpose": (q_df_transpose, SQL_DF_TRANSPOSE),
-    "set_ops_all": (q_set_ops_all, SQL_SET_OPS_ALL),
-    # -- new r4: feature-eng pack #95 — forecast evaluation --
-    "prequential_error": (q_prequential_error, SQL_PREQUENTIAL_ERROR),
-    "mincer_zarnowitz": (q_mincer_zarnowitz, SQL_MINCER_ZARNOWITZ),
-    "diebold_mariano": (q_diebold_mariano, SQL_DIEBOLD_MARIANO),
-    # -- new r4: feature-eng pack #96 — exact Shapley / rank migration /
-    # queueing identity --
-    "shapley_features": (q_shapley_features, SQL_SHAPLEY_FEATURES),
-    "decile_migration": (q_decile_migration, SQL_DECILE_MIGRATION),
-    "littles_law": (q_littles_law, SQL_LITTLES_LAW),
-    # -- new r4: feature-eng pack #97 — one-step Cox / SNM blocking / KS --
-    "cox_one_step": (q_cox_one_step, SQL_COX_ONE_STEP),
-    "sorted_neighborhood": (q_sorted_neighborhood, SQL_SORTED_NEIGHBORHOOD),
-    "ks_classifier": (q_ks_classifier, SQL_KS_CLASSIFIER),
-    # -- new r4: feature-eng pack #98 — population estimation --
-    "german_tank": (q_german_tank, SQL_GERMAN_TANK),
-    "capture_recapture": (q_capture_recapture, SQL_CAPTURE_RECAPTURE),
-    "linear_counting": (q_linear_counting, SQL_LINEAR_COUNTING),
-    # -- new r4: feature-eng pack #99 — experimentation III --
-    "tost_equivalence": (q_tost_equivalence, SQL_TOST_EQUIVALENCE),
-    "obrien_fleming": (q_obrien_fleming, SQL_OBRIEN_FLEMING),
-    "winners_curse": (q_winners_curse, SQL_WINNERS_CURSE),
-    # -- new r4: feature-eng pack #100 — state-carrying as-of features --
-    "asof_decay_feature": (q_asof_decay_feature, SQL_ASOF_DECAY_FEATURE),
-    "asof_count_window": (q_asof_count_window, SQL_ASOF_COUNT_WINDOW),
-    "asof_kth_recent": (q_asof_kth_recent, SQL_ASOF_KTH_RECENT),
-    # -- new r4: feature-eng pack #101 — extreme-value theory II --
-    "extremal_index": (q_extremal_index, SQL_EXTREMAL_INDEX),
-    "gpd_return_level": (q_gpd_return_level, SQL_GPD_RETURN_LEVEL),
-    "tail_dependence": (q_tail_dependence, SQL_TAIL_DEPENDENCE),
-    # -- new r4: feature-eng pack #102 — stylometry + classical outliers --
-    "burrows_delta": (q_burrows_delta, SQL_BURROWS_DELTA),
-    "mahalanobis_outliers": (q_mahalanobis_outliers, SQL_MAHALANOBIS_OUTLIERS),
-    "grubbs_test": (q_grubbs_test, SQL_GRUBBS_TEST),
-    "mase_smape": (q_mase_smape, SQL_MASE_SMAPE),
-    "theil_u2": (q_theil_u2, SQL_THEIL_U2),
-    "forecast_encompassing": (
-        q_forecast_encompassing,
-        SQL_FORECAST_ENCOMPASSING,
-    ),
-    "fh_logrank": (q_fh_logrank, SQL_FH_LOGRANK),
-    "life_table": (q_life_table, SQL_LIFE_TABLE),
-    "schoenfeld_trend": (q_schoenfeld_trend, SQL_SCHOENFELD_TREND),
-    "lins_ccc": (q_lins_ccc, SQL_LINS_CCC),
-    "bland_altman": (q_bland_altman, SQL_BLAND_ALTMAN),
-    "deming_regression": (q_deming_regression, SQL_DEMING_REGRESSION),
-    "fisher_exact": (q_fisher_exact, SQL_FISHER_EXACT),
-    "breslow_day": (q_breslow_day, SQL_BRESLOW_DAY),
-    "poisson_dispersion": (
-        q_poisson_dispersion,
-        SQL_POISSON_DISPERSION,
-    ),
-    "nn_matching_att": (q_nn_matching_att, SQL_NN_MATCHING_ATT),
-    "rosenbaum_bounds": (q_rosenbaum_bounds, SQL_ROSENBAUM_BOUNDS),
-    "placebo_did": (q_placebo_did, SQL_PLACEBO_DID),
-    "bradley_terry": (q_bradley_terry, SQL_BRADLEY_TERRY),
-    "rbp_eval": (q_rbp_eval, SQL_RBP_EVAL),
-    "borda_consensus": (q_borda_consensus, SQL_BORDA_CONSENSUS),
-    "lof_scores": (q_lof_scores, SQL_LOF_SCORES),
-    "twonn_dim": (q_twonn_dim, SQL_TWONN_DIM),
-    "hubness_skew": (q_hubness_skew, SQL_HUBNESS_SKEW),
-    "fk_orphans": (q_fk_orphans, SQL_FK_ORPHANS),
-    "fd_violations": (q_fd_violations, SQL_FD_VIOLATIONS),
-    "dup_key_audit": (q_dup_key_audit, SQL_DUP_KEY_AUDIT),
-    "erlang_c": (q_erlang_c, SQL_ERLANG_C),
-    "slo_burn_rate": (q_slo_burn_rate, SQL_SLO_BURN_RATE),
-    "capacity_headroom": (
-        q_capacity_headroom,
-        SQL_CAPACITY_HEADROOM,
-    ),
-    "qn_sn_scale": (q_qn_sn_scale, SQL_QN_SN_SCALE),
-    "biweight_midvar": (q_biweight_midvar, SQL_BIWEIGHT_MIDVAR),
-    "dagostino_k2": (q_dagostino_k2, SQL_DAGOSTINO_K2),
-    "periodogram_peak": (q_periodogram_peak, SQL_PERIODOGRAM_PEAK),
-    "ar2_yule_walker": (q_ar2_yule_walker, SQL_AR2_YULE_WALKER),
-    "spectral_entropy": (q_spectral_entropy, SQL_SPECTRAL_ENTROPY),
-    "kneser_ney_bigram": (q_kneser_ney_bigram, SQL_KNESER_NEY_BIGRAM),
-    "distinct_n": (q_distinct_n, SQL_DISTINCT_N),
-    "self_bleu_lite": (q_self_bleu_lite, SQL_SELF_BLEU_LITE),
-    "pocock_boundary": (q_pocock_boundary, SQL_POCOCK_BOUNDARY),
-    "always_valid_ci": (q_always_valid_ci, SQL_ALWAYS_VALID_CI),
-    "cusum_spc": (q_cusum_spc, SQL_CUSUM_SPC),
-    "crps_eval": (q_crps_eval, SQL_CRPS_EVAL),
-    "pit_histogram": (q_pit_histogram, SQL_PIT_HISTOGRAM),
-    "winkler_score": (q_winkler_score, SQL_WINKLER_SCORE),
-    "eigenvector_centrality": (
-        q_eigenvector_centrality,
-        SQL_EIGENVECTOR_CENTRALITY,
-    ),
-    "katz_centrality": (q_katz_centrality, SQL_KATZ_CENTRALITY),
-    "rich_club": (q_rich_club, SQL_RICH_CLUB),
-    "mc_stationary": (q_mc_stationary, SQL_MC_STATIONARY),
-    "entropy_rate": (q_entropy_rate, SQL_ENTROPY_RATE),
-    "mc_reversibility": (q_mc_reversibility, SQL_MC_REVERSIBILITY),
-    "abc_analysis": (q_abc_analysis, SQL_ABC_ANALYSIS),
-    "stl_decompose": (q_stl_decompose, SQL_STL_DECOMPOSE),
-    "seasonal_strength": (q_seasonal_strength, SQL_SEASONAL_STRENGTH),
-    "cornish_fisher_q": (q_cornish_fisher_q, SQL_CORNISH_FISHER_Q),
-    "chebyshev_audit": (q_chebyshev_audit, SQL_CHEBYSHEV_AUDIT),
-    "box_cox": (q_box_cox, SQL_BOX_COX),
-    "tokenizer_fertility": (
-        q_tokenizer_fertility,
-        SQL_TOKENIZER_FERTILITY,
-    ),
-    "length_ccdf": (q_length_ccdf, SQL_LENGTH_CCDF),
-    "langid_by_source": (q_langid_by_source, SQL_LANGID_BY_SOURCE),
-    "oaxaca_blinder": (q_oaxaca_blinder, SQL_OAXACA_BLINDER),
-    "theil_decomp": (q_theil_decomp, SQL_THEIL_DECOMP),
-    "lorenz_dominance": (q_lorenz_dominance, SQL_LORENZ_DOMINANCE),
-    "bayes_ab_prob": (q_bayes_ab_prob, SQL_BAYES_AB_PROB),
-    "bayes_expected_loss": (
-        q_bayes_expected_loss,
-        SQL_BAYES_EXPECTED_LOSS,
-    ),
-    "dirichlet_shares": (q_dirichlet_shares, SQL_DIRICHLET_SHARES),
-    "price_elasticity": (q_price_elasticity, SQL_PRICE_ELASTICITY),
-    "newsvendor_stock": (q_newsvendor_stock, SQL_NEWSVENDOR_STOCK),
-    "demand_pooling": (q_demand_pooling, SQL_DEMAND_POOLING),
-    "qreg_median": (q_qreg_median, SQL_QREG_MEDIAN),
-    "huber_trend": (q_huber_trend, SQL_HUBER_TREND),
-    "regression_influence": (
-        q_regression_influence,
-        SQL_REGRESSION_INFLUENCE,
-    ),
-    "meta_analysis": (q_meta_analysis, SQL_META_ANALYSIS),
-    "egger_test": (q_egger_test, SQL_EGGER_TEST),
-    "loo_meta": (q_loo_meta, SQL_LOO_META),
-    "selectivity_audit": (q_selectivity_audit, SQL_SELECTIVITY_AUDIT),
-    "histogram_est_error": (
-        q_histogram_est_error,
-        SQL_HISTOGRAM_EST_ERROR,
-    ),
-    "ndv_sample_est": (q_ndv_sample_est, SQL_NDV_SAMPLE_EST),
-    "mrmr_lite": (q_mrmr_lite, SQL_MRMR_LITE),
-    "vif3_audit": (q_vif3_audit, SQL_VIF3_AUDIT),
-    "feature_stability": (q_feature_stability, SQL_FEATURE_STABILITY),
-    "mmd_shift": (q_mmd_shift, SQL_MMD_SHIFT),
-    "energy_distance": (q_energy_distance, SQL_ENERGY_DISTANCE),
-    "ks_proj_max": (q_ks_proj_max, SQL_KS_PROJ_MAX),
-    "dup_cluster_profile": (
-        q_dup_cluster_profile,
-        SQL_DUP_CLUSTER_PROFILE,
-    ),
-    "ngram_coverage_curve": (
-        q_ngram_coverage_curve,
-        SQL_NGRAM_COVERAGE_CURVE,
-    ),
-    "readability_panel": (q_readability_panel, SQL_READABILITY_PANEL),
-    "mediation_sobel": (q_mediation_sobel, SQL_MEDIATION_SOBEL),
-    "partial_corr_skeleton": (
-        q_partial_corr_skeleton,
-        SQL_PARTIAL_CORR_SKELETON,
-    ),
-    "granger_lite": (q_granger_lite, SQL_GRANGER_LITE),
-    "its_segmented": (q_its_segmented, SQL_ITS_SEGMENTED),
-    "pettitt_test": (q_pettitt_test, SQL_PETTITT_TEST),
-    "chow_test": (q_chow_test, SQL_CHOW_TEST),
-    "svd_rank1": (q_svd_rank1, SQL_SVD_RANK1),
-    "user_factor_topk": (q_user_factor_topk, SQL_USER_FACTOR_TOPK),
-    "svd_recon_error": (q_svd_recon_error, SQL_SVD_RECON_ERROR),
-    "weighted_kappa": (q_weighted_kappa, SQL_WEIGHTED_KAPPA),
-    "ordinal_gamma": (q_ordinal_gamma, SQL_ORDINAL_GAMMA),
-    "somers_d": (q_somers_d, SQL_SOMERS_D),
-    "block_bootstrap_se": (
-        q_block_bootstrap_se,
-        SQL_BLOCK_BOOTSTRAP_SE,
-    ),
-    "jackknife_median": (q_jackknife_median, SQL_JACKKNIFE_MEDIAN),
-    "half_sample_stability": (
-        q_half_sample_stability,
-        SQL_HALF_SAMPLE_STABILITY,
-    ),
-    "goodman_lambda": (q_goodman_lambda, SQL_GOODMAN_LAMBDA),
-    "theils_u": (q_theils_u, SQL_THEILS_U),
-    "cramers_v_corrected": (
-        q_cramers_v_corrected,
-        SQL_CRAMERS_V_CORRECTED,
-    ),
-    "compression_ratio_est": (
-        q_compression_ratio_est,
-        SQL_COMPRESSION_RATIO_EST,
-    ),
-    "bucket_skew_plan": (q_bucket_skew_plan, SQL_BUCKET_SKEW_PLAN),
-    "minmax_prune_benefit": (
-        q_minmax_prune_benefit,
-        SQL_MINMAX_PRUNE_BENEFIT,
-    ),
-    "simpson_diversity": (q_simpson_diversity, SQL_SIMPSON_DIVERSITY),
-    "shannon_evenness": (q_shannon_evenness, SQL_SHANNON_EVENNESS),
-    "renyi_spectrum": (q_renyi_spectrum, SQL_RENYI_SPECTRUM),
 }
-
-
-# --------------------------------------------------------------------------
-# Round-4 driver-window rotation (VERDICT.md r3 "Next round" #1).
-#
-# The driver records CORRECTNESS rows for exactly the FIRST 50 queries()
-# entries per round.  Rounds 1-3 accumulated driver rows for 110 distinct
-# keys (zero never-green); the r3 verdict asks that the r4 window be spent
-# ONLY on oracle-backed keys that have never had a driver row.  The list
-# below is exactly that: the 15 core SURVEY.md §2.B keys the judge named
-# (as-of strategy variants, TPC-H Q1/Q6/Q18, WARC/Variant/XML sources, the
-# r3 window functions, mapInArrow), the 10 highest-value pack keys the
-# judge named, and 25 more operator-shaped keys (remaining TPC-H, the
-# dedup family, graph ops, CDC/SCD, recursive/lateral SQL).  Every key
-# already has committed ALL-GREEN tri-SF sweep evidence
-# (BENCH/sweeps_r03.jsonl); this rotation converts that soft evidence into
-# hard driver signal.  Keys past the window keep their prior relative
-# order and stay covered by scripts/check_entry.py full-registry sweeps.
-# --------------------------------------------------------------------------
-
-_R4_DRIVER_WINDOW: list[str] = [
-    # 15 core §2.B keys, never driver-checked (VERDICT.md "What's missing" #1)
-    "asof_forward", "asof_nearest", "asof_tolerance", "asof_union_window",
-    "asof_range_scan", "tpch_q1", "tpch_q6", "tpch_q18", "scan_warclite",
-    "variant_json", "scan_xml", "win_ntile", "win_first_last",
-    "win_range_frame", "map_in_arrow",
-    # 10 pack keys the judge named explicitly
-    "pit_features", "span_dedup", "heavy_hitters", "contamination",
-    "target_encode_loo", "seq_pack", "clean_funnel", "tfidf_topk",
-    "bm25_topk", "scd2_intervals",
-    # 25 more operator-shaped never-checked keys
-    "tpch_q2", "tpch_q4", "tpch_q7", "tpch_q9", "tpch_q12", "tpch_q14",
-    "dedup_crosscorpus", "dedup_keep_best", "dedup_paragraph",
-    "dedup_windowed", "simhash_pairs", "bloom_prefilter", "ivm_merge",
-    "chi2_terms", "pagerank", "graph_degrees", "graph_triangles",
-    "label_prop", "snapshot_diff", "cdc_upsert", "fuzzy_join", "join_full",
-    "unpivot", "sql_recursive", "lateral_topk",
-]
-
-assert len(_R4_DRIVER_WINDOW) == 50, len(_R4_DRIVER_WINDOW)
-assert len(set(_R4_DRIVER_WINDOW)) == 50
-assert all(k in REGISTRY for k in _R4_DRIVER_WINDOW)
-
-# --------------------------------------------------------------------------
-# r5 driver-window rotation (VERDICT.md r4 next-round item #4): 50 MORE
-# never-driver-checked oracle-backed keys (cumulative driver-green after
-# r4 is 160; every key below is outside that set and ALL-GREEN in the
-# committed tri-SF sweeps).  Leads with the 16 keys the judge named —
-# `isotonic_calibration` already holds a driver row (r2), so its
-# reliability-diagram sibling `calibration_bins` takes that slot — then
-# the as-of/PIT spine variants, source/layout/join-strategy keys, the
-# dedup/sampling family, the distinct-count sketch family, the SQL-4
-# surface, and the embedding/vector ops.
-# --------------------------------------------------------------------------
-
-_R5_DRIVER_WINDOW: list[str] = [
-    # 16 judge-named keys (VERDICT r4 item #4)
-    "sql_udf_scalar", "sql_udf_table", "sql_pipe_funnel", "kmv_distinct",
-    "kmv_union_merge", "asof_staleness", "leakage_audit", "feature_cross",
-    "rank_int", "calibration_bins", "kcore_peel", "kmeanspp_seeds",
-    "embedding_outliers", "token_budget_mix", "dataset_card", "ks_drift",
-    # as-of / PIT engine-spine variants
-    "asof_bitemporal", "asof_count_window", "asof_decay_feature",
-    "asof_kth_recent", "pit_histogram",
-    # sources / layout / join strategy
-    "scan_jsonl", "scan_orc", "scan_split_plan", "bucketed_join",
-    "join_range_bucketed", "bucket_skew_plan", "join_cardinality_est",
-    # dedup / sampling / curation
-    "collated_dedup", "dedup_prefix", "semdedup", "temporal_split",
-    "negative_sample", "pps_sample", "weighted_sample", "sample_split",
-    "lang_balance_sample",
-    # sketches / distinct-count family
-    "hll_distinct", "kmv_intersect", "countsketch_freq", "ndv_sample_est",
-    # SQL surface (Spark 4)
-    "sql_correlated", "sql_groupby_all", "sql_session_var",
-    "sql_exec_immediate",
-    # embedding / vector ops
-    "embedding_pca1", "quantize_embed", "embedding_isotropy", "pq_encode",
-    "quantile_norm",
-]
-
-assert len(_R5_DRIVER_WINDOW) == 50, len(_R5_DRIVER_WINDOW)
-assert len(set(_R5_DRIVER_WINDOW)) == 50
-assert all(k in REGISTRY for k in _R5_DRIVER_WINDOW)
-assert not set(_R5_DRIVER_WINDOW) & set(_R4_DRIVER_WINDOW)
-
-_window = {k: REGISTRY[k] for k in _R5_DRIVER_WINDOW}
-_rest = {k: v for k, v in REGISTRY.items() if k not in _window}
-REGISTRY = {**_window, **_rest}
-del _window, _rest

@@ -21,15 +21,8 @@ mapping note). documents/embeddings carry the text/vector operators.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-from .. import clean
-from .. import windows as W
-from ..asof import asof_join
-from ..textfeat import featurize_batch
 
 SESSION_GAP_S = 1800  # 30 min session gap on the events stream
 

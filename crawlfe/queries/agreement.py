@@ -90,30 +90,6 @@ def q_adjusted_rand(spark, sf_dir):
     )
 
 
-SQL_ADJUSTED_RAND = """
-WITH cells AS (
-  SELECT lang, source, CAST(count(*) AS BIGINT) AS nij
-  FROM documents GROUP BY lang, source
-), sc AS (
-  SELECT CAST(sum(nij * (nij - 1) // 2) AS BIGINT) AS s_nij FROM cells
-), sa AS (
-  SELECT CAST(sum(ai * (ai - 1) // 2) AS BIGINT) AS s_a
-  FROM (SELECT sum(nij) AS ai FROM cells GROUP BY lang)
-), sb AS (
-  SELECT CAST(sum(bj * (bj - 1) // 2) AS BIGINT) AS s_b
-  FROM (SELECT sum(nij) AS bj FROM cells GROUP BY source)
-), nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents)
-SELECT n, s_nij, s_a, s_b,
-       round(CAST(s_a AS DOUBLE) * s_b / (n * (n - 1) // 2), 6)
-         AS expected_index,
-       round((s_nij - CAST(s_a AS DOUBLE) * s_b / (n * (n - 1) // 2))
-             / nullif((s_a + s_b) / 2.0
-                      - CAST(s_a AS DOUBLE) * s_b / (n * (n - 1) // 2),
-                      0.0), 6) AS ari
-FROM sc CROSS JOIN sa CROSS JOIN sb CROSS JOIN nn
-"""
-
-
 def q_cluster_vmeasure(spark, sf_dir):
     """HOMOGENEITY / COMPLETENESS / V-MEASURE of the source partition
     (clusters K) against lang (classes C): H(C), H(K), H(C|K), H(K|C)
@@ -168,42 +144,6 @@ def q_cluster_vmeasure(spark, sf_dir):
             "v_measure"
         ),
     )
-
-
-SQL_CLUSTER_VMEASURE = """
-WITH cells AS (
-  SELECT lang, source, CAST(count(*) AS BIGINT) AS nij
-  FROM documents GROUP BY lang, source
-), a AS (SELECT lang, CAST(sum(nij) AS BIGINT) AS ai FROM cells GROUP BY lang),
-b AS (SELECT source, CAST(sum(nij) AS BIGINT) AS bj FROM cells GROUP BY source),
-nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents),
-hc AS (
-  SELECT CAST(-sum(CAST(round(1e6 * ai * ln(CAST(ai AS DOUBLE) / n))
-                        AS BIGINT)) AS BIGINT) AS hc_e6
-  FROM a CROSS JOIN nn
-), hk AS (
-  SELECT CAST(-sum(CAST(round(1e6 * bj * ln(CAST(bj AS DOUBLE) / n))
-                        AS BIGINT)) AS BIGINT) AS hk_e6
-  FROM b CROSS JOIN nn
-), hck AS (
-  SELECT CAST(-sum(CAST(round(1e6 * nij * ln(CAST(nij AS DOUBLE) / bj))
-                        AS BIGINT)) AS BIGINT) AS hck_e6
-  FROM cells JOIN b USING (source)
-), hkc AS (
-  SELECT CAST(-sum(CAST(round(1e6 * nij * ln(CAST(nij AS DOUBLE) / ai))
-                        AS BIGINT)) AS BIGINT) AS hkc_e6
-  FROM cells JOIN a USING (lang)
-)
-SELECT hc_e6, hk_e6, hck_e6, hkc_e6,
-       round(1 - CAST(hck_e6 AS DOUBLE) / hc_e6, 6) AS homogeneity,
-       round(1 - CAST(hkc_e6 AS DOUBLE) / hk_e6, 6) AS completeness,
-       round(2 * (1 - CAST(hck_e6 AS DOUBLE) / hc_e6)
-               * (1 - CAST(hkc_e6 AS DOUBLE) / hk_e6)
-             / nullif((1 - CAST(hck_e6 AS DOUBLE) / hc_e6)
-                      + (1 - CAST(hkc_e6 AS DOUBLE) / hk_e6), 0.0), 6)
-         AS v_measure
-FROM hc CROSS JOIN hk CROSS JOIN hck CROSS JOIN hkc
-"""
 
 
 def q_gpd_fit(spark, sf_dir):
@@ -263,42 +203,3 @@ def q_gpd_fit(spark, sf_dir):
         F.round((1 - ratio) / 2, 6).alias("xi"),
         F.round(m * (1 + ratio) / 2, 6).alias("sigma_cents"),
     )
-
-
-SQL_GPD_FIT = f"""
-WITH e AS (
-  SELECT CAST(round(value * 100) AS BIGINT) AS cents FROM events
-), hist AS (
-  SELECT cents, CAST(count(*) AS BIGINT) AS ct FROM e GROUP BY cents
-), cum AS (
-  SELECT cents,
-         CAST(sum(ct) OVER (ORDER BY cents ROWS UNBOUNDED PRECEDING)
-              AS BIGINT) AS cum,
-         CAST(sum(ct) OVER () AS BIGINT) AS n
-  FROM hist
-), u AS (
-  SELECT CAST(min(cents) AS BIGINT) AS u_cents,
-         CAST(max(n) AS BIGINT) AS n
-  FROM cum WHERE cum >= ({_GPD_DECILE} * n + 9) // 10
-), mom AS (
-  SELECT u.u_cents, u.n,
-         CAST(count(*) AS BIGINT) AS k,
-         CAST(sum(e.cents - u.u_cents) AS BIGINT) AS s1,
-         CAST(sum((e.cents - u.u_cents) * (e.cents - u.u_cents))
-              AS BIGINT) AS s2
-  FROM e CROSS JOIN u WHERE e.cents > u.u_cents
-  GROUP BY u.u_cents, u.n
-)
-SELECT n, u_cents, k,
-       round(CAST(s1 AS DOUBLE) / k, 6) AS mean_excess,
-       round((s2 - s1 * (CAST(s1 AS DOUBLE) / k)) / (k - 1), 6)
-         AS var_excess,
-       round((1 - (CAST(s1 AS DOUBLE) / k) * (CAST(s1 AS DOUBLE) / k)
-                  / ((s2 - s1 * (CAST(s1 AS DOUBLE) / k)) / (k - 1)))
-             / 2, 6) AS xi,
-       round((CAST(s1 AS DOUBLE) / k)
-             * (1 + (CAST(s1 AS DOUBLE) / k) * (CAST(s1 AS DOUBLE) / k)
-                    / ((s2 - s1 * (CAST(s1 AS DOUBLE) / k)) / (k - 1)))
-             / 2, 6) AS sigma_cents
-FROM mom
-"""

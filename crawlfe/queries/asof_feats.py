@@ -35,7 +35,6 @@ from ..asof import asof_join
 from ._shared import _t, _us
 
 _TAU_H = 72.0  # decay half... time constant, hours
-_W7_US = 7 * 86_400_000_000  # 7-day window in microseconds
 _KTH = 3  # recency depth
 _HOUR_US = 3_600_000_000
 

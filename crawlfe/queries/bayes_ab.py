@@ -76,27 +76,6 @@ def _arm_counts(spark, sf_dir):
     )
 
 
-_SQL_ARM_COUNTS = f"""
-u AS (
-  SELECT user_id,
-         sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-           >= {_FE_HEAVY} AS conv
-  FROM events GROUP BY 1
-), params AS (
-  SELECT
-    1 + CAST(sum(CASE WHEN user_id % 2 = 0 AND conv
-              THEN 1 ELSE 0 END) AS BIGINT) AS a_a,
-    1 + CAST(sum(CASE WHEN user_id % 2 = 0 AND NOT conv
-              THEN 1 ELSE 0 END) AS BIGINT) AS b_a,
-    1 + CAST(sum(CASE WHEN user_id % 2 = 1 AND conv
-              THEN 1 ELSE 0 END) AS BIGINT) AS a_b,
-    1 + CAST(sum(CASE WHEN user_id % 2 = 1 AND NOT conv
-              THEN 1 ELSE 0 END) AS BIGINT) AS b_b
-  FROM u
-)
-"""
-
-
 def _h_df(params, da=0, dbb=0, dc=0, dd=0):
     """P(pB > pA) for Beta(a_a+da, b_a+dbb) vs Beta(a_b+dc, b_b+dd)
     as a 1-row DF with column ``h`` — term recurrence + ordered
@@ -172,45 +151,6 @@ def _h_df(params, da=0, dbb=0, dc=0, dd=0):
     )
 
 
-def _h_sql(tag, da=0, dbb=0, dc=0, dd=0):
-    """SQL CTE chain computing h into ``h_{tag}(h)`` from params."""
-    return f"""
-p_{tag} AS (
-  SELECT a_a + {da} AS aa, b_a + {dbb} AS ba,
-         a_b + {dc} AS ab, b_b + {dd} AS bb
-  FROM params
-), t0_{tag} AS (
-  SELECT aa, ba, ab, bb,
-         sum(ln(CAST(ba + j AS DOUBLE))
-             - ln(CAST(aa + ba + j AS DOUBLE))) AS lnt0
-  FROM (SELECT p.*, unnest(generate_series(0, p.bb - 1)) AS j
-        FROM p_{tag} p)
-  GROUP BY 1, 2, 3, 4
-), ks_{tag} AS (
-  SELECT t.*, unnest(generate_series(0, t.ab - 1)) AS i
-  FROM t0_{tag} t
-), lp_{tag} AS (
-  SELECT i,
-         lnt0 + sum(CASE WHEN i = 0 THEN 0.0
-                    ELSE ln(CAST((aa + i - 1) * (bb + i - 1)
-                                 AS DOUBLE))
-                         - ln(CAST((aa + ba + bb + i - 1) * i
-                                   AS DOUBLE))
-                    END)
-           OVER (ORDER BY i ROWS UNBOUNDED PRECEDING) AS lp
-  FROM ks_{tag}
-), sh_{tag} AS (
-  SELECT i, exp(lp - max(lp) OVER ()) AS w, max(lp) OVER () AS mx
-  FROM lp_{tag}
-), h_{tag} AS (
-  SELECT exp(ln(sw) + mx) AS h FROM (
-    SELECT sum(w) OVER (ORDER BY i ROWS UNBOUNDED PRECEDING) AS sw,
-           mx, row_number() OVER (ORDER BY i DESC) AS _rd
-    FROM sh_{tag}
-  ) WHERE _rd = 1
-)"""
-
-
 def q_bayes_ab_prob(spark, sf_dir):
     """EXACT P(pB > pA) under Beta(1+s,1+f) posteriors, with the
     posterior means."""
@@ -233,20 +173,6 @@ def q_bayes_ab_prob(spark, sf_dir):
         ).alias("post_mean_b"),
         F.round("h", 6).alias("p_b_beats_a"),
     )
-
-
-SQL_BAYES_AB_PROB = f"""
-WITH {_SQL_ARM_COUNTS},
-{_h_sql("m")[1:]}
-SELECT CAST(a_a - 1 AS BIGINT) AS conv_a,
-       CAST(b_a - 1 AS BIGINT) AS fail_a,
-       CAST(a_b - 1 AS BIGINT) AS conv_b,
-       CAST(b_b - 1 AS BIGINT) AS fail_b,
-       round(a_a / CAST(a_a + b_a AS DOUBLE), 6) AS post_mean_a,
-       round(a_b / CAST(a_b + b_b AS DOUBLE), 6) AS post_mean_b,
-       round(h, 6) AS p_b_beats_a
-FROM params CROSS JOIN h_m
-"""
 
 
 def q_bayes_expected_loss(spark, sf_dir):
@@ -273,28 +199,6 @@ def q_bayes_expected_loss(spark, sf_dir):
     )
 
 
-SQL_BAYES_EXPECTED_LOSS = f"""
-WITH {_SQL_ARM_COUNTS},
-{_h_sql("h0")[1:]},
-{_h_sql("hb1", dc=1)[1:]},
-{_h_sql("ha1", da=1)[1:]},
-m AS (
-  SELECT a_a / CAST(a_a + b_a AS DOUBLE) AS ma,
-         a_b / CAST(a_b + b_b AS DOUBLE) AS mb
-  FROM params
-)
-SELECT round(h_h0.h, 6) AS p_b_beats_a,
-       round(m.mb * h_hb1.h - m.ma * h_ha1.h, 6)
-         AS exp_loss_choose_a,
-       round(m.ma * (1 - h_ha1.h) - m.mb * (1 - h_hb1.h), 6)
-         AS exp_loss_choose_b,
-       CASE WHEN m.mb * h_hb1.h - m.ma * h_ha1.h
-                 <= m.ma * (1 - h_ha1.h) - m.mb * (1 - h_hb1.h)
-            THEN 'A' ELSE 'B' END AS lower_risk_arm
-FROM h_h0 CROSS JOIN h_hb1 CROSS JOIN h_ha1 CROSS JOIN m
-"""
-
-
 def q_dirichlet_shares(spark, sf_dir):
     """DIRICHLET(1) posterior of event-type shares: mean, sd, MAP."""
     e = _t(spark, sf_dir, "events")
@@ -318,23 +222,3 @@ def q_dirichlet_shares(spark, sf_dir):
         F.round(sd, 6).alias("post_sd"),
         F.round(mapv, 6).alias("post_map"),
     ).orderBy("event_type")
-
-
-SQL_DIRICHLET_SHARES = """
-WITH c AS (
-  SELECT event_type, CAST(count(*) AS BIGINT) AS n
-  FROM events GROUP BY 1
-), tot AS (
-  SELECT CAST(sum(n) AS BIGINT) AS nn,
-         CAST(count(*) AS BIGINT) AS k
-  FROM c
-)
-SELECT event_type, n,
-       round(CAST(n + 1 AS DOUBLE) / (nn + k), 6) AS post_mean,
-       round(sqrt((CAST(n + 1 AS DOUBLE) / (nn + k))
-                  * (1 - CAST(n + 1 AS DOUBLE) / (nn + k))
-                  / (nn + k + 1)), 6) AS post_sd,
-       round(CAST(n AS DOUBLE) / (nn + k - k), 6) AS post_map
-FROM c CROSS JOIN tot
-ORDER BY event_type
-"""

@@ -62,20 +62,6 @@ def _delayed(spark, sf_dir):
     )
 
 
-_SQL_DELAYED = f"""
-  SELECT event_id, user_id, event_type,
-         CAST(round(value * 100) AS BIGINT) AS cents,
-         epoch_us(ts) AS ts_us,
-         CAST('0x' || substring(md5(CAST(event_id AS VARCHAR)), 1, 4)
-              AS BIGINT) * {_DELAY_MAX_S} // 65536 AS delay_s,
-         epoch_us(ts)
-           + (CAST('0x' || substring(md5(CAST(event_id AS VARCHAR)),
-                                     1, 4) AS BIGINT)
-              * {_DELAY_MAX_S} // 65536) * 1000000 AS ingest_us
-  FROM events
-"""
-
-
 def q_asof_bitemporal(spark, sf_dir):
     """Bitemporal as-of at join_ts = 2024-01-13T00Z: per user and
     knowledge scenario (T0 = join_ts, T1 = +24 h), the latest row
@@ -104,26 +90,6 @@ def q_asof_bitemporal(spark, sf_dir):
     return out
 
 
-SQL_ASOF_BITEMPORAL = f"""
-WITH d AS ({_SQL_DELAYED}),
-eligible AS (SELECT * FROM d WHERE ts_us <= {_JOIN_US}),
-t0 AS (
-  SELECT 'T0' AS scenario, user_id, event_id, ts_us, cents
-  FROM (SELECT *, row_number() OVER (PARTITION BY user_id
-          ORDER BY ts_us DESC, event_id DESC) AS rk
-        FROM eligible WHERE ingest_us <= {_JOIN_US})
-  WHERE rk = 1
-), t1 AS (
-  SELECT 'T1' AS scenario, user_id, event_id, ts_us, cents
-  FROM (SELECT *, row_number() OVER (PARTITION BY user_id
-          ORDER BY ts_us DESC, event_id DESC) AS rk
-        FROM eligible WHERE ingest_us <= {_KT1_US})
-  WHERE rk = 1
-)
-SELECT * FROM t0 UNION ALL SELECT * FROM t1
-"""
-
-
 def q_watermark_lag_audit(spark, sf_dir):
     """Per event-day ingest-lag profile: n_rows, max/mean delay
     seconds, and the share of rows a 1-hour watermark would treat as
@@ -143,19 +109,6 @@ def q_watermark_lag_audit(spark, sf_dir):
             4,
         ).alias("frac_past_watermark"),
     )
-
-
-SQL_WATERMARK_LAG_AUDIT = f"""
-WITH d AS ({_SQL_DELAYED})
-SELECT ts_us // {_DAY_US} AS day,
-       CAST(count(*) AS BIGINT) AS n_rows,
-       CAST(max(delay_s) AS BIGINT) AS max_delay_s,
-       round(sum(delay_s) / CAST(count(*) AS DOUBLE), 2)
-         AS mean_delay_s,
-       round(sum(CASE WHEN delay_s > {_WM_SECONDS} THEN 1 ELSE 0 END)
-             / CAST(count(*) AS DOUBLE), 4) AS frac_past_watermark
-FROM d GROUP BY 1
-"""
 
 
 def q_late_arrival_impact(spark, sf_dir):
@@ -183,19 +136,3 @@ def q_late_arrival_impact(spark, sf_dir):
             F.when(F.col("late") == 1, F.col("user_id"))
         ).cast("bigint").alias("affected_users"),
     )
-
-
-SQL_LATE_ARRIVAL_IMPACT = f"""
-WITH d AS ({_SQL_DELAYED})
-SELECT ts_us // {_DAY_US} AS day,
-       CAST(count(*) AS BIGINT) AS n_rows,
-       CAST(sum(CASE WHEN ingest_us // {_DAY_US} > ts_us // {_DAY_US}
-                THEN 1 ELSE 0 END) AS BIGINT) AS late_rows,
-       CAST(sum(CASE WHEN ingest_us // {_DAY_US} > ts_us // {_DAY_US}
-                THEN cents ELSE 0 END) AS BIGINT) AS late_cents,
-       CAST(count(DISTINCT CASE WHEN ingest_us // {_DAY_US}
-                                     > ts_us // {_DAY_US}
-                           THEN user_id END) AS BIGINT)
-         AS affected_users
-FROM d GROUP BY 1
-"""

@@ -40,18 +40,6 @@ def _daily(spark, sf_dir):
     ).select(F.col("day").cast("double").alias("t"), "y", "day")
 
 
-_SQL_DAILY = """
-daily AS (
-  SELECT CAST(day AS DOUBLE) AS t, y, day FROM (
-    SELECT CAST(dayofmonth(ts) AS BIGINT) AS day,
-           CAST(sum(CAST(round(value * 100) AS BIGINT)) AS DOUBLE)
-             AS y
-    FROM events GROUP BY 1
-  )
-)
-"""
-
-
 def _seg_fit(d):
     """Per-segment OLS (seg = 0 pre / 1 post) as a 2-row frame."""
     m = d.groupBy("seg").agg(
@@ -82,24 +70,6 @@ def _seg_fit(d):
     )
 
 
-_SQL_SEG_FIT = """
-m AS (
-  SELECT seg, CAST(count(*) AS DOUBLE) AS n,
-         avg(t) AS mt, avg(y) AS my, avg(t * t) AS mtt,
-         avg(t * y) AS mty, avg(y * y) AS myy
-  FROM seg GROUP BY 1
-), fit AS (
-  SELECT seg, n,
-         (mty - mt * my) / (mtt - mt * mt) AS b,
-         my - (mty - mt * my) / (mtt - mt * mt) * mt AS a,
-         n * ((myy - my * my)
-              - (mty - mt * my) * (mty - mt * my)
-                / (mtt - mt * mt)) AS rss
-  FROM m
-)
-"""
-
-
 def q_its_segmented(spark, sf_dir):
     """SEGMENTED ITS at t0 = 16: pre/post trends, boundary level
     jump vs the pre-trend projection, slope change."""
@@ -125,22 +95,6 @@ def q_its_segmented(spark, sf_dir):
         F.round(jump, 4).alias("level_jump_at_t0"),
         F.round(F.col("b1") - F.col("b0"), 4).alias("slope_change"),
     )
-
-
-SQL_ITS_SEGMENTED = f"""
-WITH {_SQL_DAILY},
-seg AS (
-  SELECT t, y,
-         CASE WHEN t >= {_BRK_T0} THEN 1 ELSE 0 END AS seg
-  FROM daily
-), {_SQL_SEG_FIT}
-SELECT round(p0.b, 4) AS pre_slope, round(p1.b, 4) AS post_slope,
-       round(p1.a + p1.b * {_BRK_T0}
-             - (p0.a + p0.b * {_BRK_T0}), 4) AS level_jump_at_t0,
-       round(p1.b - p0.b, 4) AS slope_change
-FROM (SELECT * FROM fit WHERE seg = 0) p0
-CROSS JOIN (SELECT * FROM fit WHERE seg = 1) p1
-"""
 
 
 def q_pettitt_test(spark, sf_dir):
@@ -190,30 +144,6 @@ def q_pettitt_test(spark, sf_dir):
     )
 
 
-SQL_PETTITT_TEST = f"""
-WITH {_SQL_DAILY},
-pairs AS (
-  SELECT a.day AS i, b.day AS j, sign(a.y - b.y) AS s
-  FROM daily a JOIN daily b ON a.day < b.day
-), u AS (
-  SELECT d.day AS tcut, CAST(sum(p.s) AS DOUBLE) AS u
-  FROM daily d JOIN pairs p
-    ON p.i <= d.day AND p.j > d.day
-  GROUP BY 1
-), nn AS (
-  SELECT CAST(count(*) AS DOUBLE) AS n FROM daily
-), top AS (
-  SELECT tcut, u FROM u
-  ORDER BY abs(u) DESC, tcut ASC LIMIT 1
-)
-SELECT CAST(tcut AS BIGINT) AS change_day,
-       round(abs(u), 1) AS k_stat,
-       round(2 * exp(-6 * u * u / (n * n * n + n * n)), 6)
-         AS p_approx
-FROM top CROSS JOIN nn
-"""
-
-
 def q_chow_test(spark, sf_dir):
     """CHOW structural-break F at day 16: pooled vs split RSS,
     k = 2 per segment."""
@@ -243,34 +173,3 @@ def q_chow_test(spark, sf_dir):
         ),
         F.round(fstat, 6).alias("chow_f"),
     )
-
-
-SQL_CHOW_TEST = f"""
-WITH {_SQL_DAILY},
-seg AS (
-  SELECT t, y,
-         CASE WHEN t >= {_BRK_T0} THEN 1 ELSE 0 END AS seg
-  FROM daily
-), {_SQL_SEG_FIT},
-split AS (
-  SELECT sum(rss) AS rss_split, sum(n) AS n FROM fit
-), pseg AS (
-  SELECT t, y, 0 AS seg FROM daily
-), pm AS (
-  SELECT CAST(count(*) AS DOUBLE) AS n,
-         avg(t) AS mt, avg(y) AS my, avg(t * t) AS mtt,
-         avg(t * y) AS mty, avg(y * y) AS myy
-  FROM pseg
-), pooled AS (
-  SELECT n * ((myy - my * my)
-              - (mty - mt * my) * (mty - mt * my)
-                / (mtt - mt * mt)) AS rss_pool
-  FROM pm
-)
-SELECT CAST(split.n AS BIGINT) AS n,
-       round(rss_pool / split.n, 4) AS rss_pooled_per_n,
-       round(rss_split / split.n, 4) AS rss_split_per_n,
-       round(((rss_pool - rss_split) / 2.0)
-             / (rss_split / (split.n - 4.0)), 6) AS chow_f
-FROM split CROSS JOIN pooled
-"""

@@ -105,23 +105,6 @@ def q_bucketed_join(spark, sf_dir):
     )
 
 
-SQL_BUCKETED_JOIN = """
-WITH score AS (
-  SELECT doc_id,
-         CAST('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 4)
-              AS BIGINT) % 10000 AS q_e4
-  FROM documents
-)
-SELECT d.source, CAST(count(*) AS BIGINT) AS n,
-       CAST(sum(d.n_chars) AS BIGINT) AS sum_chars,
-       CAST(sum(s.q_e4) AS BIGINT) AS sum_q_e4,
-       round(CAST(sum(s.q_e4) AS DOUBLE) / (count(*) * 10000.0), 6)
-         AS avg_q
-FROM documents d JOIN score s USING (doc_id)
-GROUP BY d.source
-"""
-
-
 def _aug_corpus(spark, sf_dir):
     d = _t(spark, sf_dir, "documents").select("doc_id", "text")
     exact = d.where(F.col("doc_id") % _ND_MOD == 0).select(
@@ -250,67 +233,6 @@ def q_neardup_eval(spark, sf_dir):
     )
 
 
-SQL_NEARDUP_EVAL = f"""
-WITH aug AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + {_ND_OFF}, text FROM documents
-  WHERE doc_id % {_ND_MOD} = 0
-  UNION ALL
-  SELECT doc_id + {_ND_OFF}, text || ' zz7' FROM documents
-  WHERE doc_id % {_ND_MOD} = 1
-), hashed AS (
-  SELECT doc_id,
-         CAST(CAST('0x' || substr(md5(token), 1, 8) AS UBIGINT)
-              AS BIGINT) AS h,
-         CAST(count(*) AS BIGINT) AS w
-  FROM (
-    SELECT doc_id,
-           unnest(regexp_split_to_array(trim(text), '\\s+')) AS token
-    FROM aug
-  )
-  GROUP BY 1, 2
-), votes AS (
-  SELECT doc_id, b.b,
-         CAST(sum(w * (2 * ((h >> b.b) & 1) - 1)) AS BIGINT) AS v
-  FROM hashed, range(0, {_SIM_BITS}) b(b)
-  GROUP BY 1, 2
-), fp AS (
-  SELECT doc_id,
-         CAST(sum(CASE WHEN v > 0 THEN (1::BIGINT << b) ELSE 0 END)
-              AS BIGINT) AS fp
-  FROM votes GROUP BY 1
-), banded AS (
-  SELECT doc_id, fp, band.band,
-         (fp >> (8 * band.band)) & 255 AS band_val
-  FROM fp, range(0, 4) band(band)
-), pred AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM banded a JOIN banded b
-    ON a.band = b.band AND a.band_val = b.band_val
-   AND a.doc_id < b.doc_id
-  WHERE bit_count(xor(a.fp, b.fp)) <= {_SIM_HAM}
-), truth AS (
-  SELECT doc_id AS doc_a, doc_id + {_ND_OFF} AS doc_b
-  FROM documents WHERE doc_id % {_ND_MOD} IN (0, 1)
-), m AS (
-  SELECT (SELECT CAST(count(*) AS BIGINT) FROM truth) AS n_truth,
-         (SELECT CAST(count(*) AS BIGINT) FROM pred) AS n_pred,
-         (SELECT CAST(count(*) AS BIGINT)
-          FROM pred p JOIN truth t
-            ON p.doc_a = t.doc_a AND p.doc_b = t.doc_b) AS n_hit
-)
-SELECT n_truth, n_pred, n_hit,
-       round(CAST(n_hit AS DOUBLE) / n_pred, 6) AS precision,
-       round(CAST(n_hit AS DOUBLE) / n_truth, 6) AS recall,
-       round(2 * (CAST(n_hit AS DOUBLE) / n_pred)
-               * (CAST(n_hit AS DOUBLE) / n_truth)
-             / nullif(CAST(n_hit AS DOUBLE) / n_pred
-                      + CAST(n_hit AS DOUBLE) / n_truth, 0.0), 6) AS f1
-FROM m
-"""
-
-
 def q_page_hinkley(spark, sf_dir):
     """PAGE-HINKLEY drift detector on daily mean cents: per-day mean
     fixed-pointed to BIGINT e4-cents; term_t = round(x_t - cum_x/t)
@@ -351,37 +273,6 @@ def q_page_hinkley(spark, sf_dir):
         .cast("int")
         .alias("alarm"),
     )
-
-
-SQL_PAGE_HINKLEY = f"""
-WITH daily AS (
-  SELECT CAST(dayofmonth(ts) AS BIGINT) AS day,
-         CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS s,
-         CAST(count(*) AS BIGINT) AS c
-  FROM events GROUP BY 1
-), x AS (
-  SELECT day, CAST(round(1e4 * s / c) AS BIGINT) AS x_e4 FROM daily
-), seq AS (
-  SELECT day, x_e4,
-         row_number() OVER (ORDER BY day) AS t,
-         CAST(sum(x_e4) OVER (ORDER BY day ROWS UNBOUNDED PRECEDING)
-              AS BIGINT) AS cum_x
-  FROM x
-), terms AS (
-  SELECT day, x_e4,
-         CAST(round(x_e4 - cum_x / CAST(t AS DOUBLE)) AS BIGINT) AS term
-  FROM seq
-), ph AS (
-  SELECT day, x_e4,
-         CAST(sum(term) OVER (ORDER BY day ROWS UNBOUNDED PRECEDING)
-              AS BIGINT) AS ph_e4
-  FROM terms
-)
-SELECT day, round(x_e4 / 1e4, 4) AS x_cents, ph_e4,
-       CAST(ph_e4 - min(ph_e4) OVER (ORDER BY day ROWS UNBOUNDED PRECEDING)
-            > {_PH_LAMBDA_E4} AS INT) AS alarm
-FROM ph
-"""
 
 
 # --------------------------------------------------------------------------

@@ -85,35 +85,6 @@ def q_rd_estimate(spark, sf_dir):
     )
 
 
-SQL_RD_ESTIMATE = f"""
-WITH d AS (
-  SELECT CAST(round(value * 100) AS BIGINT) - {_RD_CUT} AS xc,
-         CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS y
-  FROM events
-  WHERE CAST(round(value * 100) AS BIGINT) - {_RD_CUT}
-          BETWEEN -{_RD_BW} AND {_RD_BW}
-), m AS (
-  SELECT CAST(xc >= 0 AS INT) AS side,
-         CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(xc) AS BIGINT) AS sx,
-         CAST(sum(y) AS BIGINT) AS sy,
-         CAST(sum(xc * y) AS BIGINT) AS sxy,
-         CAST(sum(xc * xc) AS BIGINT) AS sxx
-  FROM d GROUP BY 1
-), ic AS (
-  SELECT side, n,
-         round((sy - CAST(n * sxy - sx * sy AS DOUBLE)
-                     / (n * sxx - sx * sx) * sx) / n, 6) AS icept
-  FROM m
-)
-SELECT l.n AS n_left, r.n AS n_right,
-       l.icept AS icept_left, r.icept AS icept_right,
-       round(r.icept - l.icept, 6) AS tau_rd
-FROM (SELECT * FROM ic WHERE side = 0) l
-CROSS JOIN (SELECT * FROM ic WHERE side = 1) r
-"""
-
-
 def q_iv_wald(spark, sf_dir):
     """WALD IV ESTIMATOR: instrument z = weekend indicator;
     first stage E[x|z], reduced form E[y|z]; wald = dy/dx ratio.
@@ -149,31 +120,6 @@ def q_iv_wald(spark, sf_dir):
         F.round(dx, 6).alias("first_stage"),
         F.round(dy / dx, 6).alias("wald_iv"),
     )
-
-
-SQL_IV_WALD = """
-WITH d AS (
-  SELECT CAST(round(value * 100) AS BIGINT) AS x,
-         CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS y,
-         CASE WHEN dayofweek(ts) IN (0, 6) THEN 1 ELSE 0 END AS z
-  FROM events
-), m AS (
-  SELECT z, CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(x) AS BIGINT) AS sx,
-         CAST(sum(y) AS BIGINT) AS sy
-  FROM d GROUP BY z
-)
-SELECT o.n AS n1, zz.n AS n0,
-       round(CAST(o.sy AS DOUBLE) / o.n - CAST(zz.sy AS DOUBLE) / zz.n, 6)
-         AS reduced_form,
-       round(CAST(o.sx AS DOUBLE) / o.n - CAST(zz.sx AS DOUBLE) / zz.n, 6)
-         AS first_stage,
-       round((CAST(o.sy AS DOUBLE) / o.n - CAST(zz.sy AS DOUBLE) / zz.n)
-             / (CAST(o.sx AS DOUBLE) / o.n - CAST(zz.sx AS DOUBLE) / zz.n),
-             6) AS wald_iv
-FROM (SELECT * FROM m WHERE z = 1) o
-CROSS JOIN (SELECT * FROM m WHERE z = 0) zz
-"""
 
 
 def q_event_study(spark, sf_dir):
@@ -219,31 +165,3 @@ def q_event_study(spark, sf_dir):
         F.round("gap", 6).alias("gap"),
         F.round(F.col("gap") - F.col("base_gap"), 6).alias("es_coef"),
     )
-
-
-SQL_EVENT_STUDY = f"""
-WITH e AS (
-  SELECT CASE WHEN user_id % {_ES_TREAT_MOD} = 0 THEN 1 ELSE 0 END
-           AS treat,
-         CAST(floor((dayofmonth(ts) - {_ES_POLICY_DAY}) / 7.0) AS BIGINT)
-           AS rw,
-         CAST(round(value * 100) AS BIGINT) AS cents
-  FROM events
-), f AS (
-  SELECT * FROM e WHERE rw IN ({", ".join(str(w) for w in _ES_WEEKS)})
-), cells AS (
-  SELECT rw, treat, CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(cents) AS BIGINT) AS s
-  FROM f GROUP BY rw, treat
-), gaps AS (
-  SELECT rw, t.n + c.n AS n_week,
-         CAST(t.s AS DOUBLE) / t.n - CAST(c.s AS DOUBLE) / c.n AS gap
-  FROM (SELECT rw, n, s FROM cells WHERE treat = 1) t
-  JOIN (SELECT rw, n, s FROM cells WHERE treat = 0) c USING (rw)
-), base AS (
-  SELECT gap AS base_gap FROM gaps WHERE rw = -1
-)
-SELECT rw, n_week, round(gap, 6) AS gap,
-       round(gap - base_gap, 6) AS es_coef
-FROM gaps CROSS JOIN base
-"""

@@ -101,55 +101,6 @@ def q_mediation_sobel(spark, sf_dir):
     )
 
 
-SQL_MEDIATION_SOBEL = """
-WITH u AS (
-  SELECT user_id,
-         CAST(CASE WHEN user_id % 2 = 0 THEN 1 ELSE 0 END AS DOUBLE)
-           AS x,
-         CAST(count(*) AS DOUBLE) AS m,
-         CAST(sum(CAST(round(value * 100) AS BIGINT)) AS DOUBLE)
-           AS y
-  FROM events GROUP BY user_id
-), mo AS (
-  SELECT CAST(count(*) AS DOUBLE) AS n,
-         avg(x) AS mx, avg(m) AS mm, avg(y) AS my,
-         avg(x * x) AS mxx, avg(x * m) AS mxm, avg(x * y) AS mxy,
-         avg(m * m) AS mmm, avg(m * y) AS mmy, avg(y * y) AS myy
-  FROM u
-), s AS (
-  SELECT n,
-         mxx - mx * mx AS sxx, mxm - mx * mm AS sxm,
-         mxy - mx * my AS sxy, mmm - mm * mm AS smm,
-         mmy - mm * my AS smy, myy - my * my AS syy
-  FROM mo
-), c AS (
-  SELECT n, sxx, sxm, sxy, smm, smy, syy,
-         sxm / sxx AS a,
-         sxx * smm - sxm * sxm AS det
-  FROM s
-), f AS (
-  SELECT n, sxx, sxm, sxy, smm, smy, syy, a, det,
-         (smm * sxy - sxm * smy) / det AS c_x,
-         (sxx * smy - sxm * sxy) / det AS b,
-         sqrt((n * (smm - sxm * sxm / sxx)) / (n - 2) / (n * sxx))
-           AS se_a
-  FROM c
-), g AS (
-  SELECT n, a, b, c_x, se_a, sxy, sxx, smy,
-         sqrt((n * (syy - c_x * sxy - b * smy)) / (n - 3)
-              * sxx / (n * det)) AS se_b
-  FROM f
-)
-SELECT CAST(n AS BIGINT) AS n, round(a, 6) AS path_a,
-       round(b, 6) AS path_b, round(c_x, 6) AS direct_c,
-       round(a * b, 6) AS indirect_ab,
-       round(a * b / sqrt(b * b * se_a * se_a
-                          + a * a * se_b * se_b), 6) AS sobel_z,
-       round(a * b / (sxy / sxx), 6) AS prop_mediated
-FROM g
-"""
-
-
 def q_partial_corr_skeleton(spark, sf_dir):
     """PC STEP-ONE on the feature triangle: marginal and partial
     correlations with the Fisher-z edge verdict."""
@@ -214,83 +165,6 @@ def q_partial_corr_skeleton(spark, sf_dir):
     return out.orderBy("pair")
 
 
-SQL_PARTIAL_CORR_SKELETON = f"""
-WITH u AS (
-  SELECT CAST(count(*) AS DOUBLE) AS f_m,
-         CAST(sum(CAST(round(value * 100) AS BIGINT)) AS DOUBLE)
-           AS f_y,
-         CAST(sum(CASE WHEN event_type = 'purchase'
-                  THEN 1 ELSE 0 END) AS DOUBLE) AS f_p
-  FROM events GROUP BY user_id
-), mo AS (
-  SELECT CAST(count(*) AS DOUBLE) AS n,
-         avg(f_m * f_m) AS x_mm, avg(f_m * f_y) AS x_my,
-         avg(f_m * f_p) AS x_mp, avg(f_y * f_y) AS x_yy,
-         avg(f_y * f_p) AS x_yp, avg(f_p * f_p) AS x_pp,
-         avg(f_m) AS a_m, avg(f_y) AS a_y, avg(f_p) AS a_p
-  FROM u
-), rr AS (
-  SELECT n,
-    (x_my - a_m * a_y)
-      / sqrt((x_mm - a_m * a_m) * (x_yy - a_y * a_y)) AS r_my,
-    (x_mp - a_m * a_p)
-      / sqrt((x_mm - a_m * a_m) * (x_pp - a_p * a_p)) AS r_mp,
-    (x_yp - a_y * a_p)
-      / sqrt((x_yy - a_y * a_y) * (x_pp - a_p * a_p)) AS r_yp
-  FROM mo
-)
-SELECT 'n_events~total_cents' AS pair, 'n_purchases' AS given,
-       round(r_my, 6) AS marginal_r,
-       round((r_my - r_mp * r_yp)
-             / sqrt((1 - r_mp * r_mp) * (1 - r_yp * r_yp)), 6)
-         AS partial_r,
-       round(0.5 * ln((1 + (r_my - r_mp * r_yp)
-             / sqrt((1 - r_mp * r_mp) * (1 - r_yp * r_yp)))
-             / (1 - (r_my - r_mp * r_yp)
-             / sqrt((1 - r_mp * r_mp) * (1 - r_yp * r_yp))))
-             * sqrt(n - 4), 6) AS fisher_z,
-       abs(0.5 * ln((1 + (r_my - r_mp * r_yp)
-           / sqrt((1 - r_mp * r_mp) * (1 - r_yp * r_yp)))
-           / (1 - (r_my - r_mp * r_yp)
-           / sqrt((1 - r_mp * r_mp) * (1 - r_yp * r_yp))))
-           * sqrt(n - 4)) > {_PC_Z} AS edge_kept
-FROM rr
-UNION ALL
-SELECT 'n_events~n_purchases', 'total_cents',
-       round(r_mp, 6),
-       round((r_mp - r_my * r_yp)
-             / sqrt((1 - r_my * r_my) * (1 - r_yp * r_yp)), 6),
-       round(0.5 * ln((1 + (r_mp - r_my * r_yp)
-             / sqrt((1 - r_my * r_my) * (1 - r_yp * r_yp)))
-             / (1 - (r_mp - r_my * r_yp)
-             / sqrt((1 - r_my * r_my) * (1 - r_yp * r_yp))))
-             * sqrt(n - 4), 6),
-       abs(0.5 * ln((1 + (r_mp - r_my * r_yp)
-           / sqrt((1 - r_my * r_my) * (1 - r_yp * r_yp)))
-           / (1 - (r_mp - r_my * r_yp)
-           / sqrt((1 - r_my * r_my) * (1 - r_yp * r_yp))))
-           * sqrt(n - 4)) > {_PC_Z}
-FROM rr
-UNION ALL
-SELECT 'total_cents~n_purchases', 'n_events',
-       round(r_yp, 6),
-       round((r_yp - r_my * r_mp)
-             / sqrt((1 - r_my * r_my) * (1 - r_mp * r_mp)), 6),
-       round(0.5 * ln((1 + (r_yp - r_my * r_mp)
-             / sqrt((1 - r_my * r_my) * (1 - r_mp * r_mp)))
-             / (1 - (r_yp - r_my * r_mp)
-             / sqrt((1 - r_my * r_my) * (1 - r_mp * r_mp))))
-             * sqrt(n - 4), 6),
-       abs(0.5 * ln((1 + (r_yp - r_my * r_mp)
-           / sqrt((1 - r_my * r_my) * (1 - r_mp * r_mp)))
-           / (1 - (r_yp - r_my * r_mp)
-           / sqrt((1 - r_my * r_my) * (1 - r_mp * r_mp))))
-           * sqrt(n - 4)) > {_PC_Z}
-FROM rr
-ORDER BY pair
-"""
-
-
 def q_granger_lite(spark, sf_dir):
     """GRANGER-LITE: daily cents_t on cents_{t-1} (restricted) vs
     + purchases_{t-1} (unrestricted); F test of the added lag."""
@@ -348,56 +222,3 @@ def q_granger_lite(spark, sf_dir):
         F.round(rss_u / n, 4).alias("rss_unrestricted_per_n"),
         F.round(fstat, 6).alias("f_stat"),
     )
-
-
-SQL_GRANGER_LITE = """
-WITH d AS (
-  SELECT CAST(dayofmonth(ts) AS BIGINT) AS day,
-         CAST(sum(CAST(round(value * 100) AS BIGINT)) AS DOUBLE)
-           AS y,
-         CAST(sum(CASE WHEN event_type = 'purchase'
-                  THEN 1 ELSE 0 END) AS DOUBLE) AS p
-  FROM events GROUP BY 1
-), lagd AS (
-  SELECT day, y, y1, p1 FROM (
-    SELECT day, y,
-           lag(y) OVER (ORDER BY day) AS y1,
-           lag(p) OVER (ORDER BY day) AS p1
-    FROM d
-  ) WHERE y1 IS NOT NULL
-), mo AS (
-  SELECT CAST(count(*) AS DOUBLE) AS n,
-         avg(y) AS my, avg(y1) AS m1, avg(p1) AS m2,
-         avg(y1 * y1) AS s11, avg(y1 * p1) AS s12,
-         avg(p1 * p1) AS s22, avg(y * y1) AS sy1,
-         avg(y * p1) AS sy2, avg(y * y) AS syy
-  FROM lagd
-), c AS (
-  SELECT n,
-         s11 - m1 * m1 AS c11, s12 - m1 * m2 AS c12,
-         s22 - m2 * m2 AS c22, sy1 - my * m1 AS cy1,
-         sy2 - my * m2 AS cy2, syy - my * my AS cyy
-  FROM mo
-), f AS (
-  SELECT n, c11, c12, c22, cy1, cy2, cyy,
-         c11 * c22 - c12 * c12 AS det
-  FROM c
-), g AS (
-  SELECT n,
-         (c22 * cy1 - c12 * cy2) / det AS b1,
-         (c11 * cy2 - c12 * cy1) / det AS b2,
-         n * (cyy - cy1 * cy1 / c11) AS rss_r,
-         cyy, cy1, cy2
-  FROM f
-), h AS (
-  SELECT n, b2, rss_r,
-         n * (cyy - b1 * cy1 - b2 * cy2) AS rss_u
-  FROM g
-)
-SELECT CAST(n AS BIGINT) AS n,
-       round(b2, 6) AS beta_lag_purchases,
-       round(rss_r / n, 4) AS rss_restricted_per_n,
-       round(rss_u / n, 4) AS rss_unrestricted_per_n,
-       round((rss_r - rss_u) / (rss_u / (n - 3)), 6) AS f_stat
-FROM h
-"""

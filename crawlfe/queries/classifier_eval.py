@@ -4,17 +4,10 @@ Split from the former crawlfe/queries.py monolith (r4); bodies unchanged.
 """
 from __future__ import annotations
 
-import pandas as pd  # noqa: F401
 from pyspark.sql import DataFrame, SparkSession, Window  # noqa: F401
 from pyspark.sql import functions as F  # noqa: F401
-from pyspark.sql import types as T  # noqa: F401
 
-from .. import clean  # noqa: F401
-from .. import windows as W  # noqa: F401
-from ..asof import asof_join  # noqa: F401
-from ..textfeat import featurize_batch  # noqa: F401
 from ._shared import SESSION_GAP_S, _t, _us  # noqa: F401
-
 
 
 # --------------------------------------------------------------------------
@@ -144,54 +137,6 @@ def q_mcc_score(spark, sf_dir):
     )
 
 
-SQL_MCC_SCORE = """
-WITH base AS (
-  SELECT CAST(round(value * 100) AS BIGINT) AS cents,
-         CAST(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END
-              AS BIGINT) AS pos
-  FROM events WHERE event_type IN ('purchase', 'click')
-), hist AS (
-  SELECT cents, CAST(count(*) AS BIGINT) AS ct FROM base GROUP BY 1
-), cum AS (
-  SELECT cents,
-         CAST(sum(ct) OVER (ORDER BY cents
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-              AS BIGINT) AS cum,
-         CAST(sum(ct) OVER () AS BIGINT) AS n
-  FROM hist
-), med AS (
-  SELECT CAST(min(CASE WHEN cum >= (n + 1) // 2 THEN cents END)
-              + min(CASE WHEN cum >= n // 2 + 1 THEN cents END)
-              AS BIGINT) AS med2
-  FROM cum
-), cells AS (
-  SELECT
-    CAST(sum(CASE WHEN 2 * cents > med2 AND pos = 1
-             THEN 1 ELSE 0 END) AS BIGINT) AS tp,
-    CAST(sum(CASE WHEN 2 * cents > med2 AND pos = 0
-             THEN 1 ELSE 0 END) AS BIGINT) AS fp,
-    CAST(sum(CASE WHEN 2 * cents <= med2 AND pos = 0
-             THEN 1 ELSE 0 END) AS BIGINT) AS tn,
-    CAST(sum(CASE WHEN 2 * cents <= med2 AND pos = 1
-             THEN 1 ELSE 0 END) AS BIGINT) AS fn
-  FROM base CROSS JOIN med
-)
-SELECT tp, fp, tn, fn,
-       round((CAST(tp AS DOUBLE) * tn - CAST(fp AS DOUBLE) * fn)
-             / nullif(sqrt(CAST(tp + fp AS DOUBLE))
-               * sqrt(CAST(tp + fn AS DOUBLE))
-               * sqrt(CAST(tn + fp AS DOUBLE))
-               * sqrt(CAST(tn + fn AS DOUBLE)), 0.0), 6) AS mcc,
-       round(0.5 * (CAST(tp AS DOUBLE) / nullif(tp + fn, 0)
-                    + CAST(tn AS DOUBLE) / nullif(tn + fp, 0)), 6)
-         AS balanced_acc,
-       round(CAST(tp AS DOUBLE) / nullif(tp + fn, 0)
-             + CAST(tn AS DOUBLE) / nullif(tn + fp, 0) - 1.0, 6)
-         AS youden_j
-FROM cells
-"""
-
-
 def q_ece_score(spark, sf_dir):
     """TEMPORAL EXPECTED CALIBRATION ERROR: train bin-wise purchase
     probabilities on WEEK 1 (value-decile bins by exact rank cuts
@@ -274,69 +219,6 @@ def q_ece_score(spark, sf_dir):
     )
 
 
-SQL_ECE_SCORE = """
-WITH base AS (
-  SELECT event_id, CAST(day(ts) AS INTEGER) AS day,
-         CAST(round(value * 100) AS BIGINT) AS cents,
-         CAST(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END
-              AS BIGINT) AS pos
-  FROM events WHERE event_type IN ('purchase', 'click')
-), w1 AS (
-  SELECT * FROM base WHERE day <= 7
-), hist AS (
-  SELECT cents, CAST(count(*) AS BIGINT) AS ct FROM w1 GROUP BY 1
-), cum AS (
-  SELECT cents,
-         CAST(sum(ct) OVER (ORDER BY cents
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-              AS BIGINT) AS cum,
-         CAST(sum(ct) OVER () AS BIGINT) AS n
-  FROM hist
-), edges AS (
-  SELECT d, CAST(min(cents) AS BIGINT) AS edge
-  FROM cum CROSS JOIN (SELECT unnest(generate_series(1, 9)) AS d) ds
-  WHERE cum >= (d * n + 9) // 10
-  GROUP BY 1
-), train AS (
-  SELECT bin, CAST(count(*) AS BIGINT) AS n_train,
-         CAST(sum(pos) AS BIGINT) AS p_train
-  FROM (
-    SELECT w1.event_id, max(w1.pos) AS pos,
-           CAST(1 + sum(CASE WHEN w1.cents > e.edge
-                        THEN 1 ELSE 0 END) AS INTEGER) AS bin
-    FROM w1 CROSS JOIN edges e
-    GROUP BY w1.event_id
-  ) GROUP BY 1
-), test AS (
-  SELECT bin, CAST(count(*) AS BIGINT) AS n_test,
-         CAST(sum(pos) AS BIGINT) AS p_test
-  FROM (
-    SELECT b.event_id, max(b.pos) AS pos,
-           CAST(1 + sum(CASE WHEN b.cents > e.edge
-                        THEN 1 ELSE 0 END) AS INTEGER) AS bin
-    FROM base b CROSS JOIN edges e
-    WHERE b.day >= 15
-    GROUP BY b.event_id
-  ) GROUP BY 1
-), j AS (
-  SELECT train.bin, n_train, p_train, n_test, p_test
-  FROM train JOIN test USING (bin)
-), tot AS (
-  SELECT CAST(sum(n_test) AS BIGINT) AS nt FROM j
-), ece AS (
-  SELECT sum(CAST(n_test AS DOUBLE) / nt
-             * abs(CAST(p_train AS DOUBLE) / n_train
-                   - CAST(p_test AS DOUBLE) / n_test)) AS ece
-  FROM j CROSS JOIN tot
-)
-SELECT bin, n_train, n_test,
-       round(CAST(p_train AS DOUBLE) / n_train, 6) AS pred_rate,
-       round(CAST(p_test AS DOUBLE) / n_test, 6) AS obs_rate,
-       round(ece, 6) AS ece
-FROM j CROSS JOIN ece
-"""
-
-
 def q_cost_threshold(spark, sf_dir):
     """COST-OPTIMAL DECISION THRESHOLD: with a false positive
     costing 1 and a false negative costing 5, sweep EVERY distinct
@@ -389,45 +271,6 @@ def q_cost_threshold(spark, sf_dir):
             F.col("tot_n").alias("cost_flag_all"),
         )
     )
-
-
-SQL_COST_THRESHOLD = """
-WITH base AS (
-  SELECT CAST(round(value * 100) AS BIGINT) AS cents,
-         CAST(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END
-              AS BIGINT) AS pos
-  FROM events WHERE event_type IN ('purchase', 'click')
-), hist AS (
-  SELECT cents, CAST(sum(pos) AS BIGINT) AS p,
-         CAST(sum(1 - pos) AS BIGINT) AS ng
-  FROM base GROUP BY 1
-), cum AS (
-  SELECT cents,
-         CAST(sum(p) OVER (ORDER BY cents
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-              AS BIGINT) AS cum_p,
-         CAST(sum(ng) OVER (ORDER BY cents
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-              AS BIGINT) AS cum_n,
-         CAST(sum(p) OVER () AS BIGINT) AS tot_p,
-         CAST(sum(ng) OVER () AS BIGINT) AS tot_n
-  FROM hist
-), scored AS (
-  SELECT cents,
-         CAST(5 * cum_p + (tot_n - cum_n) AS BIGINT) AS cost,
-         cum_p AS fn, CAST(tot_n - cum_n AS BIGINT) AS fp,
-         tot_p, tot_n
-  FROM cum
-)
-SELECT CAST(cents AS DOUBLE) / 100.0 AS threshold_value,
-       fn, fp, cost AS min_cost,
-       CAST(5 * tot_p AS BIGINT) AS cost_flag_none,
-       tot_n AS cost_flag_all
-FROM (
-  SELECT *, row_number() OVER (ORDER BY cost ASC, cents ASC) AS rk
-  FROM scored
-) WHERE rk = 1
-"""
 
 
 def q_fairness_gaps(spark, sf_dir):
@@ -510,53 +353,6 @@ def q_fairness_gaps(spark, sf_dir):
     )
 
 
-SQL_FAIRNESS_GAPS = """
-WITH base AS (
-  SELECT user_id, CAST(round(value * 100) AS BIGINT) AS cents,
-         CAST(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END
-              AS BIGINT) AS pos
-  FROM events WHERE event_type IN ('purchase', 'click')
-), hist AS (
-  SELECT cents, CAST(count(*) AS BIGINT) AS ct FROM base GROUP BY 1
-), cum AS (
-  SELECT cents,
-         CAST(sum(ct) OVER (ORDER BY cents
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-              AS BIGINT) AS cum,
-         CAST(sum(ct) OVER () AS BIGINT) AS n
-  FROM hist
-), med AS (
-  SELECT CAST(min(CASE WHEN cum >= (n + 1) // 2 THEN cents END)
-              + min(CASE WHEN cum >= n // 2 + 1 THEN cents END)
-              AS BIGINT) AS med2
-  FROM cum
-), per AS (
-  SELECT CAST(user_id % 4 AS INTEGER) AS cohort,
-         CAST(sum(CASE WHEN 2 * cents > med2 AND pos = 1
-                  THEN 1 ELSE 0 END) AS BIGINT) AS tp,
-         CAST(sum(pos) AS BIGINT) AS npos,
-         CAST(sum(CASE WHEN 2 * cents > med2 AND pos = 0
-                  THEN 1 ELSE 0 END) AS BIGINT) AS fp,
-         CAST(sum(1 - pos) AS BIGINT) AS nneg
-  FROM base CROSS JOIN med
-  GROUP BY 1
-), rates AS (
-  SELECT cohort, npos, nneg,
-         CAST(tp AS DOUBLE) / nullif(npos, 0) AS tpr,
-         CAST(fp AS DOUBLE) / nullif(nneg, 0) AS fpr
-  FROM per
-), gaps AS (
-  SELECT max(tpr) - min(tpr) AS tpr_gap,
-         max(fpr) - min(fpr) AS fpr_gap
-  FROM rates
-)
-SELECT cohort, npos, nneg,
-       round(tpr, 6) AS tpr, round(fpr, 6) AS fpr,
-       round(tpr_gap, 6) AS tpr_gap, round(fpr_gap, 6) AS fpr_gap
-FROM rates CROSS JOIN gaps
-"""
-
-
 def q_prec_at_k(spark, sf_dir):
     """PRECISION@K of the value-score ranking: flag the top
     100/500/1000 scored events (deterministic (cents desc,
@@ -594,36 +390,6 @@ def q_prec_at_k(spark, sf_dir):
     )
 
 
-SQL_PREC_AT_K = """
-WITH base AS (
-  SELECT event_id, CAST(round(value * 100) AS BIGINT) AS cents,
-         CAST(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END
-              AS BIGINT) AS pos
-  FROM events WHERE event_type IN ('purchase', 'click')
-), ranked AS (
-  SELECT pos,
-         CAST(row_number() OVER (ORDER BY cents DESC, event_id ASC)
-              AS BIGINT) AS rk
-  FROM base
-), tot AS (
-  SELECT CAST(sum(pos) AS BIGINT) AS tot_pos FROM ranked
-), ks AS (
-  SELECT CAST(k AS INTEGER) AS k
-  FROM (VALUES (100), (500), (1000)) t(k)
-)
-SELECT k,
-       CAST(count(*) AS BIGINT) AS n_flagged,
-       CAST(sum(pos) AS BIGINT) AS n_hits,
-       round(CAST(sum(pos) AS DOUBLE) / count(*), 6)
-         AS precision_at_k,
-       round(CAST(sum(pos) AS DOUBLE) / max(tot_pos), 6)
-         AS recall_at_k
-FROM ranked CROSS JOIN ks CROSS JOIN tot
-WHERE rk <= k
-GROUP BY 1
-"""
-
-
 def q_gains_auc(spark, sf_dir):
     """CUMULATIVE GAINS AUC: the exact area under the gains curve
     (share of positives captured vs share of population flagged,
@@ -658,28 +424,6 @@ def q_gains_auc(spark, sf_dir):
             6,
         ).alias("gains_auc"),
     )
-
-
-SQL_GAINS_AUC = """
-WITH base AS (
-  SELECT event_id, CAST(round(value * 100) AS BIGINT) AS cents,
-         CAST(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END
-              AS BIGINT) AS pos
-  FROM events WHERE event_type IN ('purchase', 'click')
-), ranked AS (
-  SELECT pos,
-         CAST(sum(pos) OVER (ORDER BY cents DESC, event_id ASC
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-              AS BIGINT) AS cum_pos
-  FROM base
-)
-SELECT CAST(count(*) AS BIGINT) AS n,
-       CAST(sum(pos) AS BIGINT) AS tot_pos,
-       round(CAST(sum(CAST(cum_pos AS HUGEINT)) AS DOUBLE)
-             / (CAST(count(*) AS DOUBLE) * sum(pos)), 6)
-         AS gains_auc
-FROM ranked
-"""
 
 
 # --------------------------------------------------------------------------
@@ -784,50 +528,6 @@ def q_growth_accounting(spark, sf_dir):
     )
 
 
-SQL_GROWTH_ACCOUNTING = """
-WITH pres AS (
-  SELECT DISTINCT user_id,
-         CAST((day(ts) - 1) // 7 + 1 AS INTEGER) AS wk
-  FROM events WHERE day(ts) <= 28
-), first AS (
-  SELECT user_id, min(wk) AS first_wk FROM pres GROUP BY 1
-), lab AS (
-  SELECT p.wk,
-         CASE WHEN f.first_wk = p.wk THEN 'new'
-              WHEN EXISTS (SELECT 1 FROM pres q
-                           WHERE q.user_id = p.user_id
-                             AND q.wk = p.wk - 1) THEN 'retained'
-              ELSE 'resurrected' END AS state
-  FROM pres p JOIN first f USING (user_id)
-  WHERE p.wk >= 2
-), counts AS (
-  SELECT wk,
-         CAST(sum(CASE WHEN state = 'new' THEN 1 ELSE 0 END)
-              AS BIGINT) AS n_new,
-         CAST(sum(CASE WHEN state = 'retained' THEN 1 ELSE 0 END)
-              AS BIGINT) AS n_retained,
-         CAST(sum(CASE WHEN state = 'resurrected' THEN 1 ELSE 0 END)
-              AS BIGINT) AS n_resurrected,
-         CAST(count(*) AS BIGINT) AS n_active
-  FROM lab GROUP BY 1
-), churn AS (
-  SELECT p.wk + 1 AS wk, CAST(count(*) AS BIGINT) AS n_churned
-  FROM pres p
-  WHERE p.wk <= 3 AND NOT EXISTS (
-    SELECT 1 FROM pres q
-    WHERE q.user_id = p.user_id AND q.wk = p.wk + 1)
-  GROUP BY 1
-)
-SELECT counts.wk AS week, n_active, n_new, n_retained,
-       n_resurrected,
-       CAST(coalesce(n_churned, 0) AS BIGINT) AS n_churned,
-       round((CAST(n_new + n_resurrected AS DOUBLE)
-              - coalesce(n_churned, 0)) / n_active, 6)
-         AS quick_ratio_delta
-FROM counts LEFT JOIN churn ON counts.wk = churn.wk
-"""
-
-
 def q_power_user_curve(spark, sf_dir):
     """POWER USER CURVE: the distribution of users by ACTIVE-DAY
     count over the month, bucketed 1 / 2-3 / 4-7 / 8-14 / 15+ — a
@@ -871,32 +571,6 @@ def q_power_user_curve(spark, sf_dir):
     )
 
 
-SQL_POWER_USER_CURVE = """
-WITH pu AS (
-  SELECT user_id,
-         CAST(count(DISTINCT day(ts)) AS BIGINT) AS days
-  FROM events GROUP BY 1
-), tot AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_total FROM pu
-), bucketed AS (
-  SELECT CASE WHEN days = 1 THEN '01'
-              WHEN days <= 3 THEN '02-03'
-              WHEN days <= 7 THEN '04-07'
-              WHEN days <= 14 THEN '08-14'
-              ELSE '15+' END AS day_bucket,
-         days
-  FROM pu
-)
-SELECT day_bucket,
-       CAST(count(*) AS BIGINT) AS n_users,
-       CAST(sum(days) AS BIGINT) AS active_days,
-       round(CAST(count(*) AS DOUBLE) / max(n_total), 6)
-         AS user_share
-FROM bucketed CROSS JOIN tot
-GROUP BY 1
-"""
-
-
 def q_diverse_topk(spark, sf_dir):
     """DIVERSIFIED TOP-K retrieval: the top 10 documents by length
     score with AT MOST 2 PER SOURCE — the per-provider cap every
@@ -921,23 +595,6 @@ def q_diverse_topk(spark, sf_dir):
         .where(F.col("rk") <= 10)
         .select("rk", "doc_id", "source", "n_chars", "src_rank")
     )
-
-
-SQL_DIVERSE_TOPK = """
-WITH capped AS (
-  SELECT doc_id, source, n_chars,
-         row_number() OVER (PARTITION BY source
-                            ORDER BY n_chars DESC, doc_id ASC)
-           AS src_rank
-  FROM documents
-)
-SELECT * FROM (
-  SELECT row_number() OVER (ORDER BY n_chars DESC, doc_id ASC)
-           AS rk,
-         doc_id, source, n_chars, src_rank
-  FROM capped WHERE src_rank <= 2
-) WHERE rk <= 10
-"""
 
 
 def q_band_anomaly_days(spark, sf_dir):
@@ -1004,41 +661,6 @@ def q_band_anomaly_days(spark, sf_dir):
             ).alias("side"),
         )
     )
-
-
-SQL_BAND_ANOMALY_DAYS = """
-WITH days AS (
-  SELECT DISTINCT CAST(day(ts) AS INTEGER) AS day FROM events
-), types AS (
-  SELECT DISTINCT event_type FROM events
-), raw AS (
-  SELECT event_type, CAST(day(ts) AS INTEGER) AS day,
-         CAST(count(*) AS BIGINT) AS c
-  FROM events GROUP BY 1, 2
-), grid AS (
-  SELECT t.event_type, d.day, CAST(coalesce(r.c, 0) AS BIGINT) AS c
-  FROM types t CROSS JOIN days d
-  LEFT JOIN raw r ON r.event_type = t.event_type AND r.day = d.day
-), ranked AS (
-  SELECT event_type, day, c,
-         CAST(row_number() OVER (PARTITION BY event_type
-              ORDER BY c, day) AS BIGINT) AS rn,
-         CAST(count(*) OVER (PARTITION BY event_type) AS BIGINT)
-           AS n
-  FROM grid
-), bands AS (
-  SELECT event_type,
-         max(CASE WHEN rn = (10 * n + 99) // 100 THEN c END) AS p10,
-         max(CASE WHEN rn = (90 * n + 99) // 100 THEN c END) AS p90
-  FROM ranked GROUP BY 1
-)
-SELECT g.event_type, g.day, g.c AS count,
-       CAST(p10 AS BIGINT) AS band_lo,
-       CAST(p90 AS BIGINT) AS band_hi,
-       CASE WHEN g.c > p90 THEN 'high' ELSE 'low' END AS side
-FROM grid g JOIN bands b ON g.event_type = b.event_type
-WHERE g.c < p10 OR g.c > p90
-"""
 
 
 def q_rank_stability(spark, sf_dir):
@@ -1126,57 +748,6 @@ def q_rank_stability(spark, sf_dir):
     )
 
 
-SQL_RANK_STABILITY = """
-WITH pu AS (
-  SELECT user_id,
-         CAST(sum(CASE WHEN day(ts) <= 7
-                  THEN CAST(round(value * 100) AS BIGINT)
-                  ELSE 0 END) AS BIGINT) AS w1,
-         CAST(sum(CASE WHEN day(ts) >= 22
-                  THEN CAST(round(value * 100) AS BIGINT)
-                  ELSE 0 END) AS BIGINT) AS w4
-  FROM events
-  WHERE day(ts) <= 7 OR day(ts) BETWEEN 22 AND 28
-  GROUP BY 1
-  HAVING sum(CASE WHEN day(ts) <= 7
-             THEN CAST(round(value * 100) AS BIGINT) ELSE 0 END) > 0
-     AND sum(CASE WHEN day(ts) >= 22
-             THEN CAST(round(value * 100) AS BIGINT) ELSE 0 END) > 0
-), r1 AS (
-  SELECT w1, CAST(2 * (sum(t) OVER (ORDER BY w1
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - t)
-              + t + 1 AS BIGINT) AS r1
-  FROM (SELECT w1, CAST(count(*) AS BIGINT) AS t
-        FROM pu GROUP BY 1)
-), r4 AS (
-  SELECT w4, CAST(2 * (sum(t) OVER (ORDER BY w4
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - t)
-              + t + 1 AS BIGINT) AS r4
-  FROM (SELECT w4, CAST(count(*) AS BIGINT) AS t
-        FROM pu GROUP BY 1)
-), j AS (
-  SELECT pu.user_id, r1.r1, r4.r4
-  FROM pu JOIN r1 USING (w1) JOIN r4 USING (w4)
-), agg AS (
-  SELECT CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(r1) AS BIGINT) AS sx,
-         CAST(sum(r4) AS BIGINT) AS sy,
-         CAST(sum(r1 * r1) AS BIGINT) AS sxx,
-         CAST(sum(r4 * r4) AS BIGINT) AS syy,
-         CAST(sum(r1 * r4) AS BIGINT) AS sxy
-  FROM j
-)
-SELECT n AS n_users,
-       round((CAST(n AS DOUBLE) * sxy - CAST(sx AS DOUBLE) * sy)
-             / sqrt((CAST(n AS DOUBLE) * sxx
-                     - CAST(sx AS DOUBLE) * sx)
-                    * (CAST(n AS DOUBLE) * syy
-                       - CAST(sy AS DOUBLE) * sy)), 6)
-         AS spearman_w1_w4
-FROM agg
-"""
-
-
 def q_conversion_lag_hist(spark, sf_dir):
     """CONVERSION LAG HISTOGRAM: for each user's FIRST purchase, the
     lag since their FIRST event, bucketed <1h / 1-24h / 1-3d / 3-7d
@@ -1218,34 +789,6 @@ def q_conversion_lag_hist(spark, sf_dir):
             ).alias("share"),
         )
     )
-
-
-SQL_CONVERSION_LAG_HIST = """
-WITH pu AS (
-  SELECT user_id, min(epoch_us(ts)) AS first_us,
-         min(CASE WHEN event_type = 'purchase'
-             THEN epoch_us(ts) END) AS buy_us
-  FROM events GROUP BY 1
-), lagged AS (
-  SELECT buy_us - first_us AS lag_us
-  FROM pu WHERE buy_us IS NOT NULL
-), tot AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_converters FROM lagged
-), bucketed AS (
-  SELECT CASE WHEN lag_us < 3600000000 THEN 'a_<1h'
-              WHEN lag_us < 86400000000 THEN 'b_1-24h'
-              WHEN lag_us < 259200000000 THEN 'c_1-3d'
-              WHEN lag_us < 604800000000 THEN 'd_3-7d'
-              ELSE 'e_7d+' END AS lag_bucket
-  FROM lagged
-)
-SELECT lag_bucket,
-       CAST(count(*) AS BIGINT) AS n_users,
-       round(CAST(count(*) AS DOUBLE) / max(n_converters), 6)
-         AS share
-FROM bucketed CROSS JOIN tot
-GROUP BY 1
-"""
 
 
 # --------------------------------------------------------------------------
@@ -1305,38 +848,6 @@ def q_zipf_r2(spark, sf_dir):
     )
 
 
-SQL_ZIPF_R2 = """
-WITH tf AS (
-  SELECT u.w, CAST(count(*) AS BIGINT) AS c
-  FROM (
-    SELECT regexp_split_to_array(trim(text), '\\s+') AS arr
-    FROM documents
-  ) t, unnest(t.arr) AS u(w)
-  WHERE u.w <> ''
-  GROUP BY 1
-), head AS (
-  SELECT c, CAST(row_number() OVER (ORDER BY c DESC, w ASC)
-           AS BIGINT) AS r
-  FROM tf QUALIFY r <= 100
-), agg AS (
-  SELECT CAST(count(*) AS BIGINT) AS n,
-         sum(ln(CAST(r AS DOUBLE))) AS sx,
-         sum(ln(CAST(c AS DOUBLE))) AS sy,
-         sum(ln(CAST(r AS DOUBLE)) * ln(CAST(r AS DOUBLE))) AS sxx,
-         sum(ln(CAST(c AS DOUBLE)) * ln(CAST(c AS DOUBLE))) AS syy,
-         sum(ln(CAST(r AS DOUBLE)) * ln(CAST(c AS DOUBLE))) AS sxy
-  FROM head
-)
-SELECT n AS n_head,
-       round((n * sxy - sx * sy) / (n * sxx - sx * sx), 6)
-         AS zipf_slope,
-       round(pow(n * sxy - sx * sy, 2)
-             / ((n * sxx - sx * sx) * (n * syy - sy * sy)), 6)
-         AS r2
-FROM agg
-"""
-
-
 def q_lognormal_fit(spark, sf_dir):
     """LOGNORMAL FIT of document lengths (n_chars) per source:
     mu/sigma of ln(length) by method of moments, plus the implied
@@ -1392,34 +903,3 @@ def q_lognormal_fit(spark, sf_dir):
         F.round(F.expr("exp(mu)"), 6).alias("lognormal_median"),
         F.round("emp_median", 6).alias("empirical_median"),
     )
-
-
-SQL_LOGNORMAL_FIT = """
-WITH base AS (
-  SELECT source, CAST(n_chars AS BIGINT) AS len
-  FROM documents WHERE n_chars > 0
-), mom AS (
-  SELECT source, CAST(count(*) AS BIGINT) AS n,
-         avg(ln(CAST(len AS DOUBLE))) AS mu,
-         avg(ln(CAST(len AS DOUBLE)) * ln(CAST(len AS DOUBLE)))
-           AS m2
-  FROM base GROUP BY 1
-), rk AS (
-  SELECT source, len,
-         row_number() OVER (PARTITION BY source ORDER BY len) AS rn,
-         CAST(count(*) OVER (PARTITION BY source) AS BIGINT) AS n
-  FROM base
-), med AS (
-  SELECT source,
-         sum(len * (CASE WHEN (n + 1) // 2 = n // 2 + 1
-                    THEN 2 ELSE 1 END)) / 2.0 AS emp_median
-  FROM rk WHERE rn = (n + 1) // 2 OR rn = n // 2 + 1
-  GROUP BY 1
-)
-SELECT mom.source, mom.n,
-       round(mu, 6) AS log_mu,
-       round(sqrt(m2 - mu * mu), 6) AS log_sigma,
-       round(exp(mu), 6) AS lognormal_median,
-       round(emp_median, 6) AS empirical_median
-FROM mom JOIN med USING (source)
-"""

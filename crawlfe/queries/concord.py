@@ -123,43 +123,6 @@ def q_kendall_w(spark, sf_dir):
     )
 
 
-SQL_KENDALL_W = f"""
-WITH r AS (
-  SELECT doc_id, n_chars, rr.range AS r,
-         n_chars + (CAST('0x' || substring(
-             md5('kw' || CAST(rr.range AS VARCHAR) || ':'
-                 || CAST(doc_id AS VARCHAR)), 1, 4) AS BIGINT)
-             % {_KW_NOISE} - {(_KW_NOISE - 1) // 2}) AS score
-  FROM documents CROSS JOIN range(1, {_KW_RATERS + 1}) rr
-), ranked AS (
-  SELECT doc_id, r,
-         CAST(2 * rank() OVER (PARTITION BY r ORDER BY score)
-              + count(*) OVER (PARTITION BY r, score) - 1 AS BIGINT)
-           AS ar2,
-         CAST(count(*) OVER (PARTITION BY r, score) AS BIGINT) AS tie_n
-  FROM r
-), ties AS (
-  SELECT CAST(sum(tie_n * tie_n - 1) AS BIGINT) AS t_sum FROM ranked
-), sums AS (
-  SELECT doc_id, CAST(sum(ar2) AS BIGINT) AS r2
-  FROM ranked GROUP BY doc_id
-), nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM sums),
-s4 AS (
-  SELECT n, CAST(sum((r2 - {_KW_RATERS} * (n + 1))
-                     * (r2 - {_KW_RATERS} * (n + 1))) AS BIGINT) AS s4
-  FROM sums CROSS JOIN nn GROUP BY n
-)
-SELECT n, CAST({_KW_RATERS} AS BIGINT) AS m, s4, t_sum,
-       round(3 * CAST(s4 AS DOUBLE)
-             / ({_KW_RATERS * _KW_RATERS} * (n * n * n - n)
-                - {_KW_RATERS} * t_sum), 6) AS kendall_w,
-       round({_KW_RATERS} * (n - 1) * 3 * CAST(s4 AS DOUBLE)
-             / ({_KW_RATERS * _KW_RATERS} * (n * n * n - n)
-                - {_KW_RATERS} * t_sum), 4) AS chi2_approx
-FROM s4 CROSS JOIN ties
-"""
-
-
 def q_yuen_test(spark, sf_dir):
     """YUEN'S TRIMMED t: purchase vs click cents, k = floor(n/10)
     trimmed per side; trimmed means over ranks (k, n-k], winsorized
@@ -243,50 +206,6 @@ def q_yuen_test(spark, sf_dir):
     )
 
 
-SQL_YUEN_TEST = f"""
-WITH e AS (
-  SELECT event_type, event_id,
-         CAST(round(value * 100) AS BIGINT) AS c
-  FROM events WHERE event_type IN ('purchase', 'click')
-), r AS (
-  SELECT event_type, c,
-         CAST(row_number() OVER (PARTITION BY event_type
-                                 ORDER BY c, event_id) AS BIGINT) AS rn,
-         CAST(count(*) OVER (PARTITION BY event_type) AS BIGINT) AS n
-  FROM e
-), rk AS (
-  SELECT r.*, CAST(n // {_YUEN_TRIM_PCT} AS BIGINT) AS k FROM r
-), bounds AS (
-  SELECT event_type, n, k,
-         max(CASE WHEN rn = k + 1 THEN c END) AS lo,
-         max(CASE WHEN rn = n - k THEN c END) AS hi
-  FROM rk GROUP BY 1, 2, 3
-), m AS (
-  SELECT rk.event_type, rk.n, rk.k,
-         CAST(sum(CASE WHEN rn BETWEEN k + 1 AND n - k THEN c END)
-              AS BIGINT) AS ts,
-         CAST(sum(greatest(least(c, hi), lo)) AS BIGINT) AS ws,
-         CAST(sum(greatest(least(c, hi), lo)
-                  * greatest(least(c, hi), lo)) AS BIGINT) AS ws2
-  FROM rk JOIN bounds USING (event_type, n, k)
-  GROUP BY 1, 2, 3
-), per AS (
-  SELECT event_type, n, k,
-         round(CAST(ts AS DOUBLE) / (n - 2 * k), 6) AS tmean,
-         (CAST(ws2 AS DOUBLE) - CAST(ws AS DOUBLE) * ws / n) / (n - 1)
-           * (n - 1) / CAST((n - 2 * k) * (n - 2 * k - 1) AS DOUBLE) AS d
-  FROM m
-)
-SELECT a.n AS n1, b.n AS n2, a.tmean AS tm1, b.tmean AS tm2,
-       round((a.tmean - b.tmean) / sqrt(a.d + b.d), 6) AS yuen_t,
-       round((a.d + b.d) * (a.d + b.d)
-             / (a.d * a.d / (a.n - 2 * a.k - 1)
-                + b.d * b.d / (b.n - 2 * b.k - 1)), 4) AS df
-FROM (SELECT * FROM per WHERE event_type = 'purchase') a
-CROSS JOIN (SELECT * FROM per WHERE event_type = 'click') b
-"""
-
-
 def q_beta_binomial_mom(spark, sf_dir):
     """BETA MOM over per-source long-doc rates: rates p_i fixed-
     pointed to e6; mean and variance from exact BIGINT sums
@@ -339,30 +258,3 @@ def q_beta_binomial_mom(spark, sf_dir):
         F.round(beta, 4).alias("beta"),
         F.round(1 / (alpha + beta + 1), 6).alias("rho_icc"),
     )
-
-
-SQL_BETA_BINOMIAL_MOM = """
-WITH per AS (
-  SELECT CAST(round(1e6 * sum(CASE WHEN n_chars >= 300 THEN 1 ELSE 0 END)
-                    / count(*)) AS BIGINT) AS p_e6
-  FROM documents GROUP BY source
-), agg AS (
-  SELECT CAST(count(*) AS BIGINT) AS k,
-         CAST(sum(p_e6) AS BIGINT) AS sp,
-         CAST(sum(p_e6 * p_e6) AS BIGINT) AS sp2
-  FROM per
-), s AS (
-  SELECT k, sp, sp2,
-         CAST(sp AS DOUBLE) / (k * 1e6) AS m1,
-         CAST(k * sp2 - sp * sp AS DOUBLE) / (k * k) / (k - 1) / 1e12 AS v
-  FROM agg
-)
-SELECT k, sp, sp2,
-       round(m1, 6) AS mean_rate,
-       round(v, 6) AS var_rate,
-       round(m1 * (m1 * (1 - m1) / v - 1), 4) AS alpha,
-       round((1 - m1) * (m1 * (1 - m1) / v - 1), 4) AS beta,
-       round(1 / (m1 * (m1 * (1 - m1) / v - 1)
-                  + (1 - m1) * (m1 * (1 - m1) / v - 1) + 1), 6) AS rho_icc
-FROM s
-"""

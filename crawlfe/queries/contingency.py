@@ -70,28 +70,6 @@ def _fe_counts(spark, sf_dir):
     )
 
 
-_SQL_FE_COUNTS = f"""
-u AS (
-  SELECT user_id,
-         CASE WHEN sum(CASE WHEN event_type = 'purchase'
-                            THEN 1 ELSE 0 END) >= {_FE_HEAVY}
-              THEN 1 ELSE 0 END AS buy
-  FROM events GROUP BY 1
-), cnt AS (
-  SELECT
-    CAST(sum(CASE WHEN user_id % 2 = 0 AND buy = 1
-             THEN 1 ELSE 0 END) AS BIGINT) AS a,
-    CAST(sum(CASE WHEN user_id % 2 = 0 AND buy = 0
-             THEN 1 ELSE 0 END) AS BIGINT) AS b,
-    CAST(sum(CASE WHEN user_id % 2 = 1 AND buy = 1
-             THEN 1 ELSE 0 END) AS BIGINT) AS c,
-    CAST(sum(CASE WHEN user_id % 2 = 1 AND buy = 0
-             THEN 1 ELSE 0 END) AS BIGINT) AS d
-  FROM u
-)
-"""
-
-
 def q_fisher_exact(spark, sf_dir):
     """FISHER'S EXACT two-sided test via the pmf ratio recurrence:
     support k = max(0, c1-r2)..min(r1, c1), log-cumsum of ratios,
@@ -190,44 +168,6 @@ def q_fisher_exact(spark, sf_dir):
     )
 
 
-SQL_FISHER_EXACT = f"""
-WITH {_SQL_FE_COUNTS},
-g AS (
-  SELECT a, b, c, d, a + b AS r1, c + d AS r2, a + c AS c1,
-         greatest(0, (a + c) - (c + d)) AS kmin,
-         least(a + b, a + c) AS kmax
-  FROM cnt
-), ks AS (
-  SELECT g.*, unnest(generate_series(g.kmin, g.kmax)) AS k FROM g
-), lr AS (
-  SELECT a, kmin, k,
-         CASE WHEN k = kmin THEN 0.0
-              ELSE ln(CAST((r1 - k + 1) * (c1 - k + 1) AS DOUBLE))
-                   - ln(CAST(k * (r2 - c1 + k) AS DOUBLE))
-         END AS lrk
-  FROM ks
-), lp AS (
-  SELECT a, k, sum(lrk) OVER (ORDER BY k ROWS UNBOUNDED PRECEDING)
-           AS lp
-  FROM lr
-), w AS (
-  SELECT a, k, exp(lp - max(lp) OVER ()) AS wk FROM lp
-), p AS (
-  SELECT a, k, wk / sum(wk) OVER () AS p FROM w
-), pobs AS (
-  SELECT p AS p_obs FROM p WHERE k = a
-), p2 AS (
-  SELECT sum(CASE WHEN p.p <= pobs.p_obs * (1 + {_FE_TIE_EPS})
-                  THEN p.p ELSE 0.0 END) AS _p2
-  FROM p CROSS JOIN pobs
-)
-SELECT a, b, c, d,
-       round(CAST(a * d AS DOUBLE) / NULLIF(b * c, 0), 6) AS odds_ratio,
-       round(least(_p2, 1.0), 6) AS p_two_sided
-FROM g CROSS JOIN p2
-"""
-
-
 def _bd_strata(spark, sf_dir):
     e = _t(spark, sf_dir, "events")
     return (
@@ -259,22 +199,6 @@ def _bd_strata(spark, sf_dir):
             ).alias("d"),
         )
     )
-
-
-_SQL_BD_STRATA = """
-strata AS (
-  SELECT CAST(floor((dayofmonth(ts) - 1) / 7) AS BIGINT) AS stratum,
-    CAST(sum(CASE WHEN user_id % 2 = 0 AND event_type = 'purchase'
-             THEN 1 ELSE 0 END) AS BIGINT) AS a,
-    CAST(sum(CASE WHEN user_id % 2 = 0 AND event_type <> 'purchase'
-             THEN 1 ELSE 0 END) AS BIGINT) AS b,
-    CAST(sum(CASE WHEN user_id % 2 = 1 AND event_type = 'purchase'
-             THEN 1 ELSE 0 END) AS BIGINT) AS c,
-    CAST(sum(CASE WHEN user_id % 2 = 1 AND event_type <> 'purchase'
-             THEN 1 ELSE 0 END) AS BIGINT) AS d
-  FROM events GROUP BY 1
-)
-"""
 
 
 def q_breslow_day(spark, sf_dir):
@@ -358,51 +282,6 @@ def q_breslow_day(spark, sf_dir):
     )
 
 
-SQL_BRESLOW_DAY = f"""
-WITH {_SQL_BD_STRATA},
-mh AS (
-  SELECT sum(a * d / CAST(a + b + c + d AS DOUBLE))
-         / sum(b * c / CAST(a + b + c + d AS DOUBLE)) AS psi
-  FROM strata
-), s AS (
-  SELECT stratum, a, CAST(a + b AS DOUBLE) AS n1,
-         CAST(c + d AS DOUBLE) AS n2, CAST(a + c AS DOUBLE) AS m1,
-         psi
-  FROM strata CROSS JOIN mh
-), rt AS (
-  SELECT stratum, a, n1, n2, m1,
-         1 - psi AS qa,
-         (n2 - m1) + psi * (n1 + m1) AS qb,
-         -psi * n1 * m1 AS qc
-  FROM s
-), ae AS (
-  SELECT stratum, a, n1, n2, m1,
-         CASE WHEN abs(qa) < 1e-12 THEN -qc / qb
-              WHEN (-qb + sqrt(qb * qb - 4 * qa * qc)) / (2 * qa)
-                     >= greatest(0.0, m1 - n2) - 1e-9
-               AND (-qb + sqrt(qb * qb - 4 * qa * qc)) / (2 * qa)
-                     <= least(n1, m1) + 1e-9
-              THEN (-qb + sqrt(qb * qb - 4 * qa * qc)) / (2 * qa)
-              ELSE (-qb - sqrt(qb * qb - 4 * qa * qc)) / (2 * qa)
-         END AS ae
-  FROM rt
-), sv AS (
-  SELECT stratum, a, ae,
-         1 / (1 / ae + 1 / (n1 - ae) + 1 / (m1 - ae)
-              + 1 / (n2 - m1 + ae)) AS v
-  FROM ae
-), m AS (
-  SELECT CAST(count(*) AS BIGINT) AS k,
-         sum((a - ae) * (a - ae) / v) AS _chi2,
-         sum(a - ae) AS _dsum, sum(v) AS _vsum
-  FROM sv
-)
-SELECT k, CAST(k - 1 AS BIGINT) AS df, round(_chi2, 6) AS chi2,
-       round(_chi2 - _dsum * _dsum / _vsum, 6) AS chi2_tarone
-FROM m
-"""
-
-
 def q_poisson_dispersion(spark, sf_dir):
     """POISSON DISPERSION test on per-user event counts: D =
     sum((x - xbar)^2)/xbar vs chi2_{n-1}; z via the Wilson-Hilferty
@@ -436,27 +315,3 @@ def q_poisson_dispersion(spark, sf_dir):
         F.round(d, 4).alias("chi2"),
         F.round(wh, 6).alias("z"),
     )
-
-
-SQL_POISSON_DISPERSION = """
-WITH x AS (
-  SELECT user_id, CAST(count(*) AS BIGINT) AS x
-  FROM events GROUP BY 1
-), m AS (
-  SELECT CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(x) AS BIGINT) AS sx,
-         CAST(sum(x * x) AS BIGINT) AS sxx
-  FROM x
-), c AS (
-  SELECT n, CAST(sx AS DOUBLE) / n AS mean,
-         sxx - CAST(sx AS DOUBLE) * sx / n AS ssq,
-         CAST(n AS DOUBLE) - 1 AS df
-  FROM m
-)
-SELECT n, round(mean, 4) AS mean,
-       round(ssq / df / mean, 6) AS var_ratio,
-       round(ssq / mean, 4) AS chi2,
-       round((pow(ssq / mean / df, 1.0 / 3) - (1 - 2 / (9 * df)))
-             / sqrt(2 / (9 * df)), 6) AS z
-FROM c
-"""

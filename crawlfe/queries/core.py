@@ -4,17 +4,12 @@ Split from the former crawlfe/queries.py monolith (r4); bodies unchanged.
 """
 from __future__ import annotations
 
-import pandas as pd  # noqa: F401
 from pyspark.sql import DataFrame, SparkSession, Window  # noqa: F401
 from pyspark.sql import functions as F  # noqa: F401
-from pyspark.sql import types as T  # noqa: F401
 
-from .. import clean  # noqa: F401
 from .. import windows as W  # noqa: F401
 from ..asof import asof_join  # noqa: F401
-from ..textfeat import featurize_batch  # noqa: F401
 from ._shared import SESSION_GAP_S, _t, _us  # noqa: F401
-
 
 
 # --------------------------------------------------------------------------
@@ -182,45 +177,6 @@ SELECT user_id, event_id, epoch_us(ts) AS ts_us,
             - 1 AS BIGINT)
          AS session_id
 FROM flagged
-"""
-
-
-def q_session_bounds(spark, sf_dir):
-    ev = _t(spark, sf_dir, "events").select("user_id", "ts")
-    b = W.session_bounds(
-        ev, key="user_id", ts="ts", gap_seconds=SESSION_GAP_S
-    )
-    return b.select(
-        "user_id",
-        "session_id",
-        _us("session_start").alias("start_us"),
-        _us("session_end").alias("end_us"),
-        F.col("n_snapshots").alias("n_events"),
-    )
-
-
-SQL_SESSION_BOUNDS = f"""
-WITH flagged AS (
-  SELECT user_id, ts,
-         CASE WHEN epoch_us(ts) - lag(epoch_us(ts))
-                   OVER (PARTITION BY user_id ORDER BY ts)
-                   > {SESSION_GAP_S} * 1000000
-              OR lag(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
-         THEN 1 ELSE 0 END AS new_sess
-  FROM events
-), sess AS (
-  SELECT user_id, ts,
-         CAST(sum(new_sess) OVER (PARTITION BY user_id ORDER BY ts
-                                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-              - 1 AS BIGINT)
-           AS session_id
-  FROM flagged
-)
-SELECT user_id, session_id,
-       epoch_us(min(ts)) AS start_us,
-       epoch_us(max(ts)) AS end_us,
-       count(*) AS n_events
-FROM sess GROUP BY user_id, session_id
 """
 
 

@@ -64,27 +64,6 @@ def q_dup_cluster_profile(spark, sf_dir):
     )
 
 
-SQL_DUP_CLUSTER_PROFILE = """
-WITH cl AS (
-  SELECT md5(text) AS h, CAST(count(*) AS BIGINT) AS k
-  FROM documents GROUP BY 1
-), prof AS (
-  SELECT k, CAST(count(*) AS BIGINT) AS n_clusters,
-         CAST(sum(k) AS BIGINT) AS n_docs
-  FROM cl GROUP BY 1
-), tot AS (
-  SELECT CAST(sum(n_docs) AS BIGINT) AS total_docs,
-         CAST(sum(n_clusters) AS BIGINT) AS total_clusters
-  FROM prof
-)
-SELECT k, n_clusters, n_docs,
-       round(n_docs / CAST(total_docs AS DOUBLE), 6) AS doc_share,
-       round(total_docs / CAST(total_clusters AS DOUBLE), 6)
-         AS dup_factor
-FROM prof CROSS JOIN tot ORDER BY k
-"""
-
-
 def q_ngram_coverage_curve(spark, sf_dir):
     """TOP-K BIGRAM coverage: cumulative mass share at the K grid."""
     d = _t(spark, sf_dir, "documents")
@@ -136,50 +115,6 @@ def q_ngram_coverage_curve(spark, sf_dir):
     ).orderBy("k")
 
 
-SQL_NGRAM_COVERAGE_CURVE = f"""
-WITH toks AS (
-  SELECT doc_id, pos, w FROM (
-    SELECT doc_id,
-           unnest(regexp_split_to_array(trim(text), '\\s+')) AS w,
-           generate_subscripts(
-             regexp_split_to_array(trim(text), '\\s+'), 1) AS pos
-    FROM documents
-  )
-), bg AS (
-  SELECT w1, w2 FROM (
-    SELECT doc_id, w AS w1,
-           lead(w) OVER (PARTITION BY doc_id ORDER BY pos) AS w2
-    FROM toks
-  ) WHERE w2 IS NOT NULL
-), cnt AS MATERIALIZED (
-  SELECT w1, w2, CAST(count(*) AS BIGINT) AS c
-  FROM bg GROUP BY 1, 2
-), ranked AS (
-  SELECT c,
-         CAST(row_number() OVER (ORDER BY c DESC, w1 ASC, w2 ASC)
-              AS BIGINT) AS rnk
-  FROM cnt
-), cum AS (
-  SELECT rnk,
-         CAST(sum(c) OVER (ORDER BY rnk ROWS UNBOUNDED PRECEDING)
-              AS BIGINT) AS cum
-  FROM ranked
-), tot AS (
-  SELECT CAST(sum(c) AS BIGINT) AS tot,
-         CAST(count(*) AS BIGINT) AS types
-  FROM cnt
-), grid AS (
-  SELECT CAST(unnest([{", ".join(str(k) for k in _COV_KS)}])
-              AS BIGINT) AS k
-)
-SELECT grid.k, tot.types,
-       round(coalesce(CAST(cum.cum AS DOUBLE) / tot.tot, 1.0), 6)
-         AS coverage
-FROM grid CROSS JOIN tot LEFT JOIN cum ON grid.k = cum.rnk
-ORDER BY grid.k
-"""
-
-
 def q_readability_panel(spark, sf_dir):
     """ARI / COLEMAN-LIAU / LIX per source with deterministic
     word/sentence/letter proxies."""
@@ -227,31 +162,3 @@ def q_readability_panel(spark, sf_dir):
         F.round(cl, 4).alias("coleman_liau"),
         F.round(lix, 4).alias("lix"),
     ).orderBy("source")
-
-
-SQL_READABILITY_PANEL = """
-WITH g AS (
-  SELECT source,
-         CAST(count(*) AS BIGINT) AS n_docs,
-         CAST(sum(len(regexp_split_to_array(trim(text), '\\s+')))
-              AS BIGINT) AS w,
-         CAST(sum(greatest(1,
-              len(regexp_split_to_array(text, '[.!?]+')) - 1))
-              AS BIGINT) AS s,
-         CAST(sum(length(regexp_replace(text, '[^A-Za-z0-9]', '',
-              'g'))) AS BIGINT) AS l,
-         CAST(sum(len(list_filter(
-              regexp_split_to_array(trim(text), '\\s+'),
-              t -> length(t) > 6))) AS BIGINT) AS lw
-  FROM documents GROUP BY 1
-)
-SELECT source, n_docs,
-       round(4.71 * (l / CAST(w AS DOUBLE))
-             + 0.5 * (CAST(w AS DOUBLE) / s) - 21.43, 4) AS ari,
-       round(0.0588 * (100 * l / CAST(w AS DOUBLE))
-             - 0.296 * (100 * s / CAST(w AS DOUBLE)) - 15.8, 4)
-         AS coleman_liau,
-       round(CAST(w AS DOUBLE) / s + 100.0 * lw / CAST(w AS DOUBLE),
-             4) AS lix
-FROM g ORDER BY source
-"""

@@ -109,60 +109,6 @@ def q_cox_one_step(spark, sf_dir):
     )
 
 
-SQL_COX_ONE_STEP = """
-WITH rk AS (
-  SELECT o_custkey, CAST(o_orderdate AS DATE) AS d, o_orderkey,
-         row_number() OVER (PARTITION BY o_custkey
-                            ORDER BY CAST(o_orderdate AS DATE),
-                                     o_orderkey) AS rk
-  FROM orders
-), per AS (
-  SELECT o_custkey,
-         min(CASE WHEN rk = 1 THEN d END) AS first_d,
-         min(CASE WHEN rk = 2 THEN d END) AS second_d
-  FROM rk WHERE rk <= 2 GROUP BY o_custkey
-), mx AS (SELECT max(CAST(o_orderdate AS DATE)) AS max_d FROM orders),
-dur AS (
-  SELECT CAST(CASE WHEN second_d IS NOT NULL
-                   THEN datediff('day', first_d, second_d)
-                   ELSE datediff('day', first_d, max_d) END AS BIGINT)
-           AS t,
-         CAST(CASE WHEN second_d IS NOT NULL THEN 1 ELSE 0 END
-              AS BIGINT) AS ev,
-         CAST(o_custkey % 2 AS BIGINT) AS x
-  FROM per CROSS JOIN mx
-), g AS (
-  SELECT t, CAST(count(*) AS BIGINT) AS n_t,
-         CAST(sum(x) AS BIGINT) AS x_t,
-         CAST(sum(ev) AS BIGINT) AS d_t,
-         CAST(sum(ev * x) AS BIGINT) AS dx_t
-  FROM dur GROUP BY t
-), r AS (
-  SELECT t, d_t, dx_t,
-         CAST(sum(n_t) OVER (ORDER BY t DESC ROWS UNBOUNDED PRECEDING)
-              AS BIGINT) AS s0,
-         CAST(sum(x_t) OVER (ORDER BY t DESC ROWS UNBOUNDED PRECEDING)
-              AS BIGINT) AS s1
-  FROM g
-), f AS (SELECT * FROM r WHERE d_t > 0),
-agg AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_times,
-         CAST(sum(d_t) AS BIGINT) AS n_events,
-         CAST(sum(CAST(round(1e9 * (dx_t - d_t * (CAST(s1 AS DOUBLE)
-                                                  / s0))) AS BIGINT))
-              AS BIGINT) AS u_e9,
-         CAST(sum(CAST(round(1e9 * d_t * (CAST(s1 AS DOUBLE) / s0)
-                             * (1 - CAST(s1 AS DOUBLE) / s0))
-                       AS BIGINT)) AS BIGINT) AS i_e9
-  FROM f
-)
-SELECT n_times, n_events, u_e9, i_e9,
-       round(CAST(u_e9 AS DOUBLE) / i_e9, 6) AS beta_one_step,
-       round(exp(CAST(u_e9 AS DOUBLE) / i_e9), 6) AS hazard_ratio
-FROM agg
-"""
-
-
 def q_sorted_neighborhood(spark, sf_dir):
     """SORTED-NEIGHBORHOOD blocking eval: sort the planted corpus by
     the 20-char text prefix, pair each record with its next 3
@@ -224,49 +170,6 @@ def q_sorted_neighborhood(spark, sf_dir):
     )
 
 
-SQL_SORTED_NEIGHBORHOOD = f"""
-WITH aug AS (
-  SELECT doc_id, substring(text, 1, {_SNM_KEY}) AS key FROM documents
-  UNION ALL
-  SELECT doc_id + {_ND_OFF}, substring(text, 1, {_SNM_KEY})
-  FROM documents WHERE doc_id % {_ND_MOD} = 0
-  UNION ALL
-  SELECT doc_id + {_ND_OFF},
-         substring(text || ' zz7', 1, {_SNM_KEY})
-  FROM documents WHERE doc_id % {_ND_MOD} = 1
-), leads AS (
-  SELECT doc_id,
-         {", ".join(
-             f"lead(doc_id, {k}) OVER (ORDER BY key, doc_id) AS n{k}"
-             for k in range(1, _SNM_W + 1)
-         )}
-  FROM aug
-), cands AS (
-  SELECT DISTINCT doc_a, doc_b FROM (
-    {" UNION ALL ".join(
-        f"SELECT least(doc_id, n{k}) AS doc_a,"
-        f" greatest(doc_id, n{k}) AS doc_b"
-        f" FROM leads WHERE n{k} IS NOT NULL"
-        for k in range(1, _SNM_W + 1)
-    )}
-  )
-), truth AS (
-  SELECT doc_id AS doc_a, doc_id + {_ND_OFF} AS doc_b
-  FROM documents WHERE doc_id % {_ND_MOD} IN (0, 1)
-), m AS (
-  SELECT (SELECT CAST(count(*) AS BIGINT) FROM truth) AS n_truth,
-         (SELECT CAST(count(*) AS BIGINT) FROM cands) AS n_cand,
-         (SELECT CAST(count(*) AS BIGINT)
-          FROM cands c JOIN truth t
-            ON c.doc_a = t.doc_a AND c.doc_b = t.doc_b) AS n_hit
-)
-SELECT n_truth, n_cand, n_hit,
-       round(CAST(n_hit AS DOUBLE) / n_cand, 6) AS precision,
-       round(CAST(n_hit AS DOUBLE) / n_truth, 6) AS recall
-FROM m
-"""
-
-
 def q_ks_classifier(spark, sf_dir):
     """CLASSIFIER KS: max |F_pos - F_neg| over the value-cents score
     (purchase = positive, click = negative), exact BIGINT numerator
@@ -308,34 +211,3 @@ def q_ks_classifier(spark, sf_dir):
             F.col("num") / (F.col("tp") * F.col("tn")).cast("double"), 6
         ).alias("ks"),
     )
-
-
-SQL_KS_CLASSIFIER = """
-WITH e AS (
-  SELECT CAST(round(value * 100) AS BIGINT) AS c,
-         CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-              AS BIGINT) AS p_at,
-         CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
-              AS BIGINT) AS n_at
-  FROM events WHERE event_type IN ('purchase', 'click')
-  GROUP BY 1
-), cum AS (
-  SELECT c,
-         CAST(sum(p_at) OVER (ORDER BY c ROWS UNBOUNDED PRECEDING)
-              AS BIGINT) AS cp,
-         CAST(sum(n_at) OVER (ORDER BY c ROWS UNBOUNDED PRECEDING)
-              AS BIGINT) AS cn,
-         CAST(sum(p_at) OVER () AS BIGINT) AS tp,
-         CAST(sum(n_at) OVER () AS BIGINT) AS tn
-  FROM e
-), r AS (
-  SELECT c, tp, tn,
-         CAST(abs(cp * tn - cn * tp) AS BIGINT) AS num,
-         row_number() OVER (ORDER BY abs(cp * tn - cn * tp) DESC, c ASC)
-           AS rn
-  FROM cum
-)
-SELECT tp AS n_pos, tn AS n_neg, c AS at_cents,
-       round(CAST(num AS DOUBLE) / (tp * tn), 6) AS ks
-FROM r WHERE rn = 1
-"""

@@ -103,36 +103,6 @@ def q_redirect_chains(spark, sf_dir):
     )
 
 
-def _sql_redirect_chains() -> str:
-    parts = [
-        "cnt AS (SELECT count(*) AS cnt FROM documents)",
-        "r AS (SELECT doc_id AS src, (doc_id // 5 * 3 + 1) % cnt AS dst "
-        "FROM documents CROSS JOIN cnt WHERE doc_id % 5 = 0)",
-        "s0 AS (SELECT doc_id, doc_id AS final, 0 AS hops FROM documents)",
-    ]
-    prev = "s0"
-    for i in range(1, _REDIR_HOPS + 1):
-        parts.append(
-            f"s{i} AS (SELECT s.doc_id, "
-            f"coalesce(r.dst, s.final) AS final, "
-            f"s.hops + CASE WHEN r.src IS NULL THEN 0 ELSE 1 END AS hops "
-            f"FROM {prev} s LEFT JOIN r ON s.final = r.src)"
-        )
-        prev = f"s{i}"
-    return (
-        "WITH "
-        + ",\n".join(parts)
-        + f"""
-SELECT doc_id, CAST(final AS BIGINT) AS final_id,
-       CAST(hops AS INTEGER) AS n_hops, (final % 5) <> 0 AS resolved
-FROM {prev}
-"""
-    )
-
-
-SQL_REDIRECT_CHAINS = _sql_redirect_chains()
-
-
 def q_modularity_q(spark, sf_dir):
     """Directed Newman modularity of the lang labeling over the shared
     2-out-regular doc multigraph: per community c,
@@ -189,39 +159,6 @@ def q_modularity_q(spark, sf_dir):
     )
 
 
-SQL_MODULARITY_Q = """
-WITH edges AS (
-  SELECT doc_id AS src, (doc_id * 7 + 3) % cnt AS dst
-  FROM documents CROSS JOIN (SELECT count(*) AS cnt FROM documents)
-  UNION ALL
-  SELECT doc_id, (doc_id * 13 + 5) % cnt
-  FROM documents CROSS JOIN (SELECT count(*) AS cnt FROM documents)
-), lab AS (
-  SELECT e.src, e.dst, ds.lang AS src_lang, dd.lang AS dst_lang
-  FROM edges e
-  JOIN documents ds ON e.src = ds.doc_id
-  JOIN documents dd ON e.dst = dd.doc_id
-), m AS (SELECT CAST(count(*) AS DOUBLE) AS m FROM lab),
-oc AS (
-  SELECT src_lang AS lang, CAST(count(*) AS BIGINT) AS dout,
-         CAST(sum(CASE WHEN src_lang = dst_lang THEN 1 ELSE 0 END)
-              AS BIGINT) AS n_within
-  FROM lab GROUP BY src_lang
-), ic AS (
-  SELECT dst_lang AS lang, CAST(count(*) AS BIGINT) AS din
-  FROM lab GROUP BY dst_lang
-)
-SELECT coalesce(oc.lang, ic.lang) AS lang,
-       coalesce(n_within, 0) AS n_within,
-       coalesce(dout, 0) AS dout,
-       coalesce(din, 0) AS din,
-       round(coalesce(n_within, 0) / m.m
-             - (coalesce(dout, 0) * coalesce(din, 0)) / (m.m * m.m),
-             6) AS q_contrib
-FROM oc FULL OUTER JOIN ic ON oc.lang = ic.lang CROSS JOIN m
-"""
-
-
 def q_code_detect(spark, sf_dir):
     """Code-like-text routing filter: per doc, JVM regexp_count of
     code-symbol chars and code keywords; code_like via the all-integer
@@ -264,26 +201,3 @@ def q_code_detect(spark, sf_dir):
             "kw_total",
         )
     )
-
-
-SQL_CODE_DETECT = f"""
-WITH scored AS (
-  SELECT source, n_chars,
-         CAST(len(regexp_extract_all(text, '{_SYM_RE}')) AS BIGINT) AS sym,
-         CAST(len(regexp_extract_all(text, '{_KW_RE}')) AS BIGINT) AS kw
-  FROM documents
-), flagged AS (
-  SELECT *, (sym * 1000 >= n_chars * 40 OR kw >= 3) AS code_like
-  FROM scored
-)
-SELECT source,
-       CAST(count(*) AS BIGINT) AS n_docs,
-       CAST(sum(CASE WHEN code_like THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_code_like,
-       round(sum(CASE WHEN code_like THEN 1 ELSE 0 END)
-             / CAST(count(*) AS DOUBLE), 4) AS code_share,
-       CAST(sum(sym) * 1000 // sum(n_chars) AS BIGINT) AS sym_per_kchar,
-       CAST(sum(kw) AS BIGINT) AS kw_total
-FROM flagged
-GROUP BY source
-"""

@@ -58,22 +58,6 @@ def q_recrawl_priority(spark, sf_dir):
     )
 
 
-SQL_RECRAWL_PRIORITY = """
-WITH per AS (
-  SELECT user_id, CAST(count(*) AS BIGINT) AS n_fetches,
-         CAST(count(DISTINCT value) AS BIGINT) AS n_values,
-         max(epoch_us(ts)) AS last_us
-  FROM events GROUP BY user_id
-), wm AS (SELECT max(epoch_us(ts)) AS wm_us FROM events)
-SELECT user_id, n_fetches, n_values,
-       round(n_values / CAST(n_fetches AS DOUBLE), 6) AS change_rate,
-       round((wm_us - last_us) / 3600000000.0, 4) AS staleness_h,
-       round((n_values / CAST(n_fetches AS DOUBLE))
-             * ln(1 + (wm_us - last_us) / 3600000000.0), 4) AS priority
-FROM per, wm
-"""
-
-
 def q_salt_plan(spark, sf_dir):
     """Skew-salting plan: per-key salt factor ceil(n/target) capped at
     8, emitted only for keys that actually need salting (salt_k > 1) —
@@ -91,20 +75,6 @@ def q_salt_plan(spark, sf_dir):
     return per.select(
         "user_id", "n_rows", salt.alias("salt_k")
     ).where(F.col("salt_k") > 1)
-
-
-SQL_SALT_PLAN = f"""
-WITH per AS (
-  SELECT user_id, CAST(count(*) AS BIGINT) AS n_rows
-  FROM events GROUP BY user_id
-)
-SELECT user_id, n_rows,
-       least(CAST(ceil(n_rows / {float(_SALT_TARGET)}) AS BIGINT),
-             {_SALT_CAP}) AS salt_k
-FROM per
-WHERE least(CAST(ceil(n_rows / {float(_SALT_TARGET)}) AS BIGINT),
-            {_SALT_CAP}) > 1
-"""
 
 
 def q_join_cardinality_est(spark, sf_dir):
@@ -135,22 +105,6 @@ def q_join_cardinality_est(spark, sf_dir):
         .cast("bigint")
         .alias("est_join_rows"),
     )
-
-
-SQL_JOIN_CARDINALITY_EST = """
-WITH clicks AS (
-  SELECT user_id, count(*) AS c_click FROM events
-  WHERE event_type = 'click' GROUP BY user_id
-), buys AS (
-  SELECT user_id, count(*) AS c_buy FROM events
-  WHERE event_type = 'purchase' GROUP BY user_id
-)
-SELECT CAST(count(*) AS BIGINT) AS n_matched_keys,
-       CAST(sum(c_click) AS BIGINT) AS left_rows_matched,
-       CAST(sum(c_buy) AS BIGINT) AS right_rows_matched,
-       CAST(sum(c_click * c_buy) AS BIGINT) AS est_join_rows
-FROM clicks JOIN buys USING (user_id)
-"""
 
 
 def q_freshness_sla(spark, sf_dir):
@@ -184,18 +138,3 @@ def q_freshness_sla(spark, sf_dir):
             ).alias("stale_share"),
         )
     )
-
-
-SQL_FRESHNESS_SLA = f"""
-WITH last AS (
-  SELECT event_type, user_id, max(epoch_us(ts)) AS last_us
-  FROM events GROUP BY event_type, user_id
-), wm AS (SELECT max(epoch_us(ts)) AS wm_us FROM events)
-SELECT event_type, CAST(count(*) AS BIGINT) AS n_entities,
-       CAST(sum(CASE WHEN wm_us - last_us > {_SLA_HOURS * 3600 * 10**6}
-                     THEN 1 ELSE 0 END) AS BIGINT) AS n_stale,
-       round(sum(CASE WHEN wm_us - last_us > {_SLA_HOURS * 3600 * 10**6}
-                      THEN 1 ELSE 0 END)
-             / CAST(count(*) AS DOUBLE), 4) AS stale_share
-FROM last, wm GROUP BY event_type
-"""

@@ -144,48 +144,6 @@ def q_semdedup(spark, sf_dir):
     )
 
 
-SQL_SEMDEDUP = f"""
-WITH base AS (
-  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v,
-         sqrt(list_sum(list_transform(embedding,
-              x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS nm
-  FROM embeddings
-), cents AS (
-  SELECT vec_id AS cent_id, v AS cv, nm AS cn FROM base
-  WHERE vec_id < {_SEM_K}
-), scored AS (
-  SELECT b.vec_id, c.cent_id,
-         round(list_sum(list_transform(list_zip(b.v, c.cv),
-               t -> t[1] * t[2])) / (b.nm * c.cn), 6) AS cos
-  FROM base b, cents c
-), assign AS (
-  SELECT vec_id, cent_id AS cluster FROM (
-    SELECT vec_id, cent_id,
-           row_number() OVER (PARTITION BY vec_id
-                              ORDER BY cos DESC, cent_id) AS rn
-    FROM scored) WHERE rn = 1
-), av AS (
-  SELECT a.vec_id, a.cluster, b.v, b.nm
-  FROM assign a JOIN base b USING (vec_id)
-), best_lower AS (
-  SELECT x.vec_id,
-         max(round(list_sum(list_transform(list_zip(x.v, y.v),
-             t -> t[1] * t[2])) / (x.nm * y.nm), 6)) AS m
-  FROM av x JOIN av y
-    ON y.cluster = x.cluster AND y.vec_id < x.vec_id
-  GROUP BY x.vec_id
-), flags AS (
-  SELECT a.cluster,
-         CASE WHEN p.m >= {_SEM_TAU} THEN 1 ELSE 0 END AS dropped
-  FROM av a LEFT JOIN best_lower p USING (vec_id)
-)
-SELECT cluster, CAST(count(*) AS BIGINT) AS n_vecs,
-       CAST(sum(dropped) AS BIGINT) AS n_dropped,
-       round(sum(dropped) / CAST(count(*) AS DOUBLE), 4) AS drop_rate
-FROM flags GROUP BY cluster
-"""
-
-
 # --------------------------------------------------------------------------
 # rrf_fusion
 # --------------------------------------------------------------------------
@@ -227,27 +185,6 @@ def q_rrf_fusion(spark, sf_dir):
         .where(F.col("fused_rank") <= _RRF_TOPK)
         .select("source", "doc_id", "r1", "r2", "rrf", "fused_rank")
     )
-
-
-SQL_RRF_FUSION = f"""
-WITH ranked AS (
-  SELECT source, doc_id,
-         row_number() OVER (PARTITION BY source
-                            ORDER BY n_chars DESC, doc_id) AS r1,
-         row_number() OVER (PARTITION BY source
-                            ORDER BY md5(CAST(doc_id AS VARCHAR)),
-                                     doc_id) AS r2
-  FROM documents
-), fused AS (
-  SELECT source, doc_id, r1, r2,
-         round(1.0 / ({_RRF_C} + r1) + 1.0 / ({_RRF_C} + r2), 6) AS rrf
-  FROM ranked
-)
-SELECT source, doc_id, r1, r2, rrf, fused_rank FROM (
-  SELECT *, row_number() OVER (PARTITION BY source
-                               ORDER BY rrf DESC, doc_id) AS fused_rank
-  FROM fused) WHERE fused_rank <= {_RRF_TOPK}
-"""
 
 
 # --------------------------------------------------------------------------
@@ -312,33 +249,6 @@ def q_conformal_qhat(spark, sf_dir):
     )
 
 
-SQL_CONFORMAL_QHAT = f"""
-WITH scores AS (
-  SELECT lang, doc_id,
-         abs(CAST('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 4)
-                  AS BIGINT) / 65536.0 - 0.5) AS s
-  FROM documents
-), ranked AS (
-  SELECT lang, s,
-         row_number() OVER (PARTITION BY lang ORDER BY s, doc_id) AS rn,
-         count(*) OVER (PARTITION BY lang) AS n
-  FROM scores
-), kd AS (
-  SELECT *, least(CAST(ceil({1.0 - _CONF_ALPHA} * (n + 1)) AS BIGINT),
-                  CAST(n AS BIGINT)) AS k
-  FROM ranked
-), qrow AS (
-  SELECT lang, CAST(n AS BIGINT) AS n, k, s AS qhat
-  FROM kd WHERE rn = k
-)
-SELECT q.lang, q.n, q.k, round(q.qhat, 6) AS qhat,
-       round(sum(CASE WHEN r.s <= q.qhat THEN 1 ELSE 0 END)
-             / CAST(q.n AS DOUBLE), 4) AS coverage
-FROM ranked r JOIN qrow q ON r.lang = q.lang
-GROUP BY q.lang, q.n, q.k, q.qhat
-"""
-
-
 # --------------------------------------------------------------------------
 # kcenter_coreset
 # --------------------------------------------------------------------------
@@ -401,41 +311,3 @@ def q_kcenter_coreset(spark, sf_dir):
     return spark.createDataFrame(
         rows, schema="round int, center_id bigint, radius double"
     )
-
-
-def _sql_kcenter() -> str:
-    """Unrolled k-round greedy chain (k is a compile-time constant, so
-    the oracle is a plain non-recursive CTE pipeline)."""
-    dist = (
-        "round(list_sum(list_transform(list_zip(b.v, {c}.v), "
-        "t -> (t[1] - t[2]) * (t[1] - t[2]))), 6)"
-    )
-    parts = [
-        "WITH base AS (SELECT vec_id, "
-        "list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v "
-        "FROM embeddings)",
-        "c1 AS (SELECT vec_id, v, 0.0 AS radius FROM base "
-        "ORDER BY vec_id LIMIT 1)",
-        f"d1 AS (SELECT b.vec_id, b.v, {dist.format(c='c')} AS md "
-        "FROM base b, c1 c)",
-    ]
-    for i in range(2, _KCENTER_K + 1):
-        parts.append(
-            f"c{i} AS (SELECT vec_id, v, md AS radius FROM d{i-1} "
-            f"ORDER BY md DESC, vec_id LIMIT 1)"
-        )
-        if i < _KCENTER_K:
-            parts.append(
-                f"d{i} AS (SELECT b.vec_id, b.v, "
-                f"least(b.md, {dist.format(c='c')}) AS md "
-                f"FROM d{i-1} b, c{i} c)"
-            )
-    sel = " UNION ALL ".join(
-        f"SELECT {i} AS round, CAST(vec_id AS BIGINT) AS center_id, "
-        f"radius FROM c{i}"
-        for i in range(1, _KCENTER_K + 1)
-    )
-    return ",\n".join(parts) + "\n" + sel
-
-
-SQL_KCENTER_CORESET = _sql_kcenter()

@@ -61,26 +61,6 @@ def q_tokenizer_fertility(spark, sf_dir):
     ).orderBy("lang")
 
 
-SQL_TOKENIZER_FERTILITY = f"""
-WITH g AS (
-  SELECT lang,
-         CAST(count(*) AS BIGINT) AS n_docs,
-         CAST(sum(len(regexp_split_to_array(trim(text), '\\s+')))
-              AS BIGINT) AS n_words,
-         CAST(sum(len(regexp_extract_all(text, '{_BPE_RE}')))
-              AS BIGINT) AS n_subwords,
-         CAST(sum(length(regexp_replace(text, '\\s+', '', 'g')))
-              AS BIGINT) AS n_chars
-  FROM documents GROUP BY 1
-)
-SELECT lang, n_docs, n_words, n_subwords,
-       round(n_subwords / CAST(n_words AS DOUBLE), 6) AS fertility,
-       round(n_chars / CAST(n_subwords AS DOUBLE), 6)
-         AS chars_per_subword
-FROM g ORDER BY lang
-"""
-
-
 def q_length_ccdf(spark, sf_dir):
     """LENGTH CCDF per source at the fixed char-threshold grid."""
     d = _t(spark, sf_dir, "documents")
@@ -108,21 +88,6 @@ def q_length_ccdf(spark, sf_dir):
         )
         .orderBy("source", "l")
     )
-
-
-SQL_LENGTH_CCDF = f"""
-WITH grid(l) AS (
-  VALUES {", ".join(f"({x})" for x in _CCDF_GRID)}
-)
-SELECT source, CAST(l AS BIGINT) AS l,
-       CAST(count(*) AS BIGINT) AS n_docs,
-       CAST(sum(CASE WHEN n_chars > l THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_longer,
-       round(sum(CASE WHEN n_chars > l THEN 1 ELSE 0 END)
-             / CAST(count(*) AS DOUBLE), 6) AS ccdf
-FROM documents CROSS JOIN grid
-GROUP BY 1, 2 ORDER BY source, l
-"""
 
 
 def q_langid_by_source(spark, sf_dir):
@@ -163,37 +128,3 @@ def q_langid_by_source(spark, sf_dir):
         )
         .orderBy("source", "pred_lang")
     )
-
-
-def _markers_sql(markers):
-    lits = ", ".join(f"'{m}'" for m in markers)
-    return (
-        "len(list_filter(regexp_split_to_array(trim(text), '\\s+'), "
-        f"t -> list_contains([{lits}], t)))"
-    )
-
-
-SQL_LANGID_BY_SOURCE = f"""
-WITH scored AS (
-  SELECT source,
-         {_markers_sql(_LANG_MARKERS["en-like"])} AS s_en,
-         {_markers_sql(_LANG_MARKERS["sql-like"])} AS s_sql,
-         {_markers_sql(_LANG_MARKERS["data-like"])} AS s_data
-  FROM documents
-), pred AS (
-  SELECT source,
-         CASE WHEN s_en >= s_sql AND s_en >= s_data THEN 'en-like'
-              WHEN s_sql >= s_data THEN 'sql-like'
-              ELSE 'data-like' END AS pred_lang
-  FROM scored
-), g AS (
-  SELECT source, pred_lang, CAST(count(*) AS BIGINT) AS n
-  FROM pred GROUP BY 1, 2
-), tot AS (
-  SELECT source, CAST(sum(n) AS BIGINT) AS ns FROM g GROUP BY 1
-)
-SELECT g.source, g.pred_lang, g.n,
-       round(g.n / CAST(tot.ns AS DOUBLE), 6) AS share
-FROM g JOIN tot USING (source)
-ORDER BY source, pred_lang
-"""

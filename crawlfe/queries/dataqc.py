@@ -98,22 +98,6 @@ def q_fk_orphans(spark, sf_dir):
     return out.orderBy("fk")
 
 
-SQL_FK_ORPHANS = "\nUNION ALL\n".join(
-    f"""
-SELECT '{name}' AS fk,
-       CAST((SELECT count(*) FROM {child}) AS BIGINT) AS n_rows,
-       CAST(count(*) AS BIGINT) AS n_orphans,
-       round(count(*) / CAST((SELECT count(*) FROM {child}) AS DOUBLE),
-             6) AS orphan_rate
-FROM {child} c
-WHERE NOT EXISTS (
-  SELECT 1 FROM {parent} p
-  WHERE CAST(p.{pk} AS BIGINT) = CAST(c.{ck} AS BIGINT))
-"""
-    for name, child, ck, parent, pk in _FKS
-) + "\nORDER BY fk"
-
-
 _FDS = [
     ("documents.source->lang", "documents", "source", "lang"),
     ("events.user_id->event_type", "events", "user_id", "event_type"),
@@ -159,27 +143,6 @@ def q_fd_violations(spark, sf_dir):
     return out.orderBy("fd")
 
 
-SQL_FD_VIOLATIONS = "\nUNION ALL\n".join(
-    f"""
-SELECT '{name}' AS fd,
-       CAST(count(*) AS BIGINT) AS n_groups,
-       CAST(sum(tot) AS BIGINT) AS n_rows,
-       CAST(sum(maxc) AS BIGINT) AS n_conforming,
-       round(1 - sum(maxc) / CAST(sum(tot) AS DOUBLE), 6)
-         AS violation_rate
-FROM (
-  SELECT _x, CAST(max(c) AS BIGINT) AS maxc,
-         CAST(sum(c) AS BIGINT) AS tot
-  FROM (
-    SELECT {x} AS _x, {y} AS _y, CAST(count(*) AS BIGINT) AS c
-    FROM {table} GROUP BY 1, 2
-  ) GROUP BY 1
-)
-"""
-    for name, table, x, y in _FDS
-) + "\nORDER BY fd"
-
-
 _KEYS = [
     ("documents.doc_id", "documents", ["doc_id"]),
     ("events.user_ts", "events", ["user_id", "ts"]),
@@ -215,19 +178,3 @@ def q_dup_key_audit(spark, sf_dir):
     for o in outs[1:]:
         out = out.unionByName(o)
     return out.orderBy("key_name")
-
-
-SQL_DUP_KEY_AUDIT = "\nUNION ALL\n".join(
-    f"""
-SELECT '{name}' AS key_name,
-       CAST(sum(c) AS BIGINT) AS n_rows,
-       CAST(count(*) AS BIGINT) AS n_distinct,
-       CAST(sum(c) - count(*) AS BIGINT) AS n_dup_rows,
-       CAST(max(c) AS BIGINT) AS max_multiplicity
-FROM (
-  SELECT {", ".join(cols)}, CAST(count(*) AS BIGINT) AS c
-  FROM {table} GROUP BY {", ".join(str(i + 1) for i in range(len(cols)))}
-)
-"""
-    for name, table, cols in _KEYS
-) + "\nORDER BY key_name"

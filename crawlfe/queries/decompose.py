@@ -67,31 +67,6 @@ def q_abc_analysis(spark, sf_dir):
     )
 
 
-SQL_ABC_ANALYSIS = f"""
-WITH rev AS (
-  SELECT o_custkey,
-         CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT))
-              AS BIGINT) AS cents
-  FROM orders GROUP BY 1
-), tot AS (
-  SELECT CAST(sum(cents) AS BIGINT) AS tot FROM rev
-), r AS (
-  SELECT o_custkey, cents, tot,
-         sum(cents) OVER (ORDER BY cents DESC, o_custkey ASC
-             ROWS UNBOUNDED PRECEDING) / CAST(tot AS DOUBLE)
-           AS cumshare
-  FROM rev CROSS JOIN tot
-)
-SELECT CASE WHEN cumshare <= {_ABC_A} THEN 'A'
-            WHEN cumshare <= {_ABC_B} THEN 'B'
-            ELSE 'C' END AS abc,
-       CAST(count(*) AS BIGINT) AS n_customers,
-       round(sum(cents) / CAST(max(tot) AS DOUBLE), 6)
-         AS revenue_share
-FROM r GROUP BY 1 ORDER BY abc
-"""
-
-
 def _daily(spark, sf_dir):
     e = _t(spark, sf_dir, "events").select(
         F.col("ts").cast("timestamp").alias("tts"),
@@ -103,14 +78,6 @@ def _daily(spark, sf_dir):
     ).agg(F.sum("cents").cast("bigint").alias("x"))
 
 
-_SQL_DAILY = """
-daily AS (
-  SELECT CAST(dayofmonth(ts) AS BIGINT) AS day,
-         CAST(dayofweek(ts) + 1 AS BIGINT) AS dow,
-         CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS x
-  FROM events GROUP BY 1, 2
-)
-"""
 # NOTE: Spark dayofweek is 1=Sunday..7; DuckDB dayofweek is
 # 0=Sunday..6, hence the +1 in the oracle.
 
@@ -155,35 +122,6 @@ def _decomp(spark, sf_dir):
     )
 
 
-_SQL_DECOMP = f"""
-{_SQL_DAILY},
-t AS (
-  SELECT day, dow, x,
-         CASE WHEN count(*) OVER (ORDER BY day
-                   ROWS BETWEEN {_STL_W // 2} PRECEDING
-                   AND {_STL_W // 2} FOLLOWING) = {_STL_W}
-              THEN avg(CAST(x AS DOUBLE)) OVER (ORDER BY day
-                   ROWS BETWEEN {_STL_W // 2} PRECEDING
-                   AND {_STL_W // 2} FOLLOWING)
-         END AS trend
-  FROM daily
-), det AS (
-  SELECT day, dow, x, trend, x - trend AS det FROM t
-), sdow AS (
-  SELECT dow, avg(det) AS sraw FROM det
-  WHERE det IS NOT NULL GROUP BY 1
-), smean AS (
-  SELECT avg(sraw) AS smean FROM sdow
-), sdow2 AS (
-  SELECT dow, sraw - smean AS seasonal FROM sdow CROSS JOIN smean
-), decomp AS (
-  SELECT det.day, det.dow, det.x, det.trend, sdow2.seasonal,
-         det.x - det.trend - sdow2.seasonal AS resid
-  FROM det JOIN sdow2 USING (dow)
-)
-"""
-
-
 def q_stl_decompose(spark, sf_dir):
     """CLASSICAL ADDITIVE DECOMPOSITION per day: centered-MA trend,
     re-centered day-of-week seasonal, residual."""
@@ -199,14 +137,6 @@ def q_stl_decompose(spark, sf_dir):
         )
         .orderBy("day")
     )
-
-
-SQL_STL_DECOMPOSE = f"""
-WITH {_SQL_DECOMP}
-SELECT day, dow, x, round(trend, 4) AS trend,
-       round(seasonal, 4) AS seasonal, round(resid, 4) AS resid
-FROM decomp ORDER BY day
-"""
 
 
 def q_seasonal_strength(spark, sf_dir):
@@ -226,21 +156,3 @@ def q_seasonal_strength(spark, sf_dir):
         F.round(fs, 6).alias("f_seasonal"),
         F.round(ft, 6).alias("f_trend"),
     )
-
-
-SQL_SEASONAL_STRENGTH = f"""
-WITH {_SQL_DECOMP},
-interior AS (
-  SELECT * FROM decomp WHERE trend IS NOT NULL
-), m AS (
-  SELECT CAST(count(*) AS BIGINT) AS n,
-         var_pop(resid) AS vr,
-         var_pop(seasonal + resid) AS vsr,
-         var_pop(trend + resid) AS vtr
-  FROM interior
-)
-SELECT n,
-       round(greatest(0.0, 1 - vr / vsr), 6) AS f_seasonal,
-       round(greatest(0.0, 1 - vr / vtr), 6) AS f_trend
-FROM m
-"""

@@ -34,17 +34,6 @@ def _shares(spark, sf_dir):
     )
 
 
-_SQL_SHARES = """
-c AS (
-  SELECT source, CAST(count(*) AS BIGINT) AS c
-  FROM documents GROUP BY 1
-), shares AS (
-  SELECT source, c, n, c / n AS p
-  FROM c CROSS JOIN (SELECT CAST(sum(c) AS DOUBLE) AS n FROM c)
-)
-"""
-
-
 def q_simpson_diversity(spark, sf_dir):
     """SIMPSON family: D, 1/D, unbiased D, Berger-Parker."""
     s = _shares(spark, sf_dir)
@@ -67,23 +56,6 @@ def q_simpson_diversity(spark, sf_dir):
     )
 
 
-SQL_SIMPSON_DIVERSITY = f"""
-WITH {_SQL_SHARES},
-m AS (
-  SELECT max(n) AS n, sum(p * p) AS d,
-         sum(CAST(c AS DOUBLE) * (c - 1)) AS _cc,
-         max(p) AS bp, CAST(count(*) AS BIGINT) AS k
-  FROM shares
-)
-SELECT CAST(n AS BIGINT) AS n_docs, k,
-       round(d, 6) AS simpson_d,
-       round(1 / d, 4) AS inv_simpson,
-       round(_cc / (n * (n - 1)), 6) AS simpson_unbiased,
-       round(bp, 6) AS berger_parker
-FROM m
-"""
-
-
 def q_shannon_evenness(spark, sf_dir):
     """SHANNON H (nats/bits) and Pielou's J over sources."""
     s = _shares(spark, sf_dir)
@@ -103,19 +75,6 @@ def q_shannon_evenness(spark, sf_dir):
             F.col("k") > 1, F.round(F.col("h") / F.log("k"), 6)
         ).alias("pielou_j"),
     )
-
-
-SQL_SHANNON_EVENNESS = f"""
-WITH {_SQL_SHARES},
-m AS (
-  SELECT sum(-p * ln(p)) AS h, CAST(count(*) AS DOUBLE) AS k
-  FROM shares
-)
-SELECT CAST(k AS BIGINT) AS k, round(h, 6) AS shannon_nats,
-       round(h / ln(2.0), 6) AS shannon_bits,
-       CASE WHEN k > 1 THEN round(h / ln(k), 6) END AS pielou_j
-FROM m
-"""
 
 
 def q_renyi_spectrum(spark, sf_dir):
@@ -149,22 +108,3 @@ def q_renyi_spectrum(spark, sf_dir):
     for r in rows[1:]:
         out = out.unionByName(r)
     return out.orderBy("alpha")
-
-
-SQL_RENYI_SPECTRUM = f"""
-WITH {_SQL_SHARES},
-m AS (
-  SELECT CAST(count(*) AS DOUBLE) AS k,
-         sum(-p * ln(p)) AS h1,
-         sum(p * p) AS d2, max(p) AS bp
-  FROM shares
-)
-SELECT '0' AS alpha, round(k, 4) AS hill_number FROM m
-UNION ALL
-SELECT '1', round(exp(h1), 4) FROM m
-UNION ALL
-SELECT '2', round(1 / d2, 4) FROM m
-UNION ALL
-SELECT 'inf', round(1 / bp, 4) FROM m
-ORDER BY alpha
-"""

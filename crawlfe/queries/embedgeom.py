@@ -34,7 +34,6 @@ from ._shared import _t
 
 _ISO_DIRS = 8
 _JL_K = 8
-_EMB_D = 64
 
 
 def _cells(spark, sf_dir):
@@ -48,19 +47,6 @@ def _cells(spark, sf_dir):
             "q"
         ),
     )
-
-
-_SQL_CELLS = """
-cells AS (
-  SELECT vec_id, i - 1 AS dim,
-         CAST(round(CAST(embedding[i] AS DOUBLE) * 1e6) AS BIGINT) AS q
-  FROM (
-    SELECT vec_id, embedding,
-           unnest(generate_series(1, len(embedding))) AS i
-    FROM embeddings
-  )
-)
-"""
 
 
 def q_mean_pairwise_cosine(spark, sf_dir):
@@ -100,32 +86,6 @@ def q_mean_pairwise_cosine(spark, sf_dir):
         F.round("sum_sd2", 1).alias("sum_sd2"),
         F.round(mc, 6).alias("mean_cos"),
     )
-
-
-SQL_MEAN_PAIRWISE_COSINE = f"""
-WITH {_SQL_CELLS},
-norm AS (
-  SELECT vec_id, sqrt(CAST(sum(q * q) AS DOUBLE)) AS nrm
-  FROM cells GROUP BY vec_id
-), u AS (
-  SELECT cells.vec_id, dim,
-         CAST(round(1e6 * q / nrm) AS BIGINT) AS u_e6
-  FROM cells JOIN norm ON cells.vec_id = norm.vec_id
-), sd AS (
-  SELECT dim, CAST(sum(u_e6) AS BIGINT) AS s_d FROM u GROUP BY dim
-), tot AS (
-  SELECT sum(CAST(s_d AS DOUBLE) * CAST(s_d AS DOUBLE)) AS sum_sd2
-  FROM sd
-), slf AS (
-  SELECT CAST(sum(u_e6 * u_e6) AS BIGINT) AS sum_self,
-         CAST(count(DISTINCT vec_id) AS BIGINT) AS n
-  FROM u
-)
-SELECT n, sum_self, round(sum_sd2, 1) AS sum_sd2,
-       round((sum_sd2 - sum_self)
-             / CAST(n * (n - 1) AS DOUBLE) / 1e12, 6) AS mean_cos
-FROM slf CROSS JOIN tot
-"""
 
 
 def _sign_expr_spark(prefix, a, b):
@@ -181,31 +141,6 @@ def q_embedding_isotropy(spark, sf_dir):
         F.round("z_max", 4).alias("z_max"),
         F.round(F.col("z_min") / F.col("z_max"), 6).alias("isotropy"),
     )
-
-
-SQL_EMBEDDING_ISOTROPY = f"""
-WITH {_SQL_CELLS},
-cd AS (
-  SELECT vec_id, dim, q, k.range AS k
-  FROM cells CROSS JOIN range(1, {_ISO_DIRS + 1}) k
-), dot AS (
-  SELECT vec_id, k,
-         CAST(sum(q * ((CAST('0x' || substring(
-             md5('iso' || CAST(k AS VARCHAR) || ':'
-                 || CAST(dim AS VARCHAR)), 1, 1) AS BIGINT)
-             % 2) * 2 - 1)) AS BIGINT) AS d_e6
-  FROM cd GROUP BY vec_id, k
-), z AS (
-  SELECT k, sum(exp(d_e6 / (1e6 * 8.0))) AS z FROM dot GROUP BY k
-), agg AS (
-  SELECT min(z) AS z_min, max(z) AS z_max,
-         CAST(count(*) AS BIGINT) AS n_dirs
-  FROM z
-)
-SELECT n_dirs, round(z_min, 4) AS z_min, round(z_max, 4) AS z_max,
-       round(z_min / z_max, 6) AS isotropy
-FROM agg
-"""
 
 
 def q_jl_distortion(spark, sf_dir):
@@ -279,50 +214,3 @@ def q_jl_distortion(spark, sf_dir):
         F.round("rmean", 6).alias("mean_distortion"),
         F.round("rmax", 6).alias("max_distortion"),
     )
-
-
-SQL_JL_DISTORTION = f"""
-WITH {_SQL_CELLS},
-cj AS (
-  SELECT vec_id, dim, q, j.range AS j
-  FROM cells CROSS JOIN range(1, {_JL_K + 1}) j
-), y AS (
-  SELECT vec_id, j,
-         CAST(sum(q * ((CAST('0x' || substring(
-             md5('jl' || CAST(j AS VARCHAR) || ':'
-                 || CAST(dim AS VARCHAR)), 1, 1) AS BIGINT)
-             % 2) * 2 - 1)) AS BIGINT) AS y
-  FROM cj GROUP BY vec_id, j
-), dorig AS (
-  SELECT vec_id,
-         CAST(sum((q - q_next) * (q - q_next)) AS BIGINT) AS d2_orig
-  FROM (
-    SELECT vec_id, q,
-           lead(q) OVER (PARTITION BY dim ORDER BY vec_id) AS q_next
-    FROM cells
-  ) WHERE q_next IS NOT NULL
-  GROUP BY vec_id
-), dproj AS (
-  SELECT vec_id,
-         CAST(sum((y - y_next) * (y - y_next)) AS BIGINT) AS d2_proj
-  FROM (
-    SELECT vec_id, y,
-           lead(y) OVER (PARTITION BY j ORDER BY vec_id) AS y_next
-    FROM y
-  ) WHERE y_next IS NOT NULL
-  GROUP BY vec_id
-), pairs AS (
-  SELECT CAST(d2_proj AS DOUBLE) / {_JL_K} / CAST(d2_orig AS DOUBLE)
-           AS r
-  FROM dorig JOIN dproj USING (vec_id)
-), agg AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_pairs,
-         min(r) AS rmin, avg(r) AS rmean, max(r) AS rmax
-  FROM pairs
-)
-SELECT n_pairs,
-       round(rmin, 6) AS min_distortion,
-       round(rmean, 6) AS mean_distortion,
-       round(rmax, 6) AS max_distortion
-FROM agg
-"""

@@ -71,30 +71,6 @@ def q_count_encode(spark, sf_dir):
     )
 
 
-SQL_COUNT_ENCODE = f"""
-WITH g1 AS (
-  SELECT event_type AS level, CAST(count(*) AS BIGINT) AS cnt
-  FROM events GROUP BY 1
-), t1 AS (SELECT sum(cnt) AS n, CAST(count(*) AS BIGINT) AS k FROM g1),
-g2 AS (
-  SELECT CAST(dayofweek(ts) + 1 AS VARCHAR) AS level,
-         CAST(count(*) AS BIGINT) AS cnt
-  FROM events GROUP BY 1
-), t2 AS (SELECT sum(cnt) AS n, CAST(count(*) AS BIGINT) AS k FROM g2)
-SELECT 'event_type' AS feature, level, cnt,
-       round((cnt + {_CE_ALPHA})
-             / CAST(n + {_CE_ALPHA} * k AS DOUBLE), 6) AS freq_smooth,
-       round(ln(1 + cnt), 6) AS log1p_cnt
-FROM g1 CROSS JOIN t1
-UNION ALL
-SELECT 'dow', level, cnt,
-       round((cnt + {_CE_ALPHA})
-             / CAST(n + {_CE_ALPHA} * k AS DOUBLE), 6),
-       round(ln(1 + cnt), 6)
-FROM g2 CROSS JOIN t2
-"""
-
-
 def q_one_hot_topk(spark, sf_dir):
     """Top-3-plus-other one-hot expansion of event_type per user,
     long-form (user_id, feature, value).  The top-k levels come from
@@ -133,25 +109,6 @@ def q_one_hot_topk(spark, sf_dir):
         mapped.groupBy("user_id", "feature")
         .agg(F.count(F.lit(1)).cast("bigint").alias("value"))
     )
-
-
-SQL_ONE_HOT_TOPK = f"""
-WITH counts AS (
-  SELECT event_type, count(*) AS cnt FROM events GROUP BY 1
-), top AS (
-  SELECT event_type AS top_evt
-  FROM (SELECT event_type, row_number()
-               OVER (ORDER BY cnt DESC, event_type ASC) AS rk
-        FROM counts)
-  WHERE rk <= {_OH_TOPK}
-)
-SELECT user_id,
-       CASE WHEN t.top_evt IS NOT NULL THEN 'evt_' || e.event_type
-            ELSE 'evt_other' END AS feature,
-       CAST(count(*) AS BIGINT) AS value
-FROM events e LEFT JOIN top t ON e.event_type = t.top_evt
-GROUP BY 1, 2
-"""
 
 
 def q_macro_f1(spark, sf_dir):
@@ -276,79 +233,3 @@ def q_macro_f1(spark, sf_dir):
         F.round(F.avg("f1"), 6).alias("f1"),
     )
     return rows.unionAll(macro)
-
-
-SQL_MACRO_F1 = f"""
-WITH e AS (
-  SELECT event_type,
-         CAST(extract(day FROM ts) AS INTEGER) AS day,
-         least({_F1_MAX_BIN},
-               CAST(round(value * 100) AS BIGINT) // {_F1_BIN_CENTS})
-           AS bin
-  FROM events
-), train AS (SELECT * FROM e WHERE day <= {_F1_TRAIN_DAY_MAX}),
-test AS (SELECT * FROM e WHERE day > {_F1_TRAIN_DAY_MAX}),
-bin_pred AS (
-  SELECT bin, event_type AS pred
-  FROM (SELECT bin, event_type, row_number() OVER (
-          PARTITION BY bin ORDER BY count(*) DESC, event_type ASC) AS rk
-        FROM train GROUP BY bin, event_type)
-  WHERE rk = 1
-), global_pred AS (
-  SELECT event_type AS gpred
-  FROM (SELECT event_type, row_number() OVER (
-          ORDER BY count(*) DESC, event_type ASC) AS rk
-        FROM train GROUP BY event_type)
-  WHERE rk = 1
-), scored AS (
-  SELECT t.event_type AS true_cls,
-         coalesce(b.pred, g.gpred) AS pred_cls
-  FROM test t LEFT JOIN bin_pred b ON t.bin = b.bin
-  CROSS JOIN global_pred g
-), conf AS (
-  SELECT true_cls, pred_cls, CAST(count(*) AS BIGINT) AS n
-  FROM scored GROUP BY 1, 2
-), classes AS (
-  SELECT true_cls AS cls FROM conf
-  UNION SELECT pred_cls FROM conf
-), tp AS (
-  SELECT true_cls AS cls, n AS tp FROM conf WHERE true_cls = pred_cls
-), fp AS (
-  SELECT pred_cls AS cls, sum(n) AS fp FROM conf
-  WHERE true_cls <> pred_cls GROUP BY 1
-), fn AS (
-  SELECT true_cls AS cls, sum(n) AS fn FROM conf
-  WHERE true_cls <> pred_cls GROUP BY 1
-), per AS (
-  SELECT c.cls,
-         CAST(coalesce(tp.tp, 0) AS BIGINT) AS tp,
-         CAST(coalesce(fp.fp, 0) AS BIGINT) AS fp,
-         CAST(coalesce(fn.fn, 0) AS BIGINT) AS fn,
-         CASE WHEN coalesce(tp.tp, 0) + coalesce(fp.fp, 0) = 0 THEN 0.0
-              ELSE coalesce(tp.tp, 0)
-                   / CAST(coalesce(tp.tp, 0) + coalesce(fp.fp, 0)
-                          AS DOUBLE) END AS precision,
-         CASE WHEN coalesce(tp.tp, 0) + coalesce(fn.fn, 0) = 0 THEN 0.0
-              ELSE coalesce(tp.tp, 0)
-                   / CAST(coalesce(tp.tp, 0) + coalesce(fn.fn, 0)
-                          AS DOUBLE) END AS recall
-  FROM classes c
-  LEFT JOIN tp ON c.cls = tp.cls
-  LEFT JOIN fp ON c.cls = fp.cls
-  LEFT JOIN fn ON c.cls = fn.cls
-), perf AS (
-  SELECT *,
-         CASE WHEN precision + recall = 0 THEN 0.0
-              ELSE 2 * precision * recall / (precision + recall) END
-           AS f1
-  FROM per
-)
-SELECT cls, tp, fp, fn, round(precision, 6) AS precision,
-       round(recall, 6) AS recall, round(f1, 6) AS f1
-FROM perf
-UNION ALL
-SELECT '__MACRO__', CAST(sum(tp) AS BIGINT), CAST(sum(fp) AS BIGINT),
-       CAST(sum(fn) AS BIGINT), round(avg(precision), 6),
-       round(avg(recall), 6), round(avg(f1), 6)
-FROM perf
-"""

@@ -4,17 +4,10 @@ Split from the former crawlfe/queries.py monolith (r4); bodies unchanged.
 """
 from __future__ import annotations
 
-import pandas as pd  # noqa: F401
 from pyspark.sql import DataFrame, SparkSession, Window  # noqa: F401
 from pyspark.sql import functions as F  # noqa: F401
-from pyspark.sql import types as T  # noqa: F401
 
-from .. import clean  # noqa: F401
-from .. import windows as W  # noqa: F401
-from ..asof import asof_join  # noqa: F401
-from ..textfeat import featurize_batch  # noqa: F401
 from ._shared import SESSION_GAP_S, _t, _us  # noqa: F401
-
 
 
 # --------------------------------------------------------------------------
@@ -90,36 +83,6 @@ def q_roc_auc(spark, sf_dir):
             ).alias("auc"),
         )
     )
-
-
-SQL_ROC_AUC = """
-WITH pv AS (
-  SELECT CAST(day(ts) AS INTEGER) AS day, value AS v,
-         CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-              AS BIGINT) AS pos_at,
-         CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
-              AS BIGINT) AS neg_at
-  FROM events WHERE event_type IN ('purchase', 'click')
-  GROUP BY 1, 2
-), cum AS (
-  SELECT day, pos_at, neg_at,
-         CAST(sum(neg_at) OVER (PARTITION BY day ORDER BY v
-                                ROWS BETWEEN UNBOUNDED PRECEDING
-                                AND CURRENT ROW) - neg_at
-              AS BIGINT) AS neg_below
-  FROM pv
-), tot AS (
-  SELECT day, CAST(sum(pos_at) AS BIGINT) AS n_pos,
-         CAST(sum(neg_at) AS BIGINT) AS n_neg
-  FROM pv GROUP BY day
-)
-SELECT c.day, max(n_pos) AS n_pos, max(n_neg) AS n_neg,
-       round(CAST(sum(2 * neg_below * pos_at + neg_at * pos_at)
-                  AS DOUBLE)
-             / (2.0 * max(n_pos) * max(n_neg)), 6) AS auc
-FROM cum c JOIN tot t ON c.day = t.day
-GROUP BY c.day
-"""
 
 
 def q_psi_drift(spark, sf_dir):
@@ -232,16 +195,6 @@ def q_ess_weights(spark, sf_dir):
     )
 
 
-SQL_ESS_WEIGHTS = """
-SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-       round(sum(value), 4) AS sum_w,
-       round(sum(value) * sum(value) / sum(value * value), 4) AS ess,
-       round(sum(value) * sum(value) / sum(value * value)
-             / count(*), 6) AS ess_ratio
-FROM events GROUP BY event_type
-"""
-
-
 def q_equal_freq_bins(spark, sf_dir):
     """Deterministic equal-frequency decile binning of ``value`` per
     event_type — the feature-discretization operator (quantile
@@ -286,29 +239,6 @@ def q_equal_freq_bins(spark, sf_dir):
             F.round(F.max("v"), 4).alias("hi"),
         )
     )
-
-
-SQL_EQUAL_FREQ_BINS = """
-WITH pv AS (
-  SELECT event_type, value AS v, CAST(count(*) AS BIGINT) AS c
-  FROM events GROUP BY 1, 2
-), cum AS (
-  SELECT event_type, v, c,
-         CAST(sum(c) OVER (PARTITION BY event_type ORDER BY v
-                           ROWS BETWEEN UNBOUNDED PRECEDING
-                           AND CURRENT ROW) AS BIGINT) AS cumc
-  FROM pv
-), tot AS (
-  SELECT event_type, CAST(sum(c) AS BIGINT) AS tot
-  FROM pv GROUP BY 1
-)
-SELECT c.event_type,
-       CAST((10 * cumc + tot - 1) // tot AS INTEGER) AS bin,
-       CAST(sum(c.c) AS BIGINT) AS n,
-       round(min(v), 4) AS lo, round(max(v), 4) AS hi
-FROM cum c JOIN tot t ON c.event_type = t.event_type
-GROUP BY 1, 2
-"""
 
 
 # --------------------------------------------------------------------------
@@ -438,25 +368,6 @@ def q_pps_sample(spark, sf_dir):
     )
 
 
-SQL_PPS_SAMPLE = """
-WITH keyed AS (
-  SELECT event_type, event_id, round(value, 4) AS value,
-         ((CAST(CAST('0x' || substr(md5(CAST(event_id AS VARCHAR)), 1, 8)
-                AS UBIGINT) AS BIGINT) + 1) / 4294967296.0)
-           / value AS prio
-  FROM events WHERE value > 0
-), ranked AS (
-  SELECT event_type, event_id, value, prio,
-         row_number() OVER (PARTITION BY event_type
-                            ORDER BY prio, event_id) AS rank
-  FROM keyed
-)
-SELECT event_type, CAST(rank AS INTEGER) AS rank, event_id, value,
-       round(prio, 8) AS prio
-FROM ranked WHERE rank <= 5
-"""
-
-
 _PCA_ROUNDS = 3  # unnormalized power-iteration rounds
 
 
@@ -506,34 +417,6 @@ def q_embedding_pca1(spark, sf_dir):
     )
 
 
-SQL_EMBEDDING_PCA1 = """
-WITH dims AS (
-  SELECT vec_id, i.idx - 1 AS idx,
-         CAST(embedding[i.idx] AS DOUBLE) AS val
-  FROM embeddings, range(1, 65) i(idx)
-), v1 AS (
-  SELECT idx, sum(val) AS v FROM dims GROUP BY idx
-), s2 AS (
-  SELECT vec_id, sum(val * v) AS s
-  FROM dims JOIN v1 USING (idx) GROUP BY vec_id
-), v2 AS (
-  SELECT idx, sum(val * s) AS v
-  FROM dims JOIN s2 USING (vec_id) GROUP BY idx
-), s3 AS (
-  SELECT vec_id, sum(val * v) AS s
-  FROM dims JOIN v2 USING (idx) GROUP BY vec_id
-), v3 AS (
-  SELECT idx, sum(val * s) AS v
-  FROM dims JOIN s3 USING (vec_id) GROUP BY idx
-), piv AS (
-  SELECT v AS pv FROM v3 ORDER BY abs(v) DESC, idx ASC LIMIT 1
-)
-SELECT CAST(idx AS INTEGER) AS idx,
-       round(v / pv, 6) AS component
-FROM v3 CROSS JOIN piv
-"""
-
-
 def q_group_kfold(spark, sf_dir):
     """Group-k-fold assignment: every ``source`` lands wholly in one
     of 5 folds (``md5_16(source) mod 5``), so same-source documents
@@ -567,25 +450,6 @@ def q_group_kfold(spark, sf_dir):
             "share"
         ),
     )
-
-
-SQL_GROUP_KFOLD = """
-WITH assigned AS (
-  SELECT lang, source,
-         CAST(CAST(CAST('0x' || substr(md5(source), 1, 4) AS UBIGINT)
-              AS BIGINT) % 5 AS INTEGER) AS fold
-  FROM documents
-), per AS (
-  SELECT fold, lang, CAST(count(*) AS BIGINT) AS n_docs,
-         CAST(count(DISTINCT source) AS BIGINT) AS n_sources
-  FROM assigned GROUP BY 1, 2
-), tot AS (
-  SELECT CAST(sum(n_docs) AS BIGINT) AS n_all FROM per
-)
-SELECT fold, lang, n_docs, n_sources,
-       round(n_docs / CAST(n_all AS DOUBLE), 6) AS share
-FROM per CROSS JOIN tot
-"""
 
 
 # --------------------------------------------------------------------------
@@ -1225,35 +1089,6 @@ def q_sparse_topk(spark, sf_dir):
     )
 
 
-SQL_SPARSE_TOPK = """
-WITH pe AS (
-  SELECT vec_id, generate_subscripts(embedding, 1) - 1 AS d,
-         CAST(round(CAST(unnest(embedding) AS DOUBLE) * 1000) AS BIGINT) AS q
-  FROM embeddings
-), kept AS (
-  SELECT * FROM pe WHERE abs(q) >= 200
-), post AS (
-  SELECT vec_id, d, q FROM (
-    SELECT *, row_number() OVER (PARTITION BY d
-                                 ORDER BY abs(q) DESC, vec_id) AS r
-    FROM kept) t
-  WHERE r <= 128
-), pairs AS (
-  SELECT a.vec_id AS vec_id, b.vec_id AS nbr_id,
-         CAST(sum(a.q * b.q) AS BIGINT) AS dot_q,
-         CAST(count(*) AS BIGINT) AS n_dims
-  FROM post a JOIN post b ON a.d = b.d AND a.vec_id <> b.vec_id
-  GROUP BY 1, 2
-)
-SELECT vec_id, nbr_id, dot_q, n_dims, CAST(rk AS INTEGER) AS rk
-FROM (
-  SELECT *, row_number() OVER (PARTITION BY vec_id
-                               ORDER BY dot_q DESC, nbr_id) AS rk
-  FROM pairs WHERE dot_q > 0) t
-WHERE rk <= 3
-"""
-
-
 _SRP_BITS = 16  # signature width
 _SRP_Q = 1000000  # fixed-point grid (24+20 bits — exact in a double)
 
@@ -1330,36 +1165,6 @@ def q_srp_signature(spark, sf_dir):
         F.count(F.lit(1)).cast("bigint").alias("bucket_n")
     )
     return sigs.join(occ, "sig").select("vec_id", "sig", "n_bits", "bucket_n")
-
-
-SQL_SRP_SIGNATURE = """
-WITH pe AS (
-  SELECT vec_id, generate_subscripts(embedding, 1) - 1 AS d,
-         CAST(round(CAST(unnest(embedding) AS DOUBLE) * 1000000) AS BIGINT)
-           AS q
-  FROM embeddings
-), j AS (
-  SELECT vec_id, d, q, r.j
-  FROM pe CROSS JOIN (SELECT unnest(range(16)) AS j) r
-), proj AS (
-  SELECT vec_id, j,
-         CAST(sum(((CAST(CAST('0x' || substr(
-                 md5(CAST(d AS VARCHAR) || ':' || CAST(j AS VARCHAR)), 1, 4)
-               AS UBIGINT) AS BIGINT) % 2) * 2 - 1) * q) AS BIGINT) AS s
-  FROM j GROUP BY 1, 2
-), sigs AS (
-  SELECT vec_id,
-         CAST(sum(CASE WHEN s > 0
-                       THEN CAST(power(2, j) AS BIGINT) ELSE 0 END)
-              AS BIGINT) AS sig,
-         CAST(sum(CASE WHEN s > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_bits
-  FROM proj GROUP BY 1
-), occ AS (
-  SELECT sig, CAST(count(*) AS BIGINT) AS bucket_n FROM sigs GROUP BY 1
-)
-SELECT s.vec_id, s.sig, s.n_bits, o.bucket_n
-FROM sigs s JOIN occ o ON s.sig = o.sig
-"""
 
 
 _HLL_M = 16  # registers (bucket = low 4 hash bits)
@@ -1439,43 +1244,6 @@ def q_hll_distinct(spark, sf_dir):
     )
 
 
-SQL_HLL_DISTINCT = """
-WITH based AS (
-  SELECT event_type, user_id,
-         CAST(h % 16 AS INTEGER) AS bucket,
-         h >> 4 AS rest
-  FROM (
-    SELECT event_type, user_id,
-           CAST(CAST('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15)
-                AS UBIGINT) AS BIGINT) AS h
-    FROM events) t
-), ranked AS (
-  SELECT event_type, bucket,
-         CAST(CASE WHEN rest = 0 THEN 57
-                   ELSE bit_count((rest & -rest) - 1) + 1 END
-              AS INTEGER) AS rank
-  FROM based
-), regs AS (
-  SELECT event_type, bucket, max(rank) AS r
-  FROM ranked GROUP BY 1, 2
-), den AS (
-  SELECT event_type,
-         CAST(sum(CAST(power(2, 57 - r) AS BIGINT)) AS BIGINT)
-           + (16 - CAST(count(*) AS BIGINT)) * 144115188075855872
-           AS den_scaled
-  FROM regs GROUP BY 1
-), exact AS (
-  SELECT event_type, CAST(count(*) AS BIGINT) AS n_events,
-         CAST(count(DISTINCT user_id) AS BIGINT) AS exact_distinct
-  FROM events GROUP BY 1
-)
-SELECT e.event_type, e.n_events, e.exact_distinct,
-       round(0.673 * 256.0 * 144115188075855872.0
-             / CAST(d.den_scaled AS DOUBLE), 4) AS hll_est
-FROM exact e JOIN den d ON e.event_type = d.event_type
-"""
-
-
 def q_spearman_corr(spark, sf_dir):
     """Per-event_type Spearman rank correlation between ``value`` and
     arrival order — the monotone-trend detector that Pearson
@@ -1521,24 +1289,6 @@ def q_spearman_corr(spark, sf_dir):
             ).alias("rho"),
         )
     )
-
-
-SQL_SPEARMAN_CORR = """
-WITH r AS (
-  SELECT event_type,
-         CAST(row_number() OVER (PARTITION BY event_type
-                                 ORDER BY value, event_id) AS BIGINT) AS rv,
-         CAST(row_number() OVER (PARTITION BY event_type
-                                 ORDER BY ts, event_id) AS BIGINT) AS rt
-  FROM events
-)
-SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-       CAST(sum((rv - rt) * (rv - rt)) AS BIGINT) AS sum_d2,
-       round(1.0 - (6.0 * CAST(sum((rv - rt) * (rv - rt)) AS DOUBLE))
-             / CAST(count(*) * (count(*) * count(*) - 1) AS DOUBLE), 6)
-         AS rho
-FROM r GROUP BY 1
-"""
 
 
 def q_cusum_changepoint(spark, sf_dir):
@@ -1597,35 +1347,6 @@ def q_cusum_changepoint(spark, sf_dir):
             F.col("adev").alias("max_abs_dev"),
         )
     )
-
-
-SQL_CUSUM_CHANGEPOINT = """
-WITH c AS (
-  SELECT user_id, ts, event_id,
-         CAST(round(value * 100) AS BIGINT) AS cents
-  FROM events
-), cum AS (
-  SELECT user_id, event_id,
-         CAST(row_number() OVER w AS BIGINT) AS i,
-         CAST(sum(cents) OVER (w ROWS BETWEEN UNBOUNDED PRECEDING
-                               AND CURRENT ROW) AS BIGINT) AS cum,
-         CAST(count(*) OVER (PARTITION BY user_id) AS BIGINT) AS n,
-         CAST(sum(cents) OVER (PARTITION BY user_id) AS BIGINT) AS total
-  FROM c
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-), dev AS (
-  SELECT user_id, event_id, i, n,
-         abs(n * cum - i * total) AS adev
-  FROM cum
-)
-SELECT user_id, n, i AS cp_i, event_id AS cp_event_id,
-       adev AS max_abs_dev
-FROM (
-  SELECT *, row_number() OVER (PARTITION BY user_id
-                               ORDER BY adev DESC, i) AS pk
-  FROM dev) t
-WHERE pk = 1
-"""
 
 
 def q_best_threshold(spark, sf_dir):
@@ -1702,38 +1423,3 @@ def q_best_threshold(spark, sf_dir):
             ).alias("ks"),
         )
     )
-
-
-SQL_BEST_THRESHOLD = """
-WITH pv AS (
-  SELECT CAST(day(ts) AS INTEGER) AS day, value AS v,
-         CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-              AS BIGINT) AS pos_at,
-         CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
-              AS BIGINT) AS neg_at
-  FROM events WHERE event_type IN ('purchase', 'click')
-  GROUP BY 1, 2
-), cum AS (
-  SELECT day, v,
-         CAST(sum(pos_at) OVER (w ROWS BETWEEN UNBOUNDED PRECEDING
-                                AND CURRENT ROW) AS BIGINT) AS cum_pos,
-         CAST(sum(neg_at) OVER (w ROWS BETWEEN UNBOUNDED PRECEDING
-                                AND CURRENT ROW) AS BIGINT) AS cum_neg,
-         CAST(sum(pos_at) OVER (PARTITION BY day) AS BIGINT) AS n_pos,
-         CAST(sum(neg_at) OVER (PARTITION BY day) AS BIGINT) AS n_neg
-  FROM pv
-  WINDOW w AS (PARTITION BY day ORDER BY v)
-), scored AS (
-  SELECT day, v, n_pos, n_neg,
-         abs(cum_pos * n_neg - cum_neg * n_pos) AS ks_num
-  FROM cum WHERE n_pos > 0 AND n_neg > 0
-)
-SELECT day, v AS thr_v, n_pos, n_neg,
-       round(CAST(ks_num AS DOUBLE)
-             / CAST(n_pos * n_neg AS DOUBLE), 6) AS ks
-FROM (
-  SELECT *, row_number() OVER (PARTITION BY day
-                               ORDER BY ks_num DESC, v) AS pk
-  FROM scored) t
-WHERE pk = 1
-"""

@@ -58,27 +58,6 @@ def _threshold(spark, sf_dir):
     )
 
 
-_SQL_THRESHOLD = f"""
-e AS (
-  SELECT CAST(round(value * 100) AS BIGINT) AS cents,
-         epoch_us(ts) AS us, event_id
-  FROM events
-), hist AS (
-  SELECT cents, CAST(count(*) AS BIGINT) AS ct FROM e GROUP BY cents
-), cum AS (
-  SELECT cents,
-         CAST(sum(ct) OVER (ORDER BY cents ROWS UNBOUNDED PRECEDING)
-              AS BIGINT) AS cum,
-         CAST(sum(ct) OVER () AS BIGINT) AS n
-  FROM hist
-), u AS (
-  SELECT CAST(min(cents) AS BIGINT) AS u_cents,
-         CAST(max(n) AS BIGINT) AS n
-  FROM cum WHERE cum >= ({_GPD_DECILE} * n + 9) // 10
-)
-"""
-
-
 def q_extremal_index(spark, sf_dir):
     """RUNS-DECLUSTERING extremal index: exceedances of the exact p90
     threshold in (ts, event_id) order; cluster starts where the gap
@@ -116,26 +95,6 @@ def q_extremal_index(spark, sf_dir):
             F.col("n_clusters") / F.col("n_exc").cast("double"), 6
         ).alias("theta"),
     )
-
-
-SQL_EXTREMAL_INDEX = f"""
-WITH {_SQL_THRESHOLD},
-exc AS (
-  SELECT e.us, e.event_id, u.u_cents, u.n
-  FROM e CROSS JOIN u WHERE e.cents > u.u_cents
-), marked AS (
-  SELECT u_cents, n,
-         CASE WHEN lag(us) OVER (ORDER BY us, event_id) IS NULL
-               OR us - lag(us) OVER (ORDER BY us, event_id)
-                  > {_EI_GAP_US}
-              THEN 1 ELSE 0 END AS new_c
-  FROM exc
-)
-SELECT u_cents, n, CAST(count(*) AS BIGINT) AS n_exc,
-       CAST(sum(new_c) AS BIGINT) AS n_clusters,
-       round(CAST(sum(new_c) AS DOUBLE) / count(*), 6) AS theta
-FROM marked GROUP BY u_cents, n
-"""
 
 
 def q_gpd_return_level(spark, sf_dir):
@@ -176,34 +135,6 @@ def q_gpd_return_level(spark, sf_dir):
         F.round(zeta, 6).alias("zeta_u"),
         F.round(rl, 4).alias("rl_1000_cents"),
     )
-
-
-SQL_GPD_RETURN_LEVEL = f"""
-WITH {_SQL_THRESHOLD},
-mom AS (
-  SELECT u.u_cents, u.n,
-         CAST(count(*) AS BIGINT) AS k,
-         CAST(sum(e.cents - u.u_cents) AS BIGINT) AS s1,
-         CAST(sum((e.cents - u.u_cents) * (e.cents - u.u_cents))
-              AS BIGINT) AS s2
-  FROM e CROSS JOIN u WHERE e.cents > u.u_cents
-  GROUP BY u.u_cents, u.n
-), s AS (
-  SELECT u_cents, n, k,
-         CAST(s1 AS DOUBLE) / k AS m,
-         (s2 - s1 * (CAST(s1 AS DOUBLE) / k)) / (k - 1) AS v
-  FROM mom
-)
-SELECT u_cents, k,
-       round((1 - m * m / v) / 2, 6) AS xi,
-       round(m * (1 + m * m / v) / 2, 4) AS sigma_cents,
-       round(CAST(k AS DOUBLE) / n, 6) AS zeta_u,
-       round(u_cents + (m * (1 + m * m / v) / 2)
-             / ((1 - m * m / v) / 2)
-             * (pow({float(_RL_M)} * CAST(k AS DOUBLE) / n,
-                    (1 - m * m / v) / 2) - 1), 4) AS rl_1000_cents
-FROM s
-"""
 
 
 def q_tail_dependence(spark, sf_dir):
@@ -285,46 +216,3 @@ def q_tail_dependence(spark, sf_dir):
             6,
         ).alias("lambda_lower"),
     )
-
-
-SQL_TAIL_DEPENDENCE = """
-WITH ud AS (
-  SELECT user_id, dayofmonth(ts) AS d,
-         CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS x,
-         CAST(count(*) AS BIGINT) AS y
-  FROM events GROUP BY 1, 2
-), rx AS (
-  SELECT x AS v, row_number() OVER (ORDER BY x, user_id, d) AS rn,
-         count(*) OVER () AS nn
-  FROM ud
-), ry AS (
-  SELECT y AS v, row_number() OVER (ORDER BY y, user_id, d) AS rn,
-         count(*) OVER () AS nn
-  FROM ud
-), q AS (
-  SELECT
-    (SELECT CAST(min(v) AS BIGINT) FROM rx
-     WHERE rn = CAST(ceil(9 * nn / 10.0) AS BIGINT)) AS qx90,
-    (SELECT CAST(min(v) AS BIGINT) FROM ry
-     WHERE rn = CAST(ceil(9 * nn / 10.0) AS BIGINT)) AS qy90,
-    (SELECT CAST(min(v) AS BIGINT) FROM rx
-     WHERE rn = CAST(ceil(1 * nn / 10.0) AS BIGINT)) AS qx10,
-    (SELECT CAST(min(v) AS BIGINT) FROM ry
-     WHERE rn = CAST(ceil(1 * nn / 10.0) AS BIGINT)) AS qy10
-)
-SELECT CAST(count(*) AS BIGINT) AS n,
-       max(qx90) AS qx90, max(qy90) AS qy90,
-       CAST(sum(CASE WHEN x > qx90 AND y > qy90 THEN 1 ELSE 0 END)
-            AS BIGINT) AS n_joint_u,
-       CAST(sum(CASE WHEN y > qy90 THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_y_u,
-       round(CAST(sum(CASE WHEN x > qx90 AND y > qy90 THEN 1 ELSE 0
-                      END) AS DOUBLE)
-             / sum(CASE WHEN y > qy90 THEN 1 ELSE 0 END), 6)
-         AS lambda_upper,
-       round(CAST(sum(CASE WHEN x <= qx10 AND y <= qy10 THEN 1 ELSE 0
-                      END) AS DOUBLE)
-             / nullif(sum(CASE WHEN y <= qy10 THEN 1 ELSE 0 END), 0),
-             6) AS lambda_lower
-FROM ud CROSS JOIN q
-"""

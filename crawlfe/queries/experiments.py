@@ -4,17 +4,10 @@ Split from the former crawlfe/queries.py monolith (r4); bodies unchanged.
 """
 from __future__ import annotations
 
-import pandas as pd  # noqa: F401
 from pyspark.sql import DataFrame, SparkSession, Window  # noqa: F401
 from pyspark.sql import functions as F  # noqa: F401
-from pyspark.sql import types as T  # noqa: F401
 
-from .. import clean  # noqa: F401
-from .. import windows as W  # noqa: F401
-from ..asof import asof_join  # noqa: F401
-from ..textfeat import featurize_batch  # noqa: F401
 from ._shared import SESSION_GAP_S, _scratch_dir, _t, _us  # noqa: F401
-
 
 
 # --------------------------------------------------------------------------
@@ -65,24 +58,6 @@ def q_scan_jsonl(spark, sf_dir):
     )
 
 
-SQL_SCAN_JSONL = """
-WITH man AS (
-  SELECT 'view' AS event_type, 'low' AS tier,
-         CAST(1 AS BIGINT) AS weight
-  UNION ALL SELECT 'click', 'mid', 2
-  UNION ALL SELECT 'signup', 'mid', 3
-  UNION ALL SELECT 'purchase', 'high', 5
-  UNION ALL SELECT 'error', 'low', 0
-), agg AS (
-  SELECT event_type, CAST(count(*) AS BIGINT) AS n
-  FROM events GROUP BY 1
-)
-SELECT agg.event_type, man.tier, man.weight, agg.n,
-       CAST(man.weight * agg.n AS BIGINT) AS weighted_n
-FROM agg JOIN man USING (event_type)
-"""
-
-
 def q_partitioned_roundtrip(spark, sf_dir):
     """PARTITIONED SINK + PRUNED SCAN roundtrip: write the events
     aggregate partitioned by event_type to a fresh tempdir, read it
@@ -122,18 +97,6 @@ def q_partitioned_roundtrip(spark, sf_dir):
         )
     )
     return back
-
-
-SQL_PARTITIONED_ROUNDTRIP = """
-SELECT event_type, CAST(day(ts) AS INTEGER) AS day,
-       CAST(count(*) AS BIGINT) AS n,
-       CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
-         AS cents,
-       CAST(sum(CAST(round(value * 100) AS BIGINT)) AS DOUBLE)
-         / (100.0 * count(*)) AS mean_value
-FROM events WHERE event_type = 'purchase'
-GROUP BY 1, 2
-"""
 
 
 def q_daily_gini(spark, sf_dir):
@@ -192,37 +155,6 @@ def q_daily_gini(spark, sf_dir):
     )
 
 
-SQL_DAILY_GINI = """
-WITH days AS (
-  SELECT DISTINCT CAST(day(ts) AS INTEGER) AS day FROM events
-), types AS (
-  SELECT DISTINCT event_type FROM events
-), raw AS (
-  SELECT event_type, CAST(day(ts) AS INTEGER) AS day,
-         CAST(count(*) AS BIGINT) AS c
-  FROM events GROUP BY 1, 2
-), grid AS (
-  SELECT t.event_type, d.day, CAST(coalesce(r.c, 0) AS BIGINT) AS c
-  FROM types t CROSS JOIN days d
-  LEFT JOIN raw r ON r.event_type = t.event_type AND r.day = d.day
-), ranked AS (
-  SELECT event_type, c,
-         CAST(row_number() OVER (PARTITION BY event_type
-              ORDER BY c, day) AS BIGINT) AS i
-  FROM grid
-), per AS (
-  SELECT event_type, CAST(count(*) AS BIGINT) AS n_days,
-         CAST(sum(c) AS BIGINT) AS s,
-         CAST(sum(i * c) AS BIGINT) AS si
-  FROM ranked GROUP BY 1
-)
-SELECT event_type, n_days, s AS n_events,
-       round((2.0 * si - (n_days + 1.0) * s)
-             / (CAST(n_days AS DOUBLE) * s), 6) AS gini
-FROM per
-"""
-
-
 def q_value_share_topk(spark, sf_dir):
     """TOP-K REVENUE SHARE: the fraction of total purchase revenue
     contributed by the top 10 / 100 / 1000 single purchases — the
@@ -268,28 +200,6 @@ def q_value_share_topk(spark, sf_dir):
             F.expr("CAST(topk_cents AS DOUBLE) / total_cents"), 6
         ).alias("topk_share"),
     )
-
-
-SQL_VALUE_SHARE_TOPK = """
-WITH ranked AS (
-  SELECT CAST(round(value * 100) AS BIGINT) AS cents,
-         CAST(row_number() OVER (
-           ORDER BY CAST(round(value * 100) AS BIGINT) DESC,
-                    event_id ASC) AS BIGINT) AS rk
-  FROM events WHERE event_type = 'purchase'
-), ks AS (
-  SELECT CAST(k AS INTEGER) AS k FROM (VALUES (10), (100), (1000)) t(k)
-)
-SELECT k,
-       CAST(count(*) AS BIGINT) AS n_purchases,
-       CAST(sum(cents) AS DOUBLE) / 100.0 AS total_value,
-       CAST(sum(CASE WHEN rk <= k THEN cents ELSE 0 END) AS DOUBLE)
-         / 100.0 AS topk_value,
-       round(CAST(sum(CASE WHEN rk <= k THEN cents ELSE 0 END)
-                  AS DOUBLE) / sum(cents), 6) AS topk_share
-FROM ranked CROSS JOIN ks
-GROUP BY 1
-"""
 
 
 # --------------------------------------------------------------------------
@@ -375,52 +285,6 @@ def q_diff_in_diff(spark, sf_dir):
     )
 
 
-SQL_DIFF_IN_DIFF = """
-WITH base AS (
-  SELECT CAST(user_id % 2 AS INTEGER) AS arm,
-         CASE WHEN day(ts) <= 7 THEN 1 ELSE 4 END AS wk,
-         CAST(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END
-              AS BIGINT) AS buy
-  FROM events
-  WHERE day(ts) <= 7 OR day(ts) BETWEEN 22 AND 28
-), cells AS (
-  SELECT arm, wk, CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(buy) AS BIGINT) AS b
-  FROM base GROUP BY 1, 2
-), w AS (
-  SELECT
-    max(CASE WHEN arm = 0 AND wk = 1 THEN CAST(b AS DOUBLE) / n END)
-      AS c_w1,
-    max(CASE WHEN arm = 0 AND wk = 4 THEN CAST(b AS DOUBLE) / n END)
-      AS c_w4,
-    max(CASE WHEN arm = 1 AND wk = 1 THEN CAST(b AS DOUBLE) / n END)
-      AS t_w1,
-    max(CASE WHEN arm = 1 AND wk = 4 THEN CAST(b AS DOUBLE) / n END)
-      AS t_w4,
-    max(CASE WHEN arm = 0 AND wk = 1 THEN
-        CAST(b AS DOUBLE) / n * (1.0 - CAST(b AS DOUBLE) / n) / n
-        END)
-    + max(CASE WHEN arm = 0 AND wk = 4 THEN
-        CAST(b AS DOUBLE) / n * (1.0 - CAST(b AS DOUBLE) / n) / n
-        END)
-    + max(CASE WHEN arm = 1 AND wk = 1 THEN
-        CAST(b AS DOUBLE) / n * (1.0 - CAST(b AS DOUBLE) / n) / n
-        END)
-    + max(CASE WHEN arm = 1 AND wk = 4 THEN
-        CAST(b AS DOUBLE) / n * (1.0 - CAST(b AS DOUBLE) / n) / n
-        END) AS var_did
-  FROM cells
-)
-SELECT round(c_w1, 6) AS control_w1, round(c_w4, 6) AS control_w4,
-       round(t_w1, 6) AS treat_w1, round(t_w4, 6) AS treat_w4,
-       round((t_w4 - t_w1) - (c_w4 - c_w1), 6) AS did_estimate,
-       round(sqrt(var_did), 6) AS se_did,
-       round(((t_w4 - t_w1) - (c_w4 - c_w1)) / sqrt(var_did), 6)
-         AS z
-FROM w
-"""
-
-
 def q_srm_check(spark, sf_dir):
     """SAMPLE RATIO MISMATCH check per day: is the even/odd user-arm
     split of daily USERS consistent with the designed 50/50? The #1
@@ -457,25 +321,6 @@ def q_srm_check(spark, sf_dir):
             6,
         ).alias("z_srm"),
     )
-
-
-SQL_SRM_CHECK = """
-WITH du AS (
-  SELECT DISTINCT CAST(day(ts) AS INTEGER) AS day, user_id
-  FROM events
-), per AS (
-  SELECT day,
-         CAST(sum(CASE WHEN user_id % 2 = 0 THEN 1 ELSE 0 END)
-              AS BIGINT) AS n0,
-         CAST(sum(CASE WHEN user_id % 2 = 1 THEN 1 ELSE 0 END)
-              AS BIGINT) AS n1
-  FROM du GROUP BY 1
-)
-SELECT day, n0, n1,
-       round((CAST(n1 AS DOUBLE) - n0)
-             / sqrt(CAST(n1 + n0 AS DOUBLE)), 6) AS z_srm
-FROM per
-"""
 
 
 def q_mde_power(spark, sf_dir):
@@ -532,34 +377,6 @@ def q_mde_power(spark, sf_dir):
             ).alias("mde_rel"),
         )
     )
-
-
-SQL_MDE_POWER = """
-WITH users AS (
-  SELECT DISTINCT user_id FROM events
-), n_arm AS (
-  SELECT CAST(sum(CASE WHEN user_id % 2 = 1 THEN 1 ELSE 0 END)
-              AS BIGINT) AS n_treat,
-         CAST(count(*) AS BIGINT) AS nu
-  FROM users
-), conv AS (
-  SELECT event_type,
-         CAST(count(DISTINCT user_id) AS BIGINT) AS n_conv
-  FROM events GROUP BY 1
-)
-SELECT event_type, nu AS n_users, n_conv,
-       round(CAST(n_conv AS DOUBLE) / nu, 6) AS base_rate,
-       round((1.96 + 0.8416)
-             * sqrt(2.0 * (CAST(n_conv AS DOUBLE) / nu)
-                    * (1.0 - CAST(n_conv AS DOUBLE) / nu)
-                    / n_treat), 6) AS mde_abs,
-       round((1.96 + 0.8416)
-             * sqrt(2.0 * (CAST(n_conv AS DOUBLE) / nu)
-                    * (1.0 - CAST(n_conv AS DOUBLE) / nu)
-                    / n_treat)
-             / (CAST(n_conv AS DOUBLE) / nu), 6) AS mde_rel
-FROM conv CROSS JOIN n_arm
-"""
 
 
 def q_covariate_balance(spark, sf_dir):
@@ -627,43 +444,6 @@ def q_covariate_balance(spark, sf_dir):
     )
 
 
-SQL_COVARIATE_BALANCE = """
-WITH pu AS (
-  SELECT user_id, CAST(count(*) AS BIGINT) AS cnt,
-         CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
-           AS cents,
-         CAST(count(DISTINCT day(ts)) AS BIGINT) AS days
-  FROM events WHERE day(ts) <= 7
-  GROUP BY 1
-), long AS (
-  SELECT CAST(user_id % 2 AS INTEGER) AS arm, 'w1_events' AS covariate,
-         cnt AS x FROM pu
-  UNION ALL
-  SELECT CAST(user_id % 2 AS INTEGER), 'w1_cents', cents FROM pu
-  UNION ALL
-  SELECT CAST(user_id % 2 AS INTEGER), 'w1_active_days', days FROM pu
-), per AS (
-  SELECT covariate, arm, CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(x) AS BIGINT) AS s,
-         CAST(sum(x * x) AS BIGINT) AS q
-  FROM long GROUP BY 1, 2
-)
-SELECT a0.covariate, a0.n AS n0, a1.n AS n1,
-       round(CAST(a0.s AS DOUBLE) / a0.n, 6) AS mean_control,
-       round(CAST(a1.s AS DOUBLE) / a1.n, 6) AS mean_treat,
-       round((CAST(a1.s AS DOUBLE) / a1.n
-              - CAST(a0.s AS DOUBLE) / a0.n)
-             / sqrt((((CAST(a0.q AS DOUBLE)
-                       - pow(CAST(a0.s AS DOUBLE), 2) / a0.n)
-                      / (a0.n - 1.0))
-                     + ((CAST(a1.q AS DOUBLE)
-                         - pow(CAST(a1.s AS DOUBLE), 2) / a1.n)
-                        / (a1.n - 1.0))) / 2.0), 6) AS smd
-FROM (SELECT * FROM per WHERE arm = 0) a0
-JOIN (SELECT * FROM per WHERE arm = 1) a1 USING (covariate)
-"""
-
-
 def q_effect_trend(spark, sf_dir):
     """EFFECT TREND (novelty/decay check): the weekly treatment-
     minus-control purchase-rate gap across the four full weeks, plus
@@ -713,40 +493,6 @@ def q_effect_trend(spark, sf_dir):
         F.round("gap", 6).alias("effect_gap"),
         F.round("slope", 6).alias("effect_slope"),
     )
-
-
-SQL_EFFECT_TREND = """
-WITH base AS (
-  SELECT CAST(user_id % 2 AS INTEGER) AS arm,
-         CAST((day(ts) - 1) // 7 + 1 AS INTEGER) AS wk,
-         CAST(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END
-              AS BIGINT) AS buy
-  FROM events WHERE day(ts) <= 28
-), cells AS (
-  SELECT wk, arm, CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(buy) AS BIGINT) AS b
-  FROM base GROUP BY 1, 2
-), per AS (
-  SELECT wk,
-         max(CASE WHEN arm = 0 THEN CAST(b AS DOUBLE) / n END)
-           AS rate_c,
-         max(CASE WHEN arm = 1 THEN CAST(b AS DOUBLE) / n END)
-           AS rate_t
-  FROM cells GROUP BY 1
-), g AS (
-  SELECT wk, rate_c, rate_t, rate_t - rate_c AS gap FROM per
-), slope AS (
-  SELECT (count(*) * sum(wk * gap) - sum(wk) * sum(gap))
-         / (CAST(count(*) AS DOUBLE) * sum(wk * wk)
-            - CAST(sum(wk) AS DOUBLE) * sum(wk)) AS slope
-  FROM g
-)
-SELECT wk AS week, round(rate_c, 6) AS rate_control,
-       round(rate_t, 6) AS rate_treat,
-       round(gap, 6) AS effect_gap,
-       round(slope, 6) AS effect_slope
-FROM g CROSS JOIN slope
-"""
 
 
 def q_retention_by_arm(spark, sf_dir):
@@ -802,39 +548,6 @@ def q_retention_by_arm(spark, sf_dir):
     )
 
 
-SQL_RETENTION_BY_ARM = """
-WITH pu AS (
-  SELECT user_id, min(epoch_us(ts)) AS first_us,
-         max(epoch_us(ts)) AS last_us,
-         CAST(min(day(ts)) AS INTEGER) AS first_day
-  FROM events GROUP BY 1
-), cohort AS (
-  SELECT CAST(user_id % 2 AS INTEGER) AS arm,
-         CAST(CASE WHEN last_us - first_us
-              >= CAST(7 AS BIGINT) * 86400 * 1000000
-              THEN 1 ELSE 0 END AS BIGINT) AS retained
-  FROM pu WHERE first_day <= 7
-), per AS (
-  SELECT arm, CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(retained) AS BIGINT) AS r
-  FROM cohort GROUP BY 1
-)
-SELECT a0.n AS n0, a1.n AS n1,
-       round(CAST(a0.r AS DOUBLE) / a0.n, 6) AS retention_control,
-       round(CAST(a1.r AS DOUBLE) / a1.n, 6) AS retention_treat,
-       round((CAST(a1.r AS DOUBLE) / a1.n
-              - CAST(a0.r AS DOUBLE) / a0.n)
-             / nullif(sqrt((CAST(a0.r + a1.r AS DOUBLE)
-                            / (a0.n + a1.n))
-                           * (1.0 - CAST(a0.r + a1.r AS DOUBLE)
-                              / (a0.n + a1.n))
-                           * (1.0 / a0.n + 1.0 / a1.n)), 0.0), 6)
-         AS z
-FROM (SELECT * FROM per WHERE arm = 0) a0
-CROSS JOIN (SELECT * FROM per WHERE arm = 1) a1
-"""
-
-
 # --------------------------------------------------------------------------
 # Feature-eng pack #52: share-of-parent rollup, session-size
 # histogram, cohort LTV
@@ -873,23 +586,6 @@ def q_share_of_parent(spark, sf_dir):
             F.expr("CAST(n_source AS DOUBLE) / n_total"), 6
         ).alias("source_share_of_total"),
     )
-
-
-SQL_SHARE_OF_PARENT = """
-WITH cell AS (
-  SELECT source, lang, CAST(count(*) AS BIGINT) AS n
-  FROM documents GROUP BY 1, 2
-)
-SELECT source, lang, n,
-       CAST(sum(n) OVER (PARTITION BY source) AS BIGINT) AS n_source,
-       CAST(sum(n) OVER () AS BIGINT) AS n_total,
-       round(CAST(n AS DOUBLE)
-             / sum(n) OVER (PARTITION BY source), 6)
-         AS share_of_source,
-       round(CAST(sum(n) OVER (PARTITION BY source) AS DOUBLE)
-             / sum(n) OVER (), 6) AS source_share_of_total
-FROM cell
-"""
 
 
 def q_session_size_hist(spark, sf_dir):
@@ -964,44 +660,6 @@ def q_session_size_hist(spark, sf_dir):
     )
 
 
-SQL_SESSION_SIZE_HIST = """
-WITH lagged AS (
-  SELECT user_id,
-         CASE WHEN epoch_us(ts) - lag(epoch_us(ts)) OVER w
-                   > 1800 * 1000000 THEN 1
-              WHEN lag(epoch_us(ts)) OVER w IS NULL THEN 1
-              ELSE 0 END AS start,
-         epoch_us(ts) AS us, event_id
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts), event_id)
-), sess AS (
-  SELECT user_id,
-         CAST(sum(start) OVER (PARTITION BY user_id
-              ORDER BY us, event_id
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-              AS BIGINT) AS sid
-  FROM lagged
-), sizes AS (
-  SELECT user_id, sid, CAST(count(*) AS BIGINT) AS sz
-  FROM sess GROUP BY 1, 2
-), bucketed AS (
-  SELECT CASE WHEN sz = 1 THEN '1' WHEN sz = 2 THEN '2'
-              WHEN sz <= 5 THEN '3-5' WHEN sz <= 10 THEN '6-10'
-              ELSE '11+' END AS size_bucket, sz
-  FROM sizes
-), tot AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_sessions_total FROM bucketed
-)
-SELECT size_bucket,
-       CAST(count(*) AS BIGINT) AS n_sessions,
-       CAST(sum(sz) AS BIGINT) AS n_events,
-       round(CAST(count(*) AS DOUBLE) / max(n_sessions_total), 6)
-         AS session_share
-FROM bucketed CROSS JOIN tot
-GROUP BY 1
-"""
-
-
 def q_cohort_ltv(spark, sf_dir):
     """COHORT LTV TABLE: bucket users into quartiles by their
     WEEK-1 purchase spend (exact order-statistic cut points on the
@@ -1061,44 +719,6 @@ def q_cohort_ltv(spark, sf_dir):
             ).alias("month_over_w1"),
         )
     )
-
-
-SQL_COHORT_LTV = """
-WITH buys AS (
-  SELECT user_id, CAST(day(ts) AS INTEGER) AS day,
-         CAST(round(value * 100) AS BIGINT) AS cents
-  FROM events WHERE event_type = 'purchase'
-), w1 AS (
-  SELECT user_id, CAST(sum(cents) AS BIGINT) AS w1_cents
-  FROM buys WHERE day <= 7 GROUP BY 1
-), ranked AS (
-  SELECT user_id, w1_cents,
-         CAST(row_number() OVER (ORDER BY w1_cents, user_id)
-              AS BIGINT) AS rn,
-         CAST(count(*) OVER () AS BIGINT) AS n
-  FROM w1
-), q AS (
-  SELECT user_id, w1_cents,
-         CAST(CASE WHEN rn * 4 <= n THEN 1 WHEN rn * 2 <= n THEN 2
-              WHEN rn * 4 <= 3 * n THEN 3 ELSE 4 END AS INTEGER)
-           AS quartile
-  FROM ranked
-), month AS (
-  SELECT user_id, CAST(sum(cents) AS BIGINT) AS m_cents
-  FROM buys GROUP BY 1
-)
-SELECT quartile,
-       CAST(count(*) AS BIGINT) AS n_users,
-       round(sum(CAST(w1_cents AS DOUBLE)) / (100.0 * count(*)), 6)
-         AS mean_w1_spend,
-       round(sum(CAST(m_cents AS DOUBLE)) / (100.0 * count(*)), 6)
-         AS mean_month_spend,
-       round(sum(CAST(m_cents AS DOUBLE))
-             / nullif(sum(CAST(w1_cents AS DOUBLE)), 0.0), 6)
-         AS month_over_w1
-FROM q JOIN month USING (user_id)
-GROUP BY 1
-"""
 
 
 # --------------------------------------------------------------------------
@@ -1196,54 +816,6 @@ def q_ccf_daily(spark, sf_dir):
             ).alias("ccf"),
         )
     )
-
-
-SQL_CCF_DAILY = """
-WITH days AS (
-  SELECT DISTINCT CAST(day(ts) AS INTEGER) AS day FROM events
-), idx AS (
-  SELECT day, CAST(row_number() OVER (ORDER BY day) AS BIGINT) AS i
-  FROM days
-), raw AS (
-  SELECT event_type, CAST(day(ts) AS INTEGER) AS day,
-         CAST(count(*) AS BIGINT) AS c
-  FROM events WHERE event_type IN ('click', 'purchase')
-  GROUP BY 1, 2
-), grid AS (
-  SELECT t.event_type, i.i, CAST(coalesce(r.c, 0) AS BIGINT) AS c
-  FROM idx i
-  CROSS JOIN (SELECT 'click' AS event_type
-              UNION ALL SELECT 'purchase') t
-  LEFT JOIN raw r ON r.event_type = t.event_type AND r.day = i.day
-), tot AS (
-  SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(c) AS BIGINT) AS s
-  FROM grid GROUP BY 1
-), dev AS (
-  SELECT g.event_type, g.i, CAST(t.n * g.c - t.s AS BIGINT) AS d
-  FROM grid g JOIN tot t ON g.event_type = t.event_type
-), dens AS (
-  SELECT event_type, CAST(sum(d * d) AS BIGINT) AS den
-  FROM dev GROUP BY 1
-), lags AS (
-  SELECT CAST(l AS INTEGER) AS lag FROM generate_series(-3, 3) t(l)
-), nums AS (
-  SELECT lag, CAST(sum(x.d * y.d) AS BIGINT) AS num
-  FROM (SELECT i, d FROM dev WHERE event_type = 'click') x
-  CROSS JOIN lags
-  JOIN (SELECT i, d FROM dev WHERE event_type = 'purchase') y
-    ON y.i = x.i + lag
-  GROUP BY 1
-)
-SELECT lag,
-       round(CAST(num AS DOUBLE)
-             / sqrt(CAST((SELECT den FROM dens
-                          WHERE event_type = 'click') AS DOUBLE)
-                    * CAST((SELECT den FROM dens
-                            WHERE event_type = 'purchase')
-                           AS DOUBLE)), 6) AS ccf
-FROM nums
-"""
 
 
 def q_partial_corr_daily(spark, sf_dir):
@@ -1353,62 +925,6 @@ def q_partial_corr_daily(spark, sf_dir):
     )
 
 
-SQL_PARTIAL_CORR_DAILY = """
-WITH days AS (
-  SELECT DISTINCT CAST(day(ts) AS INTEGER) AS day FROM events
-), raw AS (
-  SELECT event_type, CAST(day(ts) AS INTEGER) AS day,
-         CAST(count(*) AS BIGINT) AS c
-  FROM events WHERE event_type IN ('click', 'purchase', 'view')
-  GROUP BY 1, 2
-), wide AS (
-  SELECT d.day,
-         CAST(coalesce(max(CASE WHEN r.event_type = 'click'
-                           THEN r.c END), 0) AS BIGINT) AS x,
-         CAST(coalesce(max(CASE WHEN r.event_type = 'purchase'
-                           THEN r.c END), 0) AS BIGINT) AS y,
-         CAST(coalesce(max(CASE WHEN r.event_type = 'view'
-                           THEN r.c END), 0) AS BIGINT) AS z
-  FROM days d LEFT JOIN raw r ON r.day = d.day
-  GROUP BY 1
-), agg AS (
-  SELECT CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
-         CAST(sum(z) AS BIGINT) AS sz,
-         CAST(sum(x * x) AS BIGINT) AS sxx,
-         CAST(sum(y * y) AS BIGINT) AS syy,
-         CAST(sum(z * z) AS BIGINT) AS szz,
-         CAST(sum(x * y) AS BIGINT) AS sxy,
-         CAST(sum(x * z) AS BIGINT) AS sxz,
-         CAST(sum(y * z) AS BIGINT) AS syz
-  FROM wide
-), c AS (
-  SELECT n,
-    (CAST(n AS DOUBLE) * sxy - CAST(sx AS DOUBLE) * sy)
-      / sqrt((CAST(n AS DOUBLE) * sxx - CAST(sx AS DOUBLE) * sx)
-             * (CAST(n AS DOUBLE) * syy - CAST(sy AS DOUBLE) * sy))
-      AS rxy,
-    (CAST(n AS DOUBLE) * sxz - CAST(sx AS DOUBLE) * sz)
-      / sqrt((CAST(n AS DOUBLE) * sxx - CAST(sx AS DOUBLE) * sx)
-             * (CAST(n AS DOUBLE) * szz - CAST(sz AS DOUBLE) * sz))
-      AS rxz,
-    (CAST(n AS DOUBLE) * syz - CAST(sy AS DOUBLE) * sz)
-      / sqrt((CAST(n AS DOUBLE) * syy - CAST(sy AS DOUBLE) * sy)
-             * (CAST(n AS DOUBLE) * szz - CAST(sz AS DOUBLE) * sz))
-      AS ryz
-  FROM agg
-)
-SELECT n AS n_days,
-       round(rxy, 6) AS r_click_purchase,
-       round(rxz, 6) AS r_click_view,
-       round(ryz, 6) AS r_purchase_view,
-       round((rxy - rxz * ryz)
-             / sqrt((1.0 - rxz * rxz) * (1.0 - ryz * ryz)), 6)
-         AS partial_r
-FROM c
-"""
-
-
 def q_dow_strength(spark, sf_dir):
     """DAY-OF-WEEK SEASONALITY STRENGTH per event type: the R^2 of
     day-of-week means on the daily count series — what fraction of
@@ -1469,43 +985,6 @@ def q_dow_strength(spark, sf_dir):
             6,
         ).alias("dow_r2"),
     )
-
-
-SQL_DOW_STRENGTH = """
-WITH days AS (
-  SELECT DISTINCT CAST(day(ts) AS INTEGER) AS day,
-         CAST(dayofweek(ts) + 1 AS INTEGER) AS dow
-  FROM events
-), types AS (
-  SELECT DISTINCT event_type FROM events
-), raw AS (
-  SELECT event_type, CAST(day(ts) AS INTEGER) AS day,
-         CAST(count(*) AS BIGINT) AS c
-  FROM events GROUP BY 1, 2
-), grid AS (
-  SELECT t.event_type, d.dow, CAST(coalesce(r.c, 0) AS BIGINT) AS c
-  FROM types t CROSS JOIN days d
-  LEFT JOIN raw r ON r.event_type = t.event_type AND r.day = d.day
-), bydow AS (
-  SELECT event_type, dow, CAST(count(*) AS BIGINT) AS m,
-         CAST(sum(c) AS BIGINT) AS sc
-  FROM grid GROUP BY 1, 2
-), per AS (
-  SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(c) AS BIGINT) AS s,
-         CAST(sum(c * c) AS BIGINT) AS q
-  FROM grid GROUP BY 1
-), between_ AS (
-  SELECT event_type, sum(pow(CAST(sc AS DOUBLE), 2) / m) AS sgrp
-  FROM bydow GROUP BY 1
-)
-SELECT per.event_type, per.n AS n_days,
-       round((sgrp - pow(CAST(s AS DOUBLE), 2) / n)
-             / nullif(CAST(q AS DOUBLE)
-                      - pow(CAST(s AS DOUBLE), 2) / n, 0.0), 6)
-         AS dow_r2
-FROM per JOIN between_ ON per.event_type = between_.event_type
-"""
 
 
 def q_burst_intervals(spark, sf_dir):
@@ -1569,44 +1048,6 @@ def q_burst_intervals(spark, sf_dir):
     ).drop("grp")
 
 
-SQL_BURST_INTERVALS = """
-WITH days AS (
-  SELECT DISTINCT CAST(day(ts) AS INTEGER) AS day FROM events
-), types AS (
-  SELECT DISTINCT event_type FROM events
-), raw AS (
-  SELECT event_type, CAST(day(ts) AS INTEGER) AS day,
-         CAST(count(*) AS BIGINT) AS c
-  FROM events GROUP BY 1, 2
-), grid AS (
-  SELECT t.event_type, d.day, CAST(coalesce(r.c, 0) AS BIGINT) AS c
-  FROM types t CROSS JOIN days d
-  LEFT JOIN raw r ON r.event_type = t.event_type AND r.day = d.day
-), mom AS (
-  SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(c) AS BIGINT) AS s,
-         CAST(sum(c * c) AS BIGINT) AS q
-  FROM grid GROUP BY 1
-), flagged AS (
-  SELECT g.event_type, g.day, g.c
-  FROM grid g JOIN mom m ON g.event_type = m.event_type
-  WHERE g.c > CAST(s AS DOUBLE) / n
-            + 2.0 * sqrt((CAST(q AS DOUBLE)
-                          - pow(CAST(s AS DOUBLE), 2) / n)
-                         / (n - 1.0))
-), runs AS (
-  SELECT event_type, day, c,
-         CAST(day - row_number() OVER (PARTITION BY event_type
-              ORDER BY day) AS BIGINT) AS grp
-  FROM flagged
-)
-SELECT event_type, min(day) AS burst_start, max(day) AS burst_end,
-       CAST(count(*) AS BIGINT) AS burst_days,
-       CAST(max(c) AS BIGINT) AS peak_count
-FROM runs GROUP BY event_type, grp
-"""
-
-
 def q_wow_retention(spark, sf_dir):
     """WEEK-OVER-WEEK RETENTION curve: of the users active in week
     w, the share also active in week w+1 (full weeks 1-4) — the
@@ -1650,30 +1091,6 @@ def q_wow_retention(spark, sf_dir):
             6,
         ).alias("wow_retention"),
     )
-
-
-SQL_WOW_RETENTION = """
-WITH pres AS (
-  SELECT DISTINCT user_id,
-         CAST((day(ts) - 1) // 7 + 1 AS INTEGER) AS wk
-  FROM events WHERE day(ts) <= 28
-), per AS (
-  SELECT wk, CAST(count(*) AS BIGINT) AS n_active
-  FROM pres WHERE wk <= 3 GROUP BY 1
-), kept AS (
-  SELECT p.wk, CAST(count(*) AS BIGINT) AS n_retained
-  FROM pres p
-  WHERE p.wk <= 3 AND EXISTS (
-    SELECT 1 FROM pres q
-    WHERE q.user_id = p.user_id AND q.wk = p.wk + 1)
-  GROUP BY 1
-)
-SELECT per.wk AS week, per.n_active,
-       CAST(coalesce(kept.n_retained, 0) AS BIGINT) AS n_retained,
-       round(CAST(coalesce(kept.n_retained, 0) AS DOUBLE)
-             / per.n_active, 6) AS wow_retention
-FROM per LEFT JOIN kept ON per.wk = kept.wk
-"""
 
 
 def q_sign_test(spark, sf_dir):
@@ -1737,34 +1154,3 @@ def q_sign_test(spark, sf_dir):
             6,
         ).alias("z"),
     )
-
-
-SQL_SIGN_TEST = """
-WITH pu AS (
-  SELECT user_id,
-         CAST(sum(CASE WHEN day(ts) <= 7
-                  THEN CAST(round(value * 100) AS BIGINT)
-                  ELSE 0 END) AS BIGINT) AS w1,
-         CAST(sum(CASE WHEN day(ts) >= 22
-                  THEN CAST(round(value * 100) AS BIGINT)
-                  ELSE 0 END) AS BIGINT) AS w4
-  FROM events
-  WHERE day(ts) <= 7 OR day(ts) BETWEEN 22 AND 28
-  GROUP BY 1
-)
-SELECT CAST(count(*) AS BIGINT) AS n_users,
-       CAST(sum(CASE WHEN w4 > w1 THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_up,
-       CAST(sum(CASE WHEN w4 < w1 THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_down,
-       CAST(sum(CASE WHEN w4 = w1 THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_tied,
-       round((2.0 * sum(CASE WHEN w4 > w1 THEN 1 ELSE 0 END)
-              - (sum(CASE WHEN w4 > w1 THEN 1 ELSE 0 END)
-                 + sum(CASE WHEN w4 < w1 THEN 1 ELSE 0 END)))
-             / nullif(sqrt(CAST(
-                 sum(CASE WHEN w4 > w1 THEN 1 ELSE 0 END)
-                 + sum(CASE WHEN w4 < w1 THEN 1 ELSE 0 END)
-                 AS DOUBLE)), 0.0), 6) AS z
-FROM pu
-"""

@@ -25,7 +25,6 @@ MATERIALIZED CTEs.
 """
 from __future__ import annotations
 
-from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ._shared import _t
@@ -46,16 +45,6 @@ def _m_long(spark, sf_dir):
             ).alias("m")
         )
     )
-
-
-_SQL_M_LONG = """
-ml AS MATERIALIZED (
-  SELECT user_id, event_type AS item,
-         CAST(sum(CAST(round(value * 100) AS BIGINT)) AS DOUBLE)
-           AS m
-  FROM events GROUP BY 1, 2
-)
-"""
 
 
 def _factor(spark, sf_dir):
@@ -97,46 +86,6 @@ def _factor(spark, sf_dir):
     return ml, u, v, growth
 
 
-def _factor_sql():
-    rounds = ""
-    prevu = "u0"
-    for r in range(1, _SVD_ROUNDS + 1):
-        rounds += f""", vr{r} AS MATERIALIZED (
-  SELECT ml.item, sum(ml.m * p.u) AS vr
-  FROM ml JOIN {prevu} p USING (user_id)
-  GROUP BY 1
-), nv{r} AS MATERIALIZED (
-  SELECT sum(abs(vr)) AS nv FROM vr{r}
-), v{r} AS MATERIALIZED (
-  SELECT item, vr / nv AS v FROM vr{r} CROSS JOIN nv{r}
-), ur{r} AS MATERIALIZED (
-  SELECT ml.user_id, sum(ml.m * q.v) AS ur
-  FROM ml JOIN v{r} q USING (item)
-  GROUP BY 1
-), nu{r} AS MATERIALIZED (
-  SELECT sum(abs(ur)) AS nu FROM ur{r}
-), u{r} AS MATERIALIZED (
-  SELECT user_id, ur / nu AS u FROM ur{r} CROSS JOIN nu{r}
-)"""
-        prevu = f"u{r}"
-    return (
-        f"""WITH {_SQL_M_LONG},
-users AS MATERIALIZED (
-  SELECT DISTINCT user_id FROM ml
-), ucnt AS (
-  SELECT CAST(count(*) AS DOUBLE) AS k FROM users
-), u0 AS MATERIALIZED (
-  SELECT user_id, 1.0 / k AS u FROM users CROSS JOIN ucnt
-){rounds}""",
-        f"u{_SVD_ROUNDS}",
-        f"v{_SVD_ROUNDS}",
-        f"nu{_SVD_ROUNDS}",
-    )
-
-
-_SVD_PREFIX, _SVD_U, _SVD_V, _SVD_NU = _factor_sql()
-
-
 def q_svd_rank1(spark, sf_dir):
     """RANK-1 FACTOR item loadings with the final L1 growth."""
     _, _, v, growth = _factor(spark, sf_dir)
@@ -151,15 +100,6 @@ def q_svd_rank1(spark, sf_dir):
     )
 
 
-SQL_SVD_RANK1 = f"""
-{_SVD_PREFIX}
-SELECT item, round(v, 6) AS v_score,
-       round(nu, 4) AS l1_growth
-FROM {_SVD_V} CROSS JOIN {_SVD_NU}
-ORDER BY v_score DESC, item ASC
-"""
-
-
 def q_user_factor_topk(spark, sf_dir):
     """TOP-10 users by the left rank-1 factor u."""
     _, u, _, _ = _factor(spark, sf_dir)
@@ -168,14 +108,6 @@ def q_user_factor_topk(spark, sf_dir):
         .orderBy(F.desc("u_score"), F.asc("user_id"))
         .limit(_SVD_TOPK)
     )
-
-
-SQL_USER_FACTOR_TOPK = f"""
-{_SVD_PREFIX}
-SELECT user_id, round(u, 6) AS u_score
-FROM {_SVD_U}
-ORDER BY u_score DESC, user_id ASC LIMIT {_SVD_TOPK}
-"""
 
 
 def q_svd_recon_error(spark, sf_dir):
@@ -212,30 +144,3 @@ def q_svd_recon_error(spark, sf_dir):
             6,
         ).alias("rel_error"),
     )
-
-
-SQL_SVD_RECON_ERROR = f"""
-{_SVD_PREFIX},
-jm AS (
-  SELECT sum(ml.m * uu.u * vv.v) AS umv,
-         sum(ml.m * ml.m) AS fro2_m
-  FROM ml
-  JOIN {_SVD_U} uu USING (user_id)
-  JOIN {_SVD_V} vv USING (item)
-), nrm AS (
-  SELECT (SELECT sum(u * u) FROM {_SVD_U}) AS uu2,
-         (SELECT sum(v * v) FROM {_SVD_V}) AS vv2
-), s AS (
-  SELECT umv, fro2_m, uu2, vv2, umv / (uu2 * vv2) AS sigma
-  FROM jm CROSS JOIN nrm
-)
-SELECT round(sigma, 4) AS sigma,
-       round(sqrt(fro2_m), 4) AS fro_m,
-       round(sqrt(greatest(fro2_m - 2 * sigma * umv
-                  + sigma * sigma * uu2 * vv2, 0.0)), 4)
-         AS fro_resid,
-       round(sqrt(greatest(fro2_m - 2 * sigma * umv
-                  + sigma * sigma * uu2 * vv2, 0.0))
-             / sqrt(fro2_m), 6) AS rel_error
-FROM s
-"""

@@ -71,30 +71,6 @@ def _ptests(spark, sf_dir):
     )
 
 
-_SQL_PTESTS = """
-per AS (
-  SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-         CAST(sum(CASE WHEN n_chars >= 300 THEN 1 ELSE 0 END)
-              AS BIGINT) AS n_long
-  FROM documents GROUP BY 1
-), tot AS (
-  SELECT CAST(sum(n_docs) AS BIGINT) AS n_all,
-         CAST(sum(n_long) AS BIGINT) AS long_all,
-         CAST(count(*) AS BIGINT) AS m
-  FROM per
-), pt AS (
-  SELECT source, n_docs, n_long, m,
-         CAST(round(1e9 * 2.0 / (1.0 + exp(1.702 * abs(
-             (CAST(n_long AS DOUBLE) / n_docs
-              - (CAST(long_all AS DOUBLE) + 1.0) / (n_all + 2))
-             / sqrt((CAST(long_all AS DOUBLE) + 1.0) / (n_all + 2)
-                    * (1.0 - (CAST(long_all AS DOUBLE) + 1.0)
-                       / (n_all + 2)) / n_docs))))) AS BIGINT) AS p_ppb
-  FROM per CROSS JOIN tot
-)
-"""
-
-
 def q_benjamini_yekutieli(spark, sf_dir):
     """BENJAMINI-YEKUTIELI step-up: reject the k smallest p-values
     where k is the largest rank with p_ppb * m * Hm_e6 <= 1e14 * k
@@ -135,32 +111,6 @@ def q_benjamini_yekutieli(spark, sf_dir):
     )
 
 
-SQL_BENJAMINI_YEKUTIELI = f"""
-WITH {_SQL_PTESTS},
-hm AS (
-  SELECT pt.*,
-         CAST(round(1e6 * list_aggregate(
-             list_transform(generate_series(1, CAST(m AS INT)),
-                            i -> 1.0 / i), 'sum')) AS BIGINT) AS hm_e6
-  FROM pt
-), ranked AS (
-  SELECT source, n_docs, p_ppb, hm_e6, m,
-         CAST(row_number() OVER (ORDER BY p_ppb, source) AS BIGINT)
-           AS p_rank
-  FROM hm
-), km AS (
-  SELECT ranked.*,
-         max(CASE WHEN p_ppb * m * hm_e6
-                       <= 10000000000000 * {_BY_ALPHA_E1} * p_rank
-                  THEN p_rank END) OVER () AS k_max
-  FROM ranked
-)
-SELECT source, n_docs, p_ppb, p_rank, hm_e6,
-       CAST(p_rank <= coalesce(k_max, 0) AS INT) AS reject_by
-FROM km
-"""
-
-
 def q_storey_pi0(spark, sf_dir):
     """STOREY'S PI0: the estimated share of true nulls,
     #{p_ppb > 5e8} / (0.5 * m) capped at 1, and the implied count of
@@ -181,23 +131,6 @@ def q_storey_pi0(spark, sf_dir):
         F.round(pi0, 6).alias("pi0"),
         F.round(F.col("m") * (1 - pi0), 4).alias("est_signals"),
     )
-
-
-SQL_STOREY_PI0 = f"""
-WITH {_SQL_PTESTS}
-SELECT m,
-       CAST(sum(CASE WHEN p_ppb > {_STOREY_LAMBDA_PPB} THEN 1 ELSE 0 END)
-            AS BIGINT) AS n_above,
-       round(least(1.0,
-             CAST(sum(CASE WHEN p_ppb > {_STOREY_LAMBDA_PPB}
-                           THEN 1 ELSE 0 END) AS DOUBLE) / (0.5 * m)), 6)
-         AS pi0,
-       round(m * (1 - least(1.0,
-             CAST(sum(CASE WHEN p_ppb > {_STOREY_LAMBDA_PPB}
-                           THEN 1 ELSE 0 END) AS DOUBLE) / (0.5 * m))), 4)
-         AS est_signals
-FROM pt GROUP BY m
-"""
 
 
 def q_fs_weights(spark, sf_dir):
@@ -267,53 +200,3 @@ def q_fs_weights(spark, sf_dir):
     for r in rows[1:]:
         out = out.unionAll(r)
     return out
-
-
-SQL_FS_WEIGHTS = f"""
-WITH d AS (
-  SELECT doc_id, text,
-         CASE WHEN doc_id % {_ND_MOD} = 0 THEN text
-              ELSE text || ' zz7' END AS copy_text
-  FROM documents WHERE doc_id % {_ND_MOD} IN (0, 1)
-), paired AS (
-  SELECT d.*, lead(copy_text) OVER (ORDER BY doc_id) AS next_copy
-  FROM d
-), f AS (SELECT * FROM paired WHERE next_copy IS NOT NULL),
-agg AS (
-  SELECT CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(CASE WHEN sha256(text) = sha256(copy_text)
-                       THEN 1 ELSE 0 END) AS BIGINT) AS m_hash,
-         CAST(sum(CASE WHEN length(text) = length(copy_text)
-                       THEN 1 ELSE 0 END) AS BIGINT) AS m_len,
-         CAST(sum(CASE WHEN substring(text, 1, {_FS_PREFIX})
-                            = substring(copy_text, 1, {_FS_PREFIX})
-                       THEN 1 ELSE 0 END) AS BIGINT) AS m_prefix,
-         CAST(sum(CASE WHEN sha256(text) = sha256(next_copy)
-                       THEN 1 ELSE 0 END) AS BIGINT) AS u_hash,
-         CAST(sum(CASE WHEN length(text) = length(next_copy)
-                       THEN 1 ELSE 0 END) AS BIGINT) AS u_len,
-         CAST(sum(CASE WHEN substring(text, 1, {_FS_PREFIX})
-                            = substring(next_copy, 1, {_FS_PREFIX})
-                       THEN 1 ELSE 0 END) AS BIGINT) AS u_prefix
-  FROM f
-)
-SELECT 'hash' AS field, n, m_hash AS agree_m, u_hash AS agree_u,
-       round((m_hash + 1.0) / (n + 2), 6) AS m_prob,
-       round((u_hash + 1.0) / (n + 2), 6) AS u_prob,
-       round(ln(((m_hash + 1.0) / (n + 2)) / ((u_hash + 1.0) / (n + 2))),
-             6) AS weight
-FROM agg
-UNION ALL
-SELECT 'len', n, m_len, u_len,
-       round((m_len + 1.0) / (n + 2), 6),
-       round((u_len + 1.0) / (n + 2), 6),
-       round(ln(((m_len + 1.0) / (n + 2)) / ((u_len + 1.0) / (n + 2))), 6)
-FROM agg
-UNION ALL
-SELECT 'prefix', n, m_prefix, u_prefix,
-       round((m_prefix + 1.0) / (n + 2), 6),
-       round((u_prefix + 1.0) / (n + 2), 6),
-       round(ln(((m_prefix + 1.0) / (n + 2)) / ((u_prefix + 1.0)
-             / (n + 2))), 6)
-FROM agg
-"""

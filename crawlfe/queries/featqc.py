@@ -71,40 +71,6 @@ def _panel(spark, sf_dir, day_filter=None):
     return base.join(gaps, "user_id")
 
 
-def _sql_panel(day_cond="TRUE", pfx=""):
-    """Panel CTE chain; ``pfx`` namespaces the CTE names so two
-    panels can coexist in one WITH (split-half query)."""
-    return f"""
-{pfx}e AS (
-  SELECT user_id, dayofmonth(ts) AS day,
-         CAST(round(value * 100) AS BIGINT) AS cents,
-         (event_type = 'purchase') AS buy
-  FROM events WHERE {day_cond}
-), {pfx}gaps AS (
-  SELECT user_id,
-         CAST(coalesce(max(gap), 0) AS BIGINT) AS max_day_gap
-  FROM (
-    SELECT user_id,
-           day - lag(day) OVER (PARTITION BY user_id ORDER BY day)
-             AS gap
-    FROM (SELECT DISTINCT user_id, day FROM {pfx}e)
-  ) GROUP BY 1
-), {pfx}panel AS (
-  SELECT b.user_id, b.n_events, b.total_cents, b.n_purchases,
-         b.active_days, g.max_day_gap
-  FROM (
-    SELECT user_id,
-           CAST(count(*) AS BIGINT) AS n_events,
-           CAST(sum(cents) AS BIGINT) AS total_cents,
-           CAST(sum(CASE WHEN buy THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_purchases,
-           CAST(count(DISTINCT day) AS BIGINT) AS active_days
-    FROM {pfx}e GROUP BY 1
-  ) b JOIN {pfx}gaps g USING (user_id)
-)
-"""
-
-
 def _corr_long(spark, sf_dir):
     """Long-format |Pearson r|: feature-feature and feature-label."""
     p = _panel(spark, sf_dir)
@@ -143,41 +109,6 @@ def _corr_long(spark, sf_dir):
     for r in rows[1:]:
         out = out.unionByName(r)
     return out.localCheckpoint(eager=True)
-
-
-def _sql_corr_long():
-    names = list(_FEATS) + ["label"]
-    sel = []
-    for i, a in enumerate(names):
-        expr_a = (
-            f"CASE WHEN n_purchases >= {_FE_HEAVY} THEN 1.0 ELSE 0.0 END"
-            if a == "label"
-            else f"CAST({a} AS DOUBLE)"
-        )
-        sel.append(f"avg({expr_a}) AS m_{a}")
-        for b in names[i:]:
-            expr_b = (
-                f"CASE WHEN n_purchases >= {_FE_HEAVY} THEN 1.0 ELSE 0.0 END"
-                if b == "label"
-                else f"CAST({b} AS DOUBLE)"
-            )
-            sel.append(f"avg(({expr_a}) * ({expr_b})) AS x_{a}_{b}")
-    moments = "m AS MATERIALIZED (\n  SELECT " + ",\n         ".join(
-        sel
-    ) + "\n  FROM panel\n)"
-    unions = []
-    for i, a in enumerate(names):
-        for b in names[i + 1:]:
-            unions.append(
-                f"""SELECT '{a}' AS fa, '{b}' AS fb,
-       abs((x_{a}_{b} - m_{a} * m_{b})
-           / sqrt((x_{a}_{a} - m_{a} * m_{a})
-                  * (x_{b}_{b} - m_{b} * m_{b}))) AS r
-FROM m"""
-            )
-    return moments + ", corr AS MATERIALIZED (\n" + "\nUNION ALL\n".join(
-        unions
-    ) + "\n)"
 
 
 def q_mrmr_lite(spark, sf_dir):
@@ -241,48 +172,6 @@ def q_mrmr_lite(spark, sf_dir):
     return out.orderBy("step")
 
 
-def _mrmr_sql():
-    body = f"WITH {_sql_panel()}, {_sql_corr_long()}"
-    return f"""{body},
-rel AS MATERIALIZED (
-  SELECT fa AS f, r AS rel FROM corr WHERE fb = 'label'
-), ff AS MATERIALIZED (
-  SELECT fa, fb, r FROM corr WHERE fb <> 'label'
-  UNION ALL
-  SELECT fb AS fa, fa AS fb, r FROM corr WHERE fb <> 'label'
-), p1 AS MATERIALIZED (
-  SELECT f, rel AS score FROM rel
-  ORDER BY rel DESC, f ASC LIMIT 1
-), p2 AS MATERIALIZED (
-  SELECT rel.f, rel.rel - red.red AS score
-  FROM rel
-  JOIN (SELECT fa AS f, avg(r) AS red FROM ff
-        WHERE fb IN (SELECT f FROM p1) GROUP BY 1) red
-    ON rel.f = red.f
-  WHERE rel.f NOT IN (SELECT f FROM p1)
-  ORDER BY score DESC, rel.f ASC LIMIT 1
-), p3 AS MATERIALIZED (
-  SELECT rel.f, rel.rel - red.red AS score
-  FROM rel
-  JOIN (SELECT fa AS f, avg(r) AS red FROM ff
-        WHERE fb IN (SELECT f FROM p1 UNION SELECT f FROM p2)
-        GROUP BY 1) red
-    ON rel.f = red.f
-  WHERE rel.f NOT IN (SELECT f FROM p1 UNION SELECT f FROM p2)
-  ORDER BY score DESC, rel.f ASC LIMIT 1
-)
-SELECT CAST(1 AS BIGINT) AS step, f, round(score, 6) AS score FROM p1
-UNION ALL
-SELECT CAST(2 AS BIGINT), f, round(score, 6) FROM p2
-UNION ALL
-SELECT CAST(3 AS BIGINT), f, round(score, 6) FROM p3
-ORDER BY step
-"""
-
-
-SQL_MRMR_LITE = _mrmr_sql()
-
-
 def q_vif3_audit(spark, sf_dir):
     """EXACT VIFs for (n_events, total_cents, n_purchases) via the
     two-covariate closed form."""
@@ -327,50 +216,6 @@ def q_vif3_audit(spark, sf_dir):
     return out.orderBy("feature")
 
 
-def _vif_sql():
-    trio = ("n_events", "total_cents", "n_purchases")
-    picks = []
-    for a in trio:
-        for b in trio:
-            if a < b:
-                picks.append(
-                    f"max(CASE WHEN (fa = '{a}' AND fb = '{b}')"
-                    f" OR (fa = '{b}' AND fb = '{a}') "
-                    f"THEN r END) AS r_{a}_{b}"
-                )
-    unions = []
-    combos = [
-        (trio[0], trio[1], trio[2]),
-        (trio[1], trio[0], trio[2]),
-        (trio[2], trio[0], trio[1]),
-    ]
-    for tgt, c1, c2 in combos:
-        ra = f"r_{min(tgt, c1)}_{max(tgt, c1)}"
-        rb = f"r_{min(tgt, c2)}_{max(tgt, c2)}"
-        rc = f"r_{min(c1, c2)}_{max(c1, c2)}"
-        r2 = (
-            f"(({ra} * {ra} + {rb} * {rb}"
-            f" - 2 * {ra} * {rb} * {rc}) / (1 - {rc} * {rc}))"
-        )
-        unions.append(
-            f"""SELECT '{tgt}' AS feature,
-       round({r2}, 6) AS r2_on_others,
-       round(1 / (1 - {r2}), 4) AS vif
-FROM rmat"""
-        )
-    return (
-        f"WITH {_sql_panel()}, {_sql_corr_long()},\n"
-        "rmat AS (\n  SELECT "
-        + ",\n         ".join(picks)
-        + "\n  FROM corr\n)\n"
-        + "\nUNION ALL\n".join(unions)
-        + "\nORDER BY feature"
-    )
-
-
-SQL_VIF3_AUDIT = _vif_sql()
-
-
 def q_feature_stability(spark, sf_dir):
     """SPLIT-HALF RELIABILITY: per feature, Pearson r between the
     days-1-15 and days-16+ recomputations across users."""
@@ -412,33 +257,3 @@ def q_feature_stability(spark, sf_dir):
     for r_ in rows[1:]:
         out = out.unionByName(r_)
     return out.orderBy("feature")
-
-
-def _stab_sql():
-    unions = []
-    for f in _FEATS:
-        unions.append(
-            f"""SELECT '{f}' AS feature, CAST(count(*) AS BIGINT) AS n,
-       round((avg(CAST(a.{f} AS DOUBLE) * CAST(b.{f} AS DOUBLE))
-              - avg(CAST(a.{f} AS DOUBLE))
-                * avg(CAST(b.{f} AS DOUBLE)))
-             / sqrt((avg(CAST(a.{f} AS DOUBLE)
-                         * CAST(a.{f} AS DOUBLE))
-                     - avg(CAST(a.{f} AS DOUBLE))
-                       * avg(CAST(a.{f} AS DOUBLE)))
-                    * (avg(CAST(b.{f} AS DOUBLE)
-                           * CAST(b.{f} AS DOUBLE))
-                       - avg(CAST(b.{f} AS DOUBLE))
-                         * avg(CAST(b.{f} AS DOUBLE)))), 6)
-         AS split_half_r
-FROM pa a JOIN pb b USING (user_id)"""
-        )
-    pa_sql = _sql_panel("dayofmonth(ts) <= 15", pfx="a_")
-    pb_sql = _sql_panel("dayofmonth(ts) > 15", pfx="b_")
-    body = "\nUNION ALL\n".join(unions).replace(
-        "FROM pa a JOIN pb b", "FROM a_panel a JOIN b_panel b"
-    )
-    return f"WITH {pa_sql}, {pb_sql}\n{body}\nORDER BY feature"
-
-
-SQL_FEATURE_STABILITY = _stab_sql()

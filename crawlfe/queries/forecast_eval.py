@@ -44,15 +44,6 @@ def _daily(spark, sf_dir):
     )
 
 
-_SQL_DAILY = """
-daily AS (
-  SELECT CAST(dayofmonth(ts) AS BIGINT) AS day,
-         CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS x
-  FROM events GROUP BY 1
-)
-"""
-
-
 def q_prequential_error(spark, sf_dir):
     """PREQUENTIAL one-step-ahead error of the running-mean
     predictor: pred_t = cum_{t-1}/(t-1) (exact ints, one double
@@ -83,30 +74,6 @@ def q_prequential_error(spark, sf_dir):
         "abs_err",
         F.round(F.avg("abs_err").over(wmae), 4).alias("running_mae"),
     )
-
-
-SQL_PREQUENTIAL_ERROR = f"""
-WITH {_SQL_DAILY},
-r AS (
-  SELECT day, x,
-         CAST(sum(x) OVER (ORDER BY day
-              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-              AS BIGINT) AS cum_prev,
-         CAST(count(x) OVER (ORDER BY day
-              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-              AS BIGINT) AS n_prev
-  FROM daily
-), e AS (
-  SELECT day, x,
-         round(CAST(cum_prev AS DOUBLE) / n_prev, 4) AS pred,
-         round(abs(x - CAST(cum_prev AS DOUBLE) / n_prev), 4) AS abs_err
-  FROM r WHERE n_prev > 0
-)
-SELECT day, x, pred, abs_err,
-       round(avg(abs_err) OVER (ORDER BY day ROWS UNBOUNDED PRECEDING),
-             4) AS running_mae
-FROM e
-"""
 
 
 def q_mincer_zarnowitz(spark, sf_dir):
@@ -148,37 +115,6 @@ def q_mincer_zarnowitz(spark, sf_dir):
         F.round(r2, 6).alias("r2"),
         F.round((b - 1) / se_b, 6).alias("t_slope_eq_1"),
     )
-
-
-SQL_MINCER_ZARNOWITZ = f"""
-WITH {_SQL_DAILY},
-p AS (
-  SELECT day, x, lag(x, {_MZ_LAG}) OVER (ORDER BY day) AS f FROM daily
-), f AS (SELECT * FROM p WHERE f IS NOT NULL),
-m AS (
-  SELECT CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(f) AS BIGINT) AS sf, CAST(sum(x) AS BIGINT) AS sx,
-         CAST(sum(f * f) AS BIGINT) AS sff,
-         CAST(sum(f * x) AS BIGINT) AS sfx,
-         CAST(sum(x * x) AS BIGINT) AS sxx
-  FROM f
-), c AS (
-  SELECT n,
-         CAST(n * sfx - sf * sx AS DOUBLE) AS cfx,
-         CAST(n * sff - sf * sf AS DOUBLE) AS cff,
-         CAST(n * sxx - sx * sx AS DOUBLE) AS cxx,
-         sf, sx
-  FROM m
-)
-SELECT n,
-       round((sx - cfx / cff * sf) / CAST(n AS DOUBLE), 4) AS intercept,
-       round(cfx / cff, 6) AS slope,
-       round(cfx * cfx / (cff * cxx), 6) AS r2,
-       round((cfx / cff - 1)
-             / sqrt(cxx / n * (1 - cfx * cfx / (cff * cxx)) / (n - 2)
-                    / (cff / n)), 6) AS t_slope_eq_1
-FROM c
-"""
 
 
 def q_diebold_mariano(spark, sf_dir):
@@ -254,47 +190,3 @@ def q_diebold_mariano(spark, sf_dir):
         F.round(dbar / F.sqrt(v), 6).alias("dm_stat"),
         F.round(hln, 6).alias("hln_factor"),
     )
-
-
-SQL_DIEBOLD_MARIANO = f"""
-WITH {_SQL_DAILY},
-p AS (
-  SELECT day, x,
-         lag(x, 1) OVER (ORDER BY day) AS f1,
-         lag(x, {_MZ_LAG}) OVER (ORDER BY day) AS f2
-  FROM daily
-), dd AS (
-  SELECT day,
-         CAST(CAST(round((x - f1) / 100) AS BIGINT)
-              * CAST(round((x - f1) / 100) AS BIGINT)
-              - CAST(round((x - f2) / 100) AS BIGINT)
-              * CAST(round((x - f2) / 100) AS BIGINT) AS BIGINT) AS d
-  FROM p WHERE f1 IS NOT NULL AND f2 IS NOT NULL
-), m AS (
-  SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(d) AS BIGINT) AS s
-  FROM dd
-), g0 AS (
-  SELECT n, s,
-         sum((CAST(d AS DOUBLE) - CAST(s AS DOUBLE) / n)
-             * (CAST(d AS DOUBLE) - CAST(s AS DOUBLE) / n)) AS g0_sum
-  FROM dd CROSS JOIN m GROUP BY n, s
-), lagd AS (
-  SELECT day, d, lag(d) OVER (ORDER BY day) AS d_prev FROM dd
-), g1 AS (
-  SELECT sum((CAST(d AS DOUBLE) - CAST(s AS DOUBLE) / n)
-             * (CAST(d_prev AS DOUBLE) - CAST(s AS DOUBLE) / n))
-           AS g1_sum
-  FROM lagd CROSS JOIN m WHERE d_prev IS NOT NULL
-)
-SELECT n, s,
-       round(CAST(s AS DOUBLE) / n, 4) AS dbar,
-       round(g0_sum / n, 4) AS gamma0,
-       round(g1_sum / n, 4) AS gamma1,
-       round((CAST(s AS DOUBLE) / n)
-             / sqrt(greatest(g0_sum + 2 * g1_sum, g0_sum) / n / n), 6)
-         AS dm_stat,
-       round(sqrt((n + 1 - 2 * {float(_DM_H)}
-                   + {float(_DM_H)} * ({float(_DM_H)} - 1) / n) / n), 6)
-         AS hln_factor
-FROM g0 CROSS JOIN g1
-"""

@@ -41,15 +41,6 @@ def _daily(spark, sf_dir):
     )
 
 
-_SQL_DAILY = """
-daily AS (
-  SELECT CAST(dayofmonth(ts) AS BIGINT) AS day,
-         CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS x
-  FROM events GROUP BY 1
-)
-"""
-
-
 def _lagged(spark, sf_dir):
     d = _daily(spark, sf_dir)
     w = Window.orderBy("day")
@@ -59,16 +50,6 @@ def _lagged(spark, sf_dir):
         F.lag("x", 1).over(w).alias("f1"),
         F.lag("x", _SN_LAG).over(w).alias("f7"),
     )
-
-
-_SQL_LAGGED = f"""
-lagged AS (
-  SELECT day, x,
-         lag(x, 1) OVER (ORDER BY day) AS f1,
-         lag(x, {_SN_LAG}) OVER (ORDER BY day) AS f7
-  FROM daily
-)
-"""
 
 
 def q_mase_smape(spark, sf_dir):
@@ -105,28 +86,6 @@ def q_mase_smape(spark, sf_dir):
     ).orderBy("method")
 
 
-SQL_MASE_SMAPE = f"""
-WITH {_SQL_DAILY}, {_SQL_LAGGED},
-p AS (
-  SELECT * FROM lagged WHERE f1 IS NOT NULL AND f7 IS NOT NULL
-), panel AS (
-  SELECT 'naive1' AS method, CAST(count(*) AS BIGINT) AS n,
-         avg(abs(x - f1)) AS _mae, avg(abs(x - f1)) AS _den,
-         avg(200.0 * abs(x - f1) / (abs(x) + abs(f1))) AS _smape
-  FROM p
-  UNION ALL
-  SELECT 'snaive7' AS method, CAST(count(*) AS BIGINT) AS n,
-         avg(abs(x - f7)) AS _mae, avg(abs(x - f1)) AS _den,
-         avg(200.0 * abs(x - f7) / (abs(x) + abs(f7))) AS _smape
-  FROM p
-)
-SELECT method, n, round(_mae, 4) AS mae,
-       round(_mae / _den, 6) AS mase,
-       round(_smape, 6) AS smape
-FROM panel ORDER BY method
-"""
-
-
 def q_theil_u2(spark, sf_dir):
     """THEIL'S U2 of the weekly seasonal naive vs the no-change
     forecast: sqrt(sum(((f7 - x)/f1)^2) / sum(((x - f1)/f1)^2));
@@ -147,22 +106,6 @@ def q_theil_u2(spark, sf_dir):
         F.round(u2, 6).alias("u2"),
         (u2 < 1).alias("beats_naive"),
     )
-
-
-SQL_THEIL_U2 = f"""
-WITH {_SQL_DAILY}, {_SQL_LAGGED},
-p AS (
-  SELECT * FROM lagged WHERE f1 IS NOT NULL AND f7 IS NOT NULL
-), m AS (
-  SELECT CAST(count(*) AS BIGINT) AS n,
-         sum(pow(CAST(f7 - x AS DOUBLE) / f1, 2)) AS _sf,
-         sum(pow(CAST(x - f1 AS DOUBLE) / f1, 2)) AS _sa
-  FROM p
-)
-SELECT n, round(sqrt(_sf / _sa), 6) AS u2,
-       sqrt(_sf / _sa) < 1 AS beats_naive
-FROM m
-"""
 
 
 def q_forecast_encompassing(spark, sf_dir):
@@ -202,33 +145,3 @@ def q_forecast_encompassing(spark, sf_dir):
         F.round(lam, 6).alias("lambda"),
         F.round(lam / se, 6).alias("t_lambda"),
     )
-
-
-SQL_FORECAST_ENCOMPASSING = f"""
-WITH {_SQL_DAILY}, {_SQL_LAGGED},
-p AS (
-  SELECT x - f1 AS y, f7 - f1 AS z FROM lagged
-  WHERE f1 IS NOT NULL AND f7 IS NOT NULL
-), m AS (
-  SELECT CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(z) AS BIGINT) AS sz, CAST(sum(y) AS BIGINT) AS sy,
-         CAST(sum(z * z) AS BIGINT) AS szz,
-         CAST(sum(z * y) AS BIGINT) AS szy,
-         CAST(sum(y * y) AS BIGINT) AS syy
-  FROM p
-), c AS (
-  SELECT n, sz, sy,
-         CAST(n * szy - sz * sy AS DOUBLE) AS czy,
-         CAST(n * szz - sz * sz AS DOUBLE) AS czz,
-         CAST(n * syy - sy * sy AS DOUBLE) AS cyy
-  FROM m
-)
-SELECT n,
-       round((sy - (czy / czz) * sz) / CAST(n AS DOUBLE), 4)
-         AS intercept,
-       round(czy / czz, 6) AS "lambda",
-       round((czy / czz) /
-             sqrt(((cyy - czy * czy / czz) / n) / (n - 2)
-                  / (czz / n)), 6) AS t_lambda
-FROM c
-"""

@@ -61,22 +61,6 @@ def _phi_cdf_col(z):
     )
 
 
-def _phi_cdf_sql(z):
-    a1, a2, a3, a4, a5 = _AS_A
-    x = f"(abs({z}) * {_INV_SQRT2})"
-    t = f"(1.0 / (1.0 + {_AS_P} * {x}))"
-    poly = (
-        f"({a1} * {t} + {a2} * {t} * {t} + {a3} * {t} * {t} * {t}"
-        f" + {a4} * {t} * {t} * {t} * {t}"
-        f" + {a5} * {t} * {t} * {t} * {t} * {t})"
-    )
-    erf = f"(1.0 - {poly} * exp(-{x} * {x}))"
-    return (
-        f"(0.5 * (1.0 + CASE WHEN {z} < 0 THEN -{erf}"
-        f" ELSE {erf} END))"
-    )
-
-
 def _daily(spark, sf_dir):
     e = _t(spark, sf_dir, "events").select(
         F.dayofmonth(F.col("ts").cast("timestamp")).cast("bigint").alias(
@@ -87,15 +71,6 @@ def _daily(spark, sf_dir):
     return e.groupBy("day").agg(
         F.sum("cents").cast("bigint").alias("x")
     )
-
-
-_SQL_DAILY = """
-daily AS (
-  SELECT CAST(dayofmonth(ts) AS BIGINT) AS day,
-         CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS x
-  FROM events GROUP BY 1
-)
-"""
 
 
 def _scored(spark, sf_dir):
@@ -116,22 +91,6 @@ def _scored(spark, sf_dir):
         "sig",
         ((F.col("x") - F.col("f")) / F.col("sig")).alias("z"),
     )
-
-
-_SQL_SCORED = f"""
-{_SQL_DAILY},
-p AS (
-  SELECT day, x, f FROM (
-    SELECT day, x, lag(x, {_FP_LAG}) OVER (ORDER BY day) AS f
-    FROM daily
-  ) WHERE f IS NOT NULL
-), sig AS (
-  SELECT stddev_samp(CAST(x - f AS DOUBLE)) AS sig FROM p
-), scored AS (
-  SELECT day, x, f, sig, (x - f) / sig AS z
-  FROM p CROSS JOIN sig
-)
-"""
 
 
 def q_crps_eval(spark, sf_dir):
@@ -176,30 +135,6 @@ def q_crps_eval(spark, sf_dir):
             1 - F.col("sc") / F.col("sa"), 6
         ).alias("crps_skill_vs_mae"),
     )
-
-
-SQL_CRPS_EVAL = f"""
-WITH {_SQL_SCORED},
-r AS (
-  SELECT day,
-         sig * (z * (2 * {_phi_cdf_sql("z")} - 1)
-                + 2 * ({_INV_SQRT_2PI} * exp(-z * z / 2))
-                - {_INV_SQRT_PI}) AS crps,
-         CAST(abs(x - f) AS DOUBLE) AS ae
-  FROM scored
-), cums AS (
-  SELECT sum(crps) OVER (ORDER BY day ROWS UNBOUNDED PRECEDING)
-           AS sc,
-         sum(ae) OVER (ORDER BY day ROWS UNBOUNDED PRECEDING) AS sa,
-         CAST(count(*) OVER (ORDER BY day ROWS UNBOUNDED PRECEDING)
-              AS BIGINT) AS n,
-         row_number() OVER (ORDER BY day DESC) AS _rd
-  FROM r
-)
-SELECT n, round(sc / n, 4) AS mean_crps, round(sa / n, 4) AS mae,
-       round(1 - sc / sa, 6) AS crps_skill_vs_mae
-FROM cums WHERE _rd = 1
-"""
 
 
 def q_pit_histogram(spark, sf_dir):
@@ -250,36 +185,6 @@ def q_pit_histogram(spark, sf_dir):
     )
 
 
-SQL_PIT_HISTOGRAM = f"""
-WITH {_SQL_SCORED},
-binned AS (
-  SELECT CAST(least({_PIT_BINS - 1},
-              floor({_phi_cdf_sql("z")} * {_PIT_BINS})) AS BIGINT)
-           AS bin
-  FROM scored
-), counts AS (
-  SELECT bin, CAST(count(*) AS BIGINT) AS n FROM binned GROUP BY 1
-), grid AS (
-  SELECT CAST(unnest(generate_series(0, {_PIT_BINS - 1})) AS BIGINT)
-           AS bin
-), fullc AS (
-  SELECT grid.bin, CAST(coalesce(counts.n, 0) AS BIGINT) AS n
-  FROM grid LEFT JOIN counts USING (bin)
-), tot AS (
-  SELECT CAST(sum(n) AS BIGINT) AS tot FROM fullc
-), chi AS (
-  SELECT sum((n - CAST(tot AS DOUBLE) / {_PIT_BINS})
-             * (n - CAST(tot AS DOUBLE) / {_PIT_BINS})
-             / (CAST(tot AS DOUBLE) / {_PIT_BINS})) AS chi2
-  FROM fullc CROSS JOIN tot
-)
-SELECT bin, n, round(n / CAST(tot AS DOUBLE), 6) AS share,
-       round(chi2, 6) AS chi2_uniform
-FROM fullc CROSS JOIN tot CROSS JOIN chi
-ORDER BY bin
-"""
-
-
 def q_winkler_score(spark, sf_dir):
     """80% CENTRAL-INTERVAL evaluation: coverage, mean width and the
     mean Winkler interval score."""
@@ -328,36 +233,3 @@ def q_winkler_score(spark, sf_dir):
         F.round(F.col("sw") / F.col("n"), 4).alias("mean_width"),
         F.round(F.col("sk") / F.col("n"), 4).alias("mean_winkler"),
     )
-
-
-SQL_WINKLER_SCORE = f"""
-WITH {_SQL_SCORED},
-r AS (
-  SELECT day,
-         CAST(CASE WHEN x >= f - {_WK_Z} * sig
-                    AND x <= f + {_WK_Z} * sig
-              THEN 1 ELSE 0 END AS BIGINT) AS cov,
-         (f + {_WK_Z} * sig) - (f - {_WK_Z} * sig) AS wd,
-         ((f + {_WK_Z} * sig) - (f - {_WK_Z} * sig))
-         + CASE WHEN x < f - {_WK_Z} * sig
-                THEN 2 / {_WK_ALPHA} * ((f - {_WK_Z} * sig) - x)
-                ELSE 0.0 END
-         + CASE WHEN x > f + {_WK_Z} * sig
-                THEN 2 / {_WK_ALPHA} * (x - (f + {_WK_Z} * sig))
-                ELSE 0.0 END AS wk
-  FROM scored
-), cums AS (
-  SELECT CAST(sum(cov) OVER (ORDER BY day ROWS UNBOUNDED PRECEDING)
-              AS BIGINT) AS sc,
-         sum(wd) OVER (ORDER BY day ROWS UNBOUNDED PRECEDING) AS sw,
-         sum(wk) OVER (ORDER BY day ROWS UNBOUNDED PRECEDING) AS sk,
-         CAST(count(*) OVER (ORDER BY day ROWS UNBOUNDED PRECEDING)
-              AS BIGINT) AS n,
-         row_number() OVER (ORDER BY day DESC) AS _rd
-  FROM r
-)
-SELECT n, round(sc / CAST(n AS DOUBLE), 6) AS coverage,
-       round(sw / n, 4) AS mean_width,
-       round(sk / n, 4) AS mean_winkler
-FROM cums WHERE _rd = 1
-"""

@@ -50,14 +50,6 @@ def _counts(spark, sf_dir):
     )
 
 
-_SQL_COUNTS = """
-counts AS (
-  SELECT user_id, CAST(count(*) AS BIGINT) AS f
-  FROM events GROUP BY user_id
-)
-"""
-
-
 def _sign(prefix, j, v):
     # deterministic {-1,+1} from one md5 hex nibble's parity
     h = F.conv(
@@ -115,23 +107,6 @@ def q_freq_moments(spark, sf_dir):
     )
 
 
-SQL_FREQ_MOMENTS = """
-WITH f AS (
-  SELECT event_type, user_id, CAST(count(*) AS BIGINT) AS fv
-  FROM events GROUP BY 1, 2
-)
-SELECT event_type,
-       CAST(count(*) AS BIGINT) AS f0,
-       CAST(sum(fv) AS BIGINT) AS f1,
-       CAST(sum(fv * fv) AS BIGINT) AS f2,
-       CAST(sum(fv * fv * fv) AS BIGINT) AS f3,
-       CAST(max(fv) AS BIGINT) AS f_inf,
-       round(CAST(sum(fv * fv) AS DOUBLE)
-             / CAST(sum(fv) * sum(fv) AS DOUBLE), 6) AS gini_simpson
-FROM f GROUP BY event_type
-"""
-
-
 def q_ams_f2(spark, sf_dir):
     """AMS F2 SKETCH vs exact: R=16 deterministic {-1,+1} projections
     of the user frequency vector; Y_j = Z_j^2; mean and median-of-
@@ -186,44 +161,6 @@ def q_ams_f2(spark, sf_dir):
             6,
         ).alias("rel_err_mom"),
     )
-
-
-SQL_AMS_F2 = f"""
-WITH {_SQL_COUNTS},
-proj AS (
-  SELECT r.range AS j,
-         counts.f * ((CAST('0x' || substring(
-             md5('a' || CAST(r.range AS VARCHAR) || ':'
-                 || CAST(counts.user_id AS VARCHAR)), 1, 1) AS BIGINT)
-             % 2) * 2 - 1) AS zf
-  FROM counts CROSS JOIN range(1, {_AMS_R + 1}) r
-), z AS (
-  SELECT j, CAST(sum(zf) AS BIGINT) AS zj FROM proj GROUP BY j
-), y AS (
-  SELECT j, CAST((j - 1) // {_AMS_R // _AMS_G} AS BIGINT) AS g,
-         CAST(zj * zj AS BIGINT) AS yj
-  FROM z
-), gm AS (
-  SELECT g, CAST(sum(yj) AS BIGINT) AS sg FROM y GROUP BY g
-), mids AS (
-  SELECT sg, row_number() OVER (ORDER BY sg, g) AS rn FROM gm
-), mom AS (
-  SELECT CAST(sum(sg) AS DOUBLE) / (2.0 * {_AMS_R // _AMS_G}) AS mom_est
-  FROM mids WHERE rn IN ({_AMS_G // 2}, {_AMS_G // 2 + 1})
-), mean AS (
-  SELECT CAST(sum(yj) AS DOUBLE) / {float(_AMS_R)} AS mean_est FROM y
-), exact AS (
-  SELECT CAST(count(*) AS BIGINT) AS v_distinct,
-         CAST(sum(f * f) AS BIGINT) AS f2_exact
-  FROM counts
-)
-SELECT v_distinct, f2_exact,
-       round(mean_est, 4) AS mean_est,
-       round(mom_est, 4) AS mom_est,
-       round(abs(mean_est - f2_exact) / f2_exact, 6) AS rel_err_mean,
-       round(abs(mom_est - f2_exact) / f2_exact, 6) AS rel_err_mom
-FROM exact CROSS JOIN mean CROSS JOIN mom
-"""
 
 
 def q_countsketch_freq(spark, sf_dir):
@@ -283,35 +220,3 @@ def q_countsketch_freq(spark, sf_dir):
         F.col("est_j").alias("cs_est"),
         (F.col("est_j") - F.col("f")).cast("bigint").alias("err"),
     )
-
-
-SQL_COUNTSKETCH_FREQ = f"""
-WITH {_SQL_COUNTS},
-vj AS (
-  SELECT counts.user_id, counts.f, r.range AS j,
-         CAST('0x' || substring(
-             md5('h' || CAST(r.range AS VARCHAR) || ':'
-                 || CAST(counts.user_id AS VARCHAR)), 1, 8) AS BIGINT)
-           % {_CS_W} AS b,
-         (CAST('0x' || substring(
-             md5('g' || CAST(r.range AS VARCHAR) || ':'
-                 || CAST(counts.user_id AS VARCHAR)), 1, 1) AS BIGINT)
-             % 2) * 2 - 1 AS s
-  FROM counts CROSS JOIN range(1, {_CS_D + 1}) r
-), tab AS (
-  SELECT j, b, CAST(sum(f * s) AS BIGINT) AS cjb FROM vj GROUP BY j, b
-), est AS (
-  SELECT vj.user_id, vj.f, vj.j,
-         CAST(vj.s * tab.cjb AS BIGINT) AS est_j
-  FROM vj JOIN tab ON vj.j = tab.j AND vj.b = tab.b
-), med AS (
-  SELECT user_id, f, est_j,
-         row_number() OVER (PARTITION BY user_id
-                            ORDER BY est_j, j) AS rn
-  FROM est
-)
-SELECT user_id, f AS f_exact, est_j AS cs_est,
-       CAST(est_j - f AS BIGINT) AS err
-FROM med WHERE rn = {(_CS_D + 1) // 2}
-ORDER BY f DESC, user_id ASC LIMIT {_CS_TOPK}
-"""

@@ -22,7 +22,6 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ._shared import _t
 from .graph_sources import SQL_DOC_EDGES, _doc_edges
 
 _EV_ROUNDS = 8
@@ -73,42 +72,6 @@ def q_eigenvector_centrality(spark, sf_dir):
     )
 
 
-def _ev_sql():
-    rounds = ""
-    prev = "x0"
-    for r in range(1, _EV_ROUNDS + 1):
-        rounds += f""", n{r} AS MATERIALIZED (
-  SELECT e.dst AS node, sum(p.x) AS xr
-  FROM edges e JOIN {prev} p ON e.src = p.node
-  GROUP BY 1
-), f{r} AS MATERIALIZED (
-  SELECT nodes.node, coalesce(n{r}.xr, 0.0) AS xr
-  FROM nodes LEFT JOIN n{r} USING (node)
-), t{r} AS MATERIALIZED (
-  SELECT sum(xr) AS tot FROM f{r}
-), x{r} AS MATERIALIZED (
-  SELECT node, xr / tot AS x FROM f{r} CROSS JOIN t{r}
-)"""
-        prev = f"x{r}"
-    return f"""
-WITH edges AS MATERIALIZED (
-{SQL_DOC_EDGES}
-), nodes AS MATERIALIZED (
-  SELECT DISTINCT node FROM (
-    SELECT src AS node FROM edges
-    UNION SELECT dst AS node FROM edges)
-), x0 AS MATERIALIZED (
-  SELECT node, 1.0 AS x FROM nodes
-){rounds}
-SELECT node AS doc_id, round(x, 6) AS score
-FROM {prev}
-ORDER BY score DESC, doc_id ASC LIMIT {_CENT_TOPK}
-"""
-
-
-SQL_EIGENVECTOR_CENTRALITY = _ev_sql()
-
-
 def q_katz_centrality(spark, sf_dir):
     """KATZ CENTRALITY: truncated series sum alpha^k (A^T)^k 1,
     k = 0..6, alpha = 0.05; top-10 docs."""
@@ -155,43 +118,6 @@ def q_katz_centrality(spark, sf_dir):
     )
 
 
-def _katz_sql():
-    rounds = ""
-    prevb, preva = "b0", "a0"
-    for r in range(1, _KATZ_TERMS + 1):
-        rounds += f""", r{r} AS MATERIALIZED (
-  SELECT e.dst AS node, {_KATZ_ALPHA} * sum(p.b) AS br
-  FROM edges e JOIN {prevb} p ON e.src = p.node
-  GROUP BY 1
-), b{r} AS MATERIALIZED (
-  SELECT nodes.node, coalesce(r{r}.br, 0.0) AS b
-  FROM nodes LEFT JOIN r{r} USING (node)
-), a{r} AS MATERIALIZED (
-  SELECT {preva}.node, {preva}.katz + b{r}.b AS katz
-  FROM {preva} JOIN b{r} USING (node)
-)"""
-        prevb, preva = f"b{r}", f"a{r}"
-    return f"""
-WITH edges AS MATERIALIZED (
-{SQL_DOC_EDGES}
-), nodes AS MATERIALIZED (
-  SELECT DISTINCT node FROM (
-    SELECT src AS node FROM edges
-    UNION SELECT dst AS node FROM edges)
-), b0 AS MATERIALIZED (
-  SELECT node, 1.0 AS b FROM nodes
-), a0 AS MATERIALIZED (
-  SELECT node, 1.0 AS katz FROM nodes
-){rounds}
-SELECT node AS doc_id, round(katz, 6) AS katz
-FROM {preva}
-ORDER BY katz DESC, doc_id ASC LIMIT {_CENT_TOPK}
-"""
-
-
-SQL_KATZ_CENTRALITY = _katz_sql()
-
-
 def q_rich_club(spark, sf_dir):
     """RICH-CLUB coefficient on the undirected simple projection at
     degree thresholds 2..5."""
@@ -232,32 +158,3 @@ def q_rich_club(spark, sf_dir):
     return spark.createDataFrame(
         outs, "k bigint, n_nodes bigint, n_edges bigint, phi double"
     ).orderBy("k")
-
-
-SQL_RICH_CLUB = f"""
-WITH edges AS MATERIALIZED (
-{SQL_DOC_EDGES}
-), und AS MATERIALIZED (
-  SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v
-  FROM edges WHERE src <> dst
-), deg AS MATERIALIZED (
-  SELECT node, CAST(count(*) AS BIGINT) AS deg FROM (
-    SELECT u AS node FROM und UNION ALL SELECT v AS node FROM und
-  ) GROUP BY 1
-), ks(k) AS (VALUES {", ".join(f"({k})" for k in _RC_KS)}),
-rc AS (
-  SELECT ks.k,
-         CAST((SELECT count(*) FROM deg WHERE deg > ks.k) AS BIGINT)
-           AS n_nodes,
-         CAST((SELECT count(*) FROM und
-               JOIN deg du ON du.node = und.u AND du.deg > ks.k
-               JOIN deg dv ON dv.node = und.v AND dv.deg > ks.k)
-              AS BIGINT) AS n_edges
-  FROM ks
-)
-SELECT CAST(k AS BIGINT) AS k, n_nodes, n_edges,
-       CASE WHEN n_nodes > 1
-            THEN round(2.0 * n_edges / (n_nodes * (n_nodes - 1)), 6)
-            ELSE 0.0 END AS phi
-FROM rc ORDER BY k
-"""

@@ -5,16 +5,9 @@ Split from the former crawlfe/queries.py monolith (r4); bodies unchanged.
 from __future__ import annotations
 
 import pandas as pd  # noqa: F401
-from pyspark.sql import DataFrame, SparkSession, Window  # noqa: F401
 from pyspark.sql import functions as F  # noqa: F401
-from pyspark.sql import types as T  # noqa: F401
 
-from .. import clean  # noqa: F401
-from .. import windows as W  # noqa: F401
-from ..asof import asof_join  # noqa: F401
-from ..textfeat import featurize_batch  # noqa: F401
 from ._shared import SESSION_GAP_S, _scratch_dir, _t, _us  # noqa: F401
-
 
 
 # --------------------------------------------------------------------------
@@ -83,26 +76,6 @@ def q_graph_degrees(spark, sf_dir):
     )
 
 
-SQL_GRAPH_DEGREES = f"""
-WITH edges AS ({SQL_DOC_EDGES}),
-od AS (SELECT src AS doc_id, count(*) AS out_deg FROM edges GROUP BY src),
-id_ AS (SELECT dst AS doc_id, count(*) AS in_deg FROM edges GROUP BY dst),
-th AS (
-  SELECT e1.src AS doc_id, count(DISTINCT e2.dst) AS reach2
-  FROM edges e1 JOIN edges e2 ON e1.dst = e2.src
-  GROUP BY e1.src
-)
-SELECT d.doc_id,
-       CAST(COALESCE(out_deg, 0) AS BIGINT) AS out_deg,
-       CAST(COALESCE(in_deg, 0) AS BIGINT) AS in_deg,
-       CAST(COALESCE(reach2, 0) AS BIGINT) AS reach2
-FROM documents d
-LEFT JOIN od ON d.doc_id = od.doc_id
-LEFT JOIN id_ ON d.doc_id = id_.doc_id
-LEFT JOIN th ON d.doc_id = th.doc_id
-"""
-
-
 def q_graph_triangles(spark, sf_dir):
     """Global triangle count (the classic shuffle-heavy graph
     benchmark; clustering signal for link spam). Edges are first
@@ -130,19 +103,6 @@ def q_graph_triangles(spark, sf_dir):
     return tri.agg(F.count(F.lit(1)).alias("n_triangles"))
 
 
-SQL_GRAPH_TRIANGLES = f"""
-WITH edges AS ({SQL_DOC_EDGES}),
-und AS (
-  SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-  FROM edges WHERE src != dst
-)
-SELECT CAST(count(*) AS BIGINT) AS n_triangles
-FROM und e1
-JOIN und e2 ON e1.b = e2.a
-JOIN und e3 ON e3.a = e1.a AND e3.b = e2.b
-"""
-
-
 def q_weak_labels(spark, sf_dir):
     """Weak-supervision label model (Snorkel-style): three cheap
     labeling functions — length, language whitelist, token count —
@@ -161,23 +121,6 @@ def q_weak_labels(spark, sf_dir):
         ((lf1 + lf2 + lf3) >= 2).cast("int").alias("vote"),
         ((lf1 == lf2) & (lf2 == lf3)).cast("int").alias("unanimous"),
     )
-
-
-SQL_WEAK_LABELS = """
-SELECT doc_id,
-       CAST(n_chars > 300 AS INT) AS lf_len,
-       CAST(lang IN ('en', 'de') AS INT) AS lf_lang,
-       CAST(len(regexp_split_to_array(trim(text), '\\s+')) > 50 AS INT)
-         AS lf_tok,
-       CAST((CAST(n_chars > 300 AS INT) + CAST(lang IN ('en', 'de') AS INT)
-             + CAST(len(regexp_split_to_array(trim(text), '\\s+')) > 50
-                    AS INT)) >= 2 AS INT) AS vote,
-       CAST(CAST(n_chars > 300 AS INT) = CAST(lang IN ('en', 'de') AS INT)
-            AND CAST(lang IN ('en', 'de') AS INT)
-                = CAST(len(regexp_split_to_array(trim(text), '\\s+')) > 50
-                       AS INT) AS INT) AS unanimous
-FROM documents
-"""
 
 
 def q_calibration_bins(spark, sf_dir):
@@ -207,22 +150,6 @@ def q_calibration_bins(spark, sf_dir):
         F.round(F.avg("score"), 6).alias("mean_score"),
         F.round(F.avg("label"), 6).alias("pos_rate"),
     )
-
-
-SQL_CALIBRATION_BINS = """
-WITH b AS (
-  SELECT CAST((CAST('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 4)
-                    AS BIGINT) * 10) // 65536 AS INT) AS bin,
-         CAST('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 4)
-              AS BIGINT) / 65536.0 AS score,
-         CAST(n_chars > 300 AS INT) AS label
-  FROM documents
-)
-SELECT bin, CAST(count(*) AS BIGINT) AS n,
-       round(avg(score), 6) AS mean_score,
-       round(avg(CAST(label AS DOUBLE)), 6) AS pos_rate
-FROM b GROUP BY bin
-"""
 
 
 # --------------------------------------------------------------------------

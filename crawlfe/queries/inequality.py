@@ -49,17 +49,6 @@ def _user_panel(spark, sf_dir):
     )
 
 
-_SQL_USER_PANEL = """
-u AS (
-  SELECT user_id,
-         CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS y,
-         CAST(count(*) AS BIGINT) AS x,
-         (user_id % 2 = 0) AS a
-  FROM events GROUP BY 1
-)
-"""
-
-
 def q_oaxaca_blinder(spark, sf_dir):
     """TWO-FOLD OAXACA-BLINDER of the arm gap in user spend with
     event count as the covariate (reference coefficients: arm B)."""
@@ -114,37 +103,6 @@ def q_oaxaca_blinder(spark, sf_dir):
         F.round(coeff, 4).alias("coefficients"),
         F.round(endow + coeff, 4).alias("check_sum"),
     )
-
-
-SQL_OAXACA_BLINDER = f"""
-WITH {_SQL_USER_PANEL},
-m AS (
-  SELECT a, CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
-         CAST(sum(x * x) AS BIGINT) AS sxx,
-         CAST(sum(x * y) AS BIGINT) AS sxy
-  FROM u GROUP BY 1
-), g AS (
-  SELECT a, CAST(sx AS DOUBLE) / n AS mx,
-         CAST(sy AS DOUBLE) / n AS my,
-         CAST(n * sxy - sx * sy AS DOUBLE)
-           / (n * sxx - sx * sx) AS b
-  FROM m
-), g2 AS (
-  SELECT a, mx, my, b, my - b * mx AS icpt FROM g
-), wide AS (
-  SELECT ga.mx AS mx_a, ga.my AS my_a, ga.b AS b_a, ga.icpt AS i_a,
-         gb.mx AS mx_b, gb.my AS my_b, gb.b AS b_b, gb.icpt AS i_b
-  FROM g2 ga CROSS JOIN g2 gb
-  WHERE ga.a AND NOT gb.a
-)
-SELECT round(my_a - my_b, 4) AS gap,
-       round((mx_a - mx_b) * b_b, 4) AS endowments,
-       round(mx_a * (b_a - b_b) + (i_a - i_b), 4) AS coefficients,
-       round((mx_a - mx_b) * b_b
-             + mx_a * (b_a - b_b) + (i_a - i_b), 4) AS check_sum
-FROM wide
-"""
 
 
 def q_theil_decomp(spark, sf_dir):
@@ -206,34 +164,6 @@ def q_theil_decomp(spark, sf_dir):
             F.col("within") + F.col("between"), 6
         ).alias("theil_total"),
     )
-
-
-SQL_THEIL_DECOMP = """
-WITH d AS (
-  SELECT source, CAST(n_chars AS DOUBLE) AS v FROM documents
-), tot AS (
-  SELECT CAST(count(*) AS BIGINT) AS n, sum(v) AS sv FROM d
-), gsum AS (
-  SELECT source, CAST(count(*) AS BIGINT) AS ng, sum(v) AS svg
-  FROM d GROUP BY 1
-), tw AS (
-  SELECT d.source,
-         sum(d.v * ln(d.v / (g.svg / g.ng))) / max(g.svg) AS t_g
-  FROM d JOIN gsum g USING (source)
-  GROUP BY 1
-), parts AS (
-  SELECT g.source, g.ng, g.svg, tw.t_g,
-         g.svg / tot.sv AS s_g, tot.n
-  FROM gsum g JOIN tw USING (source) CROSS JOIN tot
-)
-SELECT round(sum(s_g * t_g), 6) AS theil_within,
-       round(sum(s_g * ln(s_g / (ng / CAST(n AS DOUBLE)))), 6)
-         AS theil_between,
-       round(sum(s_g * t_g)
-             + sum(s_g * ln(s_g / (ng / CAST(n AS DOUBLE)))), 6)
-         AS theil_total
-FROM parts
-"""
 
 
 def q_lorenz_dominance(spark, sf_dir):
@@ -311,40 +241,3 @@ def q_lorenz_dominance(spark, sf_dir):
         .otherwise(F.lit("curves_cross"))
         .alias("verdict"),
     ).orderBy("decile")
-
-
-SQL_LORENZ_DOMINANCE = f"""
-WITH {_SQL_USER_PANEL},
-r AS (
-  SELECT a, y,
-         CAST(row_number() OVER (PARTITION BY a ORDER BY y, user_id)
-              AS DOUBLE) AS r,
-         CAST(sum(y) OVER (PARTITION BY a ORDER BY y, user_id
-              ROWS UNBOUNDED PRECEDING) AS DOUBLE) AS cum,
-         CAST(count(*) OVER (PARTITION BY a) AS DOUBLE) AS n,
-         CAST(sum(y) OVER (PARTITION BY a) AS DOUBLE) AS tot
-  FROM u
-), grid AS (
-  SELECT CAST(unnest(generate_series(1, {_LD_DECILES})) AS BIGINT)
-           AS decile
-), dec AS (
-  SELECT r.a, grid.decile, r.cum / r.tot AS share
-  FROM r CROSS JOIN grid
-  WHERE r.r = CAST(ceil(grid.decile * r.n / {_LD_DECILES})
-                   AS DOUBLE)
-), piv AS (
-  SELECT decile,
-         round(max(CASE WHEN a THEN share END), 6) AS share_even,
-         round(max(CASE WHEN NOT a THEN share END), 6) AS share_odd
-  FROM dec GROUP BY 1
-)
-SELECT decile, share_even, share_odd,
-       CASE WHEN min(CASE WHEN share_even >= share_odd
-                     THEN 1 ELSE 0 END) OVER () = 1
-            THEN 'even_dominates'
-            WHEN min(CASE WHEN share_odd >= share_even
-                     THEN 1 ELSE 0 END) OVER () = 1
-            THEN 'odd_dominates'
-            ELSE 'curves_cross' END AS verdict
-FROM piv ORDER BY decile
-"""

@@ -75,27 +75,6 @@ def q_compression_ratio_est(spark, sf_dir):
     return out.orderBy("col")
 
 
-SQL_COMPRESSION_RATIO_EST = "\nUNION ALL\n".join(
-    f"""
-SELECT '{c}' AS col, CAST(count(*) AS BIGINT) AS n,
-       CAST(count(DISTINCT v) AS BIGINT) AS ndv,
-       CAST(ceil(log2(CAST(count(DISTINCT v) AS DOUBLE)))
-            AS BIGINT) AS dict_bits,
-       CAST(sum(CASE WHEN pv IS NULL OR v <> pv
-                THEN 1 ELSE 0 END) AS BIGINT) AS runs,
-       round(count(*) / CAST(sum(CASE WHEN pv IS NULL OR v <> pv
-                             THEN 1 ELSE 0 END) AS DOUBLE), 2)
-         AS rle_factor
-FROM (
-  SELECT CAST({c} AS VARCHAR) AS v,
-         lag(CAST({c} AS VARCHAR))
-           OVER (ORDER BY l_orderkey, l_linenumber) AS pv
-  FROM lineitem
-)"""
-    for c in _CR_COLS
-) + "\nORDER BY col"
-
-
 def q_bucket_skew_plan(spark, sf_dir):
     """HASH-BUCKET fill profile for l_orderkey % 32."""
     li = _t(spark, sf_dir, "lineitem")
@@ -113,22 +92,6 @@ def q_bucket_skew_plan(spark, sf_dir):
             6,
         ).alias("cv"),
     )
-
-
-SQL_BUCKET_SKEW_PLAN = f"""
-WITH b AS (
-  SELECT CAST(l_orderkey % {_BK_N} AS BIGINT) AS bkt,
-         CAST(count(*) AS BIGINT) AS c
-  FROM lineitem GROUP BY 1
-)
-SELECT CAST(count(*) AS BIGINT) AS n_buckets,
-       CAST(min(c) AS BIGINT) AS min_fill,
-       CAST(max(c) AS BIGINT) AS max_fill,
-       round(avg(c), 2) AS avg_fill,
-       round(max(c) / avg(c), 6) AS skew_ratio,
-       round(stddev_samp(CAST(c AS DOUBLE)) / avg(c), 6) AS cv
-FROM b
-"""
 
 
 def q_minmax_prune_benefit(spark, sf_dir):
@@ -181,51 +144,3 @@ def q_minmax_prune_benefit(spark, sf_dir):
     for r_ in rows[1:]:
         out = out.unionByName(r_)
     return out.orderBy("ordering")
-
-
-SQL_MINMAX_PRUNE_BENEFIT = f"""
-WITH li AS MATERIALIZED (
-  SELECT CAST(datediff('day', DATE '1992-01-01',
-              CAST(l_shipdate AS DATE)) AS BIGINT) AS sd,
-         l_orderkey, l_linenumber
-  FROM lineitem
-), base AS (
-  SELECT min(sd) AS d0 FROM li
-), c1 AS (
-  SELECT chunk, min(sd) AS mn, max(sd) AS mx FROM (
-    SELECT sd,
-           floor((row_number() OVER (ORDER BY sd, l_orderkey,
-                  l_linenumber) - 1) / {_CHUNK}) AS chunk
-    FROM li
-  ) GROUP BY 1
-), c2 AS (
-  SELECT chunk, min(sd) AS mn, max(sd) AS mx FROM (
-    SELECT sd,
-           floor((row_number() OVER (ORDER BY l_orderkey,
-                  l_linenumber) - 1) / {_CHUNK}) AS chunk
-    FROM li
-  ) GROUP BY 1
-)
-SELECT 'orderkey_sorted' AS ordering,
-       CAST(count(*) AS BIGINT) AS n_chunks,
-       CAST(sum(CASE WHEN mx < d0 + {_PRUNE_LO_D}
-                      OR mn > d0 + {_PRUNE_HI_D}
-                THEN 1 ELSE 0 END) AS BIGINT) AS n_pruned,
-       round(sum(CASE WHEN mx < d0 + {_PRUNE_LO_D}
-                       OR mn > d0 + {_PRUNE_HI_D}
-                 THEN 1 ELSE 0 END)
-             / CAST(count(*) AS DOUBLE), 6) AS prune_rate
-FROM c2 CROSS JOIN base
-UNION ALL
-SELECT 'shipdate_sorted',
-       CAST(count(*) AS BIGINT),
-       CAST(sum(CASE WHEN mx < d0 + {_PRUNE_LO_D}
-                      OR mn > d0 + {_PRUNE_HI_D}
-                THEN 1 ELSE 0 END) AS BIGINT),
-       round(sum(CASE WHEN mx < d0 + {_PRUNE_LO_D}
-                       OR mn > d0 + {_PRUNE_HI_D}
-                 THEN 1 ELSE 0 END)
-             / CAST(count(*) AS DOUBLE), 6)
-FROM c1 CROSS JOIN base
-ORDER BY ordering
-"""

@@ -107,38 +107,6 @@ def q_dsir_weights(spark, sf_dir):
     )
 
 
-SQL_DSIR_WEIGHTS = f"""
-WITH toks AS (
-  SELECT doc_id, lang,
-         CAST('0x' || substring(md5(token), 1, 8) AS BIGINT)
-           % {_DSIR_BUCKETS} AS b
-  FROM (SELECT doc_id, lang,
-               unnest(string_split_regex(trim(text), '\\s+')) AS token
-        FROM documents)
-  WHERE token <> ''
-), raw AS (SELECT b, count(*) AS cr FROM toks GROUP BY b),
-tgt AS (SELECT b, count(*) AS ct FROM toks WHERE lang = 'en'
-        GROUP BY b),
-tots AS (
-  SELECT (SELECT sum(cr) FROM raw) AS tr,
-         (SELECT sum(ct) FROM tgt) AS tt
-), dist AS (
-  SELECT raw.b,
-         CAST(round(ln(((coalesce(ct, 0) + 1)
-                        / CAST(tt + {_DSIR_BUCKETS} AS DOUBLE))
-                       / ((cr + 1)
-                          / CAST(tr + {_DSIR_BUCKETS} AS DOUBLE)))
-                    * 10000) AS BIGINT) AS lr_e4
-  FROM raw LEFT JOIN tgt ON raw.b = tgt.b CROSS JOIN tots
-)
-SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-       round(sum(lr_e4) / 10000.0, 4) AS logw,
-       sum(lr_e4) > 0 AS keep
-FROM toks JOIN dist ON toks.b = dist.b
-GROUP BY doc_id
-"""
-
-
 def q_pass_at_k(spark, sf_dir):
     """pass@3 per task (user): 1 − C(n−c,3)/C(n,3) as one exact
     integer rational — numerator (n−c)(n−c−1)(n−c−2), denominator
@@ -170,22 +138,6 @@ def q_pass_at_k(spark, sf_dir):
         F.col("c").cast("bigint").alias("c"),
         F.round(1.0 - num / den.cast("double"), 6).alias("pass_at_k"),
     )
-
-
-SQL_PASS_AT_K = f"""
-WITH g AS (
-  SELECT user_id, CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-              AS BIGINT) AS c
-  FROM events GROUP BY user_id
-)
-SELECT user_id, n, c,
-       round(1.0 - (greatest(n - c, 0) * greatest(n - c - 1, 0)
-                    * greatest(n - c - 2, 0))
-                   / CAST(n * (n - 1) * (n - 2) AS DOUBLE), 6)
-         AS pass_at_k
-FROM g WHERE n >= {_PASSK_K}
-"""
 
 
 def q_err_ranking(spark, sf_dir):
@@ -240,33 +192,3 @@ def q_err_ranking(spark, sf_dir):
             F.round(F.sum("term"), 6).alias("err"),
         )
     )
-
-
-SQL_ERR_RANKING = f"""
-WITH e AS (
-  SELECT CAST(extract(day FROM ts) AS INTEGER) AS day, event_id,
-         CAST(round(value * 100) AS BIGINT) AS cents
-  FROM events
-), ranked AS (
-  SELECT day, event_id, cents,
-         row_number() OVER (PARTITION BY day
-                            ORDER BY cents DESC, event_id ASC) AS r
-  FROM e
-), top AS (
-  SELECT day, r,
-         (pow(2.0, least({_ERR_GMAX}, cents // {_ERR_BIN_CENTS})) - 1)
-           / pow(2.0, {_ERR_GMAX}) AS rel
-  FROM ranked WHERE r <= {_ERR_TOPN}
-), terms AS (
-  SELECT day, r, rel,
-         exp(coalesce(sum(ln(1.0 - rel))
-                      OVER (PARTITION BY day ORDER BY r
-                            ROWS BETWEEN UNBOUNDED PRECEDING
-                            AND 1 PRECEDING), 0.0)) AS carry
-  FROM top
-)
-SELECT day, CAST(count(*) AS BIGINT) AS n_ranked,
-       round(sum(rel / r * carry), 6) AS err
-FROM terms
-GROUP BY day
-"""

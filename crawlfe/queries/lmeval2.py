@@ -49,25 +49,6 @@ def _doc_bigrams(spark, sf_dir):
     ).where(F.col("w2").isNotNull())
 
 
-_SQL_DOC_BIGRAMS = """
-toks AS (
-  SELECT doc_id, pos, w FROM (
-    SELECT doc_id,
-           unnest(regexp_split_to_array(trim(text), '\\s+')) AS w,
-           generate_subscripts(
-             regexp_split_to_array(trim(text), '\\s+'), 1) AS pos
-    FROM documents
-  )
-), bg AS (
-  SELECT doc_id, w1, w2 FROM (
-    SELECT doc_id, w AS w1,
-           lead(w) OVER (PARTITION BY doc_id ORDER BY pos) AS w2
-    FROM toks
-  ) WHERE w2 IS NOT NULL
-)
-"""
-
-
 def q_kneser_ney_bigram(spark, sf_dir):
     """INTERPOLATED KNESER-NEY bigram perplexity per doc (D=0.75,
     +0.5 continuation floor); top-20 highest-perplexity docs."""
@@ -120,42 +101,6 @@ def q_kneser_ney_bigram(spark, sf_dir):
     )
 
 
-SQL_KNESER_NEY_BIGRAM = f"""
-WITH {_SQL_DOC_BIGRAMS},
-c12 AS MATERIALIZED (
-  SELECT w1, w2, CAST(count(*) AS BIGINT) AS c12
-  FROM bg GROUP BY 1, 2
-), c1 AS MATERIALIZED (
-  SELECT w1, CAST(sum(c12) AS BIGINT) AS c1,
-         CAST(count(*) AS BIGINT) AS n1p
-  FROM c12 GROUP BY 1
-), cont AS MATERIALIZED (
-  SELECT w2, CAST(count(*) AS BIGINT) AS nend
-  FROM c12 GROUP BY 1
-), tots AS (
-  SELECT (SELECT CAST(count(*) AS BIGINT) FROM c12) AS btypes,
-         (SELECT CAST(count(DISTINCT w) AS BIGINT) FROM (
-            SELECT w1 AS w FROM bg UNION SELECT w2 AS w FROM bg))
-           AS v
-), p AS (
-  SELECT bg.doc_id,
-         -log2(greatest(c12.c12 - {_KN_D}, 0.0) / c1.c1
-               + {_KN_D} * c1.n1p / c1.c1
-                 * ((cont.nend + 0.5)
-                    / (tots.btypes + 0.5 * tots.v))) AS nll
-  FROM bg
-  JOIN c12 USING (w1, w2)
-  JOIN c1 USING (w1)
-  JOIN cont USING (w2)
-  CROSS JOIN tots
-)
-SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
-       round(pow(2.0, avg(nll)), 4) AS ppl
-FROM p GROUP BY 1
-ORDER BY ppl DESC, doc_id ASC LIMIT {_KN_TOPN}
-"""
-
-
 def q_distinct_n(spark, sf_dir):
     """DISTINCT-1 / DISTINCT-2 diversity per source: unique n-gram
     types over n-gram tokens."""
@@ -199,30 +144,6 @@ def q_distinct_n(spark, sf_dir):
         )
         .orderBy("source")
     )
-
-
-SQL_DISTINCT_N = f"""
-WITH {_SQL_DOC_BIGRAMS},
-dsrc AS (
-  SELECT doc_id, source FROM documents
-), t1 AS (
-  SELECT d.source, CAST(count(*) AS BIGINT) AS n_tokens,
-         CAST(count(DISTINCT t.w) AS BIGINT) AS types1
-  FROM toks t JOIN dsrc d USING (doc_id)
-  GROUP BY 1
-), t2 AS (
-  SELECT d.source, CAST(count(*) AS BIGINT) AS n_bigrams,
-         CAST(count(DISTINCT (b.w1, b.w2)) AS BIGINT) AS types2
-  FROM bg b JOIN dsrc d USING (doc_id)
-  GROUP BY 1
-)
-SELECT source, n_tokens, types1,
-       round(types1 / CAST(n_tokens AS DOUBLE), 6) AS distinct1,
-       n_bigrams, types2,
-       round(types2 / CAST(n_bigrams AS DOUBLE), 6) AS distinct2
-FROM t1 JOIN t2 USING (source)
-ORDER BY source
-"""
 
 
 def q_self_bleu_lite(spark, sf_dir):
@@ -279,38 +200,3 @@ def q_self_bleu_lite(spark, sf_dir):
         )
         .orderBy("source")
     )
-
-
-SQL_SELF_BLEU_LITE = f"""
-WITH {_SQL_DOC_BIGRAMS},
-pairs AS (
-  SELECT source, a, b FROM (
-    SELECT source, doc_id AS a,
-           lead(doc_id) OVER (PARTITION BY source ORDER BY doc_id)
-             AS b
-    FROM documents
-  ) WHERE b IS NOT NULL
-), bgs AS MATERIALIZED (
-  SELECT DISTINCT doc_id, w1, w2 FROM bg
-), na AS (
-  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_a
-  FROM bgs GROUP BY 1
-), inter AS (
-  SELECT p.source, p.a, p.b, CAST(count(*) AS BIGINT) AS n_int
-  FROM pairs p
-  JOIN bgs x ON x.doc_id = p.a
-  JOIN bgs y ON y.doc_id = p.b AND y.w1 = x.w1 AND y.w2 = x.w2
-  GROUP BY 1, 2, 3
-), per_pair AS (
-  SELECT p.source,
-         coalesce(i.n_int, 0) / CAST(na.n_a AS DOUBLE) AS ov
-  FROM pairs p
-  LEFT JOIN inter i ON i.source = p.source AND i.a = p.a
-       AND i.b = p.b
-  JOIN na ON na.doc_id = p.a
-)
-SELECT source, CAST(count(*) AS BIGINT) AS n_pairs,
-       round(avg(ov), 6) AS mean_overlap,
-       round(max(ov), 6) AS max_overlap
-FROM per_pair GROUP BY 1 ORDER BY source
-"""

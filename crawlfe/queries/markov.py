@@ -45,39 +45,12 @@ def _trans(spark, sf_dir):
     )
 
 
-_SQL_TRANS = """
-pairs AS (
-  SELECT i, j FROM (
-    SELECT event_type AS i,
-           lead(event_type) OVER (PARTITION BY user_id
-                                  ORDER BY ts, event_id) AS j
-    FROM events
-  ) WHERE j IS NOT NULL
-), trans AS MATERIALIZED (
-  SELECT i, j, CAST(count(*) AS BIGINT) AS c
-  FROM pairs GROUP BY 1, 2
-)
-"""
-
-
 def _pmat(spark, sf_dir):
     t = _trans(spark, sf_dir)
     row = t.groupBy("i").agg(F.sum("c").cast("bigint").alias("ri"))
     return t.join(row, "i").select(
         "i", "j", "c", (F.col("c") / F.col("ri")).alias("p")
     )
-
-
-_SQL_PMAT = f"""
-{_SQL_TRANS},
-rowt AS (
-  SELECT i, CAST(sum(c) AS BIGINT) AS ri FROM trans GROUP BY 1
-), pmat AS MATERIALIZED (
-  SELECT trans.i, trans.j, trans.c,
-         trans.c / CAST(rowt.ri AS DOUBLE) AS p
-  FROM trans JOIN rowt USING (i)
-)
-"""
 
 
 def q_mc_stationary(spark, sf_dir):
@@ -153,52 +126,6 @@ def q_mc_stationary(spark, sf_dir):
         )
         .orderBy("state")
     )
-
-
-def _mc_prefix_sql():
-    """Shared SQL prefix: pmat + 12 power-iteration rounds ending in
-    the pi{R} CTE (the final SELECT is supplied by each query)."""
-    rounds = ""
-    prev = "pi0"
-    for r in range(1, _MC_ROUNDS + 1):
-        rounds += f""", n{r} AS MATERIALIZED (
-  SELECT pmat.j AS s, sum(p.pi * pmat.p ORDER BY pmat.i) AS raw
-  FROM pmat JOIN {prev} p ON pmat.i = p.s
-  GROUP BY 1
-), t{r} AS MATERIALIZED (
-  SELECT sum(raw ORDER BY s) AS tot FROM n{r}
-), pi{r} AS MATERIALIZED (
-  SELECT s, raw / tot AS pi FROM n{r} CROSS JOIN t{r}
-)"""
-        prev = f"pi{r}"
-    return (
-        f"""WITH {_SQL_PMAT},
-states AS MATERIALIZED (
-  SELECT DISTINCT i AS s FROM pmat
-), ns AS (
-  SELECT CAST(count(*) AS DOUBLE) AS k FROM states
-), pi0 AS MATERIALIZED (
-  SELECT s, 1.0 / k AS pi FROM states CROSS JOIN ns
-){rounds}""",
-        prev,
-    )
-
-
-_MC_PREFIX, _MC_LAST = _mc_prefix_sql()
-
-SQL_MC_STATIONARY = f"""
-{_MC_PREFIX},
-emp AS (
-  SELECT event_type AS s, CAST(count(*) AS BIGINT) AS n
-  FROM events GROUP BY 1
-), te AS (
-  SELECT CAST(sum(n) AS BIGINT) AS te FROM emp
-)
-SELECT p.s AS state, round(p.pi, 6) AS pi,
-       round(emp.n / CAST(te.te AS DOUBLE), 6) AS empirical
-FROM {_MC_LAST} p JOIN emp ON p.s = emp.s CROSS JOIN te
-ORDER BY state
-"""
 
 
 def _stationary_and_p(spark, sf_dir):
@@ -284,22 +211,6 @@ def q_entropy_rate(spark, sf_dir):
         ),
     )
 
-SQL_ENTROPY_RATE = f"""
-{_MC_PREFIX},
-rowh AS (
-  SELECT i, sum(-p * log2(p)) AS hrow FROM pmat GROUP BY 1
-), hr AS (
-  SELECT sum(pp.pi * rowh.hrow) AS h_rate
-  FROM rowh JOIN {_MC_LAST} pp ON rowh.i = pp.s
-), hi AS (
-  SELECT sum(-pi * log2(pi)) AS h_iid FROM {_MC_LAST}
-)
-SELECT round(h_rate, 6) AS h_rate_bits,
-       round(h_iid, 6) AS h_iid_bits,
-       round(h_iid - h_rate, 6) AS memory_bits
-FROM hr CROSS JOIN hi
-"""
-
 
 def q_mc_reversibility(spark, sf_dir):
     """DETAILED-BALANCE audit: TV distance sum |pi_i P_ij - pi_j
@@ -336,25 +247,3 @@ def q_mc_reversibility(spark, sf_dir):
         F.col("j").alias("worst_j"),
         F.round("v", 6).alias("worst_gap"),
     )
-
-SQL_MC_REVERSIBILITY = f"""
-{_MC_PREFIX},
-flow AS MATERIALIZED (
-  SELECT pmat.i, pmat.j, pp.pi * pmat.p AS f
-  FROM pmat JOIN {_MC_LAST} pp ON pmat.i = pp.s
-), bothf AS (
-  SELECT coalesce(a.i, b.j) AS i, coalesce(a.j, b.i) AS j,
-         coalesce(a.f, 0.0) AS f, coalesce(b.f, 0.0) AS fr
-  FROM flow a FULL JOIN flow b ON a.i = b.j AND a.j = b.i
-), viol AS (
-  SELECT i, j, abs(f - fr) AS v FROM bothf WHERE i < j
-), topv AS (
-  SELECT * FROM viol ORDER BY v DESC, i, j LIMIT 1
-), agg AS (
-  SELECT sum(v) AS tv FROM viol
-)
-SELECT round(tv / 2, 6) AS tv_irreversibility,
-       topv.i AS worst_i, topv.j AS worst_j,
-       round(topv.v, 6) AS worst_gap
-FROM topv CROSS JOIN agg
-"""

@@ -68,21 +68,6 @@ def _panel(spark, sf_dir):
     )
 
 
-_SQL_PANEL = f"""
-panel AS (
-  SELECT user_id,
-         avg(CASE WHEN dayofmonth(ts) <= 15
-                  THEN CAST(round(value * 100) AS BIGINT) END) AS pre,
-         avg(CASE WHEN dayofmonth(ts) > 15
-                  THEN CAST(round(value * 100) AS BIGINT) END)
-           AS post,
-         (user_id % {_TREAT_MOD} = 0) AS treated
-  FROM events GROUP BY 1
-  HAVING pre IS NOT NULL AND post IS NOT NULL
-)
-"""
-
-
 def _matched(spark, sf_dir):
     """Matched pairs (user_id, y_t, y_c): each treated user joined to
     its nearest control on the pre score via the sorted merge-scan."""
@@ -141,42 +126,6 @@ def _matched(spark, sf_dir):
     ).where(F.col("y_c").isNotNull())
 
 
-_SQL_MATCHED = f"""
-{_SQL_PANEL},
-u AS (
-  SELECT user_id, pre, post,
-         CASE WHEN treated THEN 1 ELSE 0 END AS flag
-  FROM panel
-), scan AS (
-  SELECT *,
-    last_value(CASE WHEN flag = 0 THEN pre END IGNORE NULLS) OVER (
-      ORDER BY pre, flag, user_id
-      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_s,
-    last_value(CASE WHEN flag = 0 THEN post END IGNORE NULLS) OVER (
-      ORDER BY pre, flag, user_id
-      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_y,
-    first_value(CASE WHEN flag = 0 THEN pre END IGNORE NULLS) OVER (
-      ORDER BY pre, flag, user_id
-      ROWS BETWEEN 1 FOLLOWING AND UNBOUNDED FOLLOWING) AS next_s,
-    first_value(CASE WHEN flag = 0 THEN post END IGNORE NULLS) OVER (
-      ORDER BY pre, flag, user_id
-      ROWS BETWEEN 1 FOLLOWING AND UNBOUNDED FOLLOWING) AS next_y
-  FROM u
-), matched AS (
-  SELECT user_id, post AS y_t,
-         CASE WHEN prev_s IS NOT NULL AND (next_s IS NULL
-                   OR pre - prev_s <= next_s - pre)
-              THEN prev_y ELSE next_y END AS y_c,
-         CASE WHEN prev_s IS NOT NULL AND (next_s IS NULL
-                   OR pre - prev_s <= next_s - pre)
-              THEN prev_s ELSE next_s END AS s_c,
-         pre AS s_t
-  FROM scan WHERE flag = 1
-    AND (prev_s IS NOT NULL OR next_s IS NOT NULL)
-)
-"""
-
-
 def q_nn_matching_att(spark, sf_dir):
     """1-NN MATCHING ATT on the pre-score: mean treated-minus-matched
     post outcome, with the mean absolute score gap as the match-
@@ -189,15 +138,6 @@ def q_nn_matching_att(spark, sf_dir):
             "mean_score_gap"
         ),
     )
-
-
-SQL_NN_MATCHING_ATT = f"""
-WITH {_SQL_MATCHED}
-SELECT CAST(count(*) AS BIGINT) AS n_treated,
-       round(avg(y_t - y_c), 4) AS att,
-       round(avg(abs(s_t - s_c)), 4) AS mean_score_gap
-FROM matched
-"""
 
 
 def q_rosenbaum_bounds(spark, sf_dir):
@@ -229,27 +169,6 @@ def q_rosenbaum_bounds(spark, sf_dir):
         F.round(pp, 6).alias("p_plus"),
         F.round(z, 6).alias("z_bound"),
     ).orderBy("gamma")
-
-
-SQL_ROSENBAUM_BOUNDS = f"""
-WITH {_SQL_MATCHED},
-nt AS (
-  SELECT CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(CASE WHEN y_t > y_c THEN 1 ELSE 0 END) AS BIGINT)
-           AS t_plus
-  FROM matched WHERE y_t <> y_c
-), g AS (
-  SELECT n, t_plus, gamma
-  FROM nt CROSS JOIN (VALUES {", ".join(f"({x})" for x in _GAMMAS)})
-    t(gamma)
-)
-SELECT gamma, n, t_plus,
-       round(gamma / (1 + gamma), 6) AS p_plus,
-       round((t_plus - 0.5 - n * (gamma / (1 + gamma)))
-             / sqrt(n * (gamma / (1 + gamma))
-                    * (1 - gamma / (1 + gamma))), 6) AS z_bound
-FROM g ORDER BY gamma
-"""
 
 
 def q_placebo_did(spark, sf_dir):
@@ -286,35 +205,3 @@ def q_placebo_did(spark, sf_dir):
         F.round("did", 4).alias("did"),
     )
     return actual.unionByName(placebo).orderBy("which")
-
-
-SQL_PLACEBO_DID = f"""
-WITH e AS (
-  SELECT (user_id % {_TREAT_MOD} = 0) AS treated,
-         dayofmonth(ts) AS day,
-         CAST(round(value * 100) AS BIGINT) AS cents
-  FROM events
-), act AS (
-  SELECT treated,
-         avg(CASE WHEN day > 15 THEN cents END) AS mpost,
-         avg(CASE WHEN day <= 15 THEN cents END) AS mpre
-  FROM e GROUP BY 1
-), plc AS (
-  SELECT treated,
-         avg(CASE WHEN day > {_PLACEBO_SPLIT} THEN cents END)
-           AS mpost,
-         avg(CASE WHEN day <= {_PLACEBO_SPLIT} THEN cents END)
-           AS mpre
-  FROM e WHERE day <= 15 GROUP BY 1
-)
-SELECT 'actual' AS which,
-       round(sum(CASE WHEN treated THEN mpost - mpre
-                      ELSE -(mpost - mpre) END), 4) AS did
-FROM act
-UNION ALL
-SELECT 'placebo' AS which,
-       round(sum(CASE WHEN treated THEN mpost - mpre
-                      ELSE -(mpost - mpre) END), 4) AS did
-FROM plc
-ORDER BY which
-"""

@@ -71,31 +71,6 @@ def _effects(spark, sf_dir):
     )
 
 
-_SQL_EFFECTS = """
-e AS (
-  SELECT CAST(floor((dayofmonth(ts) - 1) / 7) AS BIGINT) AS week,
-         (user_id % 2 = 0) AS a,
-         CAST(round(value * 100) AS BIGINT) AS c
-  FROM events
-), m AS (
-  SELECT week,
-    CAST(sum(CASE WHEN a THEN 1 ELSE 0 END) AS BIGINT) AS na,
-    CAST(sum(CASE WHEN a THEN c ELSE 0 END) AS BIGINT) AS sa,
-    CAST(sum(CASE WHEN a THEN c * c ELSE 0 END) AS BIGINT) AS qa,
-    CAST(sum(CASE WHEN NOT a THEN 1 ELSE 0 END) AS BIGINT) AS nb,
-    CAST(sum(CASE WHEN NOT a THEN c ELSE 0 END) AS BIGINT) AS sb,
-    CAST(sum(CASE WHEN NOT a THEN c * c ELSE 0 END) AS BIGINT) AS qb
-  FROM e GROUP BY 1
-), eff AS (
-  SELECT week,
-    CAST(sa AS DOUBLE) / na - CAST(sb AS DOUBLE) / nb AS eff,
-    ((qa - CAST(sa AS DOUBLE) * sa / na) / (na - 1)) / na
-      + ((qb - CAST(sb AS DOUBLE) * sb / nb) / (nb - 1)) / nb AS v
-  FROM m
-)
-"""
-
-
 def q_meta_analysis(spark, sf_dir):
     """FIXED + RANDOM (DerSimonian-Laird) pooled arm effect over
     week strata, with Q, I^2, tau^2."""
@@ -145,38 +120,6 @@ def q_meta_analysis(spark, sf_dir):
     )
 
 
-SQL_META_ANALYSIS = f"""
-WITH {_SQL_EFFECTS},
-agg AS (
-  SELECT CAST(count(*) AS BIGINT) AS k,
-         sum(1 / v) AS sw, sum(eff / v) AS swe,
-         sum(1 / (v * v)) AS sww, sum(eff * eff / v) AS swee
-  FROM eff
-), base AS (
-  SELECT k, swe / sw AS fixed, sqrt(1 / sw) AS fse,
-         swee - swe * swe / sw AS q,
-         CAST(k - 1 AS DOUBLE) AS dfk,
-         sw - sww / sw AS cc
-  FROM agg
-), tau AS (
-  SELECT k, fixed, fse, q, dfk,
-         greatest(0.0, (q - dfk) / cc) AS tau2,
-         greatest(0.0, (q - dfk) / q) AS i2
-  FROM base
-), re AS (
-  SELECT sum(1 / (eff.v + tau.tau2)) AS swr,
-         sum(eff.eff / (eff.v + tau.tau2)) AS swre
-  FROM eff CROSS JOIN tau
-)
-SELECT k, round(fixed, 4) AS fixed_effect,
-       round(fse, 4) AS fixed_se, round(q, 4) AS cochran_q,
-       round(i2, 6) AS i2, round(tau2, 4) AS tau2,
-       round(swre / swr, 4) AS random_effect,
-       round(sqrt(1 / swr), 4) AS random_se
-FROM tau CROSS JOIN re
-"""
-
-
 def q_egger_test(spark, sf_dir):
     """EGGER FUNNEL-ASYMMETRY: OLS of z = eff/se on precision 1/se;
     intercept and its t statistic."""
@@ -211,33 +154,6 @@ def q_egger_test(spark, sf_dir):
     )
 
 
-SQL_EGGER_TEST = f"""
-WITH {_SQL_EFFECTS},
-zp AS (
-  SELECT eff / sqrt(v) AS z, 1 / sqrt(v) AS p FROM eff
-), mm AS (
-  SELECT CAST(count(*) AS BIGINT) AS k, avg(p) AS mp, avg(z) AS mz,
-         avg(p * p) AS mpp, avg(p * z) AS mpz, avg(z * z) AS mzz
-  FROM zp
-), c AS (
-  SELECT k, mp, mz,
-         mpz - mp * mz AS spz, mpp - mp * mp AS spp,
-         mzz - mz * mz AS szz
-  FROM mm
-), f AS (
-  SELECT k, mp, spp,
-         spz / spp AS b, mz - spz / spp * mp AS a,
-         CAST(k AS DOUBLE) * (szz - spz * spz / spp) AS sse
-  FROM c
-)
-SELECT k, round(a, 6) AS egger_intercept,
-       round(a / sqrt(sse / (k - 2)
-             * (1.0 / k + mp * mp / (k * spp))), 6) AS t_intercept,
-       round(b, 6) AS slope
-FROM f
-"""
-
-
 def q_loo_meta(spark, sf_dir):
     """LEAVE-ONE-OUT fixed effects: pooled estimate without each
     week via the subtract-from-totals identity, with the delta."""
@@ -257,17 +173,3 @@ def q_loo_meta(spark, sf_dir):
         F.round(loo, 4).alias("loo_pooled"),
         F.round(loo - full, 4).alias("delta_vs_full"),
     ).orderBy("week")
-
-
-SQL_LOO_META = f"""
-WITH {_SQL_EFFECTS},
-tot AS (
-  SELECT sum(1 / v) AS sw, sum(eff / v) AS swe FROM eff
-)
-SELECT week, round(eff, 4) AS week_effect,
-       round((swe - eff / v) / (sw - 1 / v), 4) AS loo_pooled,
-       round((swe - eff / v) / (sw - 1 / v) - swe / sw, 4)
-         AS delta_vs_full
-FROM eff CROSS JOIN tot
-ORDER BY week
-"""

@@ -47,19 +47,6 @@ def _pairs(spark, sf_dir):
     return p.where(F.col("x").isNotNull() & F.col("y").isNotNull())
 
 
-_SQL_PAIRS = f"""
-pairs AS (
-  SELECT user_id,
-         avg(CASE WHEN dayofmonth(ts) <= {_SPLIT_DAY}
-                  THEN CAST(round(value * 100) AS BIGINT) END) AS x,
-         avg(CASE WHEN dayofmonth(ts) > {_SPLIT_DAY}
-                  THEN CAST(round(value * 100) AS BIGINT) END) AS y
-  FROM events GROUP BY 1
-  HAVING x IS NOT NULL AND y IS NOT NULL
-)
-"""
-
-
 def _moments(p):
     return p.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -69,16 +56,6 @@ def _moments(p):
         F.avg(F.col("y") * F.col("y")).alias("myy"),
         F.avg(F.col("x") * F.col("y")).alias("mxy"),
     )
-
-
-_SQL_MOMENTS = """
-m AS (
-  SELECT CAST(count(*) AS BIGINT) AS n,
-         avg(x) AS mx, avg(y) AS my,
-         avg(x * x) AS mxx, avg(y * y) AS myy, avg(x * y) AS mxy
-  FROM pairs
-)
-"""
 
 
 def q_lins_ccc(spark, sf_dir):
@@ -98,22 +75,6 @@ def q_lins_ccc(spark, sf_dir):
         F.round(r, 6).alias("pearson_r"),
         F.round(ccc / r, 6).alias("c_b"),
     )
-
-
-SQL_LINS_CCC = f"""
-WITH {_SQL_PAIRS}, {_SQL_MOMENTS},
-c AS (
-  SELECT n, mxx - mx * mx AS sxx, myy - my * my AS syy,
-         mxy - mx * my AS sxy, mx - my AS dm
-  FROM m
-)
-SELECT n,
-       round(2 * sxy / (sxx + syy + dm * dm), 6) AS ccc,
-       round(sxy / sqrt(sxx * syy), 6) AS pearson_r,
-       round((2 * sxy / (sxx + syy + dm * dm))
-             / (sxy / sqrt(sxx * syy)), 6) AS c_b
-FROM c
-"""
 
 
 def q_bland_altman(spark, sf_dir):
@@ -148,29 +109,6 @@ def q_bland_altman(spark, sf_dir):
     )
 
 
-SQL_BLAND_ALTMAN = f"""
-WITH {_SQL_PAIRS},
-d AS (
-  SELECT x - y AS d FROM pairs
-), m AS (
-  SELECT CAST(count(*) AS BIGINT) AS n, avg(d) AS md,
-         stddev_samp(d) AS sd
-  FROM d
-), lim AS (
-  SELECT n, md, sd, md - {_BA_Z} * sd AS lo, md + {_BA_Z} * sd AS hi
-  FROM m
-), o AS (
-  SELECT CAST(sum(CASE WHEN d.d < lim.lo OR d.d > lim.hi
-                       THEN 1 ELSE 0 END) AS BIGINT) AS n_out
-  FROM d CROSS JOIN lim
-)
-SELECT n, round(md, 4) AS mean_diff, round(sd, 4) AS sd_diff,
-       round(lo, 4) AS loa_lo, round(hi, 4) AS loa_hi,
-       round(CAST(n_out AS DOUBLE) / n, 6) AS pct_outside
-FROM lim CROSS JOIN o
-"""
-
-
 def q_deming_regression(spark, sf_dir):
     """DEMING REGRESSION (lambda = 1): the symmetric slope
     (Syy - Sxx + sqrt((Syy - Sxx)^2 + 4 Sxy^2)) / (2 Sxy) and its
@@ -189,22 +127,3 @@ def q_deming_regression(spark, sf_dir):
         ),
         F.round(sxy / sxx, 6).alias("ols_slope"),
     )
-
-
-SQL_DEMING_REGRESSION = f"""
-WITH {_SQL_PAIRS}, {_SQL_MOMENTS},
-c AS (
-  SELECT n, mx, my, mxx - mx * mx AS sxx, myy - my * my AS syy,
-         mxy - mx * my AS sxy
-  FROM m
-), s AS (
-  SELECT n, mx, my, sxx, sxy,
-         (syy - sxx + sqrt(pow(syy - sxx, 2) + 4 * sxy * sxy))
-           / (2 * sxy) AS slope
-  FROM c
-)
-SELECT n, round(slope, 6) AS slope,
-       round(my - slope * mx, 4) AS intercept,
-       round(sxy / sxx, 6) AS ols_slope
-FROM s
-"""

@@ -27,7 +27,6 @@ window / +1 equi join, never quadratic.
 """
 from __future__ import annotations
 
-from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ._shared import _t
@@ -41,15 +40,6 @@ def _tokens(spark, sf_dir):
         "doc_id",
         F.explode(F.split(F.trim(F.col("text")), "\\s+")).alias("token"),
     ).distinct()
-
-
-_SQL_TOKENS = """
-toks AS (
-  SELECT DISTINCT doc_id,
-         unnest(regexp_split_to_array(trim(text), '\\s+')) AS token
-  FROM documents
-)
-"""
 
 
 def _minima(toks):
@@ -75,18 +65,6 @@ def _minima(toks):
         10,
     ).cast("bigint")
     return tk.groupBy("doc_id", "k").agg(F.min(h).alias("mn"))
-
-
-_SQL_MINIMA = f"""
-minima AS (
-  SELECT doc_id, kk.range AS k,
-         min(CAST(CAST('0x' || substring(
-             md5('mh' || CAST(kk.range AS VARCHAR) || ':' || token),
-             1, 8) AS UBIGINT) AS BIGINT)) AS mn
-  FROM toks CROSS JOIN range(1, {_MH_K + 1}) kk
-  GROUP BY doc_id, kk.range
-)
-"""
 
 
 def _exact_pairs(toks):
@@ -123,24 +101,6 @@ def _exact_pairs(toks):
             ),
         )
     )
-
-
-_SQL_EXACT_PAIRS = """
-sizes AS (
-  SELECT doc_id, CAST(count(*) AS BIGINT) AS sz FROM toks GROUP BY 1
-), inter AS (
-  SELECT a.doc_id AS doc_a, CAST(count(*) AS BIGINT) AS inter
-  FROM toks a JOIN toks b
-    ON b.doc_id = a.doc_id + 1 AND a.token = b.token
-  GROUP BY a.doc_id
-), pairs AS (
-  SELECT sa.doc_id AS doc_a, sa.sz AS n_a, sb.sz AS n_b,
-         CAST(coalesce(inter.inter, 0) AS BIGINT) AS inter
-  FROM sizes sa
-  JOIN sizes sb ON sb.doc_id = sa.doc_id + 1
-  LEFT JOIN inter ON inter.doc_a = sa.doc_id
-)
-"""
 
 
 def _agree(minima, bit: bool):
@@ -184,25 +144,6 @@ def q_minhash_accuracy(spark, sf_dir):
     )
 
 
-SQL_MINHASH_ACCURACY = f"""
-WITH {_SQL_TOKENS}, {_SQL_MINIMA}, {_SQL_EXACT_PAIRS},
-agree AS (
-  SELECT a.doc_id AS doc_a,
-         CAST(sum(CASE WHEN a.mn = b.mn THEN 1 ELSE 0 END) AS BIGINT)
-           AS agree
-  FROM minima a JOIN minima b
-    ON b.doc_id = a.doc_id + 1 AND a.k = b.k
-  GROUP BY a.doc_id
-)
-SELECT pairs.doc_a, n_a, n_b, inter, agree,
-       round(CAST(inter AS DOUBLE) / (n_a + n_b - inter), 6) AS j_exact,
-       round(CAST(agree AS DOUBLE) / {_MH_K}, 6) AS j_est,
-       round(abs(CAST(inter AS DOUBLE) / (n_a + n_b - inter)
-                 - CAST(agree AS DOUBLE) / {_MH_K}), 6) AS abs_err
-FROM pairs JOIN agree ON pairs.doc_a = agree.doc_a
-"""
-
-
 def q_bbit_minhash(spark, sf_dir):
     """1-BIT MINHASH MAE vs full minima: corpus-level mean absolute
     error of J1 = 2*share - 1 (clamped at 0) and of the 32-hash
@@ -238,36 +179,6 @@ def q_bbit_minhash(spark, sf_dir):
     )
 
 
-SQL_BBIT_MINHASH = f"""
-WITH {_SQL_TOKENS}, {_SQL_MINIMA}, {_SQL_EXACT_PAIRS},
-ag AS (
-  SELECT a.doc_id AS doc_a,
-         CAST(sum(CASE WHEN a.mn = b.mn THEN 1 ELSE 0 END) AS BIGINT)
-           AS ag_full,
-         CAST(sum(CASE WHEN a.mn % 2 = b.mn % 2 THEN 1 ELSE 0 END)
-              AS BIGINT) AS ag_bit
-  FROM minima a JOIN minima b
-    ON b.doc_id = a.doc_id + 1 AND a.k = b.k
-  GROUP BY a.doc_id
-), j AS (
-  SELECT pairs.*, ag.ag_full, ag.ag_bit,
-         CAST(inter AS DOUBLE) / (n_a + n_b - inter) AS je
-  FROM pairs JOIN ag ON pairs.doc_a = ag.doc_a
-), e AS (
-  SELECT round(abs(je - CAST(ag_full AS DOUBLE) / {_MH_K}), 9)
-           AS err_full,
-         round(abs(je - greatest(0.0,
-                   2 * CAST(ag_bit AS DOUBLE) / {_MH_K} - 1)), 9)
-           AS err_bit
-  FROM j
-)
-SELECT CAST(count(*) AS BIGINT) AS n_pairs,
-       round(sum(err_full) / count(*), 6) AS mae_32hash,
-       round(sum(err_bit) / count(*), 6) AS mae_1bit
-FROM e
-"""
-
-
 def q_containment_est(spark, sf_dir):
     """CONTAINMENT exact vs sketch: C(A,B) = inter/|A| exact, and the
     Jaccard-sketch rescale est = J_est * (|A|+|B|-inter_est...) — in
@@ -292,27 +203,3 @@ def q_containment_est(spark, sf_dir):
         F.round(c_est, 6).alias("c_est"),
         F.round(F.abs(c_exact - c_est), 6).alias("abs_err"),
     )
-
-
-SQL_CONTAINMENT_EST = f"""
-WITH {_SQL_TOKENS}, {_SQL_MINIMA}, {_SQL_EXACT_PAIRS},
-agree AS (
-  SELECT a.doc_id AS doc_a,
-         CAST(sum(CASE WHEN a.mn = b.mn THEN 1 ELSE 0 END) AS BIGINT)
-           AS agree
-  FROM minima a JOIN minima b
-    ON b.doc_id = a.doc_id + 1 AND a.k = b.k
-  GROUP BY a.doc_id
-), j AS (
-  SELECT pairs.*, agree.agree,
-         CAST(agree AS DOUBLE) / {_MH_K} AS jest
-  FROM pairs JOIN agree ON pairs.doc_a = agree.doc_a
-)
-SELECT doc_a, n_a, n_b,
-       round(CAST(inter AS DOUBLE) / n_a, 6) AS c_exact,
-       round(jest * (n_a + n_b) / (n_a * (1 + jest)), 6) AS c_est,
-       round(abs(CAST(inter AS DOUBLE) / n_a
-                 - jest * (n_a + n_b) / (n_a * (1 + jest))), 6)
-         AS abs_err
-FROM j
-"""

@@ -83,35 +83,3 @@ def q_hard_negatives(spark, sf_dir):
         F.round(F.col("best_pos") - F.col("cosine"), 6).alias("margin"),
         "rn",
     )
-
-
-SQL_HARD_NEGATIVES = f"""
-WITH base AS (
-  SELECT vec_id, CAST(label AS BIGINT) AS label,
-         list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v,
-         sqrt(list_sum(list_transform(embedding,
-              x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS nm
-  FROM embeddings
-), probes AS (
-  SELECT vec_id AS q_id, label AS q_label, v AS q, nm AS qn
-  FROM base WHERE vec_id < {_HN_PROBES}
-), scored AS (
-  SELECT p.q_id, p.q_label, b.vec_id, b.label,
-         list_sum(list_transform(list_zip(p.q, b.v), t -> t[1] * t[2]))
-           / (p.qn * b.nm) AS cosine
-  FROM base b, probes p WHERE b.vec_id <> p.q_id
-), best_pos AS (
-  SELECT q_id, max(cosine) AS best_pos FROM scored
-  WHERE label = q_label GROUP BY 1
-), topn AS (
-  SELECT q_id, vec_id, label, cosine,
-         row_number() OVER (PARTITION BY q_id
-                            ORDER BY cosine DESC, vec_id) AS rn
-  FROM scored WHERE label <> q_label
-)
-SELECT t.q_id, t.vec_id, t.label AS neg_label,
-       round(t.cosine, 6) AS neg_cosine,
-       round(b.best_pos - t.cosine, 6) AS margin, t.rn
-FROM topn t JOIN best_pos b ON t.q_id = b.q_id
-WHERE t.rn <= {_HN_K}
-"""

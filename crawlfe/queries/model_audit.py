@@ -101,41 +101,6 @@ def q_spiegelhalter_z(spark, sf_dir):
     )
 
 
-SQL_SPIEGELHALTER_Z = f"""
-WITH base AS (
-  SELECT least({_MA_MAX_BIN},
-               CAST(round(value * 100) AS BIGINT) // {_MA_BIN_CENTS}) AS bin,
-         CAST(extract(day FROM ts) AS INT) AS day,
-         CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS pos
-  FROM events WHERE event_type IN ('purchase', 'click')
-), train AS (
-  SELECT bin, CAST(count(*) AS BIGINT) AS n_train,
-         CAST(sum(pos) AS BIGINT) AS p_train
-  FROM base WHERE day <= {_MA_TRAIN_DAY_MAX} GROUP BY bin
-), test AS (
-  SELECT bin, CAST(count(*) AS BIGINT) AS n_test,
-         CAST(sum(pos) AS BIGINT) AS obs_pos
-  FROM base WHERE day > {_MA_TRAIN_DAY_MAX} GROUP BY bin
-), j AS (
-  SELECT t.bin, t.n_train, t.p_train, s.n_test, s.obs_pos,
-         CAST(t.p_train + 1 AS DOUBLE) / (t.n_train + 2) AS p
-  FROM train t JOIN test s USING (bin)
-), scored AS (
-  SELECT bin, n_test, obs_pos, round(p, 6) AS p_hat,
-         sum((obs_pos - n_test * p) * (1 - 2 * p))
-           OVER (ORDER BY bin ROWS UNBOUNDED PRECEDING) AS cum_num,
-         sum(n_test * p * (1 - p) * pow(1 - 2 * p, 2))
-           OVER (ORDER BY bin ROWS UNBOUNDED PRECEDING) AS cum_den
-  FROM j
-)
-SELECT CAST(bin AS INT) AS bin, n_test, obs_pos, p_hat,
-       round(cum_num, 6) AS cum_num,
-       round(cum_den, 6) AS cum_den,
-       round(cum_num / nullif(sqrt(cum_den), 0.0), 6) AS z_run
-FROM scored
-"""
-
-
 def q_hosmer_lemeshow(spark, sf_dir):
     """FIXED-BIN HOSMER-LEMESHOW goodness-of-fit (public test;
     Hosmer & Lemeshow 1980, fixed-cut variant) on the same week-1-15
@@ -159,37 +124,6 @@ def q_hosmer_lemeshow(spark, sf_dir):
         F.round(contrib, 6).alias("hl_contrib"),
         F.round(F.sum(contrib).over(w), 6).alias("chi2_run"),
     )
-
-
-SQL_HOSMER_LEMESHOW = f"""
-WITH base AS (
-  SELECT least({_MA_MAX_BIN},
-               CAST(round(value * 100) AS BIGINT) // {_MA_BIN_CENTS}) AS bin,
-         CAST(extract(day FROM ts) AS INT) AS day,
-         CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS pos
-  FROM events WHERE event_type IN ('purchase', 'click')
-), train AS (
-  SELECT bin, CAST(count(*) AS BIGINT) AS n_train,
-         CAST(sum(pos) AS BIGINT) AS p_train
-  FROM base WHERE day <= {_MA_TRAIN_DAY_MAX} GROUP BY bin
-), test AS (
-  SELECT bin, CAST(count(*) AS BIGINT) AS n_test,
-         CAST(sum(pos) AS BIGINT) AS obs_pos
-  FROM base WHERE day > {_MA_TRAIN_DAY_MAX} GROUP BY bin
-), j AS (
-  SELECT t.bin, s.n_test, s.obs_pos,
-         CAST(t.p_train + 1 AS DOUBLE) / (t.n_train + 2) AS p
-  FROM train t JOIN test s USING (bin)
-)
-SELECT CAST(bin AS INT) AS bin, n_test, obs_pos,
-       round(n_test * p, 6) AS exp_pos,
-       round(pow(obs_pos - n_test * p, 2)
-             / (n_test * p * (1 - p)), 6) AS hl_contrib,
-       round(sum(pow(obs_pos - n_test * p, 2) / (n_test * p * (1 - p)))
-               OVER (ORDER BY bin ROWS UNBOUNDED PRECEDING), 6)
-         AS chi2_run
-FROM j
-"""
 
 
 def q_qini_uplift(spark, sf_dir):
@@ -252,44 +186,3 @@ def q_qini_uplift(spark, sf_dir):
             rt / F.nullif(nt, F.lit(0.0)) - rc / F.nullif(nc, F.lit(0.0)), 6
         ).alias("uplift_gap"),
     )
-
-
-SQL_QINI_UPLIFT = f"""
-WITH users AS (
-  SELECT user_id,
-         CAST(sum(CASE WHEN extract(day FROM ts) <= 7 THEN 1 ELSE 0 END) AS BIGINT)
-           AS score,
-         CAST(max(CASE WHEN event_type = 'purchase' AND extract(day FROM ts) >= 8
-                       THEN 1 ELSE 0 END) AS BIGINT) AS conv,
-         CAST(user_id % 2 AS BIGINT) AS treat
-  FROM events GROUP BY user_id
-  HAVING sum(CASE WHEN extract(day FROM ts) <= 7 THEN 1 ELSE 0 END) > 0
-), dec AS (
-  SELECT CAST(ntile({_QINI_TILES})
-              OVER (ORDER BY score DESC, user_id ASC) AS INT) AS decile,
-         treat, conv
-  FROM users
-), g AS (
-  SELECT decile,
-         CAST(sum(treat) AS BIGINT) AS nt,
-         CAST(sum(treat * conv) AS BIGINT) AS rt,
-         CAST(sum(1 - treat) AS BIGINT) AS nc,
-         CAST(sum((1 - treat) * conv) AS BIGINT) AS rc
-  FROM dec GROUP BY decile
-), cum AS (
-  SELECT decile,
-         CAST(sum(nt) OVER w AS BIGINT) AS cum_nt,
-         CAST(sum(rt) OVER w AS BIGINT) AS cum_rt,
-         CAST(sum(nc) OVER w AS BIGINT) AS cum_nc,
-         CAST(sum(rc) OVER w AS BIGINT) AS cum_rc
-  FROM g WINDOW w AS (ORDER BY decile ROWS UNBOUNDED PRECEDING)
-)
-SELECT decile, cum_nt, cum_rt, cum_nc, cum_rc,
-       round(CAST(cum_rt AS DOUBLE)
-             - CAST(cum_rc AS DOUBLE) * cum_nt
-               / nullif(CAST(cum_nc AS DOUBLE), 0.0), 6) AS qini,
-       round(CAST(cum_rt AS DOUBLE) / nullif(CAST(cum_nt AS DOUBLE), 0.0)
-             - CAST(cum_rc AS DOUBLE)
-               / nullif(CAST(cum_nc AS DOUBLE), 0.0), 6) AS uplift_gap
-FROM cum
-"""

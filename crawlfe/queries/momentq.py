@@ -44,15 +44,6 @@ def _user_cents(spark, sf_dir):
     )
 
 
-_SQL_USER_CENTS = """
-u AS (
-  SELECT user_id,
-         CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS x
-  FROM events GROUP BY 1
-)
-"""
-
-
 def q_cornish_fisher_q(spark, sf_dir):
     """CORNISH-FISHER p95 from four moments vs the exact
     interpolated p95; relative error reported."""
@@ -123,60 +114,6 @@ def q_cornish_fisher_q(spark, sf_dir):
     )
 
 
-SQL_CORNISH_FISHER_Q = f"""
-WITH {_SQL_USER_CENTS},
-m AS (
-  SELECT CAST(count(*) AS BIGINT) AS n,
-         avg(CAST(x AS DOUBLE)) AS m1,
-         avg(pow(CAST(x AS DOUBLE), 2.0)) AS r2,
-         avg(pow(CAST(x AS DOUBLE), 3.0)) AS r3,
-         avg(pow(CAST(x AS DOUBLE), 4.0)) AS r4
-  FROM u
-), c AS (
-  SELECT n, m1, r2 - m1 * m1 AS m2,
-         r3 - 3 * m1 * r2 + 2 * m1 * m1 * m1 AS m3,
-         r4 - 4 * m1 * r3 + 6 * m1 * m1 * r2
-            - 3 * m1 * m1 * m1 * m1 AS m4
-  FROM m
-), g AS (
-  SELECT n, m1, m2, m3 / pow(m2, 1.5) AS g1,
-         m4 / (m2 * m2) - 3 AS g2
-  FROM c
-), zc AS (
-  SELECT CAST({_CF_Z} AS DOUBLE) AS z
-), cf AS (
-  SELECT n, g1, g2,
-         m1 + sqrt(m2) * (z
-              + (z * z - 1) * g1 / 6
-              + (z * z * z - 3 * z) * g2 / 24
-              - (2 * z * z * z - 5 * z) * g1 * g1 / 36) AS qcf
-  FROM g CROSS JOIN zc
-), ranked AS (
-  SELECT CAST(x AS DOUBLE) AS v,
-         CAST(row_number() OVER (ORDER BY x, user_id) - 1 AS DOUBLE)
-           AS r,
-         CAST(count(*) OVER () - 1 AS DOUBLE) AS mm
-  FROM u
-), exact AS (
-  SELECT sum(CASE WHEN r = floor(mm * {_CF_P})
-                  THEN CASE WHEN ceil(mm * {_CF_P})
-                              = floor(mm * {_CF_P})
-                       THEN v
-                       ELSE v * (1 - (mm * {_CF_P}
-                                      - floor(mm * {_CF_P})))
-                       END
-                  ELSE v * (mm * {_CF_P} - floor(mm * {_CF_P}))
-             END) AS q_exact
-  FROM ranked
-  WHERE r = floor(mm * {_CF_P}) OR r = ceil(mm * {_CF_P})
-)
-SELECT n, round(g1, 6) AS skew, round(g2, 6) AS kurt_ex,
-       round(qcf, 4) AS q95_cf, round(q_exact, 4) AS q95_exact,
-       round((qcf - q_exact) / q_exact, 6) AS rel_error
-FROM cf CROSS JOIN exact
-"""
-
-
 def q_chebyshev_audit(spark, sf_dir):
     """CHEBYSHEV/CANTELLI bound tightness: empirical two-sided and
     upper tail mass at k sigma vs 1/k^2 and 1/(1+k^2)."""
@@ -223,26 +160,6 @@ def q_chebyshev_audit(spark, sf_dir):
     return out.orderBy("k")
 
 
-SQL_CHEBYSHEV_AUDIT = f"""
-WITH {_SQL_USER_CENTS},
-m AS (
-  SELECT avg(CAST(x AS DOUBLE)) AS mu,
-         stddev_pop(CAST(x AS DOUBLE)) AS sig,
-         CAST(count(*) AS BIGINT) AS n
-  FROM u
-), ks(k) AS (VALUES {", ".join(f"({k})" for k in _CHEB_KS)})
-SELECT ks.k, max(m.n) AS n,
-       round(avg(CASE WHEN abs(u.x - m.mu) >= ks.k * m.sig
-                 THEN 1.0 ELSE 0.0 END), 6) AS two_sided_mass,
-       round(1.0 / (ks.k * ks.k), 6) AS chebyshev,
-       round(avg(CASE WHEN u.x - m.mu >= ks.k * m.sig
-                 THEN 1.0 ELSE 0.0 END), 6) AS upper_mass,
-       round(1.0 / (1.0 + ks.k * ks.k), 6) AS cantelli
-FROM u CROSS JOIN m CROSS JOIN ks
-GROUP BY ks.k ORDER BY ks.k
-"""
-
-
 def q_box_cox(spark, sf_dir):
     """BOX-COX profile likelihood over lambda in {-1,-.5,0,.5,1}:
     LL = -n/2 ln varhat(y) + (lambda - 1) sum ln x; argmax
@@ -281,28 +198,3 @@ def q_box_cox(spark, sf_dir):
         "loglik",
         (F.row_number().over(wbest) == 1).alias("is_best"),
     ).orderBy("lam")
-
-
-SQL_BOX_COX = f"""
-WITH {_SQL_USER_CENTS},
-x AS (
-  SELECT CAST(x AS DOUBLE) AS x FROM u
-), lams(lam) AS (VALUES {", ".join(f"({x})" for x in _BC_LAMBDAS)}),
-g AS (
-  SELECT lams.lam, CAST(count(*) AS BIGINT) AS n,
-         var_pop(CASE WHEN lams.lam = 0.0 THEN ln(x.x)
-                      ELSE (pow(x.x, lams.lam) - 1) / lams.lam
-                 END) AS _v,
-         sum(ln(x.x)) AS _slx
-  FROM x CROSS JOIN lams GROUP BY 1
-), scored AS (
-  SELECT lam, n,
-         round(-CAST(n AS DOUBLE) / 2 * ln(_v)
-               + (lam - 1) * _slx, 4) AS loglik
-  FROM g
-)
-SELECT lam, n, loglik,
-       row_number() OVER (ORDER BY loglik DESC, lam ASC) = 1
-         AS is_best
-FROM scored ORDER BY lam
-"""

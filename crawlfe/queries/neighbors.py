@@ -64,38 +64,12 @@ def _pairs(spark, sf_dir):
     )
 
 
-_SQL_PAIRS = f"""
-base AS MATERIALIZED (
-  SELECT vec_id,
-         list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-  FROM embeddings WHERE vec_id < {_NB_PANEL}
-), pairs AS MATERIALIZED (
-  SELECT a.vec_id AS i, b.vec_id AS j,
-         sqrt(list_sum(list_transform(list_zip(a.v, b.v),
-              t -> (t[1] - t[2]) * (t[1] - t[2])))) AS d
-  FROM base a JOIN base b ON a.vec_id <> b.vec_id
-)
-"""
-
-
 def _knn(spark, sf_dir):
     p = _pairs(spark, sf_dir)
     w = Window.partitionBy("i").orderBy("d", "j")
     return p.select(
         "i", "j", "d", F.row_number().over(w).alias("rn")
     ).where(F.col("rn") <= _NB_K)
-
-
-_SQL_KNN = f"""
-{_SQL_PAIRS},
-knn AS MATERIALIZED (
-  SELECT i, j, d, rn FROM (
-    SELECT i, j, d,
-           row_number() OVER (PARTITION BY i ORDER BY d, j) AS rn
-    FROM pairs
-  ) WHERE rn <= {_NB_K}
-)
-"""
 
 
 def q_lof_scores(spark, sf_dir):
@@ -135,27 +109,6 @@ def q_lof_scores(spark, sf_dir):
     return lof.orderBy(F.desc("lof"), F.asc("vec_id")).limit(10)
 
 
-SQL_LOF_SCORES = f"""
-WITH {_SQL_KNN},
-kdist AS MATERIALIZED (
-  SELECT i AS o, d AS kdist FROM knn WHERE rn = {_NB_K}
-), reach AS MATERIALIZED (
-  SELECT knn.i, knn.j, greatest(kdist.kdist, knn.d) AS rd
-  FROM knn JOIN kdist ON knn.j = kdist.o
-), lrd AS MATERIALIZED (
-  SELECT i, 1.0 / avg(rd) AS lrd FROM reach GROUP BY 1
-), lof AS (
-  SELECT knn.i AS vec_id, avg(lo.lrd) AS _m
-  FROM knn JOIN lrd lo ON knn.j = lo.i
-  GROUP BY 1
-)
-SELECT lof.vec_id, round(lof._m / lrd.lrd, 6) AS lof,
-       round(lrd.lrd, 6) AS lrd
-FROM lof JOIN lrd ON lof.vec_id = lrd.i
-ORDER BY lof DESC, vec_id ASC LIMIT 10
-"""
-
-
 def q_twonn_dim(spark, sf_dir):
     """TWONN intrinsic dimension: id_mle = n / sum(ln(d2/d1)) over
     panel points with d1 > 0."""
@@ -179,26 +132,6 @@ def q_twonn_dim(spark, sf_dir):
         F.round(F.col("n_used") / F.col("_s"), 4).alias("id_mle"),
         F.round("_mu", 6).alias("mean_mu"),
     )
-
-
-SQL_TWONN_DIM = f"""
-WITH {_SQL_KNN},
-two AS (
-  SELECT i,
-         min(CASE WHEN rn = 1 THEN d END) AS d1,
-         min(CASE WHEN rn = 2 THEN d END) AS d2
-  FROM knn WHERE rn <= 2 GROUP BY 1
-), f AS (
-  SELECT * FROM two WHERE d1 > 0
-), m AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_used,
-         sum(ln(d2 / d1)) AS _s, avg(d2 / d1) AS _mu
-  FROM f
-)
-SELECT n_used, round(n_used / _s, 4) AS id_mle,
-       round(_mu, 6) AS mean_mu
-FROM m
-"""
 
 
 def q_hubness_skew(spark, sf_dir):
@@ -243,29 +176,3 @@ def q_hubness_skew(spark, sf_dir):
         "max_kocc",
         "n_antihubs",
     )
-
-
-SQL_HUBNESS_SKEW = f"""
-WITH {_SQL_KNN},
-occ AS (
-  SELECT j, CAST(count(*) AS BIGINT) AS kocc FROM knn GROUP BY 1
-), panel AS (
-  SELECT vec_id AS j FROM embeddings WHERE vec_id < {_NB_PANEL}
-), occfull AS (
-  SELECT CAST(coalesce(occ.kocc, 0) AS BIGINT) AS kocc
-  FROM panel LEFT JOIN occ USING (j)
-), m AS (
-  SELECT CAST(count(*) AS BIGINT) AS n, avg(kocc) AS m1,
-         avg(kocc * kocc) AS m2,
-         avg(kocc * kocc * kocc) AS m3,
-         CAST(max(kocc) AS BIGINT) AS max_kocc,
-         CAST(sum(CASE WHEN kocc = 0 THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_antihubs
-  FROM occfull
-)
-SELECT n, round(m1, 4) AS mean_kocc,
-       round((m3 - 3 * m1 * m2 + 2 * m1 * m1 * m1)
-             / pow(m2 - m1 * m1, 1.5), 6) AS skewness,
-       max_kocc, n_antihubs
-FROM m
-"""

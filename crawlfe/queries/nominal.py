@@ -32,14 +32,6 @@ def _table(spark, sf_dir):
     )
 
 
-_SQL_TABLE = """
-tab AS MATERIALIZED (
-  SELECT source, lang, CAST(count(*) AS BIGINT) AS c
-  FROM documents GROUP BY 1, 2
-)
-"""
-
-
 def q_goodman_lambda(spark, sf_dir):
     """GOODMAN-KRUSKAL LAMBDA both directions from the source x
     lang table."""
@@ -78,33 +70,6 @@ def q_goodman_lambda(spark, sf_dir):
             6,
         ).alias("lambda_source_given_lang"),
     )
-
-
-SQL_GOODMAN_LAMBDA = f"""
-WITH {_SQL_TABLE},
-n AS (SELECT CAST(sum(c) AS DOUBLE) AS n FROM tab),
-row_max AS (
-  SELECT sum(mx) AS sum_row_max FROM (
-    SELECT source, CAST(max(c) AS DOUBLE) AS mx
-    FROM tab GROUP BY 1)
-), col_tot AS (
-  SELECT max(ct) AS max_col FROM (
-    SELECT lang, CAST(sum(c) AS DOUBLE) AS ct FROM tab GROUP BY 1)
-), col_max AS (
-  SELECT sum(mx) AS sum_col_max FROM (
-    SELECT lang, CAST(max(c) AS DOUBLE) AS mx FROM tab GROUP BY 1)
-), row_tot AS (
-  SELECT max(rt) AS max_row FROM (
-    SELECT source, CAST(sum(c) AS DOUBLE) AS rt FROM tab GROUP BY 1)
-)
-SELECT CAST(n AS BIGINT) AS n,
-       round((sum_row_max - max_col) / (n - max_col), 6)
-         AS lambda_lang_given_source,
-       round((sum_col_max - max_row) / (n - max_row), 6)
-         AS lambda_source_given_lang
-FROM n CROSS JOIN row_max CROSS JOIN col_tot
-CROSS JOIN col_max CROSS JOIN row_tot
-"""
 
 
 def q_theils_u(spark, sf_dir):
@@ -149,30 +114,6 @@ def q_theils_u(spark, sf_dir):
         F.round(mi / F.col("h_l"), 6).alias("u_lang_given_source"),
         F.round(mi / F.col("h_s"), 6).alias("u_source_given_lang"),
     )
-
-
-SQL_THEILS_U = f"""
-WITH {_SQL_TABLE},
-n AS (SELECT CAST(sum(c) AS DOUBLE) AS n FROM tab),
-hj AS (
-  SELECT sum(-(c / n) * log2(c / n)) AS h_sl
-  FROM tab CROSS JOIN n
-), hs AS (
-  SELECT sum(-(rc / n) * log2(rc / n)) AS h_s FROM (
-    SELECT source, CAST(sum(c) AS DOUBLE) AS rc FROM tab GROUP BY 1
-  ) CROSS JOIN n
-), hl AS (
-  SELECT sum(-(cc / n) * log2(cc / n)) AS h_l FROM (
-    SELECT lang, CAST(sum(c) AS DOUBLE) AS cc FROM tab GROUP BY 1
-  ) CROSS JOIN n
-)
-SELECT round(h_s, 6) AS h_source_bits,
-       round(h_l, 6) AS h_lang_bits,
-       round(h_s + h_l - h_sl, 6) AS mutual_info_bits,
-       round((h_s + h_l - h_sl) / h_l, 6) AS u_lang_given_source,
-       round((h_s + h_l - h_sl) / h_s, 6) AS u_source_given_lang
-FROM hj CROSS JOIN hs CROSS JOIN hl
-"""
 
 
 def q_cramers_v_corrected(spark, sf_dir):
@@ -237,36 +178,3 @@ def q_cramers_v_corrected(spark, sf_dir):
         F.round(v, 6).alias("cramers_v"),
         F.round(vc, 6).alias("cramers_v_corrected"),
     )
-
-
-SQL_CRAMERS_V_CORRECTED = f"""
-WITH {_SQL_TABLE},
-n AS (
-  SELECT CAST(sum(c) AS DOUBLE) AS n,
-         CAST(count(DISTINCT source) AS DOUBLE) AS r,
-         CAST(count(DISTINCT lang) AS DOUBLE) AS k
-  FROM tab
-), rt AS (
-  SELECT source, CAST(sum(c) AS DOUBLE) AS rt FROM tab GROUP BY 1
-), ct AS (
-  SELECT lang, CAST(sum(c) AS DOUBLE) AS ct FROM tab GROUP BY 1
-), chi AS (
-  SELECT sum(pow(coalesce(tab.c, 0) - rt.rt * ct.ct / n.n, 2.0)
-             / (rt.rt * ct.ct / n.n)) AS chi2
-  FROM rt CROSS JOIN ct
-  LEFT JOIN tab USING (source, lang)
-  CROSS JOIN n
-), g AS (
-  SELECT chi2, n, r, k, chi2 / n AS phi2,
-         greatest(0.0, chi2 / n - (r - 1) * (k - 1) / (n - 1))
-           AS phi2c,
-         r - pow(r - 1, 2.0) / (n - 1) AS rc,
-         k - pow(k - 1, 2.0) / (n - 1) AS kc
-  FROM chi CROSS JOIN n
-)
-SELECT CAST(n AS BIGINT) AS n, round(chi2, 4) AS chi2,
-       round(sqrt(phi2 / least(r - 1, k - 1)), 6) AS cramers_v,
-       round(sqrt(phi2c / least(rc - 1, kc - 1)), 6)
-         AS cramers_v_corrected
-FROM g
-"""

@@ -53,7 +53,6 @@ _OP_TRAIN_DAY_MAX = 15
 
 # reward rule shared verbatim by both engines (a is the action column)
 _OP_REWARD_SQL = "CASE WHEN ((cents DIV 100) + 13 * {a}) % 10 < 3 + {a} THEN 1 ELSE 0 END"
-_OP_REWARD_DUCK = "CASE WHEN ((cents // 100) + 13 * {a}) % 10 < 3 + {a} THEN 1 ELSE 0 END"
 
 
 def _op_rounds(spark, sf_dir):
@@ -79,20 +78,6 @@ def _op_rounds(spark, sf_dir):
         "a",
         F.expr(_OP_REWARD_SQL.format(a="a")).cast("bigint").alias("r"),
     )
-
-
-_SQL_OP_ROUNDS = f"""
-  SELECT CAST(extract(day FROM ts) AS INT) AS day,
-         least({_OP_MAX_BIN},
-               CAST(round(value * 100) AS BIGINT) // {_OP_BIN_CENTS}) AS x,
-         a,
-         CAST({_OP_REWARD_DUCK.format(a="a")} AS BIGINT) AS r
-  FROM (SELECT ts, value,
-               CAST('0x' || substring(md5(CAST(event_id AS VARCHAR)), 1, 8)
-                    AS BIGINT) % {_OP_ACTIONS} AS a,
-               CAST(round(value * 100) AS BIGINT) AS cents
-        FROM events)
-"""
 
 
 def q_ips_offpolicy(spark, sf_dir):
@@ -136,31 +121,6 @@ def q_ips_offpolicy(spark, sf_dir):
             F.col("cr") / F.nullif(F.col("cm").cast("double"), F.lit(0.0)), 6
         ).alias("snips_run"),
     )
-
-
-SQL_IPS_OFFPOLICY = f"""
-WITH rounds AS ({_SQL_OP_ROUNDS}),
-per_x AS (
-  SELECT x, CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(CASE WHEN a = x % {_OP_ACTIONS} THEN 1 ELSE 0 END)
-              AS BIGINT) AS n_match,
-         CAST(sum(CASE WHEN a = x % {_OP_ACTIONS} THEN r ELSE 0 END)
-              AS BIGINT) AS r_match
-  FROM rounds GROUP BY x
-), cum AS (
-  SELECT x, n, n_match, r_match,
-         CAST(sum(n) OVER w AS BIGINT) AS cn,
-         CAST(sum(n_match) OVER w AS BIGINT) AS cm,
-         CAST(sum(r_match) OVER w AS BIGINT) AS cr
-  FROM per_x WINDOW w AS (ORDER BY x ROWS UNBOUNDED PRECEDING)
-)
-SELECT x, n, n_match, r_match,
-       round({_OP_ACTIONS} * CAST(r_match AS DOUBLE) / n, 6) AS ips_x,
-       round({_OP_ACTIONS} * CAST(cr AS DOUBLE) / cn, 6) AS ips_run,
-       round(CAST(cr AS DOUBLE) / nullif(CAST(cm AS DOUBLE), 0.0), 6)
-         AS snips_run
-FROM cum
-"""
 
 
 def q_dr_offpolicy(spark, sf_dir):
@@ -220,39 +180,6 @@ def q_dr_offpolicy(spark, sf_dir):
     )
 
 
-SQL_DR_OFFPOLICY = f"""
-WITH rounds AS ({_SQL_OP_ROUNDS}),
-q AS (
-  SELECT x, a,
-         CAST(sum(r) + 1 AS DOUBLE) / (count(*) + 2) AS qhat
-  FROM rounds WHERE day <= {_OP_TRAIN_DAY_MAX} GROUP BY x, a
-), test AS (
-  SELECT x, a, CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(r) AS BIGINT) AS s
-  FROM rounds WHERE day > {_OP_TRAIN_DAY_MAX} GROUP BY x, a
-), j AS (
-  SELECT t.x, t.a, t.n, t.s,
-         coalesce(ql.qhat, 0.5) AS qhat,
-         coalesce(qt.qhat, 0.5) AS qhat_target,
-         CASE WHEN t.a = t.x % {_OP_ACTIONS} THEN 1 ELSE 0 END AS match
-  FROM test t
-  LEFT JOIN q ql ON ql.x = t.x AND ql.a = t.a
-  LEFT JOIN q qt ON qt.x = t.x AND qt.a = t.x % {_OP_ACTIONS}
-), cum AS (
-  SELECT x, a, n, s,
-         round(qhat, 6) AS qhat_logged,
-         round(qhat_target, 6) AS qhat_target,
-         sum(n * qhat_target
-             + {_OP_ACTIONS} * match * (s - n * qhat)) OVER w AS cum_term,
-         CAST(sum(n) OVER w AS BIGINT) AS cum_n
-  FROM j WINDOW w AS (ORDER BY x, a ROWS UNBOUNDED PRECEDING)
-)
-SELECT x, a, n, s, qhat_logged, qhat_target,
-       round(cum_term / CAST(cum_n AS DOUBLE), 6) AS dr_run
-FROM cum
-"""
-
-
 def q_policy_sweep(spark, sf_dir):
     """OFFLINE POLICY SELECTION over the candidate family
     pi_k(x) = (x + k) % 3: one broadcast 3-row cross join of the
@@ -298,26 +225,3 @@ def q_policy_sweep(spark, sf_dir):
         .over(Window.orderBy(F.desc("snips"), F.asc("k")))
         .cast("int"),
     )
-
-
-SQL_POLICY_SWEEP = f"""
-WITH rounds AS ({_SQL_OP_ROUNDS}),
-ks AS (SELECT CAST(range AS BIGINT) AS k FROM range({_OP_ACTIONS})),
-per_k AS (
-  SELECT k, CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(CASE WHEN a = (x + k) % {_OP_ACTIONS}
-                       THEN 1 ELSE 0 END) AS BIGINT) AS n_match,
-         CAST(sum(CASE WHEN a = (x + k) % {_OP_ACTIONS}
-                       THEN r ELSE 0 END) AS BIGINT) AS r_match
-  FROM rounds CROSS JOIN ks GROUP BY k
-), scored AS (
-  SELECT k, n_match, r_match,
-         round({_OP_ACTIONS} * CAST(r_match AS DOUBLE) / n, 6) AS ips,
-         round(CAST(r_match AS DOUBLE)
-               / nullif(CAST(n_match AS DOUBLE), 0.0), 6) AS snips
-  FROM per_k
-)
-SELECT k, n_match, r_match, ips, snips,
-       CAST(row_number() OVER (ORDER BY snips DESC, k ASC) AS INT) AS rank
-FROM scored
-"""

@@ -119,58 +119,6 @@ def q_shapley_features(spark, sf_dir):
     return out
 
 
-_SQL_SHAP_CELLS = f"""
-cells AS (
-  SELECT CASE WHEN dayofweek(ts) IN (0, 6) THEN 1 ELSE 0 END AS fa,
-         CASE WHEN CAST(round(value * 100) AS BIGINT) >= {_SH_CENTS}
-              THEN 1 ELSE 0 END AS fb,
-         CASE WHEN hour(ts) >= 12 THEN 1 ELSE 0 END AS fc,
-         CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-              AS BIGINT) AS s
-  FROM events GROUP BY 1, 2, 3
-), vv AS (
-  SELECT
-    CAST(sum(s) AS DOUBLE) / sum(n) AS v0,
-    CAST(sum(CASE WHEN fa = 1 THEN s END) AS DOUBLE)
-      / sum(CASE WHEN fa = 1 THEN n END) AS va,
-    CAST(sum(CASE WHEN fb = 1 THEN s END) AS DOUBLE)
-      / sum(CASE WHEN fb = 1 THEN n END) AS vb,
-    CAST(sum(CASE WHEN fc = 1 THEN s END) AS DOUBLE)
-      / sum(CASE WHEN fc = 1 THEN n END) AS vc,
-    CAST(sum(CASE WHEN fa = 1 AND fb = 1 THEN s END) AS DOUBLE)
-      / sum(CASE WHEN fa = 1 AND fb = 1 THEN n END) AS vab,
-    CAST(sum(CASE WHEN fa = 1 AND fc = 1 THEN s END) AS DOUBLE)
-      / sum(CASE WHEN fa = 1 AND fc = 1 THEN n END) AS vac,
-    CAST(sum(CASE WHEN fb = 1 AND fc = 1 THEN s END) AS DOUBLE)
-      / sum(CASE WHEN fb = 1 AND fc = 1 THEN n END) AS vbc,
-    CAST(sum(CASE WHEN fa = 1 AND fb = 1 AND fc = 1 THEN s END)
-         AS DOUBLE)
-      / sum(CASE WHEN fa = 1 AND fb = 1 AND fc = 1 THEN n END) AS vabc
-  FROM cells
-)
-"""
-
-SQL_SHAPLEY_FEATURES = f"""
-WITH {_SQL_SHAP_CELLS}
-SELECT 'weekend' AS feature, round(v0, 6) AS v_empty,
-       round(vabc, 6) AS v_full,
-       round((va - v0) / 3 + (vab - vb) / 6 + (vac - vc) / 6
-             + (vabc - vbc) / 3, 6) AS phi
-FROM vv
-UNION ALL
-SELECT 'high_value', round(v0, 6), round(vabc, 6),
-       round((vb - v0) / 3 + (vab - va) / 6 + (vbc - vc) / 6
-             + (vabc - vac) / 3, 6)
-FROM vv
-UNION ALL
-SELECT 'afternoon', round(v0, 6), round(vabc, 6),
-       round((vc - v0) / 3 + (vac - va) / 6 + (vbc - vb) / 6
-             + (vabc - vab) / 3, 6)
-FROM vv
-"""
-
-
 def q_decile_migration(spark, sf_dir):
     """WEEK-1 -> WEEK-4 value-decile migration: per-user exact spend
     per period, decile = ceil(10 r / n) by (cents, user_id) rank;
@@ -211,33 +159,6 @@ def q_decile_migration(spark, sf_dir):
             "stayed"
         )
     )
-
-
-SQL_DECILE_MIGRATION = f"""
-WITH e AS (
-  SELECT user_id, dayofmonth(ts) AS d,
-         CAST(round(value * 100) AS BIGINT) AS c
-  FROM events
-), p1 AS (
-  SELECT user_id,
-         CAST(ceil(10.0 * row_number()
-              OVER (ORDER BY spend, user_id) / count(*) OVER ())
-              AS BIGINT) AS d1
-  FROM (SELECT user_id, CAST(sum(c) AS BIGINT) AS spend FROM e
-        WHERE d BETWEEN {_DM_W1[0]} AND {_DM_W1[1]} GROUP BY user_id)
-), p4 AS (
-  SELECT user_id,
-         CAST(ceil(10.0 * row_number()
-              OVER (ORDER BY spend, user_id) / count(*) OVER ())
-              AS BIGINT) AS d4
-  FROM (SELECT user_id, CAST(sum(c) AS BIGINT) AS spend FROM e
-        WHERE d BETWEEN {_DM_W4[0]} AND {_DM_W4[1]} GROUP BY user_id)
-)
-SELECT d1, d4, CAST(count(*) AS BIGINT) AS n,
-       CAST(d1 = d4 AS INT) AS stayed
-FROM p1 JOIN p4 USING (user_id)
-GROUP BY d1, d4
-"""
 
 
 def q_littles_law(spark, sf_dir):
@@ -317,59 +238,3 @@ def q_littles_law(spark, sf_dir):
         F.round(l_samp, 6).alias("l_sampled"),
         F.round(l_samp - l_exact, 6).alias("sampling_err"),
     )
-
-
-SQL_LITTLES_LAW = f"""
-WITH e AS (
-  SELECT user_id, epoch_us(ts) AS us FROM events
-), marked AS (
-  SELECT user_id, us,
-         CASE WHEN lag(us) OVER (PARTITION BY user_id ORDER BY us)
-                   IS NULL
-               OR us - lag(us) OVER (PARTITION BY user_id ORDER BY us)
-                   > {SESSION_GAP_S} * 1000000
-              THEN 1 ELSE 0 END AS new_s
-  FROM e
-), sid AS (
-  SELECT user_id, us,
-         sum(new_s) OVER (PARTITION BY user_id ORDER BY us
-                          ROWS UNBOUNDED PRECEDING) AS sid
-  FROM marked
-), sess AS (
-  SELECT user_id, sid, CAST(min(us) AS BIGINT) AS s,
-         CAST(max(us) AS BIGINT) AS t
-  FROM sid GROUP BY user_id, sid
-), hz AS (
-  SELECT CAST(min(us) AS BIGINT) AS lo, CAST(max(us) AS BIGINT) AS hi
-  FROM e
-), tot AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_sessions,
-         CAST(sum(t - s) AS BIGINT) AS dur_us
-  FROM sess
-), hits AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_hits
-  FROM (
-    SELECT unnest(generate_series(
-             CAST(ceil(CAST(s AS DOUBLE) / {_HOUR_US}) AS BIGINT),
-             t // {_HOUR_US})) AS k
-    FROM sess
-    WHERE t // {_HOUR_US}
-          >= CAST(ceil(CAST(s AS DOUBLE) / {_HOUR_US}) AS BIGINT)
-  )
-), j AS (
-  SELECT n_sessions, dur_us, hi - lo AS horizon_us, n_hits,
-         CAST(ceil(CAST(lo AS DOUBLE) / {_HOUR_US}) AS BIGINT) AS kmin,
-         hi // {_HOUR_US} AS kmax
-  FROM tot CROSS JOIN hz CROSS JOIN hits
-)
-SELECT n_sessions, dur_us, horizon_us,
-       round(CAST(dur_us AS DOUBLE) / horizon_us, 6) AS l_exact,
-       round(CAST(n_sessions AS DOUBLE)
-             / (horizon_us / {float(_HOUR_US)}), 6) AS lambda_per_hr,
-       round(CAST(dur_us AS DOUBLE) / n_sessions / 1e6, 4) AS w_mean_s,
-       round(CAST(n_hits AS DOUBLE) / (kmax - kmin + 1), 6)
-         AS l_sampled,
-       round(CAST(n_hits AS DOUBLE) / (kmax - kmin + 1)
-             - CAST(dur_us AS DOUBLE) / horizon_us, 6) AS sampling_err
-FROM j
-"""

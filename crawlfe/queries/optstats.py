@@ -76,37 +76,6 @@ def q_selectivity_audit(spark, sf_dir):
     return out.orderBy("pair")
 
 
-SQL_SELECTIVITY_AUDIT = """
-WITH mv AS (
-  SELECT avg(value) AS mv FROM events
-), m AS (
-  SELECT CAST(count(*) AS BIGINT) AS n,
-    avg(CASE WHEN event_type = 'purchase' THEN 1.0 ELSE 0.0 END)
-      AS s1,
-    avg(CASE WHEN value > mv THEN 1.0 ELSE 0.0 END) AS s2,
-    avg(CASE WHEN dayofmonth(ts) <= 15 THEN 1.0 ELSE 0.0 END) AS s3,
-    avg(CASE WHEN event_type = 'purchase' AND value > mv
-        THEN 1.0 ELSE 0.0 END) AS s12,
-    avg(CASE WHEN event_type = 'purchase' AND dayofmonth(ts) <= 15
-        THEN 1.0 ELSE 0.0 END) AS s13,
-    avg(CASE WHEN value > mv AND dayofmonth(ts) <= 15
-        THEN 1.0 ELSE 0.0 END) AS s23
-  FROM events CROSS JOIN mv
-)
-SELECT 'type&value' AS pair, n, round(s1 * s2, 6) AS est_indep,
-       round(s12, 6) AS actual,
-       round(s12 / (s1 * s2), 6) AS corr_ratio
-FROM m
-UNION ALL
-SELECT 'type&day', n, round(s1 * s3, 6), round(s13, 6),
-       round(s13 / (s1 * s3), 6) FROM m
-UNION ALL
-SELECT 'value&day', n, round(s2 * s3, 6), round(s23, 6),
-       round(s23 / (s2 * s3), 6) FROM m
-ORDER BY pair
-"""
-
-
 def q_histogram_est_error(spark, sf_dir):
     """EQUI-DEPTH-HISTOGRAM selectivity estimates for three cents
     ranges vs exact, with the estimation error."""
@@ -223,71 +192,6 @@ def q_histogram_est_error(spark, sf_dir):
     return out.orderBy("range_id")
 
 
-def _hist_sql():
-    parts = []
-    for i, (a, bq) in enumerate(_HIST_RANGES):
-        parts.append(f"""
-SELECT 'r{i + 1}' AS range_id, cuts.qa AS lo_cents,
-       cuts.qb AS hi_cents,
-       round((SELECT sum(h.cnt
-                  * greatest(0.0, least(h.hi, cuts.qb)
-                             - greatest(h.lo, cuts.qa))
-                  / (h.hi - h.lo) / h.ntot)
-              FROM hist h), 6) AS est_sel,
-       round((SELECT avg(CASE WHEN e.c > cuts.qa AND e.c <= cuts.qb
-                         THEN 1.0 ELSE 0.0 END) FROM e), 6)
-         AS actual_sel,
-       round((SELECT sum(h.cnt
-                  * greatest(0.0, least(h.hi, cuts.qb)
-                             - greatest(h.lo, cuts.qa))
-                  / (h.hi - h.lo) / h.ntot)
-              FROM hist h)
-             - (SELECT avg(CASE WHEN e.c > cuts.qa
-                            AND e.c <= cuts.qb
-                           THEN 1.0 ELSE 0.0 END) FROM e), 6)
-         AS abs_err
-FROM (
-  SELECT min(c) AS qa, max(c) AS qb FROM (
-    SELECT CAST(c AS DOUBLE) AS c, r0, m FROM rq
-    WHERE r0 = floor(m * {a}) OR r0 = floor(m * {bq})
-  )
-) cuts""")
-    body = "\nUNION ALL".join(parts)
-    return f"""
-WITH e AS MATERIALIZED (
-  SELECT CAST(round(value * 100) AS BIGINT) AS c FROM events
-), ranked AS (
-  SELECT c, CAST(row_number() OVER (ORDER BY c) AS DOUBLE) AS r,
-         CAST(count(*) OVER () AS DOUBLE) AS n
-  FROM e
-), bounds AS (
-  SELECT CAST(ceil(r * {_HIST_B} / n) AS BIGINT) AS b,
-         CAST(max(c) AS DOUBLE) AS hi,
-         CAST(count(*) AS BIGINT) AS cnt
-  FROM ranked GROUP BY 1
-), mn AS (
-  SELECT CAST(min(c) AS DOUBLE) AS cmin,
-         CAST(count(*) AS BIGINT) AS ntot
-  FROM e
-), hist AS MATERIALIZED (
-  SELECT b,
-         coalesce(lag(hi) OVER (ORDER BY b), cmin - 1) AS lo,
-         hi, cnt, ntot
-  FROM bounds CROSS JOIN mn
-), rq AS MATERIALIZED (
-  SELECT c,
-         CAST(row_number() OVER (ORDER BY c) - 1 AS DOUBLE) AS r0,
-         CAST(count(*) OVER () - 1 AS DOUBLE) AS m
-  FROM e
-)
-{body}
-ORDER BY range_id
-"""
-
-
-SQL_HISTOGRAM_EST_ERROR = _hist_sql()
-
-
 def q_ndv_sample_est(spark, sf_dir):
     """SAMPLE-BASED NDV estimators (10% deterministic user sample):
     scale-up, Goodman/GEE, Chao2 — vs the true distinct count."""
@@ -320,28 +224,3 @@ def q_ndv_sample_est(spark, sf_dir):
         F.round(gee, 2).alias("est_gee"),
         F.round(chao, 2).alias("est_chao2"),
     )
-
-
-SQL_NDV_SAMPLE_EST = f"""
-WITH truth AS (
-  SELECT CAST(count(DISTINCT user_id) AS BIGINT) AS true_ndv
-  FROM events
-), per AS (
-  SELECT user_id, CAST(count(*) AS BIGINT) AS cnt
-  FROM events WHERE user_id % {_NDV_MOD} = 0 GROUP BY 1
-), s AS (
-  SELECT CAST(count(*) AS BIGINT) AS d,
-         CAST(sum(CASE WHEN cnt = 1 THEN 1 ELSE 0 END) AS BIGINT)
-           AS f1,
-         CAST(sum(CASE WHEN cnt = 2 THEN 1 ELSE 0 END) AS BIGINT)
-           AS f2
-  FROM per
-)
-SELECT true_ndv, d, f1, f2,
-       round(d / {1.0 / _NDV_MOD}, 2) AS est_scaleup,
-       round(d + ({float(_NDV_MOD) ** 0.5} - 1) * f1, 2) AS est_gee,
-       round(d + f1 * f1
-             / (2 * CAST(greatest(f2, 1) AS DOUBLE)), 2)
-         AS est_chao2
-FROM s CROSS JOIN truth
-"""

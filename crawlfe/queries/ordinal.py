@@ -70,31 +70,6 @@ def _joint(spark, sf_dir):
     )
 
 
-_SQL_JOINT = f"""
-u AS (
-  SELECT user_id,
-         CAST(sum(CASE WHEN dayofmonth(ts) <= 15
-                  THEN CAST(round(value * 100) AS BIGINT)
-                  ELSE 0 END) AS BIGINT) AS s1,
-         CAST(sum(CASE WHEN dayofmonth(ts) > 15
-                  THEN CAST(round(value * 100) AS BIGINT)
-                  ELSE 0 END) AS BIGINT) AS s2
-  FROM events GROUP BY 1
-), q AS (
-  SELECT CAST(ceil(row_number() OVER (ORDER BY s1, user_id)
-              * {_ORD_K} / CAST(count(*) OVER () AS DOUBLE))
-              AS BIGINT) AS r1,
-         CAST(ceil(row_number() OVER (ORDER BY s2, user_id)
-              * {_ORD_K} / CAST(count(*) OVER () AS DOUBLE))
-              AS BIGINT) AS r2
-  FROM u
-), joint AS MATERIALIZED (
-  SELECT r1, r2, CAST(count(*) AS BIGINT) AS c
-  FROM q GROUP BY 1, 2
-)
-"""
-
-
 def q_weighted_kappa(spark, sf_dir):
     """QUADRATIC-WEIGHTED KAPPA on the test-retest spend
     quintiles."""
@@ -141,30 +116,6 @@ def q_weighted_kappa(spark, sf_dir):
             ),
         )
     )
-
-
-SQL_WEIGHTED_KAPPA = f"""
-WITH {_SQL_JOINT},
-tot AS (
-  SELECT CAST(sum(c) AS DOUBLE) AS n FROM joint
-), m1 AS (
-  SELECT r1, CAST(sum(c) AS DOUBLE) AS n1 FROM joint GROUP BY 1
-), m2 AS (
-  SELECT r2, CAST(sum(c) AS DOUBLE) AS n2 FROM joint GROUP BY 1
-), wo AS (
-  SELECT sum(pow(CAST(r1 - r2 AS DOUBLE) / {_ORD_K - 1}, 2.0)
-             * c / n) AS wo
-  FROM joint CROSS JOIN tot
-), we AS (
-  SELECT sum(pow(CAST(m1.r1 - m2.r2 AS DOUBLE) / {_ORD_K - 1}, 2.0)
-             * m1.n1 * m2.n2 / (tot.n * tot.n)) AS we
-  FROM m1 CROSS JOIN m2 CROSS JOIN tot
-)
-SELECT CAST(n AS BIGINT) AS n, round(wo, 6) AS w_observed,
-       round(we, 6) AS w_expected,
-       round(1 - wo / we, 6) AS kappa_w
-FROM wo CROSS JOIN we CROSS JOIN tot
-"""
 
 
 def _cd(j):
@@ -228,24 +179,6 @@ def _cd(j):
     )
 
 
-_SQL_CD = """
-cd AS (
-  SELECT
-    CAST(sum(CASE WHEN (a.r1 < b.r1 AND a.r2 < b.r2)
-                    OR (a.r1 > b.r1 AND a.r2 > b.r2)
-             THEN a.c * b.c ELSE 0 END) / 2 AS BIGINT) AS cc,
-    CAST(sum(CASE WHEN (a.r1 < b.r1 AND a.r2 > b.r2)
-                    OR (a.r1 > b.r1 AND a.r2 < b.r2)
-             THEN a.c * b.c ELSE 0 END) / 2 AS BIGINT) AS dd,
-    CAST(sum(CASE WHEN a.r1 = b.r1 AND a.r2 <> b.r2
-             THEN a.c * b.c ELSE 0 END) / 2 AS BIGINT) AS tx,
-    CAST(sum(CASE WHEN a.r1 <> b.r1 AND a.r2 = b.r2
-             THEN a.c * b.c ELSE 0 END) / 2 AS BIGINT) AS ty
-  FROM joint a CROSS JOIN joint b
-)
-"""
-
-
 def q_ordinal_gamma(spark, sf_dir):
     """GOODMAN-KRUSKAL GAMMA from the joint quintile table."""
     cd = _cd(_joint(spark, sf_dir).localCheckpoint(eager=True))
@@ -258,15 +191,6 @@ def q_ordinal_gamma(spark, sf_dir):
             6,
         ).alias("gamma"),
     )
-
-
-SQL_ORDINAL_GAMMA = f"""
-WITH {_SQL_JOINT},
-{_SQL_CD}
-SELECT cc, dd,
-       round((cc - dd) / CAST(cc + dd AS DOUBLE), 6) AS gamma
-FROM cd
-"""
 
 
 def q_somers_d(spark, sf_dir):
@@ -293,17 +217,3 @@ def q_somers_d(spark, sf_dir):
             6,
         ).alias("tau_b"),
     )
-
-
-SQL_SOMERS_D = f"""
-WITH {_SQL_JOINT},
-{_SQL_CD}
-SELECT round((cc - dd) / CAST(cc + dd + ty AS DOUBLE), 6)
-         AS d_r2_given_r1,
-       round((cc - dd) / CAST(cc + dd + tx AS DOUBLE), 6)
-         AS d_r1_given_r2,
-       round((cc - dd)
-             / sqrt(CAST(cc + dd + tx AS DOUBLE) * (cc + dd + ty)),
-             6) AS tau_b
-FROM cd
-"""

@@ -112,26 +112,6 @@ def q_interval_overlap(spark, sf_dir):
     ).limit(_OVL_TOPK)
 
 
-SQL_INTERVAL_OVERLAP = f"""
-WITH iv AS (
-  SELECT user_id, CAST(ts AS DATE) AS day,
-         CAST(min(epoch_us(ts)) AS BIGINT) AS s,
-         CAST(max(epoch_us(ts)) AS BIGINT) AS t
-  FROM events GROUP BY 1, 2
-), ovl AS (
-  SELECT a.user_id AS ua, b.user_id AS ub,
-         least(a.t, b.t) - greatest(a.s, b.s) AS ov_us
-  FROM iv a JOIN iv b
-    ON a.day = b.day AND a.user_id < b.user_id
-  WHERE least(a.t, b.t) - greatest(a.s, b.s) > 0
-)
-SELECT ua, ub, CAST(count(*) AS BIGINT) AS n_pairs,
-       CAST(sum(ov_us) AS BIGINT) AS overlap_us
-FROM ovl GROUP BY ua, ub
-ORDER BY overlap_us DESC, ua ASC, ub ASC LIMIT {_OVL_TOPK}
-"""
-
-
 def q_auc_ci(spark, sf_dir):
     """ROC AUC with HANLEY-McNEIL 95% CI: exact tie-credited BIGINT
     Mann-Whitney numerator over the (value, pos/neg) histogram;
@@ -192,48 +172,6 @@ def q_auc_ci(spark, sf_dir):
     )
 
 
-SQL_AUC_CI = f"""
-WITH pv AS (
-  SELECT value AS v,
-         CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-              AS BIGINT) AS pos_at,
-         CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
-              AS BIGINT) AS neg_at
-  FROM events WHERE event_type IN ('purchase', 'click')
-  GROUP BY value
-), cum AS (
-  SELECT pos_at, neg_at,
-         sum(neg_at) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) - neg_at
-           AS neg_below
-  FROM pv
-), m AS (
-  SELECT CAST(sum(pos_at) AS BIGINT) AS n1,
-         CAST(sum(neg_at) AS BIGINT) AS n0,
-         CAST(sum(2 * neg_below * pos_at + neg_at * pos_at) AS BIGINT)
-           AS u2
-  FROM cum
-), s AS (
-  SELECT n1, n0, u2,
-         CAST(u2 AS DOUBLE) / CAST(2 * n1 * n0 AS DOUBLE) AS a
-  FROM m
-)
-SELECT n1, n0, u2, round(a, 6) AS auc,
-       round(sqrt((a * (1 - a)
-                   + (n1 - 1) * (a / (2 - a) - a * a)
-                   + (n0 - 1) * (2 * a * a / (1 + a) - a * a))
-                  / CAST(n1 * n0 AS DOUBLE)), 6) AS se,
-       round(a - {_Z95} * sqrt((a * (1 - a)
-                   + (n1 - 1) * (a / (2 - a) - a * a)
-                   + (n0 - 1) * (2 * a * a / (1 + a) - a * a))
-                  / CAST(n1 * n0 AS DOUBLE)), 6) AS lo95,
-       round(a + {_Z95} * sqrt((a * (1 - a)
-                   + (n1 - 1) * (a / (2 - a) - a * a)
-                   + (n0 - 1) * (2 * a * a / (1 + a) - a * a))
-                  / CAST(n1 * n0 AS DOUBLE)), 6) AS hi95
-FROM s
-"""
-
-
 def q_observe_metrics(spark, sf_dir):
     """SPARK OBSERVATION API: attach count / sum(cents) / min / max
     (epoch µs) observers to a single scan of events — the in-flight
@@ -276,12 +214,3 @@ def q_observe_metrics(spark, sf_dir):
         ],
         schema,
     )
-
-
-SQL_OBSERVE_METRICS = """
-SELECT CAST(count(*) AS BIGINT) AS n_rows,
-       CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS sum_cents,
-       CAST(min(epoch_us(ts)) AS BIGINT) AS min_us,
-       CAST(max(epoch_us(ts)) AS BIGINT) AS max_us
-FROM events
-"""

@@ -72,30 +72,6 @@ def q_german_tank(spark, sf_dir):
     )
 
 
-SQL_GERMAN_TANK = f"""
-WITH d AS (SELECT doc_id + 1 AS serial FROM documents),
-tot AS (SELECT CAST(max(serial) AS BIGINT) AS n_true FROM d),
-samp AS (
-  SELECT serial FROM d
-  WHERE CAST('0x' || substring(md5('gt' || CAST(serial AS VARCHAR)),
-                               1, 8) AS BIGINT) % {_GT_MOD} = 0
-), m AS (
-  SELECT CAST(count(*) AS BIGINT) AS k,
-         CAST(max(serial) AS BIGINT) AS m,
-         CAST(sum(serial) AS BIGINT) AS s
-  FROM samp
-)
-SELECT n_true, k, m,
-       round(m + CAST(m AS DOUBLE) / k - 1, 4) AS est_mvu,
-       round(2 * CAST(s AS DOUBLE) / k - 1, 4) AS est_moment,
-       round(abs(m + CAST(m AS DOUBLE) / k - 1 - n_true)
-             / n_true, 6) AS rel_err_mvu,
-       round(abs(2 * CAST(s AS DOUBLE) / k - 1 - n_true)
-             / n_true, 6) AS rel_err_moment
-FROM m CROSS JOIN tot
-"""
-
-
 def q_capture_recapture(spark, sf_dir):
     """LINCOLN-PETERSEN / CHAPMAN: users seen in days 1-10 (n1) vs
     days 16-25 (n2), recaptures = overlap; estimates vs true distinct
@@ -138,31 +114,6 @@ def q_capture_recapture(spark, sf_dir):
     )
 
 
-SQL_CAPTURE_RECAPTURE = f"""
-WITH per AS (
-  SELECT user_id,
-         max(CASE WHEN dayofmonth(ts) BETWEEN {_CR_W1[0]} AND {_CR_W1[1]}
-                  THEN 1 ELSE 0 END) AS c1,
-         max(CASE WHEN dayofmonth(ts) BETWEEN {_CR_W2[0]} AND {_CR_W2[1]}
-                  THEN 1 ELSE 0 END) AS c2
-  FROM events GROUP BY user_id
-), agg AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_total,
-         CAST(sum(c1) AS BIGINT) AS n1,
-         CAST(sum(c2) AS BIGINT) AS n2,
-         CAST(sum(c1 * c2) AS BIGINT) AS m
-  FROM per
-)
-SELECT n_total, n1, n2, m,
-       round(CAST(n1 AS DOUBLE) * n2 / m, 4) AS est_lp,
-       round(CAST(n1 + 1 AS DOUBLE) * (n2 + 1) / (m + 1) - 1, 4)
-         AS est_chapman,
-       round(abs(CAST(n1 + 1 AS DOUBLE) * (n2 + 1) / (m + 1) - 1
-                 - n_total) / n_total, 6) AS rel_err_chapman
-FROM agg
-"""
-
-
 def q_linear_counting(spark, sf_dir):
     """LINEAR COUNTING: users hash into m = 4096 buckets; V = empty
     buckets; n_hat = -m ln(V/m) vs the exact distinct count — the
@@ -188,23 +139,3 @@ def q_linear_counting(spark, sf_dir):
             "rel_err"
         ),
     )
-
-
-SQL_LINEAR_COUNTING = f"""
-WITH exact AS (
-  SELECT CAST(count(DISTINCT user_id) AS BIGINT) AS n_exact FROM events
-), occ AS (
-  SELECT CAST(count(*) AS BIGINT) AS occupied FROM (
-    SELECT DISTINCT CAST('0x' || substring(
-        md5('lc' || CAST(user_id AS VARCHAR)), 1, 8) AS BIGINT)
-        % {_LC_M} AS b
-    FROM events
-  )
-)
-SELECT n_exact, occupied, CAST({_LC_M} AS BIGINT) AS m_buckets,
-       round(-{float(_LC_M)} * ln(({_LC_M} - occupied)
-             / {float(_LC_M)}), 4) AS est_lc,
-       round(abs(-{float(_LC_M)} * ln(({_LC_M} - occupied)
-             / {float(_LC_M)}) - n_exact) / n_exact, 6) AS rel_err
-FROM exact CROSS JOIN occ
-"""

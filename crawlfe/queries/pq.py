@@ -115,50 +115,6 @@ def q_pq_encode(spark, sf_dir):
     )
 
 
-def _sql_pq_common() -> str:
-    return f"""
-base AS (
-  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-  FROM embeddings
-), ms(m) AS (VALUES (0), (1), (2), (3)),
-corpus_m AS (
-  SELECT vec_id, m,
-         list_slice(v, m * {_PQ_SUB} + 1, m * {_PQ_SUB} + {_PQ_SUB}) AS sub
-  FROM base, ms
-), cents16 AS (
-  SELECT vec_id AS k, m,
-         list_slice(v, m * {_PQ_SUB} + 1, m * {_PQ_SUB} + {_PQ_SUB}) AS cv
-  FROM base, ms WHERE vec_id < {_PQ_K}
-), coded AS (
-  SELECT vec_id, m, k, d FROM (
-    SELECT c.vec_id, c.m, t.k,
-           round(list_sum(list_transform(list_zip(c.sub, t.cv),
-                 z -> (z[1] - z[2]) * (z[1] - z[2]))), 6) AS d,
-           row_number() OVER (PARTITION BY c.vec_id, c.m
-                              ORDER BY round(list_sum(list_transform(
-                                  list_zip(c.sub, t.cv),
-                                  z -> (z[1] - z[2]) * (z[1] - z[2]))), 6),
-                              t.k) AS rn
-    FROM corpus_m c JOIN cents16 t USING (m)) WHERE rn = 1
-)"""
-
-
-SQL_PQ_ENCODE = (
-    "WITH "
-    + _sql_pq_common()
-    + f"""
-SELECT vec_id,
-       max(CASE WHEN m = 0 THEN k END) AS code0,
-       max(CASE WHEN m = 1 THEN k END) AS code1,
-       max(CASE WHEN m = 2 THEN k END) AS code2,
-       max(CASE WHEN m = 3 THEN k END) AS code3,
-       round(sum(CAST(round(d * 1000000) AS BIGINT))
-             / {float(_PQ_M * _PQ_SUB) * 1e6}, 6) AS recon_mse
-FROM coded GROUP BY vec_id
-"""
-)
-
-
 def q_adc_topk(spark, sf_dir):
     """Approximate top-3 neighbors per probe via ADC: probe-side
     M×K distance LUT (a 10·16-row broadcast), corpus side only its
@@ -196,33 +152,6 @@ def q_adc_topk(spark, sf_dir):
     )
 
 
-SQL_ADC_TOPK = (
-    "WITH "
-    + _sql_pq_common()
-    + f""",
-lut AS (
-  SELECT c.vec_id AS q_id, c.m, t.k,
-         round(list_sum(list_transform(list_zip(c.sub, t.cv),
-               z -> (z[1] - z[2]) * (z[1] - z[2]))), 6) AS pd
-  FROM corpus_m c JOIN cents16 t USING (m)
-  WHERE c.vec_id < {_ADC_PROBES}
-), scored AS (
-  SELECT l.q_id, c.vec_id,
-         round(sum(CAST(round(l.pd * 1000000) AS BIGINT)) / 1000000.0,
-               6) AS adc,
-         sum(CAST(round(l.pd * 1000000) AS BIGINT)) AS adc_micro
-  FROM coded c JOIN lut l ON c.m = l.m AND c.k = l.k
-  WHERE c.vec_id <> l.q_id
-  GROUP BY l.q_id, c.vec_id
-)
-SELECT q_id, vec_id, adc, rn FROM (
-  SELECT *, row_number() OVER (PARTITION BY q_id
-                               ORDER BY adc_micro, vec_id) AS rn
-  FROM scored) WHERE rn <= {_ADC_TOPK}
-"""
-)
-
-
 def q_mixture_temperature(spark, sf_dir):
     """Temperature-scaled source sampling weights: p_s = share of
     docs, w_s = p_s^alpha / sum(p_s^alpha) with alpha = 0.7 — the
@@ -248,19 +177,3 @@ def q_mixture_temperature(spark, sf_dir):
             "upsample"
         ),
     )
-
-
-SQL_MIXTURE_TEMPERATURE = f"""
-WITH per AS (
-  SELECT source, CAST(count(*) AS BIGINT) AS n_docs FROM documents
-  GROUP BY source
-), tot AS (SELECT sum(n_docs) AS n_all FROM per),
-withp AS (
-  SELECT source, n_docs, n_docs / CAST(n_all AS DOUBLE) AS p,
-         pow(n_docs / CAST(n_all AS DOUBLE), {_MIX_ALPHA}) AS pa
-  FROM per, tot
-), z AS (SELECT sum(pa) AS z FROM withp)
-SELECT source, n_docs, round(p, 6) AS p, round(pa / z, 6) AS w,
-       round(pa / z / p, 4) AS upsample
-FROM withp, z
-"""

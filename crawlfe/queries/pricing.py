@@ -57,26 +57,6 @@ def q_price_elasticity(spark, sf_dir):
     ).orderBy("p_brand")
 
 
-SQL_PRICE_ELASTICITY = """
-WITH j AS (
-  SELECT p.p_brand,
-         ln(l.l_extendedprice / l.l_quantity) AS lx,
-         ln(l.l_quantity) AS ly
-  FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
-), m AS (
-  SELECT p_brand, CAST(count(*) AS BIGINT) AS n,
-         avg(lx) AS mx, avg(ly) AS my, avg(lx * lx) AS mxx,
-         avg(lx * ly) AS mxy, avg(ly * ly) AS myy
-  FROM j GROUP BY 1
-)
-SELECT p_brand, n,
-       round((mxy - mx * my) / (mxx - mx * mx), 6) AS elasticity,
-       round((mxy - mx * my) * (mxy - mx * my)
-             / ((mxx - mx * mx) * (myy - my * my)), 6) AS r2
-FROM m ORDER BY p_brand
-"""
-
-
 def _daily_demand(spark, sf_dir):
     li = _t(spark, sf_dir, "lineitem")
     return li.groupBy(
@@ -86,15 +66,6 @@ def _daily_demand(spark, sf_dir):
         .cast("bigint")
         .alias("q")
     )
-
-
-_SQL_DAILY_DEMAND = """
-daily AS (
-  SELECT CAST(l_shipdate AS DATE) AS d,
-         CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS q
-  FROM lineitem GROUP BY 1
-)
-"""
 
 
 def q_newsvendor_stock(spark, sf_dir):
@@ -152,46 +123,6 @@ def q_newsvendor_stock(spark, sf_dir):
     )
 
 
-SQL_NEWSVENDOR_STOCK = f"""
-WITH {_SQL_DAILY_DEMAND},
-ranked AS (
-  SELECT CAST(q AS DOUBLE) AS v,
-         CAST(row_number() OVER (ORDER BY q, d) - 1 AS DOUBLE) AS r,
-         CAST(count(*) OVER () - 1 AS DOUBLE) AS m
-  FROM daily
-), qs AS (
-  SELECT sum(CASE WHEN r = floor(m * {_NV_CU / (_NV_CU + _NV_CO)})
-                  THEN CASE WHEN ceil(m * {_NV_CU / (_NV_CU + _NV_CO)})
-                              = floor(m * {_NV_CU / (_NV_CU + _NV_CO)})
-                       THEN v
-                       ELSE v * (1 - (m * {_NV_CU / (_NV_CU + _NV_CO)}
-                                 - floor(m * {_NV_CU / (_NV_CU + _NV_CO)})))
-                       END
-                  ELSE v * (m * {_NV_CU / (_NV_CU + _NV_CO)}
-                            - floor(m * {_NV_CU / (_NV_CU + _NV_CO)}))
-             END) AS qstar
-  FROM ranked
-  WHERE r = floor(m * {_NV_CU / (_NV_CU + _NV_CO)})
-     OR r = ceil(m * {_NV_CU / (_NV_CU + _NV_CO)})
-), mn AS (
-  SELECT avg(CAST(q AS DOUBLE)) AS qmean,
-         CAST(count(*) AS BIGINT) AS n
-  FROM daily
-)
-SELECT max(n) AS n,
-       {round(_NV_CU / (_NV_CU + _NV_CO), 6)} AS critical_ratio,
-       round(max(qstar), 4) AS q_star,
-       round(max(qmean), 4) AS q_mean,
-       round(avg({_NV_CO} * greatest(qstar - q, 0.0)
-                 + {_NV_CU} * greatest(q - qstar, 0.0)), 4)
-         AS cost_at_qstar,
-       round(avg({_NV_CO} * greatest(qmean - q, 0.0)
-                 + {_NV_CU} * greatest(q - qmean, 0.0)), 4)
-         AS cost_at_mean
-FROM daily CROSS JOIN qs CROSS JOIN mn
-"""
-
-
 def q_demand_pooling(spark, sf_dir):
     """RISK POOLING across the top-5 volume brands: pooled daily sd
     vs summed per-brand sds; safety-stock saving at z=1.645."""
@@ -238,37 +169,3 @@ def q_demand_pooling(spark, sf_dir):
             _POOL_Z * (F.col("sum_sd") - F.col("pooled_sd")), 4
         ).alias("safety_stock_saving"),
     )
-
-
-SQL_DEMAND_POOLING = f"""
-WITH j AS (
-  SELECT p.p_brand, CAST(l.l_shipdate AS DATE) AS d,
-         CAST(l.l_quantity AS BIGINT) AS q
-  FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
-), top AS (
-  SELECT p_brand FROM (
-    SELECT p_brand, CAST(sum(q) AS BIGINT) AS tq
-    FROM j GROUP BY 1
-    ORDER BY tq DESC, p_brand ASC LIMIT {_POOL_TOP}
-  )
-), byday AS (
-  SELECT j.p_brand, j.d, CAST(sum(j.q) AS BIGINT) AS dq
-  FROM j JOIN top USING (p_brand)
-  GROUP BY 1, 2
-), per AS (
-  SELECT sum(sd) AS sum_sd FROM (
-    SELECT p_brand, stddev_samp(CAST(dq AS DOUBLE)) AS sd
-    FROM byday GROUP BY 1
-  )
-), pooled AS (
-  SELECT stddev_samp(CAST(pq AS DOUBLE)) AS pooled_sd FROM (
-    SELECT d, CAST(sum(dq) AS BIGINT) AS pq FROM byday GROUP BY 1
-  )
-)
-SELECT round(sum_sd, 4) AS sum_sd,
-       round(pooled_sd, 4) AS pooled_sd,
-       round(pooled_sd / sum_sd, 6) AS pooling_ratio,
-       round({_POOL_Z} * (sum_sd - pooled_sd), 4)
-         AS safety_stock_saving
-FROM per CROSS JOIN pooled
-"""

@@ -59,15 +59,6 @@ def q_k_anonymity(spark, sf_dir):
     )
 
 
-SQL_K_ANONYMITY = f"""
-SELECT lang, source,
-       CAST(n_chars // {_KANON_BUCKET} AS BIGINT) AS len_bucket,
-       CAST(count(*) AS BIGINT) AS n,
-       CAST(count(*) < {_KANON_K} AS INT) AS violates_k
-FROM documents GROUP BY 1, 2, 3
-"""
-
-
 def q_dp_counts(spark, sf_dir):
     """Per-lang doc counts with Laplace(1/eps) noise, eps=1: the
     epsilon-DP count release.  Noise is DETERMINISTIC here — inverse
@@ -96,22 +87,6 @@ def q_dp_counts(spark, sf_dir):
     )
 
 
-SQL_DP_COUNTS = f"""
-WITH per AS (
-  SELECT lang, CAST(count(*) AS BIGINT) AS n FROM documents GROUP BY lang
-), nz AS (
-  SELECT lang, n,
-         -{1.0 / _DP_EPS} * sign(u - 0.5) * ln(1 - 2 * abs(u - 0.5)) AS noise
-  FROM (SELECT lang, n,
-               (CAST('0x' || substring(md5(lang), 1, 4) AS BIGINT) + 0.5)
-               / 65536.0 AS u
-        FROM per)
-)
-SELECT lang, n, round(noise, 4) AS noise, round(n + noise, 4) AS dp_n
-FROM nz
-"""
-
-
 def q_stratified_kfold(spark, sf_dir):
     """Stratified 5-fold assignment: within each lang, docs ordered by
     (md5(doc_id), doc_id) get fold = (rank-1) % 5, so every stratum's
@@ -133,19 +108,6 @@ def q_stratified_kfold(spark, sf_dir):
     )
 
 
-SQL_STRATIFIED_KFOLD = f"""
-WITH folds AS (
-  SELECT lang,
-         (row_number() OVER (PARTITION BY lang
-                             ORDER BY md5(CAST(doc_id AS VARCHAR)),
-                                      doc_id) - 1) % {_KFOLD} AS fold
-  FROM documents
-)
-SELECT lang, fold, CAST(count(*) AS BIGINT) AS n
-FROM folds GROUP BY lang, fold
-"""
-
-
 def q_scan_orc(spark, sf_dir):
     """ORC round trip: documents -> distributed ORC write (overwrite
     into the session scratch dir) -> spark.read.orc -> per-source agg.
@@ -165,12 +127,3 @@ def q_scan_orc(spark, sf_dir):
         F.max("doc_id").alias("max_doc"),
         F.countDistinct("lang").cast("bigint").alias("n_langs"),
     )
-
-
-SQL_SCAN_ORC = """
-SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-       CAST(sum(n_chars) AS BIGINT) AS total_chars,
-       min(doc_id) AS min_doc, max(doc_id) AS max_doc,
-       CAST(count(DISTINCT lang) AS BIGINT) AS n_langs
-FROM documents GROUP BY source
-"""

@@ -75,16 +75,6 @@ def q_l_diversity(spark, sf_dir):
     )
 
 
-SQL_L_DIVERSITY = f"""
-SELECT lang,
-       CAST(n_chars // {_LDIV_BUCKET} AS BIGINT) AS len_bucket,
-       CAST(count(*) AS BIGINT) AS n,
-       CAST(count(DISTINCT source) AS BIGINT) AS l_distinct,
-       CAST(count(DISTINCT source) < {_LDIV_L} AS INT) AS violates_l
-FROM documents GROUP BY 1, 2
-"""
-
-
 def q_entropy_l_diversity(spark, sf_dir):
     """ENTROPY L-DIVERSITY audit: per QI group (lang, len bucket),
     H(source) as an exact BIGINT sum of fixed-point terms
@@ -113,28 +103,6 @@ def q_entropy_l_diversity(spark, sf_dir):
         F.round(F.exp(h), 6).alias("entropy_l"),
         (F.exp(h) < _LDIV_L).cast("int").alias("violates_l"),
     )
-
-
-SQL_ENTROPY_L_DIVERSITY = f"""
-WITH cells AS (
-  SELECT lang, CAST(n_chars // {_LDIV_BUCKET} AS BIGINT) AS len_bucket,
-         source, CAST(count(*) AS BIGINT) AS c
-  FROM documents GROUP BY 1, 2, 3
-), wn AS (
-  SELECT lang, len_bucket, c,
-         CAST(sum(c) OVER (PARTITION BY lang, len_bucket) AS BIGINT) AS n
-  FROM cells
-), g AS (
-  SELECT lang, len_bucket, n,
-         CAST(-sum(CAST(round(1e6 * c * ln(CAST(c AS DOUBLE) / n))
-                        AS BIGINT)) AS BIGINT) AS h_e6_num
-  FROM wn GROUP BY 1, 2, 3
-)
-SELECT lang, len_bucket, n, h_e6_num,
-       round(exp(h_e6_num / (1e6 * n)), 6) AS entropy_l,
-       CAST(exp(h_e6_num / (1e6 * n)) < {_LDIV_L} AS INT) AS violates_l
-FROM g
-"""
 
 
 def q_t_closeness(spark, sf_dir):
@@ -207,47 +175,3 @@ def q_t_closeness(spark, sf_dir):
         F.round(emd, 6).alias("emd"),
         (emd > _TCLOSE_T).cast("int").alias("violates_t"),
     )
-
-
-SQL_T_CLOSENESS = f"""
-WITH d AS (
-  SELECT lang, source,
-         least({_TCLOSE_M - 1}, n_chars // {_TCLOSE_W}) AS sev
-  FROM documents
-), cells AS (
-  SELECT lang, source, sev, CAST(count(*) AS BIGINT) AS c
-  FROM d GROUP BY 1, 2, 3
-), groups AS (
-  SELECT lang, source, CAST(sum(c) AS BIGINT) AS n_g
-  FROM cells GROUP BY 1, 2
-), gl AS (
-  SELECT sev,
-         CAST(sum(count(*)) OVER (ORDER BY sev ROWS UNBOUNDED PRECEDING)
-              AS BIGINT) AS cum_gc,
-         CAST(sum(count(*)) OVER () AS BIGINT) AS n_tot
-  FROM d GROUP BY sev
-), grid AS (
-  SELECT g.lang, g.source, g.n_g, CAST(r.range AS BIGINT) AS sev
-  FROM groups g CROSS JOIN range(0, {_TCLOSE_M}) r
-), filled AS (
-  SELECT grid.lang, grid.source, grid.n_g, grid.sev,
-         CAST(sum(coalesce(cells.c, 0)) OVER (
-           PARTITION BY grid.lang, grid.source ORDER BY grid.sev
-           ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_c
-  FROM grid LEFT JOIN cells
-    ON grid.lang = cells.lang AND grid.source = cells.source
-   AND grid.sev = cells.sev
-), agg AS (
-  SELECT f.lang, f.source, f.n_g, gl.n_tot,
-         CAST(sum(abs(f.cum_c * gl.n_tot - gl.cum_gc * f.n_g))
-              AS BIGINT) AS num_sum
-  FROM filled f JOIN gl ON f.sev = gl.sev
-  WHERE f.sev < {_TCLOSE_M - 1}
-  GROUP BY 1, 2, 3, 4
-)
-SELECT lang, source, n_g, num_sum,
-       round(num_sum / ({float(_TCLOSE_M - 1)} * n_g * n_tot), 6) AS emd,
-       CAST(num_sum / ({float(_TCLOSE_M - 1)} * n_g * n_tot) > {_TCLOSE_T}
-            AS INT) AS violates_t
-FROM agg
-"""

@@ -80,34 +80,6 @@ def q_qte_deciles(spark, sf_dir):
     ).orderBy("decile")
 
 
-SQL_QTE_DECILES = f"""
-WITH e AS (
-  SELECT CASE WHEN user_id % {_ES_TREAT_MOD} = 0 THEN 1 ELSE 0 END
-           AS treat,
-         event_id, CAST(round(value * 100) AS BIGINT) AS c
-  FROM events
-), r AS (
-  SELECT treat, c,
-         CAST(row_number() OVER (PARTITION BY treat
-                                 ORDER BY c, event_id) AS BIGINT) AS rn,
-         CAST(count(*) OVER (PARTITION BY treat) AS BIGINT) AS n
-  FROM e
-), dec AS (
-  SELECT treat, c, d.range AS d
-  FROM r CROSS JOIN range(1, {len(_QTE_DECILES) + 1}) d
-  WHERE rn = CAST(ceil(d.range * n / 10.0) AS BIGINT)
-), per AS (
-  SELECT d,
-         max(CASE WHEN treat = 1 THEN c END) AS q_treat_cents,
-         max(CASE WHEN treat = 0 THEN c END) AS q_ctrl_cents
-  FROM dec GROUP BY d
-)
-SELECT CAST(d AS BIGINT) AS decile, q_treat_cents, q_ctrl_cents,
-       q_treat_cents - q_ctrl_cents AS qte_cents
-FROM per
-"""
-
-
 def q_exp_hazard_ratio(spark, sf_dir):
     """EXPONENTIAL RATE RATIO: per arm, renewals = sum(events_u - 1),
     exposure = sum(max ts - min ts) in exact µs per user; lambda in
@@ -149,40 +121,6 @@ def q_exp_hazard_ratio(spark, sf_dir):
         F.round(F.exp(F.log(ratio) - _Z95 * se), 6).alias("lo95"),
         F.round(F.exp(F.log(ratio) + _Z95 * se), 6).alias("hi95"),
     )
-
-
-SQL_EXP_HAZARD_RATIO = f"""
-WITH per AS (
-  SELECT CASE WHEN user_id % {_ES_TREAT_MOD} = 0 THEN 1 ELSE 0 END
-           AS treat,
-         user_id,
-         CAST(count(*) - 1 AS BIGINT) AS renewals,
-         CAST(max(epoch_us(ts)) - min(epoch_us(ts)) AS BIGINT) AS span_us
-  FROM events GROUP BY 1, 2
-), arm AS (
-  SELECT treat, CAST(count(*) AS BIGINT) AS n_users,
-         CAST(sum(renewals) AS BIGINT) AS ev,
-         CAST(sum(span_us) AS BIGINT) AS exp_us
-  FROM per GROUP BY treat
-), j AS (
-  SELECT a.ev AS e1, b.ev AS e0,
-         a.ev * 86400000000.0 / CAST(a.exp_us AS DOUBLE) AS l1,
-         b.ev * 86400000000.0 / CAST(b.exp_us AS DOUBLE) AS l0
-  FROM (SELECT * FROM arm WHERE treat = 1) a
-  CROSS JOIN (SELECT * FROM arm WHERE treat = 0) b
-)
-SELECT e1, e0,
-       round(l1, 6) AS rate_treat_per_day,
-       round(l0, 6) AS rate_ctrl_per_day,
-       round(l1 / l0, 6) AS rate_ratio,
-       round(exp(ln(l1 / l0)
-                 - {_Z95} * sqrt(1 / CAST(e1 AS DOUBLE) + 1 / e0)), 6)
-         AS lo95,
-       round(exp(ln(l1 / l0)
-                 + {_Z95} * sqrt(1 / CAST(e1 AS DOUBLE) + 1 / e0)), 6)
-         AS hi95
-FROM j
-"""
 
 
 def q_hellinger_hist(spark, sf_dir):
@@ -229,33 +167,3 @@ def q_hellinger_hist(spark, sf_dir):
             "hellinger"
         ),
     )
-
-
-SQL_HELLINGER_HIST = f"""
-WITH e AS (
-  SELECT event_type,
-         CAST(round(value * 100) AS BIGINT) // {_HH_BIN} AS bin
-  FROM events WHERE event_type IN ('purchase', 'click')
-), cells AS (
-  SELECT bin,
-         CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-              AS BIGINT) AS np,
-         CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
-              AS BIGINT) AS nc
-  FROM e GROUP BY bin
-), tot AS (
-  SELECT CAST(sum(np) AS BIGINT) AS tp, CAST(sum(nc) AS BIGINT) AS tc,
-         CAST(count(*) AS BIGINT) AS n_bins
-  FROM cells
-), agg AS (
-  SELECT tp, tc, n_bins,
-         sum(sqrt((CAST(np AS DOUBLE) / tp) * (CAST(nc AS DOUBLE) / tc)))
-           AS bc
-  FROM cells CROSS JOIN tot
-  GROUP BY tp, tc, n_bins
-)
-SELECT tp AS n_purchase, tc AS n_click, n_bins,
-       round(bc, 6) AS bhattacharyya,
-       round(sqrt(1 - least(bc, 1.0)), 6) AS hellinger
-FROM agg
-"""

@@ -58,17 +58,6 @@ def _hourly(spark, sf_dir):
     )
 
 
-_SQL_HOURLY = """
-hourly AS (
-  SELECT date_trunc('hour', ts) AS h,
-         CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END)
-              AS BIGINT) AS errs
-  FROM events GROUP BY 1
-)
-"""
-
-
 def q_erlang_c(spark, sf_dir):
     """ERLANG-C wait probability per hour-of-day at c=8 servers,
     mu = global mean hourly arrivals / 2 (data-derived, so offered
@@ -103,39 +92,6 @@ def q_erlang_c(spark, sf_dir):
         F.round("a", 6).alias("offered_a"),
         F.round(pw, 6).alias("p_wait"),
     ).orderBy("hod")
-
-
-def _ec_sql():
-    c = _EC_SERVERS
-    s = " + ".join(
-        ["1.0"]
-        + [
-            f"pow(a, {float(k)}) / {float(_fact_str(k))}"
-            for k in range(1, c)
-        ]
-    )
-    top = (
-        f"pow(a, {float(c)}) / {float(_fact_str(c))}"
-        f" * ({c} / ({c} - a))"
-    )
-    return f"""
-WITH {_SQL_HOURLY},
-hod AS (
-  SELECT CAST(hour(h) AS BIGINT) AS hod, avg(n) AS lam
-  FROM hourly GROUP BY 1
-), mu AS (
-  SELECT avg(n) / {_EC_MU_DIV} AS mu FROM hourly
-), j AS (
-  SELECT hod, lam, lam / mu AS a FROM hod CROSS JOIN mu
-)
-SELECT hod, round(lam, 4) AS lam, round(a, 6) AS offered_a,
-       round(CASE WHEN a >= {c} THEN 1.0
-                  ELSE ({top}) / (({s}) + ({top})) END, 6) AS p_wait
-FROM j ORDER BY hod
-"""
-
-
-SQL_ERLANG_C = _ec_sql()
 
 
 def q_slo_burn_rate(spark, sf_dir):
@@ -176,33 +132,6 @@ def q_slo_burn_rate(spark, sf_dir):
         F.round(F.max("b6"), 4).alias("max_burn_6h"),
         F.round(F.avg("b1"), 4).alias("mean_burn"),
     )
-
-
-SQL_SLO_BURN_RATE = f"""
-WITH {_SQL_HOURLY},
-b AS (
-  SELECT h,
-         errs / CAST(n AS DOUBLE) / {1 - _SLO_TARGET} AS b1,
-         sum(errs) OVER (ORDER BY h ROWS BETWEEN 5 PRECEDING
-               AND CURRENT ROW)
-           / CAST(sum(n) OVER (ORDER BY h ROWS BETWEEN 5 PRECEDING
-               AND CURRENT ROW) AS DOUBLE) / {1 - _SLO_TARGET} AS b6,
-         sum(errs) OVER (ORDER BY h ROWS BETWEEN 23 PRECEDING
-               AND CURRENT ROW)
-           / CAST(sum(n) OVER (ORDER BY h ROWS BETWEEN 23 PRECEDING
-               AND CURRENT ROW) AS DOUBLE) / {1 - _SLO_TARGET} AS b24
-  FROM hourly
-)
-SELECT CAST(count(*) AS BIGINT) AS n_hours,
-       CAST(sum(CASE WHEN b1 > {_FAST_1H} AND b6 > {_FAST_6H}
-                THEN 1 ELSE 0 END) AS BIGINT) AS n_fast_alerts,
-       CAST(sum(CASE WHEN b6 > {_SLOW_6H} AND b24 > {_SLOW_24H}
-                THEN 1 ELSE 0 END) AS BIGINT) AS n_slow_alerts,
-       round(max(b1), 4) AS max_burn_1h,
-       round(max(b6), 4) AS max_burn_6h,
-       round(avg(b1), 4) AS mean_burn
-FROM b
-"""
 
 
 def q_capacity_headroom(spark, sf_dir):
@@ -251,38 +180,3 @@ def q_capacity_headroom(spark, sf_dir):
         F.round(prov / F.col("p95") - 1, 6).alias("headroom_p95"),
         F.round(prov / F.col("max_n") - 1, 6).alias("headroom_max"),
     )
-
-
-SQL_CAPACITY_HEADROOM = f"""
-WITH {_SQL_HOURLY},
-ranked AS (
-  SELECT n,
-         CAST(row_number() OVER (ORDER BY n, h) - 1 AS DOUBLE) AS r
-  FROM hourly
-), m AS (
-  SELECT CAST(count(*) AS BIGINT) AS cnt, avg(n) AS mean_n,
-         CAST(max(n) AS BIGINT) AS max_n
-  FROM hourly
-), p AS (
-  SELECT cnt, mean_n, max_n,
-         sum(CASE WHEN r = floor((cnt - 1) * 0.95)
-                  THEN CASE WHEN ceil((cnt - 1) * 0.95)
-                              = floor((cnt - 1) * 0.95)
-                       THEN CAST(n AS DOUBLE)
-                       ELSE n * (1 - ((cnt - 1) * 0.95
-                                      - floor((cnt - 1) * 0.95)))
-                       END
-                  ELSE n * ((cnt - 1) * 0.95
-                            - floor((cnt - 1) * 0.95))
-             END) AS p95
-  FROM ranked CROSS JOIN m
-  WHERE r = floor((cnt - 1) * 0.95) OR r = ceil((cnt - 1) * 0.95)
-  GROUP BY 1, 2, 3
-)
-SELECT cnt AS n_hours,
-       round(mean_n * {_CAP_FACTOR}, 4) AS provisioned,
-       round(p95, 4) AS p95_hourly, max_n,
-       round(mean_n * {_CAP_FACTOR} / p95 - 1, 6) AS headroom_p95,
-       round(mean_n * {_CAP_FACTOR} / max_n - 1, 6) AS headroom_max
-FROM p
-"""

@@ -54,15 +54,6 @@ def _daily_type(spark, sf_dir):
     )
 
 
-_SQL_DAILY_TYPE = """
-daily AS (
-  SELECT dayofmonth(ts) AS day, event_type AS item,
-         CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS c
-  FROM events GROUP BY 1, 2
-)
-"""
-
-
 def q_bradley_terry(spark, sf_dir):
     """BRADLEY-TERRY MM strengths (5 rounds, sum-normalized) from
     daily pairwise cents wins between event types."""
@@ -134,53 +125,6 @@ def q_bradley_terry(spark, sf_dir):
     ).orderBy(F.desc("strength"), F.asc("item"))
 
 
-def _bt_sql():
-    # every round references the previous strengths TWICE (si, sj)
-    # plus the normalizer — DuckDB inlines plain CTEs, so without
-    # MATERIALIZED the expansion is 4^R copies of the pair join (the
-    # SQL twin of the Spark-side localCheckpoint plan cut)
-    rounds = ""
-    prev = "s0"
-    for r in range(1, _BT_ROUNDS + 1):
-        rounds += f""", d{r} AS MATERIALIZED (
-  SELECT p.i AS item, sum(p.n / (si.s + sj.s)) AS den
-  FROM pairs p
-  JOIN {prev} si ON p.i = si.item
-  JOIN {prev} sj ON p.j = sj.item
-  GROUP BY 1
-), r{r} AS MATERIALIZED (
-  SELECT w.i AS item, w.wsum / d{r}.den AS sraw
-  FROM wins w JOIN d{r} ON w.i = d{r}.item
-), t{r} AS MATERIALIZED (
-  SELECT sum(sraw) AS tot FROM r{r}
-), s{r} AS MATERIALIZED (
-  SELECT item, sraw / tot AS s FROM r{r} CROSS JOIN t{r}
-)"""
-        prev = f"s{r}"
-    return f"""
-WITH {_SQL_DAILY_TYPE},
-pairs AS MATERIALIZED (
-  SELECT a.item AS i, b.item AS j,
-         CAST(sum(CASE WHEN a.c > b.c THEN 1 ELSE 0 END) AS BIGINT)
-           AS w,
-         CAST(sum(CASE WHEN a.c <> b.c THEN 1 ELSE 0 END) AS BIGINT)
-           AS n
-  FROM daily a JOIN daily b
-    ON a.day = b.day AND a.item <> b.item
-  GROUP BY 1, 2
-), wins AS MATERIALIZED (
-  SELECT i, CAST(sum(w) AS BIGINT) AS wsum FROM pairs GROUP BY 1
-), s0 AS MATERIALIZED (
-  SELECT i AS item, 1.0 AS s FROM wins
-){rounds}
-SELECT item, round(s, 6) AS strength FROM {prev}
-ORDER BY strength DESC, item ASC
-"""
-
-
-SQL_BRADLEY_TERRY = _bt_sql()
-
-
 def q_rbp_eval(spark, sf_dir):
     """RANK-BIASED PRECISION at p=0.8, rank cap 20, per user over the
     value-descending ranking (rel = purchase); exact integer weight
@@ -216,27 +160,6 @@ def q_rbp_eval(spark, sf_dir):
         )
         .orderBy("user_id")
     )
-
-
-SQL_RBP_EVAL = f"""
-WITH wts(rnk, wt) AS (
-  VALUES {", ".join(f"({r}, {wt})" for r, wt in enumerate(_RBP_WTS, 1))}
-), ranked AS (
-  SELECT user_id,
-         CAST(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END
-              AS BIGINT) AS rel,
-         row_number() OVER (PARTITION BY user_id
-                            ORDER BY value DESC, event_id) AS rnk
-  FROM events
-), capped AS (
-  SELECT * FROM ranked WHERE rnk <= {_RBP_K}
-)
-SELECT user_id,
-       round((1 - {_RBP_P}) * CAST(sum(rel * wt) AS BIGINT) / 1e12, 6)
-         AS rbp
-FROM capped JOIN wts USING (rnk)
-GROUP BY user_id ORDER BY user_id
-"""
 
 
 def q_borda_consensus(spark, sf_dir):
@@ -299,41 +222,3 @@ def q_borda_consensus(spark, sf_dir):
         )
         .orderBy(F.desc("borda"), F.asc("item"))
     )
-
-
-SQL_BORDA_CONSENSUS = """
-WITH e AS (
-  SELECT CAST(floor((dayofmonth(ts) - 1) / 7) AS BIGINT) AS week,
-         event_type AS item,
-         CAST(round(value * 100) AS BIGINT) AS cents
-  FROM events
-), wk AS (
-  SELECT week, item, CAST(sum(cents) AS BIGINT) AS c
-  FROM e GROUP BY 1, 2
-), k AS (
-  SELECT count(DISTINCT item) AS nitems FROM wk
-), borda AS (
-  SELECT item,
-         CAST(sum(nitems - rnk) AS BIGINT) AS borda
-  FROM (
-    SELECT week, item,
-           rank() OVER (PARTITION BY week
-                        ORDER BY c DESC, item ASC) AS rnk
-    FROM wk
-  ) r CROSS JOIN k
-  GROUP BY 1
-), maj AS (
-  SELECT a.item AS i, b.item AS j,
-         sum(CASE WHEN a.c > b.c THEN 1 ELSE 0 END)
-           > sum(CASE WHEN a.c < b.c THEN 1 ELSE 0 END) AS beats
-  FROM wk a JOIN wk b ON a.week = b.week AND a.item <> b.item
-  GROUP BY 1, 2
-), cond AS (
-  SELECT i AS item,
-         min(CASE WHEN beats THEN 1 ELSE 0 END) = 1 AS is_condorcet
-  FROM maj GROUP BY 1
-)
-SELECT borda.item, borda.borda, cond.is_condorcet
-FROM borda JOIN cond USING (item)
-ORDER BY borda DESC, item ASC
-"""

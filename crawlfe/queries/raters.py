@@ -81,37 +81,6 @@ def _ratings(spark, sf_dir):
     )
 
 
-_CASE_SQL = " ".join(
-    f"WHEN {i} THEN '{lg}'" for i, lg in enumerate(_LANGS)
-)
-
-_SQL_RATINGS = f"""
-ratings AS (
-  SELECT d.doc_id, r.range AS r,
-         CASE WHEN CAST('0x' || substring(
-                 md5('r' || CAST(r.range AS VARCHAR) || ':'
-                     || CAST(d.doc_id AS VARCHAR)), 1, 4) AS BIGINT)
-                   % {_FLIP_MOD} = 0
-              THEN CASE CAST('0x' || substring(
-                     md5('c' || CAST(r.range AS VARCHAR) || ':'
-                         || CAST(d.doc_id AS VARCHAR)), 1, 4) AS BIGINT)
-                        % {_CATS} {_CASE_SQL} END
-              ELSE d.lang END AS label
-  FROM documents d CROSS JOIN range(1, {_RATERS + 1}) r
-), cells AS (
-  SELECT doc_id, label, CAST(count(*) AS BIGINT) AS nij
-  FROM ratings GROUP BY doc_id, label
-), margins AS (
-  SELECT label, CAST(sum(nij) AS BIGINT) AS cj FROM cells GROUP BY label
-), items AS (
-  SELECT CAST(count(DISTINCT doc_id) AS BIGINT) AS nitems FROM cells
-), obs AS (
-  -- sum_i (sum_j nij^2) ; per-item rater total is always n
-  SELECT CAST(sum(nij * nij) AS BIGINT) AS s_nij2 FROM cells
-)
-"""
-
-
 def _cells(spark, sf_dir):
     rt = _ratings(spark, sf_dir)
     cells = rt.groupBy("doc_id", "label").agg(
@@ -155,29 +124,6 @@ def q_fleiss_kappa(spark, sf_dir):
     )
 
 
-SQL_FLEISS_KAPPA = f"""
-WITH {_SQL_RATINGS},
-m2 AS (
-  SELECT CAST(sum(cj * cj) AS BIGINT) AS s_cj2 FROM margins
-)
-SELECT nitems, s_nij2, s_cj2,
-       round(CAST(s_nij2 - nitems * {_RATERS} AS DOUBLE)
-             / CAST(nitems * {_RATERS} * {_RATERS - 1} AS DOUBLE), 6)
-         AS p_obs,
-       round(CAST(s_cj2 AS DOUBLE)
-             / CAST(nitems * {_RATERS} * nitems * {_RATERS} AS DOUBLE), 6)
-         AS p_exp,
-       round((CAST(s_nij2 - nitems * {_RATERS} AS DOUBLE)
-              / CAST(nitems * {_RATERS} * {_RATERS - 1} AS DOUBLE)
-              - CAST(s_cj2 AS DOUBLE)
-                / CAST(nitems * {_RATERS} * nitems * {_RATERS} AS DOUBLE))
-             / (1 - CAST(s_cj2 AS DOUBLE)
-                    / CAST(nitems * {_RATERS} * nitems * {_RATERS}
-                           AS DOUBLE)), 6) AS kappa
-FROM items CROSS JOIN obs CROSS JOIN m2
-"""
-
-
 def q_krippendorff_alpha(spark, sf_dir):
     """KRIPPENDORFF'S ALPHA (nominal, no missing ratings):
     D_o = (N n - S_nij2/n... ) — concretely with pairable values
@@ -208,27 +154,6 @@ def q_krippendorff_alpha(spark, sf_dir):
     )
 
 
-SQL_KRIPPENDORFF_ALPHA = f"""
-WITH {_SQL_RATINGS},
-de AS (
-  SELECT CAST(sum(cj * cj) AS BIGINT) AS s_cj2,
-         CAST(sum(cj) AS BIGINT) AS p_tot
-  FROM margins
-)
-SELECT nitems, p_tot, s_nij2, s_cj2,
-       round(CAST(nitems * {_RATERS} * {_RATERS} - s_nij2 AS DOUBLE)
-             / CAST(nitems * {_RATERS} * {_RATERS - 1} AS DOUBLE), 6)
-         AS d_obs,
-       round(CAST(p_tot * p_tot - s_cj2 AS DOUBLE)
-             / CAST(p_tot * (p_tot - 1) AS DOUBLE), 6) AS d_exp,
-       round(1 - (CAST(nitems * {_RATERS} * {_RATERS} - s_nij2 AS DOUBLE)
-                  / CAST(nitems * {_RATERS} * {_RATERS - 1} AS DOUBLE))
-               / (CAST(p_tot * p_tot - s_cj2 AS DOUBLE)
-                  / CAST(p_tot * (p_tot - 1) AS DOUBLE)), 6) AS alpha
-FROM items CROSS JOIN obs CROSS JOIN de
-"""
-
-
 def q_gwet_ac1(spark, sf_dir):
     """GWET'S AC1: observed agreement as in Fleiss; chance
     pe = (1/(K-1)) sum_j pi_j (1 - pi_j) with pi_j = cj/(N n) — the
@@ -256,28 +181,3 @@ def q_gwet_ac1(spark, sf_dir):
         F.round(pe, 6).alias("pe_gwet"),
         F.round((pbar - pe) / (1 - pe), 6).alias("ac1"),
     )
-
-
-SQL_GWET_AC1 = f"""
-WITH {_SQL_RATINGS},
-g AS (
-  SELECT CAST(sum(cj) AS BIGINT) AS p_tot,
-         CAST(sum(cj * cj) AS BIGINT) AS s_cj2
-  FROM margins
-)
-SELECT nitems, s_nij2, s_cj2,
-       round(CAST(s_nij2 - nitems * {_RATERS} AS DOUBLE)
-             / CAST(nitems * {_RATERS} * {_RATERS - 1} AS DOUBLE), 6)
-         AS p_obs,
-       round((CAST(p_tot * p_tot - s_cj2 AS DOUBLE)
-              / CAST(p_tot * p_tot AS DOUBLE)) / {_CATS - 1}, 6)
-         AS pe_gwet,
-       round((CAST(s_nij2 - nitems * {_RATERS} AS DOUBLE)
-              / CAST(nitems * {_RATERS} * {_RATERS - 1} AS DOUBLE)
-              - (CAST(p_tot * p_tot - s_cj2 AS DOUBLE)
-                 / CAST(p_tot * p_tot AS DOUBLE)) / {_CATS - 1})
-             / (1 - (CAST(p_tot * p_tot - s_cj2 AS DOUBLE)
-                     / CAST(p_tot * p_tot AS DOUBLE)) / {_CATS - 1}), 6)
-         AS ac1
-FROM items CROSS JOIN obs CROSS JOIN g
-"""

@@ -50,7 +50,6 @@ def _hourly(spark, sf_dir):
     return h.select("t", "y")
 
 
-
 def _ols_resid(h):
     """Attach OLS(y ~ t) residuals to the hourly frame: moments are
     exact BIGINT sums; slope/intercept doubles; e = y - a - b t."""
@@ -70,31 +69,6 @@ def _ols_resid(h):
     )
     a = (F.col("sy") - b * F.col("st")) / F.col("n").cast("double")
     return j.withColumn("e", F.col("y") - a - b * F.col("t"))
-
-
-_SQL_OLS_RESID = """
-hourly AS (
-  SELECT CAST(epoch_us(ts) // 3600000000 AS BIGINT) AS hr,
-         CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS y
-  FROM events GROUP BY 1
-), ht AS (
-  SELECT CAST(hr - min(hr) OVER () AS BIGINT) AS t, y FROM hourly
-), mom AS (
-  SELECT CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(t) AS BIGINT) AS st,
-         CAST(sum(t * t) AS BIGINT) AS stt,
-         CAST(sum(y) AS BIGINT) AS sy,
-         CAST(sum(t * y) AS BIGINT) AS sty
-  FROM ht
-), resid AS (
-  SELECT ht.t, ht.y, mom.n,
-         ht.y - ((sy - CAST(n * sty - st * sy AS DOUBLE)
-                        / (n * stt - st * st) * st) / n)
-              - CAST(n * sty - st * sy AS DOUBLE)
-                / (n * stt - st * st) * ht.t AS e
-  FROM ht CROSS JOIN mom
-)
-"""
 
 
 def q_durbin_watson(spark, sf_dir):
@@ -126,27 +100,6 @@ def q_durbin_watson(spark, sf_dir):
         F.round(dw, 6).alias("dw"),
         F.round(1 - dw / 2, 6).alias("rho1"),
     )
-
-
-SQL_DURBIN_WATSON = f"""
-WITH {_SQL_OLS_RESID},
-ec AS (
-  SELECT t, n, CAST(round(e) AS BIGINT) AS ec,
-         lag(CAST(round(e) AS BIGINT)) OVER (ORDER BY t) AS ec_lag
-  FROM resid
-), agg AS (
-  SELECT n AS n_hours,
-         CAST(sum(CASE WHEN ec_lag IS NOT NULL
-                       THEN (ec - ec_lag) * (ec - ec_lag) END) AS BIGINT)
-           AS num,
-         CAST(sum(ec * ec) AS BIGINT) AS den
-  FROM ec GROUP BY n
-)
-SELECT n_hours, num, den,
-       round(CAST(num AS DOUBLE) / den, 6) AS dw,
-       round(1 - CAST(num AS DOUBLE) / den / 2, 6) AS rho1
-FROM agg
-"""
 
 
 def q_breusch_pagan(spark, sf_dir):
@@ -189,41 +142,6 @@ def q_breusch_pagan(spark, sf_dir):
         F.round(bp, 6).alias("bp_lm"),
         (bp > _BP_CRIT95).cast("int").alias("heteroskedastic"),
     )
-
-
-SQL_BREUSCH_PAGAN = f"""
-WITH {_SQL_OLS_RESID},
-ux AS (
-  SELECT t, n,
-         CAST(round(e / 1000) AS BIGINT) * CAST(round(e / 1000) AS BIGINT)
-           AS u
-  FROM resid
-), m AS (
-  SELECT n, CAST(sum(t) AS BIGINT) AS st,
-         CAST(sum(t * t) AS BIGINT) AS stt,
-         CAST(sum(u) AS BIGINT) AS su,
-         CAST(sum(t * u) AS BIGINT) AS stu,
-         CAST(sum(u * u) AS BIGINT) AS suu
-  FROM ux GROUP BY n
-)
-SELECT n AS n_hours, su, stu,
-       round(CAST(n * stu - st * su AS DOUBLE)
-             * CAST(n * stu - st * su AS DOUBLE)
-             / nullif(CAST(n * stt - st * st AS DOUBLE)
-                      * CAST(n * suu - su * su AS DOUBLE), 0.0), 6)
-         AS r2_aux,
-       round(n * CAST(n * stu - st * su AS DOUBLE)
-               * CAST(n * stu - st * su AS DOUBLE)
-             / nullif(CAST(n * stt - st * st AS DOUBLE)
-                      * CAST(n * suu - su * su AS DOUBLE), 0.0), 6)
-         AS bp_lm,
-       CAST(n * CAST(n * stu - st * su AS DOUBLE)
-              * CAST(n * stu - st * su AS DOUBLE)
-            / nullif(CAST(n * stt - st * st AS DOUBLE)
-                     * CAST(n * suu - su * su AS DOUBLE), 0.0)
-            > {_BP_CRIT95} AS INT) AS heteroskedastic
-FROM m
-"""
 
 
 def q_fe_within(spark, sf_dir):
@@ -284,37 +202,3 @@ def q_fe_within(spark, sf_dir):
         F.round(pooled, 6).alias("pooled_slope"),
         F.round(between, 6).alias("between_slope"),
     )
-
-
-SQL_FE_WITHIN = """
-WITH per AS (
-  SELECT user_id, CAST(count(*) AS BIGINT) AS nu,
-         CAST(sum(hour(ts)) AS BIGINT) AS sx,
-         CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS sy,
-         CAST(sum(hour(ts) * CAST(round(value * 100) AS BIGINT))
-              AS BIGINT) AS sxy,
-         CAST(sum(hour(ts) * hour(ts)) AS BIGINT) AS sxx
-  FROM events GROUP BY user_id
-), agg AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_users,
-         CAST(sum(nu) AS BIGINT) AS n,
-         sum(CAST(nu * sxy - sx * sy AS DOUBLE) / nu) AS w_num,
-         sum(CAST(nu * sxx - sx * sx AS DOUBLE) / nu) AS w_den,
-         CAST(sum(sx) AS BIGINT) AS psx,
-         CAST(sum(sy) AS BIGINT) AS psy,
-         CAST(sum(sxy) AS BIGINT) AS psxy,
-         CAST(sum(sxx) AS BIGINT) AS psxx,
-         sum(CAST(sx AS DOUBLE) / nu) AS bsx,
-         sum(CAST(sy AS DOUBLE) / nu) AS bsy,
-         sum((CAST(sx AS DOUBLE) / nu) * (CAST(sy AS DOUBLE) / nu)) AS bsxy,
-         sum((CAST(sx AS DOUBLE) / nu) * (CAST(sx AS DOUBLE) / nu)) AS bsxx
-  FROM per
-)
-SELECT n, n_users,
-       round(w_num / w_den, 6) AS within_slope,
-       round(CAST(n * psxy - psx * psy AS DOUBLE)
-             / CAST(n * psxx - psx * psx AS DOUBLE), 6) AS pooled_slope,
-       round((n_users * bsxy - bsx * bsy)
-             / (n_users * bsxx - bsx * bsx), 6) AS between_slope
-FROM agg
-"""

@@ -5,16 +5,10 @@ Split from the former crawlfe/queries.py monolith (r4); bodies unchanged.
 from __future__ import annotations
 
 import pandas as pd  # noqa: F401
-from pyspark.sql import DataFrame, SparkSession, Window  # noqa: F401
 from pyspark.sql import functions as F  # noqa: F401
-from pyspark.sql import types as T  # noqa: F401
 
-from .. import clean  # noqa: F401
 from .. import windows as W  # noqa: F401
-from ..asof import asof_join  # noqa: F401
-from ..textfeat import featurize_batch  # noqa: F401
 from ._shared import SESSION_GAP_S, _t, _us  # noqa: F401
-
 
 
 # --------------------------------------------------------------------------
@@ -416,20 +410,6 @@ GROUP BY c_custkey
 """
 
 
-def q_join_semi(spark, sf_dir):
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
-    return c.join(
-        o, c.c_custkey == o.o_custkey, "left_semi"
-    ).select("c_custkey", "c_name")
-
-
-SQL_JOIN_SEMI = """
-SELECT c_custkey, c_name FROM customer
-WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-"""
-
-
 def q_join_anti(spark, sf_dir):
     """Resume-set shape (BASELINE.json:6): incoming minus committed.
 
@@ -700,23 +680,6 @@ def q_set_union(spark, sf_dir):
 SQL_SET_UNION = """
 SELECT CAST(c_nationkey AS BIGINT) AS nationkey FROM customer
 UNION
-SELECT CAST(s_nationkey AS BIGINT) FROM supplier
-"""
-
-
-def q_set_intersect(spark, sf_dir):
-    c = _t(spark, sf_dir, "customer").select(
-        F.col("c_nationkey").cast("long").alias("nationkey")
-    )
-    s = _t(spark, sf_dir, "supplier").select(
-        F.col("s_nationkey").cast("long").alias("nationkey")
-    )
-    return c.intersect(s)
-
-
-SQL_SET_INTERSECT = """
-SELECT CAST(c_nationkey AS BIGINT) AS nationkey FROM customer
-INTERSECT
 SELECT CAST(s_nationkey AS BIGINT) FROM supplier
 """
 

@@ -53,15 +53,6 @@ def _daily(spark, sf_dir):
     )
 
 
-_SQL_DAILY = """
-daily AS MATERIALIZED (
-  SELECT CAST(dayofmonth(ts) AS BIGINT) AS day,
-         CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS x
-  FROM events GROUP BY 1
-)
-"""
-
-
 def q_block_bootstrap_se(spark, sf_dir):
     """MOVING-BLOCK BOOTSTRAP SE of the daily mean, hash-LCG
     block starts (no rand())."""
@@ -129,48 +120,6 @@ def q_block_bootstrap_se(spark, sf_dir):
     )
 
 
-SQL_BLOCK_BOOTSTRAP_SE = f"""
-WITH {_SQL_DAILY},
-ranked AS MATERIALIZED (
-  SELECT x,
-         CAST(row_number() OVER (ORDER BY day) AS BIGINT) AS rk
-  FROM daily
-), nn AS (
-  SELECT CAST(count(*) AS BIGINT) AS n FROM ranked
-), grid AS (
-  SELECT b, j FROM
-    (SELECT CAST(unnest(generate_series(0, {_BB_B - 1})) AS BIGINT)
-            AS b),
-    (SELECT CAST(unnest(generate_series(0, {_BB_NB - 1})) AS BIGINT)
-            AS j)
-), starts AS (
-  SELECT b,
-         ((({_LCG_A} * ((97 * b + j) % {_LCG_M}) + {_LCG_C})
-           % {_LCG_M}) % (n - {_BB_L} + 1)) + 1 AS s
-  FROM grid CROSS JOIN nn
-), expanded AS (
-  SELECT b, s + o AS rk
-  FROM starts,
-    (SELECT CAST(unnest(generate_series(0, {_BB_L - 1})) AS BIGINT)
-            AS o)
-), reps AS (
-  SELECT e.b,
-         CAST(sum(r.x) AS DOUBLE) / {_BB_NB * _BB_L} AS mean_b
-  FROM expanded e JOIN ranked r USING (rk)
-  GROUP BY 1
-), base AS (
-  SELECT avg(CAST(x AS DOUBLE)) AS mean_full FROM daily
-)
-SELECT nn.n AS n_days,
-       CAST(count(*) AS BIGINT) AS n_reps,
-       round(max(base.mean_full), 4) AS mean_full,
-       round(avg(mean_b), 4) AS mean_of_means,
-       round(stddev_samp(mean_b), 4) AS boot_se
-FROM reps CROSS JOIN base CROSS JOIN nn
-GROUP BY nn.n
-"""
-
-
 def q_jackknife_median(spark, sf_dir):
     """DELETE-1 JACKKNIFE of the daily median via exact order
     statistics."""
@@ -233,47 +182,6 @@ def q_jackknife_median(spark, sf_dir):
     )
 
 
-SQL_JACKKNIFE_MEDIAN = f"""
-WITH {_SQL_DAILY},
-ranked AS MATERIALIZED (
-  SELECT CAST(x AS DOUBLE) AS v,
-         CAST(row_number() OVER (ORDER BY x, day) AS BIGINT) AS rk
-  FROM daily
-), nn AS (
-  SELECT CAST(count(*) AS BIGINT) AS n FROM ranked
-), dels AS (
-  SELECT CAST(unnest(generate_series(1, n)) AS BIGINT) AS i, n
-  FROM nn
-), loo AS MATERIALIZED (
-  SELECT d.i,
-         (r1.v + r2.v) / 2 AS med_i
-  FROM dels d
-  JOIN ranked r1
-    ON r1.rk = CASE WHEN d.n // 2 >= d.i
-                    THEN d.n // 2 + 1 ELSE d.n // 2 END
-  JOIN ranked r2
-    ON r2.rk = CASE WHEN (d.n + 1) // 2 >= d.i
-                    THEN (d.n + 1) // 2 + 1
-                    ELSE (d.n + 1) // 2 END
-), mfull AS (
-  SELECT avg(v) AS median_full
-  FROM ranked CROSS JOIN nn
-  WHERE rk IN ((n + 1) // 2, (n + 2) // 2)
-), mloo AS MATERIALIZED (
-  SELECT avg(med_i) AS mean_loo FROM loo
-), magg AS (
-  SELECT max(mean_loo) AS mean_loo,
-         sum((med_i - mean_loo) * (med_i - mean_loo)) AS _ss
-  FROM loo CROSS JOIN mloo
-)
-SELECT nn.n AS n_days, round(median_full, 4) AS median_full,
-       round(mean_loo, 4) AS mean_loo,
-       round(sqrt((nn.n - 1) / CAST(nn.n AS DOUBLE) * _ss), 4)
-         AS jackknife_se
-FROM magg CROSS JOIN mfull CROSS JOIN nn
-"""
-
-
 def q_half_sample_stability(spark, sf_dir):
     """100 DETERMINISTIC HALF-SAMPLES of per-user totals: SD of the
     half-sample means (SE approx SD/sqrt(2))."""
@@ -320,31 +228,3 @@ def q_half_sample_stability(spark, sf_dir):
         "half_sd",
         "mean_half_size",
     )
-
-
-SQL_HALF_SAMPLE_STABILITY = f"""
-WITH u AS MATERIALIZED (
-  SELECT user_id,
-         CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
-           AS y
-  FROM events GROUP BY 1
-), reps AS (
-  SELECT CAST(unnest(generate_series(0, {_HS_B - 1})) AS BIGINT)
-         AS b
-), means AS (
-  SELECT b, avg(CAST(y AS DOUBLE)) AS mean_b,
-         CAST(count(*) AS BIGINT) AS nb
-  FROM u CROSS JOIN reps
-  WHERE ((({_LCG_A} * ((user_id * 131 + b) % {_LCG_M}) + {_LCG_C})
-          % {_LCG_M}) % 2) = 0
-  GROUP BY 1
-), fullm AS (
-  SELECT avg(CAST(y AS DOUBLE)) AS mean_full FROM u
-)
-SELECT CAST(count(*) AS BIGINT) AS n_reps,
-       round(max(mean_full), 4) AS mean_full,
-       round(avg(mean_b), 4) AS mean_of_halves,
-       round(stddev_samp(mean_b), 4) AS half_sd,
-       round(avg(nb), 2) AS mean_half_size
-FROM means CROSS JOIN fullm
-"""

@@ -42,18 +42,6 @@ def _daily(spark, sf_dir):
     ).select(F.col("day").cast("double").alias("x"), "y", "day")
 
 
-_SQL_DAILY = """
-daily AS (
-  SELECT CAST(day AS DOUBLE) AS x, y, day FROM (
-    SELECT CAST(dayofmonth(ts) AS BIGINT) AS day,
-           CAST(sum(CAST(round(value * 100) AS BIGINT)) AS DOUBLE)
-             AS y
-    FROM events GROUP BY 1
-  )
-)
-"""
-
-
 def _wls(d, wcol):
     """Closed-form weighted least squares slope/intercept."""
     m = d.agg(
@@ -70,21 +58,6 @@ def _wls(d, wcol):
     )
     a = (F.col("swy") - b * F.col("swx")) / F.col("sw")
     return m.select(b.alias("b"), a.alias("a"))
-
-
-def _wls_sql(src, wexpr, tag):
-    return f"""m_{tag} AS (
-  SELECT sum({wexpr}) AS sw, sum(({wexpr}) * x) AS swx,
-         sum(({wexpr}) * y) AS swy,
-         sum(({wexpr}) * x * x) AS swxx,
-         sum(({wexpr}) * x * y) AS swxy
-  FROM {src}
-), fit_{tag} AS (
-  SELECT (sw * swxy - swx * swy) / (sw * swxx - swx * swx) AS b,
-         (swy - (sw * swxy - swx * swy)
-                / (sw * swxx - swx * swx) * swx) / sw AS a
-  FROM m_{tag}
-)"""
 
 
 def q_qreg_median(spark, sf_dir):
@@ -110,33 +83,6 @@ def q_qreg_median(spark, sf_dir):
             ols.select(F.round("b", 4).alias("ols_slope"))
         )
     )
-
-
-def _lad_sql():
-    parts = [_wls_sql("daily", "1.0", "r0")]
-    prev = "fit_r0"
-    for r in range(1, _IRLS_ROUNDS + 1):
-        parts.append(
-            f"""jw_r{r} AS MATERIALIZED (
-  SELECT d.x, d.y,
-         1.0 / greatest(abs(d.y - f.a - f.b * d.x), {_LAD_EPS})
-           AS w
-  FROM daily d CROSS JOIN {prev} f
-)"""
-        )
-        parts.append(_wls_sql(f"jw_r{r}", "w", f"r{r}"))
-        prev = f"fit_r{r}"
-    body = ",\n".join(parts)
-    return f"""
-WITH {_SQL_DAILY},
-{body}
-SELECT round(f.b, 4) AS lad_slope, round(f.a, 4) AS lad_intercept,
-       round(o.b, 4) AS ols_slope
-FROM {prev} f CROSS JOIN fit_r0 o
-"""
-
-
-SQL_QREG_MEDIAN = _lad_sql()
 
 
 def q_huber_trend(spark, sf_dir):
@@ -183,46 +129,6 @@ def q_huber_trend(spark, sf_dir):
             ols.select(F.round("b", 4).alias("ols_slope"))
         )
     )
-
-
-def _huber_sql():
-    parts = [_wls_sql("daily", "1.0", "r0")]
-    prev = "fit_r0"
-    for r in range(1, _IRLS_ROUNDS + 1):
-        parts.append(
-            f"""res_r{r} AS MATERIALIZED (
-  SELECT d.x, d.y, d.day,
-         abs(d.y - f.a - f.b * d.x) AS ae
-  FROM daily d CROSS JOIN {prev} f
-), rr_r{r} AS (
-  SELECT ae,
-         CAST(row_number() OVER (ORDER BY ae, day) - 1 AS DOUBLE)
-           AS r,
-         CAST(count(*) OVER () - 1 AS DOUBLE) AS m
-  FROM res_r{r}
-), mad_r{r} AS MATERIALIZED (
-  SELECT avg(ae) / 0.6745 AS s FROM rr_r{r}
-  WHERE r = floor(m * 0.5) OR r = ceil(m * 0.5)
-), jw_r{r} AS MATERIALIZED (
-  SELECT x, y,
-         least(1.0, {_HUBER_K} * s / greatest(ae, {_LAD_EPS})) AS w
-  FROM res_r{r} CROSS JOIN mad_r{r}
-)"""
-        )
-        parts.append(_wls_sql(f"jw_r{r}", "w", f"r{r}"))
-        prev = f"fit_r{r}"
-    body = ",\n".join(parts)
-    return f"""
-WITH {_SQL_DAILY},
-{body}
-SELECT round(f.b, 4) AS huber_slope,
-       round(f.a, 4) AS huber_intercept,
-       round(o.b, 4) AS ols_slope
-FROM {prev} f CROSS JOIN fit_r0 o
-"""
-
-
-SQL_HUBER_TREND = _huber_sql()
 
 
 def q_regression_influence(spark, sf_dir):
@@ -290,31 +196,3 @@ def q_regression_influence(spark, sf_dir):
     return out.orderBy(F.desc("cooks_d"), F.asc("day")).limit(
         _INFL_TOPK
     )
-
-
-SQL_REGRESSION_INFLUENCE = f"""
-WITH {_SQL_DAILY},
-m AS (
-  SELECT CAST(count(*) AS DOUBLE) AS n, avg(x) AS mx, avg(y) AS my,
-         avg(x * x) AS mxx, avg(x * y) AS mxy
-  FROM daily
-), mm AS (
-  SELECT n, mx,
-         (mxy - mx * my) / (mxx - mx * mx) AS b,
-         my - (mxy - mx * my) / (mxx - mx * mx) * mx AS a,
-         n * (mxx - mx * mx) AS sxx
-  FROM m
-), j AS (
-  SELECT d.day, d.x, d.y, mm.n,
-         d.y - mm.a - mm.b * d.x AS e,
-         1 / mm.n + (d.x - mm.mx) * (d.x - mm.mx) / mm.sxx AS h
-  FROM daily d CROSS JOIN mm
-), s2 AS (
-  SELECT sum(e * e) / (max(n) - 2) AS s2 FROM j
-)
-SELECT day, round(e, 4) AS resid, round(h, 6) AS leverage,
-       round(e * e * h / (2 * s2 * (1 - h) * (1 - h)), 6)
-         AS cooks_d
-FROM j CROSS JOIN s2
-ORDER BY cooks_d DESC, day ASC LIMIT {_INFL_TOPK}
-"""

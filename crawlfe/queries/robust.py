@@ -72,43 +72,6 @@ def q_huber_mean(spark, sf_dir):
     )
 
 
-def _sql_huber() -> str:
-    parts = [
-        "base AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n, "
-        "round(avg(value), 6) AS m0, "
-        f"round({_HUBER_C} * stddev_pop(value), 6) AS k FROM events "
-        "GROUP BY event_type)",
-    ]
-    prev_m = "b.m0"
-    prev = "base"
-    for i in range(1, _HUBER_ROUNDS + 1):
-        parts.append(
-            f"r{i} AS (SELECT b.event_type, b.n, b.m0, b.k, "
-            f"round(sum(CASE WHEN abs(e.value - {prev_m}) <= b.k THEN 1.0 "
-            f"ELSE b.k / abs(e.value - {prev_m}) END * e.value) "
-            f"/ sum(CASE WHEN abs(e.value - {prev_m}) <= b.k THEN 1.0 "
-            f"ELSE b.k / abs(e.value - {prev_m}) END), 6) AS m, "
-            f"CAST(sum(CASE WHEN abs(e.value - {prev_m}) > b.k THEN 1 "
-            f"ELSE 0 END) AS BIGINT) AS n_down "
-            f"FROM events e JOIN {prev} b USING (event_type) "
-            f"GROUP BY b.event_type, b.n, b.m0, b.k)"
-        )
-        prev = f"r{i}"
-        prev_m = "b.m"
-    return (
-        "WITH "
-        + ",\n".join(parts)
-        + f"""
-SELECT event_type, n, round(m0, 4) AS mean, round(m, 4) AS huber_mean,
-       n_down
-FROM {prev.replace('b.', '')}
-"""
-    )
-
-
-SQL_HUBER_MEAN = _sql_huber()
-
-
 def q_kmv_intersect(spark, sf_dir):
     """KMV intersection estimate for the click-user and purchase-user
     sets: per-set k-min sketches (WindowGroupLimit pushes the top-K
@@ -179,49 +142,6 @@ def q_kmv_intersect(spark, sf_dir):
     )
 
 
-SQL_KMV_INTERSECT = f"""
-WITH ha AS (
-  SELECT {_H60_SQL.format(c="user_id")} AS h
-  FROM (SELECT DISTINCT user_id FROM events WHERE event_type = 'click')
-), sa AS (
-  SELECT h FROM (SELECT h, row_number() OVER (ORDER BY h) AS rn FROM ha)
-  WHERE rn <= {_KMV_K}
-), hb AS (
-  SELECT {_H60_SQL.format(c="user_id")} AS h
-  FROM (SELECT DISTINCT user_id FROM events WHERE event_type = 'purchase')
-), sb AS (
-  SELECT h FROM (SELECT h, row_number() OVER (ORDER BY h) AS rn FROM hb)
-  WHERE rn <= {_KMV_K}
-), su AS (
-  SELECT h FROM (
-    SELECT h, row_number() OVER (ORDER BY h) AS rn
-    FROM (SELECT DISTINCT h FROM (SELECT h FROM sa UNION ALL
-                                  SELECT h FROM sb)))
-  WHERE rn <= {_KMV_K}
-), kth AS (
-  SELECT max(h) AS kth_h, CAST(count(*) AS BIGINT) AS k_eff FROM su
-), ki AS (
-  SELECT CAST(count(*) AS BIGINT) AS k_int FROM su
-  WHERE h IN (SELECT h FROM sa) AND h IN (SELECT h FROM sb)
-), ex AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_exact FROM (
-    SELECT DISTINCT user_id FROM events WHERE event_type = 'click'
-    INTERSECT
-    SELECT DISTINCT user_id FROM events WHERE event_type = 'purchase')
-)
-SELECT k_int, k_eff, kth_h, n_exact,
-       round(k_int / CAST(k_eff AS DOUBLE)
-             * CASE WHEN k_eff < {_KMV_K} THEN CAST(k_eff AS DOUBLE)
-                    ELSE {float(_KMV_K - 1)} * {_KMV_DOM!r} / kth_h END,
-             4) AS kmv_est,
-       round((round(k_int / CAST(k_eff AS DOUBLE)
-             * CASE WHEN k_eff < {_KMV_K} THEN CAST(k_eff AS DOUBLE)
-                    ELSE {float(_KMV_K - 1)} * {_KMV_DOM!r} / kth_h END,
-             4) - n_exact) / CAST(n_exact AS DOUBLE), 4) AS rel_err
-FROM ki, kth, ex
-"""
-
-
 def q_perm_test_mean(spark, sf_dir):
     """Hash-randomization test for the purchase-vs-click value-mean
     difference: B=32 deterministic relabelings (md5(event_id, b)
@@ -290,38 +210,3 @@ def q_perm_test_mean(spark, sf_dir):
             (1 + F.col("n_extreme")) / F.lit(float(_PERM_B + 1)), 4
         ).alias("p_value"),
     )
-
-
-SQL_PERM_TEST_MEAN = f"""
-WITH ev AS (
-  SELECT event_id, event_type, value FROM events
-  WHERE event_type IN ('purchase', 'click')
-), obs AS (
-  SELECT round(avg(CASE WHEN event_type = 'purchase' THEN value END)
-               - avg(CASE WHEN event_type = 'click' THEN value END), 6)
-           AS obs_diff,
-         CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-              AS BIGINT) AS n_a,
-         CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
-              AS BIGINT) AS n_b
-  FROM ev
-), perms AS (
-  SELECT b.b, e.value,
-         CAST('0x' || substring(md5(CAST(e.event_id AS VARCHAR) || '_'
-                                    || CAST(b.b AS VARCHAR)), 1, 4)
-              AS BIGINT) % 2 AS g
-  FROM ev e, (SELECT unnest(generate_series(0, {_PERM_B - 1})) AS b) b
-), diffs AS (
-  SELECT b, round(avg(CASE WHEN g = 1 THEN value END)
-                  - avg(CASE WHEN g = 0 THEN value END), 6) AS diff_b
-  FROM perms GROUP BY b
-), extreme AS (
-  SELECT CAST(sum(CASE WHEN abs(d.diff_b) >= abs(o.obs_diff)
-                       THEN 1 ELSE 0 END) AS BIGINT) AS n_extreme
-  FROM diffs d, obs o
-)
-SELECT o.n_a, o.n_b, o.obs_diff,
-       CAST({_PERM_B} AS BIGINT) AS n_perms, e.n_extreme,
-       round((1 + e.n_extreme) / {float(_PERM_B + 1)}, 4) AS p_value
-FROM obs o, extreme e
-"""

@@ -43,15 +43,6 @@ def _daily(spark, sf_dir):
     )
 
 
-_SQL_DAILY = """
-daily AS (
-  SELECT CAST(dayofmonth(ts) AS BIGINT) AS day,
-         CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS x
-  FROM events GROUP BY 1
-)
-"""
-
-
 def q_qn_sn_scale(spark, sf_dir):
     """QN AND SN robust scale on the daily series: pairwise-gap
     order statistic (Qn) and med-of-med gaps (Sn), with the plain
@@ -133,53 +124,6 @@ def q_qn_sn_scale(spark, sf_dir):
             F.round("sd", 4).alias("stddev"),
         )
     )
-
-
-SQL_QN_SN_SCALE = f"""
-WITH {_SQL_DAILY},
-pairs AS MATERIALIZED (
-  SELECT a.day AS i, b.day AS j, abs(a.x - b.x) AS g
-  FROM daily a JOIN daily b ON a.day < b.day
-), stats AS (
-  SELECT CAST(count(*) AS BIGINT) AS n FROM daily
-), ranked AS (
-  SELECT g,
-         CAST(row_number() OVER (ORDER BY g, i, j) AS BIGINT) AS r
-  FROM pairs
-), qn AS (
-  SELECT n, {_QN_D} * g AS qn
-  FROM ranked CROSS JOIN stats
-  WHERE r = CAST((floor(n / 2) + 1) * floor(n / 2) / 2 AS BIGINT)
-), allp AS MATERIALIZED (
-  SELECT i, j, g FROM pairs
-  UNION ALL
-  SELECT j AS i, i AS j, g FROM pairs
-), inner_r AS (
-  SELECT i, g,
-         CAST(row_number() OVER (PARTITION BY i ORDER BY g, j) - 1
-              AS DOUBLE) AS r,
-         CAST(count(*) OVER (PARTITION BY i) - 1 AS DOUBLE) AS m
-  FROM allp
-), imeds AS (
-  SELECT i, avg(g) AS imed FROM inner_r
-  WHERE r = floor(m * 0.5) OR r = ceil(m * 0.5)
-  GROUP BY 1
-), outer_r AS (
-  SELECT imed,
-         CAST(row_number() OVER (ORDER BY imed, i) - 1 AS DOUBLE)
-           AS r,
-         CAST(count(*) OVER () - 1 AS DOUBLE) AS m
-  FROM imeds
-), sn AS (
-  SELECT {_SN_C} * avg(imed) AS sn FROM outer_r
-  WHERE r = floor(m * 0.5) OR r = ceil(m * 0.5)
-), sd AS (
-  SELECT stddev_samp(CAST(x AS DOUBLE)) AS sd FROM daily
-)
-SELECT n, round(qn, 4) AS qn, round(sn, 4) AS sn,
-       round(sd, 4) AS stddev
-FROM qn CROSS JOIN sn CROSS JOIN sd
-"""
 
 
 def q_biweight_midvar(spark, sf_dir):
@@ -269,54 +213,6 @@ def q_biweight_midvar(spark, sf_dir):
     )
 
 
-SQL_BIWEIGHT_MIDVAR = f"""
-WITH {_SQL_DAILY},
-medr AS (
-  SELECT CAST(x AS DOUBLE) AS v,
-         CAST(row_number() OVER (ORDER BY x, day) - 1 AS DOUBLE)
-           AS r,
-         CAST(count(*) OVER () - 1 AS DOUBLE) AS m
-  FROM daily
-), med AS (
-  SELECT avg(v) AS med FROM medr
-  WHERE r = floor(m * 0.5) OR r = ceil(m * 0.5)
-), dev AS MATERIALIZED (
-  SELECT day, x, med, abs(x - med) AS ad FROM daily CROSS JOIN med
-), madr AS (
-  SELECT ad,
-         CAST(row_number() OVER (ORDER BY ad, day) - 1 AS DOUBLE)
-           AS r,
-         CAST(count(*) OVER () - 1 AS DOUBLE) AS m
-  FROM dev
-), mad AS (
-  SELECT avg(ad) AS mad FROM madr
-  WHERE r = floor(m * 0.5) OR r = ceil(m * 0.5)
-), u AS (
-  SELECT day, x, med, mad, (x - med) / ({_BW_C} * mad) AS u
-  FROM dev CROSS JOIN mad
-), kept AS (
-  SELECT * FROM u WHERE abs(u) < 1
-), nn AS (
-  SELECT CAST(count(*) AS BIGINT) AS n FROM daily
-), cums AS (
-  SELECT day, med, mad,
-         sum((x - med) * (x - med) * pow(1 - u * u, 4.0))
-           OVER (ORDER BY day ROWS UNBOUNDED PRECEDING) AS _num,
-         sum((1 - u * u) * (1 - 5 * u * u))
-           OVER (ORDER BY day ROWS UNBOUNDED PRECEDING) AS _den,
-         row_number() OVER (ORDER BY day DESC) AS _rd
-  FROM kept
-), m AS (
-  SELECT n, med, mad, _num, _den
-  FROM cums CROSS JOIN nn WHERE _rd = 1
-)
-SELECT n, round(med, 4) AS median, round(mad, 4) AS mad,
-       round(n * _num / (_den * _den), 4) AS bwmv,
-       round(sqrt(n * _num / (_den * _den)), 4) AS bw_scale
-FROM m
-"""
-
-
 def q_dagostino_k2(spark, sf_dir):
     """D'AGOSTINO-PEARSON K2 omnibus normality test on the daily
     series: Z1 (skewness), Z2 (kurtosis, sign-safe cbrt), K2 =
@@ -398,61 +294,3 @@ def q_dagostino_k2(spark, sf_dir):
         F.round(z2, 6).alias("z2"),
         F.round(z1 * z1 + z2 * z2, 6).alias("k2"),
     )
-
-
-SQL_DAGOSTINO_K2 = f"""
-WITH {_SQL_DAILY},
-m AS (
-  SELECT CAST(count(*) AS DOUBLE) AS n,
-         avg(CAST(x AS DOUBLE)) AS m1,
-         avg(pow(CAST(x AS DOUBLE), 2.0)) AS r2,
-         avg(pow(CAST(x AS DOUBLE), 3.0)) AS r3,
-         avg(pow(CAST(x AS DOUBLE), 4.0)) AS r4
-  FROM daily
-), c AS (
-  SELECT n, m1,
-         r2 - m1 * m1 AS m2,
-         r3 - 3 * m1 * r2 + 2 * m1 * m1 * m1 AS m3,
-         r4 - 4 * m1 * r3 + 6 * m1 * m1 * r2
-            - 3 * m1 * m1 * m1 * m1 AS m4
-  FROM m
-), g AS (
-  SELECT n, m3 / pow(m2, 1.5) AS g1, m4 / (m2 * m2) AS g2
-  FROM c
-), z1c AS (
-  SELECT n, g1, g2,
-         g1 * sqrt((n + 1) * (n + 3) / (6 * (n - 2))) AS y,
-         -1 + sqrt(2 * (3 * (n * n + 27 * n - 70) * (n + 1) * (n + 3)
-              / ((n - 2) * (n + 5) * (n + 7) * (n + 9)) - 1)) AS w2
-  FROM g
-), z1 AS (
-  SELECT n, g1, g2,
-         (1 / sqrt(ln(sqrt(w2))))
-           * ln(y / sqrt(2 / (w2 - 1))
-                + sqrt(pow(y / sqrt(2 / (w2 - 1)), 2.0) + 1)) AS z1
-  FROM z1c
-), z2c AS (
-  SELECT n, g1, g2, z1,
-         (g2 - 3 * (n - 1) / (n + 1))
-           / sqrt(24 * n * (n - 2) * (n - 3)
-                  / ((n + 1) * (n + 1) * (n + 3) * (n + 5))) AS xs,
-         6 * (n * n - 5 * n + 2) / ((n + 7) * (n + 9))
-           * sqrt(6 * (n + 3) * (n + 5)
-                  / (n * (n - 2) * (n - 3))) AS sb1
-  FROM z1
-), z2a AS (
-  SELECT n, g1, g2, z1, xs,
-         6 + 8 / sb1 * (2 / sb1 + sqrt(1 + 4 / (sb1 * sb1))) AS aa
-  FROM z2c
-), z2 AS (
-  SELECT n, g1, g2, z1,
-         ((1 - 2 / (9 * aa))
-          - cbrt((1 - 2 / aa) / (1 + xs * sqrt(2 / (aa - 4)))))
-           / sqrt(2 / (9 * aa)) AS z2
-  FROM z2a
-)
-SELECT CAST(n AS BIGINT) AS n, round(g1, 6) AS skew_g1,
-       round(g2, 6) AS kurt_g2, round(z1, 6) AS z1,
-       round(z2, 6) AS z2, round(z1 * z1 + z2 * z2, 6) AS k2
-FROM z2
-"""

@@ -7,15 +7,12 @@ from __future__ import annotations
 import pandas as pd  # noqa: F401
 from pyspark.sql import DataFrame, SparkSession, Window  # noqa: F401
 from pyspark.sql import functions as F  # noqa: F401
-from pyspark.sql import types as T  # noqa: F401
 
 from .. import clean  # noqa: F401
-from .. import windows as W  # noqa: F401
 from ..asof import asof_join  # noqa: F401
 from ..textfeat import featurize_batch  # noqa: F401
 from ._shared import SESSION_GAP_S, _scratch_dir, _t, _us  # noqa: F401
 from .core import SQL_ASOF  # noqa: F401
-
 
 
 def q_dedup_clusters(spark, sf_dir):
@@ -757,21 +754,6 @@ SELECT doc_id, CAST(i - 1 AS INT) AS pos,
        array_to_string(t[i:i+2], ' ') AS shingle
 FROM ex
 """
-
-
-def q_lineage(spark, sf_dir):
-    """Per-partition lineage rows from the featurize stage
-    (BASELINE.json:6 mandate): partition id, offset range, row count,
-    order-independent feature hash. committed_at dropped (wall clock)."""
-    from ..features import featurize, lineage_rows
-    from ..synth import SynthConfig, synth_pages
-
-    pages = synth_pages(spark, SynthConfig(n_urls=60), n_partitions=6)
-    feats = featurize(pages, use_html=True)
-    return lineage_rows(feats, "snap-lineage-0").select(
-        "partition_id", "input_snapshot", "first_offset", "last_offset",
-        "n_rows", "feature_hash",
-    )
 
 
 def q_doc_fingerprint(spark, sf_dir):
@@ -1549,7 +1531,6 @@ FROM lineitem
 WHERE l_shipdate <= TIMESTAMP '1998-09-02'
 GROUP BY l_returnflag, l_linestatus
 """
-
 
 
 def q_seq_pack(spark, sf_dir):

@@ -7,16 +7,11 @@ from __future__ import annotations
 import pandas as pd  # noqa: F401
 from pyspark.sql import DataFrame, SparkSession, Window  # noqa: F401
 from pyspark.sql import functions as F  # noqa: F401
-from pyspark.sql import types as T  # noqa: F401
 
-from .. import clean  # noqa: F401
-from .. import windows as W  # noqa: F401
 from ..asof import asof_join  # noqa: F401
-from ..textfeat import featurize_batch  # noqa: F401
 from ._shared import SESSION_GAP_S, _t, _us  # noqa: F401
 from .pit_scd import _PARA_CHUNK  # noqa: F401
 from .rows_only import _PII_EMAIL_RE  # noqa: F401
-
 
 
 # --------------------------------------------------------------------------
@@ -457,146 +452,6 @@ FROM fan GROUP BY report_day
 """
 
 
-def q_tpch_q13(spark, sf_dir):
-    """TPC-H Q13 shape (customer order-count distribution): customer
-    LEFT OUTER orders with a filter ON THE JOIN'S RIGHT SIDE (urgent
-    orders excluded — stands in for Q13's o_comment NOT LIKE; the
-    fixture carries no comment column), count per customer INCLUDING
-    zero-order customers, then the histogram of counts. Two-level agg
-    over an outer join — the right-side filter must stay in the join
-    (a WHERE would silently drop the zero-order customers)."""
-    c = _t(spark, sf_dir, "customer").select("c_custkey")
-    o = _t(spark, sf_dir, "orders").where(
-        F.col("o_orderpriority") != "1-URGENT"
-    ).select("o_custkey", "o_orderkey")
-    per_cust = (
-        c.join(o, c["c_custkey"] == o["o_custkey"], "left")
-        .groupBy("c_custkey")
-        .agg(F.count("o_orderkey").alias("c_count"))
-    )
-    return (
-        per_cust.groupBy("c_count")
-        .agg(F.count(F.lit(1)).alias("custdist"))
-    )
-
-
-SQL_TPCH_Q13 = """
-SELECT c_count, CAST(count(*) AS BIGINT) AS custdist
-FROM (
-  SELECT c_custkey, count(o_orderkey) AS c_count
-  FROM customer LEFT OUTER JOIN orders
-    ON c_custkey = o_custkey AND o_orderpriority <> '1-URGENT'
-  GROUP BY c_custkey
-)
-GROUP BY c_count
-"""
-
-
-def q_tpch_q19(spark, sf_dir):
-    """TPC-H Q19 shape (disjunctive predicate revenue): revenue over
-    an OR of three conjunctive (brand, size-range, quantity-band)
-    groups — the disjunctive-pushdown probe (predicates adapted to the
-    fixture's columns; no p_container/l_shipmode exist). The common
-    l_quantity <= 30 conjunct is factored so SOMETHING pushes to the
-    lineitem scan even under the OR; revenue sums in DECIMAL for
-    association-order independence."""
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part")
-    j = li.join(p, li["l_partkey"] == p["p_partkey"])
-    g1 = (
-        (F.col("p_brand") == "Brand#12")
-        & F.col("p_size").between(1, 15)
-        & F.col("l_quantity").between(1, 11)
-    )
-    g2 = (
-        (F.col("p_brand") == "Brand#23")
-        & F.col("p_size").between(1, 25)
-        & F.col("l_quantity").between(10, 20)
-    )
-    g3 = (
-        (F.col("p_brand") == "Brand#34")
-        & F.col("p_size").between(1, 35)
-        & F.col("l_quantity").between(20, 30)
-    )
-    return (
-        j.where(F.col("l_quantity") <= 30)
-        .where(g1 | g2 | g3)
-        .agg(
-            F.sum(
-                (F.col("l_extendedprice") * (1 - F.col("l_discount")))
-                .cast("decimal(18,4)")
-            ).cast("double").alias("revenue"),
-            F.count(F.lit(1)).alias("n_lines"),
-        )
-    )
-
-
-SQL_TPCH_Q19 = """
-SELECT CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4)))
-            AS DOUBLE) AS revenue,
-       CAST(count(*) AS BIGINT) AS n_lines
-FROM lineitem JOIN part ON l_partkey = p_partkey
-WHERE l_quantity <= 30
-  AND ((p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 15
-        AND l_quantity BETWEEN 1 AND 11)
-    OR (p_brand = 'Brand#23' AND p_size BETWEEN 1 AND 25
-        AND l_quantity BETWEEN 10 AND 20)
-    OR (p_brand = 'Brand#34' AND p_size BETWEEN 1 AND 35
-        AND l_quantity BETWEEN 20 AND 30))
-"""
-
-
-def q_tpch_q22(spark, sf_dir):
-    """TPC-H Q22 shape (global sales opportunity): customers from a
-    nation set with above-average positive balance and NO orders —
-    an uncorrelated scalar-subquery threshold (broadcast 1-row avg in
-    exact cents) plus a LEFT ANTI join against orders, grouped by
-    nation (c_phone country codes don't exist in the fixture;
-    c_nationkey stands in). Balance compares in integer cents so the
-    threshold cannot ulp-flip between engines."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").select("o_custkey")
-    nations = [1, 3, 5, 7, 9, 11, 13]
-    cents = F.expr("CAST(round(c_acctbal * 100) AS BIGINT)")
-    base = c.where(F.col("c_nationkey").isin(nations)).select(
-        "c_custkey", "c_nationkey", cents.alias("bal_cents")
-    )
-    thresh = (
-        base.where(F.col("bal_cents") > 0)
-        .agg(
-            F.sum("bal_cents").alias("s"),
-            F.count(F.lit(1)).alias("n"),
-        )
-    )
-    eligible = (
-        base.crossJoin(F.broadcast(thresh))
-        .where(F.col("bal_cents") * F.col("n") > F.col("s"))
-        .join(o, base["c_custkey"] == o["o_custkey"], "left_anti")
-    )
-    return eligible.groupBy("c_nationkey").agg(
-        F.count(F.lit(1)).alias("numcust"),
-        F.round(F.sum("bal_cents") / 100.0, 2).alias("totacctbal"),
-    )
-
-
-SQL_TPCH_Q22 = """
-WITH base AS (
-  SELECT c_custkey, c_nationkey,
-         CAST(round(c_acctbal * 100) AS BIGINT) AS bal_cents
-  FROM customer WHERE c_nationkey IN (1, 3, 5, 7, 9, 11, 13)
-), t AS (
-  SELECT sum(bal_cents) AS s, count(*) AS n
-  FROM base WHERE bal_cents > 0
-)
-SELECT c_nationkey, CAST(count(*) AS BIGINT) AS numcust,
-       round(sum(bal_cents) / 100.0, 2) AS totacctbal
-FROM base CROSS JOIN t
-WHERE bal_cents * n > s
-  AND NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-GROUP BY c_nationkey
-"""
-
-
 # --------------------------------------------------------------------------
 # Feature-eng pack #10: remaining TPC-H shapes on this column subset
 # (Q7/Q8/Q15/Q17/Q21), fixed-point PageRank, robust rolling/grouped
@@ -646,79 +501,6 @@ def q_tpch_q7(spark, sf_dir):
     )
 
 
-SQL_TPCH_Q7 = """
-SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-       CAST(year(l_shipdate) AS INT) AS l_year,
-       round(sum(l_extendedprice * (1 - l_discount)), 4) AS revenue
-FROM lineitem, orders, customer, supplier, nation n1, nation n2
-WHERE l_orderkey = o_orderkey AND o_custkey = c_custkey
-  AND l_suppkey = s_suppkey
-  AND s_nationkey = n1.n_nationkey AND c_nationkey = n2.n_nationkey
-  AND ((s_nationkey = 1 AND c_nationkey = 2)
-    OR (s_nationkey = 2 AND c_nationkey = 1))
-  AND year(l_shipdate) IN (1996, 1997)
-GROUP BY supp_nation, cust_nation, l_year
-"""
-
-
-def q_tpch_q8(spark, sf_dir):
-    """TPC-H Q8 shape (national market share): among PROMO-part orders
-    whose customer sits in ASIA, nation 3's share of yearly revenue.
-    share = conditional-sum / sum in one pass over the joined fact —
-    both sums ride the same map-side partial agg; dims broadcast. The
-    6dp-rounded ratio is immune to association-order ulp drift."""
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_orderdate"
-    )
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    p = (
-        _t(spark, sf_dir, "part")
-        .where(F.col("p_type") == "PROMO")
-        .select("p_partkey")
-    )
-    n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_regionkey")
-    r = (
-        _t(spark, sf_dir, "region")
-        .where(F.col("r_name") == "ASIA")
-        .select("r_regionkey")
-    )
-    vol = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    j = (
-        li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
-        .join(o, li.l_orderkey == o.o_orderkey)
-        .where(F.year("o_orderdate").isin(1996, 1997))
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
-        .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
-    )
-    return j.groupBy(F.year("o_orderdate").alias("o_year")).agg(
-        F.round(
-            F.sum(F.when(F.col("s_nationkey") == 3, vol).otherwise(0.0))
-            / F.sum(vol),
-            6,
-        ).alias("mkt_share")
-    )
-
-
-SQL_TPCH_Q8 = """
-SELECT CAST(year(o_orderdate) AS INT) AS o_year,
-       round(sum(CASE WHEN s_nationkey = 3
-                      THEN l_extendedprice * (1 - l_discount)
-                      ELSE 0.0 END)
-             / sum(l_extendedprice * (1 - l_discount)), 6) AS mkt_share
-FROM lineitem, orders, customer, supplier, part, nation, region
-WHERE l_partkey = p_partkey AND l_orderkey = o_orderkey
-  AND o_custkey = c_custkey AND l_suppkey = s_suppkey
-  AND c_nationkey = n_nationkey AND n_regionkey = r_regionkey
-  AND r_name = 'ASIA' AND p_type = 'PROMO'
-  AND year(o_orderdate) IN (1996, 1997)
-GROUP BY o_year
-"""
-
-
 def q_tpch_q15(spark, sf_dir):
     """TPC-H Q15 shape (top supplier): per-supplier revenue over
     1996-Q1 in EXACT integer cents (per-row round then bigint sum, so
@@ -755,22 +537,6 @@ def q_tpch_q15(spark, sf_dir):
     )
 
 
-SQL_TPCH_Q15 = """
-WITH rev AS (
-  SELECT l_suppkey,
-         sum(CAST(round(l_extendedprice * (1 - l_discount) * 100)
-                  AS BIGINT)) AS total_cents
-  FROM lineitem
-  WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-    AND l_shipdate < TIMESTAMP '1996-04-01'
-  GROUP BY l_suppkey
-)
-SELECT s_suppkey, s_name, round(total_cents / 100.0, 2) AS total_revenue
-FROM rev JOIN supplier ON l_suppkey = s_suppkey
-WHERE total_cents = (SELECT max(total_cents) FROM rev)
-"""
-
-
 def q_tpch_q17(spark, sf_dir):
     """TPC-H Q17 shape (small-quantity-order revenue): ECONOMY-part
     lineitems whose quantity is below 20% of that part's average
@@ -799,22 +565,6 @@ def q_tpch_q17(spark, sf_dir):
     return small.agg(
         F.round(F.sum("l_extendedprice") / 7.0, 4).alias("avg_yearly")
     )
-
-
-SQL_TPCH_Q17 = """
-WITH j AS (
-  SELECT l_partkey, l_extendedprice, CAST(l_quantity AS BIGINT) AS qty
-  FROM lineitem JOIN part ON l_partkey = p_partkey
-  WHERE p_type = 'ECONOMY'
-), stats AS (
-  SELECT l_partkey, l_extendedprice, qty,
-         sum(qty) OVER (PARTITION BY l_partkey) AS sum_qty,
-         count(*) OVER (PARTITION BY l_partkey) AS cnt
-  FROM j
-)
-SELECT round(sum(l_extendedprice) / 7.0, 4) AS avg_yearly
-FROM stats WHERE qty * cnt * 5 < sum_qty
-"""
 
 
 def q_tpch_q21(spark, sf_dir):
@@ -858,29 +608,6 @@ def q_tpch_q21(spark, sf_dir):
         .orderBy(F.col("numwait").desc(), "s_suppkey")
         .limit(20)
     )
-
-
-SQL_TPCH_Q21 = """
-WITH per_supp AS (
-  SELECT l_orderkey, l_suppkey,
-         max(CASE WHEN l_shipdate > o_orderdate + INTERVAL 60 DAY
-                  THEN 1 ELSE 0 END) AS late_any
-  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-  WHERE o_orderstatus = 'F'
-  GROUP BY l_orderkey, l_suppkey
-), flagged AS (
-  SELECT l_suppkey, late_any,
-         count(*) OVER (PARTITION BY l_orderkey) AS n_supp,
-         sum(late_any) OVER (PARTITION BY l_orderkey) AS n_late
-  FROM per_supp
-)
-SELECT s_suppkey, s_name, CAST(count(*) AS BIGINT) AS numwait
-FROM flagged JOIN supplier ON l_suppkey = s_suppkey
-WHERE late_any = 1 AND n_supp > 1 AND n_late = 1
-GROUP BY s_suppkey, s_name
-ORDER BY numwait DESC, s_suppkey
-LIMIT 20
-"""
 
 
 def q_pagerank(spark, sf_dir):
@@ -935,41 +662,6 @@ def q_pagerank(spark, sf_dir):
     return ranks.select("doc_id", F.col("r").alias("rank_e12"))
 
 
-SQL_PAGERANK = """
-WITH n AS (SELECT count(*) AS cnt FROM documents),
-nodes AS (SELECT doc_id FROM documents),
-edges AS (
-  SELECT doc_id AS src, (doc_id * 7 + 3) % cnt AS dst
-  FROM documents CROSS JOIN n
-  UNION ALL
-  SELECT doc_id, (doc_id * 13 + 5) % cnt FROM documents CROSS JOIN n
-),
-base AS (
-  SELECT doc_id, CAST(15000000000000 // (100 * cnt) AS BIGINT) AS base
-  FROM nodes CROSS JOIN n
-),
-r0 AS (
-  SELECT doc_id, CAST(1000000000000 // cnt AS BIGINT) AS r
-  FROM nodes CROSS JOIN n
-),
-c1 AS (SELECT e.dst, sum(r.r // 2) AS s FROM edges e
-       JOIN r0 r ON r.doc_id = e.src GROUP BY e.dst),
-r1 AS (SELECT b.doc_id,
-              CAST(b.base + (85 * COALESCE(c1.s, 0)) // 100 AS BIGINT) AS r
-       FROM base b LEFT JOIN c1 ON c1.dst = b.doc_id),
-c2 AS (SELECT e.dst, sum(r.r // 2) AS s FROM edges e
-       JOIN r1 r ON r.doc_id = e.src GROUP BY e.dst),
-r2 AS (SELECT b.doc_id,
-              CAST(b.base + (85 * COALESCE(c2.s, 0)) // 100 AS BIGINT) AS r
-       FROM base b LEFT JOIN c2 ON c2.dst = b.doc_id),
-c3 AS (SELECT e.dst, sum(r.r // 2) AS s FROM edges e
-       JOIN r2 r ON r.doc_id = e.src GROUP BY e.dst)
-SELECT b.doc_id,
-       CAST(b.base + (85 * COALESCE(c3.s, 0)) // 100 AS BIGINT) AS rank_e12
-FROM base b LEFT JOIN c3 ON c3.dst = b.doc_id
-"""
-
-
 def q_rolling_median(spark, sf_dir):
     """Rolling EXACT median of the last 5 events per user (robust
     rolling statistic — the outlier-resistant twin of win_rolling's
@@ -988,15 +680,6 @@ def q_rolling_median(spark, sf_dir):
         "  PARTITION BY user_id ORDER BY ts_us, event_id"
         "  ROWS BETWEEN 4 PRECEDING AND CURRENT ROW), 4) AS roll_med",
     )
-
-
-SQL_ROLLING_MEDIAN = """
-SELECT user_id, epoch_us(ts) AS ts_us, event_id,
-       round(median(value) OVER (
-         PARTITION BY user_id ORDER BY epoch_us(ts), event_id
-         ROWS BETWEEN 4 PRECEDING AND CURRENT ROW), 4) AS roll_med
-FROM events
-"""
 
 
 def q_mad_outliers(spark, sf_dir):
@@ -1025,27 +708,6 @@ def q_mad_outliers(spark, sf_dir):
         F.round(F.min("med"), 1).alias("med_chars"),
         F.round(F.min("mad"), 1).alias("mad_chars"),
     )
-
-
-SQL_MAD_OUTLIERS = """
-WITH d AS (
-  SELECT doc_id, lang, CAST(n_chars AS DOUBLE) AS x FROM documents
-), med AS (
-  SELECT lang, median(x) AS med FROM d GROUP BY lang
-), dm AS (
-  SELECT d.lang, d.x, med.med, abs(d.x - med.med) AS ad
-  FROM d JOIN med USING (lang)
-), mad AS (
-  SELECT lang, median(ad) AS mad FROM dm GROUP BY lang
-)
-SELECT dm.lang, CAST(count(*) AS BIGINT) AS n_docs,
-       CAST(sum(CASE WHEN ad > 3.0 * mad THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_outliers,
-       round(min(med), 1) AS med_chars,
-       round(min(mad), 1) AS mad_chars
-FROM dm JOIN mad USING (lang)
-GROUP BY dm.lang
-"""
 
 
 def q_attribution(spark, sf_dir):
@@ -1089,32 +751,6 @@ def q_attribution(spark, sf_dir):
             F.round(F.sum("value"), 4).alias("revenue"),
         )
     )
-
-
-SQL_ATTRIBUTION = """
-WITH probe AS (
-  SELECT user_id, ts AS purch_ts, event_id, value
-  FROM events WHERE event_type = 'purchase'
-), build AS (
-  SELECT user_id, ts,
-         max(CAST(json_extract_string(props, '$.k') AS INT) % 5)
-           AS channel
-  FROM events WHERE event_type = 'click'
-  GROUP BY user_id, ts
-), a AS (
-  SELECT p.value, b.ts, p.purch_ts, b.channel
-  FROM probe p ASOF LEFT JOIN build b
-    ON p.user_id = b.user_id AND p.purch_ts >= b.ts
-)
-SELECT CASE WHEN ts IS NOT NULL
-             AND epoch_us(purch_ts) - epoch_us(ts)
-                 <= CAST(7 AS BIGINT) * 24 * 3600 * 1000000
-            THEN channel ELSE -1 END AS channel,
-       CAST(count(*) AS BIGINT) AS n_purchases,
-       round(sum(value), 4) AS revenue
-FROM a
-GROUP BY 1
-"""
 
 
 def q_boilerplate_para(spark, sf_dir):
@@ -1169,37 +805,3 @@ def q_boilerplate_para(spark, sf_dir):
             ).alias("boiler_ratio"),
         )
     )
-
-
-SQL_BOILERPLATE_PARA = """
-WITH arr AS (
-  SELECT doc_id, source, regexp_split_to_array(trim(text), '\\s+') AS w
-  FROM documents
-), ch0 AS (
-  SELECT doc_id, source, w,
-         unnest(generate_series(0, CAST((len(w) + 9) // 10 AS INT) - 1))
-           AS chunk_idx
-  FROM arr
-), chunks AS (
-  SELECT doc_id, source,
-         md5(array_to_string(list_slice(w, chunk_idx * 10 + 1,
-                                        chunk_idx * 10 + 10), ' ')) AS h
-  FROM ch0
-), per_chunk AS (
-  SELECT source, h, count(DISTINCT doc_id) AS nd
-  FROM chunks GROUP BY source, h
-), per_source AS (
-  SELECT source, count(DISTINCT doc_id) AS n_docs
-  FROM documents GROUP BY source
-), boiler AS (
-  SELECT source, h,
-         CAST(nd >= 2 AND nd * 10 >= n_docs * 3 AS INT) AS is_boiler
-  FROM per_chunk JOIN per_source USING (source)
-)
-SELECT doc_id,
-       CAST(count(*) AS BIGINT) AS n_chunks,
-       CAST(sum(is_boiler) AS BIGINT) AS n_boiler,
-       round(sum(is_boiler) * 1.0 / count(*), 4) AS boiler_ratio
-FROM chunks JOIN boiler USING (source, h)
-GROUP BY doc_id
-"""

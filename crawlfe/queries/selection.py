@@ -4,18 +4,11 @@ Split from the former crawlfe/queries.py monolith (r4); bodies unchanged.
 """
 from __future__ import annotations
 
-import pandas as pd  # noqa: F401
 from pyspark.sql import DataFrame, SparkSession, Window  # noqa: F401
 from pyspark.sql import functions as F  # noqa: F401
-from pyspark.sql import types as T  # noqa: F401
 
-from .. import clean  # noqa: F401
-from .. import windows as W  # noqa: F401
-from ..asof import asof_join  # noqa: F401
-from ..textfeat import featurize_batch  # noqa: F401
 from ._shared import SESSION_GAP_S, _t, _us  # noqa: F401
 from .graph_sources import SQL_DOC_EDGES, _doc_edges  # noqa: F401
-
 
 
 # --------------------------------------------------------------------------

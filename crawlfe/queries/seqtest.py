@@ -99,41 +99,6 @@ def q_rake_keywords(spark, sf_dir):
     )
 
 
-SQL_RAKE_KEYWORDS = f"""
-WITH toks AS (
-  SELECT doc_id, string_split_regex(trim(text), '\\s+') AS t
-  FROM documents
-), ex AS (
-  SELECT doc_id, t[i] AS token, i AS pos
-  FROM (SELECT doc_id, t, unnest(generate_series(1, len(t))) AS i
-        FROM toks)
-  WHERE t[i] <> ''
-), flagged AS (
-  SELECT doc_id, token, pos,
-         CASE WHEN token IN {_RAKE_STOPWORDS!r} THEN 1 ELSE 0 END
-           AS stop
-  FROM ex
-), runs AS (
-  SELECT *, sum(stop) OVER (PARTITION BY doc_id ORDER BY pos
-                            ROWS UNBOUNDED PRECEDING) AS run
-  FROM flagged
-), words AS (
-  SELECT doc_id, token, run,
-         count(*) OVER (PARTITION BY doc_id, run) AS plen
-  FROM runs WHERE stop = 0
-), scores AS (
-  SELECT token, CAST(count(*) AS BIGINT) AS freq,
-         CAST(sum(plen) AS BIGINT) AS deg
-  FROM words GROUP BY token
-)
-SELECT token, freq, deg,
-       round(deg / CAST(freq AS DOUBLE), 6) AS rake
-FROM scores
-ORDER BY deg / CAST(freq AS DOUBLE) DESC, token ASC
-LIMIT {_RAKE_TOPK}
-"""
-
-
 def q_msprt_evalue(spark, sf_dir):
     """Daily always-valid e-value for the two-arm (user_id parity)
     purchase-rate difference: cumulative counts by window cumsum,
@@ -185,51 +150,6 @@ def q_msprt_evalue(spark, sf_dir):
         F.round(e_val, 6).alias("e_value"),
         (e_val > F.lit(1.0 / _MSPRT_ALPHA)).alias("reject_anytime"),
     )
-
-
-SQL_MSPRT_EVALUE = f"""
-WITH daily AS (
-  SELECT CAST(extract(day FROM ts) AS INTEGER) AS day,
-         CAST(sum(CASE WHEN user_id % 2 = 0 THEN 1 ELSE 0 END)
-              AS BIGINT) AS na_d,
-         CAST(sum(CASE WHEN user_id % 2 = 0
-                        AND event_type = 'purchase'
-                  THEN 1 ELSE 0 END) AS BIGINT) AS xa_d,
-         CAST(sum(CASE WHEN user_id % 2 <> 0 THEN 1 ELSE 0 END)
-              AS BIGINT) AS nb_d,
-         CAST(sum(CASE WHEN user_id % 2 <> 0
-                        AND event_type = 'purchase'
-                  THEN 1 ELSE 0 END) AS BIGINT) AS xb_d
-  FROM events GROUP BY 1
-), cum AS (
-  SELECT day,
-         sum(na_d) OVER w AS na, sum(xa_d) OVER w AS xa,
-         sum(nb_d) OVER w AS nb, sum(xb_d) OVER w AS xb
-  FROM daily
-  WINDOW w AS (ORDER BY day ROWS UNBOUNDED PRECEDING)
-), stats AS (
-  SELECT day, na, xa, nb, xb,
-         (xa + xb) / CAST(na + nb AS DOUBLE) AS p,
-         CAST(xa AS DOUBLE) / na - CAST(xb AS DOUBLE) / nb AS y
-  FROM cum
-), ev AS (
-  SELECT day, na, xa, nb, xb,
-         CASE WHEN p * (1 - p) * (1.0 / na + 1.0 / nb) > 0 THEN
-           sqrt(p * (1 - p) * (1.0 / na + 1.0 / nb)
-                / (p * (1 - p) * (1.0 / na + 1.0 / nb) + {_MSPRT_TAU2}))
-           * exp(y * y * {_MSPRT_TAU2}
-                 / (2 * p * (1 - p) * (1.0 / na + 1.0 / nb)
-                    * (p * (1 - p) * (1.0 / na + 1.0 / nb)
-                       + {_MSPRT_TAU2})))
-         ELSE 1.0 END AS e_value
-  FROM stats
-)
-SELECT day, CAST(na AS BIGINT) AS na, CAST(xa AS BIGINT) AS xa,
-       CAST(nb AS BIGINT) AS nb, CAST(xb AS BIGINT) AS xb,
-       round(e_value, 6) AS e_value,
-       e_value > {1.0 / _MSPRT_ALPHA} AS reject_anytime
-FROM ev
-"""
 
 
 def q_holm_bonferroni(spark, sf_dir):
@@ -301,47 +221,3 @@ def q_holm_bonferroni(spark, sf_dir):
         F.round("p_holm", 6).alias("p_holm"),
         (F.col("p_holm") < _HOLM_ALPHA).alias("reject"),
     )
-
-
-SQL_HOLM_BONFERRONI = f"""
-WITH cells AS (
-  SELECT event_type,
-         CAST(sum(CASE WHEN dayofweek(ts) IN (0, 6) THEN 1 ELSE 0 END)
-              AS BIGINT) AS n1,
-         CAST(sum(CASE WHEN dayofweek(ts) IN (0, 6)
-                        AND CAST(round(value * 100) AS BIGINT)
-                            >= {_HOLM_OUTCOME_CENTS}
-                  THEN 1 ELSE 0 END) AS BIGINT) AS x1,
-         CAST(sum(CASE WHEN dayofweek(ts) NOT IN (0, 6) THEN 1 ELSE 0
-                  END) AS BIGINT) AS n2,
-         CAST(sum(CASE WHEN dayofweek(ts) NOT IN (0, 6)
-                        AND CAST(round(value * 100) AS BIGINT)
-                            >= {_HOLM_OUTCOME_CENTS}
-                  THEN 1 ELSE 0 END) AS BIGINT) AS x2
-  FROM events GROUP BY 1
-), zed AS (
-  SELECT *,
-         (CAST(x1 AS DOUBLE) / n1 - CAST(x2 AS DOUBLE) / n2)
-         / sqrt(((x1 + x2) / CAST(n1 + n2 AS DOUBLE))
-                * (1 - (x1 + x2) / CAST(n1 + n2 AS DOUBLE))
-                * (1.0 / n1 + 1.0 / n2)) AS z
-  FROM cells
-), praw AS (
-  SELECT *, 2.0 * (1.0 - {_NCDF_SQL.format(x="abs(z)")}) AS p_raw
-  FROM zed
-), ranked AS (
-  SELECT *, row_number() OVER (ORDER BY p_raw ASC, event_type ASC)
-              AS rk,
-         count(*) OVER () AS m
-  FROM praw
-), stepped AS (
-  SELECT *, least(1.0, max((m - rk + 1) * p_raw)
-                        OVER (ORDER BY rk ROWS UNBOUNDED PRECEDING))
-              AS p_holm
-  FROM ranked
-)
-SELECT event_type, n1, x1, n2, x2, round(z, 6) AS z,
-       round(p_raw, 6) AS p_raw, round(p_holm, 6) AS p_holm,
-       p_holm < {_HOLM_ALPHA} AS reject
-FROM stepped
-"""

@@ -68,20 +68,6 @@ def _two_arm(spark, sf_dir, day_lo=None, day_hi=None):
     return a.crossJoin(F.broadcast(b))
 
 
-_SQL_TWO_ARM = """
-  SELECT
-    CAST(sum(CASE WHEN user_id % 2 = 0 THEN 1 ELSE 0 END) AS BIGINT)
-      AS n0,
-    CAST(sum(CASE WHEN user_id % 2 = 0 AND event_type = 'purchase'
-             THEN 1 ELSE 0 END) AS BIGINT) AS y0,
-    CAST(sum(CASE WHEN user_id % 2 = 1 THEN 1 ELSE 0 END) AS BIGINT)
-      AS n1,
-    CAST(sum(CASE WHEN user_id % 2 = 1 AND event_type = 'purchase'
-             THEN 1 ELSE 0 END) AS BIGINT) AS y1
-  FROM events {where}
-"""
-
-
 def _rate_z_cols():
     p0 = F.col("y0").cast("double") / F.col("n0")
     p1 = F.col("y1").cast("double") / F.col("n1")
@@ -115,29 +101,6 @@ def q_tost_equivalence(spark, sf_dir):
     )
 
 
-SQL_TOST_EQUIVALENCE = f"""
-WITH m AS ({_SQL_TWO_ARM.format(where="")}),
-s AS (
-  SELECT n0, n1,
-         CAST(y0 AS DOUBLE) / n0 AS p0,
-         CAST(y1 AS DOUBLE) / n1 AS p1,
-         sqrt((CAST(y0 AS DOUBLE) / n0) * (1 - CAST(y0 AS DOUBLE) / n0)
-              / n0
-              + (CAST(y1 AS DOUBLE) / n1)
-                * (1 - CAST(y1 AS DOUBLE) / n1) / n1) AS se
-  FROM m
-)
-SELECT n0, n1, round(p0, 6) AS rate0, round(p1, 6) AS rate1,
-       round(p1 - p0, 6) AS diff,
-       round((p1 - p0 + {_TOST_DELTA}) / se, 6) AS z_lower,
-       round(({_TOST_DELTA} - (p1 - p0)) / se, 6) AS z_upper,
-       CAST((p1 - p0 + {_TOST_DELTA}) / se > {_Z_ONE_SIDED_95}
-            AND ({_TOST_DELTA} - (p1 - p0)) / se > {_Z_ONE_SIDED_95}
-            AS INT) AS equivalent
-FROM s
-"""
-
-
 def q_obrien_fleming(spark, sf_dir):
     """O'BRIEN-FLEMING 2-LOOK monitoring: interim (days 1-15) z vs
     2.797, final (full month) z vs 1.977; one row per look."""
@@ -160,35 +123,6 @@ def q_obrien_fleming(spark, sf_dir):
             )
         )
     return looks[0].unionAll(looks[1])
-
-
-SQL_OBRIEN_FLEMING = f"""
-WITH i AS ({_SQL_TWO_ARM.format(
-    where="WHERE dayofmonth(ts) BETWEEN 1 AND 15")}),
-f AS ({_SQL_TWO_ARM.format(where="")}),
-iz AS (
-  SELECT 'interim_d15' AS look, n0, n1,
-         round((CAST(y1 AS DOUBLE) / n1 - CAST(y0 AS DOUBLE) / n0)
-               / sqrt((CAST(y0 AS DOUBLE) / n0)
-                      * (1 - CAST(y0 AS DOUBLE) / n0) / n0
-                      + (CAST(y1 AS DOUBLE) / n1)
-                        * (1 - CAST(y1 AS DOUBLE) / n1) / n1), 6) AS z,
-         {_OBF_INTERIM} AS boundary
-  FROM i
-), fz AS (
-  SELECT 'final_d30' AS look, n0, n1,
-         round((CAST(y1 AS DOUBLE) / n1 - CAST(y0 AS DOUBLE) / n0)
-               / sqrt((CAST(y0 AS DOUBLE) / n0)
-                      * (1 - CAST(y0 AS DOUBLE) / n0) / n0
-                      + (CAST(y1 AS DOUBLE) / n1)
-                        * (1 - CAST(y1 AS DOUBLE) / n1) / n1), 6) AS z,
-         {_OBF_FINAL} AS boundary
-  FROM f
-)
-SELECT look, n0, n1, z, boundary,
-       CAST(abs(z) > boundary AS INT) AS cross
-FROM (SELECT * FROM iz UNION ALL SELECT * FROM fz)
-"""
 
 
 def q_winners_curse(spark, sf_dir):
@@ -230,39 +164,3 @@ def q_winners_curse(spark, sf_dir):
         F.round(haircut, 6).alias("bias_est"),
         F.round(F.col("p_win") - haircut, 6).alias("p_adjusted"),
     )
-
-
-SQL_WINNERS_CURSE = f"""
-WITH c AS (
-  SELECT CAST(user_id % 3 AS INT) AS arm,
-         CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-              AS BIGINT) AS y
-  FROM events GROUP BY 1
-), r AS (
-  SELECT arm, n, y, CAST(y AS DOUBLE) / n AS p,
-         row_number() OVER (ORDER BY CAST(y AS DOUBLE) / n DESC,
-                            arm ASC) AS rk
-  FROM c
-), j AS (
-  SELECT b.arm AS win_arm, b.n AS n_win, b.p AS p_win,
-         s.n AS n_2nd, s.p AS p_2nd
-  FROM (SELECT * FROM r WHERE rk = 1) b
-  CROSS JOIN (SELECT * FROM r WHERE rk = 2) s
-), z AS (
-  SELECT j.*,
-         (p_win - p_2nd)
-         / sqrt(p_win * (1 - p_win) / n_win
-                + p_2nd * (1 - p_2nd) / n_2nd) AS z,
-         sqrt(p_win * (1 - p_win) / n_win
-              + p_2nd * (1 - p_2nd) / n_2nd) AS se
-  FROM j
-)
-SELECT win_arm, n_win, round(p_win, 6) AS p_naive,
-       round(z, 6) AS z_gap,
-       round(se * (exp(-z * z / 2) / {_SQRT_2PI})
-             / (1 / (1 + exp(-1.702 * z))), 6) AS bias_est,
-       round(p_win - se * (exp(-z * z / 2) / {_SQRT_2PI})
-             / (1 / (1 + exp(-1.702 * z))), 6) AS p_adjusted
-FROM z
-"""

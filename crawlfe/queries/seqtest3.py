@@ -24,8 +24,6 @@ and recursions are window scans over ~30 rows.
 """
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -95,49 +93,6 @@ def q_pocock_boundary(spark, sf_dir):
     ).orderBy("look")
 
 
-SQL_POCOCK_BOUNDARY = "\nUNION ALL\n".join(
-    f"""
-SELECT * FROM (
-  SELECT CAST({i} AS BIGINT) AS look,
-         CAST({d} AS BIGINT) AS through_day,
-         CAST(na + nb AS BIGINT) AS n,
-         round((CAST(sa AS DOUBLE) / na - CAST(sb AS DOUBLE) / nb)
-               / sqrt(((qa - CAST(sa AS DOUBLE) * sa / na) / (na - 1))
-                        / na
-                      + ((qb - CAST(sb AS DOUBLE) * sb / nb)
-                         / (nb - 1)) / nb), 6) AS z,
-         abs((CAST(sa AS DOUBLE) / na - CAST(sb AS DOUBLE) / nb)
-             / sqrt(((qa - CAST(sa AS DOUBLE) * sa / na) / (na - 1))
-                      / na
-                    + ((qb - CAST(sb AS DOUBLE) * sb / nb)
-                       / (nb - 1)) / nb)) > {_POCOCK_CRIT} AS reject
-  FROM (
-    SELECT
-      CAST(sum(CASE WHEN user_id % 2 = 0 THEN 1 ELSE 0 END)
-           AS BIGINT) AS na,
-      CAST(sum(CASE WHEN user_id % 2 = 0
-               THEN CAST(round(value * 100) AS BIGINT) ELSE 0 END)
-           AS BIGINT) AS sa,
-      CAST(sum(CASE WHEN user_id % 2 = 0
-               THEN CAST(round(value * 100) AS BIGINT)
-                    * CAST(round(value * 100) AS BIGINT)
-               ELSE 0 END) AS BIGINT) AS qa,
-      CAST(sum(CASE WHEN user_id % 2 = 1 THEN 1 ELSE 0 END)
-           AS BIGINT) AS nb,
-      CAST(sum(CASE WHEN user_id % 2 = 1
-               THEN CAST(round(value * 100) AS BIGINT) ELSE 0 END)
-           AS BIGINT) AS sb,
-      CAST(sum(CASE WHEN user_id % 2 = 1
-               THEN CAST(round(value * 100) AS BIGINT)
-                    * CAST(round(value * 100) AS BIGINT)
-               ELSE 0 END) AS BIGINT) AS qb
-    FROM events WHERE dayofmonth(ts) <= {d}
-  )
-)"""
-    for i, d in enumerate(_POCOCK_LOOKS, 1)
-) + "\nORDER BY look"
-
-
 def _daily(spark, sf_dir):
     e = _t(spark, sf_dir, "events").select(
         F.dayofmonth(F.col("ts").cast("timestamp")).cast("bigint").alias(
@@ -148,15 +103,6 @@ def _daily(spark, sf_dir):
     return e.groupBy("day").agg(
         F.sum("cents").cast("bigint").alias("x")
     )
-
-
-_SQL_DAILY = """
-daily AS (
-  SELECT CAST(dayofmonth(ts) AS BIGINT) AS day,
-         CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS x
-  FROM events GROUP BY 1
-)
-"""
 
 
 def q_always_valid_ci(spark, sf_dir):
@@ -192,29 +138,6 @@ def q_always_valid_ci(spark, sf_dir):
     ).orderBy("day")
 
 
-SQL_ALWAYS_VALID_CI = f"""
-WITH {_SQL_DAILY},
-sig AS (
-  SELECT stddev_samp(CAST(x AS DOUBLE)) AS sig FROM daily
-), r AS (
-  SELECT day, sig,
-         CAST(sum(x) OVER (ORDER BY day ROWS UNBOUNDED PRECEDING)
-              AS BIGINT) AS cum,
-         CAST(row_number() OVER (ORDER BY day) AS BIGINT) AS t
-  FROM daily CROSS JOIN sig
-), c AS (
-  SELECT day, t, CAST(cum AS DOUBLE) / t AS mean,
-         sig * sqrt((t + 1.0) / (CAST(t AS DOUBLE) * t)
-                    * ln((t + 1.0) / {_AVCI_ALPHA**2!r})) AS rad
-  FROM r
-)
-SELECT day, t, round(mean, 4) AS running_mean,
-       round(mean - rad, 4) AS lo, round(mean + rad, 4) AS hi,
-       round(2 * rad, 4) AS width
-FROM c ORDER BY day
-"""
-
-
 def q_cusum_spc(spark, sf_dir):
     """TWO-SIDED DECISION-INTERVAL CUSUM (k=0.5, h=5) on the
     standardized daily series via the running-min/max identity —
@@ -244,30 +167,3 @@ def q_cusum_spc(spark, sf_dir):
         F.round(sm, 4).alias("s_minus"),
         ((sp > _CUSUM_H) | (sm > _CUSUM_H)).alias("alarm"),
     ).orderBy("day")
-
-
-SQL_CUSUM_SPC = f"""
-WITH {_SQL_DAILY},
-m AS (
-  SELECT avg(CAST(x AS DOUBLE)) AS mu,
-         stddev_samp(CAST(x AS DOUBLE)) AS sig
-  FROM daily
-), r AS (
-  SELECT day,
-         sum((x - mu) / sig - {_CUSUM_K})
-           OVER (ORDER BY day ROWS UNBOUNDED PRECEDING) AS wp,
-         sum(-(x - mu) / sig - {_CUSUM_K})
-           OVER (ORDER BY day ROWS UNBOUNDED PRECEDING) AS wm
-  FROM daily CROSS JOIN m
-), s AS (
-  SELECT day,
-         wp - least(0.0, min(wp) OVER (ORDER BY day
-              ROWS UNBOUNDED PRECEDING)) AS sp,
-         wm - least(0.0, min(wm) OVER (ORDER BY day
-              ROWS UNBOUNDED PRECEDING)) AS sm
-  FROM r
-)
-SELECT day, round(sp, 4) AS s_plus, round(sm, 4) AS s_minus,
-       sp > {_CUSUM_H} OR sm > {_CUSUM_H} AS alarm
-FROM s ORDER BY day
-"""

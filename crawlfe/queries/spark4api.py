@@ -70,21 +70,6 @@ def q_grouped_arrow(spark, sf_dir):
     )
 
 
-SQL_GROUPED_ARROW = """
-SELECT event_type,
-       CAST(count(*) AS BIGINT) AS n,
-       CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
-         AS sum_cents,
-       CAST(min(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
-         AS min_cents,
-       CAST(max(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
-         AS max_cents,
-       round(CAST(sum(CAST(round(value * 100) AS BIGINT)) AS DOUBLE)
-             / count(*), 4) AS mean_cents
-FROM events GROUP BY event_type
-"""
-
-
 def q_df_transpose(spark, sf_dir):
     """DATAFRAME.TRANSPOSE (Spark 4.0): per-source doc and kilochar
     counts flipped so each metric is a row keyed by the former column
@@ -104,32 +89,6 @@ def q_df_transpose(spark, sf_dir):
     # first column is the metric name (named `key` by Spark)
     first = t.columns[0]
     return t.withColumnRenamed(first, "metric").orderBy("metric")
-
-
-def _transpose_oracle_sql() -> str:
-    # sources are src0..src19 in the fixtures; build the transposed
-    # layout with conditional aggregation over an unpivoted relation
-    cols = ", ".join(
-        f"CAST(max(CASE WHEN source = 'src{i}' THEN v END) AS BIGINT)"
-        f" AS src{i}"
-        for i in range(20)
-    )
-    return f"""
-WITH per AS (
-  SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-         CAST(sum(n_chars) // 1000 AS BIGINT) AS kchars
-  FROM documents GROUP BY source
-), unp AS (
-  SELECT source, 'n_docs' AS metric, n_docs AS v FROM per
-  UNION ALL
-  SELECT source, 'kchars' AS metric, kchars AS v FROM per
-)
-SELECT metric, {cols}
-FROM unp GROUP BY metric ORDER BY metric
-"""
-
-
-SQL_DF_TRANSPOSE = _transpose_oracle_sql()
 
 
 def q_set_ops_all(spark, sf_dir):
@@ -153,25 +112,3 @@ def q_set_ops_all(spark, sf_dir):
     return ex.unionAll(ia).groupBy("op", "lang", "b").agg(
         F.count(F.lit(1)).cast("bigint").alias("n")
     )
-
-
-SQL_SET_OPS_ALL = f"""
-WITH d AS (
-  SELECT doc_id, lang,
-         CAST(n_chars // {_SO_BUCKET} AS BIGINT) AS b
-  FROM documents
-), lo AS (SELECT lang, b FROM d WHERE doc_id % 2 = 0),
-hi AS (SELECT lang, b FROM d WHERE doc_id % 2 = 1),
-ex AS (
-  SELECT 'except_all' AS op, lang, b FROM (
-    SELECT lang, b FROM lo EXCEPT ALL SELECT lang, b FROM hi
-  )
-), ia AS (
-  SELECT 'intersect_all' AS op, lang, b FROM (
-    SELECT lang, b FROM lo INTERSECT ALL SELECT lang, b FROM hi
-  )
-)
-SELECT op, lang, b, CAST(count(*) AS BIGINT) AS n
-FROM (SELECT * FROM ex UNION ALL SELECT * FROM ia)
-GROUP BY op, lang, b
-"""

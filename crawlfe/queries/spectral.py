@@ -49,10 +49,6 @@ def _trig_rows():
 
 _TRIG = _trig_rows()
 
-_SQL_TRIG = "trig(p, t, cs, sn) AS (\n  VALUES " + ",\n  ".join(
-    f"({p}, {t}, {cs!r}, {sn!r})" for p, t, cs, sn in _TRIG
-) + "\n)"
-
 
 def _daily(spark, sf_dir):
     e = _t(spark, sf_dir, "events").select(
@@ -64,15 +60,6 @@ def _daily(spark, sf_dir):
     return e.groupBy("day").agg(
         F.sum("cents").cast("bigint").alias("x")
     )
-
-
-_SQL_DAILY = """
-daily AS (
-  SELECT CAST(dayofmonth(ts) AS BIGINT) AS day,
-         CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS x
-  FROM events GROUP BY 1
-)
-"""
 
 
 def _periodogram(spark, sf_dir):
@@ -136,31 +123,6 @@ def _periodogram(spark, sf_dir):
     )
 
 
-_SQL_PERIODOGRAM = f"""
-{_SQL_TRIG}, {_SQL_DAILY},
-m AS (
-  SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(x) AS BIGINT) AS sx
-  FROM daily
-), j AS (
-  SELECT trig.p, daily.day, m.n,
-         (daily.x - CAST(m.sx AS DOUBLE) / m.n) * trig.cs AS tc,
-         (daily.x - CAST(m.sx AS DOUBLE) / m.n) * trig.sn AS tsn
-  FROM daily CROSS JOIN m JOIN trig ON daily.day = trig.t
-), cums AS (
-  SELECT p, n,
-         sum(tc) OVER (PARTITION BY p ORDER BY day
-             ROWS UNBOUNDED PRECEDING) AS sc,
-         sum(tsn) OVER (PARTITION BY p ORDER BY day
-             ROWS UNBOUNDED PRECEDING) AS ss,
-         row_number() OVER (PARTITION BY p ORDER BY day DESC) AS _rd
-  FROM j
-), pg AS (
-  SELECT p, 2.0 / n * (sc * sc + ss * ss) AS power
-  FROM cums WHERE _rd = 1
-)
-"""
-
-
 def q_periodogram_peak(spark, sf_dir):
     """PERIODOGRAM at trial periods 2..14 days, reported as the
     scale-free power SHARE (raw power grows with cents^2, putting a
@@ -195,23 +157,6 @@ def q_periodogram_peak(spark, sf_dir):
         )
         .orderBy("p")
     )
-
-
-SQL_PERIODOGRAM_PEAK = f"""
-WITH {_SQL_PERIODOGRAM},
-tot AS (
-  SELECT tot FROM (
-    SELECT sum(power) OVER (ORDER BY p ROWS UNBOUNDED PRECEDING)
-             AS tot,
-           row_number() OVER (ORDER BY p DESC) AS _rd
-    FROM pg
-  ) WHERE _rd = 1
-)
-SELECT p, round(power / tot, 6) AS power_share,
-       CAST(row_number() OVER (ORDER BY power DESC, p ASC)
-            AS BIGINT) AS power_rank
-FROM pg CROSS JOIN tot ORDER BY p
-"""
 
 
 def q_ar2_yule_walker(spark, sf_dir):
@@ -278,53 +223,6 @@ def q_ar2_yule_walker(spark, sf_dir):
     )
 
 
-SQL_AR2_YULE_WALKER = f"""
-WITH {_SQL_DAILY},
-lagged AS (
-  SELECT day, x,
-         lag(x, 1) OVER (ORDER BY day) AS x1,
-         lag(x, 2) OVER (ORDER BY day) AS x2
-  FROM daily
-), m AS (
-  SELECT CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(x) AS BIGINT) AS sx,
-         CAST(sum(x * x) AS BIGINT) AS sxx,
-         CAST(sum(x * x1) AS BIGINT) AS s1,
-         CAST(sum(CASE WHEN x1 IS NOT NULL THEN x END) AS BIGINT)
-           AS a1,
-         CAST(sum(x1) AS BIGINT) AS b1,
-         CAST(count(x1) AS BIGINT) AS n1,
-         CAST(sum(x * x2) AS BIGINT) AS s2,
-         CAST(sum(CASE WHEN x2 IS NOT NULL THEN x END) AS BIGINT)
-           AS a2,
-         CAST(sum(x2) AS BIGINT) AS b2,
-         CAST(count(x2) AS BIGINT) AS n2
-  FROM lagged
-), c AS (
-  SELECT n,
-         (s1 - (CAST(sx AS DOUBLE) / n) * (a1 + b1)
-             + n1 * pow(CAST(sx AS DOUBLE) / n, 2))
-           / (sxx - n * pow(CAST(sx AS DOUBLE) / n, 2)) AS r1,
-         (s2 - (CAST(sx AS DOUBLE) / n) * (a2 + b2)
-             + n2 * pow(CAST(sx AS DOUBLE) / n, 2))
-           / (sxx - n * pow(CAST(sx AS DOUBLE) / n, 2)) AS r2
-  FROM m
-), f AS (
-  SELECT n, r1, r2,
-         r1 * (1 - r2) / (1 - r1 * r1) AS phi1,
-         (r2 - r1 * r1) / (1 - r1 * r1) AS phi2
-  FROM c
-)
-SELECT n, round(r1, 6) AS r1, round(r2, 6) AS r2,
-       round(phi1, 6) AS phi1, round(phi2, 6) AS phi2,
-       phi1 * phi1 + 4 * phi2 < 0 AS complex_roots,
-       CASE WHEN phi1 * phi1 + 4 * phi2 < 0
-            THEN round(2 * pi() / acos(phi1 / (2 * sqrt(-phi2))), 4)
-       END AS pseudo_period
-FROM f
-"""
-
-
 def q_spectral_entropy(spark, sf_dir):
     """NORMALIZED SPECTRAL ENTROPY of the periodogram mass over the
     trial periods, with the dominant-peak share."""
@@ -383,29 +281,3 @@ def q_spectral_entropy(spark, sf_dir):
         ).alias("h_norm"),
         F.round(F.col("pmax") / F.col("tot"), 6).alias("peak_share"),
     )
-
-
-SQL_SPECTRAL_ENTROPY = f"""
-WITH {_SQL_PERIODOGRAM},
-tot AS (
-  SELECT tot, pmax, k FROM (
-    SELECT sum(power) OVER (ORDER BY p ROWS UNBOUNDED PRECEDING)
-             AS tot,
-           max(power) OVER () AS pmax,
-           CAST(count(*) OVER () AS BIGINT) AS k,
-           row_number() OVER (ORDER BY p DESC) AS _rd
-    FROM pg
-  ) WHERE _rd = 1
-), ent AS (
-  SELECT k, pmax, tot, h FROM (
-    SELECT t.k, t.pmax, t.tot,
-           sum(-(pg.power / t.tot) * ln(pg.power / t.tot))
-             OVER (ORDER BY pg.p ROWS UNBOUNDED PRECEDING) AS h,
-           row_number() OVER (ORDER BY pg.p DESC) AS _rd
-    FROM pg CROSS JOIN tot t
-  ) WHERE _rd = 1
-)
-SELECT k, round(h / ln(CAST(k AS DOUBLE)), 6) AS h_norm,
-       round(pmax / tot, 6) AS peak_share
-FROM ent
-"""

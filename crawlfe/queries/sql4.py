@@ -48,14 +48,6 @@ def q_agg_listagg(spark, sf_dir):
     )
 
 
-SQL_AGG_LISTAGG = """
-SELECT lang,
-       string_agg(DISTINCT source, ',' ORDER BY source) AS sources,
-       CAST(count(*) AS BIGINT) AS n_docs
-FROM documents GROUP BY lang
-"""
-
-
 def q_collated_dedup(spark, sf_dir):
     """Case-collision audit via Spark 4 collations: keys are the
     source names upper-cased on md5-hash parity of doc_id (hash
@@ -86,22 +78,6 @@ def q_collated_dedup(spark, sf_dir):
         FROM _coll_keys GROUP BY lang
         """
     )
-
-
-SQL_COLLATED_DEDUP = """
-WITH keys AS (
-  SELECT lang,
-         CASE WHEN CAST('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 4)
-                        AS BIGINT) % 2 = 0
-              THEN upper(source) ELSE source END AS k
-  FROM documents
-)
-SELECT lang, CAST(count(DISTINCT k) AS BIGINT) AS n_keys_cs,
-       CAST(count(DISTINCT lower(k)) AS BIGINT) AS n_keys_ci,
-       CAST(count(DISTINCT k) - count(DISTINCT lower(k)) AS BIGINT)
-         AS n_collisions
-FROM keys GROUP BY lang
-"""
 
 
 def q_try_arithmetic(spark, sf_dir):
@@ -140,30 +116,6 @@ def q_try_arithmetic(spark, sf_dir):
     )
 
 
-SQL_TRY_ARITHMETIC = """
-WITH per AS (
-  SELECT user_id,
-         sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS p,
-         sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS c
-  FROM events GROUP BY user_id
-), scored AS (
-  SELECT user_id % 10 AS bucket,
-         CASE WHEN c = 0 THEN NULL
-              ELSE CAST(p AS DOUBLE) / CAST(c AS DOUBLE) END AS rate,
-         CASE WHEN user_id % 2 = 0 THEN NULL
-              ELSE 9223372036854775807 END AS big
-  FROM per
-)
-SELECT bucket, CAST(count(*) AS BIGINT) AS n_users,
-       CAST(sum(CASE WHEN rate IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_no_clicks,
-       round(avg(rate), 4) AS avg_rate,
-       CAST(sum(CASE WHEN big IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_overflow
-FROM scored GROUP BY bucket
-"""
-
-
 def q_shingle_containment(spark, sf_dir):
     """Asymmetric 3-shingle containment for consecutive doc pairs:
     c_ab = |A∩B|/|A| (how much of A is inside B), c_ba, and the max —
@@ -196,23 +148,3 @@ def q_shingle_containment(spark, sf_dir):
         c_ba.alias("c_ba"),
         F.greatest(c_ab, c_ba).alias("c_max"),
     )
-
-
-SQL_SHINGLE_CONTAINMENT = """
-WITH shingled AS (
-  SELECT doc_id,
-         list_distinct(list_transform(
-           generate_series(0, greatest(len(regexp_split_to_array(trim(text), '\\s+')) - 3, 0)),
-           i -> array_to_string(list_slice(regexp_split_to_array(trim(text), '\\s+'),
-                                           i + 1, i + 3), ' ')
-         )) AS shingles
-  FROM documents
-)
-SELECT doc_a, doc_b, c_ab, c_ba, greatest(c_ab, c_ba) AS c_max FROM (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         round(len(list_intersect(a.shingles, b.shingles))
-               / CAST(len(a.shingles) AS DOUBLE), 6) AS c_ab,
-         round(len(list_intersect(a.shingles, b.shingles))
-               / CAST(len(b.shingles) AS DOUBLE), 6) AS c_ba
-  FROM shingled a JOIN shingled b ON a.doc_id + 1 = b.doc_id)
-"""

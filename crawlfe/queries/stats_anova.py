@@ -4,18 +4,11 @@ Split from the former crawlfe/queries.py monolith (r4); bodies unchanged.
 """
 from __future__ import annotations
 
-import pandas as pd  # noqa: F401
 from pyspark.sql import DataFrame, SparkSession, Window  # noqa: F401
 from pyspark.sql import functions as F  # noqa: F401
-from pyspark.sql import types as T  # noqa: F401
 
-from .. import clean  # noqa: F401
-from .. import windows as W  # noqa: F401
-from ..asof import asof_join  # noqa: F401
-from ..textfeat import featurize_batch  # noqa: F401
 from ._shared import SESSION_GAP_S, _t, _us  # noqa: F401
 from .stats_rank import _math  # noqa: F401
-
 
 
 # --------------------------------------------------------------------------
@@ -115,47 +108,6 @@ def q_kruskal_wallis(spark, sf_dir):
     )
 
 
-SQL_KRUSKAL_WALLIS = """
-WITH base AS (
-  SELECT event_type, CAST(round(value * 100) AS BIGINT) AS cents
-  FROM events
-), vc AS (
-  SELECT cents, event_type, CAST(count(*) AS BIGINT) AS c
-  FROM base GROUP BY 1, 2
-), ct AS (
-  SELECT cents, CAST(sum(c) AS BIGINT) AS ct FROM vc GROUP BY 1
-), ranked AS (
-  SELECT cents, ct,
-         CAST(2 * (sum(ct) OVER (ORDER BY cents
-                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-              - ct) + ct + 1 AS BIGINT) AS r2
-  FROM ct
-), per AS (
-  SELECT event_type, CAST(sum(c) AS BIGINT) AS n,
-         CAST(sum(c * r2) AS BIGINT) AS r2sum
-  FROM vc JOIN ranked USING (cents) GROUP BY 1
-), ties AS (
-  SELECT sum(pow(CAST(ct AS DOUBLE), 3) - ct) AS tie3 FROM ranked
-), gl AS (
-  SELECT CAST(sum(n) AS BIGINT) AS nn,
-         sum(pow(CAST(r2sum AS DOUBLE), 2) / CAST(n AS DOUBLE)) AS s,
-         max(tie3) AS tie3
-  FROM per CROSS JOIN ties
-), h AS (
-  SELECT nn,
-         (3.0 / (CAST(nn AS DOUBLE) * (nn + 1)) * s - 3.0 * (nn + 1))
-         / (1.0 - tie3 / (pow(CAST(nn AS DOUBLE), 3) - nn)) AS h_adj
-  FROM gl
-)
-SELECT event_type, n, r2sum AS rank_sum2,
-       round(CAST(r2sum AS DOUBLE) / (2.0 * n), 6) AS mean_rank,
-       round(h_adj, 6) AS h_adj,
-       round(exp(-h_adj / 2.0) * (1.0 + h_adj / 2.0), 6)
-         AS p_chi2_df4
-FROM per CROSS JOIN h
-"""
-
-
 def q_trimmed_stats(spark, sf_dir):
     """ROBUST LOCATION family per event type: 10%-two-sided TRIMMED
     mean, WINSORIZED mean (tails clamped to the cut values, not
@@ -237,41 +189,6 @@ def q_trimmed_stats(spark, sf_dir):
     )
 
 
-SQL_TRIMMED_STATS = """
-WITH base AS (
-  SELECT event_type, event_id,
-         CAST(round(value * 100) AS BIGINT) AS cents
-  FROM events
-), r AS (
-  SELECT event_type, cents,
-         CAST(row_number() OVER (PARTITION BY event_type
-                                 ORDER BY cents, event_id)
-              AS BIGINT) AS rn,
-         CAST(count(*) OVER (PARTITION BY event_type)
-              AS BIGINT) AS n
-  FROM base
-), k AS (
-  SELECT *, n // 10 AS k FROM r
-), agg AS (
-  SELECT event_type, max(n) AS n, max(k) AS k,
-         CAST(sum(CASE WHEN rn > k AND rn <= n - k
-                       THEN cents END) AS BIGINT) AS s_mid,
-         max(CASE WHEN rn = k + 1 THEN cents END) AS lo,
-         max(CASE WHEN rn = n - k THEN cents END) AS hi,
-         max(CASE WHEN rn = (n + 3) // 4 THEN cents END) AS q1,
-         max(CASE WHEN rn = (3 * n + 1) // 4 THEN cents END) AS q3
-  FROM k GROUP BY 1
-)
-SELECT event_type, n,
-       round(CAST(s_mid AS DOUBLE) / (100.0 * (n - 2 * k)), 6)
-         AS trimmed_mean,
-       round(CAST(s_mid + k * lo + k * hi AS DOUBLE) / (100.0 * n), 6)
-         AS winsor_mean,
-       round(CAST(q1 + q3 AS DOUBLE) / 200.0, 6) AS midhinge
-FROM agg
-"""
-
-
 def q_theil_index(spark, sf_dir):
     """THEIL T inequality decomposition of document length over
     sources — the additively-decomposable inequality index
@@ -330,30 +247,6 @@ def q_theil_index(spark, sf_dir):
             6,
         ).alias("between_term"),
     )
-
-
-SQL_THEIL_INDEX = """
-WITH per AS (
-  SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-         CAST(sum(n_chars) AS BIGINT) AS s,
-         sum(CAST(n_chars AS DOUBLE)
-             * ln(CAST(n_chars AS DOUBLE))) AS sxl
-  FROM documents WHERE n_chars > 0 GROUP BY 1
-), tot AS (
-  SELECT CAST(sum(n_docs) AS BIGINT) AS tn,
-         CAST(sum(s) AS BIGINT) AS ts
-  FROM per
-)
-SELECT source, n_docs,
-       round(CAST(s AS DOUBLE) / n_docs, 6) AS mean_chars,
-       round(sxl / s - ln(CAST(s AS DOUBLE) / n_docs), 6)
-         AS theil_within,
-       round(CAST(s AS DOUBLE) / ts, 6) AS value_share,
-       round(CAST(s AS DOUBLE) / ts
-             * ln((CAST(s AS DOUBLE) / n_docs)
-                  / (CAST(ts AS DOUBLE) / tn)), 6) AS between_term
-FROM per CROSS JOIN tot
-"""
 
 
 def q_decile_lift(spark, sf_dir):
@@ -422,45 +315,6 @@ def q_decile_lift(spark, sf_dir):
             ).alias("lift"),
         )
     )
-
-
-SQL_DECILE_LIFT = """
-WITH base AS (
-  SELECT event_id, CAST(round(value * 100) AS BIGINT) AS cents,
-         CAST(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END
-              AS BIGINT) AS pos
-  FROM events WHERE event_type IN ('purchase', 'click')
-), r AS (
-  SELECT pos,
-         CAST(row_number() OVER (ORDER BY cents DESC, event_id)
-              AS BIGINT) AS rn,
-         CAST(count(*) OVER () AS BIGINT) AS n
-  FROM base
-), dec AS (
-  SELECT CAST((rn - 1) * 10 // n + 1 AS BIGINT) AS decile, pos
-  FROM r
-), per AS (
-  SELECT decile, CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(pos) AS BIGINT) AS n_pos
-  FROM dec GROUP BY 1
-), tot AS (
-  SELECT CAST(sum(n) AS BIGINT) AS tn,
-         CAST(sum(n_pos) AS BIGINT) AS tp
-  FROM per
-), cum AS (
-  SELECT decile, n, n_pos,
-         CAST(sum(n_pos) OVER (ORDER BY decile
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-              AS BIGINT) AS cum_pos
-  FROM per
-)
-SELECT decile, n, n_pos,
-       round(CAST(n_pos AS DOUBLE) / n, 6) AS pos_rate,
-       round(CAST(cum_pos AS DOUBLE) / tp, 6) AS cum_capture,
-       round((CAST(n_pos AS DOUBLE) / n)
-             / (CAST(tp AS DOUBLE) / tn), 6) AS lift
-FROM cum CROSS JOIN tot
-"""
 
 
 def q_brier_decomp(spark, sf_dir):
@@ -548,51 +402,6 @@ def q_brier_decomp(spark, sf_dir):
     )
 
 
-SQL_BRIER_DECOMP = """
-WITH base AS (
-  SELECT 1.0 / (1.0 + exp(-(value - 35.0) / 20.0)) AS p,
-         CAST(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END
-              AS BIGINT) AS o
-  FROM events WHERE event_type IN ('purchase', 'click')
-), binned AS (
-  SELECT CAST(least(floor(p * 10), 9) AS BIGINT) AS bin, p, o
-  FROM base
-), per AS (
-  SELECT bin, CAST(count(*) AS BIGINT) AS n, sum(p) AS sum_p,
-         sum(p * p) AS sum_p2, sum(p * o) AS sum_p_pos,
-         CAST(sum(o) AS BIGINT) AS n_pos
-  FROM binned GROUP BY 1
-), tot AS (
-  SELECT CAST(sum(n) AS BIGINT) AS tn,
-         CAST(sum(n_pos) AS BIGINT) AS tpos,
-         sum(sum_p2 - 2.0 * sum_p_pos + n_pos) AS brier_sum
-  FROM per
-), j AS (
-  SELECT per.*, tn, brier_sum,
-         CAST(tpos AS DOUBLE) / tn AS obar
-  FROM per CROSS JOIN tot
-), gl AS (
-  SELECT max(tn) AS tn, max(brier_sum) AS brier_sum,
-         max(obar) AS obar,
-         sum(n * pow(sum_p / n - CAST(n_pos AS DOUBLE) / n, 2))
-           AS rel_sum,
-         sum(n * pow(CAST(n_pos AS DOUBLE) / n - obar, 2)) AS res_sum
-  FROM j
-), g AS (
-  SELECT round(brier_sum / tn, 6) AS brier,
-         round(rel_sum / tn, 6) AS reliability,
-         round(res_sum / tn, 6) AS resolution,
-         round(obar * (1.0 - obar), 6) AS uncertainty
-  FROM gl
-)
-SELECT bin, n,
-       round(sum_p / n, 6) AS mean_pred,
-       round(CAST(n_pos AS DOUBLE) / n, 6) AS obs_rate,
-       brier, reliability, resolution, uncertainty
-FROM per CROSS JOIN g
-"""
-
-
 def q_perm_entropy(spark, sf_dir):
     """ORDER-3 PERMUTATION ENTROPY (Bandt-Pompe) of each user's
     value sequence, pooled corpus-wide — the ordinal-dynamics
@@ -654,43 +463,6 @@ def q_perm_entropy(spark, sf_dir):
         F.round("share", 6).alias("share"),
         "perm_entropy_norm",
     )
-
-
-SQL_PERM_ENTROPY = """
-WITH t3 AS (
-  SELECT CAST(round(value * 100) AS BIGINT) AS a,
-         lead(CAST(round(value * 100) AS BIGINT), 1) OVER w AS b,
-         lead(CAST(round(value * 100) AS BIGINT), 2) OVER w AS c
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts), event_id)
-), pat AS (
-  SELECT concat(
-           CAST((CASE WHEN a > b THEN 1 ELSE 0 END
-                 + CASE WHEN a > c THEN 1 ELSE 0 END) AS VARCHAR),
-           CAST((CASE WHEN b >= a THEN 1 ELSE 0 END
-                 + CASE WHEN b > c THEN 1 ELSE 0 END) AS VARCHAR),
-           CAST((CASE WHEN c >= a THEN 1 ELSE 0 END
-                 + CASE WHEN c >= b THEN 1 ELSE 0 END) AS VARCHAR)
-         ) AS pattern
-  FROM t3 WHERE b IS NOT NULL AND c IS NOT NULL
-), per AS (
-  SELECT pattern, CAST(count(*) AS BIGINT) AS n_triples
-  FROM pat GROUP BY 1
-), tot AS (
-  SELECT CAST(sum(n_triples) AS BIGINT) AS tt FROM per
-), shared AS (
-  SELECT pattern, n_triples,
-         CAST(n_triples AS DOUBLE) / tt AS share
-  FROM per CROSS JOIN tot
-), ent AS (
-  SELECT round(sum(-share * ln(share)) / ln(6.0), 6)
-           AS perm_entropy_norm
-  FROM shared
-)
-SELECT pattern, n_triples, round(share, 6) AS share,
-       perm_entropy_norm
-FROM shared CROSS JOIN ent
-"""
 
 
 # --------------------------------------------------------------------------
@@ -782,50 +554,6 @@ def q_cronbach_alpha(spark, sf_dir):
     )
 
 
-SQL_CRONBACH_ALPHA = """
-WITH base AS (
-  SELECT event_type, user_id,
-         CAST(round(value * 100) AS BIGINT) AS cents
-  FROM events
-), nu AS (
-  SELECT CAST(count(DISTINCT user_id) AS BIGINT) AS nu,
-         CAST(count(DISTINCT event_type) AS BIGINT) AS k
-  FROM base
-), ui AS (
-  SELECT event_type, user_id, CAST(sum(cents) AS BIGINT) AS x
-  FROM base GROUP BY 1, 2
-), item AS (
-  SELECT event_type,
-         CAST(count(*) AS BIGINT) AS n_users_present,
-         CAST(sum(x) AS BIGINT) AS s1,
-         sum(pow(CAST(x AS DOUBLE) / 100.0, 2)) AS s2
-  FROM ui GROUP BY 1
-), itemv AS (
-  SELECT event_type, n_users_present,
-         s2 / nu - pow(CAST(s1 AS DOUBLE) / 100.0 / nu, 2)
-           AS var_item
-  FROM item CROSS JOIN nu
-), tota AS (
-  SELECT CAST(sum(t) AS BIGINT) AS ts1,
-         sum(pow(CAST(t AS DOUBLE) / 100.0, 2)) AS ts2
-  FROM (SELECT user_id, CAST(sum(x) AS BIGINT) AS t
-        FROM ui GROUP BY 1)
-), gl AS (
-  SELECT round(CAST(k AS DOUBLE) / (k - 1)
-               * (1.0 - (SELECT sum(var_item) FROM itemv)
-                  / (ts2 / nu
-                     - pow(CAST(ts1 AS DOUBLE) / 100.0 / nu, 2))),
-               6) AS alpha,
-         k, nu AS n_users
-  FROM tota CROSS JOIN nu
-)
-SELECT event_type, n_users_present,
-       round(var_item, 6) AS var_item,
-       k, n_users, alpha
-FROM itemv CROSS JOIN gl
-"""
-
-
 def q_icc_design_effect(spark, sf_dir):
     """INTRACLASS CORRELATION ICC(1) of ``value`` clustered by user,
     per event type, with the survey-sampling DESIGN EFFECT
@@ -890,35 +618,6 @@ def q_icc_design_effect(spark, sf_dir):
     )
 
 
-SQL_ICC_DESIGN_EFFECT = """
-WITH pu AS (
-  SELECT event_type, user_id, CAST(count(*) AS BIGINT) AS n_u,
-         sum(value) AS s_u, sum(value * value) AS ss_u
-  FROM events GROUP BY 1, 2
-), per AS (
-  SELECT event_type, CAST(count(*) AS BIGINT) AS g,
-         CAST(sum(n_u) AS BIGINT) AS n,
-         sum(s_u) AS s, sum(ss_u) AS ss,
-         sum(s_u * s_u / n_u) AS sb,
-         CAST(sum(n_u * n_u) AS BIGINT) AS sn2
-  FROM pu GROUP BY 1
-), m AS (
-  SELECT event_type, g, n,
-         (sb - s * s / n) / (g - 1) AS msb,
-         (ss - sb) / (n - g) AS msw,
-         (n - CAST(sn2 AS DOUBLE) / n) / (g - 1) AS k0
-  FROM per
-)
-SELECT event_type, g AS n_users, n AS n_events,
-       round(msb, 6) AS msb,
-       round(msw, 6) AS msw,
-       round((msb - msw) / (msb + (k0 - 1) * msw), 6) AS icc,
-       round(1.0 + (k0 - 1)
-             * ((msb - msw) / (msb + (k0 - 1) * msw)), 6) AS deff
-FROM m
-"""
-
-
 def q_qq_exponential(spark, sf_dir):
     """Q-Q PROBE of inter-arrival gaps against the EXPONENTIAL
     distribution, per event type: 19 ventile order statistics vs the
@@ -974,43 +673,6 @@ def q_qq_exponential(spark, sf_dir):
             ).alias("qq_ratio"),
         )
     )
-
-
-SQL_QQ_EXPONENTIAL = """
-WITH gaps AS (
-  SELECT event_type, event_id,
-         epoch_us(ts) - lag(epoch_us(ts)) OVER
-           (PARTITION BY event_type
-            ORDER BY epoch_us(ts), event_id) AS gap_us
-  FROM events
-), g2 AS (
-  SELECT event_type, gap_us, event_id FROM gaps
-  WHERE gap_us IS NOT NULL
-), ranked AS (
-  SELECT event_type, gap_us,
-         CAST(row_number() OVER (PARTITION BY event_type
-                                 ORDER BY gap_us, event_id)
-              AS BIGINT) AS rn,
-         CAST(count(*) OVER (PARTITION BY event_type)
-              AS BIGINT) AS n
-  FROM g2
-), mg AS (
-  SELECT event_type, avg(CAST(gap_us AS DOUBLE)) AS mean_gap_us
-  FROM g2 GROUP BY 1
-), vent AS (
-  SELECT CAST(j AS BIGINT) AS j FROM generate_series(1, 19) t(j)
-)
-SELECT event_type, j,
-       round(j / 20.0, 6) AS p,
-       round(gap_us / 1e6, 6) AS emp_q_sec,
-       round(-ln(1.0 - j / 20.0) * mean_gap_us / 1e6, 6)
-         AS theo_q_sec,
-       round((gap_us / 1e6)
-             / (-ln(1.0 - j / 20.0) * mean_gap_us / 1e6), 6)
-         AS qq_ratio
-FROM ranked JOIN vent ON rn = (j * n + 19) // 20
-JOIN mg USING (event_type)
-"""
 
 
 def q_weibull_fit(spark, sf_dir):
@@ -1088,54 +750,6 @@ def q_weibull_fit(spark, sf_dir):
     )
 
 
-SQL_WEIBULL_FIT = """
-WITH gaps AS (
-  SELECT event_type, event_id,
-         epoch_us(ts) - lag(epoch_us(ts)) OVER
-           (PARTITION BY event_type
-            ORDER BY epoch_us(ts), event_id) AS gap_us
-  FROM events
-), g2 AS (
-  SELECT event_type, event_id, gap_us FROM gaps
-  WHERE gap_us IS NOT NULL
-), nz AS (
-  SELECT event_type,
-         CAST(sum(CASE WHEN gap_us = 0 THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_zero
-  FROM g2 GROUP BY 1
-), xy AS (
-  SELECT event_type,
-         CAST(row_number() OVER (PARTITION BY event_type
-                                 ORDER BY gap_us, event_id)
-              AS BIGINT) AS rn,
-         CAST(count(*) OVER (PARTITION BY event_type)
-              AS BIGINT) AS n,
-         ln(gap_us / 1e6) AS x
-  FROM g2 WHERE gap_us > 0
-), xy2 AS (
-  SELECT event_type, x,
-         ln(-ln(1.0 - (rn - 0.3) / (n + 0.4))) AS y
-  FROM xy
-), fit AS (
-  SELECT event_type, CAST(count(*) AS BIGINT) AS n_gaps,
-         sum(x) AS sx, sum(y) AS sy, sum(x * x) AS sxx,
-         sum(y * y) AS syy, sum(x * y) AS sxy
-  FROM xy2 GROUP BY 1
-)
-SELECT fit.event_type, n_gaps, n_zero,
-       round((n_gaps * sxy - sx * sy)
-             / (n_gaps * sxx - sx * sx), 6) AS shape_k,
-       round(exp(-((sy - (n_gaps * sxy - sx * sy)
-                    / (n_gaps * sxx - sx * sx) * sx) / n_gaps)
-                 / ((n_gaps * sxy - sx * sy)
-                    / (n_gaps * sxx - sx * sx))), 6) AS scale_sec,
-       round(pow(n_gaps * sxy - sx * sy, 2)
-             / ((n_gaps * sxx - sx * sx)
-                * (n_gaps * syy - sy * sy)), 6) AS r2
-FROM fit JOIN nz ON fit.event_type = nz.event_type
-"""
-
-
 def q_good_turing(spark, sf_dir):
     """SIMPLE GOOD-TURING head of the frequency spectrum per source:
     the unseen-mass estimate ``p0 = N1 / N_tokens`` and the
@@ -1196,40 +810,6 @@ def q_good_turing(spark, sf_dir):
             ).alias("p0_unseen"),
         )
     )
-
-
-SQL_GOOD_TURING = """
-WITH tok AS (
-  SELECT source, t.token
-  FROM documents,
-       LATERAL unnest(string_split_regex(trim(text), '\\s+'))
-         AS t(token)
-  WHERE t.token <> ''
-), st AS (
-  SELECT source, token, CAST(count(*) AS BIGINT) AS c
-  FROM tok GROUP BY 1, 2
-), spec AS (
-  SELECT source, c, CAST(count(*) AS BIGINT) AS n_r
-  FROM st GROUP BY 1, 2
-), tot AS (
-  SELECT source, CAST(sum(c) AS BIGINT) AS n_tokens,
-         CAST(sum(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n1
-  FROM st GROUP BY 1
-), head AS (
-  SELECT * FROM spec WHERE c <= 5
-), nxt AS (
-  SELECT source, c - 1 AS c, n_r AS n_r_next
-  FROM spec WHERE c >= 2
-)
-SELECT head.source, head.c AS r, head.n_r,
-       CAST(coalesce(n_r_next, 0) AS BIGINT) AS n_r_next,
-       round((head.c + 1) * CAST(coalesce(n_r_next, 0) AS DOUBLE)
-             / head.n_r, 6) AS r_star,
-       round(CAST(n1 AS DOUBLE) / n_tokens, 6) AS p0_unseen
-FROM head
-LEFT JOIN nxt ON head.source = nxt.source AND head.c = nxt.c
-JOIN tot ON head.source = tot.source
-"""
 
 
 def q_cuped_adjust(spark, sf_dir):
@@ -1323,46 +903,6 @@ def q_cuped_adjust(spark, sf_dir):
     )
 
 
-SQL_CUPED_ADJUST = """
-WITH base AS (
-  SELECT user_id, event_id, epoch_us(ts) AS us,
-         CAST(round(value * 100) AS BIGINT) AS cents
-  FROM events
-), med AS (
-  SELECT us AS med_us FROM (
-    SELECT us,
-           row_number() OVER (ORDER BY us, event_id) AS rn,
-           count(*) OVER () AS n
-    FROM base
-  ) WHERE rn = (n + 1) // 2
-), pp AS (
-  SELECT CAST(sum(CASE WHEN us <= med_us THEN cents ELSE 0 END)
-              AS DOUBLE) / 100.0 AS x,
-         CAST(sum(CASE WHEN us > med_us THEN cents ELSE 0 END)
-              AS DOUBLE) / 100.0 AS y
-  FROM base CROSS JOIN med GROUP BY user_id
-), agg AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_users,
-         sum(x) AS sx, sum(y) AS sy, sum(x * x) AS sxx,
-         sum(y * y) AS syy, sum(x * y) AS sxy
-  FROM pp
-)
-SELECT n_users,
-       round((sxy / n_users - sx / n_users * sy / n_users)
-             / (sxx / n_users - pow(sx / n_users, 2)), 6) AS theta,
-       round(syy / n_users - pow(sy / n_users, 2), 6) AS var_post,
-       round((syy / n_users - pow(sy / n_users, 2))
-             - pow(sxy / n_users - sx / n_users * sy / n_users, 2)
-               / (sxx / n_users - pow(sx / n_users, 2)), 6)
-         AS var_adj,
-       round(pow(sxy / n_users - sx / n_users * sy / n_users, 2)
-             / ((sxx / n_users - pow(sx / n_users, 2))
-                * (syy / n_users - pow(sy / n_users, 2))), 6)
-         AS var_reduction
-FROM agg
-"""
-
-
 # --------------------------------------------------------------------------
 # Feature-eng pack #42: optimal transport, wavelet energy, survival
 # comparison, blocked nonparametrics, normality, delta-method ratio CI
@@ -1436,40 +976,6 @@ def q_wasserstein_1d(spark, sf_dir):
             (F.col("n_purchase") > 0) & (F.col("n_click") > 0)
         )
     )
-
-
-SQL_WASSERSTEIN_1D = """
-WITH h AS (
-  SELECT CAST(day(ts) AS INTEGER) AS day,
-         CAST(round(value * 100) AS BIGINT) AS cents,
-         CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-              AS BIGINT) AS np,
-         CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
-              AS BIGINT) AS nc
-  FROM events WHERE event_type IN ('purchase', 'click')
-  GROUP BY 1, 2
-), grid AS (
-  SELECT day, cents,
-         CAST(sum(np) OVER (PARTITION BY day ORDER BY cents
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-              AS BIGINT) AS cum_p,
-         CAST(sum(nc) OVER (PARTITION BY day ORDER BY cents
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-              AS BIGINT) AS cum_c,
-         CAST(sum(np) OVER (PARTITION BY day) AS BIGINT) AS tot_p,
-         CAST(sum(nc) OVER (PARTITION BY day) AS BIGINT) AS tot_c,
-         lead(cents) OVER (PARTITION BY day ORDER BY cents) - cents
-           AS dx
-  FROM h
-)
-SELECT day, max(tot_p) AS n_purchase, max(tot_c) AS n_click,
-       round(sum(abs(CAST(cum_p AS DOUBLE) / tot_p
-                     - CAST(cum_c AS DOUBLE) / tot_c)
-                 * dx / 100.0), 6) AS w1_value
-FROM grid WHERE dx IS NOT NULL
-GROUP BY day
-HAVING max(tot_p) > 0 AND max(tot_c) > 0
-"""
 
 
 def q_haar_energy(spark, sf_dir):
@@ -1556,75 +1062,6 @@ def q_haar_energy(spark, sf_dir):
         F.round("energy", 6).alias("energy"),
         F.round(F.expr("energy / tot_detail"), 6).alias("energy_share"),
     )
-
-
-SQL_HAAR_ENERGY = """
-WITH span AS (
-  SELECT min(epoch_us(ts)) AS lo, max(epoch_us(ts)) AS hi FROM events
-), binned AS (
-  SELECT event_type,
-         CAST(least((epoch_us(ts) - lo) * 32 // (hi - lo + 1), 31)
-              AS BIGINT) AS b,
-         CAST(count(*) AS BIGINT) AS c
-  FROM events CROSS JOIN span GROUP BY 1, 2
-), grid AS (
-  SELECT t.event_type, CAST(g.b AS BIGINT) AS b
-  FROM (SELECT DISTINCT event_type FROM binned) t
-  CROSS JOIN generate_series(0, 31) g(b)
-), dense AS (
-  SELECT grid.event_type, grid.b,
-         CAST(coalesce(c, 0) AS BIGINT) AS s
-  FROM grid LEFT JOIN binned
-    ON grid.event_type = binned.event_type AND grid.b = binned.b
-), l1p AS (
-  SELECT event_type, b // 2 AS b, CAST(sum(s) AS BIGINT) AS s,
-         CAST(max(CASE WHEN b % 2 = 0 THEN s END)
-              - max(CASE WHEN b % 2 = 1 THEN s END) AS BIGINT) AS d
-  FROM dense GROUP BY 1, 2
-), l2p AS (
-  SELECT event_type, b // 2 AS b, CAST(sum(s) AS BIGINT) AS s,
-         CAST(max(CASE WHEN b % 2 = 0 THEN s END)
-              - max(CASE WHEN b % 2 = 1 THEN s END) AS BIGINT) AS d
-  FROM l1p GROUP BY 1, 2
-), l3p AS (
-  SELECT event_type, b // 2 AS b, CAST(sum(s) AS BIGINT) AS s,
-         CAST(max(CASE WHEN b % 2 = 0 THEN s END)
-              - max(CASE WHEN b % 2 = 1 THEN s END) AS BIGINT) AS d
-  FROM l2p GROUP BY 1, 2
-), l4p AS (
-  SELECT event_type, b // 2 AS b, CAST(sum(s) AS BIGINT) AS s,
-         CAST(max(CASE WHEN b % 2 = 0 THEN s END)
-              - max(CASE WHEN b % 2 = 1 THEN s END) AS BIGINT) AS d
-  FROM l3p GROUP BY 1, 2
-), l5p AS (
-  SELECT event_type, b // 2 AS b, CAST(sum(s) AS BIGINT) AS s,
-         CAST(max(CASE WHEN b % 2 = 0 THEN s END)
-              - max(CASE WHEN b % 2 = 1 THEN s END) AS BIGINT) AS d
-  FROM l4p GROUP BY 1, 2
-), allv AS (
-  SELECT event_type, CAST(1 AS BIGINT) AS level,
-         CAST(sum(d * d) AS DOUBLE) / 2 AS energy
-  FROM l1p GROUP BY 1
-  UNION ALL
-  SELECT event_type, 2, CAST(sum(d * d) AS DOUBLE) / 4
-  FROM l2p GROUP BY 1
-  UNION ALL
-  SELECT event_type, 3, CAST(sum(d * d) AS DOUBLE) / 8
-  FROM l3p GROUP BY 1
-  UNION ALL
-  SELECT event_type, 4, CAST(sum(d * d) AS DOUBLE) / 16
-  FROM l4p GROUP BY 1
-  UNION ALL
-  SELECT event_type, 5, CAST(sum(d * d) AS DOUBLE) / 32
-  FROM l5p GROUP BY 1
-), tot AS (
-  SELECT event_type, sum(energy) AS tot_detail FROM allv GROUP BY 1
-)
-SELECT allv.event_type, level,
-       round(energy, 6) AS energy,
-       round(energy / tot_detail, 6) AS energy_share
-FROM allv JOIN tot ON allv.event_type = tot.event_type
-"""
 
 
 def q_logrank_test(spark, sf_dir):
@@ -1736,67 +1173,6 @@ def q_logrank_test(spark, sf_dir):
     )
 
 
-SQL_LOGRANK_TEST = """
-WITH marked AS (
-  SELECT user_id, event_id, event_type, epoch_us(ts) AS us,
-         row_number() OVER (PARTITION BY user_id
-                            ORDER BY epoch_us(ts), event_id) AS rn
-  FROM events
-), first AS (
-  SELECT user_id, us AS t0,
-         CAST(user_id % 2 AS BIGINT) AS g
-  FROM marked WHERE rn = 1
-), firstbuy AS (
-  SELECT user_id, min(us) AS t_buy
-  FROM marked WHERE event_type = 'purchase' GROUP BY 1
-), lastev AS (
-  SELECT user_id, max(us) AS t_last FROM marked GROUP BY 1
-), dur AS (
-  SELECT g,
-         coalesce(t_buy - t0, t_last - t0) AS t,
-         CAST(CASE WHEN t_buy IS NOT NULL THEN 1 ELSE 0 END
-              AS BIGINT) AS ev
-  FROM first
-  JOIN lastev USING (user_id)
-  LEFT JOIN firstbuy USING (user_id)
-), bytime AS (
-  SELECT t,
-         CAST(sum(CASE WHEN g = 1 THEN ev ELSE 0 END) AS BIGINT)
-           AS d1,
-         CAST(sum(ev) AS BIGINT) AS d,
-         CAST(sum(CASE WHEN g = 1 THEN 1 ELSE 0 END) AS BIGINT)
-           AS x1,
-         CAST(count(*) AS BIGINT) AS x
-  FROM dur GROUP BY 1
-), risk AS (
-  SELECT t, d1, d,
-         CAST(sum(x1) OVER () - sum(x1) OVER (ORDER BY t
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-              + x1 AS BIGINT) AS n1,
-         CAST(sum(x) OVER () - sum(x) OVER (ORDER BY t
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-              + x AS BIGINT) AS n
-  FROM bytime
-), contrib AS (
-  SELECT * FROM risk WHERE d > 0 AND n > 1
-), agg AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_times,
-         CAST(sum(d1) AS BIGINT) AS obs1,
-         sum(CAST(d AS DOUBLE) * n1 / n) AS exp1,
-         sum(CAST(d AS DOUBLE) * n1 / n
-             * (1.0 - CAST(n1 AS DOUBLE) / n)
-             * (n - d) / (n - 1)) AS var1
-  FROM contrib
-)
-SELECT n_times, obs1,
-       round(exp1, 6) AS exp1,
-       round(var1, 6) AS var1,
-       round((obs1 - exp1) / sqrt(var1), 6) AS z,
-       round(pow(obs1 - exp1, 2) / var1, 6) AS chi2
-FROM agg
-"""
-
-
 def q_friedman_test(spark, sf_dir):
     """FRIEDMAN TEST over complete blocks: users who touched ALL
     five event types rank the types by mean spend WITHIN their own
@@ -1899,50 +1275,6 @@ def q_friedman_test(spark, sf_dir):
     )
 
 
-SQL_FRIEDMAN_TEST = """
-WITH ut AS (
-  SELECT user_id, event_type,
-         CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS s,
-         CAST(count(*) AS BIGINT) AS n
-  FROM events GROUP BY 1, 2
-), kk AS (
-  SELECT CAST(count(DISTINCT event_type) AS BIGINT) AS k FROM ut
-), complete AS (
-  SELECT user_id FROM ut GROUP BY 1
-  HAVING count(*) = (SELECT k FROM kk)
-), utc AS (
-  SELECT ut.* FROM ut JOIN complete USING (user_id)
-), r2 AS (
-  SELECT a.user_id, a.event_type,
-         CAST(2 + 2 * sum(CASE WHEN b.s * a.n < a.s * b.n
-                               THEN 1 ELSE 0 END)
-                + sum(CASE WHEN b.s * a.n = a.s * b.n
-                           AND b.event_type <> a.event_type
-                           THEN 1 ELSE 0 END) AS BIGINT) AS r2
-  FROM utc a JOIN utc b ON a.user_id = b.user_id
-  GROUP BY 1, 2
-), per AS (
-  SELECT event_type, CAST(count(*) AS BIGINT) AS n_blocks,
-         CAST(sum(r2) AS BIGINT) AS rank_sum2
-  FROM r2 GROUP BY 1
-), gl AS (
-  SELECT max(n_blocks) AS nb, CAST(count(*) AS BIGINT) AS k,
-         sum(pow(CAST(rank_sum2 AS DOUBLE), 2)) AS sr2
-  FROM per
-), qs AS (
-  SELECT nb, k,
-         3.0 / (nb * k * (k + 1)) * sr2 - 3.0 * nb * (k + 1) AS q
-  FROM gl
-)
-SELECT event_type, n_blocks, rank_sum2,
-       round(CAST(rank_sum2 AS DOUBLE) / (2.0 * n_blocks), 6)
-         AS mean_rank,
-       round(q, 6) AS q_stat,
-       round(exp(-q / 2.0) * (1.0 + q / 2.0), 6) AS p_chi2_df4
-FROM per CROSS JOIN qs
-"""
-
-
 def q_jarque_bera(spark, sf_dir):
     """JARQUE-BERA normality test of ``value`` per event type — the
     moment-based normality screen (skewness and excess kurtosis
@@ -2034,48 +1366,6 @@ def q_jarque_bera(spark, sf_dir):
     )
 
 
-SQL_JARQUE_BERA = """
-WITH mu AS (
-  SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(CAST(round(value * 100) AS BIGINT)) AS DOUBLE)
-           / (100.0 * count(*)) AS mu
-  FROM events GROUP BY 1
-), dd AS (
-  SELECT e.event_type, n,
-         CAST(floor((value - mu) * 1e4 + 0.5) AS HUGEINT) AS d
-  FROM events e JOIN mu ON e.event_type = mu.event_type
-), c AS (
-  SELECT event_type, max(n) AS n,
-         sum(d * d) AS c2,
-         sum(d * d * d) AS c3,
-         sum(d * d * d * d) AS c4
-  FROM dd GROUP BY 1
-), st AS (
-  SELECT event_type, n,
-         CAST(c2 AS DOUBLE) / n / 1e8 AS m2,
-         floor((CAST(c3 AS DOUBLE) / n / 1e12)
-               / ((CAST(c2 AS DOUBLE) / n / 1e8)
-                  * sqrt(CAST(c2 AS DOUBLE) / n / 1e8))
-               * 1e6 + 0.5) / 1e6 AS skew,
-         floor(((CAST(c4 AS DOUBLE) / n / 1e16)
-                / ((CAST(c2 AS DOUBLE) / n / 1e8)
-                   * (CAST(c2 AS DOUBLE) / n / 1e8)) - 3.0)
-               * 1e6 + 0.5) / 1e6 AS exk
-  FROM c
-)
-SELECT event_type, n,
-       skew AS skewness,
-       exk AS excess_kurtosis,
-       floor((CAST(n AS DOUBLE) / 6.0
-              * (skew * skew + exk * exk / 4.0)) * 1e6 + 0.5)
-         / 1e6 AS jb_stat,
-       floor(exp(-(CAST(n AS DOUBLE) / 6.0
-                   * (skew * skew + exk * exk / 4.0)) / 2.0)
-             * 1e6 + 0.5) / 1e6 AS p_chi2_df2
-FROM st
-"""
-
-
 def q_ratio_delta_ci(spark, sf_dir):
     """DELTA-METHOD confidence interval for the RATIO metric
     "purchase revenue per event" — sum(purchase value)/sum(events)
@@ -2130,40 +1420,6 @@ def q_ratio_delta_ci(spark, sf_dir):
         F.round(F.expr("r - 1.96 * se"), 6).alias("ci_lo"),
         F.round(F.expr("r + 1.96 * se"), 6).alias("ci_hi"),
     )
-
-
-SQL_RATIO_DELTA_CI = """
-WITH pu AS (
-  SELECT user_id,
-         CAST(sum(CASE WHEN event_type = 'purchase'
-                       THEN CAST(round(value * 100) AS BIGINT)
-                       ELSE 0 END) AS DOUBLE) / 100.0 AS y,
-         CAST(count(*) AS DOUBLE) AS m
-  FROM events GROUP BY 1
-), agg AS (
-  SELECT CAST(count(*) AS BIGINT) AS nu,
-         sum(y) AS sy, sum(m) AS sm, sum(y * y) AS syy,
-         sum(m * m) AS smm, sum(y * m) AS sym
-  FROM pu
-), c AS (
-  SELECT nu, sy / sm AS r,
-         syy / nu - (sy / nu) * (sy / nu) AS vy,
-         smm / nu - (sm / nu) * (sm / nu) AS vm,
-         sym / nu - (sy / nu) * (sm / nu) AS cym,
-         sm / nu AS mm
-  FROM agg
-), se AS (
-  SELECT nu, r,
-         sqrt((vy - 2 * r * cym + r * r * vm) / (nu * mm * mm)) AS se
-  FROM c
-)
-SELECT nu AS n_users,
-       round(r, 6) AS ratio,
-       round(se, 6) AS se_delta,
-       round(r - 1.96 * se, 6) AS ci_lo,
-       round(r + 1.96 * se, 6) AS ci_hi
-FROM se
-"""
 
 
 # --------------------------------------------------------------------------
@@ -2253,43 +1509,6 @@ def q_mann_whitney(spark, sf_dir):
     )
 
 
-SQL_MANN_WHITNEY = """
-WITH vc AS (
-  SELECT CAST(round(value * 100) AS BIGINT) AS cents,
-         CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-              AS BIGINT) AS np,
-         CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
-              AS BIGINT) AS nc
-  FROM events WHERE event_type IN ('purchase', 'click')
-  GROUP BY 1
-), ranked AS (
-  SELECT np, nc, np + nc AS t,
-         CAST(2 * (sum(np + nc) OVER (ORDER BY cents
-                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-              - (np + nc)) + (np + nc) + 1 AS BIGINT) AS r2
-  FROM vc
-), agg AS (
-  SELECT CAST(sum(np) AS BIGINT) AS n1,
-         CAST(sum(nc) AS BIGINT) AS n2,
-         CAST(sum(np * r2) AS BIGINT) AS r1sum2,
-         sum(pow(CAST(t AS DOUBLE), 3) - t) AS tie3
-  FROM ranked
-), c AS (
-  SELECT n1, n2, r1sum2 - n1 * (n1 + 1) AS u2, n1 + n2 AS nn, tie3
-  FROM agg
-)
-SELECT n1 AS n_purchase, n2 AS n_click,
-       CAST(u2 AS DOUBLE) / 2.0 AS u_stat,
-       round(CAST(u2 AS DOUBLE) / (2.0 * n1 * n2), 6) AS auc,
-       round((CAST(u2 AS DOUBLE) - CAST(n1 AS DOUBLE) * n2)
-             / (2.0 * sqrt(CAST(n1 AS DOUBLE) * n2 / 12.0
-                           * ((nn + 1) - tie3
-                              / (CAST(nn AS DOUBLE) * (nn - 1))))), 6)
-         AS z
-FROM c
-"""
-
-
 def q_cliffs_delta(spark, sf_dir):
     """CLIFF'S DELTA ordinal effect size between purchase and click
     ``value``: d = (#{x>y} - #{x<y}) / (n1*n2) — the dominance
@@ -2367,47 +1586,6 @@ def q_cliffs_delta(spark, sf_dir):
             " ELSE 'large' END"
         ).alias("magnitude"),
     )
-
-
-SQL_CLIFFS_DELTA = """
-WITH vc AS (
-  SELECT CAST(round(value * 100) AS BIGINT) AS cents,
-         CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-              AS BIGINT) AS np,
-         CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
-              AS BIGINT) AS nc
-  FROM events WHERE event_type IN ('purchase', 'click')
-  GROUP BY 1
-), cum AS (
-  SELECT np, nc,
-         CAST(sum(nc) OVER (ORDER BY cents
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - nc
-              AS BIGINT) AS c_below,
-         CAST(sum(nc) OVER ()
-              - sum(nc) OVER (ORDER BY cents
-                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-              AS BIGINT) AS c_above
-  FROM vc
-), agg AS (
-  SELECT CAST(sum(np) AS BIGINT) AS n1,
-         CAST(sum(nc) AS BIGINT) AS n2,
-         CAST(sum(np * c_below) AS BIGINT) AS n_gt,
-         CAST(sum(np * c_above) AS BIGINT) AS n_lt,
-         CAST(sum(np * nc) AS BIGINT) AS n_eq
-  FROM cum
-), c AS (
-  SELECT *, (CAST(n_gt AS DOUBLE) - n_lt)
-            / (CAST(n1 AS DOUBLE) * n2) AS delta
-  FROM agg
-)
-SELECT n1 AS n_purchase, n2 AS n_click, n_gt, n_lt, n_eq,
-       round(delta, 6) AS delta,
-       CASE WHEN abs(delta) < 0.147 THEN 'negligible'
-            WHEN abs(delta) < 0.33 THEN 'small'
-            WHEN abs(delta) < 0.474 THEN 'medium'
-            ELSE 'large' END AS magnitude
-FROM c
-"""
 
 
 def q_levene_bf(spark, sf_dir):
@@ -2496,57 +1674,6 @@ def q_levene_bf(spark, sf_dir):
         "n_total",
         "f_stat",
     )
-
-
-SQL_LEVENE_BF = """
-WITH base AS (
-  SELECT event_type, CAST(round(value * 100) AS BIGINT) AS cents
-  FROM events
-), rk AS (
-  SELECT event_type, cents,
-         row_number() OVER (PARTITION BY event_type ORDER BY cents)
-           AS rn,
-         CAST(count(*) OVER (PARTITION BY event_type) AS BIGINT) AS n
-  FROM base
-), med AS (
-  SELECT event_type,
-         CAST(sum(cents * (CASE WHEN (n + 1) // 2 = n // 2 + 1
-                           THEN 2 ELSE 1 END)) AS BIGINT) AS med2
-  FROM rk
-  WHERE rn = (n + 1) // 2 OR rn = n // 2 + 1
-  GROUP BY 1
-), z AS (
-  SELECT base.event_type,
-         CAST(abs(2 * cents - med2) AS BIGINT) AS z
-  FROM base JOIN med ON base.event_type = med.event_type
-), per AS (
-  SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(z) AS BIGINT) AS s,
-         CAST(sum(z * z) AS BIGINT) AS q
-  FROM z GROUP BY 1
-), gl AS (
-  SELECT CAST(count(*) AS BIGINT) AS k,
-         CAST(sum(n) AS BIGINT) AS nn,
-         CAST(sum(s) AS BIGINT) AS ss,
-         CAST(sum(q) AS BIGINT) AS qq,
-         sum(pow(CAST(s AS DOUBLE), 2) / n) AS sgrp
-  FROM per
-), f AS (
-  SELECT k, nn,
-         ((sgrp - pow(CAST(ss AS DOUBLE), 2) / nn) / (k - 1))
-         / ((CAST(qq AS DOUBLE) - sgrp) / (nn - k)) AS f_stat
-  FROM gl
-)
-SELECT per.event_type, per.n,
-       CAST(med.med2 AS DOUBLE) / 200.0 AS median_value,
-       round(CAST(per.s AS DOUBLE) / (200.0 * per.n), 6)
-         AS mean_absdev,
-       f.k AS k_groups, f.nn AS n_total,
-       round(f.f_stat, 6) AS f_stat
-FROM per
-JOIN med ON per.event_type = med.event_type
-CROSS JOIN f
-"""
 
 
 def q_pacf_daily(spark, sf_dir):
@@ -2649,57 +1776,6 @@ def q_pacf_daily(spark, sf_dir):
     )
 
 
-SQL_PACF_DAILY = """
-WITH days AS (
-  SELECT DISTINCT CAST(day(ts) AS INTEGER) AS day FROM events
-), idx AS (
-  SELECT day, CAST(row_number() OVER (ORDER BY day) AS BIGINT) AS i
-  FROM days
-), types AS (
-  SELECT DISTINCT event_type FROM events
-), raw AS (
-  SELECT event_type, CAST(day(ts) AS INTEGER) AS day,
-         CAST(count(*) AS BIGINT) AS c
-  FROM events GROUP BY 1, 2
-), grid AS (
-  SELECT t.event_type, i.i,
-         CAST(coalesce(r.c, 0) AS BIGINT) AS c
-  FROM types t CROSS JOIN idx i
-  LEFT JOIN raw r ON r.event_type = t.event_type AND r.day = i.day
-), tot AS (
-  SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(c) AS BIGINT) AS s
-  FROM grid GROUP BY 1
-), dev AS (
-  SELECT g.event_type, g.i, t.n,
-         CAST(t.n * g.c - t.s AS BIGINT) AS d
-  FROM grid g JOIN tot t ON g.event_type = t.event_type
-), den AS (
-  SELECT event_type, max(n) AS n,
-         CAST(sum(d * d) AS BIGINT) AS den
-  FROM dev GROUP BY 1
-), nums AS (
-  SELECT a.event_type,
-         CAST(sum(CASE WHEN b.i = a.i + 1 THEN a.d * b.d ELSE 0 END)
-              AS BIGINT) AS num1,
-         CAST(sum(CASE WHEN b.i = a.i + 2 THEN a.d * b.d ELSE 0 END)
-              AS BIGINT) AS num2
-  FROM dev a JOIN dev b ON a.event_type = b.event_type
-                       AND (b.i = a.i + 1 OR b.i = a.i + 2)
-  GROUP BY 1
-), c AS (
-  SELECT den.event_type, den.n,
-         CAST(num1 AS DOUBLE) / den AS r1,
-         CAST(num2 AS DOUBLE) / den AS r2
-  FROM den JOIN nums ON den.event_type = nums.event_type
-)
-SELECT event_type, n AS n_days,
-       round(r1, 6) AS acf1, round(r2, 6) AS acf2,
-       round((r2 - r1 * r1) / (1.0 - r1 * r1), 6) AS pacf2
-FROM c
-"""
-
-
 def q_ljung_box(spark, sf_dir):
     """LJUNG-BOX portmanteau test on each event type's daily count
     series, lags 1..5 — "is there ANY autocorrelation structure",
@@ -2800,56 +1876,6 @@ def q_ljung_box(spark, sf_dir):
         ).alias("q_cum"),
     )
     return q
-
-
-SQL_LJUNG_BOX = """
-WITH days AS (
-  SELECT DISTINCT CAST(day(ts) AS INTEGER) AS day FROM events
-), idx AS (
-  SELECT day, CAST(row_number() OVER (ORDER BY day) AS BIGINT) AS i
-  FROM days
-), types AS (
-  SELECT DISTINCT event_type FROM events
-), raw AS (
-  SELECT event_type, CAST(day(ts) AS INTEGER) AS day,
-         CAST(count(*) AS BIGINT) AS c
-  FROM events GROUP BY 1, 2
-), grid AS (
-  SELECT t.event_type, i.i,
-         CAST(coalesce(r.c, 0) AS BIGINT) AS c
-  FROM types t CROSS JOIN idx i
-  LEFT JOIN raw r ON r.event_type = t.event_type AND r.day = i.day
-), tot AS (
-  SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(c) AS BIGINT) AS s
-  FROM grid GROUP BY 1
-), dev AS (
-  SELECT g.event_type, g.i, t.n,
-         CAST(t.n * g.c - t.s AS BIGINT) AS d
-  FROM grid g JOIN tot t ON g.event_type = t.event_type
-), den AS (
-  SELECT event_type, max(n) AS n,
-         CAST(sum(d * d) AS BIGINT) AS den
-  FROM dev GROUP BY 1
-), nums AS (
-  SELECT a.event_type, CAST(b.i - a.i AS INTEGER) AS lag,
-         CAST(sum(a.d * b.d) AS BIGINT) AS num
-  FROM dev a JOIN dev b ON a.event_type = b.event_type
-                       AND b.i - a.i BETWEEN 1 AND 5
-  GROUP BY 1, 2
-), r AS (
-  SELECT den.event_type, nums.lag, den.n,
-         CAST(num AS DOUBLE) / den AS rk
-  FROM den JOIN nums ON den.event_type = nums.event_type
-)
-SELECT event_type, lag, n AS n_days, round(rk, 6) AS acf,
-       round(CAST(n AS DOUBLE) * (n + 2)
-             * sum(rk * rk / (n - lag)) OVER (
-                 PARTITION BY event_type ORDER BY lag
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-             6) AS q_cum
-FROM r
-"""
 
 
 def q_chatterjee_xi(spark, sf_dir):
@@ -2962,54 +1988,6 @@ def q_chatterjee_xi(spark, sf_dir):
     )
 
 
-SQL_CHATTERJEE_XI = """
-WITH days AS (
-  SELECT DISTINCT CAST(day(ts) AS INTEGER) AS day FROM events
-), raw AS (
-  SELECT event_type, CAST(day(ts) AS INTEGER) AS day,
-         CAST(count(*) AS BIGINT) AS c
-  FROM events
-  WHERE event_type IN ('click', 'view', 'purchase')
-  GROUP BY 1, 2
-), pairtypes AS (
-  SELECT DISTINCT event_type AS pair FROM events
-  WHERE event_type IN ('click', 'view')
-), pairs AS (
-  SELECT p.pair, d.day,
-         CAST(coalesce(x.c, 0) AS BIGINT) AS x,
-         CAST(coalesce(y.c, 0) AS BIGINT) AS y
-  FROM days d CROSS JOIN pairtypes p
-  LEFT JOIN raw x ON x.event_type = p.pair AND x.day = d.day
-  LEFT JOIN raw y ON y.event_type = 'purchase' AND y.day = d.day
-), rl AS (
-  SELECT pair, day, x, y,
-         CAST(count(*) OVER (PARTITION BY pair ORDER BY y
-              RANGE BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-              AS BIGINT) AS r,
-         CAST(count(*) OVER (PARTITION BY pair ORDER BY y DESC
-              RANGE BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-              AS BIGINT) AS l
-  FROM pairs
-), seq AS (
-  SELECT pair, r, l,
-         lead(r) OVER (PARTITION BY pair ORDER BY x, day) AS r_next
-  FROM rl
-), agg AS (
-  SELECT pair, CAST(count(*) AS BIGINT) AS n_days,
-         CAST(sum(abs(r_next - r)) AS BIGINT) AS sum_dr,
-         CAST(sum(l) AS BIGINT) AS sum_l,
-         CAST(sum(l * l) AS BIGINT) AS sum_l2
-  FROM seq GROUP BY 1
-)
-SELECT pair, n_days, sum_dr,
-       CAST(2 * (n_days * sum_l - sum_l2) AS BIGINT) AS denom,
-       round(1.0 - CAST(n_days AS DOUBLE) * sum_dr
-             / nullif(2.0 * (n_days * sum_l - sum_l2), 0.0), 6)
-         AS xi
-FROM agg
-"""
-
-
 # --------------------------------------------------------------------------
 # Feature-eng pack #44: ordered-alternative / omnibus distribution
 # comparison (Jonckheere-Terpstra, Page's L, Anderson-Darling
@@ -3109,52 +2087,6 @@ def q_mood_median(spark, sf_dir):
     )
 
 
-SQL_MOOD_MEDIAN = """
-WITH base AS (
-  SELECT event_type, CAST(round(value * 100) AS BIGINT) AS cents
-  FROM events
-), hist AS (
-  SELECT cents, CAST(count(*) AS BIGINT) AS ct FROM base GROUP BY 1
-), cum AS (
-  SELECT cents,
-         CAST(sum(ct) OVER (ORDER BY cents
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-              AS BIGINT) AS cum,
-         CAST(sum(ct) OVER () AS BIGINT) AS n
-  FROM hist
-), med AS (
-  SELECT CAST(min(CASE WHEN cum >= (n + 1) // 2 THEN cents END)
-              + min(CASE WHEN cum >= n // 2 + 1 THEN cents END)
-              AS BIGINT) AS med2
-  FROM cum
-), per AS (
-  SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(CASE WHEN 2 * cents > med2 THEN 1 ELSE 0 END)
-              AS BIGINT) AS n_above,
-         max(med2) AS med2
-  FROM base CROSS JOIN med
-  GROUP BY 1
-), gl AS (
-  SELECT CAST(sum(n) AS BIGINT) AS nn,
-         CAST(sum(n_above) AS BIGINT) AS aa
-  FROM per
-), chi AS (
-  SELECT sum(pow(CAST(n_above AS DOUBLE)
-                 - CAST(n AS DOUBLE) * aa / nn, 2)
-             / (CAST(n AS DOUBLE) * aa / nn)
-             + pow(CAST(n - n_above AS DOUBLE)
-                   - CAST(n AS DOUBLE) * (nn - aa) / nn, 2)
-             / (CAST(n AS DOUBLE) * (nn - aa) / nn)) AS chi2
-  FROM per CROSS JOIN gl
-)
-SELECT event_type, n, n_above,
-       CAST(med2 AS DOUBLE) / 200.0 AS median_value,
-       round(chi2, 6) AS chi2,
-       round(exp(-chi2 / 2.0) * (1.0 + chi2 / 2.0), 6) AS p_chi2_df4
-FROM per CROSS JOIN chi
-"""
-
-
 def q_epanechnikov_kde(spark, sf_dir):
     """EPANECHNIKOV KERNEL DENSITY of purchase ``value`` at a fixed
     11-point grid (0, 50, ..., 500; bandwidth h=50) — the smooth
@@ -3215,37 +2147,6 @@ def q_epanechnikov_kde(spark, sf_dir):
     return out
 
 
-SQL_EPANECHNIKOV_KDE = """
-WITH hist AS (
-  SELECT CAST(round(value * 100) AS BIGINT) AS cents,
-         CAST(count(*) AS BIGINT) AS ct
-  FROM events WHERE event_type = 'purchase'
-  GROUP BY 1
-), n AS (
-  SELECT CAST(sum(ct) AS BIGINT) AS n FROM hist
-), grid AS (
-  SELECT CAST(g * 50 AS BIGINT) AS grid_value
-  FROM generate_series(0, 10) t(g)
-), agg AS (
-  SELECT grid_value,
-         CAST(sum(ct) AS BIGINT) AS n_in_window,
-         CAST(sum(ct * (25000000
-              - (cents - 100 * grid_value)
-                * (cents - 100 * grid_value))) AS BIGINT) AS s
-  FROM hist JOIN grid
-    ON abs(cents - 100 * grid_value) < 5000
-  GROUP BY 1
-)
-SELECT g.grid_value,
-       CAST(coalesce(a.n_in_window, 0) AS BIGINT) AS n_in_window,
-       round(0.75 * CAST(coalesce(a.s, 0) AS DOUBLE)
-             / (CAST(n.n AS DOUBLE) * 1.25e9), 9) AS density
-FROM grid g
-LEFT JOIN agg a ON g.grid_value = a.grid_value
-CROSS JOIN n
-"""
-
-
 def q_qq_deciles(spark, sf_dir):
     """Q-Q DECILE MAPPING between purchase and click ``value`` — the
     quantile-vs-quantile table (p10..p90) an analyst reads before
@@ -3295,37 +2196,6 @@ def q_qq_deciles(spark, sf_dir):
         F.expr("CAST(vc AS DOUBLE) / 100.0").alias("click_value"),
         F.expr("CAST(vp - vc AS DOUBLE) / 100.0").alias("qq_gap"),
     )
-
-
-SQL_QQ_DECILES = """
-WITH hist AS (
-  SELECT event_type, CAST(round(value * 100) AS BIGINT) AS cents,
-         CAST(count(*) AS BIGINT) AS ct
-  FROM events WHERE event_type IN ('purchase', 'click')
-  GROUP BY 1, 2
-), cum AS (
-  SELECT event_type, cents,
-         CAST(sum(ct) OVER (PARTITION BY event_type ORDER BY cents
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-              AS BIGINT) AS cum,
-         CAST(sum(ct) OVER (PARTITION BY event_type) AS BIGINT) AS n
-  FROM hist
-), ps AS (
-  SELECT CAST(p * 10 AS INTEGER) AS p FROM generate_series(1, 9) t(p)
-), picks AS (
-  SELECT event_type, p, CAST(min(cents) AS BIGINT) AS v
-  FROM cum CROSS JOIN ps
-  WHERE cum >= (p * n + 99) // 100
-  GROUP BY 1, 2
-)
-SELECT pur.p AS p_pct,
-       CAST(pur.v AS DOUBLE) / 100.0 AS purchase_value,
-       CAST(clk.v AS DOUBLE) / 100.0 AS click_value,
-       CAST(pur.v - clk.v AS DOUBLE) / 100.0 AS qq_gap
-FROM (SELECT p, v FROM picks WHERE event_type = 'purchase') pur
-JOIN (SELECT p, v FROM picks WHERE event_type = 'click') clk
-  ON pur.p = clk.p
-"""
 
 
 def q_jonckheere_trend(spark, sf_dir):
@@ -3448,72 +2318,6 @@ def q_jonckheere_trend(spark, sf_dir):
     )
 
 
-SQL_JONCKHEERE_TREND = """
-WITH base AS (
-  SELECT CAST((day(ts) - 1) // 7 + 1 AS INTEGER) AS wk,
-         CAST(round(value * 100) AS BIGINT) AS cents
-  FROM events
-), hist AS (
-  SELECT cents, wk, CAST(count(*) AS BIGINT) AS c
-  FROM base GROUP BY 1, 2
-), dense AS (
-  SELECT g.cents, w.wk, CAST(coalesce(h.c, 0) AS BIGINT) AS c
-  FROM (SELECT DISTINCT cents FROM hist) g
-  CROSS JOIN (SELECT DISTINCT wk FROM hist) w
-  LEFT JOIN hist h ON h.cents = g.cents AND h.wk = w.wk
-), below AS (
-  SELECT cents, wk, c,
-         CAST(coalesce(sum(c) OVER (PARTITION BY wk ORDER BY cents
-              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-              AS BIGINT) AS below_w
-  FROM dense
-), two_d AS (
-  SELECT cents, wk, c,
-         CAST(coalesce(sum(below_w) OVER (PARTITION BY cents
-              ORDER BY wk
-              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-              AS BIGINT) AS lw_below,
-         CAST(coalesce(sum(c) OVER (PARTITION BY cents ORDER BY wk
-              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-              AS BIGINT) AS lw_eq
-  FROM below
-), j AS (
-  SELECT CAST(sum(c * (2 * lw_below + lw_eq)) AS BIGINT) AS j2
-  FROM two_d
-), grp AS (
-  SELECT wk, CAST(sum(c) AS BIGINT) AS n FROM hist GROUP BY 1
-), gstats AS (
-  SELECT CAST(sum(n) AS BIGINT) AS nn,
-         CAST(sum(n * n) AS BIGINT) AS sn2,
-         CAST(sum(n * (n - 1) * (2 * n + 5)) AS BIGINT) AS ga,
-         CAST(sum(n * (n - 1) * (n - 2)) AS BIGINT) AS gb,
-         CAST(sum(n * (n - 1)) AS BIGINT) AS gd,
-         CAST(count(*) AS BIGINT) AS k
-  FROM grp
-), ties AS (
-  SELECT cents, CAST(sum(c) AS BIGINT) AS t FROM hist GROUP BY 1
-), tstats AS (
-  SELECT CAST(sum(t * (t - 1) * (2 * t + 5)) AS BIGINT) AS ta,
-         CAST(sum(t * (t - 1) * (t - 2)) AS BIGINT) AS tb,
-         CAST(sum(t * (t - 1)) AS BIGINT) AS td
-  FROM ties
-), c AS (
-  SELECT j2, nn, k, (nn * nn - sn2) // 2 AS mean2,
-         (CAST(nn AS DOUBLE) * (nn - 1) * (2 * nn + 5) - ga - ta)
-           / 72.0
-         + CAST(gb AS DOUBLE) * tb
-           / (36.0 * nn * (nn - 1.0) * (nn - 2.0))
-         + CAST(gd AS DOUBLE) * td / (8.0 * nn * (nn - 1.0)) AS varj
-  FROM j CROSS JOIN gstats CROSS JOIN tstats
-)
-SELECT nn AS n_total, k AS k_weeks, j2 AS j2_stat, mean2,
-       round(varj, 6) AS var_j,
-       round((CAST(j2 AS DOUBLE) - mean2) / (2.0 * sqrt(varj)), 6)
-         AS z
-FROM c
-"""
-
-
 def q_page_trend(spark, sf_dir):
     """PAGE'S L TREND TEST over complete user blocks: for users
     active in ALL FOUR full weeks (days 1-28), rank each user's four
@@ -3602,48 +2406,6 @@ def q_page_trend(spark, sf_dir):
             6,
         ).alias("z"),
     )
-
-
-SQL_PAGE_TREND = """
-WITH uw AS (
-  SELECT user_id, CAST((day(ts) - 1) // 7 + 1 AS INTEGER) AS wk,
-         CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS s
-  FROM events WHERE day(ts) <= 28
-  GROUP BY 1, 2
-), complete AS (
-  SELECT user_id FROM uw GROUP BY 1 HAVING count(*) = 4
-), uwc AS (
-  SELECT uw.* FROM uw JOIN complete USING (user_id)
-), r2 AS (
-  SELECT a.user_id, a.wk,
-         CAST(2 + 2 * sum(CASE WHEN b.s < a.s THEN 1 ELSE 0 END)
-              + sum(CASE WHEN b.s = a.s AND b.wk <> a.wk
-                    THEN 1 ELSE 0 END) AS BIGINT) AS r2
-  FROM uwc a JOIN uwc b ON a.user_id = b.user_id
-  GROUP BY 1, 2
-), per AS (
-  SELECT wk, CAST(count(*) AS BIGINT) AS n_blocks,
-         CAST(sum(r2) AS BIGINT) AS rank_sum2
-  FROM r2 GROUP BY 1
-), gl AS (
-  SELECT max(n_blocks) AS b, CAST(count(*) AS BIGINT) AS k,
-         CAST(sum(wk * rank_sum2) AS BIGINT) AS l2
-  FROM per
-), gstat AS (
-  SELECT b, k, l2,
-         CAST(b * k * (k + 1) * (k + 1) // 2 AS BIGINT) AS mean_l2,
-         CAST(b AS DOUBLE) * k * k * (k + 1) * (k + 1) * (k - 1)
-           / 144.0 AS var_l
-  FROM gl
-)
-SELECT per.wk AS week, per.n_blocks, per.rank_sum2,
-       round(CAST(per.rank_sum2 AS DOUBLE) / (2.0 * per.n_blocks), 6)
-         AS mean_rank,
-       g.l2 AS l2_stat, g.mean_l2,
-       round((CAST(g.l2 AS DOUBLE) - g.mean_l2)
-             / (2.0 * sqrt(g.var_l)), 6) AS z
-FROM per CROSS JOIN gstat g
-"""
 
 
 def q_ad_ksample(spark, sf_dir):
@@ -3750,58 +2512,6 @@ def q_ad_ksample(spark, sf_dir):
     return out
 
 
-SQL_AD_KSAMPLE = """
-WITH hist AS (
-  SELECT event_type, CAST(round(value * 100) AS BIGINT) AS cents,
-         CAST(count(*) AS BIGINT) AS f
-  FROM events GROUP BY 1, 2
-), lj AS (
-  SELECT cents, CAST(sum(f) AS BIGINT) AS l FROM hist GROUP BY 1
-), bj AS (
-  SELECT cents, l,
-         CAST(2 * sum(l) OVER (ORDER BY cents
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - l
-              AS BIGINT) AS b2,
-         CAST(sum(l) OVER () AS BIGINT) AS nn
-  FROM lj
-), dense AS (
-  SELECT t.event_type, b.cents, b.l, b.b2, b.nn,
-         CAST(coalesce(h.f, 0) AS BIGINT) AS f
-  FROM bj b CROSS JOIN (SELECT DISTINCT event_type FROM hist) t
-  LEFT JOIN hist h ON h.event_type = t.event_type
-                  AND h.cents = b.cents
-), m AS (
-  SELECT event_type, l, b2, nn, f,
-         CAST(2 * sum(f) OVER (PARTITION BY event_type ORDER BY cents
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - f
-              AS BIGINT) AS m2
-  FROM dense
-), ni AS (
-  SELECT event_type, CAST(sum(f) AS BIGINT) AS n_i
-  FROM hist GROUP BY 1
-), terms AS (
-  SELECT m.event_type, ni.n_i, m.nn,
-         CAST(l AS DOUBLE)
-           * pow(CAST(nn AS DOUBLE) * m2
-                 - CAST(n_i AS DOUBLE) * b2, 2)
-           / (CAST(nn AS DOUBLE)
-              * (2.0 * nn * b2 - CAST(b2 AS DOUBLE) * b2
-                 - CAST(nn AS DOUBLE) * l)) AS term
-  FROM m JOIN ni ON m.event_type = ni.event_type
-  WHERE 2 * nn * b2 - b2 * b2 - nn * l > 0
-), per AS (
-  SELECT event_type, max(n_i) AS n_i, max(nn) AS nn,
-         sum(term) AS tsum
-  FROM terms GROUP BY 1
-)
-SELECT CAST(max(nn) AS BIGINT) AS n_total,
-       CAST(count(*) AS BIGINT) AS k_groups,
-       round((CAST(max(nn) AS DOUBLE) - 1) / max(nn)
-             * sum(tsum / n_i), 6) AS a2_midrank
-FROM per
-"""
-
-
 # --------------------------------------------------------------------------
 # Feature-eng pack #45: blocked binary omnibus (Cochran Q), rank
 # post-hoc (Dunn), rank scale test (Ansari-Bradley), two-sample
@@ -3872,42 +2582,6 @@ def q_cochran_q(spark, sf_dir):
             F.expr("exp(-q_stat / 2.0) * (1.0 + q_stat / 2.0)"), 6
         ).alias("p_chi2_df4"),
     )
-
-
-SQL_COCHRAN_Q = """
-WITH x AS (
-  SELECT user_id, event_type,
-         CAST(CASE WHEN count(*) >= 2 THEN 1 ELSE 0 END AS BIGINT)
-           AS x
-  FROM events GROUP BY 1, 2
-), cj AS (
-  SELECT event_type, CAST(sum(x) AS BIGINT) AS c_j
-  FROM x GROUP BY 1
-), ri AS (
-  SELECT user_id, CAST(sum(x) AS BIGINT) AS r FROM x GROUP BY 1
-), rstats AS (
-  SELECT CAST(sum(r) AS BIGINT) AS sr,
-         CAST(sum(r * r) AS BIGINT) AS sr2,
-         CAST(count(*) AS BIGINT) AS n_blocks
-  FROM ri
-), kdf AS (
-  SELECT CAST(count(*) AS BIGINT) AS k,
-         CAST(sum(c_j) AS BIGINT) AS nsum,
-         CAST(sum(c_j * c_j) AS BIGINT) AS sc2
-  FROM cj
-), qdf AS (
-  SELECT k, n_blocks,
-         (k - 1) * CAST(k * k * sc2 - nsum * nsum * k AS DOUBLE)
-           / nullif(CAST(k * (k * sr - sr2) AS DOUBLE), 0.0)
-           AS q_stat
-  FROM kdf CROSS JOIN rstats
-)
-SELECT cj.event_type, cj.c_j, q.n_blocks, q.k AS k_treatments,
-       round(q.q_stat, 6) AS q_stat,
-       round(exp(-q.q_stat / 2.0) * (1.0 + q.q_stat / 2.0), 6)
-         AS p_chi2_df4
-FROM cj CROSS JOIN qdf q
-"""
 
 
 def q_dunn_posthoc(spark, sf_dir):
@@ -3985,47 +2659,6 @@ def q_dunn_posthoc(spark, sf_dir):
             6,
         ).alias("z"),
     )
-
-
-SQL_DUNN_POSTHOC = """
-WITH base AS (
-  SELECT event_type, CAST(round(value * 100) AS BIGINT) AS cents
-  FROM events
-), vc AS (
-  SELECT cents, event_type, CAST(count(*) AS BIGINT) AS c
-  FROM base GROUP BY 1, 2
-), ct AS (
-  SELECT cents, CAST(sum(c) AS BIGINT) AS ct FROM vc GROUP BY 1
-), ranked AS (
-  SELECT cents, ct,
-         CAST(2 * (sum(ct) OVER (ORDER BY cents
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - ct)
-              + ct + 1 AS BIGINT) AS r2
-  FROM ct
-), per AS (
-  SELECT event_type, CAST(sum(c) AS BIGINT) AS n,
-         CAST(sum(c * r2) AS BIGINT) AS r2sum
-  FROM vc JOIN ranked USING (cents)
-  GROUP BY 1
-), ties AS (
-  SELECT sum(pow(CAST(ct AS DOUBLE), 3) - ct) AS tie3,
-         CAST(sum(ct) AS BIGINT) AS nn
-  FROM ranked
-)
-SELECT a.event_type AS type_a, b.event_type AS type_b,
-       a.n AS n_a, b.n AS n_b,
-       round(CAST(a.r2sum AS DOUBLE) / (2.0 * a.n), 6)
-         AS mean_rank_a,
-       round(CAST(b.r2sum AS DOUBLE) / (2.0 * b.n), 6)
-         AS mean_rank_b,
-       round((CAST(a.r2sum AS DOUBLE) / (2.0 * a.n)
-              - CAST(b.r2sum AS DOUBLE) / (2.0 * b.n))
-             / sqrt((CAST(nn AS DOUBLE) * (nn + 1) / 12.0
-                     - tie3 / (12.0 * (nn - 1)))
-                    * (1.0 / a.n + 1.0 / b.n)), 6) AS z
-FROM per a JOIN per b ON a.event_type < b.event_type
-CROSS JOIN ties
-"""
 
 
 def q_ansari_bradley(spark, sf_dir):
@@ -4117,49 +2750,6 @@ def q_ansari_bradley(spark, sf_dir):
     )
 
 
-SQL_ANSARI_BRADLEY = """
-WITH vc AS (
-  SELECT CAST(round(value * 100) AS BIGINT) AS cents,
-         CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-              AS BIGINT) AS f1,
-         CAST(count(*) AS BIGINT) AS l
-  FROM events WHERE event_type IN ('purchase', 'click')
-  GROUP BY 1
-), scored AS (
-  SELECT f1, l,
-         CAST(sum(l) OVER () AS BIGINT) AS nn,
-         least(
-           CAST(2 * (sum(l) OVER (ORDER BY cents
-                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - l)
-                + l + 1 AS BIGINT),
-           2 * (CAST(sum(l) OVER () AS BIGINT) + 1)
-             - CAST(2 * (sum(l) OVER (ORDER BY cents
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                  - l) + l + 1 AS BIGINT)) AS s2
-  FROM vc
-), agg AS (
-  SELECT max(nn) AS nn,
-         CAST(sum(f1) AS BIGINT) AS n1,
-         CAST(sum(f1 * s2) AS BIGINT) AS t2,
-         sum(CAST(l AS HUGEINT) * s2) AS ss,
-         sum(CAST(l AS HUGEINT) * s2 * s2) AS qq
-  FROM scored
-), c AS (
-  SELECT nn, n1, nn - n1 AS n2, t2,
-         CAST(n1 AS DOUBLE) * CAST(ss AS DOUBLE) / nn AS mean_t2,
-         CAST(n1 AS DOUBLE) * (nn - n1)
-           * (CAST(nn AS DOUBLE) * CAST(qq AS DOUBLE)
-              - CAST(ss AS DOUBLE) * CAST(ss AS DOUBLE))
-           / (CAST(nn AS DOUBLE) * nn * (nn - 1.0)) AS var_t2
-  FROM agg
-)
-SELECT n1 AS n_purchase, n2 AS n_click, t2 AS ab_stat2,
-       round(mean_t2, 6) AS mean2,
-       round((CAST(t2 AS DOUBLE) - mean_t2) / sqrt(var_t2), 6) AS z
-FROM c
-"""
-
-
 def q_ks_two_sample(spark, sf_dir):
     """TWO-SAMPLE KOLMOGOROV-SMIRNOV test, purchase vs click
     ``value`` — the classic EDF sup-gap (`ks_drift` monitors a
@@ -4237,45 +2827,6 @@ def q_ks_two_sample(spark, sf_dir):
     )
 
 
-SQL_KS_TWO_SAMPLE = """
-WITH vc AS (
-  SELECT CAST(round(value * 100) AS BIGINT) AS cents,
-         CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-              AS BIGINT) AS np,
-         CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
-              AS BIGINT) AS nc
-  FROM events WHERE event_type IN ('purchase', 'click')
-  GROUP BY 1
-), cum AS (
-  SELECT CAST(sum(np) OVER (ORDER BY cents
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-              AS BIGINT) AS cum1,
-         CAST(sum(nc) OVER (ORDER BY cents
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-              AS BIGINT) AS cum2,
-         CAST(sum(np) OVER () AS BIGINT) AS n1,
-         CAST(sum(nc) OVER () AS BIGINT) AS n2
-  FROM vc
-), agg AS (
-  SELECT max(n1) AS n1, max(n2) AS n2,
-         CAST(max(abs(cum1 * n2 - cum2 * n1)) AS BIGINT) AS dnum
-  FROM cum
-), c AS (
-  SELECT n1, n2, dnum,
-         CAST(dnum AS DOUBLE) / (CAST(n1 AS DOUBLE) * n2) AS d,
-         sqrt(CAST(n1 AS DOUBLE) * n2 / (n1 + n2))
-           * (CAST(dnum AS DOUBLE) / (CAST(n1 AS DOUBLE) * n2))
-           AS lam
-  FROM agg
-)
-SELECT n1 AS n_purchase, n2 AS n_click, dnum AS d_numer,
-       round(d, 6) AS d_stat, round(lam, 6) AS lambda_stat,
-       round(2.0 * (exp(-2.0 * lam * lam) - exp(-8.0 * lam * lam)
-                    + exp(-18.0 * lam * lam)), 6) AS p_asymp
-FROM c
-"""
-
-
 def q_cvm_two_sample(spark, sf_dir):
     """TWO-SAMPLE CRAMER-VON MISES test, purchase vs click
     ``value`` — the INTEGRATED EDF gap (every quantile weighs in)
@@ -4342,41 +2893,6 @@ def q_cvm_two_sample(spark, sf_dir):
             6,
         ).alias("t_stat"),
     )
-
-
-SQL_CVM_TWO_SAMPLE = """
-WITH vc AS (
-  SELECT CAST(round(value * 100) AS BIGINT) AS cents,
-         CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-              AS BIGINT) AS np,
-         CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
-              AS BIGINT) AS nc
-  FROM events WHERE event_type IN ('purchase', 'click')
-  GROUP BY 1
-), cum AS (
-  SELECT np + nc AS l,
-         CAST(sum(np) OVER (ORDER BY cents
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-              AS BIGINT) AS cum1,
-         CAST(sum(nc) OVER (ORDER BY cents
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-              AS BIGINT) AS cum2,
-         CAST(sum(np) OVER () AS BIGINT) AS n1,
-         CAST(sum(nc) OVER () AS BIGINT) AS n2
-  FROM vc
-), agg AS (
-  SELECT max(n1) AS n1, max(n2) AS n2,
-         sum(CAST(l AS HUGEINT)
-             * (cum1 * n2 - cum2 * n1)
-             * (cum1 * n2 - cum2 * n1)) AS tnum
-  FROM cum
-)
-SELECT n1 AS n_purchase, n2 AS n_click,
-       round(CAST(tnum AS DOUBLE)
-             / (pow(CAST(n1 AS DOUBLE) + n2, 2)
-                * CAST(n1 AS DOUBLE) * n2), 6) AS t_stat
-FROM agg
-"""
 
 
 def q_cohens_d(spark, sf_dir):
@@ -4446,37 +2962,3 @@ def q_cohens_d(spark, sf_dir):
         F.round("d", 6).alias("cohens_d"),
         F.round(F.expr("jf * d"), 6).alias("hedges_g"),
     )
-
-
-SQL_COHENS_D = """
-WITH per AS (
-  SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
-           AS s,
-         CAST(sum(CAST(round(value * 100) AS BIGINT)
-                  * CAST(round(value * 100) AS BIGINT)) AS BIGINT)
-           AS q
-  FROM events WHERE event_type IN ('purchase', 'click')
-  GROUP BY 1
-), st AS (
-  SELECT event_type, n,
-         CAST(s AS DOUBLE) / (100.0 * n) AS mean_v,
-         (CAST(q AS DOUBLE) - pow(CAST(s AS DOUBLE), 2) / n)
-           / ((n - 1.0) * 10000.0) AS var_v
-  FROM per
-), c AS (
-  SELECT p1.n AS n1, p2.n AS n2,
-         p1.mean_v AS m1, p2.mean_v AS m2,
-         sqrt(((p1.n - 1.0) * p1.var_v + (p2.n - 1.0) * p2.var_v)
-              / (p1.n + p2.n - 2.0)) AS sp,
-         1.0 - 3.0 / (4.0 * (p1.n + p2.n - 2) - 1.0) AS jf
-  FROM (SELECT * FROM st WHERE event_type = 'purchase') p1
-  CROSS JOIN (SELECT * FROM st WHERE event_type = 'click') p2
-)
-SELECT n1 AS n_purchase, n2 AS n_click,
-       round(m1 - m2, 6) AS mean_diff,
-       round(sp, 6) AS pooled_sd,
-       round((m1 - m2) / sp, 6) AS cohens_d,
-       round(jf * (m1 - m2) / sp, 6) AS hedges_g
-FROM c
-"""

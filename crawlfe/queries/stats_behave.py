@@ -4,18 +4,12 @@ Split from the former crawlfe/queries.py monolith (r4); bodies unchanged.
 """
 from __future__ import annotations
 
-import pandas as pd  # noqa: F401
 from pyspark.sql import DataFrame, SparkSession, Window  # noqa: F401
 from pyspark.sql import functions as F  # noqa: F401
-from pyspark.sql import types as T  # noqa: F401
 
-from .. import clean  # noqa: F401
 from .. import windows as W  # noqa: F401
-from ..asof import asof_join  # noqa: F401
-from ..textfeat import featurize_batch  # noqa: F401
 from ._shared import SESSION_GAP_S, _t, _us  # noqa: F401
 from .stats_rank import _math  # noqa: F401
-
 
 
 # -- feature-eng pack #28: behavioral-regularity features -------------------
@@ -77,30 +71,6 @@ def q_peak_rate(spark, sf_dir):
     )
 
 
-SQL_PEAK_RATE = """
-WITH per AS (
-  SELECT user_id, date_trunc('hour', ts) AS bucket,
-         CAST(count(*) AS BIGINT) AS cnt
-  FROM events GROUP BY 1, 2
-), tot AS (
-  SELECT user_id,
-         CAST(sum(cnt) AS BIGINT) AS n_events,
-         CAST(count(*) AS BIGINT) AS n_buckets
-  FROM per GROUP BY 1
-), top AS (
-  SELECT user_id, bucket AS peak_bucket, cnt AS peak_cnt
-  FROM (SELECT *, row_number() OVER (PARTITION BY user_id
-                                     ORDER BY cnt DESC, bucket) AS rk
-        FROM per) t
-  WHERE rk = 1
-)
-SELECT t.user_id, t.peak_bucket, t.peak_cnt, o.n_events, o.n_buckets,
-       round(CAST(t.peak_cnt AS DOUBLE) / CAST(o.n_events AS DOUBLE),
-             6) AS peak_share
-FROM top t JOIN tot o ON t.user_id = o.user_id
-"""
-
-
 def q_hourly_uniformity(spark, sf_dir):
     """Per-event-type chi-square test of HOUR-OF-DAY uniformity —
     'does this event type happen around the clock or on a schedule?'
@@ -150,30 +120,6 @@ def q_hourly_uniformity(spark, sf_dir):
             6,
         ).alias("chi2_stat"),
     )
-
-
-SQL_HOURLY_UNIFORMITY = """
-WITH per AS (
-  SELECT event_type, extract(hour FROM ts) AS h,
-         CAST(count(*) AS BIGINT) AS o
-  FROM events GROUP BY 1, 2
-), agg AS (
-  SELECT event_type,
-         CAST(sum(o) AS BIGINT) AS n,
-         CAST(count(*) AS BIGINT) AS h_obs
-  FROM per GROUP BY 1
-), sq AS (
-  SELECT p.event_type, a.n, a.h_obs,
-         CAST(sum((24 * p.o - a.n) * (24 * p.o - a.n)) AS BIGINT)
-           AS ss_obs
-  FROM per p JOIN agg a ON p.event_type = a.event_type
-  GROUP BY 1, 2, 3
-)
-SELECT event_type, n, h_obs,
-       round(CAST(ss_obs + (24 - h_obs) * n * n AS DOUBLE)
-             / CAST(24 * n AS DOUBLE), 6) AS chi2_stat
-FROM sq
-"""
 
 
 def q_rfm_scores(spark, sf_dir):
@@ -252,39 +198,6 @@ def q_rfm_scores(spark, sf_dir):
     )
 
 
-SQL_RFM_SCORES = f"""
-WITH per AS (
-  SELECT o_custkey,
-         max(CAST(o_orderdate AS DATE)) AS last_d,
-         CAST(count(*) AS BIGINT) AS f_cnt,
-         CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT))
-              AS BIGINT) AS m_cents
-  FROM orders GROUP BY 1
-), mx AS (
-  SELECT max(last_d) AS max_d FROM per
-), r AS (
-  SELECT p.*, CAST(date_diff('day', p.last_d, m.max_d) AS BIGINT)
-           AS r_days
-  FROM per p CROSS JOIN mx m
-)
-SELECT o_custkey, r_days, f_cnt, m_cents,
-       ntile({_RFM_Q}) OVER (ORDER BY r_days, o_custkey) AS r_score,
-       ntile({_RFM_Q}) OVER (ORDER BY f_cnt DESC, o_custkey)
-         AS f_score,
-       ntile({_RFM_Q}) OVER (ORDER BY m_cents DESC, o_custkey)
-         AS m_score,
-       CAST(ntile({_RFM_Q}) OVER (ORDER BY r_days, o_custkey)
-            AS VARCHAR)
-         || '-' ||
-       CAST(ntile({_RFM_Q}) OVER (ORDER BY f_cnt DESC, o_custkey)
-            AS VARCHAR)
-         || '-' ||
-       CAST(ntile({_RFM_Q}) OVER (ORDER BY m_cents DESC, o_custkey)
-            AS VARCHAR) AS rfm
-FROM r
-"""
-
-
 def q_zipf_two_point(spark, sf_dir):
     """Per-source Zipf rank-frequency slope from TWO points — the
     rank-1 and rank-``_ZIPF_K`` token frequencies:
@@ -330,32 +243,6 @@ def q_zipf_two_point(spark, sf_dir):
     )
 
 
-SQL_ZIPF_TWO_POINT = f"""
-WITH tok AS (
-  SELECT source,
-         unnest(regexp_split_to_array(trim(text), '\\s+')) AS token
-  FROM documents
-), tf AS (
-  SELECT source, token, CAST(count(*) AS BIGINT) AS tf
-  FROM tok WHERE token <> '' GROUP BY 1, 2
-), rk AS (
-  SELECT source, tf,
-         row_number() OVER (PARTITION BY source
-                            ORDER BY tf DESC, token) AS rk
-  FROM tf
-), piv AS (
-  SELECT source,
-         max(CASE WHEN rk = 1 THEN tf END) AS f1,
-         max(CASE WHEN rk = {_ZIPF_K} THEN tf END) AS fk
-  FROM rk WHERE rk IN (1, {_ZIPF_K}) GROUP BY 1
-)
-SELECT source, f1, fk,
-       round(ln(CAST(f1 AS DOUBLE) / CAST(fk AS DOUBLE))
-             / {_math.log(float(_ZIPF_K))!r}, 6) AS zipf_slope
-FROM piv WHERE fk IS NOT NULL
-"""
-
-
 def q_order_gap_cv(spark, sf_dir):
     """Per-customer inter-order regularity — the coefficient of
     variation of day gaps between consecutive orders: CV near 0 is a
@@ -399,30 +286,6 @@ def q_order_gap_cv(spark, sf_dir):
     )
 
 
-SQL_ORDER_GAP_CV = """
-WITH g AS (
-  SELECT o_custkey,
-         CAST(date_diff('day',
-                        lag(CAST(o_orderdate AS DATE)) OVER (
-                          PARTITION BY o_custkey
-                          ORDER BY CAST(o_orderdate AS DATE),
-                                   o_orderkey),
-                        CAST(o_orderdate AS DATE)) AS BIGINT) AS gap
-  FROM orders
-), agg AS (
-  SELECT o_custkey,
-         CAST(count(*) AS BIGINT) AS n_gaps,
-         CAST(sum(gap) AS BIGINT) AS s,
-         CAST(sum(gap * gap) AS BIGINT) AS s2
-  FROM g WHERE gap IS NOT NULL GROUP BY 1
-)
-SELECT o_custkey, n_gaps, s, s2,
-       round(sqrt(CAST(n_gaps * s2 - s * s AS DOUBLE))
-             / CAST(s AS DOUBLE), 6) AS gap_cv
-FROM agg WHERE n_gaps >= 2 AND s > 0
-"""
-
-
 def q_repeat_rate(spark, sf_dir):
     """Per-brand repeat-purchase rate — of the customers who ever
     ordered the brand, the fraction whose brand orders span >= 2
@@ -464,26 +327,6 @@ def q_repeat_rate(spark, sf_dir):
             6,
         ).alias("repeat_rate"),
     )
-
-
-SQL_REPEAT_RATE = """
-WITH per_cust AS (
-  SELECT p.p_brand, o.o_custkey,
-         CAST(count(DISTINCT o.o_orderkey) AS BIGINT) AS n_orders
-  FROM lineitem l
-  JOIN orders o ON l.l_orderkey = o.o_orderkey
-  JOIN part p ON l.l_partkey = p.p_partkey
-  GROUP BY 1, 2
-)
-SELECT p_brand,
-       CAST(count(*) AS BIGINT) AS n_cust,
-       CAST(sum(CASE WHEN n_orders >= 2 THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_repeat,
-       round(CAST(sum(CASE WHEN n_orders >= 2 THEN 1 ELSE 0 END)
-                  AS DOUBLE) / CAST(count(*) AS DOUBLE), 6)
-         AS repeat_rate
-FROM per_cust GROUP BY 1
-"""
 
 
 def q_km_hazard(spark, sf_dir):
@@ -552,49 +395,6 @@ def q_km_hazard(spark, sf_dir):
     )
 
 
-SQL_KM_HAZARD = """
-WITH rk AS (
-  SELECT o_custkey, CAST(o_orderdate AS DATE) AS d,
-         row_number() OVER (PARTITION BY o_custkey
-                            ORDER BY CAST(o_orderdate AS DATE),
-                                     o_orderkey) AS rk
-  FROM orders
-), per AS (
-  SELECT o_custkey,
-         min(CASE WHEN rk = 1 THEN d END) AS first_d,
-         min(CASE WHEN rk = 2 THEN d END) AS second_d
-  FROM rk WHERE rk <= 2 GROUP BY 1
-), mx AS (
-  SELECT max(CAST(o_orderdate AS DATE)) AS max_d FROM orders
-), dur AS (
-  SELECT CAST(CASE WHEN p.second_d IS NOT NULL
-              THEN date_diff('day', p.first_d, p.second_d)
-              ELSE date_diff('day', p.first_d, m.max_d) END
-         AS BIGINT) AS duration_days,
-         CAST(CASE WHEN p.second_d IS NOT NULL THEN 1 ELSE 0 END
-         AS BIGINT) AS event
-  FROM per p CROSS JOIN mx m
-), g AS (
-  SELECT duration_days,
-         CAST(count(*) AS BIGINT) AS n_at,
-         CAST(sum(event) AS BIGINT) AS n_event
-  FROM dur GROUP BY 1
-)
-SELECT duration_days,
-       CAST(sum(n_at) OVER (ORDER BY duration_days DESC
-                            ROWS BETWEEN UNBOUNDED PRECEDING
-                            AND CURRENT ROW) AS BIGINT) AS n_risk,
-       n_event,
-       CAST(n_at - n_event AS BIGINT) AS n_censor,
-       round(CAST(n_event AS DOUBLE)
-             / CAST(sum(n_at) OVER (ORDER BY duration_days DESC
-                                    ROWS BETWEEN UNBOUNDED PRECEDING
-                                    AND CURRENT ROW) AS DOUBLE),
-             6) AS hazard
-FROM g
-"""
-
-
 def q_basket_pairs(spark, sf_dir):
     """Market-basket BRAND co-occurrence — for every brand pair, the
     number of orders whose baskets contain both, plus the pair's
@@ -646,25 +446,6 @@ def q_basket_pairs(spark, sf_dir):
     )
 
 
-SQL_BASKET_PAIRS = """
-WITH ob AS (
-  SELECT DISTINCT l_orderkey, p_brand
-  FROM lineitem JOIN part ON l_partkey = p_partkey
-), tot AS (
-  SELECT CAST(count(DISTINCT l_orderkey) AS BIGINT) AS n_orders
-  FROM ob
-)
-SELECT a.p_brand AS brand_a, b.p_brand AS brand_b,
-       CAST(count(*) AS BIGINT) AS pair_cnt,
-       round(CAST(count(*) AS DOUBLE) / CAST(max(t.n_orders) AS DOUBLE),
-             6) AS support
-FROM ob a
-JOIN ob b ON a.l_orderkey = b.l_orderkey AND a.p_brand < b.p_brand
-CROSS JOIN tot t
-GROUP BY 1, 2
-"""
-
-
 def q_prefix_template(spark, sf_dir):
     """Per-source TEMPLATE-PREFIX share — the modal 16-char text
     prefix of each source and the fraction of its documents that
@@ -712,30 +493,6 @@ def q_prefix_template(spark, sf_dir):
             6,
         ).alias("template_share"),
     )
-
-
-SQL_PREFIX_TEMPLATE = """
-WITH per AS (
-  SELECT source, substr(text, 1, 16) AS prefix,
-         CAST(count(*) AS BIGINT) AS cnt
-  FROM documents GROUP BY 1, 2
-), tot AS (
-  SELECT source,
-         CAST(sum(cnt) AS BIGINT) AS n_docs,
-         CAST(count(*) AS BIGINT) AS n_prefixes
-  FROM per GROUP BY 1
-), modal AS (
-  SELECT source, prefix AS modal_prefix, cnt AS modal_cnt
-  FROM (SELECT *, row_number() OVER (PARTITION BY source
-                                     ORDER BY cnt DESC, prefix) AS rk
-        FROM per) t
-  WHERE rk = 1
-)
-SELECT m.source, m.modal_prefix, m.modal_cnt, o.n_docs, o.n_prefixes,
-       round(CAST(m.modal_cnt AS DOUBLE) / CAST(o.n_docs AS DOUBLE),
-             6) AS template_share
-FROM modal m JOIN tot o ON m.source = o.source
-"""
 
 
 def q_supplier_hhi(spark, sf_dir):
@@ -794,34 +551,6 @@ def q_supplier_hhi(spark, sf_dir):
     )
 
 
-SQL_SUPPLIER_HHI = """
-WITH rev AS (
-  SELECT l_suppkey,
-         CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)
-                  * (100 - CAST(round(l_discount * 100) AS BIGINT)))
-              AS BIGINT) AS r
-  FROM lineitem GROUP BY 1
-), nat AS (
-  SELECT s.s_nationkey, rev.l_suppkey, rev.r
-  FROM rev JOIN supplier s ON rev.l_suppkey = s.s_suppkey
-), tot AS (
-  SELECT s_nationkey,
-         CAST(sum(r) AS BIGINT) AS tot,
-         CAST(count(*) AS BIGINT) AS n_suppliers
-  FROM nat GROUP BY 1
-), shares AS (
-  SELECT n.s_nationkey, t.n_suppliers,
-         CAST(round(CAST(n.r AS DOUBLE) * 1e6
-                    / CAST(t.tot AS DOUBLE)) AS BIGINT) AS share_ppm
-  FROM nat n JOIN tot t ON n.s_nationkey = t.s_nationkey
-)
-SELECT s_nationkey, n_suppliers,
-       round(CAST(sum(share_ppm * share_ppm) AS DOUBLE) / 1e12,
-             6) AS hhi
-FROM shares GROUP BY 1, 2
-"""
-
-
 def q_weekend_lift(spark, sf_dir):
     """Per-event-type WEEKEND rate lift — the ratio of the weekend
     per-day event rate to the weekday per-day rate, exact-rational
@@ -861,22 +590,6 @@ def q_weekend_lift(spark, sf_dir):
             6,
         ).alias("weekend_lift"),
     )
-
-
-SQL_WEEKEND_LIFT = """
-WITH per AS (
-  SELECT event_type,
-         CAST(sum(CASE WHEN isodow(ts) >= 6 THEN 1 ELSE 0 END)
-              AS BIGINT) AS wknd_cnt,
-         CAST(sum(CASE WHEN isodow(ts) >= 6 THEN 0 ELSE 1 END)
-              AS BIGINT) AS wkdy_cnt
-  FROM events GROUP BY 1
-)
-SELECT event_type, wknd_cnt, wkdy_cnt,
-       round(CAST(5 * wknd_cnt AS DOUBLE)
-             / CAST(2 * wkdy_cnt AS DOUBLE), 6) AS weekend_lift
-FROM per WHERE wkdy_cnt > 0
-"""
 
 
 def q_discount_depth(spark, sf_dir):
@@ -927,29 +640,6 @@ def q_discount_depth(spark, sf_dir):
             6,
         ).alias("avg_discount"),
     )
-
-
-SQL_DISCOUNT_DEPTH = """
-WITH agg AS (
-  SELECT p_brand,
-         CAST(count(*) AS BIGINT) AS n_lines,
-         CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)
-                  * CAST(round(l_discount * 100) AS BIGINT))
-              AS BIGINT) AS wnum,
-         CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT))
-              AS BIGINT) AS wden,
-         CAST(sum(CAST(round(l_discount * 100) AS BIGINT))
-              AS BIGINT) AS dsum
-  FROM lineitem JOIN part ON l_partkey = p_partkey
-  GROUP BY 1
-)
-SELECT p_brand, n_lines,
-       round(CAST(wnum AS DOUBLE) / CAST(100 * wden AS DOUBLE),
-             6) AS wavg_discount,
-       round(CAST(dsum AS DOUBLE) / CAST(100 * n_lines AS DOUBLE),
-             6) AS avg_discount
-FROM agg
-"""
 
 
 def q_autocorr_lag1(spark, sf_dir):
@@ -1026,37 +716,6 @@ def q_autocorr_lag1(spark, sf_dir):
     )
 
 
-SQL_AUTOCORR_LAG1 = """
-WITH daily AS (
-  SELECT user_id,
-         CAST(date_diff('day', DATE '1970-01-01',
-                        CAST(ts AS DATE)) AS BIGINT) AS d,
-         CAST(count(*) AS BIGINT) AS c
-  FROM events GROUP BY 1, 2
-), pairs AS (
-  SELECT a.user_id, a.c AS x, b.c AS y
-  FROM daily a JOIN daily b
-    ON a.user_id = b.user_id AND b.d = a.d + 1
-), m AS (
-  SELECT user_id,
-         CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(x) AS BIGINT) AS sx,
-         CAST(sum(y) AS BIGINT) AS sy,
-         CAST(sum(x * y) AS BIGINT) AS sxy,
-         CAST(sum(x * x) AS BIGINT) AS sxx,
-         CAST(sum(y * y) AS BIGINT) AS syy
-  FROM pairs GROUP BY 1
-)
-SELECT user_id, n,
-       round(CAST(n * sxy - sx * sy AS DOUBLE)
-             / sqrt(CAST(n * sxx - sx * sx AS DOUBLE)
-                    * CAST(n * syy - sy * sy AS DOUBLE)),
-             6) AS acf1
-FROM m
-WHERE n >= 2 AND n * sxx - sx * sx > 0 AND n * syy - sy * sy > 0
-"""
-
-
 def q_cramers_v(spark, sf_dir):
     """Cramér's V association between document LANGUAGE and SOURCE —
     'do sources specialize by language?' — the normalized chi-square
@@ -1124,44 +783,6 @@ def q_cramers_v(spark, sf_dir):
     )
 
 
-SQL_CRAMERS_V = """
-WITH cell AS (
-  SELECT lang, source, CAST(count(*) AS BIGINT) AS o
-  FROM documents GROUP BY 1, 2
-), rows_m AS (
-  SELECT lang, CAST(sum(o) AS BIGINT) AS r FROM cell GROUP BY 1
-), cols_m AS (
-  SELECT source, CAST(sum(o) AS BIGINT) AS c FROM cell GROUP BY 1
-), tot AS (
-  SELECT CAST(sum(o) AS BIGINT) AS n,
-         CAST(count(DISTINCT lang) AS BIGINT) AS n_langs,
-         CAST(count(DISTINCT source) AS BIGINT) AS n_sources
-  FROM cell
-), j AS (
-  SELECT t.n, t.n_langs, t.n_sources, cell.o, rm.r, cm.c
-  FROM cell
-  JOIN rows_m rm ON cell.lang = rm.lang
-  JOIN cols_m cm ON cell.source = cm.source
-  CROSS JOIN tot t
-), agg AS (
-  SELECT n, n_langs, n_sources,
-         CAST(sum(CAST(round(1e6 * (CAST(n AS DOUBLE)
-                                    * CAST(o AS DOUBLE)
-                                    * CAST(o AS DOUBLE))
-                             / (CAST(r AS DOUBLE)
-                                * CAST(c AS DOUBLE))) AS BIGINT))
-              - 1000000 * n AS BIGINT) AS chi2_ppm
-  FROM j GROUP BY 1, 2, 3
-)
-SELECT n AS n_docs, n_langs, n_sources,
-       round(CAST(chi2_ppm AS DOUBLE) / 1e6, 6) AS chi2,
-       round(sqrt((CAST(chi2_ppm AS DOUBLE) / 1e6)
-                  / CAST(n * least(n_langs - 1, n_sources - 1)
-                         AS DOUBLE)), 6) AS cramers_v
-FROM agg
-"""
-
-
 def q_activity_drawdown(spark, sf_dir):
     """Per-user ACTIVITY DRAWDOWN — the largest peak-to-trough drop
     in the daily event-count series (running max of counts minus the
@@ -1211,30 +832,6 @@ def q_activity_drawdown(spark, sf_dir):
             6,
         ).alias("drawdown_ratio"),
     )
-
-
-SQL_ACTIVITY_DRAWDOWN = """
-WITH daily AS (
-  SELECT user_id,
-         CAST(date_diff('day', DATE '1970-01-01',
-                        CAST(ts AS DATE)) AS BIGINT) AS d,
-         CAST(count(*) AS BIGINT) AS c
-  FROM events GROUP BY 1, 2
-), dd AS (
-  SELECT user_id, c,
-         CAST(max(c) OVER (PARTITION BY user_id ORDER BY d
-                           ROWS BETWEEN UNBOUNDED PRECEDING
-                           AND CURRENT ROW) AS BIGINT) AS runmax
-  FROM daily
-)
-SELECT user_id,
-       CAST(count(*) AS BIGINT) AS n_days,
-       CAST(max(c) AS BIGINT) AS peak_cnt,
-       CAST(max(runmax - c) AS BIGINT) AS max_drawdown,
-       round(CAST(max(runmax - c) AS DOUBLE)
-             / CAST(max(c) AS DOUBLE), 6) AS drawdown_ratio
-FROM dd GROUP BY 1
-"""
 
 
 def q_max_concurrency(spark, sf_dir):
@@ -1288,47 +885,6 @@ def q_max_concurrency(spark, sf_dir):
             F.count(F.lit(1)).cast("bigint").alias("n_boundaries"),
         )
     )
-
-
-SQL_MAX_CONCURRENCY = f"""
-WITH flagged AS (
-  SELECT user_id, ts,
-         CASE WHEN epoch_us(ts) - lag(epoch_us(ts))
-                   OVER (PARTITION BY user_id ORDER BY ts)
-                   > {SESSION_GAP_S} * 1000000
-              OR lag(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
-         THEN 1 ELSE 0 END AS new_sess
-  FROM events
-), sess AS (
-  SELECT user_id, ts,
-         CAST(sum(new_sess) OVER (PARTITION BY user_id ORDER BY ts
-                                  ROWS BETWEEN UNBOUNDED PRECEDING
-                                  AND CURRENT ROW) - 1 AS BIGINT)
-           AS session_id
-  FROM flagged
-), bounds AS (
-  SELECT user_id, session_id,
-         epoch_us(min(ts)) AS s_us, epoch_us(max(ts)) AS e_us
-  FROM sess GROUP BY 1, 2
-), bd AS (
-  SELECT s_us AS us, CAST(1 AS BIGINT) AS delta, user_id, session_id
-  FROM bounds
-  UNION ALL
-  SELECT e_us AS us, CAST(-1 AS BIGINT) AS delta, user_id, session_id
-  FROM bounds
-), run AS (
-  SELECT us,
-         CAST(sum(delta) OVER (ORDER BY us, delta DESC, user_id,
-                               session_id
-                               ROWS BETWEEN UNBOUNDED PRECEDING
-                               AND CURRENT ROW) AS BIGINT) AS conc
-  FROM bd
-)
-SELECT CAST(us // 86400000000 AS BIGINT) AS epoch_day,
-       CAST(max(conc) AS BIGINT) AS max_concurrent,
-       CAST(count(*) AS BIGINT) AS n_boundaries
-FROM run GROUP BY 1
-"""
 
 
 def q_theil_sen(spark, sf_dir):
@@ -1390,37 +946,6 @@ def q_theil_sen(spark, sf_dir):
     )
 
 
-SQL_THEIL_SEN = """
-WITH pts AS (
-  SELECT o_custkey, o_orderkey,
-         CAST(date_diff('day', DATE '1970-01-01',
-                        CAST(o_orderdate AS DATE)) AS BIGINT) AS x,
-         CAST(round(o_totalprice * 100) AS BIGINT) AS y
-  FROM orders
-), slopes AS (
-  SELECT a.o_custkey,
-         CAST(b.y - a.y AS DOUBLE) / CAST(b.x - a.x AS DOUBLE)
-           AS slope
-  FROM pts a JOIN pts b
-    ON a.o_custkey = b.o_custkey AND a.x < b.x
-), ranked AS (
-  SELECT o_custkey, slope,
-         row_number() OVER (PARTITION BY o_custkey
-                            ORDER BY slope) AS rk,
-         CAST(count(*) OVER (PARTITION BY o_custkey) AS BIGINT)
-           AS n_slopes
-  FROM slopes
-), n_ord AS (
-  SELECT o_custkey, CAST(count(*) AS BIGINT) AS n_orders
-  FROM orders GROUP BY 1
-)
-SELECT r.o_custkey, n.n_orders, r.n_slopes,
-       round(r.slope, 6) AS ts_slope
-FROM ranked r JOIN n_ord n ON r.o_custkey = n.o_custkey
-WHERE r.rk = (r.n_slopes + 1) // 2
-"""
-
-
 def q_dow_seasonal(spark, sf_dir):
     """Per-event-type DAY-OF-WEEK seasonal profile, long-form — each
     weekday's event count, its share, and its seasonal index
@@ -1455,24 +980,6 @@ def q_dow_seasonal(spark, sf_dir):
             6,
         ).alias("dow_index"),
     )
-
-
-SQL_DOW_SEASONAL = """
-WITH per AS (
-  SELECT event_type, CAST(isodow(ts) - 1 AS BIGINT) AS dow,
-         CAST(count(*) AS BIGINT) AS cnt
-  FROM events GROUP BY 1, 2
-), tot AS (
-  SELECT event_type, CAST(sum(cnt) AS BIGINT) AS total
-  FROM per GROUP BY 1
-)
-SELECT p.event_type, p.dow, p.cnt,
-       round(CAST(p.cnt AS DOUBLE) / CAST(t.total AS DOUBLE),
-             6) AS share,
-       round(CAST(7 * p.cnt AS DOUBLE) / CAST(t.total AS DOUBLE),
-             6) AS dow_index
-FROM per p JOIN tot t ON p.event_type = t.event_type
-"""
 
 
 def q_mann_kendall(spark, sf_dir):
@@ -1563,42 +1070,6 @@ def q_mann_kendall(spark, sf_dir):
     )
 
 
-SQL_MANN_KENDALL = """
-WITH pts AS (
-  SELECT o_custkey, o_orderkey,
-         CAST(date_diff('day', DATE '1970-01-01',
-                        CAST(o_orderdate AS DATE)) AS BIGINT) AS x,
-         CAST(round(o_totalprice * 100) AS BIGINT) AS y
-  FROM orders
-), s AS (
-  SELECT a.o_custkey,
-         CAST(sum(sign(b.y - a.y)) AS BIGINT) AS s_stat
-  FROM pts a JOIN pts b
-    ON a.o_custkey = b.o_custkey
-   AND (a.x < b.x OR (a.x = b.x AND a.o_orderkey < b.o_orderkey))
-  GROUP BY 1
-), ties AS (
-  SELECT o_custkey,
-         CAST(sum(t * (t - 1) * (2 * t + 5)) AS BIGINT) AS tie_corr,
-         CAST(sum(t) AS BIGINT) AS n
-  FROM (SELECT o_custkey, y, CAST(count(*) AS BIGINT) AS t
-        FROM pts GROUP BY 1, 2) g
-  GROUP BY 1
-), m AS (
-  SELECT s.o_custkey, t.n, s.s_stat,
-         CAST(t.n * (t.n - 1) * (2 * t.n + 5) - t.tie_corr
-              AS BIGINT) AS var18
-  FROM s JOIN ties t ON s.o_custkey = t.o_custkey
-)
-SELECT o_custkey, n, s_stat, var18,
-       round(CAST(CASE WHEN s_stat > 0 THEN s_stat - 1
-                       WHEN s_stat < 0 THEN s_stat + 1
-                       ELSE 0 END AS DOUBLE)
-             / sqrt(CAST(var18 AS DOUBLE) / 18.0), 6) AS mk_z
-FROM m WHERE n >= 3 AND var18 > 0
-"""
-
-
 def q_l_moments(spark, sf_dir):
     """Per-customer L-MOMENTS of order value — L-location, L-scale,
     and the L-skewness ratio t3 — the order-statistics moments that
@@ -1659,40 +1130,6 @@ def q_l_moments(spark, sf_dir):
             6,
         ).alias("t3"),
     )
-
-
-SQL_L_MOMENTS = """
-WITH pts AS (
-  SELECT o_custkey,
-         CAST(round(o_totalprice * 100) AS BIGINT) AS y
-  FROM orders
-), r AS (
-  SELECT o_custkey, y,
-         CAST(row_number() OVER (PARTITION BY o_custkey ORDER BY y)
-              AS BIGINT) AS i
-  FROM pts
-), m AS (
-  SELECT o_custkey,
-         CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(y) AS BIGINT) AS b0,
-         CAST(sum((i - 1) * y) AS BIGINT) AS b1,
-         CAST(sum((i - 1) * (i - 2) * y) AS BIGINT) AS b2
-  FROM r GROUP BY 1
-), k AS (
-  SELECT o_custkey, n, b0,
-         CAST(2 * b1 - (n - 1) * b0 AS BIGINT) AS n2,
-         CAST(6 * b2 - 6 * (n - 2) * b1
-              + (n - 1) * (n - 2) * b0 AS BIGINT) AS n3
-  FROM m
-)
-SELECT o_custkey, n,
-       round(CAST(b0 AS DOUBLE) / CAST(n AS DOUBLE), 6) AS l1_cents,
-       round(CAST(n2 AS DOUBLE) / CAST(n * (n - 1) AS DOUBLE),
-             6) AS l2_cents,
-       round(CAST(n3 AS DOUBLE) / CAST((n - 2) * n2 AS DOUBLE),
-             6) AS t3
-FROM k WHERE n >= 3 AND n2 > 0
-"""
 
 
 def q_runs_test(spark, sf_dir):
@@ -1784,55 +1221,6 @@ def q_runs_test(spark, sf_dir):
     )
 
 
-SQL_RUNS_TEST = """
-WITH daily AS (
-  SELECT user_id,
-         CAST(date_diff('day', DATE '1970-01-01',
-                        CAST(ts AS DATE)) AS BIGINT) AS d,
-         CAST(count(*) AS BIGINT) AS c
-  FROM events GROUP BY 1, 2
-), med AS (
-  SELECT user_id, c AS med
-  FROM (SELECT user_id, c,
-               row_number() OVER (PARTITION BY user_id
-                                  ORDER BY c, d) AS rk,
-               count(*) OVER (PARTITION BY user_id) AS nn
-        FROM daily) t
-  WHERE rk = (nn + 1) // 2
-), cls AS (
-  SELECT daily.user_id, daily.d,
-         CAST(daily.c > med.med AS BIGINT) AS up
-  FROM daily JOIN med ON daily.user_id = med.user_id
-  WHERE daily.c <> med.med
-), runs AS (
-  SELECT user_id, up,
-         CASE WHEN lag(up) OVER (PARTITION BY user_id ORDER BY d)
-                   IS DISTINCT FROM up
-              THEN 1 ELSE 0 END AS new_run
-  FROM cls
-), m AS (
-  SELECT user_id,
-         CAST(sum(up) AS BIGINT) AS n1,
-         CAST(sum(1 - up) AS BIGINT) AS n2,
-         CAST(sum(new_run) AS BIGINT) AS n_runs
-  FROM runs GROUP BY 1
-)
-SELECT user_id, n1, n2, n_runs,
-       round((CAST(n_runs AS DOUBLE)
-              - (1.0 + CAST(2 * n1 * n2 AS DOUBLE)
-                       / CAST(n1 + n2 AS DOUBLE)))
-             / sqrt(CAST(2 * n1 * n2 AS DOUBLE)
-                    * (CAST(2 * n1 * n2 AS DOUBLE)
-                       - CAST(n1 + n2 AS DOUBLE))
-                    / (CAST(n1 + n2 AS DOUBLE)
-                       * CAST(n1 + n2 AS DOUBLE)
-                       * (CAST(n1 + n2 AS DOUBLE) - 1.0))),
-             6) AS runs_z
-FROM m
-WHERE n1 > 0 AND n2 > 0 AND n1 + n2 >= 3
-"""
-
-
 _HILL_K = 32
 
 
@@ -1890,36 +1278,6 @@ def q_hill_tail(spark, sf_dir):
         F.round(hill, 6).alias("hill"),
         F.round(F.lit(1.0) / hill, 6).alias("tail_alpha"),
     )
-
-
-SQL_HILL_TAIL = f"""
-WITH top AS (
-  SELECT source, CAST(n_chars AS BIGINT) AS x,
-         row_number() OVER (PARTITION BY source
-                            ORDER BY n_chars DESC, doc_id) AS rk
-  FROM documents
-), thr AS (
-  SELECT source, x AS x_thresh FROM top WHERE rk = {_HILL_K + 1}
-), terms AS (
-  SELECT top.source, thr.x_thresh,
-         CAST(round(1e6 * ln(CAST(top.x AS DOUBLE)
-                             / CAST(thr.x_thresh AS DOUBLE)))
-              AS BIGINT) AS term_ppm
-  FROM top JOIN thr ON top.source = thr.source
-  WHERE top.rk <= {_HILL_K} AND thr.x_thresh > 0
-), agg AS (
-  SELECT source, x_thresh,
-         CAST(sum(term_ppm) AS BIGINT) AS sum_ppm,
-         CAST(count(*) AS BIGINT) AS k
-  FROM terms GROUP BY 1, 2
-)
-SELECT source, k, x_thresh,
-       round(CAST(sum_ppm AS DOUBLE) / (CAST(k AS DOUBLE) * 1e6),
-             6) AS hill,
-       round(1.0 / (CAST(sum_ppm AS DOUBLE)
-                    / (CAST(k AS DOUBLE) * 1e6)), 6) AS tail_alpha
-FROM agg WHERE k = {_HILL_K} AND sum_ppm > 0
-"""
 
 
 def q_dow_anova(spark, sf_dir):
@@ -2007,60 +1365,6 @@ def q_dow_anova(spark, sf_dir):
     )
 
 
-SQL_DOW_ANOVA = """
-WITH daily AS (
-  SELECT event_type,
-         CAST(date_diff('day', DATE '1970-01-01',
-                        CAST(ts AS DATE)) AS BIGINT) AS d,
-         CAST(count(*) AS BIGINT) AS c
-  FROM events GROUP BY 1, 2
-), dd AS (
-  SELECT event_type, c, CAST((d + 3) % 7 AS BIGINT) AS dow
-  FROM daily
-), grp AS (
-  SELECT event_type, dow,
-         CAST(sum(c) AS BIGINT) AS sg,
-         CAST(count(*) AS BIGINT) AS ng
-  FROM dd GROUP BY 1, 2
-), gterm AS (
-  SELECT event_type,
-         CAST(sum(CAST(round(1e6 * (CAST(sg AS DOUBLE)
-                                    * CAST(sg AS DOUBLE))
-                             / CAST(ng AS DOUBLE)) AS BIGINT))
-              AS BIGINT) AS sum_g_ppm,
-         CAST(count(*) AS BIGINT) AS k_dows,
-         CAST(sum(ng) AS BIGINT) AS n_days
-  FROM grp GROUP BY 1
-), tot AS (
-  SELECT event_type,
-         CAST(sum(c) AS BIGINT) AS s,
-         CAST(sum(c * c) AS BIGINT) AS s2
-  FROM dd GROUP BY 1
-), m AS (
-  SELECT g.event_type, g.n_days, g.k_dows,
-         CAST(g.sum_g_ppm
-              - CAST(round(1e6 * (CAST(t.s AS DOUBLE)
-                                  * CAST(t.s AS DOUBLE))
-                           / CAST(g.n_days AS DOUBLE)) AS BIGINT)
-              AS BIGINT) AS ssb_ppm,
-         CAST(1000000 * t.s2
-              - CAST(round(1e6 * (CAST(t.s AS DOUBLE)
-                                  * CAST(t.s AS DOUBLE))
-                           / CAST(g.n_days AS DOUBLE)) AS BIGINT)
-              AS BIGINT) AS sst_ppm
-  FROM gterm g JOIN tot t ON g.event_type = t.event_type
-)
-SELECT event_type, n_days, k_dows,
-       round(CAST(ssb_ppm AS DOUBLE) / CAST(sst_ppm AS DOUBLE),
-             6) AS eta2,
-       round((CAST(ssb_ppm AS DOUBLE) / CAST(k_dows - 1 AS DOUBLE))
-             / (CAST(sst_ppm - ssb_ppm AS DOUBLE)
-                / CAST(n_days - k_dows AS DOUBLE)), 6) AS f_stat
-FROM m
-WHERE k_dows >= 2 AND sst_ppm > ssb_ppm AND n_days > k_dows
-"""
-
-
 def q_fano_factor(spark, sf_dir):
     """Per-event-type FANO FACTOR (index of dispersion) of daily
     counts — sample variance over mean, 1.0 for a Poisson process,
@@ -2107,29 +1411,6 @@ def q_fano_factor(spark, sf_dir):
             6,
         ).alias("fano"),
     )
-
-
-SQL_FANO_FACTOR = """
-WITH daily AS (
-  SELECT event_type,
-         CAST(date_diff('day', DATE '1970-01-01',
-                        CAST(ts AS DATE)) AS BIGINT) AS d,
-         CAST(count(*) AS BIGINT) AS c
-  FROM events GROUP BY 1, 2
-), m AS (
-  SELECT event_type,
-         CAST(count(*) AS BIGINT) AS n_days,
-         CAST(sum(c) AS BIGINT) AS s,
-         CAST(sum(c * c) AS BIGINT) AS s2
-  FROM daily GROUP BY 1
-)
-SELECT event_type, n_days, s,
-       round(CAST(s AS DOUBLE) / CAST(n_days AS DOUBLE),
-             6) AS mean_daily,
-       round(CAST(n_days * s2 - s * s AS DOUBLE)
-             / CAST((n_days - 1) * s AS DOUBLE), 6) AS fano
-FROM m WHERE n_days >= 2
-"""
 
 
 def q_jsd_drift(spark, sf_dir):
@@ -2203,55 +1484,3 @@ def q_jsd_drift(spark, sf_dir):
     return per.where(F.col("n_r") > 0).select(
         "source", "n_s", F.round(jsd, 6).alias("jsd")
     )
-
-
-SQL_JSD_DRIFT = """
-WITH tok AS (
-  SELECT source, t.token
-  FROM documents,
-       LATERAL unnest(string_split_regex(trim(text), '\\s+'))
-         AS t(token)
-  WHERE t.token <> ''
-), st AS (
-  SELECT source, token, CAST(count(*) AS BIGINT) AS c_s
-  FROM tok GROUP BY 1, 2
-), tot AS (
-  SELECT token, CAST(count(*) AS BIGINT) AS c_all
-  FROM tok GROUP BY 1
-), ns AS (
-  SELECT source, CAST(sum(c_s) AS BIGINT) AS n_s FROM st GROUP BY 1
-), na AS (
-  SELECT CAST(sum(c_all) AS BIGINT) AS n_all FROM tot
-), j AS (
-  SELECT st.source, ns.n_s, na.n_all - ns.n_s AS n_r,
-         st.c_s, tot.c_all - st.c_s AS c_r
-  FROM st
-  JOIN tot ON st.token = tot.token
-  JOIN ns ON st.source = ns.source
-  CROSS JOIN na
-), per AS (
-  SELECT source, n_s, n_r,
-         CAST(sum(CAST(round(1e9 * (
-             (CAST(c_s AS DOUBLE) / CAST(n_s AS DOUBLE))
-             * ln((CAST(c_s AS DOUBLE) / CAST(n_s AS DOUBLE))
-                  / ((CAST(c_s AS DOUBLE) / CAST(n_s AS DOUBLE)
-                      + CAST(c_r AS DOUBLE) / CAST(n_r AS DOUBLE))
-                     / 2))
-             + CASE WHEN c_r > 0 THEN
-                 (CAST(c_r AS DOUBLE) / CAST(n_r AS DOUBLE))
-                 * ln((CAST(c_r AS DOUBLE) / CAST(n_r AS DOUBLE))
-                      / ((CAST(c_s AS DOUBLE) / CAST(n_s AS DOUBLE)
-                          + CAST(c_r AS DOUBLE)
-                            / CAST(n_r AS DOUBLE)) / 2))
-               ELSE 0.0 END
-           )) AS BIGINT)) AS BIGINT) AS sum_ppb,
-         CAST(sum(c_r) AS BIGINT) AS cr_seen
-  FROM j GROUP BY 1, 2, 3
-)
-SELECT source, n_s,
-       round((CAST(sum_ppb AS DOUBLE) / 1e9
-              + 0.6931471805599453
-                * CAST(n_r - cr_seen AS DOUBLE)
-                / CAST(n_r AS DOUBLE)) / 2.0, 6) AS jsd
-FROM per WHERE n_r > 0
-"""

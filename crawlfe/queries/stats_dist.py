@@ -4,17 +4,11 @@ Split from the former crawlfe/queries.py monolith (r4); bodies unchanged.
 """
 from __future__ import annotations
 
-import pandas as pd  # noqa: F401
 from pyspark.sql import DataFrame, SparkSession, Window  # noqa: F401
 from pyspark.sql import functions as F  # noqa: F401
-from pyspark.sql import types as T  # noqa: F401
 
-from .. import clean  # noqa: F401
 from .. import windows as W  # noqa: F401
-from ..asof import asof_join  # noqa: F401
-from ..textfeat import featurize_batch  # noqa: F401
 from ._shared import SESSION_GAP_S, _t, _us  # noqa: F401
-
 
 
 _EULER_GAMMA = 0.5772156649015329
@@ -76,39 +70,6 @@ def q_block_maxima(spark, sf_dir):
         ),
         F.round(scale, 6).alias("gumbel_scale"),
     )
-
-
-SQL_BLOCK_MAXIMA = """
-WITH daily AS (
-  SELECT event_type,
-         CAST(date_diff('day', DATE '1970-01-01',
-                        CAST(ts AS DATE)) AS BIGINT) AS d,
-         CAST(count(*) AS BIGINT) AS c
-  FROM events GROUP BY 1, 2
-), blocks AS (
-  SELECT event_type, CAST(d // 30 AS BIGINT) AS blk,
-         CAST(max(c) AS BIGINT) AS m
-  FROM daily GROUP BY 1, 2
-), agg AS (
-  SELECT event_type,
-         CAST(count(*) AS BIGINT) AS n_blocks,
-         CAST(max(m) AS BIGINT) AS max_daily,
-         CAST(sum(m) AS BIGINT) AS s,
-         CAST(sum(m * m) AS BIGINT) AS s2
-  FROM blocks GROUP BY 1
-)
-SELECT event_type, n_blocks, max_daily,
-       round(CAST(s AS DOUBLE) / CAST(n_blocks AS DOUBLE)
-             - 0.5772156649015329
-               * (sqrt(6.0 * (CAST(n_blocks * s2 - s * s AS DOUBLE)
-                              / CAST(n_blocks * (n_blocks - 1)
-                                     AS DOUBLE)))
-                  / 3.141592653589793), 6) AS gumbel_loc,
-       round(sqrt(6.0 * (CAST(n_blocks * s2 - s * s AS DOUBLE)
-                         / CAST(n_blocks * (n_blocks - 1) AS DOUBLE)))
-             / 3.141592653589793, 6) AS gumbel_scale
-FROM agg WHERE n_blocks >= 3 AND n_blocks * s2 - s * s > 0
-"""
 
 
 _LOGODDS_ALPHA = 0.5
@@ -183,55 +144,6 @@ def q_log_odds_terms(spark, sf_dir):
     )
 
 
-SQL_LOG_ODDS_TERMS = f"""
-WITH tok AS (
-  SELECT source, t.token
-  FROM documents,
-       LATERAL unnest(string_split_regex(trim(text), '\\s+'))
-         AS t(token)
-  WHERE t.token <> ''
-), st AS (
-  SELECT source, token, CAST(count(*) AS BIGINT) AS y_s
-  FROM tok GROUP BY 1, 2
-), tot AS (
-  SELECT token, CAST(count(*) AS BIGINT) AS c_all
-  FROM tok GROUP BY 1
-), ns AS (
-  SELECT source, CAST(sum(y_s) AS BIGINT) AS n_s FROM st GROUP BY 1
-), g AS (
-  SELECT CAST(sum(c_all) AS BIGINT) AS n_all,
-         CAST(count(*) AS BIGINT) AS v
-  FROM tot
-), z AS (
-  SELECT st.source, st.token, st.y_s,
-         (ln((CAST(st.y_s AS DOUBLE) + {_LOGODDS_ALPHA})
-             / (CAST(ns.n_s AS DOUBLE)
-                + CAST(g.v AS DOUBLE) * {_LOGODDS_ALPHA}
-                - (CAST(st.y_s AS DOUBLE) + {_LOGODDS_ALPHA})))
-          - ln((CAST(tot.c_all - st.y_s AS DOUBLE) + {_LOGODDS_ALPHA})
-               / (CAST(g.n_all - ns.n_s AS DOUBLE)
-                  + CAST(g.v AS DOUBLE) * {_LOGODDS_ALPHA}
-                  - (CAST(tot.c_all - st.y_s AS DOUBLE)
-                     + {_LOGODDS_ALPHA}))))
-         / sqrt(1.0 / (CAST(st.y_s AS DOUBLE) + {_LOGODDS_ALPHA})
-                + 1.0 / (CAST(tot.c_all - st.y_s AS DOUBLE)
-                         + {_LOGODDS_ALPHA})) AS zv
-  FROM st
-  JOIN tot ON st.token = tot.token
-  JOIN ns ON st.source = ns.source
-  CROSS JOIN g
-), ranked AS (
-  SELECT source, token, y_s, zv,
-         row_number() OVER (PARTITION BY source
-                            ORDER BY zv DESC, token) AS rk
-  FROM z
-)
-SELECT source, CAST(rk AS BIGINT) AS rk, token, y_s,
-       round(zv, 6) AS z_logodds
-FROM ranked WHERE rk <= {_LOGODDS_TOPK}
-"""
-
-
 def q_pareto_front(spark, sf_dir):
     """Per-source PARETO FRONT (skyline) of documents on
     (n_chars, distinct-token vocabulary) — the docs no other doc in
@@ -272,25 +184,6 @@ def q_pareto_front(spark, sf_dir):
         F.col("best_longer").isNull()
         | (F.col("vocab") > F.col("best_longer"))
     ).select("source", "doc_id", "n_chars", "vocab")
-
-
-SQL_PARETO_FRONT = """
-WITH base AS (
-  SELECT source, doc_id, CAST(n_chars AS BIGINT) AS n_chars,
-         CAST(length(list_distinct(list_filter(
-                string_split_regex(trim(text), '\\s+'),
-                x -> x <> ''))) AS BIGINT) AS vocab
-  FROM documents
-), sky AS (
-  SELECT source, doc_id, n_chars, vocab,
-         max(vocab) OVER (PARTITION BY source ORDER BY n_chars DESC
-                          RANGE BETWEEN UNBOUNDED PRECEDING
-                          AND 1 PRECEDING) AS best_longer
-  FROM base
-)
-SELECT source, doc_id, n_chars, vocab
-FROM sky WHERE best_longer IS NULL OR vocab > best_longer
-"""
 
 
 _SAX_DAYS = 32
@@ -372,59 +265,6 @@ def q_sax_words(spark, sf_dir):
     )
 
 
-SQL_SAX_WORDS = f"""
-WITH daily AS (
-  SELECT user_id,
-         CAST(date_diff('day', DATE '1970-01-01',
-                        CAST(ts AS DATE)) AS BIGINT) AS d,
-         CAST(count(*) AS BIGINT) AS c
-  FROM events GROUP BY 1, 2
-), head AS (
-  SELECT user_id, d, c
-  FROM (SELECT user_id, d, c,
-               row_number() OVER (PARTITION BY user_id ORDER BY d)
-                 AS rk
-        FROM daily) t
-  WHERE rk <= {_SAX_DAYS}
-), m AS (
-  SELECT user_id,
-         CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(c) AS BIGINT) AS s,
-         CAST(sum(c * c) AS BIGINT) AS s2
-  FROM head GROUP BY 1
-), mm AS (
-  SELECT user_id, n, s, s2,
-         CAST(n * s2 - s * s AS BIGINT) AS varn
-  FROM m
-  WHERE n >= 4 AND n * s2 - s * s > 0
-), lettered AS (
-  SELECT h.user_id, mm.n, h.d,
-         CASE
-           WHEN (CAST(h.c AS DOUBLE)
-                 - CAST(mm.s AS DOUBLE) / CAST(mm.n AS DOUBLE))
-                / sqrt(CAST(mm.varn AS DOUBLE)
-                       / CAST(mm.n * (mm.n - 1) AS DOUBLE))
-                < -{_SAX_BP} THEN 'a'
-           WHEN (CAST(h.c AS DOUBLE)
-                 - CAST(mm.s AS DOUBLE) / CAST(mm.n AS DOUBLE))
-                / sqrt(CAST(mm.varn AS DOUBLE)
-                       / CAST(mm.n * (mm.n - 1) AS DOUBLE))
-                < 0.0 THEN 'b'
-           WHEN (CAST(h.c AS DOUBLE)
-                 - CAST(mm.s AS DOUBLE) / CAST(mm.n AS DOUBLE))
-                / sqrt(CAST(mm.varn AS DOUBLE)
-                       / CAST(mm.n * (mm.n - 1) AS DOUBLE))
-                < {_SAX_BP} THEN 'c'
-           ELSE 'd'
-         END AS letter
-  FROM head h JOIN mm ON h.user_id = mm.user_id
-)
-SELECT user_id, n AS n_days,
-       string_agg(letter, '' ORDER BY d) AS sax_word
-FROM lettered GROUP BY 1, 2
-"""
-
-
 def q_transition_entropy(spark, sf_dir):
     """Per-user CONDITIONAL ENTROPY of event-type transitions —
     H(next | prev) over the user's chronologically ordered event
@@ -471,36 +311,6 @@ def q_transition_entropy(spark, sf_dir):
             6,
         ).alias("h_cond"),
     )
-
-
-SQL_TRANSITION_ENTROPY = """
-WITH bg AS (
-  SELECT user_id, prev, event_type AS nxt,
-         CAST(count(*) AS BIGINT) AS n_pn
-  FROM (SELECT user_id, event_type,
-               lag(event_type) OVER (PARTITION BY user_id
-                                     ORDER BY ts, event_id) AS prev
-        FROM events) t
-  WHERE prev IS NOT NULL
-  GROUP BY 1, 2, 3
-), np AS (
-  SELECT user_id, prev, CAST(sum(n_pn) AS BIGINT) AS n_p
-  FROM bg GROUP BY 1, 2
-), terms AS (
-  SELECT bg.user_id, bg.n_pn,
-         CAST(round(1e6 * CAST(bg.n_pn AS DOUBLE)
-                    * ln(CAST(np.n_p AS DOUBLE)
-                         / CAST(bg.n_pn AS DOUBLE))) AS BIGINT)
-           AS term_ppm
-  FROM bg JOIN np
-    ON bg.user_id = np.user_id AND bg.prev = np.prev
-)
-SELECT user_id,
-       CAST(sum(n_pn) AS BIGINT) AS n_trans,
-       round(CAST(sum(term_ppm) AS DOUBLE)
-             / (1e6 * CAST(sum(n_pn) AS DOUBLE)), 6) AS h_cond
-FROM terms GROUP BY 1
-"""
 
 
 def q_time_weighted_avg(spark, sf_dir):
@@ -554,28 +364,6 @@ def q_time_weighted_avg(spark, sf_dir):
     )
 
 
-SQL_TIME_WEIGHTED_AVG = """
-WITH iv AS (
-  SELECT user_id,
-         CAST(round(value * 100) AS BIGINT) AS cents,
-         (lead(epoch_us(ts)) OVER (PARTITION BY user_id
-                                   ORDER BY epoch_us(ts), event_id)
-          - epoch_us(ts)) // 1000 AS w_ms
-  FROM events
-), agg AS (
-  SELECT user_id,
-         CAST(count(*) AS BIGINT) AS n_intervals,
-         CAST(sum(cents * w_ms) AS BIGINT) AS num,
-         CAST(sum(w_ms) AS BIGINT) AS den
-  FROM iv WHERE w_ms IS NOT NULL GROUP BY 1
-)
-SELECT user_id, n_intervals,
-       round(CAST(num AS DOUBLE) / CAST(den AS DOUBLE), 6)
-         AS twa_cents
-FROM agg WHERE den > 0
-"""
-
-
 def q_ohlc_bars(spark, sf_dir):
     """Per-(user, day) OHLC RESAMPLING of event values — open/high/
     low/close in exact cents plus the bar's event count: the
@@ -620,32 +408,6 @@ def q_ohlc_bars(spark, sf_dir):
     )
 
 
-SQL_OHLC_BARS = """
-WITH base AS (
-  SELECT user_id,
-         CAST(date_diff('day', DATE '1970-01-01',
-                        CAST(ts AS DATE)) AS BIGINT) AS d,
-         ts, event_id,
-         CAST(round(value * 100) AS BIGINT) AS cents
-  FROM events
-), r AS (
-  SELECT user_id, d, cents,
-         row_number() OVER (PARTITION BY user_id, d
-                            ORDER BY ts, event_id) AS rka,
-         row_number() OVER (PARTITION BY user_id, d
-                            ORDER BY ts DESC, event_id DESC) AS rkd
-  FROM base
-)
-SELECT user_id, d,
-       CAST(max(CASE WHEN rka = 1 THEN cents END) AS BIGINT) AS open,
-       CAST(max(cents) AS BIGINT) AS high,
-       CAST(min(cents) AS BIGINT) AS low,
-       CAST(max(CASE WHEN rkd = 1 THEN cents END) AS BIGINT) AS close,
-       CAST(count(*) AS BIGINT) AS n_events
-FROM r GROUP BY 1, 2
-"""
-
-
 def q_win_percentile_dist(spark, sf_dir):
     """percent_rank + cume_dist distribution windows over event
     value within each event type — the remaining two SQL-standard
@@ -670,21 +432,6 @@ def q_win_percentile_dist(spark, sf_dir):
         F.round(F.percent_rank().over(w), 6).alias("pct_rank"),
         F.round(F.cume_dist().over(w), 6).alias("cume"),
     )
-
-
-SQL_WIN_PERCENTILE_DIST = """
-SELECT event_id, event_type,
-       CAST(round(value * 100) AS BIGINT) AS cents,
-       round(percent_rank() OVER (PARTITION BY event_type
-                                  ORDER BY CAST(round(value * 100)
-                                                AS BIGINT)),
-             6) AS pct_rank,
-       round(cume_dist() OVER (PARTITION BY event_type
-                               ORDER BY CAST(round(value * 100)
-                                             AS BIGINT)),
-             6) AS cume
-FROM events
-"""
 
 
 def q_interp_linear(spark, sf_dir):
@@ -761,51 +508,6 @@ def q_interp_linear(spark, sf_dir):
     )
 
 
-SQL_INTERP_LINEAR = """
-WITH daily AS (
-  SELECT user_id,
-         CAST(date_diff('day', DATE '1970-01-01',
-                        CAST(ts AS DATE)) AS BIGINT) AS d,
-         CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS v
-  FROM events GROUP BY 1, 2
-), span AS (
-  SELECT user_id, min(d) AS d0, max(d) AS d1 FROM daily GROUP BY 1
-), grid AS (
-  SELECT user_id, unnest(generate_series(d0, d1)) AS d FROM span
-), g AS (
-  SELECT grid.user_id, grid.d, daily.v
-  FROM grid LEFT JOIN daily
-    ON grid.user_id = daily.user_id AND grid.d = daily.d
-), b AS (
-  SELECT user_id, d, v,
-         last_value(v IGNORE NULLS) OVER (
-           PARTITION BY user_id ORDER BY d
-           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS pv,
-         last_value(CASE WHEN v IS NOT NULL THEN d END IGNORE NULLS)
-           OVER (PARTITION BY user_id ORDER BY d
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-           AS pd,
-         first_value(v IGNORE NULLS) OVER (
-           PARTITION BY user_id ORDER BY d
-           ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS nv,
-         first_value(CASE WHEN v IS NOT NULL THEN d END IGNORE NULLS)
-           OVER (PARTITION BY user_id ORDER BY d
-                 ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)
-           AS nd
-  FROM g
-)
-SELECT user_id, d,
-       round(CASE WHEN v IS NOT NULL THEN CAST(v AS DOUBLE)
-                  ELSE CAST(pv AS DOUBLE)
-                       + CAST(nv - pv AS DOUBLE)
-                         * CAST(d - pd AS DOUBLE)
-                         / CAST(nd - pd AS DOUBLE)
-             END, 6) AS value_cents,
-       v IS NOT NULL AS is_observed
-FROM b WHERE pv IS NOT NULL AND nv IS NOT NULL
-"""
-
-
 def q_streak_lengths(spark, sf_dir):
     """Per-user ACTIVITY STREAKS — longest run of consecutive active
     days, the number of distinct streaks, and the final streak's
@@ -844,32 +546,6 @@ def q_streak_lengths(spark, sf_dir):
         F.max_by("len", "end_d").cast("bigint").alias("last_streak"),
         F.sum("len").cast("bigint").alias("active_days"),
     )
-
-
-SQL_STREAK_LENGTHS = """
-WITH days AS (
-  SELECT DISTINCT user_id,
-         CAST(date_diff('day', DATE '1970-01-01',
-                        CAST(ts AS DATE)) AS BIGINT) AS d
-  FROM events
-), isl AS (
-  SELECT user_id, d,
-         d - row_number() OVER (PARTITION BY user_id ORDER BY d)
-           AS grp
-  FROM days
-), streaks AS (
-  SELECT user_id, grp,
-         CAST(count(*) AS BIGINT) AS len,
-         CAST(max(d) AS BIGINT) AS end_d
-  FROM isl GROUP BY 1, 2
-)
-SELECT user_id,
-       CAST(count(*) AS BIGINT) AS n_streaks,
-       CAST(max(len) AS BIGINT) AS longest,
-       CAST(arg_max(len, end_d) AS BIGINT) AS last_streak,
-       CAST(sum(len) AS BIGINT) AS active_days
-FROM streaks GROUP BY 1
-"""
 
 
 _PATH_LEN = 4
@@ -921,45 +597,6 @@ def q_session_paths(spark, sf_dir):
             ).alias("share"),
         )
     )
-
-
-SQL_SESSION_PATHS = f"""
-WITH flagged AS (
-  SELECT user_id, ts, event_id, event_type,
-         CASE WHEN epoch_us(ts) - lag(epoch_us(ts))
-                   OVER (PARTITION BY user_id ORDER BY ts, event_id)
-                   > {SESSION_GAP_S} * 1000000
-              OR lag(ts) OVER (PARTITION BY user_id
-                               ORDER BY ts, event_id) IS NULL
-         THEN 1 ELSE 0 END AS new_sess
-  FROM events
-), sess AS (
-  SELECT user_id, ts, event_id, event_type,
-         CAST(sum(new_sess) OVER (PARTITION BY user_id
-                                  ORDER BY ts, event_id
-                                  ROWS BETWEEN UNBOUNDED PRECEDING
-                                  AND CURRENT ROW) - 1 AS BIGINT)
-           AS session_id
-  FROM flagged
-), ranked AS (
-  SELECT user_id, session_id, event_type,
-         row_number() OVER (PARTITION BY user_id, session_id
-                            ORDER BY ts, event_id) AS rk
-  FROM sess
-), per AS (
-  SELECT user_id, session_id,
-         string_agg(event_type, '>' ORDER BY rk) AS path
-  FROM ranked WHERE rk <= {_PATH_LEN}
-  GROUP BY 1, 2
-), tot AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_total FROM per
-)
-SELECT path, CAST(count(*) AS BIGINT) AS n_sessions,
-       round(CAST(count(*) AS DOUBLE) / CAST(max(t.n_total) AS DOUBLE),
-             6) AS share
-FROM per CROSS JOIN tot t
-GROUP BY 1
-"""
 
 
 def q_type_corr_matrix(spark, sf_dir):
@@ -1040,38 +677,6 @@ def q_type_corr_matrix(spark, sf_dir):
     )
 
 
-SQL_TYPE_CORR_MATRIX = """
-WITH daily AS (
-  SELECT event_type,
-         CAST(date_diff('day', DATE '1970-01-01',
-                        CAST(ts AS DATE)) AS BIGINT) AS d,
-         CAST(count(*) AS BIGINT) AS c
-  FROM events GROUP BY 1, 2
-), pairs AS (
-  SELECT a.event_type AS type_a, b.event_type AS type_b,
-         a.c AS x, b.c AS y
-  FROM daily a JOIN daily b
-    ON a.d = b.d AND a.event_type < b.event_type
-), m AS (
-  SELECT type_a, type_b,
-         CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(x) AS BIGINT) AS sx,
-         CAST(sum(y) AS BIGINT) AS sy,
-         CAST(sum(x * y) AS BIGINT) AS sxy,
-         CAST(sum(x * x) AS BIGINT) AS sxx,
-         CAST(sum(y * y) AS BIGINT) AS syy
-  FROM pairs GROUP BY 1, 2
-)
-SELECT type_a, type_b, n AS n_days,
-       round(CAST(n * sxy - sx * sy AS DOUBLE)
-             / sqrt(CAST(n * sxx - sx * sx AS DOUBLE)
-                    * CAST(n * syy - sy * sy AS DOUBLE)),
-             6) AS corr
-FROM m
-WHERE n >= 2 AND n * sxx - sx * sx > 0 AND n * syy - sy * sy > 0
-"""
-
-
 def q_semi_additive(spark, sf_dir):
     """MONTH-END BALANCE rollup — the SEMI-ADDITIVE measure pattern:
     each user's LAST event value in the month is their closing
@@ -1108,31 +713,6 @@ def q_semi_additive(spark, sf_dir):
         F.sum("balance").cast("bigint").alias("total_balance"),
         F.max("balance").cast("bigint").alias("max_balance"),
     )
-
-
-SQL_SEMI_ADDITIVE = """
-WITH base AS (
-  SELECT user_id,
-         CAST(CAST(year(ts) AS BIGINT) * 100
-              + CAST(month(ts) AS BIGINT) AS BIGINT) AS ym,
-         ts, event_id,
-         CAST(round(value * 100) AS BIGINT) AS cents
-  FROM events
-), closing AS (
-  SELECT user_id, ym, cents AS balance
-  FROM (SELECT user_id, ym, cents,
-               row_number() OVER (PARTITION BY user_id, ym
-                                  ORDER BY ts DESC, event_id DESC)
-                 AS rk
-        FROM base) t
-  WHERE rk = 1
-)
-SELECT ym,
-       CAST(count(*) AS BIGINT) AS n_users,
-       CAST(sum(balance) AS BIGINT) AS total_balance,
-       CAST(max(balance) AS BIGINT) AS max_balance
-FROM closing GROUP BY 1
-"""
 
 
 def q_time_to_convert(spark, sf_dir):
@@ -1194,49 +774,6 @@ def q_time_to_convert(spark, sf_dir):
     )
 
 
-SQL_TIME_TO_CONVERT = f"""
-WITH flagged AS (
-  SELECT user_id, ts, event_id, event_type,
-         CASE WHEN epoch_us(ts) - lag(epoch_us(ts))
-                   OVER (PARTITION BY user_id ORDER BY ts)
-                   > {SESSION_GAP_S} * 1000000
-              OR lag(ts) OVER (PARTITION BY user_id ORDER BY ts)
-                 IS NULL
-         THEN 1 ELSE 0 END AS new_sess
-  FROM events
-), sess AS (
-  SELECT user_id, epoch_us(ts) AS us, event_type,
-         CAST(sum(new_sess) OVER (PARTITION BY user_id ORDER BY ts
-                                  ROWS BETWEEN UNBOUNDED PRECEDING
-                                  AND CURRENT ROW) - 1 AS BIGINT)
-           AS session_id
-  FROM flagged
-), anchors AS (
-  SELECT user_id, session_id,
-         min(CASE WHEN event_type = 'click' THEN us END) AS click_us
-  FROM sess GROUP BY 1, 2
-), conv AS (
-  SELECT s.user_id,
-         CAST((min(s.us) - a.click_us) // 1000000 AS BIGINT) AS gap_s
-  FROM sess s
-  JOIN anchors a
-    ON s.user_id = a.user_id AND s.session_id = a.session_id
-  WHERE s.event_type = 'purchase' AND a.click_us IS NOT NULL
-    AND s.us >= a.click_us
-  GROUP BY s.user_id, s.session_id, a.click_us
-), ranked AS (
-  SELECT user_id, gap_s,
-         row_number() OVER (PARTITION BY user_id ORDER BY gap_s)
-           AS rk,
-         CAST(count(*) OVER (PARTITION BY user_id) AS BIGINT)
-           AS n_conv
-  FROM conv
-)
-SELECT user_id, n_conv AS n_conversions, gap_s AS median_gap_s
-FROM ranked WHERE rk = (n_conv + 1) // 2
-"""
-
-
 def q_abandonment(spark, sf_dir):
     """Per-user SESSION ABANDONMENT — of the gap-sessions containing
     a click, the fraction with NO purchase at-or-after the first
@@ -1286,44 +823,6 @@ def q_abandonment(spark, sf_dir):
             6,
         ).alias("abandonment_rate"),
     )
-
-
-SQL_ABANDONMENT = f"""
-WITH flagged AS (
-  SELECT user_id, ts, event_type,
-         CASE WHEN epoch_us(ts) - lag(epoch_us(ts))
-                   OVER (PARTITION BY user_id ORDER BY ts)
-                   > {SESSION_GAP_S} * 1000000
-              OR lag(ts) OVER (PARTITION BY user_id ORDER BY ts)
-                 IS NULL
-         THEN 1 ELSE 0 END AS new_sess
-  FROM events
-), sess AS (
-  SELECT user_id, epoch_us(ts) AS us, event_type,
-         CAST(sum(new_sess) OVER (PARTITION BY user_id ORDER BY ts
-                                  ROWS BETWEEN UNBOUNDED PRECEDING
-                                  AND CURRENT ROW) - 1 AS BIGINT)
-           AS session_id
-  FROM flagged
-), per AS (
-  SELECT user_id, session_id,
-         min(CASE WHEN event_type = 'click' THEN us END) AS click_us,
-         max(CASE WHEN event_type = 'purchase' THEN us END)
-           AS last_purchase_us
-  FROM sess GROUP BY 1, 2
-), fl AS (
-  SELECT user_id,
-         CAST(last_purchase_us IS NOT NULL
-              AND last_purchase_us >= click_us AS BIGINT) AS converted
-  FROM per WHERE click_us IS NOT NULL
-)
-SELECT user_id,
-       CAST(count(*) AS BIGINT) AS click_sessions,
-       CAST(sum(converted) AS BIGINT) AS converted_sessions,
-       round(CAST(count(*) - sum(converted) AS DOUBLE)
-             / CAST(count(*) AS DOUBLE), 6) AS abandonment_rate
-FROM fl GROUP BY 1
-"""
 
 
 def q_seasonal_naive_mae(spark, sf_dir):
@@ -1382,33 +881,6 @@ def q_seasonal_naive_mae(spark, sf_dir):
             6,
         ).alias("rel_mae"),
     )
-
-
-SQL_SEASONAL_NAIVE_MAE = """
-WITH daily AS (
-  SELECT event_type,
-         CAST(date_diff('day', DATE '1970-01-01',
-                        CAST(ts AS DATE)) AS BIGINT) AS d,
-         CAST(count(*) AS BIGINT) AS c
-  FROM events GROUP BY 1, 2
-), pairs AS (
-  SELECT a.event_type, b.c AS actual, a.c AS forecast
-  FROM daily a JOIN daily b
-    ON a.event_type = b.event_type AND b.d = a.d + 7
-), agg AS (
-  SELECT event_type,
-         CAST(count(*) AS BIGINT) AS n_pairs,
-         CAST(sum(abs(actual - forecast)) AS BIGINT) AS abs_err,
-         CAST(sum(actual) AS BIGINT) AS actual_sum
-  FROM pairs GROUP BY 1
-)
-SELECT event_type, n_pairs,
-       round(CAST(abs_err AS DOUBLE) / CAST(n_pairs AS DOUBLE),
-             6) AS mae,
-       round(CAST(abs_err AS DOUBLE) / CAST(actual_sum AS DOUBLE),
-             6) AS rel_mae
-FROM agg WHERE actual_sum > 0
-"""
 
 
 def q_gap_percentiles(spark, sf_dir):
@@ -1470,31 +942,6 @@ def q_gap_percentiles(spark, sf_dir):
             "p90_gap_s",
         )
     )
-
-
-SQL_GAP_PERCENTILES = """
-WITH gaps AS (
-  SELECT user_id,
-         CAST((epoch_us(ts)
-               - lag(epoch_us(ts)) OVER (PARTITION BY user_id
-                                         ORDER BY epoch_us(ts),
-                                                  event_id))
-              // 1000000 AS BIGINT) AS gap_s
-  FROM events
-), ranked AS (
-  SELECT user_id, gap_s,
-         row_number() OVER (PARTITION BY user_id ORDER BY gap_s)
-           AS rk,
-         CAST(count(*) OVER (PARTITION BY user_id) AS BIGINT) AS n
-  FROM gaps WHERE gap_s IS NOT NULL
-)
-SELECT user_id, n AS n_gaps,
-       CAST(max(CASE WHEN rk = (n + 1) // 2 THEN gap_s END)
-            AS BIGINT) AS p50_gap_s,
-       CAST(max(CASE WHEN rk = (9 * n + 9) // 10 THEN gap_s END)
-            AS BIGINT) AS p90_gap_s
-FROM ranked GROUP BY 1, 2
-"""
 
 
 _RBO_K = 20
@@ -1577,56 +1024,6 @@ def q_rbo_overlap(spark, sf_dir):
     )
 
 
-SQL_RBO_OVERLAP = f"""
-WITH tok AS (
-  SELECT source, t.token
-  FROM documents,
-       LATERAL unnest(string_split_regex(trim(text), '\\s+'))
-         AS t(token)
-  WHERE t.token <> ''
-), st AS (
-  SELECT source, token, CAST(count(*) AS BIGINT) AS c_s
-  FROM tok GROUP BY 1, 2
-), tot AS (
-  SELECT token, CAST(count(*) AS BIGINT) AS c_all
-  FROM tok GROUP BY 1
-), src_top AS (
-  SELECT source, token, rs
-  FROM (SELECT source, token,
-               row_number() OVER (PARTITION BY source
-                                  ORDER BY c_s DESC, token) AS rs
-        FROM st) t
-  WHERE rs <= {_RBO_K}
-), cor_top AS (
-  SELECT token, rc
-  FROM (SELECT token,
-               row_number() OVER (ORDER BY c_all DESC, token) AS rc
-        FROM tot) t
-  WHERE rc <= {_RBO_K}
-), matches AS (
-  SELECT s.source, greatest(s.rs, c.rc) AS m
-  FROM src_top s JOIN cor_top c ON s.token = c.token
-), depths AS (
-  SELECT CAST(unnest(generate_series(1, {_RBO_K})) AS BIGINT) AS dep
-), terms AS (
-  SELECT m.source,
-         CAST(round(1e9 * pow({_RBO_P}, d.dep - 1)
-                    / CAST(d.dep AS DOUBLE)) AS BIGINT) AS term_ppb
-  FROM matches m JOIN depths d ON d.dep >= m.m
-), agg AS (
-  SELECT source, CAST(sum(term_ppb) AS BIGINT) AS sum_ppb
-  FROM terms GROUP BY 1
-), nm AS (
-  SELECT source, CAST(count(*) AS BIGINT) AS overlap_k
-  FROM matches GROUP BY 1
-)
-SELECT a.source, CAST({_RBO_K} AS BIGINT) AS k, nm.overlap_k,
-       round({1.0 - _RBO_P} * CAST(a.sum_ppb AS DOUBLE) / 1e9,
-             6) AS rbo
-FROM agg a JOIN nm ON a.source = nm.source
-"""
-
-
 def q_weighted_jaccard(spark, sf_dir):
     """Per-source WEIGHTED JACCARD similarity between the source's
     token distribution and the REST of the corpus — sum min(p, q) /
@@ -1691,47 +1088,6 @@ def q_weighted_jaccard(spark, sf_dir):
     )
 
 
-SQL_WEIGHTED_JACCARD = """
-WITH tok AS (
-  SELECT source, t.token
-  FROM documents,
-       LATERAL unnest(string_split_regex(trim(text), '\\s+'))
-         AS t(token)
-  WHERE t.token <> ''
-), st AS (
-  SELECT source, token, CAST(count(*) AS BIGINT) AS c_s
-  FROM tok GROUP BY 1, 2
-), tot AS (
-  SELECT token, CAST(count(*) AS BIGINT) AS c_all
-  FROM tok GROUP BY 1
-), ns AS (
-  SELECT source, CAST(sum(c_s) AS BIGINT) AS n_s FROM st GROUP BY 1
-), na AS (
-  SELECT CAST(sum(c_all) AS BIGINT) AS n_all FROM tot
-), j AS (
-  SELECT st.source, ns.n_s, na.n_all - ns.n_s AS n_r,
-         st.c_s * (na.n_all - ns.n_s) AS ps,
-         (tot.c_all - st.c_s) * ns.n_s AS qs,
-         tot.c_all - st.c_s AS c_r
-  FROM st
-  JOIN tot ON st.token = tot.token
-  JOIN ns ON st.source = ns.source
-  CROSS JOIN na
-), per AS (
-  SELECT source, n_s, n_r,
-         CAST(sum(least(ps, qs)) AS BIGINT) AS min_seen,
-         CAST(sum(greatest(ps, qs)) AS BIGINT) AS max_seen,
-         CAST(sum(c_r) AS BIGINT) AS cr_seen
-  FROM j GROUP BY 1, 2, 3
-)
-SELECT source, n_s,
-       round(CAST(min_seen AS DOUBLE)
-             / CAST(max_seen + (n_r - cr_seen) * n_s AS DOUBLE),
-             6) AS weighted_jaccard
-FROM per WHERE n_r > 0
-"""
-
-
 def q_burstiness_gb(spark, sf_dir):
     """Per-user GOH-BARABASI burstiness of inter-event gaps —
     B = (sigma - mu)/(sigma + mu) over the gap-seconds series: -1
@@ -1778,39 +1134,6 @@ def q_burstiness_gb(spark, sf_dir):
         F.round(mu, 6).alias("mean_gap_s"),
         F.round((sd - mu) / (sd + mu), 6).alias("burstiness"),
     )
-
-
-SQL_BURSTINESS_GB = """
-WITH gaps AS (
-  SELECT user_id,
-         CAST((epoch_us(ts)
-               - lag(epoch_us(ts)) OVER (PARTITION BY user_id
-                                         ORDER BY epoch_us(ts),
-                                                  event_id))
-              // 1000000 AS BIGINT) AS g
-  FROM events
-), m AS (
-  SELECT user_id,
-         CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(g) AS BIGINT) AS s,
-         CAST(sum(g * g) AS BIGINT) AS s2
-  FROM gaps WHERE g IS NOT NULL GROUP BY 1
-), k AS (
-  SELECT user_id, n, s,
-         CAST(n * s2 - s * s AS BIGINT) AS varn
-  FROM m
-)
-SELECT user_id, n AS n_gaps,
-       round(CAST(s AS DOUBLE) / CAST(n AS DOUBLE), 6) AS mean_gap_s,
-       round((sqrt(CAST(varn AS DOUBLE)
-                   / CAST(n * (n - 1) AS DOUBLE))
-              - CAST(s AS DOUBLE) / CAST(n AS DOUBLE))
-             / (sqrt(CAST(varn AS DOUBLE)
-                     / CAST(n * (n - 1) AS DOUBLE))
-                + CAST(s AS DOUBLE) / CAST(n AS DOUBLE)),
-             6) AS burstiness
-FROM k WHERE n >= 2 AND s > 0 AND varn >= 0
-"""
 
 
 def q_lorenz_curve(spark, sf_dir):
@@ -1867,39 +1190,6 @@ def q_lorenz_curve(spark, sf_dir):
     )
 
 
-SQL_LORENZ_CURVE = """
-WITH per AS (
-  SELECT user_id, CAST(count(*) AS BIGINT) AS c
-  FROM events GROUP BY 1
-), ranked AS (
-  SELECT user_id, c,
-         CAST(row_number() OVER (ORDER BY c, user_id) AS BIGINT)
-           AS rk
-  FROM per
-), tot AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_users,
-         CAST(sum(c) AS BIGINT) AS n_events
-  FROM per
-), dec AS (
-  SELECT ((rk - 1) * 10) // t.n_users + 1 AS decile,
-         t.n_users, t.n_events,
-         CAST(count(*) AS BIGINT) AS n_users_d,
-         CAST(sum(c) AS BIGINT) AS events_d
-  FROM ranked CROSS JOIN tot t
-  GROUP BY 1, 2, 3
-)
-SELECT CAST(decile AS BIGINT) AS decile, n_users_d, events_d,
-       round(CAST(events_d AS DOUBLE) / CAST(n_events AS DOUBLE),
-             6) AS share,
-       round(CAST(sum(events_d) OVER (ORDER BY decile
-                                      ROWS BETWEEN UNBOUNDED
-                                      PRECEDING AND CURRENT ROW)
-                  AS DOUBLE)
-             / CAST(n_events AS DOUBLE), 6) AS cum_share
-FROM dec
-"""
-
-
 _FIRSTK = 10
 
 
@@ -1936,28 +1226,6 @@ def q_first_k_profile(spark, sf_dir):
         .cast("bigint")
         .alias("span_s"),
     )
-
-
-SQL_FIRST_K_PROFILE = f"""
-WITH head AS (
-  SELECT user_id, epoch_us(ts) AS us, event_type,
-         CAST(round(value * 100) AS BIGINT) AS cents
-  FROM (SELECT *,
-               row_number() OVER (PARTITION BY user_id
-                                  ORDER BY epoch_us(ts), event_id)
-                 AS rk
-        FROM events) t
-  WHERE rk <= {_FIRSTK}
-)
-SELECT user_id,
-       CAST(count(*) AS BIGINT) AS n_events,
-       CAST(count(DISTINCT event_type) AS BIGINT) AS n_types,
-       CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
-            AS BIGINT) AS n_clicks,
-       CAST(sum(cents) AS BIGINT) AS total_cents,
-       CAST((max(us) - min(us)) // 1000000 AS BIGINT) AS span_s
-FROM head GROUP BY 1
-"""
 
 
 def q_dwell_share(spark, sf_dir):

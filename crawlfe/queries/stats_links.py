@@ -4,18 +4,11 @@ Split from the former crawlfe/queries.py monolith (r4); bodies unchanged.
 """
 from __future__ import annotations
 
-import pandas as pd  # noqa: F401
 from pyspark.sql import DataFrame, SparkSession, Window  # noqa: F401
 from pyspark.sql import functions as F  # noqa: F401
-from pyspark.sql import types as T  # noqa: F401
 
-from .. import clean  # noqa: F401
-from .. import windows as W  # noqa: F401
-from ..asof import asof_join  # noqa: F401
-from ..textfeat import featurize_batch  # noqa: F401
 from ._shared import SESSION_GAP_S, _t, _us  # noqa: F401
 from .graph_sources import SQL_DOC_EDGES, _doc_edges  # noqa: F401
-
 
 
 # --------------------------------------------------------------------------
@@ -102,34 +95,6 @@ def q_clustering_coeff(spark, sf_dir):
     )
 
 
-SQL_CLUSTERING_COEFF = f"""
-WITH und AS ({SQL_UND_EDGES}),
-deg AS (
-  SELECT doc_id, CAST(count(*) AS BIGINT) AS deg
-  FROM (SELECT u AS doc_id FROM und
-        UNION ALL SELECT v FROM und) x
-  GROUP BY 1
-), tris AS (
-  SELECT e1.u AS a, e1.v AS b, e2.v AS c
-  FROM und e1
-  JOIN und e2 ON e2.u = e1.v
-  JOIN und e3 ON e3.u = e1.u AND e3.v = e2.v
-), corners AS (
-  SELECT doc_id, CAST(count(*) AS BIGINT) AS tri
-  FROM (SELECT a AS doc_id FROM tris
-        UNION ALL SELECT b FROM tris
-        UNION ALL SELECT c FROM tris) x
-  GROUP BY 1
-)
-SELECT deg.doc_id, deg.deg,
-       CAST(coalesce(corners.tri, 0) AS BIGINT) AS tri,
-       round(2.0 * coalesce(corners.tri, 0)
-             / nullif(CAST(deg.deg AS DOUBLE) * (deg.deg - 1), 0.0),
-             6) AS coeff
-FROM deg LEFT JOIN corners ON deg.doc_id = corners.doc_id
-"""
-
-
 def q_link_pred_scores(spark, sf_dir):
     """LINK PREDICTION scores for the top non-adjacent 2-hop pairs:
     common neighbors, Jaccard, and Adamic-Adar — the three classic
@@ -206,42 +171,6 @@ def q_link_pred_scores(spark, sf_dir):
     )
 
 
-SQL_LINK_PRED_SCORES = f"""
-WITH und AS ({SQL_UND_EDGES}),
-adj AS (
-  SELECT u AS a, v AS b FROM und
-  UNION ALL SELECT v, u FROM und
-), deg AS (
-  SELECT a AS doc_id, CAST(count(*) AS BIGINT) AS deg
-  FROM adj GROUP BY 1
-), cand AS (
-  SELECT x.a AS u, y.b AS w, x.b AS mid
-  FROM adj x JOIN adj y ON x.b = y.a AND x.a < y.b
-  WHERE NOT EXISTS (
-    SELECT 1 FROM und e WHERE e.u = x.a AND e.v = y.b)
-), pairs AS (
-  SELECT u, w, CAST(count(*) AS BIGINT) AS cn,
-         round(sum(1.0 / ln(CAST(d.deg AS DOUBLE))), 6)
-           AS adamic_adar
-  FROM cand JOIN deg d ON cand.mid = d.doc_id
-  GROUP BY 1, 2
-), scored AS (
-  SELECT u, w, cn,
-         round(CAST(cn AS DOUBLE) / (du.deg + dw.deg - cn), 6)
-           AS jaccard,
-         adamic_adar
-  FROM pairs
-  JOIN deg du ON pairs.u = du.doc_id
-  JOIN deg dw ON pairs.w = dw.doc_id
-)
-SELECT * FROM (
-  SELECT row_number() OVER (ORDER BY cn DESC, u ASC, w ASC) AS rk,
-         u, w, cn, jaccard, adamic_adar
-  FROM scored
-) WHERE rk <= 50
-"""
-
-
 def q_degree_assortativity(spark, sf_dir):
     """DEGREE ASSORTATIVITY of the undirected doc graph — the
     Pearson correlation of endpoint degrees over edges (both
@@ -283,38 +212,6 @@ def q_degree_assortativity(spark, sf_dir):
     )
 
 
-SQL_DEGREE_ASSORTATIVITY = f"""
-WITH und AS ({SQL_UND_EDGES}),
-adj AS (
-  SELECT u, v FROM und UNION ALL SELECT v, u FROM und
-), deg AS (
-  SELECT u AS doc_id, CAST(count(*) AS BIGINT) AS deg
-  FROM adj GROUP BY 1
-), ed AS (
-  SELECT du.deg AS x, dv.deg AS y
-  FROM adj
-  JOIN deg du ON adj.u = du.doc_id
-  JOIN deg dv ON adj.v = dv.doc_id
-), agg AS (
-  SELECT CAST(count(*) AS BIGINT) AS m,
-         CAST(sum(x) AS BIGINT) AS sx,
-         CAST(sum(x * x) AS BIGINT) AS sxx,
-         CAST(sum(y) AS BIGINT) AS sy,
-         CAST(sum(y * y) AS BIGINT) AS syy,
-         CAST(sum(x * y) AS BIGINT) AS sxy
-  FROM ed
-)
-SELECT m AS n_incidences,
-       round((CAST(m AS DOUBLE) * sxy - CAST(sx AS DOUBLE) * sy)
-             / sqrt((CAST(m AS DOUBLE) * sxx
-                     - CAST(sx AS DOUBLE) * sx)
-                    * (CAST(m AS DOUBLE) * syy
-                       - CAST(sy AS DOUBLE) * sy)), 6)
-         AS assortativity
-FROM agg
-"""
-
-
 def q_reciprocity(spark, sf_dir):
     """EDGE RECIPROCITY of the directed doc graph: the fraction of
     distinct directed edges (u,v) whose reverse (v,u) also exists —
@@ -345,23 +242,6 @@ def q_reciprocity(spark, sf_dir):
             6,
         ).alias("reciprocity"),
     )
-
-
-SQL_RECIPROCITY = f"""
-WITH e AS (
-  SELECT DISTINCT src, dst FROM ({SQL_DOC_EDGES}) raw
-  WHERE src <> dst
-), rc AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_reciprocated
-  FROM e WHERE EXISTS (
-    SELECT 1 FROM e r WHERE r.src = e.dst AND r.dst = e.src)
-)
-SELECT CAST((SELECT count(*) FROM e) AS BIGINT) AS n_edges,
-       n_reciprocated,
-       round(CAST(n_reciprocated AS DOUBLE)
-             / (SELECT count(*) FROM e), 6) AS reciprocity
-FROM rc
-"""
 
 
 def q_hits_scores(spark, sf_dir):
@@ -435,44 +315,6 @@ def q_hits_scores(spark, sf_dir):
     )
 
 
-SQL_HITS_SCORES = f"""
-WITH e AS (
-  SELECT DISTINCT src, dst FROM ({SQL_DOC_EDGES}) raw
-  WHERE src <> dst
-), nodes AS (SELECT doc_id FROM documents),
-h0 AS (SELECT doc_id, CAST(1000000000 AS BIGINT) AS h FROM nodes),
-a1 AS (SELECT dst AS doc_id, CAST(sum(h) AS BIGINT) AS a
-       FROM e JOIN h0 ON e.src = h0.doc_id GROUP BY 1),
-h1 AS (SELECT src AS doc_id, CAST(sum(a) AS BIGINT) AS h
-       FROM e JOIN a1 ON e.dst = a1.doc_id GROUP BY 1),
-a2 AS (SELECT dst AS doc_id, CAST(sum(h) AS BIGINT) AS a
-       FROM e JOIN h1 ON e.src = h1.doc_id GROUP BY 1),
-h2 AS (SELECT src AS doc_id, CAST(sum(a) AS BIGINT) AS h
-       FROM e JOIN a2 ON e.dst = a2.doc_id GROUP BY 1),
-a3 AS (SELECT dst AS doc_id, CAST(sum(h) AS BIGINT) AS a
-       FROM e JOIN h2 ON e.src = h2.doc_id GROUP BY 1),
-h3 AS (SELECT src AS doc_id, CAST(sum(a) AS BIGINT) AS h
-       FROM e JOIN a3 ON e.dst = a3.doc_id GROUP BY 1),
-joined AS (
-  SELECT n.doc_id,
-         CAST(coalesce(a3.a, 0) AS BIGINT) AS a,
-         CAST(coalesce(h3.h, 0) AS BIGINT) AS h
-  FROM nodes n
-  LEFT JOIN a3 USING (doc_id)
-  LEFT JOIN h3 USING (doc_id)
-), mx AS (SELECT max(a) AS amax, max(h) AS hmax FROM joined)
-SELECT * FROM (
-  SELECT row_number() OVER (ORDER BY a DESC, doc_id ASC) AS rk,
-         doc_id,
-         CAST(CAST(a AS HUGEINT) * 1000000000000 // amax
-              AS BIGINT) AS authority_fp,
-         CAST(CAST(h AS HUGEINT) * 1000000000000 // hmax
-              AS BIGINT) AS hub_fp
-  FROM joined CROSS JOIN mx
-) WHERE rk <= 20
-"""
-
-
 def q_bipartite_proj(spark, sf_dir):
     """BIPARTITE PROJECTION of the user x event-type activity graph
     onto event types: for every type pair, the number of SHARED
@@ -529,30 +371,6 @@ def q_bipartite_proj(spark, sf_dir):
             ).alias("cosine"),
         )
     )
-
-
-SQL_BIPARTITE_PROJ = """
-WITH pres AS (
-  SELECT DISTINCT user_id, event_type FROM events
-), nt AS (
-  SELECT event_type, CAST(count(*) AS BIGINT) AS n
-  FROM pres GROUP BY 1
-), shared AS (
-  SELECT a.event_type AS type_a, b.event_type AS type_b,
-         CAST(count(*) AS BIGINT) AS shared_users
-  FROM pres a JOIN pres b
-    ON a.user_id = b.user_id AND a.event_type < b.event_type
-  GROUP BY 1, 2
-)
-SELECT type_a, type_b, na.n AS n_a, nb.n AS n_b, shared_users,
-       round(CAST(shared_users AS DOUBLE) / least(na.n, nb.n), 6)
-         AS overlap_coef,
-       round(CAST(shared_users AS DOUBLE)
-             / sqrt(CAST(na.n AS DOUBLE) * nb.n), 6) AS cosine
-FROM shared
-JOIN nt na ON shared.type_a = na.event_type
-JOIN nt nb ON shared.type_b = nb.event_type
-"""
 
 
 # --------------------------------------------------------------------------
@@ -633,50 +451,6 @@ def q_nelson_aalen(spark, sf_dir):
     )
 
 
-SQL_NELSON_AALEN = """
-WITH marked AS (
-  SELECT user_id, event_id, event_type,
-         epoch_us(ts) AS us,
-         row_number() OVER (PARTITION BY user_id
-                            ORDER BY epoch_us(ts), event_id) AS rn
-  FROM events
-), first AS (
-  SELECT user_id, us AS t0,
-         CAST(user_id % 2 AS BIGINT) AS g
-  FROM marked WHERE rn = 1
-), firstbuy AS (
-  SELECT user_id, min(us) AS t_buy
-  FROM marked WHERE event_type = 'purchase' GROUP BY 1
-), lastev AS (
-  SELECT user_id, max(us) AS t_last FROM marked GROUP BY 1
-), dur AS (
-  SELECT g, coalesce(t_buy - t0, t_last - t0) AS t,
-         CAST(CASE WHEN t_buy IS NOT NULL THEN 1 ELSE 0 END
-              AS BIGINT) AS ev
-  FROM first
-  JOIN lastev USING (user_id)
-  LEFT JOIN firstbuy USING (user_id)
-), bytime AS (
-  SELECT g, t, CAST(sum(ev) AS BIGINT) AS d,
-         CAST(count(*) AS BIGINT) AS x
-  FROM dur GROUP BY 1, 2
-), risk AS (
-  SELECT g, t, d,
-         CAST(sum(x) OVER (PARTITION BY g)
-              - sum(x) OVER (PARTITION BY g ORDER BY t
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-              + x AS BIGINT) AS n
-  FROM bytime
-)
-SELECT g AS arm, t AS t_us, d, n,
-       round(sum(CAST(d AS DOUBLE) / n) OVER (
-             PARTITION BY g ORDER BY t
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 6)
-         AS hazard_cum
-FROM risk WHERE d > 0
-"""
-
-
 def q_percentile_interp(spark, sf_dir):
     """PERCENTILE_CONT-style LINEARLY INTERPOLATED percentiles
     (p5/p25/p50/p75/p95) of purchase ``value`` — the continuous
@@ -737,41 +511,6 @@ def q_percentile_interp(spark, sf_dir):
             " / 10000.0"
         ).alias("value_interp"),
     )
-
-
-SQL_PERCENTILE_INTERP = """
-WITH hist AS (
-  SELECT CAST(round(value * 100) AS BIGINT) AS cents,
-         CAST(count(*) AS BIGINT) AS ct
-  FROM events WHERE event_type = 'purchase'
-  GROUP BY 1
-), cum AS (
-  SELECT cents,
-         CAST(sum(ct) OVER (ORDER BY cents
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-              AS BIGINT) AS cum,
-         CAST(sum(ct) OVER () AS BIGINT) AS n
-  FROM hist
-), ps AS (
-  SELECT unnest([5, 25, 50, 75, 95]) AS p
-), grid AS (
-  SELECT p, cents, cum, n,
-         CAST(p * (n - 1) // 100 AS BIGINT) AS k,
-         CAST(p * (n - 1) % 100 AS BIGINT) AS frac
-  FROM cum CROSS JOIN ps
-), lo AS (
-  SELECT p, CAST(min(cents) AS BIGINT) AS v_lo,
-         max(frac) AS frac, max(n) AS n
-  FROM grid WHERE cum >= k + 1 GROUP BY 1
-), hi AS (
-  SELECT p, CAST(min(cents) AS BIGINT) AS v_hi
-  FROM grid WHERE cum >= least(k + 2, n) GROUP BY 1
-)
-SELECT lo.p AS p_pct, lo.n AS n_rows,
-       CAST(v_lo * (100 - frac) + v_hi * frac AS DOUBLE) / 10000.0
-         AS value_interp
-FROM lo JOIN hi USING (p)
-"""
 
 
 def q_mix_rate_decomp(spark, sf_dir):
@@ -838,40 +577,6 @@ def q_mix_rate_decomp(spark, sf_dir):
             F.expr("(share_w4 - share_w1) * (rate_w4 - rate_w1)"), 6
         ).alias("interaction"),
     )
-
-
-SQL_MIX_RATE_DECOMP = """
-WITH base AS (
-  SELECT CASE WHEN day(ts) <= 7 THEN 1 ELSE 4 END AS wk,
-         CAST(user_id % 4 AS BIGINT) AS segment,
-         CAST(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END
-              AS BIGINT) AS is_buy
-  FROM events
-  WHERE day(ts) <= 7 OR day(ts) BETWEEN 22 AND 28
-), per AS (
-  SELECT wk, segment, CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(is_buy) AS BIGINT) AS b
-  FROM base GROUP BY 1, 2
-), tot AS (
-  SELECT wk, CAST(sum(n) AS BIGINT) AS nt FROM per GROUP BY 1
-), j AS (
-  SELECT wk, segment,
-         CAST(n AS DOUBLE) / nt AS share,
-         CAST(b AS DOUBLE) / n AS rate
-  FROM per JOIN tot USING (wk)
-)
-SELECT w1.segment,
-       round(w1.share, 6) AS share_w1,
-       round(w4.share, 6) AS share_w4,
-       round(w1.rate, 6) AS rate_w1,
-       round(w4.rate, 6) AS rate_w4,
-       round((w4.share - w1.share) * w1.rate, 6) AS mix_effect,
-       round(w1.share * (w4.rate - w1.rate), 6) AS rate_effect,
-       round((w4.share - w1.share) * (w4.rate - w1.rate), 6)
-         AS interaction
-FROM (SELECT * FROM j WHERE wk = 1) w1
-JOIN (SELECT * FROM j WHERE wk = 4) w4 USING (segment)
-"""
 
 
 def q_binseg_sse(spark, sf_dir):
@@ -957,52 +662,6 @@ def q_binseg_sse(spark, sf_dir):
     )
 
 
-SQL_BINSEG_SSE = """
-WITH days AS (
-  SELECT DISTINCT CAST(day(ts) AS INTEGER) AS day FROM events
-), idx AS (
-  SELECT day, CAST(row_number() OVER (ORDER BY day) AS BIGINT) AS i
-  FROM days
-), types AS (
-  SELECT DISTINCT event_type FROM events
-), raw AS (
-  SELECT event_type, CAST(day(ts) AS INTEGER) AS day,
-         CAST(count(*) AS BIGINT) AS c
-  FROM events GROUP BY 1, 2
-), grid AS (
-  SELECT t.event_type, i.day, i.i,
-         CAST(coalesce(r.c, 0) AS BIGINT) AS c
-  FROM types t CROSS JOIN idx i
-  LEFT JOIN raw r ON r.event_type = t.event_type AND r.day = i.day
-), pre AS (
-  SELECT event_type, day, i,
-         CAST(sum(c) OVER (PARTITION BY event_type ORDER BY i
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-              AS BIGINT) AS s1,
-         CAST(sum(c * c) OVER (PARTITION BY event_type) AS BIGINT)
-           AS q,
-         CAST(sum(c) OVER (PARTITION BY event_type) AS BIGINT) AS s,
-         CAST(count(*) OVER (PARTITION BY event_type) AS BIGINT) AS n
-  FROM grid
-), scored AS (
-  SELECT event_type, day, i, q, s, n,
-         CAST(s1 AS DOUBLE) * s1 / i
-         + CAST(s - s1 AS DOUBLE) * (s - s1) / (n - i) AS between_ss
-  FROM pre WHERE i < n
-), best AS (
-  SELECT *, row_number() OVER (PARTITION BY event_type
-            ORDER BY between_ss DESC, day ASC) AS rk
-  FROM scored
-)
-SELECT event_type, day AS split_after_day, n AS n_days,
-       round(CAST(q AS DOUBLE) - CAST(s AS DOUBLE) * s / n, 6)
-         AS sse_total,
-       round(between_ss - CAST(s AS DOUBLE) * s / n, 6)
-         AS sse_reduction
-FROM best WHERE rk = 1
-"""
-
-
 def q_poisson_bootstrap(spark, sf_dir):
     """POISSON BOOTSTRAP confidence interval for mean purchase value
     — THE bootstrap that actually runs at 100 TB: instead of
@@ -1083,50 +742,6 @@ def q_poisson_bootstrap(spark, sf_dir):
     )
 
 
-SQL_POISSON_BOOTSTRAP = """
-WITH reps AS (
-  SELECT CAST(b AS INTEGER) AS b FROM generate_series(0, 19) t(b)
-), base AS (
-  SELECT b,
-         CAST(round(value * 100) AS BIGINT) AS cents,
-         CASE
-           WHEN u < 103548857136060 THEN 0
-           WHEN u < 207097714272121 THEN 1
-           WHEN u < 258872142840152 THEN 2
-           ELSE 3 END AS w
-  FROM (
-    SELECT r.b, e.value,
-           CAST('0x' || substr(
-                md5(CAST(e.event_id AS VARCHAR) || '|'
-                    || CAST(r.b AS VARCHAR)), 1, 12) AS BIGINT)
-             AS u
-    FROM events e CROSS JOIN reps r
-    WHERE e.event_type = 'purchase') x
-), per AS (
-  SELECT b, CAST(sum(w * cents) AS BIGINT) AS s,
-         CAST(sum(w) AS BIGINT) AS n
-  FROM base WHERE w > 0 GROUP BY 1
-), means AS (
-  SELECT b, CAST(s AS DOUBLE) / (100.0 * n) AS m FROM per
-), agg AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_reps,
-         sum(m) AS sm, sum(m * m) AS smm
-  FROM means
-)
-SELECT n_reps,
-       round(sm / n_reps, 6) AS boot_mean,
-       round(sqrt((smm - sm * sm / n_reps) / (n_reps - 1)), 6)
-         AS boot_se,
-       round(sm / n_reps
-             - 1.96 * sqrt((smm - sm * sm / n_reps) / (n_reps - 1)),
-             6) AS ci_lo,
-       round(sm / n_reps
-             + 1.96 * sqrt((smm - sm * sm / n_reps) / (n_reps - 1)),
-             6) AS ci_hi
-FROM agg
-"""
-
-
 def q_dau_mau(spark, sf_dir):
     """DAU/MAU STICKINESS per event type: average daily active users
     over monthly active users — the canonical engagement ratio
@@ -1175,30 +790,6 @@ def q_dau_mau(spark, sf_dir):
             ).alias("stickiness"),
         )
     )
-
-
-SQL_DAU_MAU = """
-WITH daily AS (
-  SELECT event_type, CAST(day(ts) AS INTEGER) AS day,
-         CAST(count(DISTINCT user_id) AS BIGINT) AS dau
-  FROM events GROUP BY 1, 2
-), nd AS (
-  SELECT CAST(count(DISTINCT CAST(day(ts) AS INTEGER)) AS BIGINT)
-           AS n_days
-  FROM events
-), mau AS (
-  SELECT event_type, CAST(count(DISTINCT user_id) AS BIGINT) AS mau
-  FROM events GROUP BY 1
-), dsum AS (
-  SELECT event_type, CAST(sum(dau) AS BIGINT) AS dau_sum
-  FROM daily GROUP BY 1
-)
-SELECT dsum.event_type, nd.n_days, mau.mau,
-       round(CAST(dau_sum AS DOUBLE) / n_days, 6) AS avg_dau,
-       round(CAST(dau_sum AS DOUBLE) / n_days / CAST(mau AS DOUBLE),
-             6) AS stickiness
-FROM dsum JOIN mau USING (event_type) CROSS JOIN nd
-"""
 
 
 # --------------------------------------------------------------------------
@@ -1269,53 +860,6 @@ def q_bigram_lm_ppl(spark, sf_dir):
     )
 
 
-SQL_BIGRAM_LM_PPL = """
-WITH toks AS (
-  SELECT doc_id, arr[i] AS w, i AS pos
-  FROM (
-    SELECT doc_id,
-           regexp_split_to_array(trim(text), '\\s+') AS arr,
-           unnest(generate_series(1, len(
-             regexp_split_to_array(trim(text), '\\s+')))) AS i
-    FROM documents
-  ) t
-  WHERE arr[i] <> ''
-), bg AS (
-  SELECT doc_id, w AS w1,
-         lead(w) OVER (PARTITION BY doc_id ORDER BY pos) AS w2
-  FROM toks
-), bg2 AS (
-  SELECT doc_id, w1, w2 FROM bg WHERE w2 IS NOT NULL
-), c12 AS (
-  SELECT w1, w2, CAST(count(*) AS BIGINT) AS c12
-  FROM bg2 GROUP BY 1, 2
-), c1 AS (
-  SELECT w1, CAST(sum(c12) AS BIGINT) AS c1 FROM c12 GROUP BY 1
-), vocab AS (
-  SELECT CAST(count(DISTINCT w) AS BIGINT) AS v FROM toks
-), scored AS (
-  SELECT b.doc_id,
-         -log2((CAST(coalesce(x.c12, 0) AS DOUBLE) + 1.0)
-               / (CAST(coalesce(y.c1, 0) AS DOUBLE) + v)) AS nll
-  FROM bg2 b
-  LEFT JOIN c12 x ON b.w1 = x.w1 AND b.w2 = x.w2
-  LEFT JOIN c1 y ON b.w1 = y.w1
-  CROSS JOIN vocab
-), per AS (
-  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
-         sum(nll) / count(*) AS h
-  FROM scored GROUP BY 1
-)
-SELECT * FROM (
-  SELECT row_number() OVER (ORDER BY h DESC, doc_id ASC) AS rk,
-         doc_id, n_bigrams,
-         round(h, 6) AS cross_entropy_bits,
-         round(pow(2.0, h), 6) AS perplexity
-  FROM per
-) WHERE rk <= 20
-"""
-
-
 def q_trigram_coverage(spark, sf_dir):
     """TRIGRAM COVERAGE per source: the share of a source's trigram
     INSTANCES whose trigram occurs at least twice corpus-wide — high
@@ -1363,40 +907,6 @@ def q_trigram_coverage(spark, sf_dir):
             F.expr("CAST(n_covered AS DOUBLE) / n_trigrams"), 6
         ).alias("coverage"),
     )
-
-
-SQL_TRIGRAM_COVERAGE = """
-WITH toks AS (
-  SELECT doc_id, source, arr[i] AS w, i AS pos
-  FROM (
-    SELECT doc_id, source,
-           regexp_split_to_array(trim(text), '\\s+') AS arr,
-           unnest(generate_series(1, len(
-             regexp_split_to_array(trim(text), '\\s+')))) AS i
-    FROM documents
-  ) t
-  WHERE arr[i] <> ''
-), tg AS (
-  SELECT source,
-         w || ' ' || lead(w) OVER w || ' '
-           || lead(w, 2) OVER w AS tri,
-         lead(w, 2) OVER w AS w3
-  FROM toks
-  WINDOW w AS (PARTITION BY doc_id ORDER BY pos)
-), tg2 AS (
-  SELECT source, tri FROM tg WHERE w3 IS NOT NULL
-), cnt AS (
-  SELECT tri, CAST(count(*) AS BIGINT) AS c FROM tg2 GROUP BY 1
-)
-SELECT source,
-       CAST(count(*) AS BIGINT) AS n_trigrams,
-       CAST(sum(CASE WHEN c >= 2 THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_covered,
-       round(CAST(sum(CASE WHEN c >= 2 THEN 1 ELSE 0 END) AS DOUBLE)
-             / count(*), 6) AS coverage
-FROM tg2 JOIN cnt USING (tri)
-GROUP BY 1
-"""
 
 
 def q_rare_token_share(spark, sf_dir):
@@ -1447,37 +957,6 @@ def q_rare_token_share(spark, sf_dir):
             ).alias("rare_share"),
         )
     )
-
-
-SQL_RARE_TOKEN_SHARE = """
-WITH toks AS (
-  SELECT doc_id, u.w
-  FROM (
-    SELECT doc_id,
-           regexp_split_to_array(trim(text), '\\s+') AS arr
-    FROM documents
-  ) t, unnest(t.arr) AS u(w)
-  WHERE u.w <> ''
-), freq AS (
-  SELECT w, CAST(count(*) AS BIGINT) AS f FROM toks GROUP BY 1
-), per AS (
-  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-         CAST(sum(CASE WHEN f <= 5 THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_rare,
-         CAST(count(DISTINCT CASE WHEN f <= 5 THEN toks.w END)
-              AS BIGINT) AS n_rare_distinct
-  FROM toks JOIN freq USING (w)
-  GROUP BY 1
-)
-SELECT * FROM (
-  SELECT row_number() OVER (
-           ORDER BY CAST(n_rare AS DOUBLE) / n_tokens DESC,
-                    doc_id ASC) AS rk,
-         doc_id, n_tokens, n_rare, n_rare_distinct,
-         round(CAST(n_rare AS DOUBLE) / n_tokens, 6) AS rare_share
-  FROM per
-) WHERE rk <= 20
-"""
 
 
 def q_doc_source_kl(spark, sf_dir):
@@ -1544,47 +1023,6 @@ def q_doc_source_kl(spark, sf_dir):
     )
 
 
-SQL_DOC_SOURCE_KL = """
-WITH toks AS (
-  SELECT doc_id, source, u.w
-  FROM (
-    SELECT doc_id, source,
-           regexp_split_to_array(trim(text), '\\s+') AS arr
-    FROM documents
-  ) t, unnest(t.arr) AS u(w)
-  WHERE u.w <> ''
-), vocab AS (
-  SELECT CAST(count(DISTINCT w) AS BIGINT) AS v FROM toks
-), src AS (
-  SELECT source, w, CAST(count(*) AS BIGINT) AS cs
-  FROM toks GROUP BY 1, 2
-), srctot AS (
-  SELECT source, CAST(sum(cs) AS BIGINT) AS ns FROM src GROUP BY 1
-), dw AS (
-  SELECT doc_id, source, w, CAST(count(*) AS BIGINT) AS cd
-  FROM toks GROUP BY 1, 2, 3
-), dtot AS (
-  SELECT doc_id, CAST(sum(cd) AS BIGINT) AS nd FROM dw GROUP BY 1
-), per AS (
-  SELECT dw.doc_id, dw.source, max(nd) AS n_tokens,
-         sum(CAST(cd AS DOUBLE) / nd
-             * log2((CAST(cd AS DOUBLE) / nd)
-                    / ((CAST(cs AS DOUBLE) + 1.0) / (ns + v)))) AS kl
-  FROM dw
-  JOIN src ON dw.source = src.source AND dw.w = src.w
-  JOIN srctot ON dw.source = srctot.source
-  JOIN dtot ON dw.doc_id = dtot.doc_id
-  CROSS JOIN vocab
-  GROUP BY 1, 2
-)
-SELECT * FROM (
-  SELECT row_number() OVER (ORDER BY kl DESC, doc_id ASC) AS rk,
-         doc_id, source, n_tokens, round(kl, 6) AS kl_bits
-  FROM per
-) WHERE rk <= 20
-"""
-
-
 def q_embedding_dim_stats(spark, sf_dir):
     """PER-DIMENSION embedding statistics (mean, std, min, max per
     coordinate) — the whitening/clipping prep table every
@@ -1627,35 +1065,6 @@ def q_embedding_dim_stats(spark, sf_dir):
         F.expr("CAST(mn AS DOUBLE) / 1e6").alias("min_val"),
         F.expr("CAST(mx AS DOUBLE) / 1e6").alias("max_val"),
     )
-
-
-SQL_EMBEDDING_DIM_STATS = """
-WITH dims AS (
-  SELECT i - 1 AS dim,
-         CAST(round(CAST(embedding[i] AS DOUBLE) * 1e6) AS BIGINT)
-           AS q
-  FROM (
-    SELECT embedding,
-           unnest(generate_series(1, len(embedding))) AS i
-    FROM embeddings
-  )
-), per AS (
-  SELECT dim, CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(q) AS BIGINT) AS s,
-         CAST(sum(q * q) AS BIGINT) AS qq,
-         CAST(min(q) AS BIGINT) AS mn,
-         CAST(max(q) AS BIGINT) AS mx
-  FROM dims GROUP BY 1
-)
-SELECT dim, n,
-       round(CAST(s AS DOUBLE) / n / 1e6, 6) AS mean_val,
-       round(sqrt((CAST(qq AS DOUBLE)
-                   - pow(CAST(s AS DOUBLE), 2) / n) / (n - 1.0))
-             / 1e6, 6) AS std_val,
-       CAST(mn AS DOUBLE) / 1e6 AS min_val,
-       CAST(mx AS DOUBLE) / 1e6 AS max_val
-FROM per
-"""
 
 
 def q_label_margin(spark, sf_dir):
@@ -1733,52 +1142,6 @@ def q_label_margin(spark, sf_dir):
             ).alias("mean_margin"),
         )
     )
-
-
-SQL_LABEL_MARGIN = """
-WITH dims AS (
-  SELECT vec_id, label, i - 1 AS dim,
-         CAST(round(CAST(embedding[i] AS DOUBLE) * 1e6) AS BIGINT)
-           AS q
-  FROM (
-    SELECT vec_id, label, embedding,
-           unnest(generate_series(1, len(embedding))) AS i
-    FROM embeddings
-  )
-), cent AS (
-  SELECT label AS clabel, dim, CAST(sum(q) AS BIGINT) AS sq
-  FROM dims GROUP BY 1, 2
-), cnorm AS (
-  SELECT clabel, sum(CAST(sq AS HUGEINT) * sq) AS cn2
-  FROM cent GROUP BY 1
-), vnorm AS (
-  SELECT vec_id, CAST(sum(q * q) AS BIGINT) AS vn2
-  FROM dims GROUP BY 1
-), dots AS (
-  SELECT d.vec_id, d.label, c.clabel,
-         CAST(sum(d.q * c.sq) AS BIGINT) AS dot
-  FROM dims d JOIN cent c ON d.dim = c.dim
-  GROUP BY 1, 2, 3
-), cos AS (
-  SELECT dots.vec_id, dots.label, dots.clabel,
-         CAST(dot AS DOUBLE)
-           / (sqrt(CAST(vn2 AS DOUBLE)) * sqrt(CAST(cn2 AS DOUBLE)))
-           AS cos
-  FROM dots
-  JOIN vnorm ON dots.vec_id = vnorm.vec_id
-  JOIN cnorm ON dots.clabel = cnorm.clabel
-), per_vec AS (
-  SELECT vec_id, label,
-         max(CASE WHEN clabel = label THEN cos END) AS own,
-         max(CASE WHEN clabel <> label THEN cos END) AS other
-  FROM cos GROUP BY 1, 2
-)
-SELECT label, CAST(count(*) AS BIGINT) AS n_members,
-       round(avg(own), 6) AS mean_own_cos,
-       round(avg(other), 6) AS mean_other_cos,
-       round(avg(own - other), 6) AS mean_margin
-FROM per_vec GROUP BY 1
-"""
 
 
 # --------------------------------------------------------------------------
@@ -1896,34 +1259,6 @@ def q_session_gap_sweep(spark, sf_dir):
     )
 
 
-SQL_SESSION_GAP_SWEEP = """
-WITH lagged AS (
-  SELECT user_id,
-         epoch_us(ts) - lag(epoch_us(ts)) OVER (
-           PARTITION BY user_id ORDER BY epoch_us(ts), event_id)
-           AS gap_us
-  FROM events
-), gaps AS (
-  SELECT unnest([900, 1800, 3600]) AS gap_s
-)
-SELECT gap_s,
-       CAST(sum(CASE WHEN gap_us IS NULL
-                 OR gap_us > CAST(gap_s AS BIGINT) * 1000000
-                 THEN 1 ELSE 0 END) AS BIGINT) AS n_sessions,
-       CAST(count(DISTINCT user_id) AS BIGINT) AS n_users,
-       round(CAST(sum(CASE WHEN gap_us IS NULL
-                       OR gap_us > CAST(gap_s AS BIGINT) * 1000000
-                       THEN 1 ELSE 0 END) AS DOUBLE)
-             / count(DISTINCT user_id), 6) AS sessions_per_user,
-       round(CAST(count(*) AS DOUBLE)
-             / sum(CASE WHEN gap_us IS NULL
-                   OR gap_us > CAST(gap_s AS BIGINT) * 1000000
-                   THEN 1 ELSE 0 END), 6) AS mean_session_events
-FROM lagged CROSS JOIN gaps
-GROUP BY 1
-"""
-
-
 def q_attribution_multi(spark, sf_dir):
     """MULTI-TOUCH ATTRIBUTION: linear, U-shaped (40/20/40), first-
     touch and last-touch credit per touch channel (event type) for
@@ -2019,61 +1354,6 @@ def q_attribution_multi(spark, sf_dir):
     return out
 
 
-SQL_ATTRIBUTION_MULTI = """
-WITH ev AS (
-  SELECT user_id, event_type, event_id, epoch_us(ts) AS us
-  FROM events
-), buys AS (
-  SELECT user_id, us AS buy_us, event_id AS buy_id
-  FROM ev WHERE event_type = 'purchase'
-), path AS (
-  SELECT b.buy_id, t.event_type, t.us, t.event_id
-  FROM buys b JOIN ev t ON b.user_id = t.user_id
-  WHERE t.event_type <> 'purchase'
-    AND t.us < b.buy_us
-    AND t.us >= b.buy_us - CAST(7 AS BIGINT) * 86400 * 1000000
-), pos AS (
-  SELECT buy_id, event_type,
-         CAST(row_number() OVER (PARTITION BY buy_id
-              ORDER BY us, event_id) AS BIGINT) AS pos,
-         CAST(count(*) OVER (PARTITION BY buy_id) AS BIGINT) AS plen
-  FROM path
-), buckets AS (
-  SELECT event_type, plen,
-         CASE WHEN pos = 1 THEN 60 ELSE 0 END AS fir,
-         CASE WHEN pos = plen THEN 60 ELSE 0 END AS las,
-         CASE WHEN plen = 1 THEN 60
-              WHEN pos = 1 OR pos = plen THEN 24
-              ELSE 0 END AS u_end,
-         CASE WHEN plen > 2 AND pos > 1 AND pos < plen
-              THEN 1 ELSE 0 END AS u_mid,
-         CASE WHEN plen = 2 AND (pos = 1 OR pos = plen)
-              THEN 6 ELSE 0 END AS u_two
-  FROM pos
-), per AS (
-  SELECT event_type, plen,
-         CAST(count(*) AS BIGINT) AS n_touches,
-         CAST(sum(fir) AS BIGINT) AS fir,
-         CAST(sum(las) AS BIGINT) AS las,
-         CAST(sum(u_end) AS BIGINT) AS u_end,
-         CAST(sum(u_mid) AS BIGINT) AS u_mid,
-         CAST(sum(u_two) AS BIGINT) AS u_two
-  FROM buckets GROUP BY 1, 2
-)
-SELECT event_type,
-       CAST(sum(n_touches) AS BIGINT) AS n_touches,
-       round(sum(CAST(fir AS DOUBLE) / 60.0), 6) AS first_touch,
-       round(sum(CAST(las AS DOUBLE) / 60.0), 6) AS last_touch,
-       round(sum(CAST(n_touches AS DOUBLE) / plen), 6) AS linear,
-       round(sum(CAST(u_end AS DOUBLE) / 60.0
-                 + CAST(u_two AS DOUBLE) / 60.0
-                 + CASE WHEN plen > 2 THEN CAST(u_mid AS DOUBLE)
-                   * 12.0 / (60.0 * (plen - 2)) ELSE 0.0 END), 6)
-         AS u_shaped
-FROM per GROUP BY 1
-"""
-
-
 def q_tukey_kramer(spark, sf_dir):
     """TUKEY-KRAMER studentized-range statistics for all pairwise
     mean comparisons after `dow_anova`'s omnibus F: q_ij =
@@ -2141,35 +1421,6 @@ def q_tukey_kramer(spark, sf_dir):
     )
 
 
-SQL_TUKEY_KRAMER = """
-WITH per AS (
-  SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
-           AS s,
-         CAST(sum(CAST(round(value * 100) AS BIGINT)
-                  * CAST(round(value * 100) AS BIGINT)) AS BIGINT)
-           AS q
-  FROM events GROUP BY 1
-), mse AS (
-  SELECT sum(CAST(q AS DOUBLE) - pow(CAST(s AS DOUBLE), 2) / n)
-           / (sum(n) - count(*)) / 10000.0 AS mse,
-         CAST(sum(n) - count(*) AS BIGINT) AS df_within
-  FROM per
-)
-SELECT a.event_type AS type_a, b.event_type AS type_b,
-       a.n AS n_a, b.n AS n_b, df_within,
-       round(abs(CAST(a.s AS DOUBLE) / (100.0 * a.n)
-                 - CAST(b.s AS DOUBLE) / (100.0 * b.n)), 6)
-         AS mean_diff,
-       round(abs(CAST(a.s AS DOUBLE) / (100.0 * a.n)
-                 - CAST(b.s AS DOUBLE) / (100.0 * b.n))
-             / sqrt(mse / 2.0 * (1.0 / a.n + 1.0 / b.n)), 6)
-         AS q_stat
-FROM per a JOIN per b ON a.event_type < b.event_type
-CROSS JOIN mse
-"""
-
-
 def q_trim_sweep(spark, sf_dir):
     """TRIM-LEVEL SENSITIVITY SWEEP: the two-sided trimmed mean of
     purchase ``value`` at alpha = 1%, 5%, 10%, 25% from ONE ranked
@@ -2217,34 +1468,6 @@ def q_trim_sweep(spark, sf_dir):
             F.expr("CAST(s AS DOUBLE) / (100.0 * n_kept)"), 6
         ).alias("trimmed_mean"),
     )
-
-
-SQL_TRIM_SWEEP = """
-WITH r AS (
-  SELECT CAST(round(value * 100) AS BIGINT) AS cents,
-         CAST(row_number() OVER (
-           ORDER BY CAST(round(value * 100) AS BIGINT), event_id)
-           AS BIGINT) AS rn
-  FROM events WHERE event_type = 'purchase'
-), n_row AS (
-  SELECT max(rn) AS n FROM r
-), alphas AS (
-  SELECT unnest([1, 5, 10, 25]) AS alpha_pct
-), per AS (
-  SELECT alpha_pct, max(n) AS n,
-         max(n * alpha_pct // 100) AS k_cut,
-         CAST(count(*) AS BIGINT) AS n_kept,
-         CAST(sum(cents) AS BIGINT) AS s
-  FROM r CROSS JOIN n_row CROSS JOIN alphas
-  WHERE rn > n * alpha_pct // 100
-    AND rn <= n - n * alpha_pct // 100
-  GROUP BY 1
-)
-SELECT alpha_pct, n, k_cut, n_kept,
-       round(CAST(s AS DOUBLE) / (100.0 * n_kept), 6)
-         AS trimmed_mean
-FROM per
-"""
 
 
 def q_funnel_significance(spark, sf_dir):
@@ -2314,44 +1537,3 @@ def q_funnel_significance(spark, sf_dir):
         ).alias("z_vs_prev_step"),
     )
     return out
-
-
-SQL_FUNNEL_SIGNIFICANCE = """
-WITH pres AS (
-  SELECT DISTINCT user_id, event_type FROM events
-), steps AS (
-  SELECT 1 AS step, 'view' AS event_type
-  UNION ALL SELECT 2, 'click'
-  UNION ALL SELECT 3, 'signup'
-  UNION ALL SELECT 4, 'purchase'
-), per_user AS (
-  SELECT user_id, CAST(count(*) AS BIGINT) AS reach
-  FROM pres JOIN steps USING (event_type)
-  GROUP BY 1
-), reach AS (
-  SELECT s.step,
-         CAST((SELECT count(*) FROM per_user
-               WHERE reach >= s.step) AS BIGINT) AS n_users
-  FROM (SELECT DISTINCT step FROM steps) s
-), lagged AS (
-  SELECT step, n_users,
-         lag(n_users) OVER (ORDER BY step) AS prev_users,
-         lag(n_users, 2) OVER (ORDER BY step) AS prev2_users
-  FROM reach
-)
-SELECT step, n_users,
-       round(CAST(n_users AS DOUBLE) / nullif(prev_users, 0), 6)
-         AS conv_from_prev,
-       round(CASE WHEN prev2_users IS NULL THEN NULL ELSE
-             (CAST(prev_users AS DOUBLE) / nullif(prev2_users, 0)
-              - CAST(n_users AS DOUBLE) / nullif(prev_users, 0))
-             / nullif(sqrt((CAST(prev_users + n_users AS DOUBLE)
-                     / (prev2_users + prev_users))
-                    * (1.0 - CAST(prev_users + n_users AS DOUBLE)
-                       / (prev2_users + prev_users))
-                    * (1.0 / nullif(CAST(prev2_users AS DOUBLE), 0.0)
-                       + 1.0 / nullif(CAST(prev_users AS DOUBLE), 0.0))),
-                      0.0)
-             END, 6) AS z_vs_prev_step
-FROM lagged
-"""

@@ -4,17 +4,10 @@ Split from the former crawlfe/queries.py monolith (r4); bodies unchanged.
 """
 from __future__ import annotations
 
-import pandas as pd  # noqa: F401
 from pyspark.sql import DataFrame, SparkSession, Window  # noqa: F401
 from pyspark.sql import functions as F  # noqa: F401
-from pyspark.sql import types as T  # noqa: F401
 
-from .. import clean  # noqa: F401
-from .. import windows as W  # noqa: F401
-from ..asof import asof_join  # noqa: F401
-from ..textfeat import featurize_batch  # noqa: F401
 from ._shared import SESSION_GAP_S, _t, _us  # noqa: F401
-
 
 
 # --------------------------------------------------------------------------
@@ -95,38 +88,6 @@ def q_count_min(spark, sf_dir):
     )
 
 
-SQL_COUNT_MIN = """
-WITH rows_ AS (
-  SELECT CAST(unnest(range(4)) AS INTEGER) AS r
-), regs AS (
-  SELECT r,
-         CAST(CAST('0x' || substr(md5(CAST(r AS VARCHAR) || ':'
-                || CAST(user_id AS VARCHAR)), 1, 15) AS UBIGINT)
-              AS BIGINT) % 64 AS c,
-         CAST(count(*) AS BIGINT) AS reg
-  FROM events CROSS JOIN rows_
-  GROUP BY 1, 2
-), exact AS (
-  SELECT user_id, CAST(count(*) AS BIGINT) AS exact_n
-  FROM events GROUP BY 1
-), probes AS (
-  SELECT user_id, exact_n FROM (
-    SELECT *, row_number() OVER (ORDER BY exact_n DESC, user_id) AS rk
-    FROM exact) t
-  WHERE rk <= 20
-), cells AS (
-  SELECT p.user_id, p.exact_n, r.r,
-         CAST(CAST('0x' || substr(md5(CAST(r.r AS VARCHAR) || ':'
-                || CAST(p.user_id AS VARCHAR)), 1, 15) AS UBIGINT)
-              AS BIGINT) % 64 AS c
-  FROM probes p CROSS JOIN rows_ r
-)
-SELECT c.user_id, c.exact_n, CAST(min(g.reg) AS BIGINT) AS cms_est
-FROM cells c JOIN regs g ON c.r = g.r AND c.c = g.c
-GROUP BY 1, 2
-"""
-
-
 def q_tvd_drift(spark, sf_dir):
     """Per-source total-variation distance between the source's token
     distribution and the REST of the corpus — the sharp, exactly-
@@ -198,44 +159,6 @@ def q_tvd_drift(spark, sf_dir):
     )
 
 
-SQL_TVD_DRIFT = """
-WITH tok AS (
-  SELECT source,
-         unnest(regexp_split_to_array(trim(text), '\\s+')) AS token
-  FROM documents
-), tk AS (
-  SELECT source, token FROM tok WHERE token <> ''
-), st AS (
-  SELECT source, token, CAST(count(*) AS BIGINT) AS c_s
-  FROM tk GROUP BY 1, 2
-), tot AS (
-  SELECT token, CAST(count(*) AS BIGINT) AS c_all
-  FROM tk GROUP BY 1
-), ns AS (
-  SELECT source, CAST(sum(c_s) AS BIGINT) AS n_s FROM st GROUP BY 1
-), na AS (
-  SELECT CAST(sum(c_all) AS BIGINT) AS n_all FROM tot
-), per AS (
-  SELECT st.source, ns.n_s, na.n_all - ns.n_s AS n_r,
-         CAST(sum(abs(st.c_s * (na.n_all - ns.n_s)
-                      - (tot.c_all - st.c_s) * ns.n_s)) AS BIGINT)
-           AS num_seen,
-         CAST(sum(tot.c_all - st.c_s) AS BIGINT) AS cr_seen
-  FROM st
-  JOIN tot ON st.token = tot.token
-  JOIN ns ON st.source = ns.source
-  CROSS JOIN na
-  GROUP BY 1, 2, 3
-)
-SELECT source, n_s,
-       CAST(num_seen + (n_r - cr_seen) * n_s AS BIGINT) AS l1_num,
-       round(CAST(num_seen + (n_r - cr_seen) * n_s AS DOUBLE)
-             / (2.0 * CAST(n_s AS DOUBLE) * CAST(n_r AS DOUBLE)), 6)
-         AS tvd
-FROM per
-"""
-
-
 def q_weighted_median(spark, sf_dir):
     """Per-event_type weighted median of ``value`` with deterministic
     integer weights (w = user_id % 7 + 1 — a stand-in for sampling /
@@ -277,29 +200,6 @@ def q_weighted_median(spark, sf_dir):
             "n",
         )
     )
-
-
-SQL_WEIGHTED_MEDIAN = """
-WITH wtd AS (
-  SELECT event_type, value, event_id,
-         CAST(user_id % 7 + 1 AS BIGINT) AS w
-  FROM events
-), cum AS (
-  SELECT event_type, value,
-         CAST(sum(w) OVER (wc ROWS BETWEEN UNBOUNDED PRECEDING
-                           AND CURRENT ROW) AS BIGINT) AS cum_w,
-         CAST(sum(w) OVER (PARTITION BY event_type) AS BIGINT) AS tot_w,
-         CAST(count(*) OVER (PARTITION BY event_type) AS BIGINT) AS n
-  FROM wtd
-  WINDOW wc AS (PARTITION BY event_type ORDER BY value, event_id)
-)
-SELECT event_type, value AS median_v, tot_w, n
-FROM (
-  SELECT *, row_number() OVER (PARTITION BY event_type
-                               ORDER BY cum_w, value) AS pk
-  FROM cum WHERE cum_w * 2 >= tot_w) t
-WHERE pk = 1
-"""
 
 
 def q_interval_union(spark, sf_dir):
@@ -356,36 +256,6 @@ def q_interval_union(spark, sf_dir):
     )
 
 
-SQL_INTERVAL_UNION = """
-WITH iv AS (
-  SELECT user_id, event_id, epoch_us(ts) AS s,
-         epoch_us(ts) + CAST(round(value * 100) AS BIGINT) * 10000 AS e
-  FROM events
-), brk AS (
-  SELECT user_id, event_id, s, e,
-         CASE WHEN max(e) OVER (w ROWS BETWEEN UNBOUNDED PRECEDING
-                                AND 1 PRECEDING) IS NULL
-                OR s > max(e) OVER (w ROWS BETWEEN UNBOUNDED PRECEDING
-                                    AND 1 PRECEDING)
-              THEN 1 ELSE 0 END AS brk
-  FROM iv
-  WINDOW w AS (PARTITION BY user_id ORDER BY s, event_id)
-), isl AS (
-  SELECT user_id, s, e,
-         sum(brk) OVER (w ROWS BETWEEN UNBOUNDED PRECEDING
-                        AND CURRENT ROW) AS island
-  FROM brk
-  WINDOW w AS (PARTITION BY user_id ORDER BY s, event_id)
-), merged AS (
-  SELECT user_id, island, min(s) AS ms, max(e) AS me
-  FROM isl GROUP BY 1, 2
-)
-SELECT user_id, CAST(count(*) AS BIGINT) AS n_islands,
-       CAST(sum(me - ms) AS BIGINT) AS union_us
-FROM merged GROUP BY 1
-"""
-
-
 def q_welch_t(spark, sf_dir):
     """Per-day Welch two-sample t statistic comparing purchase vs
     click ``value`` — the unequal-variance A/B test behind every
@@ -438,46 +308,6 @@ def q_welch_t(spark, sf_dir):
     return m.select(
         "day", "n1", "n2", F.round(t, 6).alias("welch_t")
     )
-
-
-SQL_WELCH_T = """
-WITH m AS (
-  SELECT CAST(day(ts) AS INTEGER) AS day,
-         CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-              AS BIGINT) AS n1,
-         CAST(sum(CASE WHEN event_type = 'purchase'
-                       THEN CAST(round(value * 100) AS BIGINT)
-                       ELSE 0 END) AS BIGINT) AS s1,
-         CAST(sum(CASE WHEN event_type = 'purchase'
-                       THEN CAST(round(value * 100) AS BIGINT)
-                          * CAST(round(value * 100) AS BIGINT)
-                       ELSE 0 END) AS BIGINT) AS q1,
-         CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
-              AS BIGINT) AS n2,
-         CAST(sum(CASE WHEN event_type = 'click'
-                       THEN CAST(round(value * 100) AS BIGINT)
-                       ELSE 0 END) AS BIGINT) AS s2,
-         CAST(sum(CASE WHEN event_type = 'click'
-                       THEN CAST(round(value * 100) AS BIGINT)
-                          * CAST(round(value * 100) AS BIGINT)
-                       ELSE 0 END) AS BIGINT) AS q2
-  FROM events WHERE event_type IN ('purchase', 'click')
-  GROUP BY 1
-)
-SELECT day, n1, n2,
-       round(((CAST(s1 AS DOUBLE) / CAST(n1 AS DOUBLE))
-              - (CAST(s2 AS DOUBLE) / CAST(n2 AS DOUBLE)))
-             / sqrt(((CAST(q1 AS DOUBLE)
-                      - CAST(s1 AS DOUBLE)
-                        * (CAST(s1 AS DOUBLE) / CAST(n1 AS DOUBLE)))
-                     / (CAST(n1 AS DOUBLE) - 1.0)) / CAST(n1 AS DOUBLE)
-                   + ((CAST(q2 AS DOUBLE)
-                       - CAST(s2 AS DOUBLE)
-                         * (CAST(s2 AS DOUBLE) / CAST(n2 AS DOUBLE)))
-                      / (CAST(n2 AS DOUBLE) - 1.0)) / CAST(n2 AS DOUBLE)),
-             6) AS welch_t
-FROM m WHERE n1 >= 2 AND n2 >= 2
-"""
 
 
 def q_cooccur_lift(spark, sf_dir):
@@ -537,31 +367,6 @@ def q_cooccur_lift(spark, sf_dir):
     )
 
 
-SQL_COOCCUR_LIFT = """
-WITH ut AS (
-  SELECT DISTINCT user_id, event_type FROM events
-), per AS (
-  SELECT event_type, CAST(count(*) AS BIGINT) AS n_t
-  FROM ut GROUP BY 1
-), nu AS (
-  SELECT CAST(count(DISTINCT user_id) AS BIGINT) AS n_users FROM ut
-), pairs AS (
-  SELECT a.event_type AS etype_a, b.event_type AS etype_b,
-         CAST(count(*) AS BIGINT) AS n_co
-  FROM ut a JOIN ut b
-    ON a.user_id = b.user_id AND a.event_type < b.event_type
-  GROUP BY 1, 2
-)
-SELECT p.etype_a, p.etype_b, p.n_co, pa.n_t AS n_a, pb.n_t AS n_b,
-       round(CAST(p.n_co * nu.n_users AS DOUBLE)
-             / CAST(pa.n_t * pb.n_t AS DOUBLE), 6) AS lift
-FROM pairs p
-JOIN per pa ON p.etype_a = pa.event_type
-JOIN per pb ON p.etype_b = pb.event_type
-CROSS JOIN nu
-"""
-
-
 # -- feature-eng pack #25: rank/robust statistics + paired tests ----------
 
 _KT_K = 200  # kendall_tau per-group sample cap (bounds the pair join)
@@ -579,12 +384,6 @@ _NDCG_DISC = tuple(
 )
 _NDCG_CUM = tuple(
     sum(_NDCG_DISC[: i + 1]) for i in range(_NDCG_K)
-)
-_NDCG_DISC_SQL = ", ".join(
-    f"({r}, {d})" for r, d in enumerate(_NDCG_DISC, 1)
-)
-_NDCG_CUM_SQL = ", ".join(
-    f"({r}, {c})" for r, c in enumerate(_NDCG_CUM, 1)
 )
 
 
@@ -649,34 +448,6 @@ def q_kendall_tau(spark, sf_dir):
     )
 
 
-SQL_KENDALL_TAU = f"""
-WITH samp AS (
-  SELECT source, rn, n_chars FROM (
-    SELECT source, n_chars,
-           row_number() OVER (PARTITION BY source ORDER BY doc_id) AS rn
-    FROM documents) t
-  WHERE rn <= {_KT_K}
-), g AS (
-  SELECT a.source,
-         CAST(sum(CASE WHEN b.n_chars > a.n_chars THEN 1 ELSE 0 END)
-              AS BIGINT) AS concordant,
-         CAST(sum(CASE WHEN b.n_chars < a.n_chars THEN 1 ELSE 0 END)
-              AS BIGINT) AS discordant,
-         CAST(sum(CASE WHEN b.n_chars = a.n_chars THEN 1 ELSE 0 END)
-              AS BIGINT) AS ties
-  FROM samp a JOIN samp b
-    ON a.source = b.source AND a.rn < b.rn
-  GROUP BY 1
-)
-SELECT source, concordant, discordant, ties,
-       round(CAST(concordant - discordant AS DOUBLE)
-             / sqrt(CAST(concordant + discordant + ties AS DOUBLE)
-                    * CAST(concordant + discordant AS DOUBLE)),
-             6) AS tau_b
-FROM g WHERE concordant + discordant > 0
-"""
-
-
 def q_two_prop_z(spark, sf_dir):
     """Per-event-type two-proportion z-test of the high-value share
     (value >= 50) against the REST of the corpus — the pooled-variance
@@ -721,36 +492,6 @@ def q_two_prop_z(spark, sf_dir):
         "event_type", "x1", "n1", "x2", "n2",
         F.round(z, 6).alias("z_score"),
     )
-
-
-SQL_TWO_PROP_Z = """
-WITH per AS (
-  SELECT event_type,
-         CAST(count(*) AS BIGINT) AS n1,
-         CAST(sum(CASE WHEN value >= 50.0 THEN 1 ELSE 0 END)
-              AS BIGINT) AS x1
-  FROM events GROUP BY 1
-), tot AS (
-  SELECT CAST(sum(n1) AS BIGINT) AS n_all,
-         CAST(sum(x1) AS BIGINT) AS x_all
-  FROM per
-), j AS (
-  SELECT event_type, x1, n1,
-         CAST(x_all - x1 AS BIGINT) AS x2,
-         CAST(n_all - n1 AS BIGINT) AS n2
-  FROM per CROSS JOIN tot
-)
-SELECT event_type, x1, n1, x2, n2,
-       round((CAST(x1 AS DOUBLE) / CAST(n1 AS DOUBLE)
-              - CAST(x2 AS DOUBLE) / CAST(n2 AS DOUBLE))
-             / sqrt((CAST(x1 + x2 AS DOUBLE) / CAST(n1 + n2 AS DOUBLE))
-                    * (1.0 - CAST(x1 + x2 AS DOUBLE)
-                             / CAST(n1 + n2 AS DOUBLE))
-                    * (1.0 / CAST(n1 AS DOUBLE)
-                       + 1.0 / CAST(n2 AS DOUBLE))),
-             6) AS z_score
-FROM j WHERE n1 > 0 AND n2 > 0
-"""
 
 
 def q_ndcg_at_k(spark, sf_dir):
@@ -815,37 +556,6 @@ def q_ndcg_at_k(spark, sf_dir):
     )
 
 
-SQL_NDCG_AT_K = f"""
-WITH disc AS (
-  SELECT * FROM (VALUES {_NDCG_DISC_SQL}) AS d(rnk, disc)
-), cum AS (
-  SELECT * FROM (VALUES {_NDCG_CUM_SQL}) AS c(nrel_cap, idcg_s)
-), ranked AS (
-  SELECT user_id, event_id,
-         CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS rel,
-         row_number() OVER (PARTITION BY user_id
-                            ORDER BY value DESC, event_id) AS rnk
-  FROM events
-), per AS (
-  SELECT r.user_id, CAST(sum(r.rel * d.disc) AS BIGINT) AS dcg_s
-  FROM ranked r JOIN disc d ON r.rnk = d.rnk
-  WHERE r.rnk <= {_NDCG_K}
-  GROUP BY 1
-), nrel AS (
-  SELECT user_id, CAST(sum(rel) AS BIGINT) AS n_rel
-  FROM ranked GROUP BY 1
-)
-SELECT p.user_id, n.n_rel, p.dcg_s,
-       round(CAST(p.dcg_s AS DOUBLE) / CAST(c.idcg_s AS DOUBLE),
-             6) AS ndcg10
-FROM per p
-JOIN nrel n ON p.user_id = n.user_id
-JOIN cum c
-  ON c.nrel_cap = CAST(least(n.n_rel, {_NDCG_K}) AS INTEGER)
-WHERE n.n_rel > 0
-"""
-
-
 def q_hodges_lehmann(spark, sf_dir):
     """Per-event-type Hodges-Lehmann location estimator — the median
     of all pairwise Walsh averages, the robust (breakdown 29%)
@@ -901,33 +611,6 @@ def q_hodges_lehmann(spark, sf_dir):
     )
 
 
-SQL_HODGES_LEHMANN = f"""
-WITH samp AS (
-  SELECT event_type, rn, c FROM (
-    SELECT event_type,
-           CAST(round(value * 100) AS BIGINT) AS c,
-           row_number() OVER (PARTITION BY event_type
-                              ORDER BY event_id) AS rn
-    FROM events) t
-  WHERE rn <= {_HL_K}
-), walsh AS (
-  SELECT a.event_type, a.c + b.c AS s, a.rn AS i, b.rn AS j
-  FROM samp a JOIN samp b
-    ON a.event_type = b.event_type AND a.rn <= b.rn
-), picked AS (
-  SELECT event_type, s,
-         CAST(count(*) OVER (PARTITION BY event_type) AS BIGINT)
-           AS m_pairs,
-         row_number() OVER (PARTITION BY event_type
-                            ORDER BY s, i, j) AS pk
-  FROM walsh
-)
-SELECT event_type, m_pairs,
-       round(CAST(s AS DOUBLE) / 200.0, 6) AS hl_est
-FROM picked WHERE pk = (m_pairs + 1) // 2
-"""
-
-
 def q_mcnemar_test(spark, sf_dir):
     """Per-event-type McNemar paired test of user activity in the
     first half of the month (day <= 15) vs the second — the paired
@@ -971,28 +654,6 @@ def q_mcnemar_test(spark, sf_dir):
     )
 
 
-SQL_MCNEMAR_TEST = """
-WITH per AS (
-  SELECT event_type, user_id,
-         max(CASE WHEN day(ts) <= 15 THEN 1 ELSE 0 END) AS h1,
-         max(CASE WHEN day(ts) >= 16 THEN 1 ELSE 0 END) AS h2
-  FROM events GROUP BY 1, 2
-), g AS (
-  SELECT event_type,
-         CAST(sum(h1 * h2) AS BIGINT) AS n_both,
-         CAST(sum(h1 * (1 - h2)) AS BIGINT) AS n_h1_only,
-         CAST(sum((1 - h1) * h2) AS BIGINT) AS n_h2_only
-  FROM per GROUP BY 1
-)
-SELECT event_type, n_both, n_h1_only, n_h2_only,
-       round(CAST(n_h1_only - n_h2_only AS DOUBLE)
-             * CAST(n_h1_only - n_h2_only AS DOUBLE)
-             / CAST(n_h1_only + n_h2_only AS DOUBLE),
-             6) AS mcnemar_chi2
-FROM g WHERE n_h1_only + n_h2_only > 0
-"""
-
-
 def q_chao1_richness(spark, sf_dir):
     """Per-source Chao1 vocabulary-richness estimate — how many
     distinct tokens the source WOULD show with unbounded sampling,
@@ -1030,32 +691,6 @@ def q_chao1_richness(spark, sf_dir):
         "source", "s_obs", "f1", "f2",
         F.round(chao1, 6).alias("chao1"),
     )
-
-
-SQL_CHAO1_RICHNESS = """
-WITH tok AS (
-  SELECT source,
-         unnest(regexp_split_to_array(trim(text), '\\s+')) AS token
-  FROM documents
-), tk AS (
-  SELECT source, token FROM tok WHERE token <> ''
-), tf AS (
-  SELECT source, token, CAST(count(*) AS BIGINT) AS f
-  FROM tk GROUP BY 1, 2
-), g AS (
-  SELECT source,
-         CAST(count(*) AS BIGINT) AS s_obs,
-         CAST(sum(CASE WHEN f = 1 THEN 1 ELSE 0 END) AS BIGINT) AS f1,
-         CAST(sum(CASE WHEN f = 2 THEN 1 ELSE 0 END) AS BIGINT) AS f2
-  FROM tf GROUP BY 1
-)
-SELECT source, s_obs, f1, f2,
-       round(CAST(s_obs AS DOUBLE)
-             + (CAST(f1 AS DOUBLE) * (CAST(f1 AS DOUBLE) - 1.0))
-               / (2.0 * (CAST(f2 AS DOUBLE) + 1.0)),
-             6) AS chao1
-FROM g
-"""
 
 
 # -- feature-eng pack #26: corpus-comparison statistics -------------------
@@ -1099,28 +734,6 @@ def q_bayes_shrunk_quality(spark, sf_dir):
         F.round(raw, 6).alias("raw_mean"),
         F.round(shrunk, 6).alias("shrunk_mean"),
     )
-
-
-SQL_BAYES_SHRUNK_QUALITY = f"""
-WITH per AS (
-  SELECT source,
-         CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(least(n_chars, {_BQ_CAP})) AS BIGINT) AS sum_q
-  FROM documents GROUP BY 1
-), tot AS (
-  SELECT CAST(sum(n) AS BIGINT) AS n_all,
-         CAST(sum(sum_q) AS BIGINT) AS s_all
-  FROM per
-)
-SELECT source, n,
-       round(CAST(sum_q AS DOUBLE) / CAST(n AS DOUBLE), 6) AS raw_mean,
-       round((CAST(sum_q AS DOUBLE)
-              + {float(_BQ_K)} * (CAST(s_all AS DOUBLE)
-                                  / CAST(n_all AS DOUBLE)))
-             / (CAST(n AS DOUBLE) + {float(_BQ_K)}),
-             6) AS shrunk_mean
-FROM per CROSS JOIN tot
-"""
 
 
 def q_source_vocab_jaccard(spark, sf_dir):
@@ -1182,32 +795,6 @@ def q_source_vocab_jaccard(spark, sf_dir):
         "src_a", "src_b", "n_a", "n_b", "n_inter",
         F.round(jac, 6).alias("jaccard"),
     )
-
-
-SQL_SOURCE_VOCAB_JACCARD = """
-WITH tok AS (
-  SELECT source,
-         unnest(regexp_split_to_array(trim(text), '\\s+')) AS token
-  FROM documents
-), st AS (
-  SELECT DISTINCT source, token FROM tok WHERE token <> ''
-), sizes AS (
-  SELECT source, CAST(count(*) AS BIGINT) AS sz
-  FROM st GROUP BY 1
-), inter AS (
-  SELECT a.source AS src_a, b.source AS src_b,
-         CAST(count(*) AS BIGINT) AS n_inter
-  FROM st a JOIN st b
-    ON a.token = b.token AND a.source < b.source
-  GROUP BY 1, 2
-)
-SELECT i.src_a, i.src_b, sa.sz AS n_a, sb.sz AS n_b, i.n_inter,
-       round(CAST(i.n_inter AS DOUBLE)
-             / CAST(sa.sz + sb.sz - i.n_inter AS DOUBLE), 6) AS jaccard
-FROM inter i
-JOIN sizes sa ON i.src_a = sa.source
-JOIN sizes sb ON i.src_b = sb.source
-"""
 
 
 def q_source_centroid_sim(spark, sf_dir):
@@ -1277,34 +864,6 @@ def q_source_centroid_sim(spark, sf_dir):
     )
 
 
-SQL_SOURCE_CENTROID_SIM = """
-WITH tok AS (
-  SELECT source,
-         unnest(regexp_split_to_array(trim(text), '\\s+')) AS token
-  FROM documents
-), tf AS (
-  SELECT source, token, CAST(count(*) AS BIGINT) AS tf
-  FROM tok WHERE token <> '' GROUP BY 1, 2
-), norms AS (
-  SELECT source, CAST(sum(tf * tf) AS BIGINT) AS nrm2
-  FROM tf GROUP BY 1
-), dots AS (
-  SELECT a.source AS src_a, b.source AS src_b,
-         CAST(sum(a.tf * b.tf) AS BIGINT) AS dot
-  FROM tf a JOIN tf b
-    ON a.token = b.token AND a.source < b.source
-  GROUP BY 1, 2
-)
-SELECT d.src_a, d.src_b, d.dot,
-       round(CAST(d.dot AS DOUBLE)
-             / (sqrt(CAST(na.nrm2 AS DOUBLE))
-                * sqrt(CAST(nb.nrm2 AS DOUBLE))), 6) AS cosine
-FROM dots d
-JOIN norms na ON d.src_a = na.source
-JOIN norms nb ON d.src_b = nb.source
-"""
-
-
 def q_token_burstiness(spark, sf_dir):
     """Per-token burstiness (Fano factor of per-doc counts, zeros
     included): content words clump — a token appearing 100 times in 3
@@ -1349,31 +908,6 @@ def q_token_burstiness(spark, sf_dir):
     )
 
 
-SQL_TOKEN_BURSTINESS = f"""
-WITH tok AS (
-  SELECT doc_id,
-         unnest(regexp_split_to_array(trim(text), '\\s+')) AS token
-  FROM documents
-), dt AS (
-  SELECT doc_id, token, CAST(count(*) AS BIGINT) AS c
-  FROM tok WHERE token <> '' GROUP BY 1, 2
-), nd AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_docs FROM documents
-), per AS (
-  SELECT token,
-         CAST(count(*) AS BIGINT) AS n_present,
-         CAST(sum(c) AS BIGINT) AS s,
-         CAST(sum(c * c) AS BIGINT) AS q
-  FROM dt GROUP BY 1
-)
-SELECT token, n_present, s,
-       round(CAST(n_docs * q - s * s AS DOUBLE)
-             / CAST(n_docs * s AS DOUBLE), 6) AS fano
-FROM per CROSS JOIN nd
-WHERE s >= {_BURST_MIN}
-"""
-
-
 def q_token_novelty(spark, sf_dir):
     """Per-document novelty rate — the fraction of the doc's distinct
     tokens making their FIRST corpus appearance in this doc (by
@@ -1415,28 +949,6 @@ def q_token_novelty(spark, sf_dir):
             6,
         ).alias("novelty"),
     )
-
-
-SQL_TOKEN_NOVELTY = """
-WITH tok AS (
-  SELECT doc_id,
-         unnest(regexp_split_to_array(trim(text), '\\s+')) AS token
-  FROM documents
-), dt AS (
-  SELECT DISTINCT doc_id, token FROM tok WHERE token <> ''
-), first_ AS (
-  SELECT token, min(doc_id) AS first_doc FROM dt GROUP BY 1
-)
-SELECT d.doc_id,
-       CAST(count(*) AS BIGINT) AS n_types,
-       CAST(sum(CASE WHEN f.first_doc = d.doc_id THEN 1 ELSE 0 END)
-            AS BIGINT) AS n_new,
-       round(CAST(sum(CASE WHEN f.first_doc = d.doc_id
-                           THEN 1 ELSE 0 END) AS DOUBLE)
-             / CAST(count(*) AS DOUBLE), 6) AS novelty
-FROM dt d JOIN first_ f ON d.token = f.token
-GROUP BY 1
-"""
 
 
 def q_topk_overlap(spark, sf_dir):
@@ -1497,38 +1009,6 @@ def q_topk_overlap(spark, sf_dir):
             F.col("n_shared").cast("double") / float(_TOPK_V), 6
         ).alias("overlap_at_k"),
     )
-
-
-SQL_TOPK_OVERLAP = f"""
-WITH tok AS (
-  SELECT source,
-         unnest(regexp_split_to_array(trim(text), '\\s+')) AS token
-  FROM documents
-), tf AS (
-  SELECT source, token, CAST(count(*) AS BIGINT) AS tf
-  FROM tok WHERE token <> '' GROUP BY 1, 2
-), src_top AS (
-  SELECT source, token FROM (
-    SELECT source, token,
-           row_number() OVER (PARTITION BY source
-                              ORDER BY tf DESC, token) AS rk
-    FROM tf) t
-  WHERE rk <= {_TOPK_V}
-), gl_top AS (
-  SELECT token FROM (
-    SELECT token,
-           row_number() OVER (ORDER BY sum(tf) DESC, token) AS rk
-    FROM tf GROUP BY token) t
-  WHERE rk <= {_TOPK_V}
-)
-SELECT s.source,
-       CAST(sum(CASE WHEN g.token IS NOT NULL THEN 1 ELSE 0 END)
-            AS BIGINT) AS n_shared,
-       round(CAST(sum(CASE WHEN g.token IS NOT NULL THEN 1 ELSE 0 END)
-                  AS DOUBLE) / {float(_TOPK_V)}, 6) AS overlap_at_k
-FROM src_top s LEFT JOIN gl_top g ON s.token = g.token
-GROUP BY 1
-"""
 
 
 # -- feature-eng pack #27: repetition-quality filters ----------------------
@@ -1594,33 +1074,6 @@ def q_top_bigram_frac(spark, sf_dir):
     )
 
 
-SQL_TOP_BIGRAM_FRAC = """
-WITH t AS (
-  SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS toks
-  FROM documents
-), b AS (
-  SELECT doc_id,
-         CAST(len(toks) - 1 AS BIGINT) AS n_bigrams,
-         unnest(list_transform(range(1, len(toks)),
-                               i -> toks[i] || ' ' || toks[i + 1]))
-           AS bigram
-  FROM t WHERE len(toks) >= 2
-), c AS (
-  SELECT doc_id, n_bigrams, bigram,
-         CAST(count(*) AS BIGINT) AS cnt
-  FROM b GROUP BY 1, 2, 3
-), r AS (
-  SELECT *, row_number() OVER (PARTITION BY doc_id
-                               ORDER BY cnt DESC, bigram) AS rk
-  FROM c
-)
-SELECT doc_id, bigram AS top_bigram, cnt AS top_cnt, n_bigrams,
-       round(CAST(cnt AS DOUBLE) / CAST(n_bigrams AS DOUBLE), 6)
-         AS top_frac
-FROM r WHERE rk = 1
-"""
-
-
 def q_bigram_concentration(spark, sf_dir):
     """Per-SOURCE bigram head concentration — the mass of the
     source's ``_BC_K`` most frequent word 2-grams over all its
@@ -1670,35 +1123,6 @@ def q_bigram_concentration(spark, sf_dir):
             6,
         ).alias("concentration"),
     )
-
-
-SQL_BIGRAM_CONCENTRATION = f"""
-WITH t AS (
-  SELECT source, regexp_split_to_array(trim(text), '\\s+') AS toks
-  FROM documents
-), b AS (
-  SELECT source,
-         unnest(list_transform(range(1, len(toks)),
-                               i -> toks[i] || ' ' || toks[i + 1]))
-           AS bigram
-  FROM t WHERE len(toks) >= 2
-), c AS (
-  SELECT source, bigram, CAST(count(*) AS BIGINT) AS cnt
-  FROM b GROUP BY 1, 2
-), r AS (
-  SELECT *, row_number() OVER (PARTITION BY source
-                               ORDER BY cnt DESC, bigram) AS rk
-  FROM c
-)
-SELECT source,
-       CAST(sum(cnt) AS BIGINT) AS n_total,
-       CAST(sum(CASE WHEN rk <= {_BC_K} THEN cnt ELSE 0 END)
-            AS BIGINT) AS head_mass,
-       round(CAST(sum(CASE WHEN rk <= {_BC_K} THEN cnt ELSE 0 END)
-                  AS DOUBLE) / CAST(sum(cnt) AS DOUBLE), 6)
-         AS concentration
-FROM r GROUP BY 1
-"""
 
 
 def q_heaps_two_point(spark, sf_dir):
@@ -1763,40 +1187,6 @@ def q_heaps_two_point(spark, sf_dir):
     )
 
 
-SQL_HEAPS_TWO_POINT = """
-WITH docs AS (
-  SELECT source, doc_id, text,
-         row_number() OVER (PARTITION BY source ORDER BY doc_id) AS rk,
-         count(*) OVER (PARTITION BY source) AS n_docs
-  FROM documents
-), tok AS (
-  SELECT source, (rk * 2 <= n_docs) AS in_half,
-         unnest(regexp_split_to_array(trim(text), '\\s+')) AS token
-  FROM docs
-), per_type AS (
-  SELECT source, token,
-         CAST(count(*) AS BIGINT) AS c,
-         CAST(sum(CASE WHEN in_half THEN 1 ELSE 0 END) AS BIGINT)
-           AS c_half
-  FROM tok WHERE token <> '' GROUP BY 1, 2
-), agg AS (
-  SELECT source,
-         CAST(sum(c) AS BIGINT) AS n2_toks,
-         CAST(sum(c_half) AS BIGINT) AS n1_toks,
-         CAST(count(*) AS BIGINT) AS v2_types,
-         CAST(sum(CASE WHEN c_half > 0 THEN 1 ELSE 0 END) AS BIGINT)
-           AS v1_types
-  FROM per_type GROUP BY 1
-)
-SELECT source, n1_toks, n2_toks, v1_types, v2_types,
-       round(ln(CAST(v2_types AS DOUBLE) / CAST(v1_types AS DOUBLE))
-             / ln(CAST(n2_toks AS DOUBLE) / CAST(n1_toks AS DOUBLE)),
-             6) AS heaps_beta
-FROM agg
-WHERE n1_toks > 0 AND n2_toks > n1_toks
-"""
-
-
 def q_longest_token_run(spark, sf_dir):
     """Per-document LONGEST CONSECUTIVE RUN of one token — 'spam spam
     spam spam' detection that the bag-of-words dup fractions miss
@@ -1839,36 +1229,6 @@ def q_longest_token_run(spark, sf_dir):
             "run_start",
         )
     )
-
-
-SQL_LONGEST_TOKEN_RUN = """
-WITH t AS (
-  SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS toks
-  FROM documents
-), pos AS (
-  SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos, toks[i] AS token
-  FROM t, unnest(range(1, len(toks) + 1)) AS u(i)
-  WHERE toks[i] <> ''
-), runs AS (
-  SELECT doc_id, token,
-         pos - row_number() OVER (PARTITION BY doc_id, token
-                                  ORDER BY pos) AS island,
-         pos
-  FROM pos
-), agg AS (
-  SELECT doc_id, token, island,
-         CAST(count(*) AS BIGINT) AS run_len,
-         CAST(min(pos) AS BIGINT) AS run_start
-  FROM runs GROUP BY 1, 2, 3
-), r AS (
-  SELECT *, row_number() OVER (PARTITION BY doc_id
-                               ORDER BY run_len DESC, token,
-                                        run_start) AS rk
-  FROM agg
-)
-SELECT doc_id, token AS run_token, run_len, run_start
-FROM r WHERE rk = 1
-"""
 
 
 def q_intra_doc_sim(spark, sf_dir):
@@ -1917,33 +1277,6 @@ def q_intra_doc_sim(spark, sf_dir):
     )
 
 
-SQL_INTRA_DOC_SIM = """
-WITH t AS (
-  SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS toks
-  FROM documents
-), pos AS (
-  SELECT doc_id, len(toks) AS n, i - 1 AS pos, toks[i] AS token
-  FROM t, unnest(range(1, len(toks) + 1)) AS u(i)
-  WHERE len(toks) >= 2 AND toks[i] <> ''
-), flags AS (
-  SELECT doc_id, token,
-         max(CASE WHEN pos * 2 < n THEN 1 ELSE 0 END) AS in_a,
-         max(CASE WHEN pos * 2 >= n THEN 1 ELSE 0 END) AS in_b
-  FROM pos GROUP BY 1, 2
-), agg AS (
-  SELECT doc_id,
-         CAST(sum(in_a) AS BIGINT) AS n_a,
-         CAST(sum(in_b) AS BIGINT) AS n_b,
-         CAST(sum(in_a * in_b) AS BIGINT) AS n_inter
-  FROM flags GROUP BY 1
-)
-SELECT doc_id, n_a, n_b, n_inter,
-       round(CAST(n_inter AS DOUBLE)
-             / CAST(n_a + n_b - n_inter AS DOUBLE), 6) AS half_jaccard
-FROM agg
-"""
-
-
 def q_yule_k(spark, sf_dir):
     """Per-source Yule's K lexical-repetitiveness characteristic
     (Yule 1944, public method): K = 10^4 * (M2 - M1) / M1^2 with
@@ -1983,22 +1316,3 @@ def q_yule_k(spark, sf_dir):
         "source", "n_types", "m1", "m2",
         F.round(k, 6).alias("yule_k"),
     )
-
-
-SQL_YULE_K = """
-WITH tok AS (
-  SELECT source,
-         unnest(regexp_split_to_array(trim(text), '\\s+')) AS token
-  FROM documents
-), tf AS (
-  SELECT source, token, CAST(count(*) AS BIGINT) AS tf
-  FROM tok WHERE token <> '' GROUP BY 1, 2
-)
-SELECT source,
-       CAST(count(*) AS BIGINT) AS n_types,
-       CAST(sum(tf) AS BIGINT) AS m1,
-       CAST(sum(tf * tf) AS BIGINT) AS m2,
-       round(10000.0 * CAST(sum(tf * tf) - sum(tf) AS DOUBLE)
-             / CAST(sum(tf) * sum(tf) AS DOUBLE), 6) AS yule_k
-FROM tf GROUP BY 1
-"""

@@ -84,40 +84,6 @@ def q_mantel_haenszel(spark, sf_dir):
     )
 
 
-SQL_MANTEL_HAENSZEL = f"""
-WITH cells AS (
-  SELECT CAST(extract(day FROM ts) AS INTEGER) AS stratum,
-         CAST(sum(CASE WHEN event_type = 'purchase'
-                        AND CAST(round(value * 100) AS BIGINT)
-                            >= {_MH_OUTCOME_CENTS}
-                  THEN 1 ELSE 0 END) AS BIGINT) AS a,
-         CAST(sum(CASE WHEN event_type = 'purchase'
-                        AND CAST(round(value * 100) AS BIGINT)
-                            < {_MH_OUTCOME_CENTS}
-                  THEN 1 ELSE 0 END) AS BIGINT) AS b,
-         CAST(sum(CASE WHEN event_type = 'click'
-                        AND CAST(round(value * 100) AS BIGINT)
-                            >= {_MH_OUTCOME_CENTS}
-                  THEN 1 ELSE 0 END) AS BIGINT) AS c,
-         CAST(sum(CASE WHEN event_type = 'click'
-                        AND CAST(round(value * 100) AS BIGINT)
-                            < {_MH_OUTCOME_CENTS}
-                  THEN 1 ELSE 0 END) AS BIGINT) AS d
-  FROM events
-  WHERE event_type IN ('purchase', 'click')
-  GROUP BY 1
-), withn AS (SELECT *, a + b + c + d AS n FROM cells)
-SELECT CAST(count(*) AS BIGINT) AS n_strata,
-       CAST(sum(a) AS BIGINT) AS a_total,
-       CAST(sum(d) AS BIGINT) AS d_total,
-       round(sum(a * d / CAST(n AS DOUBLE))
-             / sum(b * c / CAST(n AS DOUBLE)), 6) AS or_mh,
-       round((sum(a) * sum(d)) / CAST(sum(b) * sum(c) AS DOUBLE), 6)
-         AS or_crude
-FROM withn
-"""
-
-
 def q_cochran_armitage(spark, sf_dir):
     """Cochran-Armitage linear trend z² for P(lang='en') across
     doc-length dose groups scored s = least(3, n_chars div 500).
@@ -157,32 +123,6 @@ def q_cochran_armitage(spark, sf_dir):
             6,
         ).alias("chi2_ca"),
     )
-
-
-SQL_COCHRAN_ARMITAGE = f"""
-WITH scored AS (
-  SELECT least({_CA_MAX_SCORE}, n_chars // {_CA_BIN_CHARS}) AS s,
-         CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS hit
-  FROM documents
-), g AS (
-  SELECT s, CAST(count(*) AS BIGINT) AS n_i,
-         CAST(sum(hit) AS BIGINT) AS r_i
-  FROM scored GROUP BY s
-)
-SELECT CAST(count(*) AS BIGINT) AS n_groups,
-       CAST(sum(n_i) AS BIGINT) AS n_total,
-       CAST(sum(r_i) AS BIGINT) AS n_event,
-       round(
-         pow(sum(s * r_i)
-             - (sum(r_i) / CAST(sum(n_i) AS DOUBLE)) * sum(s * n_i), 2)
-         / ((sum(r_i) / CAST(sum(n_i) AS DOUBLE))
-            * (1.0 - sum(r_i) / CAST(sum(n_i) AS DOUBLE))
-            * (sum(s * s * n_i)
-               - pow(CAST(sum(s * n_i) AS DOUBLE), 2)
-                 / CAST(sum(n_i) AS DOUBLE))),
-         6) AS chi2_ca
-FROM g
-"""
 
 
 def q_jackknife_ratio(spark, sf_dir):
@@ -246,33 +186,3 @@ def q_jackknife_ratio(spark, sf_dir):
         )
     )
     return groups.unionAll(total)
-
-
-SQL_JACKKNIFE_RATIO = """
-WITH per AS (
-  SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-         CAST(sum(n_chars) AS BIGINT) AS chars_total
-  FROM documents GROUP BY source
-), tot AS (
-  SELECT sum(n_docs) AS nn, sum(chars_total) AS tt,
-         CAST(count(*) AS DOUBLE) AS gg
-  FROM per
-), loo AS (
-  SELECT p.source, p.n_docs, p.chars_total,
-         (t.tt - p.chars_total) / CAST(t.nn - p.n_docs AS DOUBLE)
-           AS theta_g,
-         t.nn, t.tt, t.gg
-  FROM per p CROSS JOIN tot t
-)
-SELECT source, n_docs, chars_total, round(theta_g, 6) AS theta_loo,
-       CAST(NULL AS DOUBLE) AS jk_se
-FROM loo
-UNION ALL
-SELECT '__TOTAL__', CAST(nn AS BIGINT), CAST(tt AS BIGINT),
-       round(tt / CAST(nn AS DOUBLE), 6),
-       round(sqrt((gg - 1) / gg
-                  * (sum(theta_g * theta_g)
-                     - gg * pow(avg(theta_g), 2))), 6)
-FROM loo
-GROUP BY nn, tt, gg
-"""

@@ -4,39 +4,10 @@ Split from the former crawlfe/queries.py monolith (r4); bodies unchanged.
 """
 from __future__ import annotations
 
-import pandas as pd  # noqa: F401
 from pyspark.sql import DataFrame, SparkSession, Window  # noqa: F401
 from pyspark.sql import functions as F  # noqa: F401
-from pyspark.sql import types as T  # noqa: F401
 
-from .. import clean  # noqa: F401
-from .. import windows as W  # noqa: F401
-from ..asof import asof_join  # noqa: F401
-from ..textfeat import featurize_batch  # noqa: F401
 from ._shared import SESSION_GAP_S, _t, _us  # noqa: F401
-
-
-
-SQL_DWELL_SHARE = """
-WITH iv AS (
-  SELECT event_type,
-         (lead(epoch_us(ts)) OVER (PARTITION BY user_id
-                                   ORDER BY epoch_us(ts), event_id)
-          - epoch_us(ts)) // 1000 AS w_ms
-  FROM events
-), per AS (
-  SELECT event_type,
-         CAST(count(*) AS BIGINT) AS n_intervals,
-         CAST(sum(w_ms) AS BIGINT) AS dwell_ms
-  FROM iv WHERE w_ms IS NOT NULL GROUP BY 1
-), tot AS (
-  SELECT CAST(sum(dwell_ms) AS BIGINT) AS total_ms FROM per
-)
-SELECT event_type, n_intervals, dwell_ms,
-       round(CAST(dwell_ms AS DOUBLE) / CAST(t.total_ms AS DOUBLE),
-             6) AS dwell_share
-FROM per CROSS JOIN tot t
-"""
 
 
 _BH_LONG = 300  # chars: a "long" document for the per-source rate test
@@ -122,45 +93,6 @@ def q_bh_fdr(spark, sf_dir):
     )
 
 
-SQL_BH_FDR = """
-WITH per AS (
-  SELECT source,
-         CAST(count(*) AS BIGINT) AS n_docs,
-         CAST(sum(CASE WHEN n_chars >= 300 THEN 1 ELSE 0 END)
-              AS BIGINT) AS n_long
-  FROM documents GROUP BY 1
-), tot AS (
-  SELECT CAST(sum(n_docs) AS BIGINT) AS n_all,
-         CAST(sum(n_long) AS BIGINT) AS long_all,
-         CAST(count(*) AS BIGINT) AS m
-  FROM per
-), z AS (
-  SELECT source, n_docs, n_long, m,
-         (CAST(n_long AS DOUBLE) / n_docs
-          - (CAST(long_all AS DOUBLE) + 1.0) / (n_all + 2))
-         / sqrt((CAST(long_all AS DOUBLE) + 1.0) / (n_all + 2)
-                * (1.0 - (CAST(long_all AS DOUBLE) + 1.0) / (n_all + 2))
-                / n_docs) AS z
-  FROM per CROSS JOIN tot
-), p AS (
-  SELECT source, n_docs, n_long, m, z,
-         CAST(round(1e9 * 2.0 / (1.0 + exp(1.702 * abs(z))))
-              AS BIGINT) AS p_ppb
-  FROM z
-), ranked AS (
-  SELECT source, n_docs, n_long, z, p_ppb, m,
-         CAST(row_number() OVER (ORDER BY p_ppb, source)
-              AS BIGINT) AS p_rank
-  FROM p
-)
-SELECT source, n_docs, n_long, round(z, 6) AS z, p_ppb, p_rank,
-       p_rank <= coalesce(
-         max(CASE WHEN p_ppb * m <= 100000000 * p_rank
-                  THEN p_rank END) OVER (), 0) AS reject
-FROM ranked
-"""
-
-
 def q_rayleigh_daily(spark, sf_dir):
     """RAYLEIGH TEST for daily periodicity per user: treat each
     event's hour-of-day as an angle on the 24h circle and compute
@@ -198,21 +130,6 @@ def q_rayleigh_daily(spark, sf_dir):
             "rayleigh_z"
         ),
     )
-
-
-SQL_RAYLEIGH_DAILY = """
-WITH per AS (
-  SELECT user_id,
-         CAST(count(*) AS BIGINT) AS n_events,
-         sum(cos(pi() * hour(ts) / 12.0)) AS sc,
-         sum(sin(pi() * hour(ts) / 12.0)) AS ss
-  FROM events GROUP BY 1
-)
-SELECT user_id, n_events,
-       round(sqrt(sc * sc + ss * ss) / n_events, 6) AS resultant,
-       round((sc * sc + ss * ss) / n_events, 6) AS rayleigh_z
-FROM per
-"""
 
 
 def q_markov_surprise(spark, sf_dir):
@@ -270,36 +187,6 @@ def q_markov_surprise(spark, sf_dir):
             F.round(F.avg("bits"), 6).alias("surprise_bits"),
         )
     )
-
-
-SQL_MARKOV_SURPRISE = """
-WITH steps AS (
-  SELECT user_id,
-         lag(event_type) OVER (PARTITION BY user_id
-                               ORDER BY epoch_us(ts), event_id) AS prev,
-         event_type AS cur
-  FROM events
-), st AS (
-  SELECT * FROM steps WHERE prev IS NOT NULL
-), pair AS (
-  SELECT prev, cur, CAST(count(*) AS BIGINT) AS c_pn
-  FROM st GROUP BY 1, 2
-), prevc AS (
-  SELECT prev, CAST(count(*) AS BIGINT) AS c_p FROM st GROUP BY 1
-), vc AS (
-  SELECT CAST(count(DISTINCT event_type) AS BIGINT) AS v FROM events
-), model AS (
-  SELECT pair.prev, pair.cur,
-         -log2((CAST(c_pn AS DOUBLE) + 1.0)
-               / (CAST(c_p AS DOUBLE) + v)) AS bits
-  FROM pair JOIN prevc ON pair.prev = prevc.prev CROSS JOIN vc
-)
-SELECT st.user_id,
-       CAST(count(*) AS BIGINT) AS n_steps,
-       round(avg(bits), 6) AS surprise_bits
-FROM st JOIN model ON st.prev = model.prev AND st.cur = model.cur
-GROUP BY 1
-"""
 
 
 def q_readability(spark, sf_dir):
@@ -366,42 +253,6 @@ def q_readability(spark, sf_dir):
     )
 
 
-SQL_READABILITY = """
-WITH per AS (
-  SELECT source,
-         CAST(len(string_split_regex(trim(text), '\\s+'))
-              AS BIGINT) AS words,
-         greatest(CAST(1 AS BIGINT),
-           CAST(length(regexp_replace(text, '[.!?]+', '#', 'g'))
-                - length(regexp_replace(text, '[.!?]+', '', 'g'))
-                AS BIGINT)) AS sents,
-         CAST(length(regexp_replace(lower(text), '[aeiouy]+', '#', 'g'))
-              - length(regexp_replace(lower(text), '[aeiouy]+', '', 'g'))
-              AS BIGINT) AS syll0
-  FROM documents WHERE trim(text) <> ''
-), adj AS (
-  SELECT source, words, sents,
-         greatest(syll0, words) AS syll,
-         206.835 - 1.015 * (CAST(words AS DOUBLE)
-                            / greatest(CAST(1 AS BIGINT), sents))
-                 - 84.6 * (CAST(greatest(syll0, words) AS DOUBLE)
-                           / words) AS fre
-  FROM per
-)
-SELECT source,
-       CAST(count(*) AS BIGINT) AS n_docs,
-       CAST(sum(words) AS BIGINT) AS sum_words,
-       CAST(sum(sents) AS BIGINT) AS sum_sents,
-       CAST(sum(syll) AS BIGINT) AS sum_syll,
-       round(CAST(sum(words) AS DOUBLE) / CAST(sum(sents) AS DOUBLE),
-             6) AS words_per_sent,
-       round(CAST(sum(syll) AS DOUBLE) / CAST(sum(words) AS DOUBLE),
-             6) AS syll_per_word,
-       round(avg(fre), 6) AS flesch
-FROM adj GROUP BY 1
-"""
-
-
 def q_hapax_ratio(spark, sf_dir):
     """HAPAX LEGOMENA profile per source: the share of the source's
     vocabulary that occurs exactly once (hapax) and exactly twice
@@ -445,31 +296,6 @@ def q_hapax_ratio(spark, sf_dir):
             6,
         ).alias("hapax_token_share"),
     )
-
-
-SQL_HAPAX_RATIO = """
-WITH tok AS (
-  SELECT source, t.token
-  FROM documents,
-       LATERAL unnest(string_split_regex(trim(text), '\\s+'))
-         AS t(token)
-  WHERE t.token <> ''
-), st AS (
-  SELECT source, token, CAST(count(*) AS BIGINT) AS c
-  FROM tok GROUP BY 1, 2
-)
-SELECT source,
-       CAST(sum(c) AS BIGINT) AS n_tokens,
-       CAST(count(*) AS BIGINT) AS vocab,
-       CAST(sum(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS BIGINT) AS hapax,
-       CAST(sum(CASE WHEN c = 2 THEN 1 ELSE 0 END)
-            AS BIGINT) AS dis_legomena,
-       round(CAST(sum(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS DOUBLE)
-             / CAST(count(*) AS DOUBLE), 6) AS hapax_ratio,
-       round(CAST(sum(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS DOUBLE)
-             / CAST(sum(c) AS DOUBLE), 6) AS hapax_token_share
-FROM st GROUP BY 1
-"""
 
 
 def q_gini_mean_diff(spark, sf_dir):
@@ -525,33 +351,6 @@ def q_gini_mean_diff(spark, sf_dir):
     )
 
 
-SQL_GINI_MEAN_DIFF = """
-WITH r AS (
-  SELECT event_type, event_id,
-         CAST(round(value * 100) AS BIGINT) AS cents,
-         CAST(row_number() OVER (PARTITION BY event_type
-                                 ORDER BY CAST(round(value * 100)
-                                               AS BIGINT), event_id)
-              AS BIGINT) AS rn
-  FROM events
-), agg AS (
-  SELECT event_type,
-         CAST(count(*) AS BIGINT) AS n_events,
-         CAST(sum(rn * cents) AS BIGINT) AS sic,
-         CAST(sum(cents) AS BIGINT) AS sc
-  FROM r GROUP BY 1
-)
-SELECT event_type, n_events,
-       CAST(2 * sic - (n_events + 1) * sc AS BIGINT) AS s_weighted,
-       round(2.0 * (2 * sic - (n_events + 1) * sc)
-             / (CAST(n_events AS DOUBLE) * (n_events - 1)) / 100.0,
-             6) AS gmd,
-       round(CAST(2 * sic - (n_events + 1) * sc AS DOUBLE)
-             / (CAST(n_events - 1 AS DOUBLE) * sc), 6) AS gini
-FROM agg
-"""
-
-
 def q_pinball_loss(spark, sf_dir):
     """PINBALL (quantile) LOSS forecast evaluation: split the event
     stream at the temporal midpoint, fit the q=0.9 quantile of each
@@ -601,37 +400,6 @@ def q_pinball_loss(spark, sf_dir):
             F.avg((F.col("cents") >= F.col("q90c")).cast("double")), 6
         ).alias("test_coverage"),
     )
-
-
-SQL_PINBALL_LOSS = """
-WITH base AS (
-  SELECT event_type, epoch_us(ts) AS us,
-         CAST(round(value * 100) AS BIGINT) AS cents
-  FROM events
-), split AS (
-  SELECT (min(us) + max(us)) // 2 AS cut_us FROM base
-), train_q AS (
-  SELECT event_type,
-         CAST(count(*) AS BIGINT) AS n_train,
-         quantile_cont(cents, 0.9) AS q90c
-  FROM base CROSS JOIN split WHERE us < cut_us GROUP BY 1
-), scored AS (
-  SELECT b.event_type, n_train, q90c, cents,
-         CASE WHEN cents >= q90c THEN 0.9 * (cents - q90c)
-              ELSE 0.1 * (q90c - cents) END AS loss_c
-  FROM base b CROSS JOIN split
-  JOIN train_q ON b.event_type = train_q.event_type
-  WHERE us >= cut_us
-)
-SELECT event_type,
-       max(n_train) AS n_train,
-       CAST(count(*) AS BIGINT) AS n_test,
-       round(max(q90c) / 100.0, 6) AS q90,
-       round(avg(loss_c) / 100.0, 6) AS pinball,
-       round(avg(CASE WHEN cents >= q90c THEN 1.0 ELSE 0.0 END),
-             6) AS test_coverage
-FROM scored GROUP BY 1
-"""
 
 
 def q_hurst_vt(spark, sf_dir):
@@ -704,52 +472,6 @@ def q_hurst_vt(spark, sf_dir):
     )
 
 
-SQL_HURST_VT = """
-WITH daily AS (
-  SELECT event_type, CAST(ts AS DATE) AS day,
-         CAST(count(*) AS BIGINT) AS c
-  FROM events GROUP BY 1, 2
-), blk AS (
-  SELECT event_type, c,
-         CAST((row_number() OVER (PARTITION BY event_type
-                                  ORDER BY day) - 1) // 4
-              AS BIGINT) AS blk
-  FROM daily
-), v1 AS (
-  SELECT event_type,
-         CAST(count(*) AS BIGINT) AS n_days,
-         CAST(sum(c) AS BIGINT) AS s1,
-         CAST(sum(c * c) AS BIGINT) AS s2
-  FROM blk GROUP BY 1
-), b4 AS (
-  SELECT event_type, blk,
-         CAST(count(*) AS BIGINT) AS bn,
-         CAST(sum(c) AS BIGINT) AS bc
-  FROM blk GROUP BY 1, 2
-), v4 AS (
-  SELECT event_type,
-         CAST(count(*) AS BIGINT) AS n_blocks,
-         CAST(sum(bc) AS BIGINT) AS t1,
-         CAST(sum(bc * bc) AS BIGINT) AS t2
-  FROM b4 WHERE bn = 4 GROUP BY 1
-), j AS (
-  SELECT v1.event_type, n_days, n_blocks,
-         (CAST(n_days AS DOUBLE) * s2 - CAST(s1 AS DOUBLE) * s1)
-           / (CAST(n_days AS DOUBLE) * n_days) AS v1d,
-         (CAST(n_blocks AS DOUBLE) * t2 - CAST(t1 AS DOUBLE) * t1)
-           / (CAST(n_blocks AS DOUBLE) * n_blocks) AS v4d
-  FROM v1 JOIN v4 USING (event_type)
-)
-SELECT event_type, n_days, n_blocks,
-       round(v1d, 6) AS var_1d,
-       round(v4d, 6) AS var_4d,
-       round(CASE WHEN v1d > 0 AND v4d > 0
-                  THEN ln(v4d / v1d) / (2.0 * ln(4.0)) END,
-             6) AS hurst
-FROM j
-"""
-
-
 def q_running_records(spark, sf_dir):
     """RUNNING RECORDS per user: how many events set a new all-time
     personal maximum value — for an i.i.d. sequence the expected
@@ -801,31 +523,6 @@ def q_running_records(spark, sf_dir):
             6,
         ).alias("record_ratio"),
     )
-
-
-SQL_RUNNING_RECORDS = """
-WITH r AS (
-  SELECT user_id,
-         CAST(round(value * 100) AS BIGINT) AS cents,
-         max(CAST(round(value * 100) AS BIGINT)) OVER (
-           PARTITION BY user_id ORDER BY epoch_us(ts), event_id
-           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-           AS prev_max,
-         CAST(row_number() OVER (PARTITION BY user_id
-                                 ORDER BY epoch_us(ts), event_id)
-              AS BIGINT) AS rn
-  FROM events
-)
-SELECT user_id,
-       CAST(count(*) AS BIGINT) AS n_events,
-       CAST(sum(CASE WHEN prev_max IS NULL OR cents > prev_max
-                     THEN 1 ELSE 0 END) AS BIGINT) AS n_records,
-       round(sum(1.0 / rn), 6) AS h_n,
-       round(CAST(sum(CASE WHEN prev_max IS NULL OR cents > prev_max
-                           THEN 1 ELSE 0 END) AS DOUBLE)
-             / sum(1.0 / rn), 6) AS record_ratio
-FROM r GROUP BY 1
-"""
 
 
 def q_turning_points(spark, sf_dir):
@@ -885,35 +582,6 @@ def q_turning_points(spark, sf_dir):
             6,
         ).alias("z"),
     )
-
-
-SQL_TURNING_POINTS = """
-WITH r AS (
-  SELECT user_id,
-         CAST(round(value * 100) AS BIGINT) AS cents,
-         lag(CAST(round(value * 100) AS BIGINT)) OVER (
-           PARTITION BY user_id
-           ORDER BY epoch_us(ts), event_id) AS pv,
-         lead(CAST(round(value * 100) AS BIGINT)) OVER (
-           PARTITION BY user_id
-           ORDER BY epoch_us(ts), event_id) AS nx
-  FROM events
-), agg AS (
-  SELECT user_id,
-         CAST(count(*) AS BIGINT) AS n_events,
-         CAST(sum(CASE WHEN pv IS NOT NULL AND nx IS NOT NULL
-                        AND (cents - pv) * (cents - nx) > 0
-                       THEN 1 ELSE 0 END) AS BIGINT) AS t_points
-  FROM r GROUP BY 1
-)
-SELECT user_id, n_events, t_points,
-       round(2.0 * CAST(n_events - 2 AS DOUBLE) / 3.0,
-             6) AS expected_t,
-       round((t_points - 2.0 * CAST(n_events - 2 AS DOUBLE) / 3.0)
-             / sqrt((16.0 * CAST(n_events AS DOUBLE) - 29.0) / 90.0),
-             6) AS z
-FROM agg WHERE n_events >= 3
-"""
 
 
 def q_char_bigram_entropy(spark, sf_dir):
@@ -977,39 +645,6 @@ def q_char_bigram_entropy(spark, sf_dir):
     )
 
 
-SQL_CHAR_BIGRAM_ENTROPY = """
-WITH pairs AS (
-  SELECT source, substr(lower(text), i, 2) AS pair
-  FROM (
-    SELECT source, text,
-           unnest(generate_series(1, length(text) - 1)) AS i
-    FROM documents WHERE length(text) >= 2
-  )
-), cp AS (
-  SELECT source, pair, CAST(count(*) AS BIGINT) AS c
-  FROM pairs GROUP BY 1, 2
-), per AS (
-  SELECT source,
-         CAST(sum(c) AS BIGINT) AS n_bigrams,
-         CAST(count(*) AS BIGINT) AS vocab_bigrams,
-         sum(c * log2(CAST(c AS DOUBLE))) AS plg
-  FROM cp GROUP BY 1
-), cf AS (
-  SELECT source, sum(c * log2(CAST(c AS DOUBLE))) AS flg
-  FROM (
-    SELECT source, substr(pair, 1, 1) AS f,
-           CAST(sum(c) AS BIGINT) AS c
-    FROM cp GROUP BY 1, 2
-  ) GROUP BY 1
-)
-SELECT per.source, n_bigrams, vocab_bigrams,
-       round(log2(CAST(n_bigrams AS DOUBLE)) - plg / n_bigrams,
-             6) AS h_pair,
-       round((flg - plg) / n_bigrams, 6) AS h_cond
-FROM per JOIN cf ON per.source = cf.source
-"""
-
-
 def q_silhouette_lite(spark, sf_dir):
     """CENTROID SILHOUETTE per label over the embeddings table: for
     each vector, a = distance to its OWN label centroid, b = distance
@@ -1065,35 +700,6 @@ def q_silhouette_lite(spark, sf_dir):
     )
 
 
-SQL_SILHOUETTE_LITE = """
-WITH dims AS (
-  SELECT vec_id, label, i.idx - 1 AS idx,
-         CAST(embedding[i.idx] AS DOUBLE) AS val
-  FROM embeddings, range(1, 65) i(idx)
-), cent AS (
-  SELECT label AS clabel, idx, avg(val) AS cv
-  FROM dims GROUP BY 1, 2
-), d2 AS (
-  SELECT d.vec_id, d.label, cent.clabel,
-         sum((d.val - cent.cv) * (d.val - cent.cv)) AS d2
-  FROM dims d JOIN cent USING (idx) GROUP BY 1, 2, 3
-), per AS (
-  SELECT vec_id, label,
-         sum(CASE WHEN clabel = label THEN sqrt(d2) END) AS a,
-         min(CASE WHEN clabel <> label THEN sqrt(d2) END) AS b
-  FROM d2 GROUP BY 1, 2
-)
-SELECT label,
-       CAST(count(*) AS BIGINT) AS n_vecs,
-       round(avg(a), 6) AS mean_intra,
-       round(avg(b), 6) AS mean_nearest,
-       round(avg(CASE WHEN greatest(a, b) > 0
-                      THEN (b - a) / greatest(a, b)
-                      ELSE 0.0 END), 6) AS mean_silhouette
-FROM per GROUP BY 1
-"""
-
-
 def q_user_mix_kl(spark, sf_dir):
     """PER-USER KL DIVERGENCE of the event-type mix from the corpus
     mix: KL(user ‖ corpus) = sum_t (c_ut/n_u) * ln((c_ut/n_u) /
@@ -1136,32 +742,6 @@ def q_user_mix_kl(spark, sf_dir):
         F.max("n_types").alias("n_types"),
         F.round(F.sum("term"), 6).alias("kl_nats"),
     )
-
-
-SQL_USER_MIX_KL = """
-WITH ut AS (
-  SELECT user_id, event_type, CAST(count(*) AS BIGINT) AS c_ut
-  FROM events GROUP BY 1, 2
-), un AS (
-  SELECT user_id, CAST(sum(c_ut) AS BIGINT) AS n_u,
-         CAST(count(*) AS BIGINT) AS n_types
-  FROM ut GROUP BY 1
-), gl AS (
-  SELECT event_type, CAST(count(*) AS BIGINT) AS c_t
-  FROM events GROUP BY 1
-), na AS (
-  SELECT CAST(sum(c_t) AS BIGINT) AS n_all FROM gl
-)
-SELECT ut.user_id,
-       max(n_u) AS n_events,
-       max(n_types) AS n_types,
-       round(sum((CAST(c_ut AS DOUBLE) / n_u)
-                 * ln((CAST(c_ut AS DOUBLE) / n_u)
-                      / (CAST(c_t AS DOUBLE) / n_all))), 6) AS kl_nats
-FROM ut JOIN un USING (user_id) JOIN gl USING (event_type)
-CROSS JOIN na
-GROUP BY 1
-"""
 
 
 def q_median_ci(spark, sf_dir):
@@ -1225,43 +805,6 @@ def q_median_ci(spark, sf_dir):
             6,
         ).alias("ci_hi"),
     )
-
-
-SQL_MEDIAN_CI = """
-WITH r AS (
-  SELECT event_type, event_id,
-         CAST(round(value * 100) AS BIGINT) AS cents,
-         CAST(row_number() OVER (
-           PARTITION BY event_type
-           ORDER BY CAST(round(value * 100) AS BIGINT), event_id)
-           AS BIGINT) AS rn
-  FROM events
-), ranks AS (
-  SELECT event_type,
-         CAST(count(*) AS BIGINT) AS n_events,
-         greatest(CAST(1 AS BIGINT),
-           CAST(floor((count(*) - 1.96 * sqrt(count(*))) / 2.0)
-                AS BIGINT)) AS rank_lo
-  FROM r GROUP BY 1
-), rk AS (
-  SELECT event_type, n_events, rank_lo,
-         n_events + 1 - rank_lo AS rank_hi,
-         (n_events + 1) // 2 AS rank_med
-  FROM ranks
-)
-SELECT r.event_type,
-       max(n_events) AS n_events,
-       max(rank_lo) AS rank_lo,
-       max(rank_hi) AS rank_hi,
-       round(max(CASE WHEN rn = rank_lo THEN cents END) / 100.0,
-             6) AS ci_lo,
-       round(max(CASE WHEN rn = rank_med THEN cents END) / 100.0,
-             6) AS median,
-       round(max(CASE WHEN rn = rank_hi THEN cents END) / 100.0,
-             6) AS ci_hi
-FROM r JOIN rk USING (event_type)
-GROUP BY 1
-"""
 
 
 def q_woe_iv(spark, sf_dir):
@@ -1335,54 +878,6 @@ def q_woe_iv(spark, sf_dir):
     )
 
 
-SQL_WOE_IV = """
-WITH base AS (
-  SELECT CAST(round(value * 100) AS BIGINT) AS cents,
-         CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS pos
-  FROM events
-), ed0 AS (
-  SELECT [
-    quantile_cont(cents, 0.1), quantile_cont(cents, 0.2),
-    quantile_cont(cents, 0.3), quantile_cont(cents, 0.4),
-    quantile_cont(cents, 0.5), quantile_cont(cents, 0.6),
-    quantile_cont(cents, 0.7), quantile_cont(cents, 0.8),
-    quantile_cont(cents, 0.9)] AS arr
-  FROM base
-), ed AS (
-  SELECT unnest(arr) AS edge FROM ed0
-), dm AS (
-  SELECT cents, pos, CAST(count(*) AS BIGINT) AS m
-  FROM base GROUP BY 1, 2
-), bucketed AS (
-  SELECT cents, pos, m,
-         CAST(sum(CASE WHEN cents > edge THEN 1 ELSE 0 END)
-              AS BIGINT) + 1 AS bucket
-  FROM dm CROSS JOIN ed GROUP BY 1, 2, 3
-), per AS (
-  SELECT bucket,
-         CAST(sum(CASE WHEN pos = 1 THEN m ELSE 0 END)
-              AS BIGINT) AS n_pos,
-         CAST(sum(CASE WHEN pos = 0 THEN m ELSE 0 END)
-              AS BIGINT) AS n_neg
-  FROM bucketed GROUP BY 1
-), tot AS (
-  SELECT CAST(sum(n_pos) AS BIGINT) AS g,
-         CAST(sum(n_neg) AS BIGINT) AS b
-  FROM per
-)
-SELECT bucket,
-       CAST(n_pos + n_neg AS BIGINT) AS n, n_pos, n_neg,
-       round(ln(((CAST(n_pos AS DOUBLE) + 0.5) / g)
-                / ((CAST(n_neg AS DOUBLE) + 0.5) / b)),
-             6) AS woe,
-       round((CAST(n_pos AS DOUBLE) / g - CAST(n_neg AS DOUBLE) / b)
-             * ln(((CAST(n_pos AS DOUBLE) + 0.5) / g)
-                  / ((CAST(n_neg AS DOUBLE) + 0.5) / b)),
-             6) AS iv_term
-FROM per CROSS JOIN tot
-"""
-
-
 def q_half_activity_day(spark, sf_dir):
     """ACTIVITY HALF-LIFE per user: the day (counted from the user's
     first event) by which HALF of their lifetime events had
@@ -1441,35 +936,6 @@ def q_half_activity_day(spark, sf_dir):
     )
 
 
-SQL_HALF_ACTIVITY_DAY = """
-WITH daily AS (
-  SELECT user_id, CAST(ts AS DATE) AS day,
-         CAST(count(*) AS BIGINT) AS c
-  FROM events GROUP BY 1, 2
-), cum AS (
-  SELECT user_id, day, c,
-         CAST(sum(c) OVER (PARTITION BY user_id ORDER BY day)
-              AS BIGINT) AS cumc,
-         CAST(sum(c) OVER (PARTITION BY user_id) AS BIGINT) AS tot
-  FROM daily
-)
-SELECT user_id,
-       CAST(count(*) AS BIGINT) AS n_days,
-       CAST(sum(c) AS BIGINT) AS total_events,
-       CAST(date_diff('day', min(day),
-            min(CASE WHEN 2 * cumc >= tot THEN day END))
-            AS BIGINT) AS days_to_half,
-       CAST(date_diff('day', min(day), max(day))
-            AS BIGINT) AS span_days,
-       round(CASE WHEN date_diff('day', min(day), max(day)) > 0 THEN
-         CAST(date_diff('day', min(day),
-              min(CASE WHEN 2 * cumc >= tot THEN day END)) AS DOUBLE)
-         / date_diff('day', min(day), max(day)) END,
-         6) AS half_frac
-FROM cum GROUP BY 1
-"""
-
-
 def q_negbin_fit(spark, sf_dir):
     """NEGATIVE-BINOMIAL method-of-moments fit of daily event counts
     per type: r = mu^2/(V - mu), p = mu/V — the standard
@@ -1516,34 +982,6 @@ def q_negbin_fit(spark, sf_dir):
     )
 
 
-SQL_NEGBIN_FIT = """
-WITH daily AS (
-  SELECT event_type, CAST(ts AS DATE) AS day,
-         CAST(count(*) AS BIGINT) AS c
-  FROM events GROUP BY 1, 2
-), agg AS (
-  SELECT event_type,
-         CAST(count(*) AS BIGINT) AS n_days,
-         CAST(sum(c) AS BIGINT) AS s1,
-         CAST(sum(c * c) AS BIGINT) AS s2
-  FROM daily GROUP BY 1
-), j AS (
-  SELECT event_type, n_days,
-         CAST(s1 AS DOUBLE) / n_days AS mu,
-         (CAST(n_days AS DOUBLE) * s2 - CAST(s1 AS DOUBLE) * s1)
-           / (CAST(n_days AS DOUBLE) * n_days) AS vv
-  FROM agg
-)
-SELECT event_type, n_days,
-       round(mu, 6) AS mean_daily,
-       round(vv, 6) AS var_daily,
-       round(CASE WHEN vv > mu THEN mu * mu / (vv - mu) END,
-             6) AS nb_r,
-       round(CASE WHEN vv > mu THEN mu / vv END, 6) AS nb_p
-FROM j
-"""
-
-
 def q_recency_score(spark, sf_dir):
     """EXPONENTIAL-DECAY RECENCY SCORE per user at the corpus
     snapshot (max timestamp): sum over the user's events of
@@ -1576,23 +1014,6 @@ def q_recency_score(spark, sf_dir):
             ).alias("recency_score"),
         )
     )
-
-
-SQL_RECENCY_SCORE = """
-WITH base AS (
-  SELECT user_id, epoch_us(ts) AS us FROM events
-), snap AS (
-  SELECT max(us) AS snap_us FROM base
-)
-SELECT user_id,
-       CAST(count(*) AS BIGINT) AS n_events,
-       CAST(min((snap_us - us) // 86400000000) AS BIGINT)
-         AS last_age_days,
-       round(sum(pow(0.5,
-             CAST((snap_us - us) // 86400000000 AS DOUBLE) / 7.0)),
-             6) AS recency_score
-FROM base CROSS JOIN snap GROUP BY 1
-"""
 
 
 def q_wilson_lcb(spark, sf_dir):
@@ -1638,35 +1059,6 @@ def q_wilson_lcb(spark, sf_dir):
         F.round("lcb", 6).alias("wilson_lcb"),
         F.row_number().over(w).cast("bigint").alias("lcb_rank"),
     )
-
-
-SQL_WILSON_LCB = """
-WITH per AS (
-  SELECT source,
-         CAST(count(*) AS BIGINT) AS n_docs,
-         CAST(sum(CASE WHEN n_chars >= 300 THEN 1 ELSE 0 END)
-              AS BIGINT) AS n_long
-  FROM documents GROUP BY 1
-), p AS (
-  SELECT source, n_docs, n_long,
-         CAST(n_long AS DOUBLE) / n_docs AS p_hat
-  FROM per
-), l AS (
-  SELECT source, n_docs, n_long, p_hat,
-         (p_hat + 1.96 * 1.96 / (2.0 * n_docs)
-          - 1.96 * sqrt(p_hat * (1.0 - p_hat) / n_docs
-                        + 1.96 * 1.96
-                          / (4.0 * CAST(n_docs AS DOUBLE) * n_docs)))
-         / (1.0 + 1.96 * 1.96 / n_docs) AS lcb
-  FROM p
-)
-SELECT source, n_docs, n_long,
-       round(p_hat, 6) AS p_hat,
-       round(lcb, 6) AS wilson_lcb,
-       CAST(row_number() OVER (ORDER BY lcb DESC, source)
-            AS BIGINT) AS lcb_rank
-FROM l
-"""
 
 
 def q_odds_ratio(spark, sf_dir):
@@ -1731,38 +1123,6 @@ def q_odds_ratio(spark, sf_dir):
     )
 
 
-SQL_ODDS_RATIO = """
-WITH per AS (
-  SELECT source,
-         CAST(count(*) AS BIGINT) AS n_docs,
-         CAST(sum(CASE WHEN n_chars >= 300 THEN 1 ELSE 0 END)
-              AS BIGINT) AS a
-  FROM documents GROUP BY 1
-), pb AS (
-  SELECT source, a, n_docs - a AS b FROM per
-), tot AS (
-  SELECT CAST(sum(a) AS BIGINT) AS ta,
-         CAST(sum(b) AS BIGINT) AS tb
-  FROM pb
-), j AS (
-  SELECT source, a, b, ta - a AS c, tb - b AS d,
-         ln(((CAST(a AS DOUBLE) + 0.5) * (CAST(tb - b AS DOUBLE)
-             + 0.5)) / ((CAST(b AS DOUBLE) + 0.5)
-            * (CAST(ta - a AS DOUBLE) + 0.5))) AS lor,
-         sqrt(1.0 / (CAST(a AS DOUBLE) + 0.5)
-              + 1.0 / (CAST(b AS DOUBLE) + 0.5)
-              + 1.0 / (CAST(ta - a AS DOUBLE) + 0.5)
-              + 1.0 / (CAST(tb - b AS DOUBLE) + 0.5)) AS se
-  FROM pb CROSS JOIN tot
-)
-SELECT source, a, b, c, d,
-       round(exp(lor), 6) AS odds_ratio,
-       round(exp(lor - 1.96 * se), 6) AS or_ci_lo,
-       round(exp(lor + 1.96 * se), 6) AS or_ci_hi
-FROM j
-"""
-
-
 def q_value_mode(spark, sf_dir):
     """EXACT MODE of the value distribution per event type — the
     most frequent cent-exact value, its count, and its share of the
@@ -1802,31 +1162,6 @@ def q_value_mode(spark, sf_dir):
             6,
         ).alias("mode_share"),
     )
-
-
-SQL_VALUE_MODE = """
-WITH vc AS (
-  SELECT event_type, CAST(round(value * 100) AS BIGINT) AS cents,
-         CAST(count(*) AS BIGINT) AS c
-  FROM events GROUP BY 1, 2
-), tot AS (
-  SELECT event_type, CAST(sum(c) AS BIGINT) AS n_events,
-         CAST(count(*) AS BIGINT) AS n_distinct
-  FROM vc GROUP BY 1
-), top AS (
-  SELECT event_type, cents, c,
-         row_number() OVER (PARTITION BY event_type
-                            ORDER BY c DESC, cents) AS rn
-  FROM vc
-)
-SELECT top.event_type, n_events, n_distinct,
-       round(cents / 100.0, 6) AS mode_value,
-       c AS mode_count,
-       round(CAST(c AS DOUBLE) / CAST(n_events AS DOUBLE),
-             6) AS mode_share
-FROM top JOIN tot ON top.event_type = tot.event_type
-WHERE rn = 1
-"""
 
 
 def q_bowley_moors(spark, sf_dir):
@@ -1890,40 +1225,6 @@ def q_bowley_moors(spark, sf_dir):
     )
 
 
-SQL_BOWLEY_MOORS = """
-WITH agg AS (
-  SELECT event_type,
-         CAST(count(*) AS BIGINT) AS n_events,
-         quantile_cont(CAST(round(value * 100) AS BIGINT),
-                       0.125) AS e1,
-         quantile_cont(CAST(round(value * 100) AS BIGINT),
-                       0.25) AS e2,
-         quantile_cont(CAST(round(value * 100) AS BIGINT),
-                       0.375) AS e3,
-         quantile_cont(CAST(round(value * 100) AS BIGINT),
-                       0.5) AS e4,
-         quantile_cont(CAST(round(value * 100) AS BIGINT),
-                       0.625) AS e5,
-         quantile_cont(CAST(round(value * 100) AS BIGINT),
-                       0.75) AS e6,
-         quantile_cont(CAST(round(value * 100) AS BIGINT),
-                       0.875) AS e7
-  FROM events GROUP BY 1
-)
-SELECT event_type, n_events,
-       round(e2 / 100.0, 6) AS q1,
-       round(e4 / 100.0, 6) AS median,
-       round(e6 / 100.0, 6) AS q3,
-       round(CASE WHEN e6 - e2 > 0
-                  THEN (e6 + e2 - 2.0 * e4) / (e6 - e2) END,
-             6) AS bowley_skew,
-       round(CASE WHEN e6 - e2 > 0
-                  THEN ((e7 - e5) + (e3 - e1)) / (e6 - e2) END,
-             6) AS moors_kurt
-FROM agg
-"""
-
-
 _TPP_K = 20
 
 
@@ -1966,32 +1267,6 @@ def q_term_position_profile(spark, sf_dir):
             6,
         ).alias("mean_rel_pos"),
     )
-
-
-SQL_TERM_POSITION_PROFILE = """
-WITH toks AS (
-  SELECT doc_id, string_split_regex(trim(text), '\\s+') AS t
-  FROM documents
-), ex AS (
-  SELECT doc_id, t[i] AS token, i AS pos1,
-         CAST(len(t) AS BIGINT) AS len
-  FROM (
-    SELECT doc_id, t, unnest(generate_series(1, len(t))) AS i
-    FROM toks
-  )
-  WHERE t[i] <> ''
-), top AS (
-  SELECT token, CAST(count(*) AS BIGINT) AS total_count
-  FROM ex GROUP BY 1
-  ORDER BY total_count DESC, token LIMIT 20
-)
-SELECT ex.token,
-       max(total_count) AS total_count,
-       CAST(count(DISTINCT ex.doc_id) AS BIGINT) AS n_docs,
-       round(avg(CAST(pos1 AS DOUBLE) / len), 6) AS mean_rel_pos
-FROM ex JOIN top ON ex.token = top.token
-GROUP BY 1
-"""
 
 
 def q_longest_event_run(spark, sf_dir):
@@ -2048,41 +1323,3 @@ def q_longest_event_run(spark, sf_dir):
         F.col("run_len").alias("max_run_len"),
         F.col("event_type").alias("max_run_type"),
     )
-
-
-SQL_LONGEST_EVENT_RUN = """
-WITH r AS (
-  SELECT user_id, event_type, epoch_us(ts) AS us, event_id,
-         CASE WHEN lag(event_type) OVER w IS NULL
-               OR lag(event_type) OVER w <> event_type
-              THEN 1 ELSE 0 END AS chg
-  FROM events
-  WINDOW w AS (PARTITION BY user_id
-               ORDER BY epoch_us(ts), event_id)
-), rid AS (
-  SELECT user_id, event_type,
-         CAST(sum(chg) OVER (PARTITION BY user_id
-              ORDER BY us, event_id
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-              AS BIGINT) AS run_id
-  FROM r
-), runs AS (
-  SELECT user_id, run_id, event_type,
-         CAST(count(*) AS BIGINT) AS run_len
-  FROM rid GROUP BY 1, 2, 3
-), stats AS (
-  SELECT user_id, CAST(sum(run_len) AS BIGINT) AS n_events,
-         CAST(count(*) AS BIGINT) AS n_runs
-  FROM runs GROUP BY 1
-), best AS (
-  SELECT user_id, event_type, run_len,
-         row_number() OVER (PARTITION BY user_id
-                            ORDER BY run_len DESC, run_id) AS rn
-  FROM runs
-)
-SELECT best.user_id, n_events, n_runs,
-       run_len AS max_run_len,
-       event_type AS max_run_type
-FROM best JOIN stats ON best.user_id = stats.user_id
-WHERE rn = 1
-"""

@@ -74,32 +74,6 @@ def q_scan_split_plan(spark, sf_dir):
     )
 
 
-SQL_SCAN_SPLIT_PLAN = f"""
-WITH files AS (
-  SELECT CAST(extract(day FROM ts) AS INTEGER) AS day,
-         CAST(extract(hour FROM ts) AS INTEGER) AS hr,
-         sum(CAST(round(value * 100) AS BIGINT)) AS bytes
-  FROM events GROUP BY 1, 2
-), planned AS (
-  SELECT day, hr, bytes,
-         coalesce(sum(bytes) OVER (PARTITION BY day ORDER BY hr
-                  ROWS BETWEEN UNBOUNDED PRECEDING
-                  AND 1 PRECEDING), 0)
-           // {_SPLIT_BUDGET_CENTS} AS split_id
-  FROM files
-), per_split AS (
-  SELECT day, split_id, count(*) AS files_in_split,
-         sum(bytes) AS split_bytes
-  FROM planned GROUP BY 1, 2
-)
-SELECT day, CAST(sum(files_in_split) AS BIGINT) AS n_files,
-       CAST(count(*) AS BIGINT) AS n_splits,
-       CAST(max(split_bytes) AS BIGINT) AS max_split_bytes,
-       CAST(sum(split_bytes) AS BIGINT) AS total_bytes
-FROM per_split GROUP BY day
-"""
-
-
 def q_online_offline_skew(spark, sf_dir):
     """Training/serving skew: offline = as-of value at the day-15
     cutoff (PIT rule: latest event with day ≤ 15 per user), online =
@@ -177,60 +151,6 @@ def q_online_offline_skew(spark, sf_dir):
     return stats.crossJoin(F.broadcast(psi))
 
 
-SQL_ONLINE_OFFLINE_SKEW = f"""
-WITH e AS (
-  SELECT user_id, ts, event_id,
-         CAST(extract(day FROM ts) AS INTEGER) AS day,
-         CAST(round(value * 100) AS BIGINT) AS cents
-  FROM events
-), online AS (
-  SELECT user_id, cents AS on_cents FROM (
-    SELECT user_id, cents, row_number() OVER (
-      PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rk
-    FROM e) WHERE rk = 1
-), offline AS (
-  SELECT user_id, cents AS off_cents FROM (
-    SELECT user_id, cents, row_number() OVER (
-      PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rk
-    FROM e WHERE day <= {_SKEW_CUTOFF_DAY}) WHERE rk = 1
-), both_sides AS (
-  SELECT o.user_id, on_cents, off_cents,
-         least({_SKEW_MAX_BIN}, on_cents // {_SKEW_BIN_CENTS})
-           AS on_bin,
-         least({_SKEW_MAX_BIN}, off_cents // {_SKEW_BIN_CENTS})
-           AS off_bin
-  FROM online o JOIN offline f ON o.user_id = f.user_id
-), onb AS (SELECT on_bin AS bin, count(*) AS on_n FROM both_sides
-           GROUP BY 1),
-offb AS (SELECT off_bin AS bin, count(*) AS off_n FROM both_sides
-         GROUP BY 1),
-nrow AS (SELECT count(*) AS n_users FROM both_sides),
-bins AS (
-  SELECT coalesce(onb.bin, offb.bin) AS bin,
-         coalesce(on_n, 0) AS on_n, coalesce(off_n, 0) AS off_n
-  FROM onb FULL OUTER JOIN offb ON onb.bin = offb.bin
-), psi AS (
-  SELECT round(sum(
-           ((on_n + 1) / CAST(n_users + {_SKEW_MAX_BIN + 1} AS DOUBLE)
-            - (off_n + 1)
-              / CAST(n_users + {_SKEW_MAX_BIN + 1} AS DOUBLE))
-           * ln(((on_n + 1)
-                 / CAST(n_users + {_SKEW_MAX_BIN + 1} AS DOUBLE))
-                / ((off_n + 1)
-                   / CAST(n_users + {_SKEW_MAX_BIN + 1} AS DOUBLE)))
-         ), 6) AS psi
-  FROM bins CROSS JOIN nrow
-)
-SELECT CAST(count(*) AS BIGINT) AS n_users,
-       CAST(sum(CASE WHEN on_cents <> off_cents THEN 1 ELSE 0 END)
-            AS BIGINT) AS n_changed,
-       round(sum(abs(on_cents - off_cents))
-             / (100.0 * count(*)), 4) AS mean_abs_diff,
-       (SELECT psi FROM psi) AS psi
-FROM both_sides
-"""
-
-
 def q_dedup_prefix(spark, sf_dir):
     """Truncation-duplicate pairs: short.text is an exact prefix of
     long.text with strictly fewer chars.  Candidate pairs come ONLY
@@ -275,17 +195,3 @@ def q_dedup_prefix(spark, sf_dir):
         )
         .select("short_id", "long_id", "short_chars", "long_chars")
     )
-
-
-SQL_DEDUP_PREFIX = f"""
-WITH d AS (
-  SELECT doc_id, text, n_chars,
-         md5(substring(text, 1, {_PREFIX_BLOCK_CHARS})) AS blk
-  FROM documents WHERE n_chars >= {_PREFIX_BLOCK_CHARS}
-)
-SELECT a.doc_id AS short_id, b.doc_id AS long_id,
-       a.n_chars AS short_chars, b.n_chars AS long_chars
-FROM d a JOIN d b
-  ON a.blk = b.blk AND a.n_chars < b.n_chars
-WHERE substring(b.text, 1, CAST(a.n_chars AS INTEGER)) = a.text
-"""

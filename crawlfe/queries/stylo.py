@@ -96,44 +96,6 @@ def q_burrows_delta(spark, sf_dir):
     )
 
 
-SQL_BURROWS_DELTA = f"""
-WITH toks AS (
-  SELECT source,
-         unnest(regexp_split_to_array(trim(text), '\\s+')) AS token
-  FROM documents
-), top AS (
-  SELECT token FROM (
-    SELECT token, count(*) AS n FROM toks GROUP BY token
-    ORDER BY n DESC, token ASC LIMIT {_BD_TOPK}
-  )
-), st AS (
-  SELECT t.source, t.token, CAST(count(*) AS BIGINT) AS c
-  FROM toks t JOIN top ON t.token = top.token
-  GROUP BY 1, 2
-), tot AS (
-  SELECT source, CAST(count(*) AS BIGINT) AS tt FROM toks GROUP BY 1
-), grid AS (
-  SELECT tot.source, tot.tt, top.token FROM tot CROSS JOIN top
-), r AS (
-  SELECT grid.source, grid.token,
-         CAST(coalesce(st.c, 0) AS DOUBLE) / grid.tt AS rate
-  FROM grid LEFT JOIN st
-    ON grid.source = st.source AND grid.token = st.token
-), z AS (
-  SELECT source, token,
-         (rate - avg(rate) OVER (PARTITION BY token))
-         / stddev_samp(rate) OVER (PARTITION BY token) AS z
-  FROM r
-)
-SELECT a.source AS s1, b.source AS s2,
-       round(avg(abs(a.z - b.z)), 6) AS delta
-FROM z a JOIN z b
-  ON a.token = b.token AND a.source < b.source
-GROUP BY a.source, b.source
-ORDER BY delta DESC, s1 ASC, s2 ASC LIMIT {_BD_PAIRS}
-"""
-
-
 def q_mahalanobis_outliers(spark, sf_dir):
     """2-D MAHALANOBIS outliers of per-user (cents, events): exact
     BIGINT moments -> closed-form covariance inverse -> top-10 d^2."""
@@ -173,40 +135,6 @@ def q_mahalanobis_outliers(spark, sf_dir):
         .orderBy(F.desc("d2"), F.asc("user_id"))
         .limit(_MAH_TOPK)
     )
-
-
-SQL_MAHALANOBIS_OUTLIERS = f"""
-WITH per AS (
-  SELECT user_id,
-         CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS x,
-         CAST(count(*) AS BIGINT) AS y
-  FROM events GROUP BY user_id
-), m AS (
-  SELECT CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
-         sum(CAST(x AS DOUBLE) * x) AS sxx,
-         sum(CAST(x AS DOUBLE) * y) AS sxy,
-         sum(CAST(y AS DOUBLE) * y) AS syy
-  FROM per
-), s AS (
-  SELECT n, sx, sy, sxx, sxy, syy,
-         CAST(sx AS DOUBLE) / n AS mx, CAST(sy AS DOUBLE) / n AS my
-  FROM m
-), cov AS (
-  SELECT s.*,
-         (sxx - n * mx * mx) / (n - 1) AS s11,
-         (syy - n * my * my) / (n - 1) AS s22,
-         (sxy - n * mx * my) / (n - 1) AS s12
-  FROM s
-)
-SELECT user_id, x, y,
-       round((s22 * (x - mx) * (x - mx)
-              - 2 * s12 * (x - mx) * (y - my)
-              + s11 * (y - my) * (y - my))
-             / (s11 * s22 - s12 * s12), 6) AS d2
-FROM per CROSS JOIN cov
-ORDER BY d2 DESC, user_id ASC LIMIT {_MAH_TOPK}
-"""
 
 
 def q_grubbs_test(spark, sf_dir):
@@ -250,32 +178,3 @@ def q_grubbs_test(spark, sf_dir):
         F.round("g", 6).alias("grubbs_g"),
         (F.col("g") > _GRUBBS_CRIT).cast("int").alias("outlier"),
     )
-
-
-SQL_GRUBBS_TEST = f"""
-WITH daily AS (
-  SELECT CAST(dayofmonth(ts) AS BIGINT) AS day,
-         CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS s,
-         CAST(count(*) AS BIGINT) AS k
-  FROM events GROUP BY 1
-), x AS (
-  SELECT day, CAST(round(1e4 * s / k) AS BIGINT) AS x_e4 FROM daily
-), m AS (
-  SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(x_e4) AS BIGINT) AS sx,
-         sum(CAST(x_e4 AS DOUBLE) * x_e4) AS sxx
-  FROM x
-), g AS (
-  SELECT x.day, m.n, x.x_e4,
-         abs(x.x_e4 - CAST(sx AS DOUBLE) / n)
-         / sqrt((sxx - n * (CAST(sx AS DOUBLE) / n)
-                       * (CAST(sx AS DOUBLE) / n)) / (n - 1)) AS g,
-         row_number() OVER (
-           ORDER BY abs(x.x_e4 - CAST(sx AS DOUBLE) / n) DESC, x.day ASC
-         ) AS rn
-  FROM x CROSS JOIN m
-)
-SELECT day AS suspect_day, n, round(x_e4 / 1e4, 4) AS x_cents,
-       round(g, 6) AS grubbs_g,
-       CAST(g > {_GRUBBS_CRIT} AS INT) AS outlier
-FROM g WHERE rn = 1
-"""

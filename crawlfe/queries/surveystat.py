@@ -89,31 +89,6 @@ def q_ht_estimator(spark, sf_dir):
     )
 
 
-SQL_HT_ESTIMATOR = f"""
-WITH tot AS (
-  SELECT source, CAST(sum(n_chars) AS BIGINT) AS true_total,
-         CAST(count(*) AS BIGINT) AS n_rows
-  FROM documents GROUP BY source
-), scored AS (
-  SELECT d.source, t.true_total, t.n_rows, d.n_chars,
-         least(1.0, {_HT_RATE} * t.n_rows * d.n_chars / t.true_total) AS pi,
-         CAST('0x' || substring(md5(CAST(d.doc_id AS VARCHAR)), 1, 4)
-              AS BIGINT) / 65536.0 AS u
-  FROM documents d JOIN tot t USING (source)
-), agg AS (
-  SELECT source, true_total, n_rows,
-         CAST(count(*) AS BIGINT) AS n_sampled,
-         round(sum(n_chars / pi), 2) AS ht_total
-  FROM scored WHERE u < pi
-  GROUP BY source, true_total, n_rows
-)
-SELECT source, n_rows, n_sampled, true_total, ht_total,
-       round((ht_total - true_total) / CAST(true_total AS DOUBLE), 4)
-         AS rel_err
-FROM agg
-"""
-
-
 def q_raking_ipf(spark, sf_dir):
     """3-round IPF raking of the (lang, source) doc-count table to
     uniform lang and source marginals (target share 1/L resp. 1/S of
@@ -159,51 +134,6 @@ def q_raking_ipf(spark, sf_dir):
         F.round("m", 4).alias("raked_n"),
         F.round(F.col("m") / F.col("n"), 6).alias("weight"),
     )
-
-
-def _sql_raking() -> str:
-    parts = [
-        "cells AS (SELECT lang, source, CAST(count(*) AS DOUBLE) AS n "
-        "FROM documents GROUP BY lang, source)",
-        "gt AS (SELECT sum(n) AS total, "
-        "CAST(count(DISTINCT lang) AS DOUBLE) AS nl, "
-        "CAST(count(DISTINCT source) AS DOUBLE) AS ns FROM cells)",
-        "w0 AS (SELECT lang, source, n, total, nl, ns, n AS m "
-        "FROM cells, gt)",
-    ]
-    prev = "w0"
-    for i in range(1, _IPF_ROUNDS + 1):
-        parts.append(
-            f"l{i} AS (SELECT lang, sum(m) AS lang_m FROM {prev} "
-            f"GROUP BY lang)"
-        )
-        parts.append(
-            f"wl{i} AS (SELECT w.lang, w.source, w.n, w.total, w.nl, w.ns, "
-            f"w.m * (w.total / w.nl) / l.lang_m AS m "
-            f"FROM {prev} w JOIN l{i} l USING (lang))"
-        )
-        parts.append(
-            f"s{i} AS (SELECT source, sum(m) AS src_m FROM wl{i} "
-            f"GROUP BY source)"
-        )
-        parts.append(
-            f"w{i} AS (SELECT w.lang, w.source, w.n, w.total, w.nl, w.ns, "
-            f"w.m * (w.total / w.ns) / s.src_m AS m "
-            f"FROM wl{i} w JOIN s{i} s USING (source))"
-        )
-        prev = f"w{i}"
-    return (
-        "WITH "
-        + ",\n".join(parts)
-        + f"""
-SELECT lang, source, CAST(n AS BIGINT) AS n, round(m, 4) AS raked_n,
-       round(m / n, 6) AS weight
-FROM {prev}
-"""
-    )
-
-
-SQL_RAKING_IPF = _sql_raking()
 
 
 def q_neyman_allocation(spark, sf_dir):
@@ -255,29 +185,3 @@ def q_neyman_allocation(spark, sf_dir):
             ).alias("alloc"),
         )
     )
-
-
-SQL_NEYMAN_ALLOCATION = f"""
-WITH per AS (
-  SELECT lang, CAST(count(*) AS BIGINT) AS n_pop,
-         CAST(sum(n_chars) AS DOUBLE) AS s1,
-         CAST(sum(n_chars * n_chars) AS DOUBLE) AS s2
-  FROM documents GROUP BY lang
-), scored AS (
-  SELECT lang, n_pop,
-         n_pop * sqrt(s2 / n_pop - pow(s1 / n_pop, 2)) AS ns
-  FROM per
-), z AS (SELECT sum(ns) AS z FROM scored),
-raw AS (
-  SELECT lang, n_pop, {float(_NEYMAN_BUDGET)} * ns / z AS alloc_raw,
-         CAST(floor({float(_NEYMAN_BUDGET)} * ns / z) AS BIGINT) AS fl
-  FROM scored, z
-), short AS (
-  SELECT CAST({_NEYMAN_BUDGET} - sum(fl) AS BIGINT) AS leftn FROM raw
-)
-SELECT lang, n_pop, round(alloc_raw, 4) AS alloc_raw,
-       fl + CAST(rk <= leftn AS BIGINT) AS alloc
-FROM (SELECT *, row_number() OVER (ORDER BY alloc_raw - fl DESC, lang)
-             AS rk
-      FROM raw), short
-"""

@@ -107,54 +107,6 @@ def _life(spark, sf_dir):
     )
 
 
-_SQL_LIFE = """
-rk AS (
-  SELECT o_custkey, CAST(o_orderdate AS DATE) AS d, o_orderkey,
-         row_number() OVER (PARTITION BY o_custkey
-                            ORDER BY CAST(o_orderdate AS DATE),
-                                     o_orderkey) AS rk
-  FROM orders
-), per AS (
-  SELECT o_custkey,
-         min(CASE WHEN rk = 1 THEN d END) AS first_d,
-         min(CASE WHEN rk = 2 THEN d END) AS second_d
-  FROM rk WHERE rk <= 2 GROUP BY o_custkey
-), mx AS (SELECT max(CAST(o_orderdate AS DATE)) AS max_d FROM orders),
-dur AS (
-  SELECT CAST(CASE WHEN second_d IS NOT NULL
-                   THEN datediff('day', first_d, second_d)
-                   ELSE datediff('day', first_d, max_d) END AS BIGINT)
-           AS t,
-         CAST(CASE WHEN second_d IS NOT NULL THEN 1 ELSE 0 END
-              AS BIGINT) AS event
-  FROM per CROSS JOIN mx
-), g AS (
-  SELECT t, CAST(count(*) AS BIGINT) AS exits,
-         CAST(sum(event) AS BIGINT) AS d_ev
-  FROM dur GROUP BY t
-), atrisk AS (
-  SELECT g.*, CAST(sum(exits) OVER (ORDER BY t DESC
-                   ROWS UNBOUNDED PRECEDING) AS BIGINT) AS n_at
-  FROM g
-), stepped AS (
-  SELECT t, n_at, d_ev,
-         CAST(round(1e12 * ln(1.0 - CAST(d_ev AS DOUBLE) / n_at))
-              AS BIGINT) AS ln_e12,
-         CAST(round(1e12 * CAST(d_ev AS DOUBLE)
-                    / CAST(n_at * (n_at - d_ev) AS DOUBLE))
-              AS BIGINT) AS gw_e12
-  FROM atrisk WHERE d_ev > 0 AND d_ev < n_at
-), life AS (
-  SELECT t, n_at, d_ev,
-         CAST(sum(ln_e12) OVER (ORDER BY t ROWS UNBOUNDED PRECEDING)
-              AS BIGINT) AS cumln_e12,
-         CAST(sum(gw_e12) OVER (ORDER BY t ROWS UNBOUNDED PRECEDING)
-              AS BIGINT) AS cumgw_e12
-  FROM stepped
-)
-"""
-
-
 def q_km_greenwood(spark, sf_dir):
     """KM SURVIVAL + GREENWOOD 95% CI per event step up to 14 days:
     S = exp(cumln/1e12), se = S*sqrt(cumgw/1e12), CI clamped to
@@ -171,21 +123,6 @@ def q_km_greenwood(spark, sf_dir):
         F.round(F.greatest(F.lit(0.0), s - _Z95 * se), 6).alias("lo95"),
         F.round(F.least(F.lit(1.0), s + _Z95 * se), 6).alias("hi95"),
     )
-
-
-SQL_KM_GREENWOOD = f"""
-WITH {_SQL_LIFE}
-SELECT t, n_at, d_ev,
-       round(exp(cumln_e12 / 1e12), 6) AS surv,
-       round(exp(cumln_e12 / 1e12) * sqrt(cumgw_e12 / 1e12), 6) AS se,
-       round(greatest(0.0, exp(cumln_e12 / 1e12)
-             - {_Z95} * exp(cumln_e12 / 1e12)
-               * sqrt(cumgw_e12 / 1e12)), 6) AS lo95,
-       round(least(1.0, exp(cumln_e12 / 1e12)
-             + {_Z95} * exp(cumln_e12 / 1e12)
-               * sqrt(cumgw_e12 / 1e12)), 6) AS hi95
-FROM life WHERE t <= {_KM_TAU}
-"""
 
 
 def q_km_rmst(spark, sf_dir):
@@ -234,36 +171,6 @@ def q_km_rmst(spark, sf_dir):
     )
 
 
-SQL_KM_RMST = f"""
-WITH {_SQL_LIFE},
-bounded AS (SELECT * FROM life WHERE t <= {_KM_TAU}),
-r AS (
-  SELECT t,
-         CAST(coalesce(lag(t) OVER (ORDER BY t), 0) AS BIGINT) AS t_prev,
-         CAST(coalesce(lag(cumln_e12) OVER (ORDER BY t), 0) AS BIGINT)
-           AS prev_cumln,
-         cumln_e12
-  FROM bounded
-), steps AS (
-  SELECT CAST(sum(CAST(round(1e6 * (t - t_prev)
-                             * exp(prev_cumln / 1e12)) AS BIGINT))
-              AS BIGINT) AS area_e6,
-         CAST(count(*) AS BIGINT) AS n_steps,
-         CAST(max(t) AS BIGINT) AS t_last,
-         CAST(min(cumln_e12) AS BIGINT) AS min_cumln
-  FROM r
-)
-SELECT n_steps, t_last, area_e6,
-       CAST(round(1e6 * ({_KM_TAU} - t_last) * exp(min_cumln / 1e12))
-            AS BIGINT) AS tail_e6,
-       round((area_e6
-              + CAST(round(1e6 * ({_KM_TAU} - t_last)
-                           * exp(min_cumln / 1e12)) AS BIGINT)) / 1e6, 6)
-         AS rmst_days
-FROM steps
-"""
-
-
 def q_atkinson_index(spark, sf_dir):
     """ATKINSON INDEX (epsilon = 0.5) over order totalprice cents:
     EDE = (mean of sqrt x)^2 with per-row sqrt fixed-pointed to e6;
@@ -290,24 +197,3 @@ def q_atkinson_index(spark, sf_dir):
         F.round(ede, 4).alias("ede_cents"),
         F.round(1 - ede / mean, 6).alias("atkinson_05"),
     )
-
-
-SQL_ATKINSON_INDEX = """
-WITH o AS (
-  SELECT CAST(round(o_totalprice * 100) AS BIGINT) AS c FROM orders
-), agg AS (
-  SELECT CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(c) AS BIGINT) AS s,
-         CAST(sum(CAST(round(1e6 * sqrt(c)) AS BIGINT)) AS BIGINT)
-           AS ssq_e6
-  FROM o
-)
-SELECT n, s, ssq_e6,
-       round(CAST(s AS DOUBLE) / n, 4) AS mean_cents,
-       round((CAST(ssq_e6 AS DOUBLE) / (n * 1e6))
-             * (CAST(ssq_e6 AS DOUBLE) / (n * 1e6)), 4) AS ede_cents,
-       round(1 - (CAST(ssq_e6 AS DOUBLE) / (n * 1e6))
-                 * (CAST(ssq_e6 AS DOUBLE) / (n * 1e6))
-                 / (CAST(s AS DOUBLE) / n), 6) AS atkinson_05
-FROM agg
-"""

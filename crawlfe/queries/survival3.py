@@ -70,33 +70,6 @@ def _durations(spark, sf_dir):
     )
 
 
-_SQL_DUR = """
-marked AS (
-  SELECT user_id, event_id, event_type, epoch_us(ts) AS us,
-         row_number() OVER (PARTITION BY user_id
-                            ORDER BY epoch_us(ts), event_id) AS rn
-  FROM events
-), first AS (
-  SELECT user_id, us AS t0,
-         CAST(user_id % 2 AS BIGINT) AS g
-  FROM marked WHERE rn = 1
-), firstbuy AS (
-  SELECT user_id, min(us) AS t_buy FROM marked
-  WHERE event_type = 'purchase' GROUP BY 1
-), lastev AS (
-  SELECT user_id, max(us) AS t_last FROM marked GROUP BY 1
-), dur AS (
-  SELECT f.g,
-         coalesce(fb.t_buy - f.t0, le.t_last - f.t0) AS t,
-         CAST(CASE WHEN fb.t_buy IS NOT NULL THEN 1 ELSE 0 END
-              AS BIGINT) AS ev
-  FROM first f
-  JOIN lastev le USING (user_id)
-  LEFT JOIN firstbuy fb USING (user_id)
-)
-"""
-
-
 def _risk(dur):
     bytime = dur.groupBy("t").agg(
         F.sum(F.when(F.col("g") == 1, F.col("ev")).otherwise(0))
@@ -123,25 +96,6 @@ def _risk(dur):
         .cast("bigint")
         .alias("n"),
     )
-
-
-_SQL_RISK = """
-bytime AS (
-  SELECT t,
-         CAST(sum(CASE WHEN g = 1 THEN ev ELSE 0 END) AS BIGINT) AS d1,
-         CAST(sum(ev) AS BIGINT) AS d,
-         CAST(sum(CASE WHEN g = 1 THEN 1 ELSE 0 END) AS BIGINT) AS x1,
-         CAST(count(*) AS BIGINT) AS x
-  FROM dur GROUP BY 1
-), risk AS (
-  SELECT t, d1, d,
-         CAST(sum(x1) OVER () - sum(x1) OVER (ORDER BY t
-              ROWS UNBOUNDED PRECEDING) + x1 AS BIGINT) AS n1,
-         CAST(sum(x) OVER () - sum(x) OVER (ORDER BY t
-              ROWS UNBOUNDED PRECEDING) + x AS BIGINT) AS n
-  FROM bytime
-)
-"""
 
 
 def q_fh_logrank(spark, sf_dir):
@@ -185,32 +139,6 @@ def q_fh_logrank(spark, sf_dir):
         F.round(z, 6).alias("z"),
         F.round(z * z, 6).alias("chi2"),
     )
-
-
-SQL_FH_LOGRANK = f"""
-WITH {_SQL_DUR}, {_SQL_RISK},
-deaths AS (
-  SELECT * FROM risk WHERE d > 0
-), wdead AS (
-  SELECT t, d1, d, n1, n,
-         exp(sum(ln(1.0 - CAST(d AS DOUBLE) / (n + 1)))
-             OVER (ORDER BY t ROWS UNBOUNDED PRECEDING)) AS w
-  FROM deaths
-), terms AS (
-  SELECT w,
-         d1 - d * n1 / CAST(n AS DOUBLE) AS oe,
-         d * (n1 / CAST(n AS DOUBLE)) * (1 - n1 / CAST(n AS DOUBLE))
-           * (n - d) / (CAST(n AS DOUBLE) - 1) AS v
-  FROM wdead WHERE n > 1
-), m AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_times,
-         sum(w * oe) AS _num, sum(w * w * v) AS _den
-  FROM terms
-)
-SELECT n_times, round(_num / sqrt(_den), 6) AS z,
-       round(pow(_num / sqrt(_den), 2), 6) AS chi2
-FROM m
-"""
 
 
 def q_life_table(spark, sf_dir):
@@ -270,37 +198,6 @@ def q_life_table(spark, sf_dir):
     ).orderBy("week")
 
 
-SQL_LIFE_TABLE = f"""
-WITH {_SQL_DUR},
-byint AS (
-  SELECT CAST(floor(t / {_LT_WEEK_US}) AS BIGINT) AS week,
-         CAST(sum(ev) AS BIGINT) AS d,
-         CAST(sum(1 - ev) AS BIGINT) AS c
-  FROM dur GROUP BY 1
-), r AS (
-  SELECT week, d, c,
-         CAST(sum(d + c) OVER ()
-              - coalesce(sum(d + c) OVER (ORDER BY week
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                  0) AS BIGINT) AS entering
-  FROM byint
-), e AS (
-  SELECT week, entering, d, c,
-         d / (CAST(entering AS DOUBLE) - c / 2.0) AS qraw
-  FROM r
-)
-SELECT week, entering, d, c, round(qraw, 6) AS q,
-       CASE WHEN max(CASE WHEN qraw >= 1 THEN 1 ELSE 0 END)
-                 OVER (ORDER BY week ROWS UNBOUNDED PRECEDING) = 1
-            THEN 0.0
-            ELSE round(exp(sum(CASE WHEN qraw < 1
-                                    THEN ln(1.0 - qraw) END)
-                 OVER (ORDER BY week ROWS UNBOUNDED PRECEDING)), 6)
-       END AS surv
-FROM e ORDER BY week
-"""
-
-
 def q_schoenfeld_trend(spark, sf_dir):
     """PH-ASSUMPTION TREND TEST: Pearson correlation of the
     standardized score residual u_j = (d1_j - e_j)/sqrt(v_j) with
@@ -343,31 +240,3 @@ def q_schoenfeld_trend(spark, sf_dir):
         F.round(r, 6).alias("corr"),
         F.round(z, 6).alias("z"),
     )
-
-
-SQL_SCHOENFELD_TREND = f"""
-WITH {_SQL_DUR}, {_SQL_RISK},
-terms AS (
-  SELECT t,
-         d1 - d * n1 / CAST(n AS DOUBLE) AS oe,
-         d * (n1 / CAST(n AS DOUBLE)) * (1 - n1 / CAST(n AS DOUBLE))
-           * (n - d) / (CAST(n AS DOUBLE) - 1) AS v
-  FROM risk WHERE d > 0 AND n > 1
-), u AS (
-  SELECT CAST(row_number() OVER (ORDER BY t) AS DOUBLE) AS j,
-         oe / sqrt(v) AS u
-  FROM terms WHERE v > 0
-), m AS (
-  SELECT CAST(count(*) AS BIGINT) AS m, avg(j) AS mj, avg(u) AS mu,
-         avg(j * u) AS mju, avg(j * j) AS mjj, avg(u * u) AS muu
-  FROM u
-), c AS (
-  SELECT m,
-         (mju - mj * mu)
-           / sqrt((mjj - mj * mj) * (muu - mu * mu)) AS r
-  FROM m
-)
-SELECT m, round(r, 6) AS corr,
-       round(r * sqrt((m - 2) / (1 - r * r)), 6) AS z
-FROM c
-"""

@@ -7,14 +7,8 @@ from __future__ import annotations
 import pandas as pd  # noqa: F401
 from pyspark.sql import DataFrame, SparkSession, Window  # noqa: F401
 from pyspark.sql import functions as F  # noqa: F401
-from pyspark.sql import types as T  # noqa: F401
 
-from .. import clean  # noqa: F401
-from .. import windows as W  # noqa: F401
-from ..asof import asof_join  # noqa: F401
-from ..textfeat import featurize_batch  # noqa: F401
 from ._shared import SESSION_GAP_S, _scratch_dir, _t, _us  # noqa: F401
-
 
 
 # --------------------------------------------------------------------------
@@ -287,43 +281,6 @@ SELECT doc_id, score_en, score_sql, score_data,
             WHEN score_sql >= score_data THEN 'sql-like'
             ELSE 'data-like' END AS pred_lang
 FROM scored
-"""
-
-
-def q_lang_agreement(spark, sf_dir):
-    """Dominant language per source + agreement share (the A9
-    key-detection analog: mode() per entity, deterministic tie-break
-    by lang asc so both engines agree)."""
-    d = _t(spark, sf_dir, "documents")
-    counts = d.groupBy("source", "lang").agg(F.count(F.lit(1)).alias("c"))
-    w = Window.partitionBy("source").orderBy(F.col("c").desc(), F.col("lang"))
-    tot = Window.partitionBy("source")
-    return (
-        counts.withColumn("rn", F.row_number().over(w))
-        .withColumn("total", F.sum("c").over(tot))
-        .where(F.col("rn") == 1)
-        .select(
-            "source",
-            F.col("lang").alias("dominant_lang"),
-            F.round(F.col("c") / F.col("total"), 4).alias("agreement"),
-            F.col("total").alias("n_docs"),
-        )
-    )
-
-
-SQL_LANG_AGREEMENT = """
-WITH counts AS (
-  SELECT source, lang, count(*) AS c FROM documents GROUP BY source, lang
-), ranked AS (
-  SELECT source, lang, c,
-         row_number() OVER (PARTITION BY source ORDER BY c DESC, lang) AS rn,
-         sum(c) OVER (PARTITION BY source) AS total
-  FROM counts
-)
-SELECT source, lang AS dominant_lang,
-       round(c / CAST(total AS DOUBLE), 4) AS agreement,
-       CAST(total AS BIGINT) AS n_docs
-FROM ranked WHERE rn = 1
 """
 
 

@@ -4,17 +4,10 @@ Split from the former crawlfe/queries.py monolith (r4); bodies unchanged.
 """
 from __future__ import annotations
 
-import pandas as pd  # noqa: F401
 from pyspark.sql import DataFrame, SparkSession, Window  # noqa: F401
 from pyspark.sql import functions as F  # noqa: F401
-from pyspark.sql import types as T  # noqa: F401
 
-from .. import clean  # noqa: F401
-from .. import windows as W  # noqa: F401
-from ..asof import asof_join  # noqa: F401
-from ..textfeat import featurize_batch  # noqa: F401
 from ._shared import SESSION_GAP_S, _t, _us  # noqa: F401
-
 
 
 # --------------------------------------------------------------------------
@@ -67,70 +60,6 @@ def q_tpch_q2(spark, sf_dir):
     )
 
 
-SQL_TPCH_Q2 = """
-WITH cost AS (
-  SELECT l_partkey, l_suppkey,
-         min(CAST(round(100 * l_extendedprice / l_quantity) AS BIGINT))
-           AS supply_cents
-  FROM lineitem JOIN part ON l_partkey = p_partkey
-  WHERE p_type = 'LARGE'
-  GROUP BY l_partkey, l_suppkey
-), best AS (
-  SELECT l_partkey, l_suppkey, supply_cents,
-         min(supply_cents) OVER (PARTITION BY l_partkey) AS min_cents
-  FROM cost
-)
-SELECT l_partkey AS p_partkey, s_suppkey, s_name, n_name,
-       round(supply_cents / 100.0, 2) AS supplycost
-FROM best
-JOIN supplier ON l_suppkey = s_suppkey
-JOIN nation ON s_nationkey = n_nationkey
-WHERE supply_cents = min_cents
-"""
-
-
-def q_tpch_q9(spark, sf_dir):
-    """TPC-H Q9 shape (product-type profit by nation and year): revenue
-    of 'red'-named parts grouped by the SUPPLIER's nation and order
-    year (the fixture has no partsupp supplycost, so profit = revenue).
-    Broadcast part/supplier/nation dims; the two fact tables sort-merge
-    on orderkey."""
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
-    p = (
-        _t(spark, sf_dir, "part")
-        .where(F.col("p_name").like("%red%"))
-        .select("p_partkey")
-    )
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    j = (
-        li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
-        .join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
-        .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
-    )
-    return j.groupBy(
-        F.col("n_name").alias("nation"),
-        F.year("o_orderdate").alias("o_year"),
-    ).agg(
-        F.round(
-            F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 4
-        ).alias("sum_profit")
-    )
-
-
-SQL_TPCH_Q9 = """
-SELECT n_name AS nation, CAST(year(o_orderdate) AS INT) AS o_year,
-       round(sum(l_extendedprice * (1 - l_discount)), 4) AS sum_profit
-FROM lineitem, orders, part, supplier, nation
-WHERE l_orderkey = o_orderkey AND l_partkey = p_partkey
-  AND l_suppkey = s_suppkey AND s_nationkey = n_nationkey
-  AND p_name LIKE '%red%'
-GROUP BY n_name, year(o_orderdate)
-"""
-
-
 def q_tpch_q11(spark, sf_dir):
     """TPC-H Q11 shape (important stock value): per-part traded value
     from suppliers of nations {0,1,2}, keeping parts whose value
@@ -166,20 +95,6 @@ def q_tpch_q11(spark, sf_dir):
     )
 
 
-SQL_TPCH_Q11 = """
-WITH val AS (
-  SELECT l_partkey,
-         sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS value_cents
-  FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
-  WHERE s_nationkey IN (0, 1, 2)
-  GROUP BY l_partkey
-)
-SELECT l_partkey, round(value_cents / 100.0, 2) AS part_value
-FROM val
-WHERE value_cents * 2000 > (SELECT sum(value_cents) FROM val)
-"""
-
-
 def q_tpch_q12(spark, sf_dir):
     """TPC-H Q12 shape (late shipments by priority class): lineitems
     shipped more than 90 days after the order date in 1996-1997,
@@ -203,19 +118,6 @@ def q_tpch_q12(spark, sf_dir):
         F.sum(hi).alias("high_line_count"),
         F.sum(1 - hi).alias("low_line_count"),
     )
-
-
-SQL_TPCH_Q12 = """
-SELECT CAST(year(l_shipdate) AS INT) AS ship_year,
-       CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-                     THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-       CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-                     THEN 0 ELSE 1 END) AS BIGINT) AS low_line_count
-FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-WHERE l_shipdate > o_orderdate + INTERVAL 90 DAY
-  AND year(l_shipdate) IN (1996, 1997)
-GROUP BY ship_year
-"""
 
 
 def q_tpch_q20(spark, sf_dir):
@@ -251,27 +153,6 @@ def q_tpch_q20(spark, sf_dir):
     )
 
 
-SQL_TPCH_Q20 = """
-WITH per_ps AS (
-  SELECT l_partkey, l_suppkey,
-         sum(CAST(l_quantity AS BIGINT)) AS supp_qty
-  FROM lineitem JOIN part ON l_partkey = p_partkey
-  WHERE p_type = 'ECONOMY'
-  GROUP BY l_partkey, l_suppkey
-), dominant AS (
-  SELECT DISTINCT l_suppkey
-  FROM (
-    SELECT l_suppkey, supp_qty,
-           sum(supp_qty) OVER (PARTITION BY l_partkey) AS total_qty
-    FROM per_ps
-  )
-  WHERE supp_qty * 2 > total_qty
-)
-SELECT s_suppkey, s_name
-FROM dominant JOIN supplier ON l_suppkey = s_suppkey
-"""
-
-
 def q_domain_cap(spark, sf_dir):
     """Per-domain document cap (crawl-curation sampling: at most K docs
     per source so no site dominates the corpus). The kept subset is
@@ -292,19 +173,6 @@ def q_domain_cap(spark, sf_dir):
         .where(F.col("rn") <= k)
         .select("doc_id", "source", "rn")
     )
-
-
-SQL_DOMAIN_CAP = """
-SELECT doc_id, source, rn
-FROM (
-  SELECT doc_id, source,
-         row_number() OVER (
-           PARTITION BY source
-           ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rn
-  FROM documents
-)
-WHERE rn <= 10
-"""
 
 
 # --------------------------------------------------------------------------
@@ -329,18 +197,6 @@ def q_calendar_features(spark, sf_dir):
         F.datediff(F.col("ts").cast("date"), F.lit("1970-01-01").cast("date"))
         .alias("epoch_day"),
     )
-
-
-SQL_CALENDAR_FEATURES = """
-SELECT event_id, user_id, epoch_us(ts) AS ts_us,
-       CAST(isodow(ts) AS INT) AS iso_dow,
-       CAST(hour(ts) AS INT) AS hh,
-       CAST(month(ts) AS INT) AS mm,
-       CAST(isodow(ts) >= 6 AS INT) AS is_weekend,
-       CAST(date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS INT)
-         AS epoch_day
-FROM events
-"""
 
 
 def q_dormant_audit(spark, sf_dir):
@@ -373,22 +229,6 @@ def q_dormant_audit(spark, sf_dir):
     )
 
 
-SQL_DORMANT_AUDIT = """
-WITH dormant AS (
-  SELECT c_custkey, c_nationkey FROM customer
-  WHERE NOT EXISTS (SELECT 1 FROM events WHERE user_id = c_custkey)
-), per_nation AS (
-  SELECT c_nationkey, count(*) AS n_customers FROM customer
-  GROUP BY c_nationkey
-)
-SELECT d.c_nationkey, CAST(count(*) AS BIGINT) AS n_dormant,
-       n_customers,
-       round(count(*) * 1.0 / n_customers, 6) AS dormant_rate
-FROM dormant d JOIN per_nation p ON d.c_nationkey = p.c_nationkey
-GROUP BY d.c_nationkey, n_customers
-"""
-
-
 def q_negative_sample(spark, sf_dir):
     """Deterministic negative sampling (contrastive-training pairs):
     k=4 pseudo-random negatives per anchor doc via the hash-style map
@@ -414,16 +254,6 @@ def q_negative_sample(spark, sf_dir):
     )
 
 
-SQL_NEGATIVE_SAMPLE = """
-SELECT doc_id, CAST(i AS INT) AS i,
-       (31 * doc_id + 17 * i + 7) % cnt AS neg_id
-FROM documents
-CROSS JOIN (SELECT count(*) AS cnt FROM documents)
-CROSS JOIN (SELECT unnest(generate_series(1, 4)) AS i)
-WHERE (31 * doc_id + 17 * i + 7) % cnt != doc_id
-"""
-
-
 def q_impute_median(spark, sf_dir):
     """Grouped median imputation (the standard missing-feature fill):
     10% of values are masked by a deterministic rule (event_id % 10 ==
@@ -447,18 +277,3 @@ def q_impute_median(spark, sf_dir):
         F.col("v").isNull().cast("int").alias("was_missing"),
         F.round(F.coalesce(F.col("v"), F.col("med")), 4).alias("imputed"),
     )
-
-
-SQL_IMPUTE_MEDIAN = """
-WITH ev AS (
-  SELECT event_id, user_id,
-         CASE WHEN event_id % 10 = 0 THEN NULL ELSE value END AS v
-  FROM events
-), med AS (
-  SELECT user_id, median(v) AS med FROM ev GROUP BY user_id
-)
-SELECT event_id, ev.user_id,
-       CAST(v IS NULL AS INT) AS was_missing,
-       round(COALESCE(v, med), 4) AS imputed
-FROM ev JOIN med ON ev.user_id = med.user_id
-"""

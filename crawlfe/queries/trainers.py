@@ -106,54 +106,6 @@ def q_decision_stump(spark, sf_dir):
     )
 
 
-SQL_DECISION_STUMP = f"""
-WITH e AS (
-  SELECT least({_STUMP_MAX_BIN},
-               CAST(round(value * 100) AS BIGINT)
-                 // {_STUMP_BIN_CENTS}) AS bin,
-         CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS pos
-  FROM events
-), bins AS (
-  SELECT bin, CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(pos) AS BIGINT) AS p
-  FROM e GROUP BY bin
-), tot AS (SELECT sum(n) AS nn, sum(p) AS pp FROM bins),
-cum AS (
-  SELECT bin,
-         sum(n) OVER (ORDER BY bin ROWS UNBOUNDED PRECEDING) AS nl,
-         sum(p) OVER (ORDER BY bin ROWS UNBOUNDED PRECEDING) AS pl
-  FROM bins
-), scored AS (
-  SELECT bin, nl AS n_left, pl AS pos_left,
-         nn - nl AS n_right, pp - pl AS pos_right, nn,
-         (CAST(nl AS DOUBLE) / nn)
-           * (1.0 - pow(CAST(pl AS DOUBLE) / nl, 2)
-              - pow(CAST(nl - pl AS DOUBLE) / nl, 2))
-         + (CAST(nn - nl AS DOUBLE) / nn)
-           * (CASE WHEN nn - nl > 0 THEN
-                1.0 - pow(CAST(pp - pl AS DOUBLE) / (nn - nl), 2)
-                - pow(CAST((nn - nl) - (pp - pl) AS DOUBLE)
-                      / (nn - nl), 2)
-              ELSE 0.0 END) AS gini
-  FROM cum CROSS JOIN tot
-  WHERE nn - nl > 0
-), best AS (
-  SELECT *, row_number() OVER (ORDER BY gini ASC, bin ASC) AS rk
-  FROM scored
-)
-SELECT bin AS split_bin,
-       CAST(n_left AS BIGINT) AS n_left,
-       CAST(pos_left AS BIGINT) AS pos_left,
-       CAST(n_right AS BIGINT) AS n_right,
-       CAST(pos_right AS BIGINT) AS pos_right,
-       round(gini, 6) AS gini,
-       round((greatest(pos_left, n_left - pos_left)
-              + greatest(pos_right, n_right - pos_right))
-             / CAST(nn AS DOUBLE), 6) AS stump_acc
-FROM best WHERE rk = 1
-"""
-
-
 def q_naive_bayes(spark, sf_dir):
     """Multinomial NB over (dow, value-bin): Laplace class-
     conditional log-probs rounded to BIGINT 1e-4 (exact argmax),
@@ -259,73 +211,6 @@ def q_naive_bayes(spark, sf_dir):
             6,
         ).alias("accuracy"),
     )
-
-
-SQL_NAIVE_BAYES = f"""
-WITH e AS (
-  SELECT event_id, event_type,
-         CAST(extract(day FROM ts) AS INTEGER) AS day,
-         CAST(dayofweek(ts) + 1 AS INTEGER) AS dow,
-         least({_NB_MAX_BIN},
-               CAST(round(value * 100) AS BIGINT) // {_NB_BIN_CENTS})
-           AS bin
-  FROM events
-), train AS (SELECT * FROM e WHERE day <= {_NB_TRAIN_DAY_MAX}),
-test AS (SELECT * FROM e WHERE day > {_NB_TRAIN_DAY_MAX}),
-prior AS (
-  SELECT event_type, CAST(count(*) AS BIGINT) AS nc
-  FROM train GROUP BY 1
-), nt AS (SELECT count(*) AS nt FROM train),
-kc AS (SELECT count(*) AS kc FROM prior),
-dow_counts AS (
-  SELECT event_type, dow, CAST(count(*) AS BIGINT) AS cv
-  FROM train GROUP BY 1, 2
-), dow_levels AS (SELECT DISTINCT dow FROM train),
-lp_dow AS (
-  SELECT p.event_type, l.dow,
-         CAST(round(ln((coalesce(c.cv, 0) + 1)
-                       / CAST(p.nc + 7 AS DOUBLE)) * 10000) AS BIGINT)
-           AS lp_dow_e4
-  FROM prior p CROSS JOIN dow_levels l
-  LEFT JOIN dow_counts c
-    ON c.event_type = p.event_type AND c.dow = l.dow
-), bin_counts AS (
-  SELECT event_type, bin, CAST(count(*) AS BIGINT) AS cv
-  FROM train GROUP BY 1, 2
-), bin_levels AS (SELECT DISTINCT bin FROM train),
-lp_bin AS (
-  SELECT p.event_type, l.bin,
-         CAST(round(ln((coalesce(c.cv, 0) + 1)
-                       / CAST(p.nc + {_NB_MAX_BIN + 1} AS DOUBLE))
-                    * 10000) AS BIGINT) AS lp_bin_e4
-  FROM prior p CROSS JOIN bin_levels l
-  LEFT JOIN bin_counts c
-    ON c.event_type = p.event_type AND c.bin = l.bin
-), lp_prior AS (
-  SELECT event_type AS cls,
-         CAST(round(ln((nc + 1) / CAST(nt + kc AS DOUBLE)) * 10000)
-              AS BIGINT) AS lp_prior_e4
-  FROM prior CROSS JOIN nt CROSS JOIN kc
-), scored AS (
-  SELECT t.event_id, t.event_type, p.cls,
-         p.lp_prior_e4 + d.lp_dow_e4 + b.lp_bin_e4 AS score_e4
-  FROM test t
-  CROSS JOIN lp_prior p
-  JOIN lp_dow d ON d.event_type = p.cls AND d.dow = t.dow
-  JOIN lp_bin b ON b.event_type = p.cls AND b.bin = t.bin
-), pred AS (
-  SELECT event_id, event_type, cls AS pred
-  FROM (SELECT *, row_number() OVER (PARTITION BY event_id
-          ORDER BY score_e4 DESC, cls ASC) AS rk FROM scored)
-  WHERE rk = 1
-)
-SELECT event_type, CAST(count(*) AS BIGINT) AS n_test,
-       CAST(sum(CASE WHEN pred = event_type THEN 1 ELSE 0 END)
-            AS BIGINT) AS hits,
-       round(sum(CASE WHEN pred = event_type THEN 1 ELSE 0 END)
-             / CAST(count(*) AS DOUBLE), 6) AS accuracy
-FROM pred GROUP BY event_type
-"""
 
 
 def q_competing_risks_cif(spark, sf_dir):
@@ -436,68 +321,3 @@ def q_competing_risks_cif(spark, sf_dir):
         F.round("cif_purchase", 6).alias("cif_purchase"),
         F.round("cif_error", 6).alias("cif_error"),
     )
-
-
-SQL_COMPETING_RISKS_CIF = """
-WITH e AS (
-  SELECT user_id, event_type, event_id, epoch_us(ts) AS us
-  FROM events
-), first_t AS (
-  SELECT user_id, min(us) AS t0 FROM e GROUP BY user_id
-), evented AS (
-  SELECT user_id, us AS t_event, event_type AS risk
-  FROM (
-    SELECT e.user_id, e.us, e.event_type,
-           row_number() OVER (PARTITION BY e.user_id
-                              ORDER BY e.us ASC, e.event_id ASC) AS rk
-    FROM e JOIN first_t f ON e.user_id = f.user_id
-    WHERE e.event_type IN ('purchase', 'error') AND e.us > f.t0
-  ) WHERE rk = 1
-), last_t AS (
-  SELECT user_id, max(us) AS t_last FROM e GROUP BY user_id
-), subjects AS (
-  SELECT f.user_id,
-         (coalesce(v.t_event, l.t_last) - f.t0) // 3600000000
-           AS hours,
-         coalesce(v.risk, 'censored') AS risk
-  FROM first_t f
-  LEFT JOIN evented v ON f.user_id = v.user_id
-  JOIN last_t l ON f.user_id = l.user_id
-  WHERE coalesce(v.t_event, l.t_last) > f.t0
-), n_all AS (SELECT count(*) AS n_all FROM subjects),
-times AS (
-  SELECT hours,
-         CAST(sum(CASE WHEN risk = 'purchase' THEN 1 ELSE 0 END)
-              AS BIGINT) AS d_purchase,
-         CAST(sum(CASE WHEN risk = 'error' THEN 1 ELSE 0 END)
-              AS BIGINT) AS d_error,
-         CAST(count(*) AS BIGINT) AS leaving
-  FROM subjects GROUP BY hours
-), at_risk AS (
-  SELECT t.*, n.n_all
-         - coalesce(sum(leaving) OVER (ORDER BY hours
-             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-           AS n_risk
-  FROM times t CROSS JOIN n_all n
-), with_s AS (
-  SELECT *, exp(coalesce(sum(CASE WHEN d_purchase + d_error < n_risk
-                   THEN ln(1.0 - (d_purchase + d_error)
-                           / CAST(n_risk AS DOUBLE))
-                   ELSE 0.0 END)
-                 OVER (ORDER BY hours ROWS BETWEEN UNBOUNDED PRECEDING
-                       AND 1 PRECEDING), 0.0)) AS s_prev
-  FROM at_risk
-), cif AS (
-  SELECT *,
-         sum(s_prev * d_purchase / CAST(n_risk AS DOUBLE))
-           OVER (ORDER BY hours ROWS UNBOUNDED PRECEDING)
-           AS cif_purchase,
-         sum(s_prev * d_error / CAST(n_risk AS DOUBLE))
-           OVER (ORDER BY hours ROWS UNBOUNDED PRECEDING) AS cif_error
-  FROM with_s
-)
-SELECT hours, CAST(n_risk AS BIGINT) AS n_risk, d_purchase, d_error,
-       round(cif_purchase, 6) AS cif_purchase,
-       round(cif_error, 6) AS cif_error
-FROM cif WHERE d_purchase + d_error > 0
-"""

@@ -61,25 +61,6 @@ def _halves(spark, sf_dir):
     )
 
 
-_SQL_HALVES = """
-ex AS (
-  SELECT user_id AS x_id,
-         CAST(count(*) AS BIGINT) AS f1,
-         CAST(sum(CASE WHEN event_type = 'purchase'
-                  THEN 1 ELSE 0 END) AS BIGINT) AS f2,
-         CAST(count(DISTINCT dayofmonth(ts)) AS BIGINT) AS f3
-  FROM events WHERE dayofmonth(ts) <= 15 GROUP BY 1
-), ey AS (
-  SELECT user_id AS y_id,
-         CAST(count(*) AS BIGINT) AS f1,
-         CAST(sum(CASE WHEN event_type = 'purchase'
-                  THEN 1 ELSE 0 END) AS BIGINT) AS f2,
-         CAST(count(DISTINCT dayofmonth(ts)) AS BIGINT) AS f3
-  FROM events WHERE dayofmonth(ts) > 15 GROUP BY 1
-)
-"""
-
-
 def _sq(a, b, f):
     return (F.col(f"{a}.{f}") - F.col(f"{b}.{f}")) * (
         F.col(f"{a}.{f}") - F.col(f"{b}.{f}")
@@ -213,88 +194,6 @@ def q_mmd_shift(spark, sf_dir):
     )
 
 
-def _sql_pairs3():
-    return """
-xx AS MATERIALIZED (
-  SELECT CAST((a.f1 - b.f1) * (a.f1 - b.f1)
-            + (a.f2 - b.f2) * (a.f2 - b.f2)
-            + (a.f3 - b.f3) * (a.f3 - b.f3) AS BIGINT) AS d2
-  FROM ex a JOIN ex b ON a.x_id < b.x_id
-), yy AS MATERIALIZED (
-  SELECT CAST((a.f1 - b.f1) * (a.f1 - b.f1)
-            + (a.f2 - b.f2) * (a.f2 - b.f2)
-            + (a.f3 - b.f3) * (a.f3 - b.f3) AS BIGINT) AS d2
-  FROM ey a JOIN ey b ON a.y_id < b.y_id
-), xy AS MATERIALIZED (
-  SELECT CAST((a.f1 - b.f1) * (a.f1 - b.f1)
-            + (a.f2 - b.f2) * (a.f2 - b.f2)
-            + (a.f3 - b.f3) * (a.f3 - b.f3) AS BIGINT) AS d2
-  FROM ex a CROSS JOIN ey b
-)
-"""
-
-
-SQL_MMD_SHIFT = f"""
-WITH {_SQL_HALVES},
-{_sql_pairs3()},
-mx AS (
-  SELECT CAST(count(*) AS HUGEINT) AS n_x,
-         CAST(sum(f1) AS HUGEINT) AS s1_f1_x,
-         CAST(sum(f2) AS HUGEINT) AS s1_f2_x,
-         CAST(sum(f3) AS HUGEINT) AS s1_f3_x,
-         CAST(sum(f1 * f1) AS HUGEINT) AS s2_f1_x,
-         CAST(sum(f2 * f2) AS HUGEINT) AS s2_f2_x,
-         CAST(sum(f3 * f3) AS HUGEINT) AS s2_f3_x
-  FROM ex
-), my AS (
-  SELECT CAST(count(*) AS HUGEINT) AS n_y,
-         CAST(sum(f1) AS HUGEINT) AS s1_f1_y,
-         CAST(sum(f2) AS HUGEINT) AS s1_f2_y,
-         CAST(sum(f3) AS HUGEINT) AS s1_f3_y,
-         CAST(sum(f1 * f1) AS HUGEINT) AS s2_f1_y,
-         CAST(sum(f2 * f2) AS HUGEINT) AS s2_f2_y,
-         CAST(sum(f3 * f3) AS HUGEINT) AS s2_f3_y
-  FROM ey
-), sig AS (
-  -- closed-form pooled mean pairwise squared distance (same exact
-  -- integer total the pair grid would sum; no pairs materialized)
-  SELECT CAST(
-      (n_x * s2_f1_x - s1_f1_x * s1_f1_x)
-    + (n_x * s2_f2_x - s1_f2_x * s1_f2_x)
-    + (n_x * s2_f3_x - s1_f3_x * s1_f3_x)
-    + (n_y * s2_f1_y - s1_f1_y * s1_f1_y)
-    + (n_y * s2_f2_y - s1_f2_y * s1_f2_y)
-    + (n_y * s2_f3_y - s1_f3_y * s1_f3_y)
-    + (n_y * s2_f1_x + n_x * s2_f1_y - 2 * s1_f1_x * s1_f1_y)
-    + (n_y * s2_f2_x + n_x * s2_f2_y - 2 * s1_f2_x * s1_f2_y)
-    + (n_y * s2_f3_x + n_x * s2_f3_y - 2 * s1_f3_x * s1_f3_y)
-      AS DOUBLE)
-    / CAST(n_x * (n_x - 1) / 2 + n_y * (n_y - 1) / 2 + n_x * n_y
-      AS DOUBLE) AS s2
-  FROM mx CROSS JOIN my
-), mxx AS (
-  SELECT CAST(sum(CAST(round(exp(-CAST(d2 AS DOUBLE) / (2 * s2))
-                  * {_TS_KQ}) AS BIGINT)) AS DOUBLE)
-           / count(*) / {_TS_KQ} AS kxx
-  FROM xx CROSS JOIN sig
-), myy AS (
-  SELECT CAST(sum(CAST(round(exp(-CAST(d2 AS DOUBLE) / (2 * s2))
-                  * {_TS_KQ}) AS BIGINT)) AS DOUBLE)
-           / count(*) / {_TS_KQ} AS kyy
-  FROM yy CROSS JOIN sig
-), mxy AS (
-  SELECT CAST(sum(CAST(round(exp(-CAST(d2 AS DOUBLE) / (2 * s2))
-                  * {_TS_KQ}) AS BIGINT)) AS DOUBLE)
-           / count(*) / {_TS_KQ} AS kxy
-  FROM xy CROSS JOIN sig
-)
-SELECT round(kxx, 6) AS mean_kxx, round(kyy, 6) AS mean_kyy,
-       round(kxy, 6) AS mean_kxy,
-       round(kxx + kyy - 2 * kxy, 6) AS mmd2
-FROM mxx CROSS JOIN myy CROSS JOIN mxy
-"""
-
-
 def q_energy_distance(spark, sf_dir):
     """SZEKELY ENERGY DISTANCE 2E|X-Y| - E|X-X'| - E|Y-Y'| with
     micro-quantized integer distance sums."""
@@ -333,32 +232,6 @@ def q_energy_distance(spark, sf_dir):
             ).alias("energy_dist"),
         )
     )
-
-
-SQL_ENERGY_DISTANCE = f"""
-WITH {_SQL_HALVES},
-{_sql_pairs3()},
-mxx AS (
-  SELECT CAST(sum(CAST(round(sqrt(CAST(d2 AS DOUBLE)) * {_TS_DQ})
-                  AS BIGINT)) AS DOUBLE) / count(*) / {_TS_DQ}
-           AS dxx
-  FROM xx
-), myy AS (
-  SELECT CAST(sum(CAST(round(sqrt(CAST(d2 AS DOUBLE)) * {_TS_DQ})
-                  AS BIGINT)) AS DOUBLE) / count(*) / {_TS_DQ}
-           AS dyy
-  FROM yy
-), mxy AS (
-  SELECT CAST(sum(CAST(round(sqrt(CAST(d2 AS DOUBLE)) * {_TS_DQ})
-                  AS BIGINT)) AS DOUBLE) / count(*) / {_TS_DQ}
-           AS dxy
-  FROM xy
-)
-SELECT round(dxx, 6) AS mean_dxx, round(dyy, 6) AS mean_dyy,
-       round(dxy, 6) AS mean_dxy,
-       round(2 * dxy - dxx - dyy, 6) AS energy_dist
-FROM mxx CROSS JOIN myy CROSS JOIN mxy
-"""
 
 
 def q_ks_proj_max(spark, sf_dir):
@@ -410,40 +283,3 @@ def q_ks_proj_max(spark, sf_dir):
         "ks",
         F.round(F.max("ks").over(wall), 6).alias("ks_max"),
     ).orderBy("proj")
-
-
-def _ks_sql():
-    parts = []
-    for i, (w1, w2, w3) in enumerate(_TS_PROJ, 1):
-        parts.append(f"""
-SELECT 'p{i}' AS proj, '({w1},{w2},{w3})' AS direction,
-       round(max(abs(gap)), 6) AS ks
-FROM (
-  SELECT sum(isx) OVER (ORDER BY v
-           RANGE BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-           / CAST((SELECT count(*) FROM ex) AS DOUBLE)
-         - sum(1 - isx) OVER (ORDER BY v
-           RANGE BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-           / CAST((SELECT count(*) FROM ey) AS DOUBLE) AS gap
-  FROM (
-    SELECT CAST({w1} * f1 + {w2} * f2 + {w3} * f3 AS BIGINT) AS v,
-           1 AS isx
-    FROM ex
-    UNION ALL
-    SELECT CAST({w1} * f1 + {w2} * f2 + {w3} * f3 AS BIGINT), 0
-    FROM ey
-  )
-)""")
-    body = "\nUNION ALL".join(parts)
-    return f"""
-WITH {_SQL_HALVES},
-allks AS (
-{body}
-)
-SELECT proj, direction, ks,
-       round(max(ks) OVER (), 6) AS ks_max
-FROM allks ORDER BY proj
-"""
-
-
-SQL_KS_PROJ_MAX = _ks_sql()

@@ -10,11 +10,11 @@ cards, per-event-type KS drift statistics, Benford first-digit audit,
 binned PSI drift, lang x source mutual information) in ONE pass each
 and prints a single JSON summary line — the nightly monitoring job a
 training-data pipeline schedules between ingest and training. Every
-report is a registry query (crawlfe/queries.py packs #18/#20/#21), so
-what this job ships is exactly what the DuckDB oracles have verified
-at three SF tiers. Alert logic is deliberately threshold-only
-(max KS, max |obs-exp| Benford gap) — the job computes statistics, a
-human owns the paging policy.
+report is a registry query from the crawlfe/queries package
+(dataset_card, ks_drift, benford_audit, psi_drift, mutual_info), so
+what this job ships is exactly what the DuckDB oracles verify. Alert
+logic is deliberately threshold-only (max KS, max |obs-exp| Benford
+gap) — the job computes statistics, a human owns the paging policy.
 """
 
 from __future__ import annotations

@@ -8,7 +8,8 @@ tiers produced by scripts/gen_tier.py — a 0.1-equivalent and the 10x
 
 e <= ~1.0 means at-worst-linear scaling in data size; e ~ 2 flags a
 quadratic (expected ONLY for output-bound keys whose RESULT grows
-quadratically, e.g. interval_overlap on a co-activity-dense fixture).
+quadratically, e.g. simhash_pairs on a fixture with a constant
+per-pair near-dup probability).
 Both tiers come from the same generator/seed so the exponent is not
 confounded by distribution differences; best-of-N per (key, tier) with
 the tier order interleaved so VM drift hits both tiers equally.
@@ -31,31 +32,24 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-# Top of the r4 sf0.1 suite by wall time (BENCH/suite_r04_final.json)
-# plus the flagship pipeline key. Every per-query docstring makes an
-# O-claim; this list is the keys where a wrong claim would hurt most.
+# The registry keys among the top of the r4 sf0.1 suite by wall time
+# (BENCH/suite_r04_final.json) plus the flagship pipeline key. Every
+# per-query docstring makes an O-claim; this list is the keys where a
+# wrong claim would hurt most.
 DEFAULT_KEYS = [
-    "interval_overlap", "pipeline_featurize_asof", "ewma", "svd_rank1",
-    "mrmr_lite", "srp_signature", "mc_stationary", "kcenter_coreset",
-    "span_dedup", "neardup_eval", "eigenvector_centrality",
-    "kmeanspp_seeds", "sparse_topk", "simhash_pairs", "fk_orphans",
-    "mmd_shift", "asof_count_window", "sql_recursive", "raking_ipf",
-    "bradley_terry", "bbit_minhash", "jl_distortion", "rfm_scores",
-    "dsir_weights", "naive_bayes", "basket_pairs", "minhash_accuracy",
-    "asof_decay_feature", "pit_features", "count_min",
+    "pipeline_featurize_asof", "ewma", "span_dedup", "kmeanspp_seeds",
+    "simhash_pairs", "asof_count_window", "sql_recursive",
+    "asof_decay_feature", "pit_features",
     # engine-spine sanity anchors (cheap, should be ~linear scan-bound)
     "asof_join", "tpch_q3", "dedup_exact", "sessionize",
 ]
 
 # Keys whose WORK grows super-linearly by semantics, so a super-linear
 # runtime exponent is the correct behavior, not a defect.
-# interval_overlap: true co-active pairs grow ~x100 when daily-active
-# users grow x10 on an activity-dense fixture (output-bound; its
-# CANDIDATE count tracks output, see overlap_eval.py).  mmd_shift /
-# energy_distance: exact pairwise statistics — every kernel/distance
-# pair is evaluated by definition; the documented production path is
-# sampling the panel first (twosample.py module docstring).
-OUTPUT_BOUND = {"interval_overlap", "mmd_shift", "energy_distance"}
+# simhash_pairs: true near-dup pairs grow ~x90 when documents grow x10
+# on the tier fixture (BENCH/scaling_exponents_r05_decade2.json,
+# simhash_pairs_output_bound_proof).
+OUTPUT_BOUND = {"simhash_pairs"}
 
 
 def main() -> None:

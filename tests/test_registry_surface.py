@@ -1,0 +1,69 @@
+"""The driver registry is exactly the SURVEY.md §2.B surface plus the
+engine spine.
+
+Every identifier-like backticked name in SURVEY.md §2.B is either a
+registry key or one of the Spark / Python names in ``NOT_KEYS``.  A new
+key needs a §2.B row (or a deliberate entry in ``EXTRA_KEYS``); a §2.B
+key cannot drop out of the registry unnoticed.
+"""
+
+from __future__ import annotations
+
+import re
+from pathlib import Path
+
+from crawlfe.queries import REGISTRY
+
+SURVEY = Path(__file__).resolve().parent.parent / "SURVEY.md"
+
+# Backticked §2.B names that are Spark functions, Python APIs, table or
+# helper names, not driver query keys.
+NOT_KEYS = frozenset({
+    "aggregate", "approx_count_distinct", "array_contains",
+    "array_distinct", "array_intersect", "array_union", "as_of", "binary",
+    "coalesce", "concat", "cube", "cume_dist", "date_trunc", "dense_rank",
+    "documents", "element_at", "embeddings", "ewm", "explode", "filter",
+    "first_value", "from_json", "get_json_object", "hash", "intersect",
+    "last_value", "lead", "length", "levenshtein", "log1p", "lower",
+    "make_timestamp", "map", "map_keys", "md5", "merge_kernel",
+    "merge_schema", "nth_value", "ntile", "pandas_udf", "parse_json",
+    "parse_url", "percent_rank", "percentile_approx", "pmod", "posexplode",
+    "rank", "regexp_extract", "regexp_extract_all", "regexp_replace",
+    "row_number", "sequence", "size", "slice", "split", "sqrt",
+    "stream_clean", "stream_state", "stream_state_metadata", "substring",
+    "timestampdiff", "transform", "try_variant_get", "unix_timestamp",
+    "where", "xml", "xxhash64", "zip_with",
+})
+
+# Keys outside §2.B: the as-of engine-spine variants §2.B predates, the
+# keys jobs/corpus_monitor.py runs, and the real-string parity key of
+# tests/test_feature_parity.py.
+EXTRA_KEYS = frozenset({
+    "asof_bucketed", "asof_decay_feature", "asof_count_window",
+    "asof_kth_recent",
+    "benford_audit", "dataset_card", "ks_drift", "mutual_info", "psi_drift",
+    "featurize_documents",
+})
+
+
+def _survey_keys() -> set[str]:
+    lines = SURVEY.read_text().splitlines()
+    start = next(i for i, ln in enumerate(lines) if ln.startswith("### 2.B"))
+    end = next(
+        i for i in range(start + 1, len(lines))
+        if lines[i].startswith(("## ", "### "))
+    )
+    names = re.findall(r"`([^`]+)`", "\n".join(lines[start:end]))
+    return {n for n in names if re.fullmatch(r"[a-z][a-z0-9_]*", n)} - NOT_KEYS
+
+
+def test_every_survey_key_resolves():
+    keys = _survey_keys()
+    assert len(keys) == 183
+    assert sorted(keys - set(REGISTRY)) == []
+
+
+def test_registry_is_the_keep_list():
+    keep = _survey_keys() | EXTRA_KEYS
+    assert sorted(set(REGISTRY) - keep) == []
+    assert sorted(keep - set(REGISTRY)) == []
