@@ -52,8 +52,6 @@ def entry(spark: SparkSession) -> DataFrame:
             "purchase_value", "lag_gap_s", "lead_gap_s",
             "snapshot_idx", "session_id",
         ],
-        strategy="merge_scan",
-        num_buckets=64,
     )
 
 

@@ -15,9 +15,9 @@ Layout:
     textfeat    numpy featurizers shared verbatim by Spark UDFs and oracle
     synth       deterministic synthetic pages generator (distributed + pandas)
     features    Spark featurize stage (mapInPandas + lineage capture)
-    asof        as-of join; default range_scan: struct carry over
-                repartitionByRange + sortWithinPartitions (merge_scan,
-                merge_scan_slim, union_window are the alternatives)
+    asof        as-of join: one JVM struct-carry window kernel over
+                repartitionByRange + sortWithinPartitions (range_scan)
+                or hash clustering (union_window); salted hot keys
     windows     lag/lead, rolling, rank, cumsum, sessionize, backfill
     io          iceberg-lite parquet table: staged atomic commit + manifest
     pipeline    end-to-end featurize job with checkpoint/resume

@@ -78,7 +78,7 @@ def flag_docs(docs: DataFrame) -> DataFrame:
     n_emails / n_ips and `clean_text` (redacted, never dropped).
     """
     # exact dedup: canonical row = lowest doc_id per content hash —
-    # via the SLIM pattern (the dedup analog of asof merge_scan_slim):
+    # via the SLIM pattern (decide on slim columns, re-attach the fat):
     # a (sha, doc_id) projection aggregates to one row per
     # DUPLICATED content hash (unique shas are dropped — on a real
     # crawl corpus most content is unique, so this table is a small

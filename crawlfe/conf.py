@@ -31,10 +31,10 @@ def engine_confs(parallelism: int) -> dict[str, str]:
         "spark.sql.session.timeZone": "UTC",
         "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),
         "spark.sql.parquet.compression.codec": "zstd",
-        # join co-partitioning may match on a SUBSET of join keys: the
-        # merge_scan_slim payload re-join on (url, ts) then reuses the window
-        # stage's hashpartitioning(url) instead of re-shuffling the fat
-        # feature vectors a second time
+        # join co-partitioning may match on a SUBSET of join keys: a
+        # self-join of a table bucketed on one of its join keys then
+        # reads the storage partitioning instead of adding an Exchange
+        # (tests/test_bucketing.py::test_bucketed_self_join_has_no_exchange)
         "spark.sql.requireAllClusterKeysForCoPartition": "false",
         # cluster mode: pin worker-side BLAS too (local mode inherits
         # the driver env set in get_spark)

@@ -46,6 +46,7 @@ def oracle_asof(
     ts_build: str = "warc_ts",
     build_cols: list[str] | None = None,
     direction: str = "backward",
+    tolerance: pd.Timedelta | None = None,
 ) -> pd.DataFrame:
     if build_cols is None:
         build_cols = [c for c in build.columns if c not in (key, ts_build)]
@@ -57,7 +58,7 @@ def oracle_asof(
     pr[ts_build] = pr[ts_build].astype("datetime64[us]")
     out = pd.merge_asof(
         pl, pr, left_on=ts_probe, right_on=ts_build, by=key,
-        direction=direction, allow_exact_matches=True,
+        direction=direction, allow_exact_matches=True, tolerance=tolerance,
     )
     return out[list(probe.columns) + [ts_build] + build_cols]
 

@@ -90,7 +90,8 @@ def feature_pipeline(
     One shuffle on url serves lag/lead + sessionize (same window
     partitioning); the default as-of is one range exchange on url and a
     JVM window carry, so the features are computed once and never
-    re-enter Python. ``salt_k`` > 1 needs a merge-scan strategy.
+    re-enter Python. ``salt_k`` > 1 salts that partitioning for hot
+    urls without changing the result.
     """
     enriched = sessionize(
         with_lag_lead(features, "url", "warc_ts"),

@@ -130,8 +130,6 @@ def q_asof_decay_feature(spark, sf_dir):
         ts_probe="join_ts",
         ts_build="ts",
         build_cols=["decay_e6"],
-        strategy="merge_scan",
-        num_buckets=64,
     ).crossJoin(F.broadcast(lo))
     th = (_us("join_ts") - F.col("lo")) / float(_HOUR_US)
     feat = (
@@ -178,8 +176,6 @@ def q_asof_count_window(spark, sf_dir):
         ts_probe="join_ts",
         ts_build="ts",
         build_cols=["cnt"],
-        strategy="merge_scan",
-        num_buckets=64,
     ).withColumnRenamed("cnt", "cnt_now")
     probe2 = hop1.withColumn(
         "join_ts7", F.expr("join_ts - INTERVAL 7 DAYS")
@@ -195,8 +191,6 @@ def q_asof_count_window(spark, sf_dir):
         ts_probe="join_ts",
         ts_build="ts",
         build_cols=["cnt"],
-        strategy="merge_scan",
-        num_buckets=64,
     ).withColumnRenamed("cnt", "cnt_before")
     return hop2.select(
         "user_id",
@@ -249,8 +243,6 @@ def q_asof_kth_recent(spark, sf_dir):
         ts_probe="join_ts",
         ts_build="ts",
         build_cols=["cnt"],
-        strategy="merge_scan",
-        num_buckets=64,
     )
     # per-purchase rank table (slim): rank == prefix count at that row
     e = _t(spark, sf_dir, "events")

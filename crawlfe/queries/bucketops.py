@@ -288,8 +288,7 @@ _ASOF_BKT_N = 8  # storage buckets (both sides must match)
 def _asof_bucketed_df(spark, sf_dir):
     """Storage-bucketed as-of join: write probe (clicks) and build
     (purchases) tables ``bucketBy(8, bkt)`` where ``bkt =
-    pmod(xxhash64(user_id), 8)`` — the SAME bucket id the merge-scan
-    strategy computes per call (crawlfe/asof.py) — then cogroup the two
+    pmod(xxhash64(user_id), 8)`` — then cogroup the two
     catalog tables ON the stored bucket column.  The bucketed scans
     report HashPartitioning(bkt, 8), which satisfies the cogroup's
     required clustered distribution on BOTH children, so the plan has
@@ -298,8 +297,8 @@ def _asof_bucketed_df(spark, sf_dir):
     100 TB re-read pattern: a features/snapshot table is written once,
     bucketed by its join key, and every later point-in-time join
     against it costs zero shuffle — the layout IS the shuffle, paid
-    once at write time.  The kernel is the same per-user
-    ``pd.merge_asof`` as the merge_scan strategy, applied within each
+    once at write time.  The kernel is a per-user backward
+    ``pd.merge_asof`` (asof_join's semantics), applied within each
     stored bucket."""
     import os
 

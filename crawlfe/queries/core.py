@@ -28,8 +28,7 @@ def q_asof_join(spark, sf_dir):
     )
     j = asof_join(
         probe, build, key="user_id", ts_probe="click_ts", ts_build="ts",
-        build_cols=["purchase_value"], strategy="merge_scan",
-        num_buckets=64,
+        build_cols=["purchase_value"],
     )
     return j.select(
         "user_id",

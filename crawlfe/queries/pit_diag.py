@@ -34,7 +34,7 @@ def q_asof_staleness(spark, sf_dir):
     )
     j = asof_join(
         probe, build, key="user_id", ts_probe="click_ts", ts_build="ts",
-        build_cols=["pv"], strategy="merge_scan", num_buckets=64,
+        build_cols=["pv"],
     )
     stale_s = F.expr(
         "(unix_micros(CAST(click_ts AS TIMESTAMP))"
@@ -91,7 +91,7 @@ def q_leakage_audit(spark, sf_dir):
     )
     j = asof_join(
         probe, build, key="user_id", ts_probe="click_ts", ts_build="ts",
-        build_cols=["pv"], strategy="merge_scan", num_buckets=64,
+        build_cols=["pv"],
     )
     per_probe = j.groupBy("user_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_clicks"),

@@ -143,12 +143,11 @@ def q_pit_features(spark, sf_dir):
     )
     j1 = asof_join(
         probe, purch, key="user_id", ts_probe="click_ts", ts_build="ts",
-        build_cols=["purchase_value"], strategy="merge_scan",
-        num_buckets=64,
+        build_cols=["purchase_value"],
     ).drop("ts")
     j2 = asof_join(
         j1, views, key="user_id", ts_probe="click_ts", ts_build="ts",
-        build_cols=["view_value"], strategy="merge_scan", num_buckets=64,
+        build_cols=["view_value"],
     )
     return j2.select(
         "user_id",

@@ -294,8 +294,7 @@ def q_skew_salted(spark, sf_dir):
     )
     j = asof_join(
         probe, build, key="user_id", ts_probe="click_ts", ts_build="ts",
-        build_cols=["purchase_value"], strategy="merge_scan",
-        num_buckets=16, salt_k=4,
+        build_cols=["purchase_value"], salt_k=4,
     )
     return j.select(
         "user_id",
@@ -327,8 +326,7 @@ def q_asof_forward(spark, sf_dir):
     )
     j = asof_join(
         probe, build, key="user_id", ts_probe="click_ts", ts_build="ts",
-        build_cols=["purchase_value"], strategy="merge_scan",
-        num_buckets=64, direction="forward",
+        build_cols=["purchase_value"], direction="forward",
     )
     return j.select(
         "user_id",
@@ -372,8 +370,7 @@ def q_asof_nearest(spark, sf_dir):
     )
     j = asof_join(
         probe, build, key="user_id", ts_probe="click_ts", ts_build="ts",
-        build_cols=["purchase_value"], strategy="merge_scan",
-        num_buckets=64, direction="nearest",
+        build_cols=["purchase_value"], direction="nearest",
     )
     return j.select(
         "user_id",
@@ -419,8 +416,7 @@ def q_asof_tolerance(spark, sf_dir):
     )
     j = asof_join(
         probe, build, key="user_id", ts_probe="click_ts", ts_build="ts",
-        build_cols=["purchase_value"], strategy="merge_scan",
-        num_buckets=64, tolerance=pd.Timedelta(hours=48),
+        build_cols=["purchase_value"], tolerance=pd.Timedelta(hours=48),
     )
     return j.select(
         "user_id",

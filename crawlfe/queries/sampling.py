@@ -737,7 +737,7 @@ def q_attribution(spark, sf_dir):
     )
     j = asof_join(
         probe, build, key="user_id", ts_probe="purch_ts", ts_build="ts",
-        build_cols=["channel"], strategy="merge_scan", num_buckets=64,
+        build_cols=["channel"],
         tolerance=pd.Timedelta(days=7),
     )
     return (

@@ -531,7 +531,6 @@ def stream_asof_serve(
     ts_probe: str = "join_ts",
     ts_build: str = "warc_ts",
     build_cols: list | None = None,
-    strategy: str = "merge_scan_slim",
 ):
     """Point-in-time feature SERVING on the streaming path: each
     micro-batch of probe events is as-of joined (backward, zero
@@ -545,8 +544,7 @@ def stream_asof_serve(
     Implemented via foreachBatch because Structured Streaming has no
     native stream-static AS-OF join (stream-static equi joins exist;
     the as-of needs the merge-scan). Inside foreachBatch the batch is
-    a plain DataFrame, so every batch strategy (merge_scan,
-    merge_scan_slim, union_window, salted) works unchanged; the file
+    a plain DataFrame, so the batch kernel runs unchanged; the file
     sink below is idempotent per batchId via the parquet write path +
     checkpoint. Returns the StreamingQuery."""
     from .asof import asof_join
@@ -559,7 +557,6 @@ def stream_asof_serve(
             ts_probe=ts_probe,
             ts_build=ts_build,
             build_cols=build_cols,
-            strategy=strategy,
         )
         out.write.mode("append").parquet(output_dir)
 

@@ -16,7 +16,6 @@ JSON summary line to stdout.
 from __future__ import annotations
 
 import argparse
-import inspect
 import json
 import os
 import sys
@@ -26,11 +25,17 @@ from pyspark.sql import SparkSession
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from crawlfe.asof import MERGE_SCAN_STRATEGIES, STRATEGIES  # noqa: E402
 from crawlfe.conf import engine_confs  # noqa: E402
 from crawlfe.io import IcebergLite  # noqa: E402
 from crawlfe.pipeline import feature_pipeline, run_incremental  # noqa: E402
 from crawlfe.synth import SynthConfig, synth_pages  # noqa: E402
+
+
+def _salt_k(s: str) -> int:
+    k = int(s)
+    if k < 1:
+        raise argparse.ArgumentTypeError(f"must be >= 1, got {k}")
+    return k
 
 
 def main() -> int:
@@ -40,21 +45,12 @@ def main() -> int:
     ap.add_argument("--batches", type=int, default=4)
     ap.add_argument("--seed", type=int, default=42)
     ap.add_argument("--session-gap-s", type=int, default=86400)
-    ap.add_argument("--salt-k", type=int, default=1)
-    ap.add_argument(
-        "--strategy",
-        choices=STRATEGIES,
-        default=inspect.signature(feature_pipeline).parameters[
-            "strategy"].default,
-    )
+    ap.add_argument("--salt-k", type=_salt_k, default=1)
     ap.add_argument(
         "--crash-after", type=int, default=None,
         help="simulate dying after N commits (resume testing)",
     )
     args = ap.parse_args()
-    if args.salt_k > 1 and args.strategy not in MERGE_SCAN_STRATEGIES:
-        ap.error(f"--salt-k {args.salt_k} needs --strategy in "
-                 f"{MERGE_SCAN_STRATEGIES}, not {args.strategy}")
 
     builder = SparkSession.builder.appName("crawlfe-featurize")
     spark = builder.getOrCreate()
@@ -95,7 +91,6 @@ def main() -> int:
             ),
             probe,
             session_gap_s=args.session_gap_s,
-            strategy=args.strategy,
             salt_k=args.salt_k,
         )
         asof_dir = os.path.join(args.output, "asof_features")

@@ -1,6 +1,6 @@
 """As-of join parity vs pd.merge_asof oracle (SURVEY.md §5.2.2) across
-strategies and salting, plus edge cases (before-first probes, empty
-build side, exact-timestamp matches)."""
+strategies, directions and salting, plus edge cases (before-first
+probes, empty build side, exact-timestamp matches)."""
 
 import os
 import subprocess
@@ -16,6 +16,7 @@ from crawlfe.oracle import oracle_asof
 from crawlfe.synth import SynthConfig, gen_pages_pdf, query_grid_pdf, synth_pages
 
 CFG = SynthConfig(n_urls=120)
+DIRECTIONS = ("backward", "forward", "nearest")
 
 
 @pytest.fixture(scope="module")
@@ -52,16 +53,13 @@ def _check(got_pdf, want):
 
 
 @pytest.mark.parametrize(
-    "strategy,salt_k",
-    [("merge_scan", 1), ("merge_scan", 4), ("union_window", 1),
-     ("merge_scan_slim", 1), ("merge_scan_slim", 4), ("range_scan", 1)],
+    "strategy,salt_k", [(s, k) for s in STRATEGIES for k in (1, 4, 8)]
 )
 def test_asof_strategies_match_oracle(spark, fixtures, strategy, salt_k):
     grid, feats, _, want = fixtures
     j = asof_join(
         grid, feats, key="url", ts_probe="join_ts", ts_build="warc_ts",
         build_cols=["text_sha256"], strategy=strategy, salt_k=salt_k,
-        num_buckets=32,
     )
     _check(j.toPandas(), want)
 
@@ -78,7 +76,7 @@ def test_empty_build_side(spark, fixtures):
     empty = feats.where("1=0")
     j = asof_join(
         grid, empty, key="url", ts_probe="join_ts", ts_build="warc_ts",
-        build_cols=["text_sha256"], num_buckets=8,
+        build_cols=["text_sha256"],
     ).toPandas()
     assert j["warc_ts"].isna().all()
     assert j["text_sha256"].isna().all()
@@ -108,12 +106,14 @@ def test_exact_match_inclusive(spark):
             }
         )
     )
-    for strategy in ("merge_scan", "union_window", "merge_scan_slim", "range_scan"):
-        out = asof_join(
-            probe, build, key="url", ts_probe="join_ts",
-            ts_build="warc_ts", build_cols=["v"], strategy=strategy,
-        ).toPandas()
-        assert out["v"].iloc[0] == 2.0
+    for strategy in STRATEGIES:
+        for direction in DIRECTIONS:
+            out = asof_join(
+                probe, build, key="url", ts_probe="join_ts",
+                ts_build="warc_ts", build_cols=["v"], strategy=strategy,
+                direction=direction,
+            ).toPandas()
+            assert out["v"].iloc[0] == 2.0, (strategy, direction)
 
 
 def _ts(*days):
@@ -123,36 +123,43 @@ def _ts(*days):
 @pytest.mark.parametrize("strategy", STRATEGIES)
 def test_null_payload_of_matched_row_stays_null(spark, strategy):
     """The matched build row's payload is attached whole: a null column
-    in it must not be filled from an OLDER build row (a per-column
-    last(ignorenulls) carry did exactly that)."""
-    probe = spark.createDataFrame(
-        pd.DataFrame({"url": ["a"], "join_ts": _ts("2024-01-03")})
-    )
+    in it must not be filled from an OLDER (backward) or LATER (forward)
+    build row (a per-column last(ignorenulls) carry did exactly that)."""
     build = spark.createDataFrame(
         pd.DataFrame({
-            "url": ["a", "a"],
-            "warc_ts": _ts("2024-01-01", "2024-01-02"),
-            "v": [1.0, None],
+            "url": ["a", "a", "a"],
+            "warc_ts": _ts("2024-01-01", "2024-01-02", "2024-01-03"),
+            "v": [1.0, None, 3.0],
         })
     )
-    out = asof_join(
-        probe, build, key="url", ts_probe="join_ts", ts_build="warc_ts",
-        build_cols=["v"], strategy=strategy, num_buckets=4,
-    ).toPandas()
-    assert len(out) == 1
-    assert out["warc_ts"].iloc[0] == pd.Timestamp("2024-01-02")
-    assert pd.isna(out["v"].iloc[0])
+    probe_at = {
+        "backward": "2024-01-02 12:00",
+        "forward": "2024-01-01 12:00",
+        "nearest": "2024-01-02 01:00",
+    }
+    for direction in DIRECTIONS:
+        probe = spark.createDataFrame(
+            pd.DataFrame({"url": ["a"], "join_ts": _ts(probe_at[direction])})
+        )
+        out = asof_join(
+            probe, build, key="url", ts_probe="join_ts", ts_build="warc_ts",
+            build_cols=["v"], strategy=strategy, direction=direction,
+        ).toPandas()
+        assert len(out) == 1, direction
+        assert out["warc_ts"].iloc[0] == pd.Timestamp("2024-01-02"), direction
+        assert pd.isna(out["v"].iloc[0]), direction
 
 
 @pytest.mark.parametrize("strategy", ["range_scan", "union_window"])
 def test_duplicate_build_rows_give_one_row_per_probe(spark, strategy):
     """A build side duplicated on (key, ts) must not fan out the
-    probes: each probe gets exactly one row, whose payload comes from
-    one of the duplicates."""
+    probes: in every direction each probe gets exactly one row, whose
+    payload comes from one of the duplicates."""
     probe = spark.createDataFrame(
         pd.DataFrame({
-            "url": ["a", "a", "b"],
-            "join_ts": _ts("2023-12-31", "2024-01-03", "2024-01-03"),
+            "url": ["a", "a", "a", "b"],
+            "join_ts": _ts("2023-12-31", "2024-01-01 12:00", "2024-01-03",
+                           "2024-01-03"),
         })
     )
     build = spark.createDataFrame(
@@ -163,46 +170,81 @@ def test_duplicate_build_rows_give_one_row_per_probe(spark, strategy):
             "v": [1.0, 2.0, 0.0, 5.0],
         })
     )
-    out = (
-        asof_join(
-            probe, build, key="url", ts_probe="join_ts",
-            ts_build="warc_ts", build_cols=["v"], strategy=strategy,
+    # the allowed v per probe (None = no match); the nearest tie at
+    # 2024-01-01 12:00 goes to the earlier row
+    dup = {1.0, 2.0}
+    want = {
+        "backward": [None, {0.0}, dup, {5.0}],
+        "forward": [{0.0}, dup, None, None],
+        "nearest": [{0.0}, {0.0}, dup, {5.0}],
+    }
+    for direction in DIRECTIONS:
+        out = (
+            asof_join(
+                probe, build, key="url", ts_probe="join_ts",
+                ts_build="warc_ts", build_cols=["v"], strategy=strategy,
+                direction=direction,
+            )
+            .toPandas()
+            .sort_values(["url", "join_ts"], ignore_index=True)
         )
-        .toPandas()
-        .sort_values(["url", "join_ts"], ignore_index=True)
-    )
-    assert len(out) == 3
-    assert out["warc_ts"].isna().tolist() == [True, False, False]
-    assert out["v"].iloc[1] in (1.0, 2.0)
-    assert out["v"].iloc[2] == 5.0
+        assert len(out) == 4, direction
+        assert out["warc_ts"].isna().tolist() == [
+            ok is None for ok in want[direction]
+        ], direction
+        for x, ok in zip(out["v"], want[direction]):
+            assert ok is None or x in ok, direction
 
 
-@pytest.mark.parametrize("strategy", ["range_scan", "union_window"])
-def test_salt_rejected_by_window_strategies(spark, strategy):
-    """The window strategies have no buckets to salt; salt_k > 1 must
-    raise rather than silently run the unsalted plan."""
+@pytest.mark.parametrize("strategy", STRATEGIES)
+def test_salted_equals_unsalted_in_every_direction(spark, strategy):
+    """Salting is a physical rewrite, never a semantic one: salt_k=4
+    gives the unsalted rows in every direction and under a tolerance."""
+    pages = synth_pages(spark, SynthConfig(n_urls=10))
+    probe = pages.selectExpr("url", "warc_ts + INTERVAL 1 HOUR as join_ts")
+    build = pages.selectExpr("url", "warc_ts", "lang as b_lang")
+    for direction in DIRECTIONS:
+        for tol in (None, pd.Timedelta(hours=12)):
+            a, b = (
+                asof_join(
+                    probe, build, key="url", ts_probe="join_ts",
+                    ts_build="warc_ts", build_cols=["b_lang"],
+                    strategy=strategy, salt_k=k, direction=direction,
+                    tolerance=tol,
+                )
+                .toPandas()
+                .sort_values(["url", "join_ts"], ignore_index=True)
+                for k in (1, 4)
+            )
+            if tol is None:
+                assert a["warc_ts"].notna().any(), direction
+            pd.testing.assert_frame_equal(a, b)
+
+
+def test_asof_join_rejects_salt_k_below_one(spark):
+    """salt_k < 1 is an error, not a silent unsalted run."""
     pages = synth_pages(spark, SynthConfig(n_urls=10))
     probe = pages.selectExpr("url", "warc_ts as join_ts")
     build = pages.selectExpr("url", "warc_ts", "lang as b_lang")
-    with pytest.raises(ValueError, match="salt_k"):
-        asof_join(
-            probe, build, key="url", ts_probe="join_ts",
-            ts_build="warc_ts", build_cols=["b_lang"],
-            strategy=strategy, salt_k=4,
-        )
+    for k in (0, -3):
+        with pytest.raises(ValueError, match="salt_k"):
+            asof_join(
+                probe, build, key="url", ts_probe="join_ts",
+                ts_build="warc_ts", build_cols=["b_lang"], salt_k=k,
+            )
 
 
-def test_job_rejects_salt_for_window_strategy():
-    """jobs/featurize.py refuses --salt-k with a non-salting strategy
-    while parsing its arguments, before any Spark work."""
+def test_job_rejects_salt_k_below_one():
+    """jobs/featurize.py refuses --salt-k < 1 while parsing its
+    arguments, before any Spark work."""
     job = os.path.join(os.path.dirname(__file__), "..", "jobs", "featurize.py")
-    r = subprocess.run(
-        [sys.executable, job, "--output", "unused", "--salt-k", "4",
-         "--strategy", "range_scan"],
-        capture_output=True, text=True, timeout=120,
-    )
-    assert r.returncode == 2, r.stderr
-    assert "error: --salt-k" in r.stderr
+    for k in ("0", "-3"):
+        r = subprocess.run(
+            [sys.executable, job, "--output", "unused", "--salt-k", k],
+            capture_output=True, text=True, timeout=120,
+        )
+        assert r.returncode == 2, r.stderr
+        assert "--salt-k: must be >= 1" in r.stderr
 
 
 def test_self_asof_shared_lineage(spark, sf_dir):
@@ -220,7 +262,7 @@ def test_self_asof_shared_lineage(spark, sf_dir):
     )
     out = asof_join(
         probe, build, key="user_id", ts_probe="join_ts", ts_build="ts",
-        build_cols=["pv"], num_buckets=16,
+        build_cols=["pv"],
     ).select("user_id", "join_ts", "ts", "pv")
     got = out.toPandas().sort_values(
         ["user_id", "join_ts"], ignore_index=True
@@ -239,58 +281,55 @@ def test_self_asof_shared_lineage(spark, sf_dir):
 
 
 def test_tolerance_parity_across_strategies(spark, fixtures):
-    """Every strategy must agree exactly under a tolerance window (the
-    window strategies implement it as a JVM conditional projection over
-    the carried match), and the window must actually null out stale
+    """Every strategy and direction must match the pd.merge_asof oracle
+    exactly under a tolerance window (a JVM conditional projection over
+    the chosen match), and the window must actually null out stale
     matches."""
-    grid, feats, _, _ = fixtures
+    grid, feats, grid_pdf, want = fixtures
+    fp = feats.toPandas()
     tol = pd.Timedelta(hours=6)
-    outs = {}
-    for strategy in STRATEGIES:
-        outs[strategy] = (
-            asof_join(
-                grid, feats, key="url", ts_probe="join_ts",
-                ts_build="warc_ts", build_cols=["text_sha256"],
-                strategy=strategy, tolerance=tol,
+    for direction in DIRECTIONS:
+        want_tol = oracle_asof(
+            grid_pdf, fp, key="url", ts_probe="join_ts", ts_build="warc_ts",
+            build_cols=["text_sha256"], direction=direction, tolerance=tol,
+        ).sort_values(["url", "join_ts"], ignore_index=True)
+        for strategy in STRATEGIES:
+            _check(
+                asof_join(
+                    grid, feats, key="url", ts_probe="join_ts",
+                    ts_build="warc_ts", build_cols=["text_sha256"],
+                    strategy=strategy, tolerance=tol, direction=direction,
+                ).toPandas(),
+                want_tol,
             )
-            .toPandas()
-            .sort_values(["url", "join_ts"], ignore_index=True)
-            [["url", "join_ts", "warc_ts", "text_sha256"]]
-        )
-    base = outs["merge_scan"]
-    for got in outs.values():
-        pd.testing.assert_frame_equal(base, got, check_like=True)
-    # the tolerance must bite: without it strictly more matches
-    full = (
-        asof_join(
-            grid, feats, key="url", ts_probe="join_ts",
-            ts_build="warc_ts", build_cols=["text_sha256"],
-            strategy="merge_scan",
-        ).where("warc_ts IS NOT NULL").count()
-    )
-    assert base["warc_ts"].notna().sum() < full
+        if direction == "backward":
+            # the tolerance must bite: without it strictly more matches
+            n_tol = want_tol["warc_ts"].notna().sum()
+            assert n_tol < want["warc_ts"].notna().sum()
 
 
-@pytest.mark.parametrize("strategy", ["merge_scan", "merge_scan_slim"])
-def test_forward_direction_matches_oracle(spark, fixtures, strategy):
+def _direction_oracle(feats, grid_pdf, direction):
+    return oracle_asof(
+        grid_pdf, feats.toPandas(), key="url", ts_probe="join_ts",
+        ts_build="warc_ts", build_cols=["text_sha256"], direction=direction,
+    ).sort_values(["url", "join_ts"], ignore_index=True)
+
+
+@pytest.mark.parametrize("salt_k", [1, 4])
+def test_forward_direction_matches_oracle(spark, fixtures, salt_k):
     """direction='forward' attaches the EARLIEST build row at-or-after
     each probe (the label-construction join); parity vs pd.merge_asof
     direction='forward', and every match must be >= the probe ts."""
     grid, feats, grid_pdf, _ = fixtures
-    fp = feats.toPandas()
-    want = oracle_asof(
-        grid_pdf, fp, key="url", ts_probe="join_ts", ts_build="warc_ts",
-        build_cols=["text_sha256"], direction="forward",
-    ).sort_values(["url", "join_ts"], ignore_index=True)
     got = (
         asof_join(
             grid, feats, key="url", ts_probe="join_ts",
             ts_build="warc_ts", build_cols=["text_sha256"],
-            strategy=strategy, num_buckets=32, direction="forward",
+            salt_k=salt_k, direction="forward",
         )
         .toPandas()
     )
-    _check(got, want)
+    _check(got, _direction_oracle(feats, grid_pdf, "forward"))
     m = got["warc_ts"].notna()
     assert (
         got.loc[m, "warc_ts"].astype("datetime64[us]")
@@ -298,41 +337,34 @@ def test_forward_direction_matches_oracle(spark, fixtures, strategy):
     ).all()
 
 
-def test_forward_rejected_by_window_strategies(spark):
-    """union_window/range_scan are backward-only; forward must raise
-    rather than silently compute the wrong direction."""
-    pages = synth_pages(spark, SynthConfig(n_urls=10))
-    probe = pages.selectExpr("url", "warc_ts as join_ts")
-    build = pages.selectExpr("url", "warc_ts", "lang as b_lang")
-    for strategy in ("union_window", "range_scan"):
-        with pytest.raises(ValueError, match="direction"):
-            asof_join(
-                probe, build, key="url", ts_probe="join_ts",
-                ts_build="warc_ts", build_cols=["b_lang"],
-                strategy=strategy, direction="forward",
-            )
+def test_union_window_forward_and_nearest_match_oracle(spark, fixtures):
+    """The hash-clustered strategy runs the same forward and nearest
+    carries as range_scan: parity vs pd.merge_asof."""
+    grid, feats, grid_pdf, _ = fixtures
+    for direction in ("forward", "nearest"):
+        got = asof_join(
+            grid, feats, key="url", ts_probe="join_ts",
+            ts_build="warc_ts", build_cols=["text_sha256"],
+            strategy="union_window", direction=direction,
+        ).toPandas()
+        _check(got, _direction_oracle(feats, grid_pdf, direction))
 
 
-@pytest.mark.parametrize("strategy", ["merge_scan", "merge_scan_slim"])
-def test_nearest_direction_matches_oracle(spark, fixtures, strategy):
+@pytest.mark.parametrize("salt_k", [1, 4])
+def test_nearest_direction_matches_oracle(spark, fixtures, salt_k):
     """direction='nearest' attaches the build row minimizing
     |ts_build - ts_probe| (snapshot alignment across cadences);
     parity vs pd.merge_asof direction='nearest'."""
     grid, feats, grid_pdf, _ = fixtures
-    fp = feats.toPandas()
-    want = oracle_asof(
-        grid_pdf, fp, key="url", ts_probe="join_ts", ts_build="warc_ts",
-        build_cols=["text_sha256"], direction="nearest",
-    ).sort_values(["url", "join_ts"], ignore_index=True)
     got = (
         asof_join(
             grid, feats, key="url", ts_probe="join_ts",
             ts_build="warc_ts", build_cols=["text_sha256"],
-            strategy=strategy, num_buckets=32, direction="nearest",
+            salt_k=salt_k, direction="nearest",
         )
         .toPandas()
     )
-    _check(got, want)
+    _check(got, _direction_oracle(feats, grid_pdf, "nearest"))
 
 
 def test_nearest_tie_prefers_backward(spark):
@@ -367,7 +399,6 @@ def test_nearest_tie_prefers_backward(spark):
     )
     got = asof_join(
         probe, build, key="url", ts_probe="join_ts", ts_build="warc_ts",
-        build_cols=["tag"], strategy="merge_scan", num_buckets=4,
-        direction="nearest",
+        build_cols=["tag"], direction="nearest",
     ).toPandas()
     assert list(got["tag"]) == ["back"]

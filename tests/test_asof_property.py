@@ -1,5 +1,6 @@
 """Property-based as-of join testing (hypothesis): random keyed
-timestamp sets, all three strategies vs the pd.merge_asof oracle.
+timestamp sets, both strategies salted and unsalted vs the
+pd.merge_asof oracle.
 Catches edge cases enumeration tests miss: duplicate probe timestamps,
 probes before/after all history, keys on one side only, single-row
 groups, exact-tie matches."""
@@ -11,7 +12,7 @@ import pandas as pd
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from crawlfe.asof import asof_join
+from crawlfe.asof import STRATEGIES, asof_join
 
 BASE = np.datetime64("2024-01-01T00:00:00", "us")
 
@@ -48,7 +49,7 @@ def test_asof_matches_pandas_oracle(spark, probe_rows, build_rows):
     probe_pdf = _mk(probe_rows).rename(columns={"ts": "join_ts"})
     probe_pdf["pid"] = np.arange(len(probe_pdf))
     # build unique per (k, ts): the snapshot invariant of the pages
-    # table (merge_asof keeps the LAST dup; slim re-join would fan out)
+    # table (merge_asof keeps the LAST dup; the window carry keeps any)
     build_pdf = (
         _mk(build_rows, vcol="v")
         .drop_duplicates(["k", "ts"], keep="last")
@@ -67,26 +68,28 @@ def test_asof_matches_pandas_oracle(spark, probe_rows, build_rows):
 
     probe = spark.createDataFrame(probe_pdf)
     build = spark.createDataFrame(build_pdf)
-    for strategy in ("merge_scan", "merge_scan_slim", "union_window", "range_scan"):
+    for strategy, salt_k in [(s, k) for s in STRATEGIES for k in (1, 4)]:
         got = (
             asof_join(
                 probe, build, key="k", ts_probe="join_ts", ts_build="ts",
-                build_cols=["v"], strategy=strategy, num_buckets=8,
+                build_cols=["v"], strategy=strategy, salt_k=salt_k,
             )
             .toPandas()
             .sort_values("pid", ignore_index=True)
         )
-        assert len(got) == len(want), strategy
-        assert (got["k"] == want["k"]).all(), strategy
-        assert (got["ts"].isna() == want["ts"].isna()).all(), strategy
+        assert len(got) == len(want), (strategy, salt_k)
+        assert (got["k"] == want["k"]).all(), (strategy, salt_k)
+        assert (got["ts"].isna() == want["ts"].isna()).all(), (
+            strategy, salt_k,
+        )
         m = ~want["ts"].isna()
         assert (
             got.loc[m, "ts"].astype("datetime64[us]").to_numpy()
             == want.loc[m, "ts"].to_numpy()
-        ).all(), strategy
+        ).all(), (strategy, salt_k)
         assert np.allclose(
             got.loc[m, "v"].to_numpy(float), want.loc[m, "v"].to_numpy(float)
-        ), strategy
+        ), (strategy, salt_k)
 
 
 @settings(
@@ -123,25 +126,25 @@ def test_asof_directions_match_pandas_oracle(
 
     probe = spark.createDataFrame(probe_pdf)
     build = spark.createDataFrame(build_pdf)
-    for strategy in ("merge_scan", "merge_scan_slim"):
+    for strategy, salt_k in [(s, k) for s in STRATEGIES for k in (1, 4)]:
         got = (
             asof_join(
                 probe, build, key="k", ts_probe="join_ts", ts_build="ts",
-                build_cols=["v"], strategy=strategy, num_buckets=8,
+                build_cols=["v"], strategy=strategy, salt_k=salt_k,
                 direction=direction,
             )
             .toPandas()
             .sort_values("pid", ignore_index=True)
         )
-        assert len(got) == len(want), (strategy, direction)
+        assert len(got) == len(want), (strategy, salt_k, direction)
         assert (got["ts"].isna() == want["ts"].isna()).all(), (
-            strategy, direction,
+            strategy, salt_k, direction,
         )
         m = ~want["ts"].isna()
         assert (
             got.loc[m, "ts"].astype("datetime64[us]").to_numpy()
             == want.loc[m, "ts"].to_numpy()
-        ).all(), (strategy, direction)
+        ).all(), (strategy, salt_k, direction)
         assert np.allclose(
             got.loc[m, "v"].to_numpy(float), want.loc[m, "v"].to_numpy(float)
-        ), (strategy, direction)
+        ), (strategy, salt_k, direction)

@@ -55,9 +55,15 @@ def test_past_features_unchanged(spark, frames):
 
 
 @pytest.mark.parametrize(
-    "strategy", ["merge_scan", "union_window", "merge_scan_slim", "range_scan"]
+    "strategy,salt_k",
+    [("range_scan", 1), ("union_window", 1), ("range_scan", 4),
+     ("union_window", 4)],
+    ids=["range_scan", "union_window", "range_scan-salted",
+         "union_window-salted"],
 )
-def test_asof_results_unchanged_for_past_probes(spark, frames, strategy):
+def test_asof_results_unchanged_for_past_probes(
+    spark, frames, strategy, salt_k
+):
     orig, mutated, _ = frames
     grid = (
         orig.select("url")
@@ -73,7 +79,7 @@ def test_asof_results_unchanged_for_past_probes(spark, frames, strategy):
             asof_join(
                 grid, feats, key="url", ts_probe="join_ts",
                 ts_build="warc_ts", build_cols=["text_sha256"],
-                strategy=strategy, num_buckets=16,
+                strategy=strategy, salt_k=salt_k,
             )
             .toPandas()
             .sort_values("url", ignore_index=True)

@@ -266,7 +266,6 @@ def test_stream_asof_serve_matches_batch_asof(spark, tmp_path):
         asof_join(
             probes, feats,
             build_cols=["text_sha256", "feat"],
-            strategy="merge_scan_slim",
         )
         .toPandas()
         .sort_values(["url", "join_ts"], ignore_index=True)

@@ -1,8 +1,8 @@
 """Physical-plan regression tests (SURVEY.md §4): the optimizations the
 100 TB design depends on must be visible in the executed plan —
 column pruning of the html binary, parquet filter pushdown, broadcast
-join selection, single fat shuffle in the slim as-of, and whole-stage
-codegen on the JVM paths."""
+join selection, one range exchange and no Python in every as-of shape,
+and whole-stage codegen on the JVM paths."""
 
 from __future__ import annotations
 
@@ -11,6 +11,7 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
+from crawlfe.asof import asof_join
 from crawlfe.features import featurize
 from crawlfe.pipeline import feature_pipeline
 from crawlfe.synth import SynthConfig, synth_pages
@@ -40,9 +41,7 @@ def test_join_stage_never_reads_html(spark, pages_path, tmp_path):
     probe = pages.select(
         "url", (F.col("warc_ts") + F.expr("INTERVAL 1 HOUR")).alias("join_ts")
     )
-    out = feature_pipeline(
-        feats, probe, session_gap_s=86400, strategy="merge_scan_slim"
-    )
+    out = feature_pipeline(feats, probe, session_gap_s=86400)
     plan = plan_of(out)
     schemas = re.findall(r"ReadSchema: struct<([^>]*)>", plan)
     assert schemas, plan
@@ -74,34 +73,33 @@ def test_broadcast_join_selected_for_small_dim(spark, sf_dir):
     assert "BroadcastHashJoin" in plan_of(q)
 
 
-def test_slim_asof_single_fat_exchange(spark, pages_path):
-    """merge_scan_slim must not re-shuffle the fat feature payload for
-    the re-join: the window stage's hashpartitioning(url) is reused
-    (requireAllClusterKeysForCoPartition=false)."""
+@pytest.mark.parametrize(
+    "kw,keys",
+    [
+        (dict(direction="forward"), ["url"]),
+        (dict(direction="nearest"), ["url"]),
+        (dict(salt_k=4), ["url", "__salt"]),
+    ],
+    ids=["forward", "nearest", "salted"],
+)
+def test_asof_shapes_stay_in_the_jvm(spark, pages_path, kw, keys):
+    """Forward, nearest and salted as-of run on the same JVM window
+    carry as the backward default: no Python operator anywhere, and the
+    only exchange is one range partitioning on the key (plus the salt
+    when salted), which the carries reuse."""
     pages = spark.read.parquet(pages_path)
-    feats = featurize(pages, use_html=True)
     probe = pages.select(
         "url", (F.col("warc_ts") + F.expr("INTERVAL 1 HOUR")).alias("join_ts")
     )
-    # force SMJ so the exchange structure is visible (no AQE broadcast)
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        out = feature_pipeline(
-            feats, probe, session_gap_s=86400, strategy="merge_scan_slim"
-        )
-        plan = plan_of(out)
-    finally:
-        spark.conf.set(
-            "spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024)
-        )
-    # fat columns (feat) cross exactly ONE hash exchange: the window
-    # stage's partitioning by url; the payload join reuses it
-    exchanges = re.findall(r"Exchange hashpartitioning\(([^)]*)\)", plan)
-    url_ts_exchanges = [
-        e for e in exchanges if "url" in e and "warc_ts" in e and "__b" not in e
-    ]
-    # co-partition reuse: no (url, warc_ts) re-shuffle of the fat side
-    assert len(url_ts_exchanges) <= 1, exchanges
+    build = pages.select("url", "warc_ts", F.col("lang").alias("b_lang"))
+    plan = plan_of(asof_join(probe, build, build_cols=["b_lang"], **kw))
+    for op in ("FlatMapCoGroupsInPandas", "MapInPandas", "ArrowEvalPython"):
+        assert op not in plan, plan
+    exchanges = re.findall(r"Exchange (\w+)\(([^)]*)\)", plan)
+    assert len(exchanges) == 1, plan
+    kind, cols = exchanges[0]
+    assert kind == "rangepartitioning", plan
+    assert re.findall(r"(\w+)#\d+", cols) == keys, plan
 
 
 def test_default_asof_is_a_range_merge_scan(spark, pages_path):

@@ -29,7 +29,7 @@ def _run(grid, feats, salt_k):
         asof_join(
             grid, feats, key="url", ts_probe="join_ts",
             ts_build="warc_ts", build_cols=["text_sha256"],
-            strategy="merge_scan", salt_k=salt_k, num_buckets=16,
+            salt_k=salt_k,
         )
         .toPandas()
         .sort_values(["url", "join_ts"], ignore_index=True)
@@ -57,7 +57,7 @@ def test_salted_equals_unsalted(spark, skew_fixtures, salt_k):
 
 def test_salt_spreads_probe_rows(spark, skew_fixtures):
     """Physical effect: with salt K, a hot url's probes land in K
-    distinct cogroup buckets (build replicated to each)."""
+    distinct salts (build replicated to each)."""
     from pyspark.sql import functions as F
 
     grid, _ = skew_fixtures
