@@ -7,7 +7,7 @@ line: {"metric": ..., "value": total_sec, "unit": "sec",
 
 The headline workload is the engine's acceptance metric (BASELINE.json:2
 "pages featurized/sec"): a deterministic synthetic pages table scaled to
-the sf tier -> frozen-extractor featurization (mapInPandas) -> as-of
+the sf tier -> frozen-extractor featurization (mapInArrow) -> as-of
 join onto a probe grid + lag/lead + sessionize, reported as
 pages_per_sec alongside the HEADLINE registry keys (as-of, windows,
 sessionize, backfill, joins, aggs, dedup, knn).

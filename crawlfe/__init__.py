@@ -14,7 +14,9 @@ Layout:
     extract     FROZEN pure-function html -> text extractor (byte-identical)
     textfeat    numpy featurizers shared verbatim by Spark UDFs and oracle
     synth       deterministic synthetic pages generator (distributed + pandas)
-    features    Spark featurize stage (mapInPandas + lineage capture)
+    features    Spark featurize stage (one mapInArrow + lineage rows)
+    _zipcache   worker-side guard: re-read a zip directory only when the
+                archive changed (Python < 3.12)
     asof        as-of join: one JVM struct-carry window kernel over
                 repartitionByRange + sortWithinPartitions (range_scan)
                 or hash clustering (union_window); salted hot keys
@@ -33,3 +35,9 @@ Layout:
 """
 
 __version__ = "0.1.0"
+
+from ._zipcache import install as _install_zipcache
+
+# every crawlfe UDF unpickles crawlfe.* in the Python worker, so this
+# runs in the first task of each reused worker
+_install_zipcache()

@@ -105,3 +105,31 @@ def test_documents_featurizer_matches_oracle(spark, sf_dir):
     want = featurize_batch(list(docs["text"]))
     got = np.stack(spdf["feat"].to_numpy())
     assert np.allclose(got, want, rtol=1e-9, atol=1e-12)
+
+
+@pytest.mark.parametrize("use_html", [True, False], ids=["html", "text"])
+def test_null_source_cell_featurizes_as_empty_text(spark, use_html):
+    """A null html (or, with use_html=False, a null text) cell gives the
+    empty-text feature vector and sha256(""); the other rows of the same
+    Arrow batch keep their own values."""
+    import datetime as dt
+
+    from crawlfe.textfeat import sha256_hex
+
+    ts = dt.datetime(2024, 1, 1)
+    pages = spark.createDataFrame(
+        [("u/0", ts, None, None), ("u/1", ts, b"<p>hi there</p>", "hi there"),
+         ("u/2", ts, None, None)],
+        "url string, warc_ts timestamp_ntz, html binary, text string",
+    )
+    got = (
+        featurize(pages, use_html=use_html, include_text=True)
+        .toPandas().sort_values("url", ignore_index=True)
+    )
+    assert list(got["text"]) == ["", "hi there", ""]
+    assert list(got["text_sha256"]) == [
+        sha256_hex(""), sha256_hex("hi there"), sha256_hex("")
+    ]
+    want = np.stack([featurize_one(t) for t in got["text"]])
+    assert np.allclose(np.stack(got["feat"].to_numpy()), want,
+                       rtol=1e-9, atol=1e-12)

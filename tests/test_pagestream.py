@@ -168,7 +168,7 @@ def test_statestore_reader_exposes_agg_state(spark, dirs):
 
 def test_stream_featurize_over_pagestream_matches_batch(spark, dirs):
     """North-star loop end-to-end: crawl waves arrive on the streaming
-    source -> the SAME frozen featurize stage (mapInPandas over html)
+    source -> the SAME frozen featurize stage (mapInArrow over html)
     runs incrementally -> parquet sink. Feature rows must be
     byte/bit-identical to batch featurize over the batch twin table
     (row-local featurizers: batch composition can never matter)."""

@@ -93,7 +93,8 @@ def test_asof_shapes_stay_in_the_jvm(spark, pages_path, kw, keys):
     )
     build = pages.select("url", "warc_ts", F.col("lang").alias("b_lang"))
     plan = plan_of(asof_join(probe, build, build_cols=["b_lang"], **kw))
-    for op in ("FlatMapCoGroupsInPandas", "MapInPandas", "ArrowEvalPython"):
+    for op in ("FlatMapCoGroupsInPandas", "MapInPandas", "MapInArrow",
+               "ArrowEvalPython"):
         assert op not in plan, plan
     exchanges = re.findall(r"Exchange (\w+)\(([^)]*)\)", plan)
     assert len(exchanges) == 1, plan
@@ -113,7 +114,8 @@ def test_default_asof_is_a_range_merge_scan(spark, pages_path):
         "url", (F.col("warc_ts") + F.expr("INTERVAL 1 HOUR")).alias("join_ts")
     )
     plan = plan_of(feature_pipeline(featurize(pages, use_html=True), probe))
-    assert plan.count("MapInPandas") == 1, plan
+    assert plan.count("MapInArrow") == 1, plan
+    assert "MapInPandas" not in plan, plan
     assert "FlatMapCoGroupsInPandas" not in plan, plan
     exchanges = sorted(
         (kind, cols.split("#")[0])
@@ -128,6 +130,20 @@ def test_default_asof_is_a_range_merge_scan(spark, pages_path):
     asof_window = above.rsplit("Window [", 1)[1]
     assert "last(" in asof_window.split("\n", 1)[0], above
     assert asof_window.count("Sort [") == 1, above
+
+
+@pytest.mark.parametrize("include_text", [False, True])
+def test_featurize_returns_text_only_on_request(spark, pages_path,
+                                                include_text):
+    """The featurize MapInArrow's output attributes carry ``text`` only
+    when the caller asks for it: otherwise no text crosses the Python
+    boundary for the JVM to drop."""
+    pages = spark.read.parquet(pages_path)
+    plan = plan_of(featurize(pages, include_text=include_text))
+    node = next(ln for ln in plan.splitlines() if "MapInArrow" in ln)
+    out = re.findall(r"(\w+)#\d+", node.rsplit("[", 1)[1])
+    assert ("text" in out) == include_text, node
+    assert "text_sha256" in out and "feat" in out, node
 
 
 def test_wholestage_codegen_on_jvm_paths(spark, sf_dir):
