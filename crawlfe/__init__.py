@@ -11,10 +11,12 @@ re-expressed as idiomatic Spark DataFrame + Arrow-vectorized pandas UDFs.
 Layout:
     conf        SparkSession/builder configs (AQE, Arrow, shuffle sizing)
     hashing     splitmix64-style stable hashing (scalar + numpy vectorized)
+                and Spark's xxhash64 over Arrow columns, in numpy
     extract     FROZEN pure-function html -> text extractor (byte-identical)
     textfeat    numpy featurizers shared verbatim by Spark UDFs and oracle
     synth       deterministic synthetic pages generator (distributed + pandas)
-    features    Spark featurize stage (one mapInArrow + lineage rows)
+    features    Spark featurize stage: one mapInArrow; on commit, each task's
+                lineage row built in flight into an accumulator
     _zipcache   worker-side guard: re-read a zip directory only when the
                 archive changed (Python < 3.12)
     asof        as-of join: one JVM struct-carry window kernel over

@@ -18,11 +18,15 @@ Design notes (scale):
     the scan (verified via .explain ReadSchema in tests).
   * Lineage capture (BASELINE.json:6): each emitted row carries the
     physical partition id (TaskContext) and its row offset within that
-    partition. ``lineage_rows`` aggregates these into per-partition rows
-    (n_rows, first/last offset, order-independent bit_xor feature hash)
-    with a map-side-combinable groupBy. ``pipeline.commit_batch`` runs
-    it over the staged parquet, a second, column-pruned scan that never
-    reads html.
+    partition. Given a lineage sink (only ``pipeline.commit_batch``
+    passes one), the task also builds its partition's lineage row while
+    the batches stream through: first/last offset, n_rows, the
+    order-independent XOR of Spark's ``xxhash64(url, warc_ts,
+    text_sha256)`` per row (``hashing.spark_xxhash64``), html and text
+    bytes and the empty-text count. The row reaches the driver through a
+    dict accumulator keyed by partition id whose merge overwrites, so a
+    retried or re-evaluated task replaces its row instead of adding one.
+    The commit is then one Spark job: the staged write.
 """
 
 from __future__ import annotations
@@ -31,11 +35,11 @@ from typing import Iterator
 
 import numpy as np
 import pyarrow as pa
-from pyspark import TaskContext
+from pyspark import Accumulator, AccumulatorParam, TaskContext
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from .extract import extract_text
+from .hashing import byte_lengths, spark_xxhash64
 from .textfeat import FEAT_DIM, FEAT_VERSION, featurize_batch, sha256_hex
 
 def _schema(include_text: bool) -> str:
@@ -46,12 +50,30 @@ def _schema(include_text: bool) -> str:
     )
 
 
+class LineageMerge(AccumulatorParam):
+    """Accumulator merge of ``{partition_id: lineage row}`` dicts: an
+    overwrite by partition id, so a retried or re-evaluated task
+    replaces its partition's row instead of adding a second one."""
+
+    def zero(self, value: dict) -> dict:
+        return {}
+
+    def addInPlace(self, rows: dict, update: dict) -> dict:
+        rows.update(update)
+        return rows
+
+
 def _featurize_iter(
-    batches: Iterator[pa.RecordBatch], use_html: bool, include_text: bool
+    batches: Iterator[pa.RecordBatch],
+    use_html: bool,
+    include_text: bool,
+    lineage: Accumulator | None,
 ) -> Iterator[pa.RecordBatch]:
     ctx = TaskContext.get()
     part_id = ctx.partitionId() if ctx is not None else -1
     offset = 0
+    row_hash = np.int64(0)
+    html_bytes = text_bytes = empty_text = 0
     for batch in batches:
         n = batch.num_rows
         if use_html:
@@ -60,8 +82,10 @@ def _featurize_iter(
             texts = [t or "" for t in batch.column("text").to_pylist()]
         feats = featurize_batch(texts)
         cols = {"url": batch.column("url"), "warc_ts": batch.column("warc_ts")}
+        if include_text or lineage is not None:
+            text = pa.array(texts, pa.string())
         if include_text:
-            cols["text"] = pa.array(texts, pa.string())
+            cols["text"] = text
         cols["text_sha256"] = pa.array(map(sha256_hex, texts), pa.string())
         cols["feat"] = pa.ListArray.from_arrays(
             np.arange(0, (n + 1) * FEAT_DIM, FEAT_DIM, dtype=np.int32),
@@ -71,11 +95,34 @@ def _featurize_iter(
         cols["part_id"] = pa.array(np.full(n, part_id, np.int32))
         cols["row_offset"] = pa.array(np.arange(offset, offset + n))
         offset += n
+        if lineage is not None:
+            row_hash ^= np.bitwise_xor.reduce(spark_xxhash64(
+                cols["url"], cols["warc_ts"], cols["text_sha256"]))
+            if use_html:
+                html_bytes += int(byte_lengths(batch.column("html")).sum())
+            text_len = byte_lengths(text)
+            text_bytes += int(text_len.sum())
+            empty_text += int(np.count_nonzero(text_len == 0))
         yield pa.RecordBatch.from_pydict(cols)
+    if lineage is not None and offset:
+        lineage.add({part_id: {
+            "partition_id": part_id,
+            "first_offset": 0,
+            "last_offset": offset - 1,
+            "n_rows": offset,
+            "feature_hash": str(row_hash),
+            "html_bytes": html_bytes,
+            "text_bytes": text_bytes,
+            "empty_text": empty_text,
+        }})
 
 
 def featurize(
-    pages: DataFrame, use_html: bool = True, include_text: bool = False
+    pages: DataFrame,
+    use_html: bool = True,
+    include_text: bool = False,
+    *,
+    _lineage: Accumulator | None = None,
 ) -> DataFrame:
     """pages(url, warc_ts, html[, text]) -> features DataFrame
     (url, warc_ts[, text], text_sha256, feat, feat_version, part_id,
@@ -83,41 +130,12 @@ def featurize(
 
     use_html=True runs the frozen extractor on the html bytes; False
     trusts an existing text column (e.g. re-featurizing the store). A
-    null html or text cell featurizes as the empty text.
+    null html or text cell featurizes as the empty text. ``_lineage``
+    is the commit path's sink: a ``LineageMerge`` accumulator that
+    receives one lineage row per non-empty partition.
     """
     src = "html" if use_html else "text"
     return pages.select("url", "warc_ts", src).mapInArrow(
-        lambda it: _featurize_iter(it, use_html, include_text),
+        lambda it: _featurize_iter(it, use_html, include_text, _lineage),
         schema=_schema(include_text),
-    )
-
-
-def lineage_rows(features: DataFrame, input_snapshot: str) -> DataFrame:
-    """Per-partition lineage (BASELINE.json:6): one row per physical
-    partition of the featurize stage — map-side combinable aggregate.
-
-    ``feature_hash`` is an order-independent bit_xor of xxhash64 rows so
-    the hash is reproducible under any scan order; ``committed_at`` is
-    ``current_timestamp()`` and therefore NOT reproducible across
-    retries of the same partition.  That is intentional — resume logic
-    treats the manifest (crawlfe/io.py) as authoritative and never
-    compares lineage tables byte-wise; diff on (partition_id,
-    input_snapshot, offsets, n_rows, feature_hash) only."""
-    return (
-        features.groupBy("part_id")
-        .agg(
-            F.min("row_offset").alias("first_offset"),
-            F.max("row_offset").alias("last_offset"),
-            F.count(F.lit(1)).alias("n_rows"),
-            F.bit_xor(
-                F.xxhash64("url", "warc_ts", "text_sha256")
-            ).cast("string").alias("feature_hash"),
-        )
-        .withColumn("input_snapshot", F.lit(input_snapshot))
-        .withColumn("committed_at", F.current_timestamp())
-        .withColumnRenamed("part_id", "partition_id")
-        .select(
-            "partition_id", "input_snapshot", "first_offset", "last_offset",
-            "n_rows", "feature_hash", "committed_at",
-        )
     )

@@ -8,11 +8,16 @@ pandas oracle produce identical bytes (SURVEY.md §7 hard-part #5).
 
 Both a scalar-int and a numpy-vectorized uint64 implementation are given;
 they are bit-identical.
+
+``spark_xxhash64`` is the other kind: Spark's own ``xxhash64`` over Arrow
+columns, so a hash taken in a Python task equals the one Spark SQL takes
+(the committed lineage's ``feature_hash``).
 """
 
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 
 _MASK = (1 << 64) - 1
 
@@ -220,3 +225,165 @@ def fnv1a64_bytes_np(codes: np.ndarray) -> np.ndarray:
         for i in range(codes.shape[-1]):
             h = (h ^ codes[..., i].astype(np.uint64)) * np.uint64(0x100000001B3)
     return h
+
+
+# ---------------------------------------------------------------------------
+# Spark's xxhash64, vectorized over Arrow columns.
+#
+# ``F.xxhash64(c1, c2, ...)`` is XXH64 (Y. Collet) with seed 42, chained
+# column to column: a non-null cell is hashed with the running hash as
+# its seed, a null cell leaves the running hash unchanged. Strings and
+# binaries hash their bytes (Spark's XXH64.hashUnsafeBytes), longs and
+# timestamps the 8-byte value (XXH64.hashLong; a timestamp is its long
+# of microseconds). The byte kernel reads the Arrow offsets and data
+# buffers directly and runs every row of a column together: rows are
+# masked in and out of each 32-byte stripe, 8-byte word, 4-byte word
+# and tail byte, so the numpy-call count grows with the longest value
+# in the batch, never with the number of distinct lengths.
+# ---------------------------------------------------------------------------
+
+_SPARK_SEED = 42
+
+_P1 = np.uint64(0x9E3779B185EBCA87)
+_P2 = np.uint64(0xC2B2AE3D27D4EB4F)
+_P3 = np.uint64(0x165667B19E3779F9)
+_P4 = np.uint64(0x85EBCA77C2B2AE63)
+_P5 = np.uint64(0x27D4EB2F165667C5)
+_LANES = np.arange(0, 32, 8, dtype=np.int64)[:, None]
+
+
+def _rotl(x: np.ndarray, r: int) -> np.ndarray:
+    return (x << np.uint64(r)) | (x >> np.uint64(64 - r))
+
+
+def _round(acc, lane: np.ndarray) -> np.ndarray:
+    return _rotl(acc + lane * _P2, 31) * _P1
+
+
+def _fmix(h: np.ndarray) -> np.ndarray:
+    h = h ^ (h >> np.uint64(33))
+    h *= _P2
+    h ^= h >> np.uint64(29)
+    h *= _P3
+    h ^= h >> np.uint64(32)
+    return h
+
+
+def _xxh64_long(v: np.ndarray, seed: np.ndarray) -> np.ndarray:
+    h = seed + (_P5 + np.uint64(8))
+    h ^= _round(np.uint64(0), v)
+    return _fmix(_rotl(h, 27) * _P1 + _P4)
+
+
+def _xxh64_bytes(
+    buf: np.ndarray, start: np.ndarray, length: np.ndarray, seed: np.ndarray
+) -> np.ndarray:
+    """XXH64 of ``buf[start[i] : start[i] + length[i]]`` per row, seeded
+    by ``seed[i]``. ``buf`` must carry 32 zero bytes past its data, so
+    a masked-out row may read past its own end."""
+    w64 = np.ndarray((buf.size - 7,), "<u8", buf, strides=(1,))
+    w32 = np.ndarray((buf.size - 3,), "<u4", buf, strides=(1,))
+    h = seed + _P5
+    stripes = length >> 5
+    big = np.flatnonzero(stripes)
+    if big.size:
+        # longest first: the rows still inside stripe k are a prefix
+        big = big[np.argsort(-stripes[big], kind="stable")]
+        ns = stripes[big]
+        pos = start[big]
+        s = seed[big]
+        v = np.stack([s + (_P1 + _P2), s + _P2, s, s - _P1])
+        active = np.searchsorted(-ns, -np.arange(ns[0]), side="left")
+        for k, m in enumerate(active):
+            lanes = w64[pos[:m] + 32 * k + _LANES]
+            v[:, :m] = _round(v[:, :m], lanes)
+        hb = _rotl(v[0], 1) + _rotl(v[1], 7) + _rotl(v[2], 12) + _rotl(v[3], 18)
+        for lane in v:
+            hb = (hb ^ _round(np.uint64(0), lane)) * _P1 + _P4
+        h[big] = hb
+    h += length.astype(np.uint64)
+    off = start + (stripes << 5)
+    words = (length & 31) >> 3
+    for j in range(3):
+        k1 = w64[off + 8 * j]
+        h = np.where(
+            words > j, _rotl(h ^ _round(np.uint64(0), k1), 27) * _P1 + _P4, h
+        )
+    off = start + (length & ~7)
+    k4 = w32[off].astype(np.uint64)
+    h = np.where(length & 4, _rotl(h ^ (k4 * _P1), 23) * _P2 + _P3, h)
+    off += length & 4
+    tail = length & 3
+    for j in range(3):
+        b = buf[off + j].astype(np.uint64)
+        h = np.where(tail > j, _rotl(h ^ (b * _P5), 11) * _P1, h)
+    return _fmix(h)
+
+
+def _offsets(col) -> np.ndarray:
+    """The n + 1 value offsets of a (possibly sliced) non-empty Arrow
+    string or binary array, as int64."""
+    t = col.type
+    large = pa.types.is_large_string(t) or pa.types.is_large_binary(t)
+    otype = np.dtype(np.int64 if large else np.int32)
+    return np.frombuffer(
+        col.buffers()[1], otype, count=len(col) + 1,
+        offset=otype.itemsize * col.offset,
+    ).astype(np.int64)
+
+
+def _valid(col) -> np.ndarray:
+    """Validity of each row of a (possibly sliced) Arrow array with
+    nulls, unpacked from its bitmap."""
+    bits = np.frombuffer(col.buffers()[0], np.uint8)
+    return np.unpackbits(bits, bitorder="little")[
+        col.offset : col.offset + len(col)].astype(bool)
+
+
+def byte_lengths(col) -> np.ndarray:
+    """Byte length of each row of an Arrow string or binary array
+    (0 for a null), read from its offsets buffer."""
+    if not len(col):
+        return np.zeros(0, np.int64)
+    lengths = np.diff(_offsets(col))
+    if col.null_count:
+        lengths[~_valid(col)] = 0
+    return lengths
+
+
+def _hash_column(col, seed: np.ndarray) -> np.ndarray:
+    t = col.type
+    n = len(col)
+    if n == 0:
+        return seed
+    if pa.types.is_int64(t) or (pa.types.is_timestamp(t) and t.unit == "us"):
+        vals = np.frombuffer(
+            col.buffers()[1], np.uint64, count=n, offset=8 * col.offset
+        )
+        h = _xxh64_long(vals, seed)
+    elif (pa.types.is_string(t) or pa.types.is_binary(t)
+          or pa.types.is_large_string(t) or pa.types.is_large_binary(t)):
+        offs = _offsets(col)
+        lo, hi = int(offs[0]), int(offs[-1])
+        buf = np.zeros(hi - lo + 32, np.uint8)
+        if hi > lo:
+            buf[: hi - lo] = np.frombuffer(col.buffers()[2], np.uint8)[lo:hi]
+        h = _xxh64_bytes(buf, offs[:-1] - lo, np.diff(offs), seed)
+    else:
+        raise TypeError(f"spark_xxhash64: unsupported column type {t}")
+    if col.null_count:
+        h = np.where(_valid(col), h, seed)
+    return h
+
+
+def spark_xxhash64(*columns) -> np.ndarray:
+    """Per-row hashes bit-identical to Spark's ``F.xxhash64(*columns)``,
+    as int64. Each column is a pyarrow string, binary, int64 or
+    microsecond timestamp Array of the same length (sliced arrays are
+    fine)."""
+    n = len(columns[0])
+    h = np.full(n, _SPARK_SEED, np.uint64)
+    with np.errstate(over="ignore"):
+        for col in columns:
+            h = _hash_column(col, h)
+    return h.view(np.int64)

@@ -12,11 +12,12 @@ invisible, exactly like an Iceberg snapshot.
 
 Lineage + resume (BASELINE.json:6): each manifest embeds the per-
 partition lineage rows (partition id, first/last row offset, n_rows,
-order-independent feature hash) for the data it commits, keyed by
-``input_snapshot``. Because lineage lives INSIDE the atomic manifest,
-"features visible" and "lineage recorded" cannot diverge: a crash before
-the manifest rename leaves only invisible staging files, and a rerun
-redoes exactly the uncommitted input snapshots (tests/test_resume.py).
+order-independent feature hash, html and text bytes, empty-text docs)
+for the data it commits, keyed by ``input_snapshot``. Because lineage
+lives INSIDE the atomic manifest, "features visible" and "lineage
+recorded" cannot diverge: a crash before the manifest rename leaves only
+invisible staging files, and a rerun redoes exactly the uncommitted
+input snapshots (tests/test_resume.py).
 """
 
 from __future__ import annotations
@@ -29,6 +30,15 @@ import uuid
 from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+# a manifest written before lineage carried html/text bytes and the
+# empty-text count reads them as null
+_LINEAGE_SCHEMA = (
+    "partition_id int, input_snapshot string, first_offset long, "
+    "last_offset long, n_rows long, feature_hash string, html_bytes long, "
+    "text_bytes long, empty_text long, committed_at string"
+)
 
 
 class IcebergLite:
@@ -122,14 +132,8 @@ class IcebergLite:
                 )
         if not rows:
             return None
-        return spark.createDataFrame(rows).selectExpr(
-            "cast(partition_id as int) partition_id",
-            "input_snapshot",
-            "cast(first_offset as long) first_offset",
-            "cast(last_offset as long) last_offset",
-            "cast(n_rows as long) n_rows",
-            "feature_hash",
-            "cast(committed_at as timestamp) committed_at",
+        return spark.createDataFrame(rows, _LINEAGE_SCHEMA).withColumn(
+            "committed_at", F.col("committed_at").cast("timestamp")
         )
 
     # -- write side --------------------------------------------------------

@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .asof import asof_join
-from .features import featurize, lineage_rows
+from .features import LineageMerge, featurize
 from .io import IcebergLite
 from .windows import sessionize, with_lag_lead
 
@@ -36,23 +36,20 @@ def commit_batch(
 ) -> None:
     """Featurize one input snapshot and atomically commit data+lineage.
 
-    Featurization runs ONCE (the staged parquet write); lineage is then
-    aggregated from the staged files — a cheap column-pruned scan that
-    never touches html — and committed in the same manifest.
+    One Spark job: the staged write. Each featurize task builds its
+    partition's lineage row in flight and hands it to the driver through
+    a ``LineageMerge`` accumulator, so the staged files are never read
+    back; the rows are committed in the same manifest as the data. A
+    snapshot with no rows commits with an empty lineage.
     """
-    feats = featurize(pages, use_html=True)
-    stage_path = features_table.stage(feats)
-    staged = spark.read.parquet(stage_path)
-    lin_rows = [
-        {k: (v.item() if hasattr(v, "item") else v) for k, v in r.items()}
-        for r in lineage_rows(staged, snapshot_id)
-        .drop("input_snapshot", "committed_at")
-        .toPandas()
-        .to_dict("records")
-    ]
+    sink = spark.sparkContext.accumulator({}, LineageMerge())
+    stage_path = features_table.stage(
+        featurize(pages, use_html=True, _lineage=sink)
+    )
     if crash_before_commit:
         return
-    features_table.commit(stage_path, snapshot_id, lineage_rows=lin_rows)
+    lineage = [sink.value[p] for p in sorted(sink.value)]
+    features_table.commit(stage_path, snapshot_id, lineage_rows=lineage)
 
 
 def run_incremental(

@@ -10,7 +10,8 @@ IcebergLite shim swapped for the real catalog (crawlfe/io.py docstring).
 
 The job is resume-aware: rerunning with the same --output picks up after
 the last committed input snapshot (exactly-once per snapshot). Prints one
-JSON summary line to stdout.
+JSON summary line to stdout, with the table's html bytes, text bytes and
+empty-text docs summed from the committed lineage.
 """
 
 from __future__ import annotations
@@ -77,6 +78,13 @@ def main() -> int:
     )
     feats = features_table.read(spark)
     n_features = feats.count() if feats is not None else 0
+    # data totals from the committed lineage (manifests written before
+    # lineage carried these counts add nothing)
+    lineage = [r for m in features_table.manifests() for r in m["lineage"]]
+    totals = {
+        k: sum(r.get(k, 0) for r in lineage)
+        for k in ("html_bytes", "text_bytes", "empty_text")
+    }
 
     n_asof = 0
     if feats is not None and args.crash_after is None:
@@ -104,6 +112,7 @@ def main() -> int:
                 "committed_snapshots": committed,
                 "n_features": n_features,
                 "n_asof_rows": n_asof,
+                **totals,
                 "elapsed_sec": round(elapsed, 2),
                 "features_per_sec": round(n_features / elapsed, 1),
             }

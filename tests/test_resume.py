@@ -1,14 +1,73 @@
 """Checkpoint/resume + lineage tests (BASELINE.json:6; SURVEY.md
 §5.2.5): crash after partial commit, rerun, exactly-once output and
-monotonic lineage; atomic visibility of the iceberg-lite commit."""
+monotonic lineage; atomic visibility of the iceberg-lite commit; the
+in-flight lineage against a brute-force recount of the committed data."""
 
+import copy
 import os
+import uuid
 
 import pytest
+from pyspark.sql import functions as F
+from pyspark.sql.readwriter import DataFrameReader
 
+from crawlfe.extract import extract_text_reference
+from crawlfe.features import LineageMerge, featurize
 from crawlfe.io import IcebergLite
 from crawlfe.pipeline import commit_batch, run_incremental
 from crawlfe.synth import SynthConfig, synth_pages
+
+_LINEAGE_COLS = [
+    "input_snapshot", "partition_id", "first_offset", "last_offset",
+    "n_rows", "feature_hash", "html_bytes", "text_bytes", "empty_text",
+]
+
+
+def _lineage(spark, tbl):
+    return sorted(
+        tuple(r) for r in tbl.lineage(spark).select(*_LINEAGE_COLS).collect()
+    )
+
+
+def _recount_lineage(spark, tbl, manifest, pages):
+    """Brute-force lineage of one committed snapshot: the per-partition
+    groupBy of its data files (min/max offset, count, bit_xor of
+    Spark's xxhash64), plus html bytes, text bytes and empty-text docs
+    recounted with the reference extractor."""
+    data = spark.read.parquet(
+        *(os.path.join(tbl.data_dir, f) for f in manifest["files"])
+    )
+    agg = (
+        data.groupBy("part_id")
+        .agg(
+            F.min("row_offset").alias("first_offset"),
+            F.max("row_offset").alias("last_offset"),
+            F.count(F.lit(1)).alias("n_rows"),
+            F.bit_xor(F.xxhash64("url", "warc_ts", "text_sha256"))
+            .cast("string").alias("feature_hash"),
+        )
+        .withColumnRenamed("part_id", "partition_id")
+        .toPandas()
+    )
+    src = pages.select("url", "warc_ts", "html").toPandas()
+    text = src["html"].map(extract_text_reference)
+    src["html_bytes"] = src["html"].map(lambda h: 0 if h is None else len(h))
+    src["text_bytes"] = text.map(lambda t: len(t.encode("utf-8")))
+    src["empty_text"] = (text == "").astype(int)
+    counts = (
+        data.select("url", "warc_ts", "part_id").toPandas()
+        .merge(src.drop(columns="html"), on=["url", "warc_ts"],
+               validate="one_to_one")
+        .groupby("part_id")[["html_bytes", "text_bytes", "empty_text"]]
+        .sum()
+        .rename_axis("partition_id")
+        .reset_index()
+    )
+    out = agg.merge(counts, on="partition_id").sort_values("partition_id")
+    return [
+        {k: (v.item() if hasattr(v, "item") else v) for k, v in r.items()}
+        for r in out.to_dict("records")
+    ]
 
 
 def _batches(spark, n=3, urls=30):
@@ -43,6 +102,8 @@ def test_crash_then_resume_exactly_once(spark, tmp_path):
     run_incremental(spark, _batches(spark), tbl2)
     assert tbl.read(spark).count() == tbl2.read(spark).count()
     assert visible_after_crash < tbl.read(spark).count()
+    # the resumed table's lineage equals the fresh run's
+    assert _lineage(spark, tbl) == _lineage(spark, tbl2)
 
     # per-url uniqueness: no batch applied twice
     feats = tbl.read(spark)
@@ -64,6 +125,114 @@ def test_lineage_rows_complete(spark, tmp_path):
     assert (lin["first_offset"] >= 0).all()
     assert (lin["last_offset"] >= lin["first_offset"]).all()
     assert lin["feature_hash"].notna().all()
+
+
+def test_lineage_equals_brute_force_recount(spark, tmp_path):
+    """Every field of the in-flight lineage equals a recount of the
+    committed data, for snapshots of several partitions that include
+    null html and html whose text is empty."""
+    tbl = IcebergLite(str(tmp_path / "t"))
+    bucket = F.pmod(F.xxhash64("url", "warc_ts"), F.lit(7))
+    pages = {}
+    for k in range(2):
+        p = synth_pages(spark, SynthConfig(n_urls=80), n_partitions=4,
+                        url_lo=40 * k, url_hi=40 * (k + 1))
+        pages[f"snap-{k}"] = p.withColumn(
+            "html",
+            F.when(bucket == 0, F.lit(None).cast("binary"))
+            .when(bucket == 1, F.encode(F.lit("<script>x=1</script>"),
+                                        "utf-8"))
+            .otherwise(F.col("html")),
+        )
+    run_incremental(spark, list(pages.items()), tbl)
+    manifests = tbl.manifests()
+    assert [m["input_snapshot"] for m in manifests] == list(pages)
+    for m in manifests:
+        want = _recount_lineage(spark, tbl, m, pages[m["input_snapshot"]])
+        assert len(want) == 4
+        assert sum(r["empty_text"] for r in want) > 0
+        assert m["lineage"] == want
+
+
+def test_empty_snapshot_commits_empty_lineage(spark, tmp_path):
+    tbl = IcebergLite(str(tmp_path / "t"))
+    pages = synth_pages(spark, SynthConfig(n_urls=20)).where(F.lit(False))
+    commit_batch(spark, pages, tbl, "empty")
+    assert tbl.committed_snapshots() == {"empty"}
+    assert tbl.manifests()[0]["lineage"] == []
+    assert tbl.lineage(spark) is None
+
+
+def test_lineage_merge_overwrites_by_partition_id():
+    merge = LineageMerge()
+    rows = merge.zero({7: {"n_rows": 1}})
+    assert rows == {}
+    rows = merge.addInPlace(rows, {0: {"n_rows": 5}, 1: {"n_rows": 2}})
+    rows = merge.addInPlace(rows, {0: {"n_rows": 5}})
+    assert rows == {0: {"n_rows": 5}, 1: {"n_rows": 2}}
+    rows = merge.addInPlace(rows, {1: {"n_rows": 3}})
+    assert rows == {0: {"n_rows": 5}, 1: {"n_rows": 3}}
+
+
+def test_lineage_sink_survives_reevaluation(spark, tmp_path):
+    """A featurize DataFrame carrying the sink, evaluated twice (a
+    count, then the write): one entry per partition, same values."""
+    pages = synth_pages(spark, SynthConfig(n_urls=60), n_partitions=3)
+    sink = spark.sparkContext.accumulator({}, LineageMerge())
+    feats = featurize(pages, _lineage=sink)
+    n = feats.count()
+    first = copy.deepcopy(sink.value)
+    feats.write.parquet(str(tmp_path / "out"))
+    assert sink.value == first
+    assert sorted(first) == [0, 1, 2]
+    assert sum(r["n_rows"] for r in first.values()) == n
+
+
+def test_commit_batch_is_one_spark_job(spark, tmp_path, monkeypatch):
+    """commit_batch runs exactly one Spark job (the staged write) and
+    never reads the staged files back."""
+    tbl = IcebergLite(str(tmp_path / "t"))
+    pages = synth_pages(spark, SynthConfig(n_urls=40), n_partitions=3)
+    reads = []
+    real_parquet = DataFrameReader.parquet
+
+    def parquet(self, *paths, **kw):
+        reads.extend(paths)
+        return real_parquet(self, *paths, **kw)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", parquet)
+    sc = spark.sparkContext
+    group = f"commit-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "commit_batch")
+    try:
+        commit_batch(spark, pages, tbl, "snap")
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert reads == []
+    assert sum(r["n_rows"] for r in tbl.manifests()[0]["lineage"]) == (
+        tbl.read(spark).count()
+    )
+
+
+def test_lineage_reads_manifests_without_data_counts(spark, tmp_path):
+    """Manifests written before lineage carried html/text bytes and the
+    empty-text count still read, with those columns null."""
+    tbl = IcebergLite(str(tmp_path / "t"))
+    pages = synth_pages(spark, SynthConfig(n_urls=20), n_partitions=2)
+    old_row = {"partition_id": 0, "first_offset": 0, "last_offset": 9,
+               "n_rows": 10, "feature_hash": "-123"}
+    tbl.append(pages.select("url"), "old", lineage_rows=[old_row])
+    commit_batch(spark, pages, tbl, "new")
+    lineage = tbl.lineage(spark)
+    assert dict(lineage.dtypes)["text_bytes"] == "bigint"
+    lin = lineage.toPandas()
+    old = lin[lin["input_snapshot"] == "old"]
+    new = lin[lin["input_snapshot"] == "new"]
+    assert old[["n_rows", "feature_hash"]].values.tolist() == [[10, "-123"]]
+    assert old[["html_bytes", "text_bytes", "empty_text"]].isna().all().all()
+    assert len(new) == 2 and (new["html_bytes"] > 0).all()
 
 
 def test_recommit_same_snapshot_rejected(spark, tmp_path):
