@@ -55,16 +55,6 @@ def h64(seed: int, *keys: int) -> int:
     return acc
 
 
-def h64_np(seed: int, *key_arrays: np.ndarray) -> np.ndarray:
-    """Vectorized h64: each element i hashes (seed, a0[i], a1[i], ...)."""
-    acc = np.full(
-        key_arrays[0].shape, splitmix64(seed & _MASK), dtype=np.uint64
-    )
-    for arr in key_arrays:
-        acc = splitmix64_np(acc ^ arr.astype(np.uint64))
-    return acc
-
-
 # ---------------------------------------------------------------------------
 # Batch-vectorized token hashing (no per-token Python in the hot path).
 #
@@ -216,15 +206,6 @@ def shingle_hashes_batch(
     sh_doc = np.concatenate([long_doc, short])
     order = np.argsort(sh_doc, kind="stable")
     return sh_h[order], sh_doc[order]
-
-
-def fnv1a64_bytes_np(codes: np.ndarray) -> np.ndarray:
-    """Not used for ngrams (see textfeat); kept for payload checks."""
-    h = np.uint64(0xCBF29CE484222325)
-    with np.errstate(over="ignore"):
-        for i in range(codes.shape[-1]):
-            h = (h ^ codes[..., i].astype(np.uint64)) * np.uint64(0x100000001B3)
-    return h
 
 
 # ---------------------------------------------------------------------------

@@ -2,13 +2,14 @@
 commits, manifest-embedded lineage, and exactly-once resume.
 
 No Iceberg runtime jar exists in the sandbox (SURVEY.md §1.3), so the
-table format hides behind this shim: in production the same call sites
-become ``df.writeTo(catalog.table).append()`` (Iceberg snapshot commit);
-locally a commit is: write parquet to ``_staging/<uuid>/`` → hard-rename
-data files into ``data/`` → atomically rename a JSON manifest into
-``_manifest/``. Readers list committed manifests and pass the explicit
-data-file list to ``spark.read.parquet`` — uncommitted staging files are
-invisible, exactly like an Iceberg snapshot.
+table format hides behind this shim. ``IcebergLite`` is the only table
+class; no catalog-backed class ships. In production its call sites
+become ``df.writeTo(catalog.table).append()`` (an Iceberg snapshot
+commit). Locally a commit is: write parquet to ``_staging/<uuid>/`` →
+hard-rename data files into ``data/`` → atomically rename a JSON
+manifest into ``_manifest/``. Readers list committed manifests and pass
+the explicit data-file list to ``spark.read.parquet`` — uncommitted
+staging files are invisible, exactly like an Iceberg snapshot.
 
 Lineage + resume (BASELINE.json:6): each manifest embeds the per-
 partition lineage rows (partition id, first/last row offset, n_rows,
@@ -23,7 +24,6 @@ input snapshots (tests/test_resume.py).
 from __future__ import annotations
 
 import json
-import logging
 import os
 import shutil
 import uuid
@@ -180,6 +180,21 @@ class IcebergLite:
         df.write.mode("overwrite").parquet(stage)
         return stage
 
+    def _move_staged(self, stage_path: str) -> list[str]:
+        """Hard-rename every staged ``*.parquet`` into data/ under a uuid
+        prefix and return the new names. The files stay invisible until
+        a manifest naming them is published."""
+        moved = []
+        for name in sorted(os.listdir(stage_path)):
+            if not name.endswith(".parquet"):
+                continue
+            dst = f"{uuid.uuid4().hex}-{name}"
+            os.rename(
+                os.path.join(stage_path, name), os.path.join(self.data_dir, dst)
+            )
+            moved.append(dst)
+        return moved
+
     def commit(
         self,
         stage_path: str,
@@ -191,16 +206,7 @@ class IcebergLite:
         the manifest rename is the commit point."""
         if input_snapshot in self.committed_snapshots():
             raise ValueError(f"snapshot already committed: {input_snapshot}")
-        moved = []
-        for name in sorted(os.listdir(stage_path)):
-            if not name.endswith(".parquet"):
-                continue
-            dst_name = f"{uuid.uuid4().hex}-{name}"
-            os.rename(
-                os.path.join(stage_path, name),
-                os.path.join(self.data_dir, dst_name),
-            )
-            moved.append(dst_name)
+        moved = self._move_staged(stage_path)
         manifest = {
             "snapshot_id": uuid.uuid4().hex,
             "input_snapshot": input_snapshot,
@@ -247,15 +253,7 @@ class IcebergLite:
         old_ids = [m["snapshot_id"] for m in manifests]
         old_files = self.data_files()
         # 1. publish data files (invisible until the manifest commit)
-        moved = []
-        for name in sorted(os.listdir(stage)):
-            if not name.endswith(".parquet"):
-                continue
-            dst = f"{uuid.uuid4().hex}-{name}"
-            os.rename(
-                os.path.join(stage, name), os.path.join(self.data_dir, dst)
-            )
-            moved.append(dst)
+        moved = self._move_staged(stage)
         manifest = {
             "snapshot_id": uuid.uuid4().hex,
             "input_snapshot": "+".join(snap_names),
@@ -281,99 +279,3 @@ class IcebergLite:
                 pass
         shutil.rmtree(stage, ignore_errors=True)
         return len(moved)
-
-
-class IcebergTable:
-    """Production implementation of the same table interface over a real
-    Iceberg catalog (requires iceberg-spark-runtime on the cluster:
-    ``spark-submit --packages org.apache.iceberg:iceberg-spark-runtime-...``
-    plus a configured catalog). Not constructible in the sandbox (no jar
-    — SURVEY.md §1.3); the interface parity with IcebergLite is what the
-    pipeline codes against.
-
-    Commit model: data append + lineage append run as two writes, but
-    the lineage table row carries ``input_snapshot``; resume reads
-    committed_snapshots() from the LINEAGE table (written last), so a
-    crash between the two appends is re-done idempotently: the orphan
-    data append is superseded by the rerun's overwrite-by-snapshot
-    (``overwritePartitions`` keyed on input_snapshot).
-    """
-
-    def __init__(self, spark: SparkSession, table: str, lineage_table: str):
-        self.spark = spark
-        self.table = table
-        self.lineage_table = lineage_table
-        try:
-            spark._jvm.org.apache.iceberg.Table  # noqa: B018
-        except Exception as e:  # pragma: no cover - sandbox has no jar
-            raise RuntimeError(
-                "Iceberg runtime not on classpath; use IcebergLite locally"
-            ) from e
-
-    def committed_snapshots(self) -> set[str]:  # pragma: no cover
-        rows = self.spark.table(self.lineage_table).select(
-            "input_snapshot"
-        ).distinct().collect()
-        return {r[0] for r in rows}
-
-    def read(self, spark: SparkSession | None = None):  # pragma: no cover
-        return (spark or self.spark).table(self.table)
-
-    def lineage(self, spark: SparkSession | None = None):  # pragma: no cover
-        return (spark or self.spark).table(self.lineage_table)
-
-    def append(
-        self, df: DataFrame, input_snapshot: str,
-        lineage_rows: list[dict] | None = None,
-    ) -> str:  # pragma: no cover
-        from pyspark.sql import functions as F
-
-        df.withColumn(
-            "input_snapshot", F.lit(input_snapshot)
-        ).writeTo(self.table).overwritePartitions()
-        if lineage_rows:
-            self.spark.createDataFrame(
-                [{**r, "input_snapshot": input_snapshot} for r in lineage_rows]
-            ).writeTo(self.lineage_table).append()
-        return input_snapshot
-
-
-def make_table(
-    spark: SparkSession,
-    path_or_table: str,
-    lineage_table: str | None = None,
-    allow_local_fallback: bool = False,
-):
-    """Factory: Iceberg catalog table name ('cat.db.tbl') in prod,
-    filesystem path -> IcebergLite locally.
-
-    A dotted catalog name with no Iceberg runtime on the classpath is a
-    misconfiguration, not a local table: raise unless the caller opts in
-    with ``allow_local_fallback`` (which logs the degradation loudly) —
-    otherwise a broken prod classpath would silently write the "table"
-    to a local directory named cat.db.tbl."""
-    looks_like_path = (
-        os.sep in path_or_table
-        or path_or_table.startswith((".", "~"))
-        or "." not in path_or_table
-    )
-    if not looks_like_path:
-        try:
-            return IcebergTable(
-                spark, path_or_table,
-                lineage_table or f"{path_or_table}_lineage",
-            )
-        except RuntimeError:
-            if not allow_local_fallback:
-                raise RuntimeError(
-                    f"{path_or_table!r} looks like an Iceberg catalog "
-                    "table but the Iceberg runtime is not on the "
-                    "classpath; pass allow_local_fallback=True to "
-                    "degrade to a local IcebergLite directory"
-                )
-            logging.getLogger(__name__).warning(
-                "Iceberg runtime missing: degrading catalog table %r "
-                "to a LOCAL IcebergLite directory (allow_local_fallback)",
-                path_or_table,
-            )
-    return IcebergLite(path_or_table)

@@ -56,7 +56,6 @@ from .seqtest import *  # noqa: F401,F403
 from .llm_eval import *  # noqa: F401,F403
 from .storeops import *  # noqa: F401,F403
 from .bitemporal import *  # noqa: F401,F403
-from .trainers import *  # noqa: F401,F403
 from .model_audit import *  # noqa: F401,F403
 from .offpolicy import *  # noqa: F401,F403
 from .agreement import *  # noqa: F401,F403
@@ -68,7 +67,6 @@ from .overlap_eval import *  # noqa: F401,F403
 from .causal2 import *  # noqa: F401,F403
 from .bucketops import *  # noqa: F401,F403
 from .fdr2 import *  # noqa: F401,F403
-from .concord import *  # noqa: F401,F403
 from .qte import *  # noqa: F401,F403
 from .survival2 import *  # noqa: F401,F403
 from .embedgeom import *  # noqa: F401,F403
@@ -83,32 +81,24 @@ from .asof_feats import *  # noqa: F401,F403
 from .evt2 import *  # noqa: F401,F403
 from .stylo import *  # noqa: F401,F403
 from .forecast_eval2 import *  # noqa: F401,F403
-from .survival3 import *  # noqa: F401,F403
 from .methodcmp import *  # noqa: F401,F403
-from .contingency import *  # noqa: F401,F403
 from .matching import *  # noqa: F401,F403
 from .rankmodels import *  # noqa: F401,F403
 from .neighbors import *  # noqa: F401,F403
 from .dataqc import *  # noqa: F401,F403
 from .queueing import *  # noqa: F401,F403
-from .robust2 import *  # noqa: F401,F403
-from .spectral import *  # noqa: F401,F403
 from .lmeval2 import *  # noqa: F401,F403
 from .seqtest3 import *  # noqa: F401,F403
 from .forecast_prob import *  # noqa: F401,F403
 from .graph_cent import *  # noqa: F401,F403
-from .markov import *  # noqa: F401,F403
 from .decompose import *  # noqa: F401,F403
 from .momentq import *  # noqa: F401,F403
 from .curation2 import *  # noqa: F401,F403
-from .inequality import *  # noqa: F401,F403
 from .bayes_ab import *  # noqa: F401,F403
 from .pricing import *  # noqa: F401,F403
 from .robreg import *  # noqa: F401,F403
 from .meta import *  # noqa: F401,F403
 from .optstats import *  # noqa: F401,F403
-from .featqc import *  # noqa: F401,F403
-from .twosample import *  # noqa: F401,F403
 from .corpusqc import *  # noqa: F401,F403
 from .causal3 import *  # noqa: F401,F403
 from .breaks import *  # noqa: F401,F403
@@ -132,7 +122,6 @@ from .seqtest import _MSPRT_TAU2, _RAKE_STOPWORDS  # noqa: F401
 from .llm_eval import _DSIR_BUCKETS, _PASSK_K  # noqa: F401
 from .storeops import _PREFIX_BLOCK_CHARS, _SKEW_CUTOFF_DAY, _SPLIT_BUDGET_CENTS  # noqa: F401
 from .bitemporal import _DELAY_MAX_S, _JOIN_US, _KT1_US, _WM_SECONDS  # noqa: F401
-from .trainers import _NB_TRAIN_DAY_MAX  # noqa: F401
 from .model_audit import _MA_BIN_CENTS, _MA_MAX_BIN, _MA_TRAIN_DAY_MAX, _QINI_TILES  # noqa: F401
 from .offpolicy import _OP_ACTIONS, _OP_BIN_CENTS, _OP_MAX_BIN, _OP_TRAIN_DAY_MAX  # noqa: F401
 from .agreement import _GPD_DECILE  # noqa: F401
@@ -144,7 +133,6 @@ from .overlap_eval import _OVL_TOPK, _Z95  # noqa: F401
 from .causal2 import _ES_POLICY_DAY, _ES_TREAT_MOD, _ES_WEEKS, _RD_BW, _RD_CUT  # noqa: F401
 from .bucketops import _ND_MOD, _ND_OFF, _PH_LAMBDA_E4  # noqa: F401
 from .fdr2 import _FS_PREFIX, _STOREY_LAMBDA_PPB  # noqa: F401
-from .concord import _KW_NOISE, _KW_RATERS, _YUEN_TRIM_PCT  # noqa: F401
 from .qte import _HH_BIN  # noqa: F401
 from .survival2 import _KM_TAU  # noqa: F401
 from .embedgeom import _ISO_DIRS, _JL_K  # noqa: F401
@@ -159,30 +147,23 @@ from .asof_feats import _KTH, _TAU_H  # noqa: F401
 from .evt2 import _EI_GAP_US, _RL_M  # noqa: F401
 from .stylo import _BD_TOPK, _GRUBBS_CRIT, _MAH_TOPK  # noqa: F401
 from .forecast_eval2 import _SN_LAG  # noqa: F401
-from .survival3 import _LT_WEEK_US  # noqa: F401
 from .methodcmp import _BA_Z, _SPLIT_DAY  # noqa: F401
-from .contingency import _FE_HEAVY, _FE_TIE_EPS  # noqa: F401
 from .matching import _GAMMAS, _PLACEBO_SPLIT, _TREAT_MOD  # noqa: F401
 from .rankmodels import _BT_ROUNDS, _RBP_K, _RBP_P, _RBP_WTS  # noqa: F401
 from .neighbors import _NB_K, _NB_PANEL  # noqa: F401
 from .dataqc import _FDS, _FKS, _KEYS  # noqa: F401
 from .queueing import _CAP_FACTOR, _EC_MU_DIV, _EC_SERVERS, _SLO_TARGET  # noqa: F401
-from .robust2 import _BW_C, _QN_D, _SN_C  # noqa: F401
-from .spectral import _SP_PMAX, _SP_PMIN, _TRIG  # noqa: F401
 from .lmeval2 import _KN_D, _KN_TOPN  # noqa: F401
 from .seqtest3 import _AVCI_ALPHA, _CUSUM_H, _CUSUM_K, _POCOCK_CRIT, _POCOCK_LOOKS  # noqa: F401
 from .forecast_prob import _FP_LAG, _PIT_BINS, _WK_ALPHA, _WK_Z  # noqa: F401
 from .graph_cent import _CENT_TOPK, _EV_ROUNDS, _KATZ_ALPHA, _KATZ_TERMS, _RC_KS  # noqa: F401
-from .markov import _MC_ROUNDS  # noqa: F401
 from .decompose import _ABC_A, _ABC_B, _STL_W  # noqa: F401
 from .momentq import _BC_LAMBDAS, _CF_P, _CF_Z, _CHEB_KS  # noqa: F401
 from .curation2 import _CCDF_GRID  # noqa: F401
-from .inequality import _LD_DECILES  # noqa: F401
+from .bayes_ab import _FE_HEAVY  # noqa: F401
 from .pricing import _NV_CO, _NV_CU, _POOL_TOP, _POOL_Z  # noqa: F401
 from .robreg import _HUBER_K, _INFL_TOPK, _IRLS_ROUNDS, _LAD_EPS  # noqa: F401
 from .optstats import _HIST_B, _HIST_RANGES, _NDV_MOD  # noqa: F401
-from .featqc import _FEATS, _MRMR_K  # noqa: F401
-from .twosample import _TS_DQ, _TS_KQ, _TS_PROJ  # noqa: F401
 from .corpusqc import _COV_KS  # noqa: F401
 from .causal3 import _PC_Z  # noqa: F401
 from .breaks import _BRK_T0  # noqa: F401

@@ -3,15 +3,14 @@ posterior-probability layer the frequentist suite (two_prop_z,
 srm_check, tost_equivalence) doesn't cover.
 
 Data: arms = even/odd user_id, conversion = "heavy buyer" (>= 14
-purchases, the same cross-SF median cutoff as ``fisher_exact``);
-posteriors are Beta(1+s, 1+f) per arm.
+purchases, the cross-SF median); posteriors are Beta(1+s, 1+f) per arm.
 
 * ``bayes_ab_prob`` — the EXACT P(pB > pA | data) via the classic
   finite sum h(aA,bA,aB,bB) = sum_{i<aB} B(aA+i, bA+bB) /
   ((bB+i) B(1+i,bB) B(aA,bA)), evaluated WITHOUT lgamma through the
   term recurrence t_i/t_{i-1} = (aA+i-1)/(aA+bA+bB+i-1) *
-  (bB+i-1)/i (one ordered log-cumsum, same discipline as
-  ``fisher_exact``), with posterior means alongside.
+  (bB+i-1)/i (one ordered log-cumsum), with posterior means
+  alongside.
 * ``bayes_expected_loss`` — the Bayesian decision quantity
   E[max(p_other - p_chosen, 0)] for each choice (Stucchio's
   closed form: loss(A) = mB h(aA,bA,aB+1,bB) - mA h(aA+1,bA,aB,bB)
@@ -29,7 +28,8 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ._shared import _t
-from .contingency import _FE_HEAVY
+
+_FE_HEAVY = 14  # heavy-buyer cutoff: >= 14 purchases (cross-SF median)
 
 
 def _arm_counts(spark, sf_dir):

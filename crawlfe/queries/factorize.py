@@ -7,7 +7,7 @@ factors a rectangular interaction matrix).
 Iteration: v <- M^T u / ||.||_1, u <- M v / ||.||_1, 6 rounds from
 uniform — converges to the top singular direction pair; the L1
 normalization keeps every value O(1) so the usual round-6 discipline
-holds (same convention as pagerank / mc_stationary).
+holds (same convention as pagerank).
 
 * ``svd_rank1`` — the 5 event-type factor loadings v with the final
   L1 growth factor (the un-normalized ||Mv||_1 — the singular-value

@@ -1,9 +1,8 @@
 """Feature-eng pack #78 (r4): model-audit statistics — calibration
 tests + uplift ranking.
 
-A feature platform that ships trainers (pack #77) also has to AUDIT
-the models those features feed.  Three public, closed-form audits that
-run entirely as aggregations:
+A feature platform also has to AUDIT the models its features feed.
+Three public, closed-form audits that run entirely as aggregations:
 
 * ``spiegelhalter_z`` — Spiegelhalter's (1986) calibration Z test of
   the week-1-trained bin probabilities against the day-16+ holdout:

@@ -1,6 +1,6 @@
 """Feature-eng pack #108 (r4): preference / ranking models — turning
 repeated comparisons into scores, completing the rank-eval family
-(ndcg_at_k, err_ranking, rbo_overlap, kendall_w).
+(ndcg_at_k, err_ranking, rbo_overlap).
 
 * ``bradley_terry`` — Bradley-Terry strengths over the event types:
   type i "beats" j on a day iff its daily cents total is strictly

@@ -64,13 +64,6 @@ def with_rolling(
     )
 
 
-def with_cumulative(
-    df: DataFrame, key: str = "url", ts: str = "warc_ts"
-) -> DataFrame:
-    w = _w(key, ts).rowsBetween(Window.unboundedPreceding, 0)
-    return df.withColumn("cum_snapshots", F.count(F.lit(1)).over(w))
-
-
 def global_row_number(
     df: DataFrame,
     order_cols: list,

@@ -5,6 +5,10 @@ Every identifier-like backticked name in SURVEY.md §2.B is either a
 registry key or one of the Spark / Python names in ``NOT_KEYS``.  A new
 key needs a §2.B row (or a deliberate entry in ``EXTRA_KEYS``); a §2.B
 key cannot drop out of the registry unnoticed.
+
+``KEYLESS_MODULES`` pins the ``crawlfe/queries`` modules that hold no
+registry function. The set only shrinks: deleting one means removing it
+here, and a new keyless module fails the test.
 """
 
 from __future__ import annotations
@@ -15,6 +19,7 @@ from pathlib import Path
 from crawlfe.queries import REGISTRY
 
 SURVEY = Path(__file__).resolve().parent.parent / "SURVEY.md"
+QUERIES = Path(__file__).resolve().parent.parent / "crawlfe" / "queries"
 
 # Backticked §2.B names that are Spark functions, Python APIs, table or
 # helper names, not driver query keys.
@@ -46,6 +51,26 @@ EXTRA_KEYS = frozenset({
 })
 
 
+# Query modules with no registry function (``__init__`` and ``_shared``
+# aside). Nothing outside their own pack tests reaches them.
+KEYLESS_MODULES = frozenset({
+    "agreement", "bayes_ab", "bitemporal", "breaks", "causal2", "causal3",
+    "classifier_eval", "corpusqc", "coxsnm", "crawlgraph", "crawlops",
+    "curation", "curation2", "dataqc", "decompose", "diversity",
+    "embedgeom", "encoders", "evt2", "experiments", "factorize", "fdr2",
+    "forecast_eval", "forecast_eval2", "forecast_prob", "freqmoments",
+    "graph_cent", "layout", "llm_eval", "lmeval2", "matching", "meta",
+    "methodcmp", "minhash_eval", "mining", "model_audit", "momentq",
+    "neighbors", "nominal", "offpolicy", "opsmetrics", "optstats",
+    "ordinal", "overlap_eval", "popest", "pq", "pricing", "privacy",
+    "privacy2", "qte", "queueing", "rankmodels", "raters", "regdiag",
+    "resample", "robreg", "robust", "seqtest", "seqtest2", "seqtest3",
+    "spark4api", "sql4", "stats_anova", "stats_behave", "stats_dist",
+    "stats_links", "stats_rank", "stats_strat", "stats_tail", "storeops",
+    "stylo", "surveystat", "survival2", "tpch_extra",
+})
+
+
 def _survey_keys() -> set[str]:
     lines = SURVEY.read_text().splitlines()
     start = next(i for i, ln in enumerate(lines) if ln.startswith("### 2.B"))
@@ -67,3 +92,14 @@ def test_registry_is_the_keep_list():
     keep = _survey_keys() | EXTRA_KEYS
     assert sorted(set(REGISTRY) - keep) == []
     assert sorted(keep - set(REGISTRY)) == []
+
+
+def test_keyless_modules_only_shrink():
+    keyed = {fn.__module__ for fn, _ in REGISTRY.values()}
+    keyless = {
+        p.stem for p in QUERIES.glob("*.py")
+        if p.stem not in ("__init__", "_shared")
+        and f"crawlfe.queries.{p.stem}" not in keyed
+    }
+    assert sorted(keyless - KEYLESS_MODULES) == []
+    assert sorted(KEYLESS_MODULES - keyless) == []
