@@ -42,7 +42,6 @@ from .sql_surface import *  # noqa: F401,F403
 from .feateng import *  # noqa: F401,F403
 from .graph_embed import *  # noqa: F401,F403
 from .mining import *  # noqa: F401,F403
-from .curation import *  # noqa: F401,F403
 from .pq import *  # noqa: F401,F403
 from .privacy import *  # noqa: F401,F403
 from .crawlops import *  # noqa: F401,F403
@@ -52,12 +51,10 @@ from .robust import *  # noqa: F401,F403
 from .crawlgraph import *  # noqa: F401,F403
 from .stats_strat import *  # noqa: F401,F403
 from .encoders import *  # noqa: F401,F403
-from .seqtest import *  # noqa: F401,F403
 from .llm_eval import *  # noqa: F401,F403
 from .storeops import *  # noqa: F401,F403
 from .bitemporal import *  # noqa: F401,F403
 from .model_audit import *  # noqa: F401,F403
-from .offpolicy import *  # noqa: F401,F403
 from .agreement import *  # noqa: F401,F403
 from .privacy2 import *  # noqa: F401,F403
 from .regdiag import *  # noqa: F401,F403
@@ -73,7 +70,6 @@ from .embedgeom import *  # noqa: F401,F403
 from .minhash_eval import *  # noqa: F401,F403
 from .spark4api import *  # noqa: F401,F403
 from .forecast_eval import *  # noqa: F401,F403
-from .opsmetrics import *  # noqa: F401,F403
 from .coxsnm import *  # noqa: F401,F403
 from .popest import *  # noqa: F401,F403
 from .seqtest2 import *  # noqa: F401,F403
@@ -83,34 +79,27 @@ from .stylo import *  # noqa: F401,F403
 from .forecast_eval2 import *  # noqa: F401,F403
 from .methodcmp import *  # noqa: F401,F403
 from .matching import *  # noqa: F401,F403
-from .rankmodels import *  # noqa: F401,F403
 from .neighbors import *  # noqa: F401,F403
 from .dataqc import *  # noqa: F401,F403
 from .queueing import *  # noqa: F401,F403
 from .lmeval2 import *  # noqa: F401,F403
 from .seqtest3 import *  # noqa: F401,F403
-from .forecast_prob import *  # noqa: F401,F403
 from .graph_cent import *  # noqa: F401,F403
 from .decompose import *  # noqa: F401,F403
 from .momentq import *  # noqa: F401,F403
 from .curation2 import *  # noqa: F401,F403
-from .bayes_ab import *  # noqa: F401,F403
 from .pricing import *  # noqa: F401,F403
 from .robreg import *  # noqa: F401,F403
 from .meta import *  # noqa: F401,F403
-from .optstats import *  # noqa: F401,F403
 from .corpusqc import *  # noqa: F401,F403
-from .causal3 import *  # noqa: F401,F403
 from .breaks import *  # noqa: F401,F403
 from .factorize import *  # noqa: F401,F403
 from .ordinal import *  # noqa: F401,F403
-from .resample import *  # noqa: F401,F403
 from .nominal import *  # noqa: F401,F403
 from .layout import *  # noqa: F401,F403
 from .diversity import *  # noqa: F401,F403
 from .graph_embed import _KCORE_K, _KCORE_ROUNDS, _MAT_DIMS  # noqa: F401
 from .mining import _HN_K, _HN_PROBES  # noqa: F401
-from .curation import _CONF_ALPHA, _KCENTER_K, _RRF_C, _RRF_TOPK, _SEM_K, _SEM_TAU  # noqa: F401
 from .pq import _ADC_PROBES, _ADC_TOPK, _MIX_ALPHA, _PQ_K, _PQ_M, _PQ_SUB  # noqa: F401
 from .privacy import _DP_EPS, _KANON_BUCKET, _KANON_K, _KFOLD  # noqa: F401
 from .crawlops import _SALT_CAP, _SALT_TARGET, _SLA_HOURS  # noqa: F401
@@ -118,12 +107,10 @@ from .surveystat import _HT_RATE, _IPF_ROUNDS, _NEYMAN_BUDGET  # noqa: F401
 from .robust import _HUBER_C, _HUBER_ROUNDS, _PERM_B  # noqa: F401
 from .crawlgraph import _REDIR_HOPS  # noqa: F401
 from .encoders import _CE_ALPHA, _OH_TOPK  # noqa: F401
-from .seqtest import _MSPRT_TAU2, _RAKE_STOPWORDS  # noqa: F401
 from .llm_eval import _DSIR_BUCKETS, _PASSK_K  # noqa: F401
 from .storeops import _PREFIX_BLOCK_CHARS, _SKEW_CUTOFF_DAY, _SPLIT_BUDGET_CENTS  # noqa: F401
 from .bitemporal import _DELAY_MAX_S, _JOIN_US, _KT1_US, _WM_SECONDS  # noqa: F401
 from .model_audit import _MA_BIN_CENTS, _MA_MAX_BIN, _MA_TRAIN_DAY_MAX, _QINI_TILES  # noqa: F401
-from .offpolicy import _OP_ACTIONS, _OP_BIN_CENTS, _OP_MAX_BIN, _OP_TRAIN_DAY_MAX  # noqa: F401
 from .agreement import _GPD_DECILE  # noqa: F401
 from .privacy2 import _LDIV_L, _TCLOSE_M, _TCLOSE_W  # noqa: F401
 from .regdiag import _BP_CRIT95, _HOUR_US  # noqa: F401
@@ -139,7 +126,6 @@ from .embedgeom import _ISO_DIRS, _JL_K  # noqa: F401
 from .minhash_eval import _MH_K  # noqa: F401
 from .spark4api import _SO_BUCKET  # noqa: F401
 from .forecast_eval import _MZ_LAG  # noqa: F401
-from .opsmetrics import _DM_W1, _DM_W4, _SH_CENTS  # noqa: F401
 from .coxsnm import _SNM_KEY, _SNM_W  # noqa: F401
 from .popest import _CR_W1, _CR_W2, _GT_MOD, _LC_M  # noqa: F401
 from .seqtest2 import _OBF_FINAL, _OBF_INTERIM, _TOST_DELTA  # noqa: F401
@@ -149,27 +135,21 @@ from .stylo import _BD_TOPK, _GRUBBS_CRIT, _MAH_TOPK  # noqa: F401
 from .forecast_eval2 import _SN_LAG  # noqa: F401
 from .methodcmp import _BA_Z, _SPLIT_DAY  # noqa: F401
 from .matching import _GAMMAS, _PLACEBO_SPLIT, _TREAT_MOD  # noqa: F401
-from .rankmodels import _BT_ROUNDS, _RBP_K, _RBP_P, _RBP_WTS  # noqa: F401
 from .neighbors import _NB_K, _NB_PANEL  # noqa: F401
 from .dataqc import _FDS, _FKS, _KEYS  # noqa: F401
 from .queueing import _CAP_FACTOR, _EC_MU_DIV, _EC_SERVERS, _SLO_TARGET  # noqa: F401
 from .lmeval2 import _KN_D, _KN_TOPN  # noqa: F401
 from .seqtest3 import _AVCI_ALPHA, _CUSUM_H, _CUSUM_K, _POCOCK_CRIT, _POCOCK_LOOKS  # noqa: F401
-from .forecast_prob import _FP_LAG, _PIT_BINS, _WK_ALPHA, _WK_Z  # noqa: F401
 from .graph_cent import _CENT_TOPK, _EV_ROUNDS, _KATZ_ALPHA, _KATZ_TERMS, _RC_KS  # noqa: F401
 from .decompose import _ABC_A, _ABC_B, _STL_W  # noqa: F401
 from .momentq import _BC_LAMBDAS, _CF_P, _CF_Z, _CHEB_KS  # noqa: F401
 from .curation2 import _CCDF_GRID  # noqa: F401
-from .bayes_ab import _FE_HEAVY  # noqa: F401
 from .pricing import _NV_CO, _NV_CU, _POOL_TOP, _POOL_Z  # noqa: F401
 from .robreg import _HUBER_K, _INFL_TOPK, _IRLS_ROUNDS, _LAD_EPS  # noqa: F401
-from .optstats import _HIST_B, _HIST_RANGES, _NDV_MOD  # noqa: F401
 from .corpusqc import _COV_KS  # noqa: F401
-from .causal3 import _PC_Z  # noqa: F401
 from .breaks import _BRK_T0  # noqa: F401
 from .factorize import _SVD_ROUNDS, _SVD_TOPK  # noqa: F401
 from .ordinal import _ORD_K  # noqa: F401
-from .resample import _BB_B, _BB_L, _BB_NB, _HS_B, _LCG_A, _LCG_C, _LCG_M  # noqa: F401
 from .layout import _BK_N, _CHUNK, _CR_COLS, _PRUNE_HI_D, _PRUNE_LO_D  # noqa: F401
 from ._shared import _patched_tables, _t  # noqa: F401
 from .sketch_period import _FOLD_PMAX, _KMV_DOM, _KMV_K  # noqa: F401

@@ -54,20 +54,19 @@ EXTRA_KEYS = frozenset({
 # Query modules with no registry function (``__init__`` and ``_shared``
 # aside). Nothing outside their own pack tests reaches them.
 KEYLESS_MODULES = frozenset({
-    "agreement", "bayes_ab", "bitemporal", "breaks", "causal2", "causal3",
-    "classifier_eval", "corpusqc", "coxsnm", "crawlgraph", "crawlops",
-    "curation", "curation2", "dataqc", "decompose", "diversity",
-    "embedgeom", "encoders", "evt2", "experiments", "factorize", "fdr2",
-    "forecast_eval", "forecast_eval2", "forecast_prob", "freqmoments",
-    "graph_cent", "layout", "llm_eval", "lmeval2", "matching", "meta",
-    "methodcmp", "minhash_eval", "mining", "model_audit", "momentq",
-    "neighbors", "nominal", "offpolicy", "opsmetrics", "optstats",
+    "agreement", "bitemporal", "breaks", "causal2", "classifier_eval",
+    "corpusqc", "coxsnm", "crawlgraph", "crawlops", "curation2",
+    "dataqc", "decompose", "diversity", "embedgeom", "encoders", "evt2",
+    "experiments", "factorize", "fdr2", "forecast_eval",
+    "forecast_eval2", "freqmoments", "graph_cent", "layout", "llm_eval",
+    "lmeval2", "matching", "meta", "methodcmp", "minhash_eval",
+    "mining", "model_audit", "momentq", "neighbors", "nominal",
     "ordinal", "overlap_eval", "popest", "pq", "pricing", "privacy",
-    "privacy2", "qte", "queueing", "rankmodels", "raters", "regdiag",
-    "resample", "robreg", "robust", "seqtest", "seqtest2", "seqtest3",
-    "spark4api", "sql4", "stats_anova", "stats_behave", "stats_dist",
-    "stats_links", "stats_rank", "stats_strat", "stats_tail", "storeops",
-    "stylo", "surveystat", "survival2", "tpch_extra",
+    "privacy2", "qte", "queueing", "raters", "regdiag", "robreg",
+    "robust", "seqtest2", "seqtest3", "spark4api", "sql4",
+    "stats_anova", "stats_behave", "stats_dist", "stats_links",
+    "stats_rank", "stats_strat", "stats_tail", "storeops", "stylo",
+    "surveystat", "survival2", "tpch_extra",
 })
 
 
