@@ -29,6 +29,7 @@ Algorithm (frozen, v1):
 from __future__ import annotations
 
 import re as _re
+from html import unescape as _unescape
 from html.parser import HTMLParser
 
 EXTRACTOR_VERSION = 1
@@ -108,174 +109,113 @@ class _Fallback(Exception):
     document through the reference parser."""
 
 
-_RAWTEXT_TAGS = frozenset({"script", "style"})  # CDATA in html.parser
-
-# Strict-subset START tag (r4: attributes learned — VERDICT r3 #4). The
-# grammar is a provable subset of html.parser's locatestarttagend_tolerant
-# for which parse_starttag yields the same (lowercased name, startend flag,
-# end position): plain ASCII names, WHITESPACE-separated attributes with
-# plain names, values quoted ("..."/'...', any bytes but the quote) or
+# One token per markup construct, each followed by the data segment
+# after it, in html.parser goahead's dispatch order: '<' + letter, '</',
+# '<!--', '<?', '<!', then a bare '<'. Groups: 1-2 the literal close of
+# a script/style raw text, 3-4 start tag name and '/', 5 end tag name,
+# 6 a dropped comment, declaration or processing instruction, 7 a bare
+# '<', 8 the data. findall runs the whole tokenization in sre; the
+# Python loop in _fast_scan only applies the block and skip rules to
+# the matched tag names.
+#
+# Start tags (the raw-text alternatives and groups 3-4) use a provable
+# subset of html.parser's locatestarttagend_tolerant for which
+# parse_starttag yields the same (lowercased name, startend flag, end
+# position): plain ASCII names, WHITESPACE-separated attributes with
+# plain names, values quoted ("..."/'...', any chars but the quote) or
 # bare. A bare value is PRINTABLE ASCII ONLY (0x21-0x7E minus '>', not
-# starting with a quote): '=' '<' '`' ',' '/' are all allowed and consumed
-# greedily exactly like html.parser's [^>\s]*, so '<p a=1/>' is a plain
-# start tag with value '1/' on both sides and query-string URLs
-# (href=/p?a=1&b=2) stay on the fast path, while '/>' after a quoted
-# value, a bare attr NAME, or the tag name is a true XHTML self-close on
-# both sides. Control/non-ASCII bytes in bare values MUST fall back:
-# html.parser's [^>\s] is unicode-\s-aware, so '\x0b'/'\x85'/'\xa0' end
-# the value there ('<noscript a=b\x0b/>' is a SELF-CLOSE to the
-# reference) while an ASCII-blind charset would swallow them into the
-# value and mis-read a plain start tag (divergence caught in r4 dev).
-# Anything outside the subset fails the anchored match -> reference
-# fallback. Possessive quantifiers (3.11 re) kill backtracking blowups
-# on adversarial non-matching tag soup.
-_START_RE = _re.compile(
-    r"<([a-zA-Z][-.a-zA-Z0-9:_]*+)"                 # 1: tag name
-    r"((?:[ \t\n\r\f]++[a-zA-Z_:][-.a-zA-Z0-9_:]*+" # 2: attrs (ws + name
-    r"(?:[ \t\n\r\f]*+=[ \t\n\r\f]*+"               #    optional = value
-    r"(?:\"[^\"]*+\"|'[^']*+'|[!#-&(-=?-~][!-=?-~]*+))?+)*+)"
-    r"([ \t\n\r\f]*+)(/?)>"                         # 3: trail ws, 4: slash
+# starting with a quote): '=' '<' '`' ',' '/' are consumed greedily
+# exactly like html.parser's [^>\s]*, so '<p a=1/>' is a plain start tag
+# with value '1/' on both sides and query-string URLs (href=/p?a=1&b=2)
+# stay fast, while '/>' after a quoted value, a bare attr NAME, or the
+# tag name is a true XHTML self-close on both sides. Control and
+# non-ASCII chars in bare values must fall back: html.parser's [^>\s]
+# is unicode-\s-aware, so '\x0b'/'\x85'/'\xa0' end the value there
+# ('<noscript a=b\x0b/>' is a SELF-CLOSE to the reference) while an
+# ASCII-blind charset would read a plain start tag.
+_ATTRS = (
+    r"(?:[ \t\n\r\f]++[a-zA-Z_:][-.a-zA-Z0-9_:]*+"
+    r"(?:[ \t\n\r\f]*+=[ \t\n\r\f]*+"
+    r"(?:\"[^\"]*+\"|'[^']*+'|[!#-&(-=?-~][!-=?-~]*+))?+)*+"
 )
 
-# Strict-subset END tag: html.parser's endtagfind happy path
-# (r'</\s*([a-zA-Z][-.a-zA-Z0-9:_]*)\s*>') restricted to ASCII whitespace;
-# same handle_endtag(name.lower()) and same end position (the first '>').
-_END_RE = _re.compile(
-    r"</[ \t\n\r\f]*+([a-zA-Z][-.a-zA-Z0-9:_]*+)[ \t\n\r\f]*+>"
+
+def _rawtext(name: str) -> str:
+    r"""A script/style start tag (any ASCII case, not self-closed) and its
+    raw text, which html.parser's CDATA mode drops up to the first
+    case-insensitive r'</\s*name\s*>'. The body stops at the first
+    r'</\s*name' in any case. Only a literal lowercase close there is
+    consumed, into the alternative's group; anything else swallows the
+    rest of the document, so the token carries no group and falls
+    back."""
+    return (
+        rf"<(?ai:{name}){_ATTRS}[ \t\n\r\f]*+>"
+        rf"(?:[^<]++|<(?!/\s*(?i:{name})))*+"
+        rf"(?:(</{name}\s*+>)|(?s:.*))"
+    )
+
+
+# Every construct the fast path cannot reproduce (a start or end tag
+# outside the subset, an unterminated comment, declaration or
+# processing instruction, a marked section) ends in the catch-all,
+# which swallows the rest of the document: findall tokenizes before
+# the loop can raise, and a construct that failed and let the scan
+# resume at the next '<' would make the whole pass quadratic.
+_TOKEN_RE = _re.compile(
+    r"(?:" + _rawtext("script") + "|" + _rawtext("style")
+    + r"|<([a-zA-Z][-.a-zA-Z0-9:_]*+)" + _ATTRS + r"[ \t\n\r\f]*+(/?)>"
+    # html.parser's endtagfind happy path, ASCII whitespace only
+    r"|</[ \t\n\r\f]*+([a-zA-Z][-.a-zA-Z0-9:_]*+)[ \t\n\r\f]*+>"
+    # dropped: comment (to _markupbase's commentclose r'--\s*>', unicode
+    # \s, searched from '<!--' + 4), doctype or bogus comment (to the
+    # first '>'), processing instruction (to the first '>')
+    r"|(<!--(?s:.*?)--\s*+>|<!(?!--|\[)[^>]*+>|<\?[^>]*+>)"
+    # goahead's bare-'<' branch: handle_data('<')
+    r"|(<)(?![a-zA-Z/!?])"
+    r"|<(?s:.*))"
+    r"([^<]*+)"
 )
-
-# html.parser's _markupbase commentclose, VERBATIM (unicode \s) — the
-# comment is dropped either way, but the fast path must resume scanning at
-# the exact same offset the reference does.
-_COMMENT_CLOSE_RE = _re.compile(r"--\s*>")
-
-# html.parser's CDATA-mode "interesting" pattern, verbatim semantics:
-# set_cdata_mode compiles r'</\s*%s' % elem with re.IGNORECASE. The fast
-# path must find the close the SAME way, then bail to the reference
-# parser unless that earliest close is the exact lowercase literal it
-# knows how to consume (VERDICT r2 "What's wrong" #2 / ADVICE high).
-_RAWTEXT_CLOSE_RE = {
-    t: _re.compile(r"</\s*" + t, _re.IGNORECASE) for t in _RAWTEXT_TAGS
-}
 
 
 def _fast_scan(raw: str) -> str:
-    """goahead-mirroring scanner: raw.find('<') drives the loop exactly
-    like html.parser's convert_charrefs data segmentation, then the char
-    after '<' dispatches the way goahead does (starttagopen -> '</' ->
-    '<!--' -> '<?' -> '<!' -> bare-'<' data). Every handled construct is a
-    strict subset of the reference's tolerant grammar proven to yield the
-    same events at the same offsets; everything else raises _Fallback."""
-    from html import unescape as _unescape
-
+    """The fast path: one ``_TOKEN_RE.findall`` pass over the document,
+    then a loop over its tokens that applies the skip and block rules.
+    Each handled construct yields the same events at the same offsets
+    as the reference's tolerant grammar. Character references are
+    decoded per data segment, exactly like html.parser's
+    convert_charrefs, never across a tag boundary. A token outside the
+    grammar raises ``_Fallback``."""
     lines: list[str] = []
     cur: list[str] = []
-    skip_depth = 0
-    pos = 0
-    find = raw.find
-    while True:
-        lt = find("<", pos)
-        if lt < 0:
-            tail = raw[pos:]
-            if skip_depth == 0 and tail:
-                # decode charrefs PER DATA SEGMENT, exactly like
-                # html.parser's convert_charrefs (goahead unescapes each
-                # rawdata[i:j] slice between tags before handle_data) —
-                # never across segment boundaries, so an entity split by
-                # an inline tag stays undecoded (VERDICT r2 #2)
-                cur.append(_unescape(tail) if "&" in tail else tail)
-            break
-        data = raw[pos:lt]
-        if skip_depth == 0 and data:
-            cur.append(_unescape(data) if "&" in data else data)
-        c = raw[lt + 1 : lt + 2]
-        if ("a" <= c <= "z") or ("A" <= c <= "Z"):
-            m = _START_RE.match(raw, lt)
-            if m is None:
-                # malformed/over-tolerant start tag (quoted '>', '='-in-
-                # value, unicode whitespace, NUL names, ...) — reference
-                raise _Fallback("unsupported start-tag construct")
-            name, _attrs, _ws3, slash = m.groups()
+    skip = 0
+    lt = raw.find("<")
+    head = raw if lt < 0 else raw[:lt]
+    if head:
+        cur.append(_unescape(head) if "&" in head else head)
+    for script, style, name, slash, end, drop, bare, data in (
+        _TOKEN_RE.findall(raw, lt) if lt >= 0 else ()
+    ):
+        if name:
             name = name.lower()
-            selfclose = bool(slash)
-            if name in _RAWTEXT_TAGS and not selfclose:
-                # html.parser treats script/style content as raw text:
-                # jump to the close tag, dropping the content (they are
-                # also skip tags). Locate it with html.parser's own
-                # case-insensitive r'</\s*name' search; accept only the
-                # exact lowercase literal '</name' — any other earliest
-                # close ('</SCRIPT', '</ script') takes the reference.
-                cm = _RAWTEXT_CLOSE_RE[name].search(raw, m.end())
-                if cm is None:
-                    raise _Fallback("unclosed rawtext tag")
-                if cm.group(0) != "</" + name:
-                    raise _Fallback("non-literal rawtext close")
-                close = cm.start()
-                cgt = find(">", close)
-                if cgt < 0:
-                    raise _Fallback("unterminated rawtext close")
-                between = raw[close + 2 + len(name) : cgt]
-                if between.strip():
-                    raise _Fallback("decorated rawtext close tag")
-                if name in _BLOCK_TAGS and cur:  # pragma: no cover
-                    lines.append("".join(cur))
-                    cur = []
-                pos = cgt + 1
-                continue
-            if not selfclose and name in _SKIP_TAGS:
-                skip_depth += 1
             if name in _BLOCK_TAGS and cur:
                 lines.append("".join(cur))
                 cur = []
-            pos = m.end()
-        elif c == "/":
-            m = _END_RE.match(raw, lt)
-            if m is None:
-                # '</>' / attribute'd / bogus-comment end tags — reference
-                raise _Fallback("unsupported end-tag construct")
-            name = m.group(1).lower()
-            if name in _SKIP_TAGS and skip_depth > 0:
-                skip_depth -= 1
-            if name in _BLOCK_TAGS and cur:
+            if not slash and name in _SKIP_TAGS:
+                skip += 1
+        elif end:
+            end = end.lower()
+            if skip and end in _SKIP_TAGS:
+                skip -= 1
+            if end in _BLOCK_TAGS and cur:
                 lines.append("".join(cur))
                 cur = []
-            pos = m.end()
-        elif c == "!":
-            if raw.startswith("<!--", lt):
-                # parse_comment: resume at commentclose.end(); the
-                # comment body is dropped (no handler, no line break)
-                cm = _COMMENT_CLOSE_RE.search(raw, lt + 4)
-                if cm is None:
-                    raise _Fallback("unterminated comment")
-                pos = cm.end()
-            elif raw.startswith("<![", lt):
-                raise _Fallback("marked section")
-            elif raw[lt : lt + 9].lower() == "<!doctype":
-                # parse_html_declaration: skip to the first '>' past the
-                # 9-char keyword; handle_decl is a no-op
-                gt = find(">", lt + 9)
-                if gt < 0:
-                    raise _Fallback("unterminated doctype")
-                pos = gt + 1
-            else:
-                # parse_bogus_comment: skip to the first '>' after '<!'
-                gt = find(">", lt + 2)
-                if gt < 0:
-                    raise _Fallback("unterminated bogus comment")
-                pos = gt + 1
-        elif c == "?":
-            # parse_pi: skip to the first '>' after '<?' (handle_pi no-op)
-            gt = find(">", lt + 2)
-            if gt < 0:
-                raise _Fallback("unterminated pi")
-            pos = gt + 1
-        else:
-            # goahead's bare-'<' branch: handle_data("<") as its own
-            # segment (also covers '<' as the very last char via the
-            # end-of-input flush), scanning resumes at lt+1
-            if skip_depth == 0:
-                cur.append("<")
-            pos = lt + 1
+        elif bare:
+            if not skip:
+                cur.append(bare)
+        elif not (script or style or drop):
+            raise _Fallback("construct outside the fast-path grammar")
+        if data and not skip:
+            cur.append(_unescape(data) if "&" in data else data)
     if cur:
         lines.append("".join(cur))
     out: list[str] = []
@@ -286,26 +226,30 @@ def _fast_scan(raw: str) -> str:
     return "\n".join(out)
 
 
+def _extract(html: bytes | bytearray | memoryview | None) -> tuple[str, bool]:
+    """``(text, fell_back)``: the text of ``extract_text`` and whether
+    the document took the reference parser."""
+    if html is None:
+        return "", False
+    try:
+        return _fast_scan(bytes(html).decode("utf-8", errors="replace")), False
+    except _Fallback:
+        return extract_text_reference(html), True
+
+
 def extract_text(html: bytes | bytearray | memoryview | None) -> str:
     """html bytes -> canonical text, byte-identical to
     ``extract_text_reference`` (the frozen v1 semantics).
 
-    Fast path: a find()-loop scanner (~4x the html.parser state
-    machine) that handles exactly the constructs whose semantics it
-    reproduces bit-for-bit — attribute-free tags, script/style raw
-    text, character references. ANY other construct (attributes,
-    comments, declarations, malformed tags) raises ``_Fallback`` and
-    the document takes the reference parser instead, so exotic inputs
-    can never silently diverge from v1. The equivalence is
-    differential-tested over the full synthetic corpus and adversarial
-    cases (tests/test_extract.py)."""
-    if html is None:
-        return ""
-    raw = bytes(html).decode("utf-8", errors="replace")
-    try:
-        return _fast_scan(raw)
-    except _Fallback:
-        p = _TextExtractor()
-        p.feed(raw)
-        p.close()
-        return p.result()
+    Fast path: ``_fast_scan``, one compiled token regex over the
+    document plus a short loop over its tokens. It handles tags with
+    plain attributes, comments, declarations, processing instructions,
+    script/style raw text with a literal lowercase close, bare '<' and
+    character references. Any other construct (a tag outside the
+    attribute grammar, a non-literal raw-text close, a marked section,
+    an unterminated construct) raises ``_Fallback`` and the document
+    takes the reference parser instead, so exotic inputs can never
+    silently diverge from v1. The equivalence is differential-tested
+    over the synthetic corpus and adversarial cases
+    (tests/test_extract.py, scripts/fuzz_extract.py)."""
+    return _extract(html)[0]

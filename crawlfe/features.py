@@ -23,8 +23,10 @@ Design notes (scale):
     the batches stream through: first/last offset, n_rows, the
     order-independent XOR of Spark's ``xxhash64(url, warc_ts,
     text_sha256)`` per row (``hashing.spark_xxhash64``), html and text
-    bytes and the empty-text count. The row reaches the driver through a
-    dict accumulator keyed by partition id whose merge overwrites, so a
+    bytes, the empty-text count and the number of documents the
+    extractor's fast path handed to the reference parser
+    (``extract_fallback``). The row reaches the driver through a dict
+    accumulator keyed by partition id whose merge overwrites, so a
     retried or re-evaluated task replaces its row instead of adding one.
     The commit is then one Spark job: the staged write.
 """
@@ -38,7 +40,7 @@ import pyarrow as pa
 from pyspark import Accumulator, AccumulatorParam, TaskContext
 from pyspark.sql import DataFrame
 
-from .extract import extract_text
+from .extract import _extract
 from .hashing import byte_lengths, spark_xxhash64
 from .textfeat import FEAT_DIM, FEAT_VERSION, featurize_batch, sha256_hex
 
@@ -73,11 +75,13 @@ def _featurize_iter(
     part_id = ctx.partitionId() if ctx is not None else -1
     offset = 0
     row_hash = np.int64(0)
-    html_bytes = text_bytes = empty_text = 0
+    html_bytes = text_bytes = empty_text = extract_fallback = 0
     for batch in batches:
         n = batch.num_rows
         if use_html:
-            texts = [extract_text(h) for h in batch.column("html").to_pylist()]
+            out = [_extract(h) for h in batch.column("html").to_pylist()]
+            texts = [text for text, _ in out]
+            extract_fallback += sum(fell_back for _, fell_back in out)
         else:
             texts = [t or "" for t in batch.column("text").to_pylist()]
         feats = featurize_batch(texts)
@@ -114,6 +118,7 @@ def _featurize_iter(
             "html_bytes": html_bytes,
             "text_bytes": text_bytes,
             "empty_text": empty_text,
+            "extract_fallback": extract_fallback,
         }})
 
 

@@ -37,7 +37,8 @@ from pyspark.sql import functions as F
 _LINEAGE_SCHEMA = (
     "partition_id int, input_snapshot string, first_offset long, "
     "last_offset long, n_rows long, feature_hash string, html_bytes long, "
-    "text_bytes long, empty_text long, committed_at string"
+    "text_bytes long, empty_text long, extract_fallback long, "
+    "committed_at string"
 )
 
 

@@ -10,8 +10,8 @@ IcebergLite shim swapped for the real catalog (crawlfe/io.py docstring).
 
 The job is resume-aware: rerunning with the same --output picks up after
 the last committed input snapshot (exactly-once per snapshot). Prints one
-JSON summary line to stdout, with the table's html bytes, text bytes and
-empty-text docs summed from the committed lineage.
+JSON summary line to stdout, with the table's html bytes, text bytes,
+empty-text docs and extractor fallbacks summed from the committed lineage.
 """
 
 from __future__ import annotations
@@ -83,7 +83,7 @@ def main() -> int:
     lineage = [r for m in features_table.manifests() for r in m["lineage"]]
     totals = {
         k: sum(r.get(k, 0) for r in lineage)
-        for k in ("html_bytes", "text_bytes", "empty_text")
+        for k in ("html_bytes", "text_bytes", "empty_text", "extract_fallback")
     }
 
     n_asof = 0

@@ -67,7 +67,7 @@ def main() -> int:
     n_urls = int(sys.argv[1]) if len(sys.argv) > 1 else 800
     out = {
         "git": subprocess.run(
-            ["git", "rev-parse", "--short", "HEAD"],
+            ["git", "describe", "--always", "--dirty"],
             capture_output=True, text=True,
         ).stdout.strip(),
         "runs": [

@@ -57,6 +57,11 @@ ATOMS = [
     # becomes a true self-close there — fast path must fall back)
     "<noscript a=b\x0b/>", "<p a=b\xa0/>", "<script a=b\x85/>",
     "<p a=b=c>", "<p a=1,b=2>", '<p a=b"c>', "<p a=>", "<p a=b<c>",
+    # edges of the token regex's alternation: comment opens and closes,
+    # a marked section, raw-text closes the fast path must not consume,
+    # a self-closed raw-text tag, and bare '<?' / '<!'
+    "<!--", "<!-->", "--!>", "<![CDATA[x]]>", "</script\xa0>",
+    "</script x>", "<SCRIPT>", "<style/>", "<?", "<!",
 ]
 
 
@@ -89,7 +94,7 @@ def main() -> int:
         "examples": n, "seed": seed, "fast_path": n_fast,
         "fallback": n_fb, "diverge": diverge,
         "git": subprocess.run(
-            ["git", "rev-parse", "--short", "HEAD"],
+            ["git", "describe", "--always", "--dirty"],
             capture_output=True, text=True,
         ).stdout.strip(),
     }

@@ -2,6 +2,10 @@
 byte-identical mandate). These outputs are FROZEN — if any assertion
 here ever needs changing, that's an extractor version bump, not a fix."""
 
+import time
+
+import pytest
+
 from crawlfe.extract import extract_text
 
 
@@ -255,6 +259,11 @@ def test_fast_scanner_hypothesis_differential():
                 "<p a/b>", "<p a=>", "<p a=b<c>", "<p a=`v`>",
                 "<noscript a=b\x0b/>", "<p a=b\xa0/>",
                 "<script a=b\x85/>", '<td colspan="2" >',
+                # edges of the token regex's alternation (see
+                # scripts/fuzz_extract.py)
+                "<!--", "<!-->", "--!>", "<![CDATA[x]]>",
+                "</script\xa0>", "</script x>", "<SCRIPT>", "<style/>",
+                "<?", "<!",
             ]
         ),
         st.text(
@@ -270,3 +279,69 @@ def test_fast_scanner_hypothesis_differential():
         assert extract_text(html) == extract_text_reference(html)
 
     prop()
+
+
+
+# Documents the fast path cannot finish, repeated n times. findall
+# tokenizes the whole document before the scan loop can raise, so every
+# construct it rejects must swallow the rest of the document; one that
+# failed and let findall retry at the next '<' rescans the tail each
+# time, and the pass goes quadratic.
+_ADVERSARIAL = {
+    "comment_open": lambda n: "<!--" * n,
+    "script_open": lambda n: "<script>" * n,
+    "bogus_comment": lambda n: "<!x" * n,
+    "pi_open": lambda n: "<?x" * n,
+    "open_quote": lambda n: '<p a="' + "<p a=" * n,
+    "script_soup": lambda n: "<script>" + "a<b " * n,
+}
+
+
+def _best_s(fn, reps: int = 7, budget_s: float = 2.0) -> float:
+    """Best wall time of ``fn()`` over ``reps`` calls, stopping early
+    once ``budget_s`` is spent (a quadratic regression stays cheap)."""
+    best, spent = float("inf"), 0.0
+    for _ in range(reps):
+        t0 = time.perf_counter()
+        fn()
+        dt = time.perf_counter() - t0
+        best, spent = min(best, dt), spent + dt
+        if spent > budget_s:
+            break
+    return best
+
+
+def _scan_or_fallback(raw: str) -> None:
+    from crawlfe.extract import _Fallback, _fast_scan
+
+    try:
+        _fast_scan(raw)
+    except _Fallback:
+        pass
+
+
+@pytest.mark.parametrize("name", sorted(_ADVERSARIAL))
+def test_fast_scan_linear_on_adversarial_input(name):
+    """8x the input costs about 8x the time; quadratic would be 64x."""
+    small, big = (_ADVERSARIAL[name](n) for n in (2000, 16000))
+    small_s = _best_s(lambda: _scan_or_fallback(small))
+    big_s = _best_s(lambda: _scan_or_fallback(big))
+    assert big_s < 24 * small_s, (name, small_s, big_s)
+
+
+def test_fast_scan_large_document():
+    """A ~5 MB attribute-dense page (synthetic pages concatenated) takes
+    the fast path, matches the reference, and costs per byte about what
+    its parts cost one by one."""
+    from crawlfe.extract import _fast_scan, extract_text_reference
+    from crawlfe.synth import SynthConfig, gen_pages_pdf
+
+    pdf = gen_pages_pdf(SynthConfig(n_urls=150, attr_frac=0.85), 0, 150)
+    parts = [bytes(h).decode("utf-8") for h in pdf["html"]]
+    part = "".join(parts)
+    reps = 5_000_000 // len(part) + 1
+    raw = part * reps
+    whole_s = _best_s(lambda: _fast_scan(raw), reps=3)
+    parts_s = _best_s(lambda: [_fast_scan(p) for p in parts], reps=3) * reps
+    assert whole_s < 4 * parts_s, (whole_s, parts_s)
+    assert _fast_scan(raw) == extract_text_reference(raw.encode("utf-8"))

@@ -11,15 +11,16 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.readwriter import DataFrameReader
 
-from crawlfe.extract import extract_text_reference
+from crawlfe.extract import _Fallback, _fast_scan, extract_text_reference
 from crawlfe.features import LineageMerge, featurize
 from crawlfe.io import IcebergLite
 from crawlfe.pipeline import commit_batch, run_incremental
 from crawlfe.synth import SynthConfig, synth_pages
 
+_COUNTS = ["html_bytes", "text_bytes", "empty_text", "extract_fallback"]
 _LINEAGE_COLS = [
     "input_snapshot", "partition_id", "first_offset", "last_offset",
-    "n_rows", "feature_hash", "html_bytes", "text_bytes", "empty_text",
+    "n_rows", "feature_hash", *_COUNTS,
 ]
 
 
@@ -33,7 +34,8 @@ def _recount_lineage(spark, tbl, manifest, pages):
     """Brute-force lineage of one committed snapshot: the per-partition
     groupBy of its data files (min/max offset, count, bit_xor of
     Spark's xxhash64), plus html bytes, text bytes and empty-text docs
-    recounted with the reference extractor."""
+    recounted with the reference extractor, and the documents the fast
+    scanner rejects."""
     data = spark.read.parquet(
         *(os.path.join(tbl.data_dir, f) for f in manifest["files"])
     )
@@ -54,11 +56,12 @@ def _recount_lineage(spark, tbl, manifest, pages):
     src["html_bytes"] = src["html"].map(lambda h: 0 if h is None else len(h))
     src["text_bytes"] = text.map(lambda t: len(t.encode("utf-8")))
     src["empty_text"] = (text == "").astype(int)
+    src["extract_fallback"] = src["html"].map(_rejected)
     counts = (
         data.select("url", "warc_ts", "part_id").toPandas()
         .merge(src.drop(columns="html"), on=["url", "warc_ts"],
                validate="one_to_one")
-        .groupby("part_id")[["html_bytes", "text_bytes", "empty_text"]]
+        .groupby("part_id")[_COUNTS]
         .sum()
         .rename_axis("partition_id")
         .reset_index()
@@ -68,6 +71,16 @@ def _recount_lineage(spark, tbl, manifest, pages):
         {k: (v.item() if hasattr(v, "item") else v) for k, v in r.items()}
         for r in out.to_dict("records")
     ]
+
+
+def _rejected(html) -> int:
+    if html is None:
+        return 0
+    try:
+        _fast_scan(bytes(html).decode("utf-8", errors="replace"))
+    except _Fallback:
+        return 1
+    return 0
 
 
 def _batches(spark, n=3, urls=30):
@@ -130,7 +143,8 @@ def test_lineage_rows_complete(spark, tmp_path):
 def test_lineage_equals_brute_force_recount(spark, tmp_path):
     """Every field of the in-flight lineage equals a recount of the
     committed data, for snapshots of several partitions that include
-    null html and html whose text is empty."""
+    null html, html whose text is empty and html the extractor's fast
+    path hands to the reference parser."""
     tbl = IcebergLite(str(tmp_path / "t"))
     bucket = F.pmod(F.xxhash64("url", "warc_ts"), F.lit(7))
     pages = {}
@@ -142,6 +156,8 @@ def test_lineage_equals_brute_force_recount(spark, tmp_path):
             F.when(bucket == 0, F.lit(None).cast("binary"))
             .when(bucket == 1, F.encode(F.lit("<script>x=1</script>"),
                                         "utf-8"))
+            .when(bucket == 2, F.encode(F.lit("<p>a<![CDATA[x]]>b</>c"),
+                                        "utf-8"))
             .otherwise(F.col("html")),
         )
     run_incremental(spark, list(pages.items()), tbl)
@@ -151,6 +167,7 @@ def test_lineage_equals_brute_force_recount(spark, tmp_path):
         want = _recount_lineage(spark, tbl, m, pages[m["input_snapshot"]])
         assert len(want) == 4
         assert sum(r["empty_text"] for r in want) > 0
+        assert sum(r["extract_fallback"] for r in want) > 0
         assert m["lineage"] == want
 
 
@@ -231,7 +248,7 @@ def test_lineage_reads_manifests_without_data_counts(spark, tmp_path):
     old = lin[lin["input_snapshot"] == "old"]
     new = lin[lin["input_snapshot"] == "new"]
     assert old[["n_rows", "feature_hash"]].values.tolist() == [[10, "-123"]]
-    assert old[["html_bytes", "text_bytes", "empty_text"]].isna().all().all()
+    assert old[_COUNTS].isna().all().all()
     assert len(new) == 2 and (new["html_bytes"] > 0).all()
 
 
