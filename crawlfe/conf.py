@@ -3,9 +3,9 @@
 Everything here is the tuning surface SURVEY.md §4.3 records for BENCH
 sweeps: shuffle partitions, Arrow batch size, AQE (incl. skew-join
 splitting — half of the BASELINE.json:6 skew mandate), broadcast
-threshold. Defaults target local[32]/128 GiB sandbox runs but scale by
-``defaultParallelism`` so the same code is right on a 1000-executor
-cluster (partitions ≈ 3×cores, never task-starved at 4N executors —
+threshold. Defaults are measured on a 4 vCPU / 15 GB host (local[4])
+and scale by ``defaultParallelism`` so the same code is right on a
+1000-executor cluster (partitions ≈ 3×cores, never task-starved at 4N executors —
 the north-rule scaling-efficiency criterion).
 """
 
@@ -15,7 +15,9 @@ import os
 
 from pyspark.sql import SparkSession
 
-ARROW_BATCH = 4096  # rows/Arrow batch into pandas UDFs (html is ~1 KiB+)
+# rows per Arrow batch into featurize's mapInArrow and the pandas UDFs;
+# fixture html averages ~580 B, so a batch carries ~2.4 MB of html
+ARROW_BATCH = 4096
 
 
 def engine_confs(parallelism: int) -> dict[str, str]:

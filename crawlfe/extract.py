@@ -16,7 +16,9 @@ of the audio decode in ref: acoss/features.py::AudioFeatures.__init__ [R]
 Algorithm (frozen, v1):
   1. decode html bytes as UTF-8 with errors="replace"
   2. parse with html.parser.HTMLParser (convert_charrefs=True, so entity
-     and character references arrive decoded)
+     and character references arrive decoded); a marked section it
+     would reject with AssertionError (unknown keyword or no name, e.g.
+     ``<![x]>``) is dropped up to the next ``]>`` instead
   3. drop all character data inside <script>, <style>, <noscript>,
      <template> elements (nesting-depth tracked)
   4. starting a new BLOCK tag (open or close) emits a line break; all other
@@ -47,6 +49,15 @@ _BLOCK_TAGS = frozenset(
 )
 
 
+# html.parser's marked-section grammar (_markupbase): a name token after
+# '<![', the keywords it knows, and the MS Office '<![if ...]>' close.
+_MARKED_NAME = _re.compile(r"[a-zA-Z][-_.a-zA-Z0-9]*\s*")
+_MARKED_KEYWORDS = frozenset(
+    {"temp", "cdata", "ignore", "include", "rcdata", "if", "else", "endif"}
+)
+_MS_MARKED_CLOSE = _re.compile(r"]\s*>")
+
+
 class _TextExtractor(HTMLParser):
     def __init__(self) -> None:
         super().__init__(convert_charrefs=True)
@@ -74,6 +85,26 @@ class _TextExtractor(HTMLParser):
     def handle_startendtag(self, tag: str, attrs) -> None:
         if tag in _BLOCK_TAGS:
             self._break()
+
+    def parse_marked_section(self, i: int, report: int = 1) -> int:
+        # _markupbase raises AssertionError on '<![' followed by an
+        # unknown keyword or by no name at all ('<![x]>', '<![ ]>').
+        # Skip such a section to the next ']>', the close html.parser
+        # uses for '<![if ...]>', and report nothing; with no close,
+        # return -1 as the known keywords do. Every other input goes
+        # to the stdlib unchanged.
+        raw = self.rawdata
+        m = _MARKED_NAME.match(raw, i + 3)
+        if m is None:
+            rejected = i + 3 < len(raw)
+        else:
+            rejected = m.end() < len(raw) and (
+                m.group().strip().lower() not in _MARKED_KEYWORDS
+            )
+        if not rejected:
+            return super().parse_marked_section(i, report)
+        close = _MS_MARKED_CLOSE.search(raw, i + 3)
+        return close.end() if close else -1
 
     def handle_data(self, data: str) -> None:
         if self._skip_depth == 0 and data:

@@ -21,7 +21,7 @@ mapping note). documents/embeddings carry the text/vector operators.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 SESSION_GAP_S = 1800  # 30 min session gap on the events stream

@@ -4,12 +4,12 @@ Split from the former crawlfe/queries.py monolith (r4); bodies unchanged.
 """
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window  # noqa: F401
-from pyspark.sql import functions as F  # noqa: F401
+from pyspark.sql import Window
+from pyspark.sql import functions as F
 
-from .. import windows as W  # noqa: F401
-from ..asof import asof_join  # noqa: F401
-from ._shared import SESSION_GAP_S, _t, _us  # noqa: F401
+from .. import windows as W
+from ..asof import asof_join
+from ._shared import SESSION_GAP_S, _t, _us
 
 
 # --------------------------------------------------------------------------

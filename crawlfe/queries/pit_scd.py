@@ -4,11 +4,11 @@ Split from the former crawlfe/queries.py monolith (r4); bodies unchanged.
 """
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window  # noqa: F401
-from pyspark.sql import functions as F  # noqa: F401
+from pyspark.sql import Window
+from pyspark.sql import functions as F
 
-from ..asof import asof_join  # noqa: F401
-from ._shared import SESSION_GAP_S, _t, _us  # noqa: F401
+from ..asof import asof_join
+from ._shared import _t, _us
 
 
 # --------------------------------------------------------------------------

@@ -4,11 +4,11 @@ Split from the former crawlfe/queries.py monolith (r4); bodies unchanged.
 """
 from __future__ import annotations
 
-import pandas as pd  # noqa: F401
-from pyspark.sql import functions as F  # noqa: F401
+import pandas as pd
+from pyspark.sql import functions as F
 
-from .. import windows as W  # noqa: F401
-from ._shared import SESSION_GAP_S, _t, _us  # noqa: F401
+from .. import windows as W
+from ._shared import _t, _us
 
 
 # --------------------------------------------------------------------------

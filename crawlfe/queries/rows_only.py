@@ -4,15 +4,15 @@ Split from the former crawlfe/queries.py monolith (r4); bodies unchanged.
 """
 from __future__ import annotations
 
-import pandas as pd  # noqa: F401
-from pyspark.sql import DataFrame, SparkSession, Window  # noqa: F401
-from pyspark.sql import functions as F  # noqa: F401
+import pandas as pd
+from pyspark.sql import Window
+from pyspark.sql import functions as F
 
-from .. import clean  # noqa: F401
-from ..asof import asof_join  # noqa: F401
-from ..textfeat import featurize_batch  # noqa: F401
-from ._shared import SESSION_GAP_S, _scratch_dir, _t, _us  # noqa: F401
-from .core import SQL_ASOF  # noqa: F401
+from .. import clean
+from ..asof import asof_join
+from ..textfeat import featurize_batch
+from ._shared import _scratch_dir, _t, _us
+from .core import SQL_ASOF
 
 
 def q_dedup_clusters(spark, sf_dir):
@@ -244,8 +244,6 @@ def q_scan_pages(spark, sf_dir):
     """Iceberg-lite scan: atomically-committed pages read back through
     the manifest (parquet-dir emulation of the prod Iceberg catalog,
     SURVEY.md §1.3)."""
-    import tempfile
-
     from ..io import IcebergLite
     from ..synth import SynthConfig, synth_pages
 
@@ -263,8 +261,6 @@ def q_sink_roundtrip(spark, sf_dir):
     """features sink roundtrip: featurize -> staged atomic commit ->
     manifest read-back; exactly-once by snapshot id (recommit of the
     same snapshot is a no-op)."""
-    import tempfile
-
     from ..features import featurize
     from ..io import IcebergLite
     from ..synth import SynthConfig, synth_pages

@@ -4,11 +4,11 @@ Split from the former crawlfe/queries.py monolith (r4); bodies unchanged.
 """
 from __future__ import annotations
 
-import pandas as pd  # noqa: F401
-from pyspark.sql import DataFrame, SparkSession, Window  # noqa: F401
-from pyspark.sql import functions as F  # noqa: F401
+import pandas as pd
+from pyspark.sql import Window
+from pyspark.sql import functions as F
 
-from ._shared import SESSION_GAP_S, _scratch_dir, _t, _us  # noqa: F401
+from ._shared import _scratch_dir, _t
 
 
 # --------------------------------------------------------------------------
@@ -296,8 +296,6 @@ def q_dedup_embedding(spark, sf_dir):
     unchunked n×n matrix on one hot block would OOM the Python worker
     at 100×). The group's row data itself is O(n·dim) — linear, fine;
     only the pairwise product was quadratic."""
-    import numpy as np
-
     e = _t(spark, sf_dir, "embeddings")
     return e.groupBy("label").applyInPandas(
         _dedup_embedding_block_pairs,
@@ -689,7 +687,6 @@ def q_scan_csv(spark, sf_dir):
     import csv
     import os
     import shutil
-    import tempfile
 
     n = _t(spark, sf_dir, "nation")
     rows = sorted(

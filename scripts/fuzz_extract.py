@@ -62,6 +62,9 @@ ATOMS = [
     # a self-closed raw-text tag, and bare '<?' / '<!'
     "<!--", "<!-->", "--!>", "<![CDATA[x]]>", "</script\xa0>",
     "</script x>", "<SCRIPT>", "<style/>", "<?", "<!",
+    # marked sections html.parser's _markupbase rejects (unknown
+    # keyword, no name) next to one it knows with the MS ']>' close
+    "<![x]>", "<![ ]>", "<![1]>", "<![if x]>",
 ]
 
 

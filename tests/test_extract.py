@@ -263,7 +263,7 @@ def test_fast_scanner_hypothesis_differential():
                 # scripts/fuzz_extract.py)
                 "<!--", "<!-->", "--!>", "<![CDATA[x]]>",
                 "</script\xa0>", "</script x>", "<SCRIPT>", "<style/>",
-                "<?", "<!",
+                "<?", "<!", "<![x]>", "<![ ]>", "<![1]>", "<![if x]>",
             ]
         ),
         st.text(
@@ -280,6 +280,24 @@ def test_fast_scanner_hypothesis_differential():
 
     prop()
 
+
+@pytest.mark.parametrize(
+    "html,want",
+    [
+        (b"<![x]>", ""),
+        (b"a<![x]>b", "ab"),
+        (b"<![ ]>c", "c"),
+        (b"<![CDATA[x]]>", ""),
+    ],
+)
+def test_marked_section_never_raises(html, want):
+    """html.parser's _markupbase raises AssertionError on a marked
+    section with an unknown keyword or no name; the reference skips it
+    to the next ']>' instead, and the fast path agrees."""
+    from crawlfe.extract import extract_text, extract_text_reference
+
+    assert extract_text_reference(html) == want
+    assert extract_text(html) == want
 
 
 # Documents the fast path cannot finish, repeated n times. findall

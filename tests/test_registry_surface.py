@@ -8,18 +8,35 @@ key cannot drop out of the registry unnoticed.
 
 ``KEYLESS_MODULES`` pins the ``crawlfe/queries`` modules that hold no
 registry function. The set only shrinks: deleting one means removing it
-here, and a new keyless module fails the test.
+here, and a new keyless module fails the test. ``TEST_ONLY`` does the
+same for the ``q_*`` functions in keyed modules that no registry value
+reaches.
+
+Every other function and class defined in ``crawlfe/queries`` must be
+reachable by name references from a ``REGISTRY`` value, a name that
+non-test code imports from the package, a test hook, a call the module
+body makes at import, or a pinned test-only ``q_*`` function. Module
+constants are exempt (tests pin some of them).
 """
 
 from __future__ import annotations
 
+import ast
+import dis
+import importlib
+import pkgutil
 import re
+import types
 from pathlib import Path
 
+from test_dangling_globals import _code_roots, _nested
+
+import crawlfe.queries
 from crawlfe.queries import REGISTRY
 
-SURVEY = Path(__file__).resolve().parent.parent / "SURVEY.md"
-QUERIES = Path(__file__).resolve().parent.parent / "crawlfe" / "queries"
+ROOT = Path(__file__).resolve().parent.parent
+SURVEY = ROOT / "SURVEY.md"
+QUERIES = ROOT / "crawlfe" / "queries"
 
 # Backticked §2.B names that are Spark functions, Python APIs, table or
 # helper names, not driver query keys.
@@ -70,6 +87,26 @@ KEYLESS_MODULES = frozenset({
 })
 
 
+# ``q_*`` functions in keyed modules that no registry value reaches.
+# Nothing outside their own pack tests calls them.
+TEST_ONLY = frozenset({
+    "bucketops.q_bucketed_join", "bucketops.q_neardup_eval",
+    "bucketops.q_page_hinkley",
+    "eval_drift.q_best_threshold", "eval_drift.q_cusum_changepoint",
+    "eval_drift.q_embedding_pca1", "eval_drift.q_equal_freq_bins",
+    "eval_drift.q_ess_weights", "eval_drift.q_group_kfold",
+    "eval_drift.q_hll_distinct", "eval_drift.q_pps_sample",
+    "eval_drift.q_roc_auc", "eval_drift.q_sparse_topk",
+    "eval_drift.q_spearman_corr", "eval_drift.q_srp_signature",
+    "graph_sources.q_calibration_bins", "graph_sources.q_graph_degrees",
+    "graph_sources.q_graph_triangles", "graph_sources.q_weak_labels",
+    "sampling.q_attribution", "sampling.q_boilerplate_para",
+    "sampling.q_mad_outliers", "sampling.q_pagerank",
+    "sampling.q_rolling_median", "sampling.q_tpch_q15",
+    "sampling.q_tpch_q17", "sampling.q_tpch_q21", "sampling.q_tpch_q7",
+})
+
+
 def _survey_keys() -> set[str]:
     lines = SURVEY.read_text().splitlines()
     start = next(i for i, ln in enumerate(lines) if ln.startswith("### 2.B"))
@@ -102,3 +139,129 @@ def test_keyless_modules_only_shrink():
     }
     assert sorted(keyless - KEYLESS_MODULES) == []
     assert sorted(KEYLESS_MODULES - keyless) == []
+
+
+# Non-test code whose imports from crawlfe.queries are roots.
+CALLERS = ("crawlfe/*.py", "jobs/*.py", "scripts/*.py", "bench.py",
+           "__spark_entry__.py")
+
+# Test hooks the package exports that no registry function calls.
+TEST_HOOKS = (crawlfe.queries._patched_tables,)
+
+
+def _imported_from_queries():
+    """Objects non-test code imports from ``crawlfe.queries*``,
+    function-local imports included."""
+    for pattern in CALLERS:
+        for path in sorted(ROOT.glob(pattern)):
+            package = ".".join(path.relative_to(ROOT).parts[:-1])
+            for node in ast.walk(ast.parse(path.read_text())):
+                if not isinstance(node, ast.ImportFrom):
+                    continue
+                name = node.module or ""
+                if node.level:
+                    base = package.rsplit(".", node.level - 1)[0]
+                    name = f"{base}.{name}" if name else base
+                if not name.startswith("crawlfe.queries"):
+                    continue
+                mod = importlib.import_module(name)
+                for alias in node.names:
+                    yield getattr(mod, alias.name)
+
+
+def _import_time_calls(mod):
+    """Functions the module body calls while the module is imported."""
+    ns = vars(mod)
+    for node in ast.parse(Path(mod.__file__).read_text()).body:
+        if isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+            continue
+        for sub in ast.walk(node):
+            if (isinstance(sub, ast.Call) and isinstance(sub.func, ast.Name)
+                    and sub.func.id in ns):
+                yield ns[sub.func.id]
+
+
+def _unwrap(obj):
+    """The Python function behind a ``udf``/``pandas_udf`` wrapper."""
+    while not isinstance(obj, type):
+        inner = getattr(obj, "__wrapped__", None) or getattr(obj, "func", None)
+        if not isinstance(inner, types.FunctionType) or inner is obj:
+            break
+        obj = inner
+    return obj
+
+
+def _queries_modules():
+    yield crawlfe.queries
+    for info in pkgutil.iter_modules(crawlfe.queries.__path__):
+        yield importlib.import_module(f"crawlfe.queries.{info.name}")
+
+
+def _defined(mod):
+    for obj in vars(mod).values():
+        obj = _unwrap(obj)
+        if (isinstance(obj, (types.FunctionType, type))
+                and obj.__module__ == mod.__name__):
+            yield obj
+
+
+def _reached(roots):
+    seen: dict[int, object] = {}
+    todo = list(roots)
+    while todo:
+        obj = todo.pop()
+        if id(obj) in seen:
+            continue
+        if isinstance(obj, (dict, list, tuple, set, frozenset)):
+            seen[id(obj)] = obj
+            todo.extend(obj.values() if isinstance(obj, dict) else obj)
+            continue
+        obj = _unwrap(obj)
+        ours = (isinstance(obj, (types.FunctionType, type))
+                and (obj.__module__ or "").startswith("crawlfe.queries"))
+        if not ours or id(obj) in seen:
+            continue
+        seen[id(obj)] = obj
+        if isinstance(obj, type):
+            todo.extend(vars(obj).values())
+            continue
+        ns = obj.__globals__
+        todo.extend(obj.__defaults__ or ())
+        for root in _code_roots(obj):
+            for code in _nested(root):
+                for ins in dis.get_instructions(code):
+                    if ins.opname == "LOAD_GLOBAL" and ins.argval in ns:
+                        todo.append(ns[ins.argval])
+    return seen
+
+
+def _short(obj):
+    return f"{obj.__module__.rsplit('.', 1)[-1]}.{obj.__name__}"
+
+
+def test_every_queries_function_is_reached():
+    mods = list(_queries_modules())
+    roots = [fn for fn, _ in REGISTRY.values()]
+    roots += [*_imported_from_queries(), *TEST_HOOKS]
+    for mod in mods:
+        roots += _import_time_calls(mod)
+    reached = _reached(roots)
+    keyless = {f"crawlfe.queries.{m}" for m in KEYLESS_MODULES}
+    pinned = [
+        obj for mod in mods if mod.__name__ not in keyless
+        for obj in _defined(mod)
+        if obj.__name__.startswith("q_") and id(obj) not in reached
+    ]
+    names = set(map(_short, pinned))
+    assert sorted(names - TEST_ONLY) == []
+    assert sorted(TEST_ONLY - names) == []
+    pinned += [
+        obj for mod in mods if mod.__name__ in keyless
+        for obj in _defined(mod) if obj.__name__.startswith("q_")
+    ]
+    reached = _reached(roots + pinned)
+    unreached = sorted(
+        f"{obj.__module__}.{obj.__qualname__}"
+        for mod in mods for obj in _defined(mod) if id(obj) not in reached
+    )
+    assert unreached == []
