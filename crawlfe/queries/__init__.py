@@ -8,10 +8,11 @@ engine-spine variants §2.B predates (``asof_bucketed``,
 keys ``jobs/`` uses, and ``featurize_documents``;
 tests/test_registry_surface.py pins that set.
 
-The q_* functions of retired keys stay importable as plain library
-functions with their own tests; they have no registry entry and no
-oracle twin.  Every public name and the test hooks re-export from here,
-so ``from crawlfe.queries import q_x, _t, ...`` keeps working.
+The keyless modules and the ``TEST_ONLY`` functions that
+tests/test_registry_surface.py pins by name have no registry entry and
+no oracle twin; they are waiting for deletion, and only their own pack
+tests may import them.  Every public name and the test hooks re-export
+from here, so ``from crawlfe.queries import q_x, _t, ...`` works.
 """
 from __future__ import annotations
 
@@ -32,7 +33,6 @@ from .stats_rank import *  # noqa: F401,F403
 from .stats_behave import *  # noqa: F401,F403
 from .stats_dist import *  # noqa: F401,F403
 from .stats_tail import *  # noqa: F401,F403
-from .stats_anova import *  # noqa: F401,F403
 from .stats_links import *  # noqa: F401,F403
 from .experiments import *  # noqa: F401,F403
 from .classifier_eval import *  # noqa: F401,F403

@@ -18,8 +18,8 @@ from ._shared import SESSION_GAP_S, _t, _us  # noqa: F401
 
 def _pc_scored(spark, sf_dir):
     """Shared scored-event base for the classifier-eval pack: the
-    value-score separating purchase (positive) from click (negative),
-    the same convention as q_roc_auc."""
+    score (the event value in cents) separating purchase (positive)
+    from click (negative)."""
     e = _t(spark, sf_dir, "events")
     return e.where(
         F.col("event_type").isin("purchase", "click")

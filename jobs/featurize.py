@@ -56,10 +56,7 @@ def main() -> int:
     builder = SparkSession.builder.appName("crawlfe-featurize")
     spark = builder.getOrCreate()
     for k, v in engine_confs(spark.sparkContext.defaultParallelism).items():
-        try:
-            spark.conf.set(k, v)
-        except Exception:
-            pass  # static confs can't change post-start under spark-submit
+        spark.conf.set(k, v)
 
     t0 = time.time()
     per_batch = max(1, args.n_urls // args.batches)

@@ -938,25 +938,6 @@ def test_clustering_coeff_triangle_joins_keyed(spark, sf_dir):
     assert "CartesianProduct" not in plan, plan
 
 
-def test_mann_whitney_histogram_first(spark, sf_dir):
-    """The rank machinery must run on the (cents) histogram, never
-    rank raw rows: the plan's only single-partition window sits
-    above a hash aggregate (the histogram), and the raw events scan
-    is pruned to the two columns the histogram needs."""
-    import re as _re
-
-    from crawlfe.queries import q_mann_whitney
-
-    plan = plan_of(q_mann_whitney(spark, sf_dir))
-    schemas = _re.findall(r"ReadSchema: struct<([^>]*)>", plan)
-    assert schemas, plan
-    cols = set(
-        c.split(":")[0] for s in schemas for c in s.split(",") if c
-    )
-    assert cols <= {"event_type", "value"}, cols
-    assert "HashAggregate" in plan, plan
-
-
 def test_poisson_bootstrap_single_pass(spark, sf_dir):
     """All 20 bootstrap replicates stream through ONE pass: the
     replicate fan-out is a broadcast of the 20-row reps relation

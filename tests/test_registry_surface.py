@@ -81,9 +81,9 @@ KEYLESS_MODULES = frozenset({
     "ordinal", "overlap_eval", "popest", "pq", "pricing", "privacy",
     "privacy2", "qte", "queueing", "raters", "regdiag", "robreg",
     "robust", "seqtest2", "seqtest3", "spark4api", "sql4",
-    "stats_anova", "stats_behave", "stats_dist", "stats_links",
-    "stats_rank", "stats_strat", "stats_tail", "storeops", "stylo",
-    "surveystat", "survival2", "tpch_extra",
+    "stats_behave", "stats_dist", "stats_links", "stats_rank",
+    "stats_strat", "stats_tail", "storeops", "stylo", "surveystat",
+    "survival2", "tpch_extra",
 })
 
 

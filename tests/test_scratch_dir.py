@@ -7,7 +7,7 @@ from __future__ import annotations
 import os
 
 from crawlfe.queries._shared import _scratch_dir
-from crawlfe.queries.privacy import q_scan_orc
+from crawlfe.queries.rows_only import q_scan_pages
 
 
 def test_each_call_gets_a_fresh_dir_and_keeps_the_previous_one():
@@ -24,8 +24,9 @@ def test_each_call_gets_a_fresh_dir_and_keeps_the_previous_one():
 
 
 def test_previous_calls_dataframe_still_scans(spark, sf_dir):
-    first = q_scan_orc(spark, sf_dir)
-    second = q_scan_orc(spark, sf_dir)
+    # q_scan_pages returns a lazy read of the files in its scratch dir
+    first = q_scan_pages(spark, sf_dir)
+    second = q_scan_pages(spark, sf_dir)
     # evaluated out of order: the newer call's output first
     want = sorted(second.collect())
     assert want
