@@ -22,36 +22,30 @@ def entry(spark: SparkSession) -> DataFrame:
 
     The engine spine over the events stand-in table: purchases are the
     snapshot history (build side), clicks are the probe grid; attach the
-    latest prior purchase via the merge-scan as-of join, then lag/lead
-    gaps and session ids — the asof_features shape of FIXTURES.md §A.
+    latest prior purchase with its lag/lead gaps, snapshot index and
+    session id, all on one as-of spine — the asof_features shape of
+    FIXTURES.md §A.
     """
     from pyspark.sql import functions as F
 
-    from crawlfe.asof import asof_join
-    from crawlfe.windows import sessionize, with_lag_lead
+    from crawlfe.asof import asof_with_windows
 
     sf_dir = "/root/testdata/sf0.001"
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     build = ev.where(F.col("event_type") == "purchase").select(
         "user_id", "ts", F.col("value").alias("purchase_value")
     )
-    build = sessionize(
-        with_lag_lead(build, key="user_id", ts="ts"),
-        key="user_id", ts="ts", gap_seconds=1800,
-    )
     probe = ev.where(F.col("event_type") == "click").select(
         "user_id", F.col("ts").alias("join_ts"), "event_id"
     )
-    return asof_join(
+    return asof_with_windows(
         probe,
         build,
         key="user_id",
         ts_probe="join_ts",
         ts_build="ts",
-        build_cols=[
-            "purchase_value", "lag_gap_s", "lead_gap_s",
-            "snapshot_idx", "session_id",
-        ],
+        build_cols=["purchase_value"],
+        gap_seconds=1800,
     )
 
 

@@ -114,7 +114,8 @@ def run_pipeline(spark, pages_path: str) -> tuple[int, int, float]:
         "url",
         (F.col("warc_ts") + F.expr("INTERVAL 1 HOUR")).alias("join_ts"),
     )
-    # the pipeline's default as-of (range_scan), as jobs/featurize.py runs it
+    # the pipeline's default layout (union_window), as jobs/featurize.py
+    # runs it
     out = feature_pipeline(feats, probe, session_gap_s=86400)
     n_matched = out.where(F.col("matched")).count()
     dt = time.time() - t0

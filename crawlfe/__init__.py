@@ -20,8 +20,9 @@ Layout:
     _zipcache   worker-side guard: re-read a zip directory only when the
                 archive changed (Python < 3.12)
     asof        as-of join: one JVM struct-carry window kernel over
-                repartitionByRange + sortWithinPartitions (range_scan)
-                or hash clustering (union_window); salted hot keys
+                hash clustering (union_window, the default) or
+                repartitionByRange + sortWithinPartitions (range_scan);
+                lag/lead and sessions on the same spine; salted hot keys
     windows     lag/lead, rolling, rank, cumsum, sessionize, backfill
     io          iceberg-lite parquet table: staged atomic commit + manifest
     pipeline    end-to-end featurize job with checkpoint/resume

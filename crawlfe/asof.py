@@ -14,14 +14,22 @@ rows carrying their match as ONE struct(ts_build, *build_cols), and a
 probe the latest build row at or before it. Forward runs the same carry
 over descending ts; nearest runs both and keeps the closer match. No
 Python, no Arrow exchange of the payload, no payload re-join, and the
-build side is read once. Two physical strategies, parity-tested:
+build side is read once.
 
-  * ``range_scan`` (the default): the mandate-literal shape
-    (BASELINE.json:6 "merge-scan over repartitionByRange(url) +
-    sortWithinPartitions(warc_ts)"). The window reuses the range
-    partitioning and the sort.
-  * ``union_window``: the same carry, with the planner free to
-    hash-cluster instead of range-partitioning.
+``asof_with_windows`` runs the flagship's lag/lead and session windows
+on the same spine: the build-only ``lag``/``lead`` of one Window feed
+the carried struct of the next, and the session id and snapshot index
+are running sums in the carry's own frame. One exchange and one sort
+serve all of it. Two physical layouts, parity-tested:
+
+  * ``union_window`` (the default): the planner hash-clusters the
+    tagged union on the key; the windows sort it once.
+  * ``range_scan``: the mandate-literal shape (BASELINE.json:6
+    "merge-scan over repartitionByRange(url) +
+    sortWithinPartitions(warc_ts)"), which the windows reuse. It runs
+    its input once more to sample bounds: the range partitioner's
+    sampling job recomputes the union's children, so over a lazy
+    ``featurize`` the Python featurizer runs twice.
 
 Zero temporal leakage (BASELINE.json:6): the backward frame ends at the
 current row with probes ordered after build rows at equal ts, so no
@@ -33,7 +41,8 @@ replicates every build row to all K salts and routes each probe row to
 one hash-chosen salt, and the exchange and the window partition on
 (key, salt): a hot url's probes spread over K tasks while every task
 still sees the url's full build history — leakage-safe by
-construction. AQE skew-join splitting is enabled globally (conf.py).
+construction, and the windows over it stay exact. AQE skew-join
+splitting is enabled globally (conf.py).
 """
 
 from __future__ import annotations
@@ -44,7 +53,10 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-STRATEGIES = ("range_scan", "union_window")
+STRATEGIES = ("union_window", "range_scan")
+
+# the columns asof_with_windows adds next to the matched build row
+WINDOW_COLS = ("lag_gap_s", "lead_gap_s", "snapshot_idx", "session_id")
 
 
 def asof_join(
@@ -54,7 +66,7 @@ def asof_join(
     ts_probe: str = "join_ts",
     ts_build: str = "warc_ts",
     build_cols: Iterable[str] | None = None,
-    strategy: str = "range_scan",
+    strategy: str = "union_window",
     salt_k: int = 1,
     tolerance: pd.Timedelta | None = None,
     direction: str = "backward",
@@ -78,23 +90,37 @@ def asof_join(
     Output = all probe columns + ``ts_build`` (matched, nullable) +
     ``build_cols``. Column names must be disjoint from probe's.
     """
-    if build_cols is None:
-        build_cols = [
-            c for c in build.columns if c not in (key, ts_build)
-        ]
-    build_cols = list(build_cols)
-    clash = set(build_cols + [ts_build]) & set(probe.columns)
-    if clash:
-        raise ValueError(f"build columns clash with probe columns: {clash}")
     if direction not in ("backward", "forward", "nearest"):
         raise ValueError(f"unknown asof direction: {direction}")
-    if strategy not in STRATEGIES:
-        raise ValueError(f"unknown asof strategy: {strategy}")
-    if salt_k < 1:
-        raise ValueError(f"salt_k must be >= 1, got {salt_k}")
     return _asof_window(
-        probe, build, key, ts_probe, ts_build, build_cols, tolerance,
-        direction, salt_k, range_partition=strategy == "range_scan",
+        probe, build, key, ts_probe, ts_build, build_cols, strategy,
+        salt_k, direction=direction, tolerance=tolerance,
+    )
+
+
+def asof_with_windows(
+    probe: DataFrame,
+    build: DataFrame,
+    key: str = "url",
+    ts_probe: str = "join_ts",
+    ts_build: str = "warc_ts",
+    build_cols: Iterable[str] | None = None,
+    gap_seconds: int = 86400,
+    strategy: str = "union_window",
+    salt_k: int = 1,
+) -> DataFrame:
+    """Backward as-of join whose matched build row also carries the
+    columns ``windows.with_lag_lead`` and ``windows.sessionize`` give
+    it: equal to ``asof_join(probe, sessionize(with_lag_lead(build)),
+    build_cols=[*build_cols, *WINDOW_COLS])``, computed on one exchange
+    and one sort instead of two of each.
+
+    Output = all probe columns + ``ts_build`` + ``build_cols`` +
+    ``WINDOW_COLS`` (all null when no build row matches).
+    """
+    return _asof_window(
+        probe, build, key, ts_probe, ts_build, build_cols, strategy,
+        salt_k, gap_seconds=gap_seconds,
     )
 
 
@@ -103,35 +129,55 @@ def _micros(c):
 
 
 def _asof_window(
-    probe, build, key, ts_probe, ts_build, build_cols, tolerance,
-    direction, salt_k, range_partition,
+    probe, build, key, ts_probe, ts_build, build_cols, strategy, salt_k,
+    direction="backward", tolerance=None, gap_seconds=None,
 ):
-    """The as-of as JVM window carries: tag and union both sides, build
-    rows carrying their match as ONE ``struct(ts_build, *build_cols)``
-    and probe rows a null, then ``last(ignorenulls)`` over (key ORDER
-    BY ts, side) hands every probe the latest build row at or before
-    it. Build sorts before probe at equal ts (allow_exact_matches) and
-    the frame ends at the current row, so no later build row is ever
-    read (zero temporal leakage). Forward is the same carry over
-    descending ts — build still sorts first at equal ts, so exact
-    matches count. Carrying the whole struct keeps a matched row's null
-    payload columns null instead of filling them from an older row, and
-    a duplicated (key, ts) build row still yields one output row per
-    probe.
+    """The as-of as JVM window carries: tag and union both sides, then
+    ``last(ignorenulls)`` of a struct that only build rows fill,
+    ``struct(ts_build, *build_cols)``, over (key ORDER BY ts, side) hands
+    every probe the latest build row at or before it. Build sorts before
+    probe at equal ts (allow_exact_matches) and the frame ends at the
+    current row, so no later build row is ever read (zero temporal
+    leakage). Forward is the same carry over descending ts — build
+    still sorts first at equal ts, so exact matches count. Carrying the
+    whole struct keeps a matched row's null payload columns null
+    instead of filling them from an older row, and a duplicated
+    (key, ts) build row still yields one output row per probe.
 
-    ``range_partition`` (range_scan) lays the union out as
-    ``repartitionByRange(key)`` + ``sortWithinPartitions(key, ts,
-    side)`` in the first carry's ts order; that window reuses both, so
-    only nearest's second carry adds a Sort and no carry adds an
-    Exchange. Without it (union_window) the planner hash-clusters.
-    ``salt_k`` > 1 appends the salt to every partitioning key.
+    ``gap_seconds`` (backward only) adds the windows. A first Window
+    takes each row's previous and next BUILD ts as ``lag``/``lead``
+    IGNORE NULLS of a ts that probe rows leave null; the carried struct
+    packs the gaps to them. In the carry's running frame, the count of
+    build rows is the matched row's snapshot index + 1 and the sum of
+    new-session flags its session id + 1: no build row sits between a
+    probe and its match, and probe rows add nothing.
+
+    ``range_scan`` lays the union out as ``repartitionByRange(key)`` +
+    ``sortWithinPartitions(key, ts, side)`` in the first carry's ts
+    order; the windows reuse both, so only nearest's second carry adds
+    a Sort and nothing adds an Exchange. ``union_window`` leaves the
+    hash exchange and the sort to the planner. ``salt_k`` > 1 appends
+    the salt to every partitioning key.
     """
+    if build_cols is None:
+        build_cols = [
+            c for c in build.columns if c not in (key, ts_build)
+        ]
+    build_cols = list(build_cols)
+    added = WINDOW_COLS if gap_seconds is not None else ()
+    clash = set(build_cols + [ts_build, *added]) & set(probe.columns)
+    if clash:
+        raise ValueError(f"build columns clash with probe columns: {clash}")
+    if strategy not in STRATEGIES:
+        raise ValueError(f"unknown asof strategy: {strategy}")
+    if salt_k < 1:
+        raise ValueError(f"salt_k must be >= 1, got {salt_k}")
     part = [key]
     b = build.select(
         F.col(key),
         F.col(ts_build).alias("__ts"),
         F.lit(0).alias("__side"),
-        F.struct(ts_build, *build_cols).alias("__m"),
+        *build_cols,
     )
     p = probe.select(
         *probe.columns, F.col(ts_probe).alias("__ts"), F.lit(1).alias("__side")
@@ -152,21 +198,47 @@ def _asof_window(
         "forward": [F.col("__ts").desc_nulls_first()],
         "nearest": [F.col("__ts"), F.col("__ts").desc_nulls_first()],
     }[direction]
-    if range_partition:
+    if strategy == "range_scan":
         tagged = tagged.repartitionByRange(*part).sortWithinPartitions(
             *part, orders[0], "__side"
         )
-    carries = [
-        F.last("__m", ignorenulls=True).over(
-            Window.partitionBy(*part)
-            .orderBy(o, "__side")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        ).alias(f"__m{i}")
-        for i, o in enumerate(orders)
+    specs = [Window.partitionBy(*part).orderBy(o, "__side") for o in orders]
+    running = [
+        w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        for w in specs
     ]
-    carried = tagged.select(*probe.columns, "__ts", "__side", *carries).where(
-        F.col("__side") == 1
-    )
+    is_build = F.col("__side") == 0
+    payload = [F.col("__ts").alias(ts_build), *build_cols]
+    counts = []
+    if gap_seconds is not None:
+        bts = "CASE WHEN __side = 0 THEN __ts END"
+        tagged = tagged.select(
+            "*",
+            F.expr(f"lag({bts}) IGNORE NULLS").over(specs[0]).alias("__prev"),
+            F.expr(f"lead({bts}) IGNORE NULLS").over(specs[0]).alias("__next"),
+        )
+        ts_us = _micros(F.col("__ts"))
+        lag_us = ts_us - _micros(F.col("__prev"))
+        payload += [
+            (lag_us / F.lit(1_000_000)).alias("lag_gap_s"),
+            ((_micros(F.col("__next")) - ts_us) / F.lit(1_000_000))
+            .alias("lead_gap_s"),
+        ]
+        new_session = is_build & (
+            lag_us.isNull() | (lag_us > gap_seconds * 1_000_000)
+        )
+        counts = [
+            F.sum(c.cast("int")).over(running[0]).alias(name)
+            for c, name in ((is_build, "__builds"), (new_session, "__sessions"))
+        ]
+    carries = [
+        F.last(F.when(is_build, F.struct(*payload)), ignorenulls=True)
+        .over(w).alias(f"__m{i}")
+        for i, w in enumerate(running)
+    ]
+    carried = tagged.select(
+        *probe.columns, "__ts", "__side", *carries, *counts
+    ).where(F.col("__side") == 1)
     m = F.col("__m0")
     if direction == "nearest":
         # the forward match wins only when strictly closer: ties go to
@@ -186,7 +258,14 @@ def _asof_window(
             <= F.lit(tol_us),
             m,
         )
-    return carried.select(
-        *probe.columns,
-        *[m.getField(c).alias(c) for c in [ts_build] + build_cols],
-    )
+    out = [m.getField(c).alias(c) for c in [ts_build] + build_cols]
+    if gap_seconds is not None:
+        matched = m.isNotNull()
+        out += [
+            m.getField("lag_gap_s").alias("lag_gap_s"),
+            m.getField("lead_gap_s").alias("lead_gap_s"),
+            F.when(matched, F.col("__builds") - 1).cast("int")
+            .alias("snapshot_idx"),
+            F.when(matched, F.col("__sessions") - 1).alias("session_id"),
+        ]
+    return carried.select(*probe.columns, *out)

@@ -21,10 +21,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .asof import asof_join
+from .asof import asof_with_windows
 from .features import LineageMerge, featurize
 from .io import IcebergLite
-from .windows import sessionize, with_lag_lead
 
 
 def commit_batch(
@@ -78,33 +77,29 @@ def feature_pipeline(
     features: DataFrame,
     probe_grid: DataFrame,
     session_gap_s: int = 86400,
-    strategy: str = "range_scan",
+    strategy: str = "union_window",
     salt_k: int = 1,
 ) -> DataFrame:
     """The flagship query (SURVEY.md §7 M1): windowed features + as-of
     join onto a probe grid -> asof_features (FIXTURES.md §A).
 
-    One shuffle on url serves lag/lead + sessionize (same window
-    partitioning); the default as-of is one range exchange on url and a
-    JVM window carry, so the features are computed once and never
-    re-enter Python. ``salt_k`` > 1 salts that partitioning for hot
-    urls without changing the result.
+    Lag/lead, sessionize and the as-of run on one spine
+    (``asof.asof_with_windows``): one exchange on url and one sort feed
+    two JVM Windows, so the features are shuffled once and never
+    re-enter Python. The default hash layout reads ``features`` once;
+    ``strategy="range_scan"`` runs it once more to sample range bounds.
+    ``salt_k`` > 1 salts the partitioning for hot urls without changing
+    the result.
     """
-    enriched = sessionize(
-        with_lag_lead(features, "url", "warc_ts"),
-        "url", "warc_ts", session_gap_s,
-    ).select(
-        "url", "warc_ts", "text_sha256", "feat",
-        "lag_gap_s", "lead_gap_s", "session_id",
-    )
-    joined = asof_join(
+    joined = asof_with_windows(
         probe_grid,
-        enriched,
+        features,
         key="url",
         ts_probe="join_ts",
         ts_build="warc_ts",
-        build_cols=["text_sha256", "feat", "lag_gap_s", "lead_gap_s", "session_id"],
+        build_cols=["text_sha256", "feat"],
+        gap_seconds=session_gap_s,
         strategy=strategy,
         salt_k=salt_k,
-    )
+    ).drop("snapshot_idx")
     return joined.withColumn("matched", F.col("warc_ts").isNotNull())

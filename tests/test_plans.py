@@ -1,7 +1,7 @@
 """Physical-plan regression tests (SURVEY.md §4): the optimizations the
 100 TB design depends on must be visible in the executed plan —
 column pruning of the html binary, parquet filter pushdown, broadcast
-join selection, one range exchange and no Python in every as-of shape,
+join selection, one exchange and no Python in every as-of shape,
 and whole-stage codegen on the JVM paths."""
 
 from __future__ import annotations
@@ -84,15 +84,16 @@ def test_broadcast_join_selected_for_small_dim(spark, sf_dir):
 )
 def test_asof_shapes_stay_in_the_jvm(spark, pages_path, kw, keys):
     """Forward, nearest and salted as-of run on the same JVM window
-    carry as the backward default: no Python operator anywhere, and the
-    only exchange is one range partitioning on the key (plus the salt
-    when salted), which the carries reuse."""
+    carry as the backward default: no Python operator anywhere, and
+    under ``range_scan`` the only exchange is one range partitioning on
+    the key (plus the salt when salted), which the carries reuse."""
     pages = spark.read.parquet(pages_path)
     probe = pages.select(
         "url", (F.col("warc_ts") + F.expr("INTERVAL 1 HOUR")).alias("join_ts")
     )
     build = pages.select("url", "warc_ts", F.col("lang").alias("b_lang"))
-    plan = plan_of(asof_join(probe, build, build_cols=["b_lang"], **kw))
+    plan = plan_of(asof_join(probe, build, build_cols=["b_lang"],
+                             strategy="range_scan", **kw))
     for op in ("FlatMapCoGroupsInPandas", "MapInPandas", "MapInArrow",
                "ArrowEvalPython"):
         assert op not in plan, plan
@@ -103,12 +104,12 @@ def test_asof_shapes_stay_in_the_jvm(spark, pages_path, kw, keys):
     assert re.findall(r"(\w+)#\d+", cols) == keys, plan
 
 
-def test_default_asof_is_a_range_merge_scan(spark, pages_path):
-    """feature_pipeline's default as-of is the mandated merge-scan over
-    repartitionByRange(url) + sortWithinPartitions, carried by a JVM
-    window: featurize is the only Python in the plan and runs once, the
-    window reuses the range exchange and its sort, and the fat payload
-    crosses only the window stage's hash exchange and the range one."""
+def test_default_pipeline_is_one_hash_exchange(spark, pages_path):
+    """feature_pipeline's default runs lag/lead, sessions and the as-of
+    on one spine: featurize is the only Python in the plan and runs
+    once, the fat payload crosses exactly one exchange after it, a hash
+    partitioning on url, and one Sort under it serves both Windows (the
+    build-only lag/lead, then the carry and the running sums)."""
     pages = spark.read.parquet(pages_path)
     probe = pages.select(
         "url", (F.col("warc_ts") + F.expr("INTERVAL 1 HOUR")).alias("join_ts")
@@ -117,19 +118,18 @@ def test_default_asof_is_a_range_merge_scan(spark, pages_path):
     assert plan.count("MapInArrow") == 1, plan
     assert "MapInPandas" not in plan, plan
     assert "FlatMapCoGroupsInPandas" not in plan, plan
-    exchanges = sorted(
+    exchanges = [
         (kind, cols.split("#")[0])
         for kind, cols in re.findall(r"Exchange (\w+)\(([^,)]*)", plan)
-    )
-    assert exchanges == [
-        ("hashpartitioning", "url"), ("rangepartitioning", "url")
-    ], plan
-    # the as-of Window sits on the range exchange with one Sort between
-    # them: the sortWithinPartitions, which the window reuses
-    above = plan.split("Exchange rangepartitioning", 1)[0]
-    asof_window = above.rsplit("Window [", 1)[1]
-    assert "last(" in asof_window.split("\n", 1)[0], above
-    assert asof_window.count("Sort [") == 1, above
+    ]
+    assert exchanges == [("hashpartitioning", "url")], plan
+    assert plan.index("Exchange") < plan.index("MapInArrow"), plan
+    above = plan.split("Exchange hashpartitioning", 1)[0]
+    assert above.count("Window [") == 2, above
+    assert above.count("Sort [") == 1, above
+    windows = above.split("Window [")
+    assert "lag(" in windows[2] and "lead(" in windows[2], above
+    assert "last(" in windows[1] and "sum(" in windows[1], above
 
 
 @pytest.mark.parametrize("include_text", [False, True])
