@@ -8,11 +8,11 @@ engine-spine variants §2.B predates (``asof_bucketed``,
 keys ``jobs/`` uses, and ``featurize_documents``;
 tests/test_registry_surface.py pins that set.
 
-The keyless modules and the ``TEST_ONLY`` functions that
-tests/test_registry_surface.py pins by name have no registry entry and
-no oracle twin; they are waiting for deletion, and only their own pack
-tests may import them.  Every public name and the test hooks re-export
-from here, so ``from crawlfe.queries import q_x, _t, ...`` works.
+The keyless modules that tests/test_registry_surface.py pins by name
+have no registry entry and no oracle twin; they are waiting for
+deletion, and only their own pack tests may import them.  Every public
+name and the test hooks re-export from here, so
+``from crawlfe.queries import q_x, _t, ...`` works.
 """
 from __future__ import annotations
 
@@ -63,14 +63,12 @@ from .raters import *  # noqa: F401,F403
 from .overlap_eval import *  # noqa: F401,F403
 from .causal2 import *  # noqa: F401,F403
 from .bucketops import *  # noqa: F401,F403
-from .fdr2 import *  # noqa: F401,F403
 from .qte import *  # noqa: F401,F403
 from .survival2 import *  # noqa: F401,F403
 from .embedgeom import *  # noqa: F401,F403
 from .minhash_eval import *  # noqa: F401,F403
 from .spark4api import *  # noqa: F401,F403
 from .forecast_eval import *  # noqa: F401,F403
-from .coxsnm import *  # noqa: F401,F403
 from .popest import *  # noqa: F401,F403
 from .seqtest2 import *  # noqa: F401,F403
 from .asof_feats import *  # noqa: F401,F403
@@ -118,15 +116,12 @@ from .freqmoments import _AMS_G, _AMS_R, _CS_D, _CS_TOPK, _CS_W  # noqa: F401
 from .raters import _CATS, _FLIP_MOD, _LANGS, _RATERS  # noqa: F401
 from .overlap_eval import _OVL_TOPK, _Z95  # noqa: F401
 from .causal2 import _ES_POLICY_DAY, _ES_TREAT_MOD, _ES_WEEKS, _RD_BW, _RD_CUT  # noqa: F401
-from .bucketops import _ND_MOD, _ND_OFF, _PH_LAMBDA_E4  # noqa: F401
-from .fdr2 import _FS_PREFIX, _STOREY_LAMBDA_PPB  # noqa: F401
 from .qte import _HH_BIN  # noqa: F401
 from .survival2 import _KM_TAU  # noqa: F401
 from .embedgeom import _ISO_DIRS, _JL_K  # noqa: F401
 from .minhash_eval import _MH_K  # noqa: F401
 from .spark4api import _SO_BUCKET  # noqa: F401
 from .forecast_eval import _MZ_LAG  # noqa: F401
-from .coxsnm import _SNM_KEY, _SNM_W  # noqa: F401
 from .popest import _CR_W1, _CR_W2, _GT_MOD, _LC_M  # noqa: F401
 from .seqtest2 import _OBF_FINAL, _OBF_INTERIM, _TOST_DELTA  # noqa: F401
 from .asof_feats import _KTH, _TAU_H  # noqa: F401
@@ -158,7 +153,7 @@ from .retrieval import _BM25_B, _BM25_K1, _BM25_TERMS, _EWMA_ALPHA  # noqa: F401
 from .sampling import _HOUR_US  # noqa: F401
 from .graph_sources import _HH_K, _SPAN_K  # noqa: F401
 from .selection import _CHI2_TOPK, _COV_V, _CURR_B, _KMPP_K, _KMPP_L, _KMPP_ROUNDS, _MIX_BUDGET, _OUTLIER_K, _sq_dists_to  # noqa: F401
-from .eval_drift import _BFS_DEPTH, _HLL_M, _HLL_W, _PCA_ROUNDS, _SIMHASH_BITS, _SIMHASH_HAM, _SPARSE_MIN, _SPARSE_POST_CAP, _SPARSE_Q, _SPARSE_TOPK, _SRP_BITS, _SRP_Q, _WSAMPLE_K  # noqa: F401
+from .eval_drift import _BFS_DEPTH, _SIMHASH_BITS, _SIMHASH_HAM  # noqa: F401
 from .stats_rank import _BC_K, _BQ_CAP, _BQ_K, _BURST_MIN, _CMS_D, _CMS_PROBES, _CMS_W, _HL_K, _KT_K, _NDCG_CUM, _NDCG_DISC, _NDCG_K, _TOPK_V  # noqa: F401
 from .stats_behave import _HILL_K, _RFM_Q, _ZIPF_K  # noqa: F401
 from .stats_dist import _FIRSTK, _LOGODDS_ALPHA, _LOGODDS_TOPK, _PATH_LEN, _RBO_K, _RBO_P, _SAX_BP, _SAX_DAYS  # noqa: F401

@@ -1,88 +1,18 @@
-"""Feature-eng packs #20-#23: ROC/PR AUC, PSI drift, mutual info, recursive/lateral SQL, simhash pairs, sketches.
+"""Feature-eng packs #20-#22: PSI drift, mutual info, recursive/lateral SQL, simhash pairs, grouped OLS, Gini, PR AUC.
 
 Split from the former crawlfe/queries.py monolith (r4); bodies unchanged.
 """
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window  # noqa: F401
+from pyspark.sql import Window  # noqa: F401
 from pyspark.sql import functions as F  # noqa: F401
 
-from ._shared import SESSION_GAP_S, _t, _us  # noqa: F401
+from ._shared import _t  # noqa: F401
 
 
 # --------------------------------------------------------------------------
-# Feature-eng pack #20: model-eval + drift diagnostics — ROC AUC,
-# PSI drift, effective sample size, equal-frequency binning
+# Feature-eng pack #20: drift diagnostics — PSI drift
 # --------------------------------------------------------------------------
-
-
-def q_roc_auc(spark, sf_dir):
-    """Per-day ROC AUC of ``value`` separating purchase (positive)
-    from click (negative) events — the Mann-Whitney rank statistic a
-    label-quality / feature-screen job computes per slice.
-
-    Distributed shape: the 100 TB event stream collapses to a
-    per-(day, value) pos/neg count histogram (one map-side-combinable
-    hash agg); the ordered window then runs over DISTINCT values per
-    day, not raw rows. The AUC numerator stays INTEGER the whole way
-    (ties get the standard half credit via ``2*neg_below*pos_at +
-    neg_at*pos_at`` summed as bigints); one double division per day
-    at the very end, so the statistic is engine-exact."""
-    ev = _t(spark, sf_dir, "events")
-    pv = (
-        ev.where(F.col("event_type").isin("purchase", "click"))
-        .select(
-            F.dayofmonth("ts").cast("int").alias("day"),
-            F.col("value").alias("v"),
-            F.when(F.col("event_type") == "purchase", 1)
-            .otherwise(0)
-            .alias("p"),
-            F.when(F.col("event_type") == "click", 1)
-            .otherwise(0)
-            .alias("ng"),
-        )
-        .groupBy("day", "v")
-        .agg(
-            F.sum("p").cast("bigint").alias("pos_at"),
-            F.sum("ng").cast("bigint").alias("neg_at"),
-        )
-    )
-    w = (
-        Window.partitionBy("day")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = pv.select(
-        "day",
-        "pos_at",
-        "neg_at",
-        (F.sum("neg_at").over(w) - F.col("neg_at")).alias("neg_below"),
-    )
-    tot = pv.groupBy("day").agg(
-        F.sum("pos_at").alias("n_pos"), F.sum("neg_at").alias("n_neg")
-    )
-    return (
-        cum.join(F.broadcast(tot), "day")
-        .groupBy("day")
-        .agg(
-            F.max("n_pos").alias("n_pos"),
-            F.max("n_neg").alias("n_neg"),
-            F.sum(
-                2 * F.col("neg_below") * F.col("pos_at")
-                + F.col("neg_at") * F.col("pos_at")
-            ).alias("num2"),
-        )
-        .select(
-            "day",
-            "n_pos",
-            "n_neg",
-            F.round(
-                F.col("num2").cast("double")
-                / (2.0 * F.col("n_pos") * F.col("n_neg")),
-                6,
-            ).alias("auc"),
-        )
-    )
 
 
 def q_psi_drift(spark, sf_dir):
@@ -175,76 +105,8 @@ FROM terms
 """
 
 
-def q_ess_weights(spark, sf_dir):
-    """Importance-weight diagnostics per event_type with ``value`` as
-    the sample weight: Kish effective sample size
-    ``(sum w)^2 / sum w^2`` and its ratio to the raw count — the
-    sanity check run after any reweighting (domain mixture, inverse
-    propensity) to catch a few heavy weights silently dominating the
-    corpus. One map-side-combinable hash agg; nothing else."""
-    ev = _t(spark, sf_dir, "events")
-    sw = F.sum("value")
-    sw2 = F.sum(F.col("value") * F.col("value"))
-    return ev.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.round(sw, 4).alias("sum_w"),
-        F.round((sw * sw) / sw2, 4).alias("ess"),
-        F.round((sw * sw) / sw2 / F.count(F.lit(1)), 6).alias(
-            "ess_ratio"
-        ),
-    )
-
-
-def q_equal_freq_bins(spark, sf_dir):
-    """Deterministic equal-frequency decile binning of ``value`` per
-    event_type — the feature-discretization operator (quantile
-    binning) built WITHOUT ntile: ntile breaks ties arbitrarily, so
-    two engines (or two runs) can bin tied rows differently. Here
-    every distinct value gets ``bin = ceil(10 * cum_count / total)``
-    from the cumulative count over distinct values, so ties land in
-    one bin and the assignment is engine-exact INTEGER arithmetic
-    (``(10*cum + tot - 1) div tot``).
-
-    Scale shape: raw rows collapse to a per-(type, value) count
-    first; the ordered window runs over distinct values per type
-    (bounded by the value domain), never over raw rows."""
-    ev = _t(spark, sf_dir, "events")
-    pv = (
-        ev.groupBy("event_type", F.col("value").alias("v"))
-        .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-    )
-    w = (
-        Window.partitionBy("event_type")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = pv.select(
-        "event_type", "v", "c", F.sum("c").over(w).alias("cumc")
-    )
-    tot = pv.groupBy("event_type").agg(F.sum("c").alias("tot"))
-    return (
-        cum.join(F.broadcast(tot), "event_type")
-        .select(
-            "event_type",
-            "v",
-            "c",
-            F.expr("CAST((10 * cumc + tot - 1) DIV tot AS INT)").alias(
-                "bin"
-            ),
-        )
-        .groupBy("event_type", "bin")
-        .agg(
-            F.sum("c").cast("bigint").alias("n"),
-            F.round(F.min("v"), 4).alias("lo"),
-            F.round(F.max("v"), 4).alias("hi"),
-        )
-    )
-
-
 # --------------------------------------------------------------------------
-# Feature-eng pack #21: corpus-association + sampling — mutual
-# information, sequential Poisson weighted sample, power-iteration
-# top principal direction, group-k-fold assignment
+# Feature-eng pack #21: corpus association — mutual information
 # --------------------------------------------------------------------------
 
 
@@ -319,137 +181,6 @@ SELECT lang, source, n, round(pmi, 6) AS pmi,
        round(sum(t) OVER (), 6) AS mi_total
 FROM terms
 """
-
-
-_WSAMPLE_K = 5  # PPS sample size per group
-
-
-def q_pps_sample(spark, sf_dir):
-    """Deterministic weight-proportional sampling without replacement
-    (k=5 per event_type, weight = ``value``) by sequential Poisson
-    sampling (Ohlsson '98): priority = u / w with a content-hash
-    uniform ``u = (md5_32(event_id) + 1) / 2^32``, keep the k smallest
-    priorities per group. Unlike Efraimidis-Spirakis' ``u^(1/w)`` key
-    this priority needs NO transcendental (one IEEE divide of a dyadic
-    rational by the weight), so the selection is bit-identical across
-    engines, runs, and cluster sizes — rand()-free PPS sampling fit
-    for a 100 TB reshuffle-proof pipeline. Top-k per group prunes
-    map-side before the single shuffle (rank window per group)."""
-    ev = _t(spark, sf_dir, "events")
-    u = (
-        F.conv(
-            F.substring(
-                F.md5(F.encode(F.col("event_id").cast("string"), "utf-8")),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        + 1
-    ) / F.lit(4294967296.0)
-    keyed = ev.where(F.col("value") > 0).select(
-        "event_type",
-        "event_id",
-        F.round("value", 4).alias("value"),
-        (u / F.col("value")).alias("prio"),
-    )
-    w = Window.partitionBy("event_type").orderBy("prio", "event_id")
-    return (
-        keyed.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= _WSAMPLE_K)
-        .select(
-            "event_type",
-            F.col("rank").cast("int").alias("rank"),
-            "event_id",
-            "value",
-            F.round("prio", 8).alias("prio"),
-        )
-    )
-
-
-_PCA_ROUNDS = 3  # unnormalized power-iteration rounds
-
-
-def q_embedding_pca1(spark, sf_dir):
-    """Fixed-round power iteration toward the top principal direction
-    of the embedding table: the 3-round unnormalized iterate
-    v3 = (X^T X)^2 (X^T 1) on the Gram matrix (convergence to the
-    dominant singular vector depends on the eigengap — more rounds =
-    more CTE pairs; the ITERATE, bit-reproducible across engines, is
-    the contract). Each round is two long-form hash aggs (vec-dot
-    then dim-sum); nothing ever leaves the cluster. Normalization/sign are deferred to the very
-    end: the output divides v3 by its largest-|component| entry
-    (deterministic argmax, ties by lowest idx), one exact IEEE divide
-    per dim — so no intermediate sqrt/normalize whose rounding could
-    drift between rounds. The same fixed-round recipe as the k-means++
-    seeder (``q_kmeanspp_seeds``); the SQL twin chains one CTE pair
-    per round."""
-    e = _t(spark, sf_dir, "embeddings")
-    dims = e.select(
-        "vec_id",
-        F.posexplode("embedding").alias("idx", "val"),
-    ).select(
-        "vec_id", "idx", F.col("val").cast("double").alias("val")
-    )
-    # v0 = all-ones: s_i = sum_j x_ij
-    v = dims.groupBy("idx").agg(F.sum("val").alias("v"))  # after rnd 1
-    for _ in range(_PCA_ROUNDS - 1):
-        s = (
-            dims.join(F.broadcast(v), "idx")
-            .groupBy("vec_id")
-            .agg(F.sum(F.col("val") * F.col("v")).alias("s"))
-        )
-        v = (
-            dims.join(s, "vec_id")
-            .groupBy("idx")
-            .agg(F.sum(F.col("val") * F.col("s")).alias("v"))
-        )
-    pivot = v.orderBy(F.abs(F.col("v")).desc(), F.col("idx").asc()).limit(1)
-    return (
-        v.crossJoin(
-            F.broadcast(pivot.select(F.col("v").alias("pivot")))
-        )
-        .select(
-            F.col("idx").cast("int").alias("idx"),
-            F.round(F.col("v") / F.col("pivot"), 6).alias("component"),
-        )
-    )
-
-
-def q_group_kfold(spark, sf_dir):
-    """Group-k-fold assignment: every ``source`` lands wholly in one
-    of 5 folds (``md5_16(source) mod 5``), so same-source documents
-    can never straddle a train/eval boundary — the group-leakage twin
-    of the temporal holdout (``q_temporal_split``). Reports per
-    (fold, lang) doc counts, distinct sources, and the fold's share of
-    the corpus; content-hashed assignment is reproducible across
-    engines, runs, and cluster sizes. Narrow projection + one hash
-    agg + one broadcast total."""
-    d = _t(spark, sf_dir, "documents")
-    fold = (
-        F.conv(F.substring(F.md5(F.encode("source", "utf-8")), 1, 4), 16, 10)
-        .cast("bigint")
-        % 5
-    ).cast("int")
-    per = (
-        d.select("lang", "source", fold.alias("fold"))
-        .groupBy("fold", "lang")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-            F.countDistinct("source").cast("bigint").alias("n_sources"),
-        )
-    )
-    tot = per.agg(F.sum("n_docs").alias("n_all"))
-    return per.crossJoin(F.broadcast(tot)).select(
-        "fold",
-        "lang",
-        "n_docs",
-        "n_sources",
-        F.round(F.col("n_docs") / F.col("n_all").cast("double"), 6).alias(
-            "share"
-        ),
-    )
 
 
 # --------------------------------------------------------------------------
@@ -904,11 +635,11 @@ FROM ranked GROUP BY 1
 
 def q_pr_auc(spark, sf_dir):
     """Per-day average precision (PR-AUC) of ``value`` separating
-    purchase (positive) from click (negative) events — the companion
-    rank statistic to ``q_roc_auc`` for imbalanced labels, where ROC
-    flatters weak rankers.
+    purchase (positive) from click (negative) events — the rank
+    statistic for imbalanced labels, where ROC AUC flatters weak
+    rankers.
 
-    Same distributed recipe: the stream collapses to a per-(day,
+    The distributed recipe: the stream collapses to a per-(day,
     value) pos/neg histogram, the ordered window runs over DISTINCT
     values (descending — ties form ONE group evaluated at the group's
     closing rank, a fixed deterministic tie convention), and each
@@ -1015,411 +746,3 @@ SELECT t.day, tot.n_pos, tot.n_neg,
 FROM terms t JOIN tot ON t.day = tot.day
 GROUP BY t.day, tot.n_pos, tot.n_neg
 """
-
-
-# --------------------------------------------------------------------------
-# Feature-eng pack #23: inverted-index sparse top-k, signed-random-
-# projection signatures, manual HLL registers, Spearman rank
-# correlation, integer CUSUM changepoint, KS best-threshold
-# --------------------------------------------------------------------------
-
-_SPARSE_Q = 1000  # fixed-point grid for embedding values (exact: 24+10 bits)
-_SPARSE_MIN = 200  # keep |q| >= 200, i.e. |v| >= 0.2 (~11% density here)
-_SPARSE_POST_CAP = 128  # impact-ordered posting-list truncation per dim
-_SPARSE_TOPK = 3
-
-
-def q_sparse_topk(spark, sf_dir):
-    """Sparse top-k similarity by INVERTED-INDEX join — the scale path
-    for sparse/thresholded vectors that ``knn_cosine`` (brute) and
-    ``ann_lsh`` (dense signatures) don't cover: explode each vector to
-    its significant (dim, weight) postings, equi-join on dim, and sum
-    weight products per pair, so cost is sum-of-squared-posting-lists
-    instead of N^2.
-
-    Two scale controls, both deterministic: values are fixed-pointed
-    to an integer grid (``round(v*1000)`` — a float's 24-bit mantissa
-    times 2^3*5^3 stays exact in a double, and the grid can never land
-    on an exact .5, so HALF_UP-vs-half-even engines agree) making
-    every dot product an exact BIGINT; and posting lists are
-    IMPACT-ORDERED-TRUNCATED to the top-|q| 128 entries per dim
-    (ties by vec_id) — the classic IR trick that bounds the self-join
-    quadratic term per dimension no matter how hot a dimension gets.
-    One narrow shuffle on dim, one pair agg, one per-vec top-k window."""
-    e = _t(spark, sf_dir, "embeddings")
-    pe = e.select("vec_id", F.posexplode("embedding").alias("d", "v"))
-    q = pe.select(
-        "vec_id",
-        "d",
-        F.round(F.col("v").cast("double") * _SPARSE_Q, 0)
-        .cast("bigint")
-        .alias("q"),
-    ).where(F.abs(F.col("q")) >= _SPARSE_MIN)
-    wd = Window.partitionBy("d").orderBy(
-        F.abs(F.col("q")).desc(), F.col("vec_id")
-    )
-    post = (
-        q.withColumn("r", F.row_number().over(wd))
-        .where(F.col("r") <= _SPARSE_POST_CAP)
-        .drop("r")
-    )
-    pairs = (
-        post.alias("a")
-        .join(
-            post.alias("b"),
-            (F.col("a.d") == F.col("b.d"))
-            & (F.col("a.vec_id") != F.col("b.vec_id")),
-        )
-        .groupBy(
-            F.col("a.vec_id").alias("vec_id"),
-            F.col("b.vec_id").alias("nbr_id"),
-        )
-        .agg(
-            F.sum(F.col("a.q") * F.col("b.q")).alias("dot_q"),
-            F.count(F.lit(1)).cast("bigint").alias("n_dims"),
-        )
-    )
-    wv = Window.partitionBy("vec_id").orderBy(
-        F.col("dot_q").desc(), F.col("nbr_id")
-    )
-    return (
-        pairs.where(F.col("dot_q") > 0)
-        .withColumn("rk", F.row_number().over(wv).cast("int"))
-        .where(F.col("rk") <= _SPARSE_TOPK)
-    )
-
-
-_SRP_BITS = 16  # signature width
-_SRP_Q = 1000000  # fixed-point grid (24+20 bits — exact in a double)
-
-
-def q_srp_signature(spark, sf_dir):
-    """Signed-random-projection (SimHash-for-vectors) signatures: bit
-    j of a vector's signature is the sign of its dot product with a
-    pseudorandom +/-1 hyperplane — the JVM-declarative, oracle-backed
-    twin of the numpy sign-bit bucketing inside ``ann_lsh``.
-
-    Engine-portable by construction: the hyperplane sign for (dim, j)
-    is the parity of an md5 nibble (content-addressed — identical on
-    any engine, run, or cluster size), values are fixed-pointed to
-    integers so each projection sum is an exact BIGINT (association-
-    order-independent — safe under any partitioning), and the
-    signature packs bits as sum(bit * 2^j). Emits each vector's
-    signature, its popcount, and the signature's bucket occupancy
-    (the LSH collision-rate diagnostic). Linear work, one narrow agg."""
-    e = _t(spark, sf_dir, "embeddings")
-    pe = e.select("vec_id", F.posexplode("embedding").alias("d", "v"))
-    q = pe.select(
-        "vec_id",
-        "d",
-        F.round(F.col("v").cast("double") * _SRP_Q, 0)
-        .cast("bigint")
-        .alias("q"),
-    )
-    j = q.select(
-        "vec_id",
-        "d",
-        "q",
-        F.explode(F.sequence(F.lit(0), F.lit(_SRP_BITS - 1))).alias("j"),
-    )
-    sign = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.encode(
-                        F.concat_ws(
-                            ":",
-                            F.col("d").cast("string"),
-                            F.col("j").cast("string"),
-                        ),
-                        "utf-8",
-                    )
-                ),
-                1,
-                4,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % 2
-    ) * 2 - 1
-    proj = (
-        j.select("vec_id", "j", (sign * F.col("q")).alias("t"))
-        .groupBy("vec_id", "j")
-        .agg(F.sum("t").alias("s"))
-    )
-    bits = proj.select(
-        "vec_id",
-        F.when(
-            F.col("s") > 0,
-            F.expr("CAST(power(2, j) AS BIGINT)"),
-        )
-        .otherwise(F.lit(0).cast("bigint"))
-        .alias("bit_val"),
-        F.when(F.col("s") > 0, 1).otherwise(0).cast("bigint").alias("one"),
-    )
-    sigs = bits.groupBy("vec_id").agg(
-        F.sum("bit_val").alias("sig"), F.sum("one").alias("n_bits")
-    )
-    occ = sigs.groupBy("sig").agg(
-        F.count(F.lit(1)).cast("bigint").alias("bucket_n")
-    )
-    return sigs.join(occ, "sig").select("vec_id", "sig", "n_bits", "bucket_n")
-
-
-_HLL_M = 16  # registers (bucket = low 4 hash bits)
-_HLL_W = 56  # rank-observable width (60-bit md5 prefix minus 4)
-
-
-def q_hll_distinct(spark, sf_dir):
-    """Manual HyperLogLog distinct-user estimate per event_type, built
-    from first principles so the MERGEABLE-SKETCH mechanics (the thing
-    that makes distinct counts map-side-combinable at 10^12 rows) are
-    visible and oracle-checkable — unlike ``agg_approx_distinct``
-    which delegates to Spark's built-in HLL++.
-
-    A 60-bit md5 prefix splits into a 4-bit register index and a
-    56-bit observable whose geometric rank is trailing-zeros+1,
-    computed EXACTLY with integer ops (``bit_count((x & -x) - 1)``) —
-    no float log2 at the edge. Register state is max(rank): any
-    partitioning/merge order gives the same registers. The harmonic
-    denominator is kept as an exact integer sum(2^(57-r)) (max 16 *
-    2^56 < 2^63) so the one double division happens once at the end;
-    the exact countDistinct rides along as the audit column."""
-    ev = _t(spark, sf_dir, "events")
-    h = F.conv(
-        F.substring(
-            F.md5(F.encode(F.col("user_id").cast("string"), "utf-8")), 1, 15
-        ),
-        16,
-        10,
-    ).cast("bigint")
-    based = ev.select("event_type", "user_id", h.alias("h")).select(
-        "event_type",
-        "user_id",
-        (F.col("h") % _HLL_M).cast("int").alias("bucket"),
-        F.shiftright(F.col("h"), 4).alias("rest"),
-    )
-    ranked = based.select(
-        "event_type",
-        "user_id",
-        "bucket",
-        F.when(F.col("rest") == 0, F.lit(_HLL_W + 1))
-        .otherwise(F.bit_count(F.expr("(rest & -rest) - 1")) + 1)
-        .cast("int")
-        .alias("rank"),
-    )
-    regs = ranked.groupBy("event_type", "bucket").agg(
-        F.max("rank").alias("r")
-    )
-    den = regs.groupBy("event_type").agg(
-        F.sum(F.expr("CAST(power(2, 57 - r) AS BIGINT)")).alias("dp"),
-        F.count(F.lit(1)).cast("bigint").alias("nb"),
-    )
-    exact = ev.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_events"),
-        F.countDistinct("user_id").cast("bigint").alias("exact_distinct"),
-    )
-    full = den.select(
-        "event_type",
-        (
-            F.col("dp")
-            + (F.lit(_HLL_M) - F.col("nb")) * F.lit(144115188075855872)
-        ).alias("den_scaled"),
-    )
-    return (
-        exact.join(full, "event_type")
-        .select(
-            "event_type",
-            "n_events",
-            "exact_distinct",
-            F.round(
-                F.lit(0.673)
-                * 256.0
-                * 144115188075855872.0
-                / F.col("den_scaled").cast("double"),
-                4,
-            ).alias("hll_est"),
-        )
-    )
-
-
-def q_spearman_corr(spark, sf_dir):
-    """Per-event_type Spearman rank correlation between ``value`` and
-    arrival order — the monotone-trend detector that Pearson
-    (``grouped_corr``) misses on non-linear drifts.
-
-    Both rankings use row_number with the event_id tie-break (a fixed,
-    documented tie convention — deterministic on any engine), so the
-    rank difference d and sum(d^2) are EXACT integers; the classic
-    ``rho = 1 - 6*sum(d^2) / (n*(n^2-1))`` does one double division
-    per group at the end. Two sorts within the group partition, one
-    agg — no joins."""
-    ev = _t(spark, sf_dir, "events")
-    wv = Window.partitionBy("event_type").orderBy("value", "event_id")
-    wt = Window.partitionBy("event_type").orderBy("ts", "event_id")
-    r = ev.select(
-        "event_type",
-        F.row_number().over(wv).cast("bigint").alias("rv"),
-        F.row_number().over(wt).cast("bigint").alias("rt"),
-    )
-    return (
-        r.select(
-            "event_type",
-            ((F.col("rv") - F.col("rt")) * (F.col("rv") - F.col("rt"))).alias(
-                "d2"
-            ),
-        )
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n"),
-            F.sum("d2").alias("sum_d2"),
-        )
-        .select(
-            "event_type",
-            "n",
-            "sum_d2",
-            F.round(
-                1.0
-                - (6.0 * F.col("sum_d2").cast("double"))
-                / (F.col("n") * (F.col("n") * F.col("n") - 1)).cast(
-                    "double"
-                ),
-                6,
-            ).alias("rho"),
-        )
-    )
-
-
-def q_cusum_changepoint(spark, sf_dir):
-    """Per-user CUSUM changepoint: the event index where the running
-    sum's deviation from the global trend line peaks — the standard
-    level-shift detector for metric streams (did this user's spend
-    regime change, and when?).
-
-    Fully integer until the report: values go to exact cents
-    (``round(value*100)`` — never an exact .5 on this grid), and the
-    centered deviation is cross-multiplied as ``n*cumsum - i*total``
-    instead of subtracting a float mean, so the argmax is over exact
-    BIGINTs (no ulp ties across engines). The per-user total rides in
-    the same window pass (unbounded frame) — one sort per user key,
-    no self-join; the argmax is a second tiny window over the same
-    partitioning."""
-    ev = _t(spark, sf_dir, "events")
-    c = ev.select(
-        "user_id",
-        "ts",
-        "event_id",
-        F.round(F.col("value") * 100, 0).cast("bigint").alias("cents"),
-    )
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    wall = Window.partitionBy("user_id")
-    cum = c.select(
-        "user_id",
-        "event_id",
-        F.row_number().over(w).cast("bigint").alias("i"),
-        F.sum("cents")
-        .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-        .alias("cum"),
-        F.count(F.lit(1)).over(wall).cast("bigint").alias("n"),
-        F.sum("cents").over(wall).alias("total"),
-    )
-    dev = cum.select(
-        "user_id",
-        "event_id",
-        "i",
-        "n",
-        F.abs(F.col("n") * F.col("cum") - F.col("i") * F.col("total")).alias(
-            "adev"
-        ),
-    )
-    wpick = Window.partitionBy("user_id").orderBy(
-        F.col("adev").desc(), F.col("i")
-    )
-    return (
-        dev.withColumn("pk", F.row_number().over(wpick))
-        .where(F.col("pk") == 1)
-        .select(
-            "user_id",
-            "n",
-            F.col("i").alias("cp_i"),
-            F.col("event_id").alias("cp_event_id"),
-            F.col("adev").alias("max_abs_dev"),
-        )
-    )
-
-
-def q_best_threshold(spark, sf_dir):
-    """Per-day best split threshold by the Kolmogorov-Smirnov / Youden
-    statistic: the ``value`` cut that maximizes |TPR - FPR| separating
-    purchase (positive) from click (negative) events — the
-    decision-stump learner behind score cutoff selection, and the
-    argmax companion to ``roc_auc``/``pr_auc`` (which integrate the
-    whole curve instead).
-
-    Argmax over EXACT integers: at each distinct value (ascending,
-    <= threshold predicts negative) the KS numerator is
-    ``|cum_pos*n_neg - cum_neg*n_pos|`` — pure BIGINT cross-
-    multiplication, so no float ulp can flip the winner across
-    engines; ties break to the smallest threshold. Stream collapses
-    to the per-(day, value) histogram first (map-side combine); days
-    with a single class are excluded (KS undefined)."""
-    ev = _t(spark, sf_dir, "events")
-    pv = (
-        ev.where(F.col("event_type").isin("purchase", "click"))
-        .select(
-            F.dayofmonth("ts").cast("int").alias("day"),
-            F.col("value").alias("v"),
-            F.when(F.col("event_type") == "purchase", 1)
-            .otherwise(0)
-            .alias("p"),
-            F.when(F.col("event_type") == "click", 1).otherwise(0).alias("ng"),
-        )
-        .groupBy("day", "v")
-        .agg(
-            F.sum("p").cast("bigint").alias("pos_at"),
-            F.sum("ng").cast("bigint").alias("neg_at"),
-        )
-    )
-    w = (
-        Window.partitionBy("day")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    wall = Window.partitionBy("day")
-    cum = pv.select(
-        "day",
-        "v",
-        F.sum("pos_at").over(w).alias("cum_pos"),
-        F.sum("neg_at").over(w).alias("cum_neg"),
-        F.sum("pos_at").over(wall).alias("n_pos"),
-        F.sum("neg_at").over(wall).alias("n_neg"),
-    ).where((F.col("n_pos") > 0) & (F.col("n_neg") > 0))
-    scored = cum.select(
-        "day",
-        "v",
-        "n_pos",
-        "n_neg",
-        F.abs(
-            F.col("cum_pos") * F.col("n_neg")
-            - F.col("cum_neg") * F.col("n_pos")
-        ).alias("ks_num"),
-    )
-    wpick = Window.partitionBy("day").orderBy(
-        F.col("ks_num").desc(), F.col("v")
-    )
-    return (
-        scored.withColumn("pk", F.row_number().over(wpick))
-        .where(F.col("pk") == 1)
-        .select(
-            "day",
-            F.col("v").alias("thr_v"),
-            "n_pos",
-            "n_neg",
-            F.round(
-                F.col("ks_num").cast("double")
-                / (F.col("n_pos") * F.col("n_neg")).cast("double"),
-                6,
-            ).alias("ks"),
-        )
-    )

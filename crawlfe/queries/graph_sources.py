@@ -1,4 +1,4 @@
-"""Feature-eng packs #13-#15: doc-graph statistics, WARC/XML/Variant ingest sources, span-level dedup, heavy hitters.
+"""Feature-eng packs #13-#15: the shared doc graph, WARC/XML/Variant ingest sources, span-level dedup, heavy hitters.
 
 Split from the former crawlfe/queries.py monolith (r4); bodies unchanged.
 """
@@ -7,18 +7,17 @@ from __future__ import annotations
 import pandas as pd  # noqa: F401
 from pyspark.sql import functions as F  # noqa: F401
 
-from ._shared import SESSION_GAP_S, _scratch_dir, _t, _us  # noqa: F401
+from ._shared import _scratch_dir, _t  # noqa: F401
 
 
 # --------------------------------------------------------------------------
-# Feature-eng pack #13: graph statistics on the deterministic doc graph
-# (degrees + 2-hop reach, oriented triangle count), weak-supervision
-# label voting, calibration binning
+# Feature-eng pack #13: the deterministic doc graph
 # --------------------------------------------------------------------------
 
 def _doc_edges(spark, sf_dir):
-    """The deterministic 2-out-regular doc multigraph shared with
-    q_pagerank: doc -> (7*doc+3) mod N and doc -> (13*doc+5) mod N."""
+    """The deterministic 2-out-regular doc multigraph the graph queries
+    share (``q_sql_recursive`` spells the same edges in SQL):
+    doc -> (7*doc+3) mod N and doc -> (13*doc+5) mod N."""
     d = _t(spark, sf_dir, "documents").select("doc_id")
     n_row = d.agg(F.count(F.lit(1)).alias("cnt"))
     nodes = d.crossJoin(F.broadcast(n_row))
@@ -42,116 +41,6 @@ SQL_DOC_EDGES = """
 """
 
 
-def q_graph_degrees(spark, sf_dir):
-    """Link-graph degree statistics (the fan-in/fan-out features of a
-    web graph): per node, out-degree, in-degree, and DISTINCT 2-hop
-    forward reach. Degrees are two hash aggs; the 2-hop count is one
-    self-join of the edge list on dst=src then countDistinct — the
-    standard neighborhood-expansion shuffle, keyed so skewed hubs hit
-    AQE, never a cartesian."""
-    edges = _doc_edges(spark, sf_dir)
-    nodes = _t(spark, sf_dir, "documents").select("doc_id")
-    out_deg = edges.groupBy(F.col("src").alias("doc_id")).agg(
-        F.count(F.lit(1)).alias("out_deg")
-    )
-    in_deg = edges.groupBy(F.col("dst").alias("doc_id")).agg(
-        F.count(F.lit(1)).alias("in_deg")
-    )
-    e2 = edges.select(F.col("src").alias("mid"), F.col("dst").alias("hop2"))
-    two_hop = (
-        edges.join(e2, edges.dst == e2.mid)
-        .groupBy(F.col("src").alias("doc_id"))
-        .agg(F.countDistinct("hop2").alias("reach2"))
-    )
-    return (
-        nodes.join(out_deg, "doc_id", "left")
-        .join(in_deg, "doc_id", "left")
-        .join(two_hop, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("out_deg", F.lit(0)).alias("out_deg"),
-            F.coalesce("in_deg", F.lit(0)).alias("in_deg"),
-            F.coalesce("reach2", F.lit(0)).alias("reach2"),
-        )
-    )
-
-
-def q_graph_triangles(spark, sf_dir):
-    """Global triangle count (the classic shuffle-heavy graph
-    benchmark; clustering signal for link spam). Edges are first
-    canonicalized to distinct undirected (a < b) pairs — the standard
-    ORIENTATION optimization: every triangle a<b<c is then counted
-    exactly once by joining (a,b)x(b,c) and probing (a,c), so no
-    triangle is found 6 times and the join degrees stay bounded by the
-    max out-orientation degree. Three hash joins, one global count."""
-    edges = _doc_edges(spark, sf_dir)
-    und = (
-        edges.select(
-            F.least("src", "dst").alias("a"),
-            F.greatest("src", "dst").alias("b"),
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    e1 = und.select(F.col("a").alias("x"), F.col("b").alias("y"))
-    e2 = und.select(F.col("a").alias("y2"), F.col("b").alias("z"))
-    wedge = e1.join(e2, e1.y == e2.y2).select("x", "y", "z")
-    e3 = und.select(F.col("a").alias("x3"), F.col("b").alias("z3"))
-    tri = wedge.join(
-        e3, (wedge.x == e3.x3) & (wedge.z == e3.z3)
-    )
-    return tri.agg(F.count(F.lit(1)).alias("n_triangles"))
-
-
-def q_weak_labels(spark, sf_dir):
-    """Weak-supervision label model (Snorkel-style): three cheap
-    labeling functions — length, language whitelist, token count —
-    vote per document; majority label + unanimity flag. Pure JVM CASE
-    expressions in one narrow pass; the label model a 100 TB corpus
-    can actually afford before training a real classifier."""
-    d = _t(spark, sf_dir, "documents")
-    lf1 = (F.col("n_chars") > 300).cast("int")
-    lf2 = F.col("lang").isin("en", "de").cast("int")
-    lf3 = (F.size(F.split(F.trim(F.col("text")), "\\s+")) > 50).cast("int")
-    return d.select(
-        "doc_id",
-        lf1.alias("lf_len"),
-        lf2.alias("lf_lang"),
-        lf3.alias("lf_tok"),
-        ((lf1 + lf2 + lf3) >= 2).cast("int").alias("vote"),
-        ((lf1 == lf2) & (lf2 == lf3)).cast("int").alias("unanimous"),
-    )
-
-
-def q_calibration_bins(spark, sf_dir):
-    """Calibration / reliability binning (the eval-side twin of
-    eval_rank_stats): a deterministic md5-derived score in [0,1) per
-    doc vs the length label, bucketed into 10 bins with mean score and
-    positive rate. The score is the first 4 md5 hex digits / 65536 —
-    identical in any engine — and the bin edge is an integer compare,
-    so bucket membership can never ulp-flip. One map-side-combined
-    agg."""
-    d = _t(spark, sf_dir, "documents")
-    h16 = F.conv(
-        F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10
-    ).cast("bigint")
-    label = (F.col("n_chars") > 300).cast("int")
-    b = d.select(
-        (h16 * 10).alias("h10"),
-        (h16 / F.lit(65536.0)).alias("score"),
-        label.alias("label"),
-    ).select(
-        F.expr("CAST(h10 DIV 65536 AS INT)").alias("bin"),
-        "score",
-        "label",
-    )
-    return b.groupBy("bin").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.round(F.avg("score"), 6).alias("mean_score"),
-        F.round(F.avg("label"), 6).alias("pos_rate"),
-    )
-
-
 # --------------------------------------------------------------------------
 # Feature-eng pack #14: ingest-boundary sources — Spark 4 Python
 # DataSource (warclite container), VariantType JSON, native XML scan
@@ -169,7 +58,6 @@ def q_scan_warclite(spark, sf_dir):
     lives in a per-call tempdir (ADVICE r2: never a fixed /tmp path)."""
     import os
     import shutil
-    import tempfile
 
     from .. import warclite
 
@@ -260,7 +148,6 @@ def q_scan_xml(spark, sf_dir):
     per-call tempdir discipline as scan_csv/scan_warclite."""
     import os
     import shutil
-    import tempfile
     from xml.sax.saxutils import escape
 
     n = _t(spark, sf_dir, "nation")

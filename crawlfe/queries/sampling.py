@@ -1,16 +1,13 @@
-"""Feature-eng packs #9-#10: weighted/PPS sampling, ordered string agg, EWMA, TPC-H shapes (Q7/Q8/...).
+"""Feature-eng pack #9 and its neighbours: weighted sampling, ordered string agg, entity extraction, gap detection, windowed dedup, range-bucketed join, correlated SQL, rolling reach.
 
 Split from the former crawlfe/queries.py monolith (r4); bodies unchanged.
 """
 from __future__ import annotations
 
-import pandas as pd  # noqa: F401
-from pyspark.sql import DataFrame, SparkSession, Window  # noqa: F401
+from pyspark.sql import Window  # noqa: F401
 from pyspark.sql import functions as F  # noqa: F401
 
-from ..asof import asof_join  # noqa: F401
-from ._shared import SESSION_GAP_S, _t, _us  # noqa: F401
-from .pit_scd import _PARA_CHUNK  # noqa: F401
+from ._shared import _t, _us  # noqa: F401
 from .rows_only import _PII_EMAIL_RE  # noqa: F401
 
 
@@ -450,358 +447,3 @@ WITH ud AS (
 SELECT report_day, CAST(count(DISTINCT user_id) AS BIGINT) AS wau
 FROM fan GROUP BY report_day
 """
-
-
-# --------------------------------------------------------------------------
-# Feature-eng pack #10: remaining TPC-H shapes on this column subset
-# (Q7/Q8/Q15/Q17/Q21), fixed-point PageRank, robust rolling/grouped
-# statistics (rolling median, MAD outliers), last-touch attribution,
-# domain-conditional boilerplate detection
-# --------------------------------------------------------------------------
-
-def q_tpch_q7(spark, sf_dir):
-    """TPC-H Q7 shape (volume shipping between a nation pair): lineitem
-    joined through orders->customer for the customer nation and through
-    supplier for the supplier nation, restricted to the (1,2)/(2,1)
-    pair, revenue by (supp_nation, cust_nation, ship year). Nation is
-    broadcast twice under different aliases; the nationkey pair filter
-    pushes into the supplier/customer scans so the fact join only
-    carries the two nations' rows."""
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    n = _t(spark, sf_dir, "nation")
-    n1 = n.select(
-        F.col("n_nationkey").alias("s_nk"),
-        F.col("n_name").alias("supp_nation"),
-    )
-    n2 = n.select(
-        F.col("n_nationkey").alias("c_nk"),
-        F.col("n_name").alias("cust_nation"),
-    )
-    j = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
-        .where(
-            ((F.col("s_nationkey") == 1) & (F.col("c_nationkey") == 2))
-            | ((F.col("s_nationkey") == 2) & (F.col("c_nationkey") == 1))
-        )
-        .where(F.year("l_shipdate").isin(1996, 1997))
-        .join(F.broadcast(n1), F.col("s_nationkey") == F.col("s_nk"))
-        .join(F.broadcast(n2), F.col("c_nationkey") == F.col("c_nk"))
-    )
-    return j.groupBy(
-        "supp_nation", "cust_nation", F.year("l_shipdate").alias("l_year")
-    ).agg(
-        F.round(
-            F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 4
-        ).alias("revenue")
-    )
-
-
-def q_tpch_q15(spark, sf_dir):
-    """TPC-H Q15 shape (top supplier): per-supplier revenue over
-    1996-Q1 in EXACT integer cents (per-row round then bigint sum, so
-    the argmax can never ulp-flip between engines), suppliers equal to
-    the 1-row broadcast max. The classic view + scalar subquery becomes
-    agg -> crossJoin(broadcast(max)) -> filter."""
-    li = _t(spark, sf_dir, "lineitem")
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
-    lo = F.lit("1996-01-01").cast("timestamp")
-    hi = F.lit("1996-04-01").cast("timestamp")
-    cents = F.expr(
-        "CAST(round(l_extendedprice * (1 - l_discount) * 100) AS BIGINT)"
-    )
-    rev = (
-        li.where((F.col("l_shipdate") >= lo) & (F.col("l_shipdate") < hi))
-        .select(F.col("l_suppkey"), cents.alias("cents"))
-        .groupBy("l_suppkey")
-        .agg(F.sum("cents").alias("total_cents"))
-        # rev feeds BOTH the max and the output join; without
-        # materializing, Spark re-derives the subtree and scans the
-        # fact table twice. |suppliers| rows — trivially cacheable.
-        .localCheckpoint(eager=False)
-    )
-    mx = rev.agg(F.max("total_cents").alias("max_cents"))
-    return (
-        rev.crossJoin(F.broadcast(mx))
-        .where(F.col("total_cents") == F.col("max_cents"))
-        .join(F.broadcast(s), F.col("l_suppkey") == s.s_suppkey)
-        .select(
-            "s_suppkey",
-            "s_name",
-            F.round(F.col("total_cents") / 100.0, 2).alias("total_revenue"),
-        )
-    )
-
-
-def q_tpch_q17(spark, sf_dir):
-    """TPC-H Q17 shape (small-quantity-order revenue): ECONOMY-part
-    lineitems whose quantity is below 20% of that part's average
-    quantity. The correlated avg subquery becomes per-part window sums
-    (one hash shuffle on l_partkey, no self-join), and the comparison
-    is exact integers: qty < 0.2*avg(qty) <=> 5*qty*cnt < sum_qty
-    (quantities are integral in this corpus)."""
-    li = _t(spark, sf_dir, "lineitem")
-    p = (
-        _t(spark, sf_dir, "part")
-        .where(F.col("p_type") == "ECONOMY")
-        .select("p_partkey")
-    )
-    j = li.join(F.broadcast(p), li.l_partkey == p.p_partkey).select(
-        "l_partkey",
-        "l_extendedprice",
-        F.expr("CAST(l_quantity AS BIGINT)").alias("qty"),
-    )
-    w = Window.partitionBy("l_partkey")
-    j = j.withColumn("sum_qty", F.sum("qty").over(w)).withColumn(
-        "cnt", F.count(F.lit(1)).over(w)
-    )
-    small = j.where(
-        F.col("qty") * F.col("cnt") * F.lit(5) < F.col("sum_qty")
-    )
-    return small.agg(
-        F.round(F.sum("l_extendedprice") / 7.0, 4).alias("avg_yearly")
-    )
-
-
-def q_tpch_q21(spark, sf_dir):
-    """TPC-H Q21 shape (suppliers who kept orders waiting), adapted to
-    this column subset: late = shipped more than 60 days after the
-    order date (the fixture has no commit/receipt dates). For finished
-    ('F') multi-supplier orders where EXACTLY ONE supplier shipped
-    late, count waiting orders per that supplier. The classic
-    exists/not-exists pair becomes one per-(order,supplier) agg plus
-    per-order window counts — two shuffles, no correlated rescans."""
-    li = _t(spark, sf_dir, "lineitem")
-    o = (
-        _t(spark, sf_dir, "orders")
-        .where(F.col("o_orderstatus") == "F")
-        .select("o_orderkey", "o_orderdate")
-    )
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
-    late = (
-        F.col("l_shipdate")
-        > F.col("o_orderdate") + F.expr("INTERVAL 60 DAYS")
-    ).cast("int")
-    per_supp = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .groupBy("l_orderkey", "l_suppkey")
-        .agg(F.max(late).alias("late_any"))
-    )
-    w = Window.partitionBy("l_orderkey")
-    flagged = per_supp.withColumn(
-        "n_supp", F.count(F.lit(1)).over(w)
-    ).withColumn("n_late", F.sum("late_any").over(w))
-    waiting = flagged.where(
-        (F.col("late_any") == 1)
-        & (F.col("n_supp") > 1)
-        & (F.col("n_late") == 1)
-    )
-    return (
-        waiting.groupBy("l_suppkey")
-        .agg(F.count(F.lit(1)).alias("numwait"))
-        .join(F.broadcast(s), F.col("l_suppkey") == s.s_suppkey)
-        .select("s_suppkey", "s_name", "numwait")
-        .orderBy(F.col("numwait").desc(), "s_suppkey")
-        .limit(20)
-    )
-
-
-def q_pagerank(spark, sf_dir):
-    """PageRank (3 power iterations, damping 0.85) over a deterministic
-    2-out-regular multigraph on the documents (link-based quality
-    signal for corpus curation): edges doc -> (7*doc+3) mod N and
-    doc -> (13*doc+5) mod N. All arithmetic is FIXED-POINT BIGINT at
-    scale 1e12 with floor division, so ranks are exact integers — the
-    iteration is bit-reproducible in any engine regardless of float
-    summation order. Each iteration is one shuffle (edge join + sum by
-    dst); the node/base sides rehash on doc_id, dangling inputs get
-    the teleport base via left join. At 100 TB the per-iteration state
-    is one (node, rank) table — the standard Pregel-as-joins layout."""
-    d = _t(spark, sf_dir, "documents").select("doc_id")
-    n_row = d.agg(F.count(F.lit(1)).alias("cnt"))
-    nodes = d.crossJoin(F.broadcast(n_row))
-    edges = nodes.select(
-        F.col("doc_id").alias("src"),
-        F.expr("(doc_id * 7 + 3) % cnt").alias("dst"),
-    ).unionAll(
-        nodes.select(
-            F.col("doc_id").alias("src"),
-            F.expr("(doc_id * 13 + 5) % cnt").alias("dst"),
-        )
-    )
-    base = nodes.select(
-        "doc_id",
-        F.expr("CAST(15000000000000 DIV (100 * cnt) AS BIGINT)").alias(
-            "base"
-        ),
-    )
-    ranks = nodes.select(
-        "doc_id",
-        F.expr("CAST(1000000000000 DIV cnt AS BIGINT)").alias("r"),
-    )
-    for _ in range(3):
-        contrib = (
-            edges.join(ranks, edges.src == ranks.doc_id)
-            .select("dst", F.expr("r DIV 2").alias("half"))
-            .groupBy("dst")
-            .agg(F.sum("half").alias("s"))
-        )
-        ranks = base.join(
-            contrib, base.doc_id == contrib.dst, "left"
-        ).select(
-            base.doc_id,
-            (
-                F.col("base")
-                + F.expr("(85 * coalesce(s, CAST(0 AS BIGINT))) DIV 100")
-            ).alias("r"),
-        )
-    return ranks.select("doc_id", F.col("r").alias("rank_e12"))
-
-
-def q_rolling_median(spark, sf_dir):
-    """Rolling EXACT median of the last 5 events per user (robust
-    rolling statistic — the outlier-resistant twin of win_rolling's
-    mean). Spark's percentile aggregate runs as a window function over
-    the row frame, all JVM; at most 5 doubles per frame, and both
-    engines interpolate the even-count midpoint with the same single
-    IEEE op, so the 4dp round is stable."""
-    ev = _t(spark, sf_dir, "events")
-    return ev.select(
-        "user_id", _us("ts").alias("ts_us"), "event_id", "value"
-    ).selectExpr(
-        "user_id",
-        "ts_us",
-        "event_id",
-        "round(percentile(value, 0.5) OVER ("
-        "  PARTITION BY user_id ORDER BY ts_us, event_id"
-        "  ROWS BETWEEN 4 PRECEDING AND CURRENT ROW), 4) AS roll_med",
-    )
-
-
-def q_mad_outliers(spark, sf_dir):
-    """Grouped robust outlier report via median absolute deviation
-    (feature-QA primitive: |x - median| > 3*MAD per language). Two
-    exact-percentile shuffles on the group key; the tiny per-lang
-    median/MAD tables broadcast back. n_chars is integral, so medians
-    land on exact .0/.5 doubles and the 3*MAD compare cannot
-    ulp-flip."""
-    d = _t(spark, sf_dir, "documents").select(
-        "doc_id", "lang", F.col("n_chars").cast("double").alias("x")
-    )
-    med = d.groupBy("lang").agg(F.expr("percentile(x, 0.5)").alias("med"))
-    dm = d.join(F.broadcast(med), "lang").withColumn(
-        "ad", F.abs(F.col("x") - F.col("med"))
-    )
-    mad = dm.groupBy("lang").agg(
-        F.expr("percentile(ad, 0.5)").alias("mad")
-    )
-    flagged = dm.join(F.broadcast(mad), "lang")
-    return flagged.groupBy("lang").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum(
-            (F.col("ad") > 3.0 * F.col("mad")).cast("bigint")
-        ).alias("n_outliers"),
-        F.round(F.min("med"), 1).alias("med_chars"),
-        F.round(F.min("mad"), 1).alias("mad_chars"),
-    )
-
-
-def q_attribution(spark, sf_dir):
-    """Last-touch attribution (the training-label analog of ad
-    attribution): each purchase is attributed to the channel of the
-    latest prior click by the same user within a 7-day window, else to
-    channel -1 (direct). The engine's merge-scan as-of kernel with
-    tolerance does the touch lookup; channel is a JVM json_extract of
-    the click's props. Clicks are pre-deduped to one row per
-    (user, ts) (max channel) so tie order can never differ between
-    engines."""
-    ev = _t(spark, sf_dir, "events")
-    probe = ev.where(F.col("event_type") == "purchase").select(
-        "user_id", F.col("ts").alias("purch_ts"), "event_id", "value"
-    )
-    build = (
-        ev.where(F.col("event_type") == "click")
-        .select(
-            "user_id",
-            "ts",
-            (
-                F.get_json_object("props", "$.k").cast("int") % 5
-            ).alias("channel"),
-        )
-        .groupBy("user_id", "ts")
-        .agg(F.max("channel").alias("channel"))
-    )
-    j = asof_join(
-        probe, build, key="user_id", ts_probe="purch_ts", ts_build="ts",
-        build_cols=["channel"],
-        tolerance=pd.Timedelta(days=7),
-    )
-    return (
-        j.select(
-            F.coalesce(F.col("channel"), F.lit(-1)).alias("channel"),
-            "value",
-        )
-        .groupBy("channel")
-        .agg(
-            F.count(F.lit(1)).alias("n_purchases"),
-            F.round(F.sum("value"), 4).alias("revenue"),
-        )
-    )
-
-
-def q_boilerplate_para(spark, sf_dir):
-    """Domain-conditional boilerplate detection (the RefinedWeb-style
-    site-template filter, distinct from corpus-wide dedup_paragraph):
-    a 10-word chunk is boilerplate when it appears in >= 30% of its
-    source's docs (and at least 2). Chunk -> count DISTINCT docs per
-    (source, hash) -> integer-exact threshold against the broadcast
-    per-source doc count -> per-doc boilerplate ratio. One explode,
-    two hash aggs, one join keyed on the chunk hash — no pairwise
-    anything at 100 TB."""
-    ch = _PARA_CHUNK
-    d = _t(spark, sf_dir, "documents").select(
-        "doc_id", "source", F.split(F.trim(F.col("text")), "\\s+").alias("w")
-    )
-    n_chunks = F.expr(f"CAST((size(w) + {ch - 1}) DIV {ch} AS INT)")
-    chunks = d.select(
-        "doc_id",
-        "source",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), n_chunks - 1),
-                lambda i: F.array_join(
-                    F.slice(F.col("w"), i * ch + 1, ch), " "
-                ),
-            )
-        ).alias("chunk"),
-    ).select("doc_id", "source", F.md5(F.col("chunk")).alias("h"))
-    per_chunk = chunks.groupBy("source", "h").agg(
-        F.countDistinct("doc_id").alias("nd")
-    )
-    per_source = (
-        _t(spark, sf_dir, "documents")
-        .groupBy("source")
-        .agg(F.countDistinct("doc_id").alias("n_docs"))
-    )
-    boiler = per_chunk.join(F.broadcast(per_source), "source").select(
-        "source",
-        "h",
-        (
-            (F.col("nd") >= 2) & (F.col("nd") * 10 >= F.col("n_docs") * 3)
-        ).cast("int").alias("is_boiler"),
-    )
-    return (
-        chunks.join(boiler, ["source", "h"])
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_chunks"),
-            F.sum("is_boiler").alias("n_boiler"),
-            F.round(
-                F.sum("is_boiler") / F.count(F.lit(1)), 4
-            ).alias("boiler_ratio"),
-        )
-    )

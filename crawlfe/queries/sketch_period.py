@@ -5,7 +5,7 @@ accounting (Bar-Yossef+ '02), the sketch-MERGE that makes it scale
 (union two sketches without touching raw keys), periodogram-style
 top-period detection by series folding, and day-of-week-adjusted
 anomaly days.  The sketch hash is the deterministic 60-bit md5 prefix
-idiom shared with `hll_distinct`/`pps_sample` (identical in Spark's
+idiom (identical in Spark's
 ``conv(substring(md5(..),1,15),16,10)`` and DuckDB's
 ``CAST('0x'||substr(md5(..),1,15) AS UBIGINT)``), so every estimate is
 bit-identical across engines, runs, and cluster sizes.

@@ -32,7 +32,7 @@ from crawlfe.pipeline import feature_pipeline, run_incremental  # noqa: E402
 from crawlfe.synth import SynthConfig, synth_pages  # noqa: E402
 
 
-def _salt_k(s: str) -> int:
+def _positive_int(s: str) -> int:
     k = int(s)
     if k < 1:
         raise argparse.ArgumentTypeError(f"must be >= 1, got {k}")
@@ -42,16 +42,22 @@ def _salt_k(s: str) -> int:
 def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__)
     ap.add_argument("--output", required=True, help="table root directory")
-    ap.add_argument("--n-urls", type=int, default=2000)
-    ap.add_argument("--batches", type=int, default=4)
+    ap.add_argument("--n-urls", type=_positive_int, default=2000)
+    ap.add_argument("--batches", type=_positive_int, default=4)
     ap.add_argument("--seed", type=int, default=42)
     ap.add_argument("--session-gap-s", type=int, default=86400)
-    ap.add_argument("--salt-k", type=_salt_k, default=1)
+    ap.add_argument("--salt-k", type=_positive_int, default=1)
     ap.add_argument(
         "--crash-after", type=int, default=None,
         help="simulate dying after N commits (resume testing)",
     )
     args = ap.parse_args()
+    if args.batches > args.n_urls:
+        # each batch must own at least one url id of the universe
+        ap.error(
+            f"--batches ({args.batches}) must not exceed --n-urls "
+            f"({args.n_urls})"
+        )
 
     builder = SparkSession.builder.appName("crawlfe-featurize")
     spark = builder.getOrCreate()
@@ -59,7 +65,7 @@ def main() -> int:
         spark.conf.set(k, v)
 
     t0 = time.time()
-    per_batch = max(1, args.n_urls // args.batches)
+    per_batch = args.n_urls // args.batches
     batches = []
     for b in range(args.batches):
         lo = b * per_batch

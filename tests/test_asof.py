@@ -234,17 +234,28 @@ def test_asof_join_rejects_salt_k_below_one(spark):
             )
 
 
-def test_job_rejects_salt_k_below_one():
-    """jobs/featurize.py refuses --salt-k < 1 while parsing its
-    arguments, before any Spark work."""
+@pytest.mark.parametrize(
+    "args, message",
+    [
+        (["--salt-k", "0"], "--salt-k: must be >= 1"),
+        (["--salt-k", "-3"], "--salt-k: must be >= 1"),
+        (["--n-urls", "0"], "--n-urls: must be >= 1"),
+        (["--batches", "0"], "--batches: must be >= 1"),
+        (["--n-urls", "1", "--batches", "4"],
+         "--batches (4) must not exceed --n-urls (1)"),
+    ],
+    ids=["salt-k=0", "salt-k=-3", "n-urls=0", "batches=0", "batches>n-urls"],
+)
+def test_job_rejects_bad_counts(args, message):
+    """jobs/featurize.py refuses a salt, url or batch count it cannot
+    use while parsing its arguments, before any Spark work."""
     job = os.path.join(os.path.dirname(__file__), "..", "jobs", "featurize.py")
-    for k in ("0", "-3"):
-        r = subprocess.run(
-            [sys.executable, job, "--output", "unused", "--salt-k", k],
-            capture_output=True, text=True, timeout=120,
-        )
-        assert r.returncode == 2, r.stderr
-        assert "--salt-k: must be >= 1" in r.stderr
+    r = subprocess.run(
+        [sys.executable, job, "--output", "unused", *args],
+        capture_output=True, text=True, timeout=120,
+    )
+    assert r.returncode == 2, r.stderr
+    assert message in r.stderr
 
 
 def test_self_asof_shared_lineage(spark, sf_dir):

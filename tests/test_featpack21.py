@@ -1,24 +1,14 @@
-"""Semantic tests for feature-eng pack #21: lang x source mutual
-information, sequential Poisson PPS sampling, power-iteration
-top principal direction, and group-k-fold assignment (brute python
-replicas; cross-engine parity is proven by the check_entry sweeps)."""
+"""Semantic test for feature-eng pack #21: lang x source mutual
+information (a brute python replica; cross-engine parity is proven by
+the check_entry sweeps)."""
 
 from __future__ import annotations
 
-import hashlib
 import math
 
-import numpy as np
 import pandas as pd
 
-from crawlfe.queries import (
-    _PCA_ROUNDS,
-    _WSAMPLE_K,
-    q_embedding_pca1,
-    q_group_kfold,
-    q_mutual_info,
-    q_pps_sample,
-)
+from crawlfe.queries import q_mutual_info
 
 SF = "/root/testdata/sf0.001"
 
@@ -42,81 +32,3 @@ def test_mutual_info_brute(spark):
     # MI is non-negative; one total repeated on every row
     assert (out.mi_total - round(total, 6)).abs().max() <= 2e-6
     assert total >= -1e-12
-
-
-def _md5_u32(key: str) -> int:
-    return int(hashlib.md5(str(key).encode()).hexdigest()[:8], 16)
-
-
-def test_pps_sample_brute(spark):
-    out = q_pps_sample(spark, SF).toPandas()
-    ev = pd.read_parquet(f"{SF}/events.parquet")
-    ev = ev[ev.value > 0].copy()
-    ev["prio"] = (
-        ev.event_id.map(lambda i: (_md5_u32(i) + 1) / 4294967296.0)
-        / ev.value
-    )
-    for et, g in ev.groupby("event_type"):
-        want = g.sort_values(["prio", "event_id"]).head(_WSAMPLE_K)
-        got = out[out.event_type == et].sort_values("rank")
-        assert list(got.event_id) == list(want.event_id)
-        assert list(got["rank"]) == list(range(1, len(want) + 1))
-        assert np.allclose(got.prio, want.prio.round(8))
-    # exactly k per group
-    assert (out.groupby("event_type").size() == _WSAMPLE_K).all()
-
-
-def test_pps_sample_is_weight_proportional(spark):
-    """Higher-weight rows must be over-represented vs uniform: the
-    mean weight of the selected rows exceeds the population mean."""
-    out = q_pps_sample(spark, SF).toPandas()
-    ev = pd.read_parquet(f"{SF}/events.parquet")
-    assert out.value.mean() > ev[ev.value > 0].value.mean()
-
-
-def test_embedding_pca1_brute(spark):
-    out = (
-        q_embedding_pca1(spark, SF).toPandas().sort_values("idx")
-    )
-    emb = pd.read_parquet(f"{SF}/embeddings.parquet")
-    X = np.stack(emb.embedding.to_numpy()).astype(np.float64)
-    v = X.sum(axis=0)  # X^T @ ones == round-1 result
-    for _ in range(_PCA_ROUNDS - 1):
-        v = X.T @ (X @ v)
-    order = np.lexsort((np.arange(len(v)), -np.abs(v)))
-    pivot = v[order[0]]
-    want = v / pivot
-    assert list(out.idx) == list(range(X.shape[1]))
-    assert np.allclose(out.component, np.round(want, 6), atol=1e-5)
-    # pivot component is exactly 1 and dominates
-    assert out.component.abs().max() <= 1.0 + 1e-9
-    assert (out.component == 1.0).any()
-    # the iterate concentrates spectral mass: its Rayleigh quotient
-    # beats the average eigenvalue (a random direction's expectation)
-    # — full convergence is NOT the contract (the fixture's eigengap
-    # is small; the operator is a fixed-round iterate)
-    G = X.T @ X
-    u = v / np.linalg.norm(v)
-    rayleigh = float(u @ G @ u)
-    assert rayleigh > np.trace(G) / G.shape[0]
-
-
-def test_group_kfold_no_source_straddles_folds(spark):
-    out = q_group_kfold(spark, SF).toPandas()
-    docs = pd.read_parquet(f"{SF}/documents.parquet")
-    docs["fold"] = docs.source.map(
-        lambda s: int(hashlib.md5(s.encode()).hexdigest()[:4], 16) % 5
-    )
-    want = (
-        docs.groupby(["fold", "lang"])
-        .agg(n_docs=("source", "size"), n_sources=("source", "nunique"))
-        .reset_index()
-    )
-    merged = out.merge(want, on=["fold", "lang"], suffixes=("", "_w"))
-    assert len(merged) == len(out) == len(want)
-    assert (merged.n_docs == merged.n_docs_w).all()
-    assert (merged.n_sources == merged.n_sources_w).all()
-    # shares sum to 1 over the whole corpus
-    assert abs(out.share.sum() - 1.0) <= 1e-4
-    # group integrity: each source appears in exactly one fold
-    assert (docs.groupby("source").fold.nunique() == 1).all()

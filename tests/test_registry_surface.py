@@ -8,15 +8,14 @@ key cannot drop out of the registry unnoticed.
 
 ``KEYLESS_MODULES`` pins the ``crawlfe/queries`` modules that hold no
 registry function. The set only shrinks: deleting one means removing it
-here, and a new keyless module fails the test. ``TEST_ONLY`` does the
-same for the ``q_*`` functions in keyed modules that no registry value
-reaches.
+here, and a new keyless module fails the test.
 
-Every other function and class defined in ``crawlfe/queries`` must be
-reachable by name references from a ``REGISTRY`` value, a name that
-non-test code imports from the package, a test hook, a call the module
-body makes at import, or a pinned test-only ``q_*`` function. Module
-constants are exempt (tests pin some of them).
+Every ``q_*`` function in a keyed module must be reachable by name
+references from a ``REGISTRY`` value, a name that non-test code imports
+from the package, a test hook, or a call the module body makes at
+import. Every other function and class defined in ``crawlfe/queries``
+must be reachable from those roots or from a keyless module's ``q_*``.
+Module constants are exempt (tests pin some of them).
 """
 
 from __future__ import annotations
@@ -72,9 +71,9 @@ EXTRA_KEYS = frozenset({
 # aside). Nothing outside their own pack tests reaches them.
 KEYLESS_MODULES = frozenset({
     "agreement", "bitemporal", "breaks", "causal2", "classifier_eval",
-    "corpusqc", "coxsnm", "crawlgraph", "crawlops", "curation2",
+    "corpusqc", "crawlgraph", "crawlops", "curation2",
     "dataqc", "decompose", "diversity", "embedgeom", "encoders", "evt2",
-    "experiments", "factorize", "fdr2", "forecast_eval",
+    "experiments", "factorize", "forecast_eval",
     "forecast_eval2", "freqmoments", "graph_cent", "layout", "llm_eval",
     "lmeval2", "matching", "meta", "methodcmp", "minhash_eval",
     "mining", "model_audit", "momentq", "neighbors", "nominal",
@@ -84,26 +83,6 @@ KEYLESS_MODULES = frozenset({
     "stats_behave", "stats_dist", "stats_links", "stats_rank",
     "stats_strat", "stats_tail", "storeops", "stylo", "surveystat",
     "survival2", "tpch_extra",
-})
-
-
-# ``q_*`` functions in keyed modules that no registry value reaches.
-# Nothing outside their own pack tests calls them.
-TEST_ONLY = frozenset({
-    "bucketops.q_bucketed_join", "bucketops.q_neardup_eval",
-    "bucketops.q_page_hinkley",
-    "eval_drift.q_best_threshold", "eval_drift.q_cusum_changepoint",
-    "eval_drift.q_embedding_pca1", "eval_drift.q_equal_freq_bins",
-    "eval_drift.q_ess_weights", "eval_drift.q_group_kfold",
-    "eval_drift.q_hll_distinct", "eval_drift.q_pps_sample",
-    "eval_drift.q_roc_auc", "eval_drift.q_sparse_topk",
-    "eval_drift.q_spearman_corr", "eval_drift.q_srp_signature",
-    "graph_sources.q_calibration_bins", "graph_sources.q_graph_degrees",
-    "graph_sources.q_graph_triangles", "graph_sources.q_weak_labels",
-    "sampling.q_attribution", "sampling.q_boilerplate_para",
-    "sampling.q_mad_outliers", "sampling.q_pagerank",
-    "sampling.q_rolling_median", "sampling.q_tpch_q15",
-    "sampling.q_tpch_q17", "sampling.q_tpch_q21", "sampling.q_tpch_q7",
 })
 
 
@@ -247,19 +226,17 @@ def test_every_queries_function_is_reached():
         roots += _import_time_calls(mod)
     reached = _reached(roots)
     keyless = {f"crawlfe.queries.{m}" for m in KEYLESS_MODULES}
-    pinned = [
-        obj for mod in mods if mod.__name__ not in keyless
+    unreached_q = sorted(
+        _short(obj) for mod in mods if mod.__name__ not in keyless
         for obj in _defined(mod)
         if obj.__name__.startswith("q_") and id(obj) not in reached
-    ]
-    names = set(map(_short, pinned))
-    assert sorted(names - TEST_ONLY) == []
-    assert sorted(TEST_ONLY - names) == []
-    pinned += [
+    )
+    assert unreached_q == []
+    keyless_q = [
         obj for mod in mods if mod.__name__ in keyless
         for obj in _defined(mod) if obj.__name__.startswith("q_")
     ]
-    reached = _reached(roots + pinned)
+    reached = _reached(roots + keyless_q)
     unreached = sorted(
         f"{obj.__module__}.{obj.__qualname__}"
         for mod in mods for obj in _defined(mod) if id(obj) not in reached
