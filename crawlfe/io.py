@@ -41,6 +41,14 @@ _LINEAGE_SCHEMA = (
     "committed_at string"
 )
 
+# The features table's ``feat`` doubles almost never repeat, so a
+# dictionary page for them costs write time and bytes for nothing (on a
+# 4-snapshot featurized table it made the files 22 % larger). A writer
+# option reaches the parquet writer under spark-submit too, where confs
+# are set after the session starts; it is a no-op for a table without
+# ``feat``.
+_WRITE_OPTIONS = {"parquet.enable.dictionary#feat.list.element": "false"}
+
 
 class IcebergLite:
     def __init__(self, path: str):
@@ -178,7 +186,7 @@ class IcebergLite:
         and return the staging path. Idempotent to abandon: a crash here
         leaves only orphan staging files, never partial table state."""
         stage = os.path.join(self.staging_dir, f"snap-{uuid.uuid4().hex}")
-        df.write.mode("overwrite").parquet(stage)
+        df.write.options(**_WRITE_OPTIONS).mode("overwrite").parquet(stage)
         return stage
 
     def _move_staged(self, stage_path: str) -> list[str]:
@@ -248,7 +256,9 @@ class IcebergLite:
             return 0
         df = self.read(spark)
         stage = os.path.join(self.staging_dir, f"compact-{uuid.uuid4().hex}")
-        df.repartition(target_files).write.parquet(stage)
+        df.repartition(target_files).write.options(**_WRITE_OPTIONS).parquet(
+            stage
+        )
         all_lineage = [r for m in manifests for r in m["lineage"]]
         snap_names = [m["input_snapshot"] for m in manifests]
         old_ids = [m["snapshot_id"] for m in manifests]

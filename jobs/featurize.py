@@ -39,16 +39,23 @@ def _positive_int(s: str) -> int:
     return k
 
 
+def _non_negative_int(s: str) -> int:
+    k = int(s)
+    if k < 0:
+        raise argparse.ArgumentTypeError(f"must be >= 0, got {k}")
+    return k
+
+
 def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__)
     ap.add_argument("--output", required=True, help="table root directory")
     ap.add_argument("--n-urls", type=_positive_int, default=2000)
     ap.add_argument("--batches", type=_positive_int, default=4)
     ap.add_argument("--seed", type=int, default=42)
-    ap.add_argument("--session-gap-s", type=int, default=86400)
+    ap.add_argument("--session-gap-s", type=_non_negative_int, default=86400)
     ap.add_argument("--salt-k", type=_positive_int, default=1)
     ap.add_argument(
-        "--crash-after", type=int, default=None,
+        "--crash-after", type=_non_negative_int, default=None,
         help="simulate dying after N commits (resume testing)",
     )
     args = ap.parse_args()

@@ -241,14 +241,20 @@ def test_asof_join_rejects_salt_k_below_one(spark):
         (["--salt-k", "-3"], "--salt-k: must be >= 1"),
         (["--n-urls", "0"], "--n-urls: must be >= 1"),
         (["--batches", "0"], "--batches: must be >= 1"),
+        (["--crash-after", "-1"], "--crash-after: must be >= 0"),
+        (["--session-gap-s", "-5"], "--session-gap-s: must be >= 0"),
         (["--n-urls", "1", "--batches", "4"],
          "--batches (4) must not exceed --n-urls (1)"),
     ],
-    ids=["salt-k=0", "salt-k=-3", "n-urls=0", "batches=0", "batches>n-urls"],
+    ids=[
+        "salt-k=0", "salt-k=-3", "n-urls=0", "batches=0", "crash-after=-1",
+        "session-gap-s=-5", "batches>n-urls",
+    ],
 )
 def test_job_rejects_bad_counts(args, message):
-    """jobs/featurize.py refuses a salt, url or batch count it cannot
-    use while parsing its arguments, before any Spark work."""
+    """jobs/featurize.py refuses a salt, url or batch count, crash point
+    or session gap it cannot use while parsing its arguments, before any
+    Spark work."""
     job = os.path.join(os.path.dirname(__file__), "..", "jobs", "featurize.py")
     r = subprocess.run(
         [sys.executable, job, "--output", "unused", *args],

@@ -72,16 +72,16 @@ EXTRA_KEYS = frozenset({
 KEYLESS_MODULES = frozenset({
     "agreement", "bitemporal", "breaks", "causal2", "classifier_eval",
     "corpusqc", "crawlgraph", "crawlops", "curation2",
-    "dataqc", "decompose", "diversity", "embedgeom", "encoders", "evt2",
-    "experiments", "factorize", "forecast_eval",
-    "forecast_eval2", "freqmoments", "graph_cent", "layout", "llm_eval",
-    "lmeval2", "matching", "meta", "methodcmp", "minhash_eval",
-    "mining", "model_audit", "momentq", "neighbors", "nominal",
-    "ordinal", "overlap_eval", "popest", "pq", "pricing", "privacy",
-    "privacy2", "qte", "queueing", "raters", "regdiag", "robreg",
-    "robust", "seqtest2", "seqtest3", "spark4api", "sql4",
+    "dataqc", "decompose", "diversity", "encoders", "evt2",
+    "experiments", "factorize",
+    "forecast_eval2", "graph_cent", "layout", "llm_eval",
+    "meta", "methodcmp",
+    "mining", "model_audit", "neighbors", "nominal",
+    "overlap_eval", "popest", "pq", "pricing", "privacy",
+    "privacy2", "qte", "queueing", "raters",
+    "seqtest2", "seqtest3", "spark4api", "sql4",
     "stats_behave", "stats_dist", "stats_links", "stats_rank",
-    "stats_strat", "stats_tail", "storeops", "stylo", "surveystat",
+    "stats_tail", "storeops", "stylo",
     "survival2", "tpch_extra",
 })
 

@@ -314,10 +314,31 @@ def test_time_travel_read(spark, tmp_path):
         tbl.data_files(as_of="snap-nope")
 
 
+def _feat_dictionary_pages(tbl):
+    """Per committed data file, whether its ``feat`` element chunks
+    carry a dictionary page (one flag per row group)."""
+    import pyarrow.parquet as pq
+
+    out = []
+    for path in tbl.data_files():
+        md = pq.ParquetFile(path).metadata
+        flags = []
+        for g in range(md.num_row_groups):
+            rg = md.row_group(g)
+            (col,) = [
+                rg.column(c) for c in range(rg.num_columns)
+                if rg.column(c).path_in_schema == "feat.list.element"
+            ]
+            flags.append(col.has_dictionary_page)
+        out.append(flags)
+    return out
+
+
 def test_compaction_preserves_rows_and_resume(spark, tmp_path):
     """compact() rewrites many small files into few, keeps every row
     and all lineage, and resume still sees the absorbed snapshots as
-    committed (no reprocessing)."""
+    committed (no reprocessing). Committed and compacted files store
+    ``feat`` without a dictionary page."""
     from crawlfe.io import IcebergLite
     from crawlfe.pipeline import run_incremental
     from crawlfe.synth import SynthConfig, synth_pages
@@ -338,10 +359,14 @@ def test_compaction_preserves_rows_and_resume(spark, tmp_path):
     n_before = len(b)
     files_before = len(tbl.data_files())
     lineage_before = tbl.lineage(spark).count()
+    pages = _feat_dictionary_pages(tbl)
+    assert pages and all(f and not any(f) for f in pages), pages
 
     n_files = tbl.compact(spark, target_files=2)
     assert n_files == 2
     assert len(tbl.data_files()) == 2 < files_before
+    pages = _feat_dictionary_pages(tbl)
+    assert len(pages) == 2 and all(f and not any(f) for f in pages), pages
     after = tbl.read(spark)
     assert after.count() == n_before
     # value-level: same (url, warc_ts) multiset
